@@ -5,14 +5,15 @@
 Run from the root of a checkout. The run stages the workload's inputs
 from the seed under ``.perfbench/`` (generated locally, nothing is
 downloaded), sets the program up ``N_SETUPS`` times (``get_spark`` and
-the workload's own set-up, whose first queries warm the JVM), runs one
-untimed warm-up unit, then repeats the workload's unit of work until
-``--seconds`` have passed (at least once), checking every operation's
-output against DuckDB.
+the workload's own set-up; the first also launches the JVM), runs the
+workload's untimed warm-up, then repeats the workload's unit of work
+until ``--seconds`` have passed (at least ``MIN_UNITS`` times), checking
+every operation's output against DuckDB.
 
-``--trace 0`` prints the end-to-end metrics; ``--trace 1`` runs the
-same measurement again on a session with Spark's event log on and
-py4j round trips counted, and prints the per-layer metrics. A run
+``--trace 0`` prints the end-to-end metrics; ``--trace 1`` first runs
+the measurement on a session with Spark's event log on and py4j round
+trips counted, then the untraced one as its control, and prints the
+per-layer metrics. A run
 record with box state, staged input sizes, every unit and operation
 and, for traced runs, the per-operation layer record is written to
 ``.perfbench/records/``. The last stdout line is the result:
@@ -39,7 +40,8 @@ from spans import Tracer, dir_bytes, read_event_log, spark_counters
 
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
-N_SETUPS = 3
+N_SETUPS = 2  # one cold (JVM launch and first-use JIT), one warm
+MIN_UNITS = 2  # timed units of an untraced run, for medians over more than one
 
 
 def nproc() -> int:
@@ -59,7 +61,9 @@ def _isolate(work: str) -> None:
     os.environ["TMPDIR"] = py_tmp
     tempfile.tempdir = None
     os.environ["SPARK_LOCAL_DIRS"] = os.path.join(work, "spark-local")
-    os.environ["SPARK_GRAFT_CPUS"] = str(nproc())
+    # one core is left to the JVM's JIT and GC threads and the Python
+    # driver, so that a run measures the program, not the scheduler
+    os.environ["SPARK_GRAFT_CPUS"] = str(max(1, nproc() - 1))
     os.environ["SPARK_GRAFT_DRIVER_MEM"] = "1g"
     java_opts = f"-Djava.io.tmpdir={jvm_tmp} -XX:-UsePerfData"
     os.environ["PYSPARK_SUBMIT_ARGS"] = f"--driver-java-options {shlex.quote(java_opts)} pyspark-shell"
@@ -117,11 +121,12 @@ class Bench:
         self.wl.setup(self.spark)
         return {"setup_s": time.perf_counter() - t0, "get_spark_s": get_spark_s}
 
-    def measure(self, tracer) -> list[dict]:
-        """Repeat the unit until ``--seconds`` have passed, at least once."""
+    def measure(self, tracer, min_units: int) -> list[dict]:
+        """Repeat the unit until ``--seconds`` have passed, at least
+        ``min_units`` times."""
         units = []
         deadline = time.perf_counter() + self.args.seconds
-        while not units or time.perf_counter() < deadline:
+        while len(units) < min_units or time.perf_counter() < deadline:
             t_epoch = time.time()
             with tracer.span("run") as run:
                 ops = self.wl.unit(self.spark, tracer)
@@ -209,14 +214,11 @@ def run(args, work: str) -> dict:
 
     plain = Tracer(False)
     setups = [b.setup(plain) for _ in range(N_SETUPS)]
-    # one untimed unit first, so the timed units do not pay JIT and
-    # first-use costs that a long-running deployment pays once
+    # the workload's untimed warm-up, so the timed units do not pay JIT
+    # and first-use costs that a long-running deployment pays once
     t0 = time.perf_counter()
     warmup_ops = b.wl.warmup(b.spark, plain)
     warmup_s = time.perf_counter() - t0
-    units = b.measure(plain)
-    stored_ratio = dir_bytes(*b.wl.outputs())[0] / b.wl.input_bytes()
-    all_ops = warmup_ops + [op for u in units for op in u["ops"]]
 
     traced_units, layers, per_op = [], None, []
     if args.trace:
@@ -225,19 +227,19 @@ def run(args, work: str) -> dict:
         tracer.enable_event_log(SparkContext._jvm, log_dir)
         b.session(tracer)
         tracer.disable_event_log(SparkContext._jvm)
-        traced_units = b.measure(tracer)
-        # the first untraced units ran on a colder JVM; compare the
-        # traced units with untraced ones measured after them
+        traced_units = b.measure(tracer, 1)
+        # the untraced control units, on a fresh untraced session
         b.session(plain)
-        control_units = b.measure(plain)
-        all_ops += [op for u in traced_units + control_units for op in u["ops"]]
+    units = b.measure(plain, 1 if args.trace else MIN_UNITS)
+    stored_ratio = dir_bytes(*b.wl.outputs())[0] / b.wl.input_bytes()
+    all_ops = warmup_ops + [op for u in traced_units + units for op in u["ops"]]
     rss = {"python": _vm_hwm_mb("self"), "jvm": _vm_hwm_mb(SparkContext._gateway.proc.pid)}
     b.spark.stop()
     if args.trace:
         layers, per_op = layer_metrics(tracer, traced_units, read_event_log(log_dir))
         layers["session.get_spark_s"] = statistics.median(s["get_spark_s"] for s in setups)
         layers["trace.overhead_s"] = (statistics.median(u["span"].wall_s for u in traced_units)
-                                      - statistics.median(u["span"].wall_s for u in control_units))
+                                      - statistics.median(u["span"].wall_s for u in units))
     _stop_jvm()
     box.update(load_proxy_after=bench._load_proxy_sample(), io_proxy_after=bench._io_proxy_sample())
 
