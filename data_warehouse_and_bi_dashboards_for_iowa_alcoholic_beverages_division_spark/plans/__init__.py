@@ -1,1 +1,1 @@
-from .warehouse import build_warehouse, fact_sales  # noqa: F401
+from .warehouse import fact_sales  # noqa: F401

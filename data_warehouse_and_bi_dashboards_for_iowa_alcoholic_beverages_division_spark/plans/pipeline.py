@@ -24,6 +24,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from ..functions.dates import build_date_dim
+from ..sources.tables import read_parquet
 from .warehouse import fact_sales, geo_dim
 
 
@@ -84,7 +85,7 @@ def build_star_warehouse(spark: SparkSession, sf_dir: str, out_dir: str) -> dict
 
 
 def read_warehouse(spark: SparkSession, paths: dict[str, str]) -> dict[str, DataFrame]:
-    return {name: spark.read.parquet(p) for name, p in paths.items()}
+    return {name: read_parquet(spark, p) for name, p in paths.items()}
 
 
 def revenue_by_weekday(wh: dict[str, DataFrame]) -> DataFrame:

@@ -54,14 +54,16 @@ def fact_sales(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_orderdate", "o_orderstatus", "o_orderpriority"
     )
-    return (
-        lineitem.join(orders, lineitem["l_orderkey"] == orders["o_orderkey"], "inner")
-        .withColumn("sale_date", F.to_date("o_orderdate"))
-        .withColumn("revenue_usd", F.expr(REVENUE_SQL))
-        .withColumn("total_cost_usd", F.expr(COST_SQL))
-        .withColumn("gross_profit_usd", F.expr(PROFIT_SQL))
-        .withColumn("quantity", F.col("l_quantity").cast("decimal(12,2)"))
-        .withColumn("invoice_number", F.concat(F.lit("INV-"), F.col("o_orderkey").cast("string")))
+    # one projection: each withColumn would re-analyse the whole plan
+    # and cost its own py4j round trips
+    return lineitem.join(orders, lineitem["l_orderkey"] == orders["o_orderkey"], "inner").selectExpr(
+        "*",
+        "to_date(o_orderdate) AS sale_date",
+        f"{REVENUE_SQL} AS revenue_usd",
+        f"{COST_SQL} AS total_cost_usd",
+        f"{PROFIT_SQL} AS gross_profit_usd",
+        "CAST(l_quantity AS DECIMAL(12,2)) AS quantity",
+        "concat('INV-', CAST(o_orderkey AS STRING)) AS invoice_number",
     )
 
 
@@ -83,12 +85,3 @@ def geo_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
 
-
-def build_warehouse(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """All warehouse-layer DataFrames, keyed by role."""
-    return {
-        "fact_sales": fact_sales(spark, sf_dir),
-        "geo_dim": geo_dim(spark, sf_dir),
-        "item_dim": load_table(spark, sf_dir, "part"),
-        "vendor_dim": load_table(spark, sf_dir, "supplier"),
-    }

@@ -5,6 +5,15 @@ SURVEY.md §2.1. The reference reads HDFS parquet staging the same way
 (``/root/reference/include/scripts/create_store_dim.py:15``); parquet is
 our at-rest format everywhere, so the JDBC scan/sink operators (S3-S5)
 become plain table reads/writes.
+
+Table reads (``load_table``, the written warehouse) go through
+``read_parquet``. A read without a schema is not lazy: Spark infers the schema by reading a file footer
+inside a Spark job (``ParquetFileFormat.mergeSchemasInParallel``), so
+each ``spark.read.parquet(path)`` costs one job at plan-build time,
+and a dashboard visual that joins five tables ran five of them before
+its own query started. ``read_parquet`` infers a path's schema once
+per process and passes the remembered ``StructType`` on later reads,
+which then plan without touching the files' contents.
 """
 
 from __future__ import annotations
@@ -13,6 +22,7 @@ import os
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region",
@@ -28,6 +38,55 @@ TABLES = (
 )
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+
+
+# The one session conf that changes what parquet schema inference
+# returns for our tables: under it TIMESTAMP(NANOS) reads as bigint.
+NANOS_AS_LONG = "spark.sql.legacy.parquet.nanosAsLong"
+
+# abspath -> (fingerprint, schema): one entry per path ever read
+_SCHEMAS: dict[str, tuple[tuple, StructType]] = {}
+
+
+def _fingerprint(spark: SparkSession, path: str) -> tuple | None:
+    """``(nanosAsLong, ((relpath, st_size, st_mtime_ns), ...))`` of a
+    file or of every file under a directory; None when the path cannot
+    be stat'ed locally (a URI, a glob, a missing path)."""
+    try:
+        if os.path.isdir(path):
+            files = []
+            for root, _dirs, names in os.walk(path):
+                for n in names:
+                    f = os.path.join(root, n)
+                    st = os.stat(f)
+                    files.append((os.path.relpath(f, path), st.st_size, st.st_mtime_ns))
+            stats = tuple(sorted(files))
+        else:
+            st = os.stat(path)
+            stats = (("", st.st_size, st.st_mtime_ns),)
+    except OSError:
+        return None
+    return spark.conf.get(NANOS_AS_LONG, "false"), stats
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` that infers the schema once.
+
+    The first read of a path infers its schema as Spark always does and
+    remembers it with the path's fingerprint: size and mtime of every
+    file, and the nanosAsLong conf. A later read whose fingerprint
+    still matches passes the remembered schema, so Spark plans it
+    without a job. A changed fingerprint, or a path that cannot be
+    stat'ed locally, takes the inference path again."""
+    key = os.path.abspath(path)
+    fp = _fingerprint(spark, key)
+    hit = _SCHEMAS.get(key)
+    if fp is not None and hit is not None and hit[0] == fp:
+        return spark.read.schema(hit[1]).parquet(path)
+    df = spark.read.parquet(path)
+    if fp is not None:
+        _SCHEMAS[key] = (fp, df.schema)
+    return df
 
 
 def normalize_events_ts(df: DataFrame) -> DataFrame:
@@ -64,8 +123,8 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     canonical type whatever is on disk.
     """
     if name == "events":
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+        spark.conf.set(NANOS_AS_LONG, "true")
+    df = read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
     if name == "events":
         df = normalize_events_ts(df)
     return df
@@ -80,13 +139,3 @@ def register_views(spark: SparkSession, sf_dir: str) -> None:
     resolve (reference: ``create_vendor_dim.py:16`` global temp view)."""
     for name in TABLES:
         load_table(spark, sf_dir, name).createOrReplaceTempView(name)
-
-
-def write_table(df: DataFrame, path: str, mode: str = "overwrite", partition_by: list[str] | None = None) -> None:
-    """Parquet sink (S2). At 100 TB the fact table is written
-    ``partitionBy`` date so incremental loads and time-bounded queries
-    prune partitions instead of scanning history."""
-    writer = df.write.mode(mode)
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(path)

@@ -13,6 +13,7 @@ reads only the new days regardless of total history size.
 from __future__ import annotations
 
 import pyspark.sql.functions as F
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 
 
@@ -44,10 +45,14 @@ def load_or_update(
     """
     try:
         existing = spark.read.parquet(target_path)
-        wm = high_watermark(existing, date_col)
-        mode = "update"
-    except Exception:
+    except AnalysisException as e:
+        # only a missing target means "create": an unreadable one
+        # would otherwise get the whole source appended onto it again
+        if e.getCondition() != "PATH_NOT_FOUND":
+            raise
         wm, mode = None, "create"
+    else:
+        wm, mode = high_watermark(existing, date_col), "update"
 
     delta = incremental_delta(source, date_col, wm)
     n = delta.count()

@@ -19,6 +19,7 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
@@ -28,7 +29,11 @@ from ..operators.scd import apply_scd_changes, create_scd_from_input, scd_update
 def _read_dim(spark: SparkSession, dim_path: str) -> DataFrame | None:
     try:
         return spark.read.parquet(dim_path)
-    except Exception:  # first batch: dimension does not exist yet
+    except AnalysisException as e:
+        # first batch: the dimension does not exist yet. Any other read
+        # error raises instead of rebuilding the dimension from one batch
+        if e.getCondition() != "PATH_NOT_FOUND":
+            raise
         return None
 
 

@@ -3,6 +3,7 @@ with its batch twin on the same input; the watermark-gated incremental
 loader must be idempotent and append-only."""
 
 import datetime
+import os
 import shutil
 import tempfile
 
@@ -67,6 +68,50 @@ def test_incremental_load_or_update(spark, tmp_path):
     assert (mode, n) == ("update", 1)
     got = sorted(r["k"] for r in spark.read.parquet(target).collect())
     assert got == [1, 2, 3]
+
+
+def _corrupt_table(path: str) -> dict[str, bytes]:
+    """A table directory whose only data file is not parquet; returns
+    its contents."""
+    os.makedirs(path)
+    with open(os.path.join(path, "part-00000.parquet"), "wb") as f:
+        f.write(b"not a parquet file")
+    return _contents(path)
+
+
+def _contents(path: str) -> dict[str, bytes]:
+    out = {}
+    for root, _dirs, names in os.walk(path):
+        for n in names:
+            with open(os.path.join(root, n), "rb") as f:
+                out[os.path.relpath(os.path.join(root, n), path)] = f.read()
+    return out
+
+
+def test_load_or_update_raises_on_unreadable_target(spark, tmp_path):
+    """Only a missing target means "create"; an unreadable one must not
+    get the whole source appended onto it."""
+    target = str(tmp_path / "fact")
+    before = _corrupt_table(target)
+    src = spark.createDataFrame([Row(k=1, d=datetime.date(2024, 1, 1))])
+    with pytest.raises(Exception, match="CANNOT_READ_FILE_FOOTER"):
+        load_or_update(spark, src, target, "d")
+    assert _contents(target) == before
+
+
+def test_scd_upsert_raises_on_unreadable_dimension(spark, tmp_path):
+    """Only a missing dimension is created from the batch; an unreadable
+    one must not be overwritten by a one-batch rebuild."""
+    from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spark.streaming.scd_stream import (
+        scd_upsert_batch,
+    )
+
+    dim = str(tmp_path / "dim")
+    before = _corrupt_table(dim)
+    batch = spark.createDataFrame([Row(nk=1, val="a", d=datetime.date(2024, 1, 1))])
+    with pytest.raises(Exception, match="CANNOT_READ_FILE_FOOTER"):
+        scd_upsert_batch(spark, batch, dim, "nk", "d", ["nk", "val"])
+    assert _contents(dim) == before
 
 
 def test_watermark_helpers(spark):

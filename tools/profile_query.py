@@ -20,6 +20,7 @@ planning, py4j round trips, job-submission latency).
 from __future__ import annotations
 
 import argparse
+import datetime
 import json
 import os
 import sys
@@ -36,6 +37,15 @@ from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spar
 def _get(url: str):
     with urllib.request.urlopen(url, timeout=10) as r:
         return json.loads(r.read())
+
+
+def _ts(v) -> float | None:
+    """Epoch seconds of a REST API timestamp (``2026-10-17T01:25:27.123GMT``),
+    milliseconds included: stages and driver gaps are often shorter than
+    a second. None for a missing value."""
+    if not isinstance(v, str):
+        return None
+    return datetime.datetime.strptime(v.replace("GMT", "+0000"), "%Y-%m-%dT%H:%M:%S.%f%z").timestamp()
 
 
 def build_spark():
@@ -122,15 +132,6 @@ def main() -> None:
             inp = sum(s.get("inputBytes", 0) for s in stages)
             ntasks = sum(s.get("numCompleteTasks", 0) for s in stages)
             # stage-covered wall: union of [firstTaskLaunchedTime, completionTime]
-            def _ts(v):
-                import datetime
-
-                return (
-                    datetime.datetime.strptime(v[:19], "%Y-%m-%dT%H:%M:%S").timestamp()
-                    if isinstance(v, str)
-                    else None
-                )
-
             spans = []
             for s in stages:
                 a, b = _ts(s.get("firstTaskLaunchedTime")), _ts(s.get("completionTime"))
