@@ -26,6 +26,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql.types import StructField, StructType
 
 from ..functions.rounding import floor_round6
+from ..sources.commit import _fs_checked, _hadoop_fs, _sidecar_is_empty_dir
 from .dedup import _spread_narrow_scan
 
 
@@ -1521,38 +1522,6 @@ def _write_driver_rows(spark, rows, schema: str, path: str, mode: str = "overwri
     ).write.mode(mode).parquet(path)
 
 
-def _hadoop_fs(spark, path: str):
-    """(fs, hpath) for ``path`` through the Hadoop FS API — the one
-    place the Path/getFileSystem idiom lives, so existence probes,
-    directory drops, and the empty-dir check cannot drift apart."""
-    hpath = spark._jvm.org.apache.hadoop.fs.Path(path)
-    return hpath.getFileSystem(spark._jsc.hadoopConfiguration()), hpath
-
-
-def _sidecar_is_empty_dir(spark, sidecar_path: str) -> bool:
-    """True iff ``sidecar_path`` exists but holds no non-empty data
-    file (only Hadoop markers like ``_SUCCESS``/dotfiles, or nothing) —
-    the state a crash between directory creation and the first
-    committed parquet file leaves behind. Checked through the Hadoop
-    FS API so the answer is right on any filesystem the index lives on."""
-    fs, hpath = _hadoop_fs(spark, sidecar_path)
-    if not fs.exists(hpath):
-        return True
-    for st in fs.listStatus(hpath):
-        name = st.getPath().getName()
-        if name.startswith(("_", ".")):
-            continue
-        # A non-marker SUBDIRECTORY may hold committed data (e.g. a
-        # partitioned sidecar layout) — it must never read as "empty",
-        # or the token gate would be silently bypassed. Conservative:
-        # not empty, so the caller re-raises its original error.
-        if st.isDirectory():
-            return False
-        if st.isFile() and st.getLen() > 0:
-            return False
-    return True
-
-
 def _read_optional_sidecar(
     spark, sidecar_path: str, schema: str | None = None
 ) -> DataFrame | None:
@@ -1619,24 +1588,6 @@ def _count_batch_token(spark, sidecar_path: str, token: str) -> int:
 # ".../_..." and ".../...."-prefixed entries) ignores it while a
 # maintenance op is in flight.
 _MAINT_TMP = ".maint-tmp"
-
-
-def _fs_checked(ok: bool, op: str, src: str, dst: str | None = None) -> None:
-    """Hadoop ``FileSystem.delete``/``rename`` signal failure by
-    returning ``false``, not by raising (RawLocalFileSystem, HDFS) —
-    a swap step that ignores the boolean can purge the staged copy
-    after a failed rename and turn a recoverable state into silent
-    loss. Every swap-protocol FS mutation goes through this check and
-    RAISES on false, leaving the staging directory in place for
-    :func:`recover_ivf_index` to converge once the cause (permissions,
-    open handles) is fixed."""
-    if not ok:
-        target = f"{src} -> {dst}" if dst else src
-        raise RuntimeError(
-            f"filesystem {op} failed (returned false): {target}; the "
-            "maintenance staging directory is left in place — fix the "
-            "cause and re-run the operation (or recover_ivf_index)"
-        )
 
 
 def _fs_write_text_atomic(spark, path: str, text: str) -> None:

@@ -8,9 +8,12 @@ Write layout is chosen for 100 TB, not for the local testdata:
 - the fact table is partitioned by ``sale_year`` (at production scale:
   by date) so incremental loads append new partitions and
   time-predicated queries prune old ones;
-- dimensions are small unpartitioned parquet, rewritten atomically on
-  SCD merge (`apply_scd_changes`) — the distributed replacement for the
-  reference's driver-side row UPDATEs;
+- dimensions are small unpartitioned parquet. This full load overwrites
+  each table in place, one after another, so a crash mid-build can
+  leave tables of two builds side by side. The streaming SCD2 merge
+  (`streaming.scd_stream`, `apply_scd_changes`) — the distributed
+  replacement for the reference's driver-side row UPDATEs — writes the
+  merged dimension to a staging sibling and swaps it in by rename;
 - every dimension carries the −1/'unknown' member row the reference
   inserts via SQL (``insert_unknown_into_*.sql``), so late/NULL-keyed
   facts always join.

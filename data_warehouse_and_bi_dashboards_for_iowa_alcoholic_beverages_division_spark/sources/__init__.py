@@ -1,1 +1,1 @@
-from .tables import TABLES, load_table, load_tables, register_views  # noqa: F401
+from .tables import TABLES, load_table  # noqa: F401

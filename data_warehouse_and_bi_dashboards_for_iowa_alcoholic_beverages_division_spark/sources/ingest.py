@@ -10,10 +10,7 @@ pandas hop, works on any source Spark can read.
 
 from __future__ import annotations
 
-from collections.abc import Mapping
-
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame
 
 
 def int_from_floatish_string(col: str) -> F.Column:
@@ -28,14 +25,3 @@ def money_from_string(col: str, precision: int = 9, scale: int = 2) -> F.Column:
     """Money enters as strings, cast to exact decimals
     (``ingest_utils.py:66-70``)."""
     return F.col(col).try_cast(f"decimal({precision},{scale})")
-
-
-def coerce_columns(df: DataFrame, spec: Mapping[str, F.Column]) -> DataFrame:
-    """Apply a coercion spec {output_col: expression} in one projection."""
-    return df.withColumns(dict(spec))
-
-
-def fill_unknown_members(df: DataFrame, int_cols: list[str], str_cols: list[str]) -> DataFrame:
-    """NULL natural keys → -1 / 'unknown' before dim joins (reference
-    ``create_update_liqour_sales_fact_table.py:140-144``)."""
-    return df.fillna({c: -1 for c in int_cols}).fillna({c: "unknown" for c in str_cols})

@@ -14,9 +14,10 @@ from __future__ import annotations
 
 import glob
 import os
-import shutil
 
 from pyspark.sql import SparkSession
+
+from .commit import recover_swap, staging_path, swap_in
 
 
 def parquet_file_count(path: str) -> int:
@@ -35,20 +36,18 @@ def compact_table(
 
     Write-new-then-swap, never overwrite-in-place: Spark reads lazily,
     so overwriting the directory being read would destroy the input
-    mid-job. The swap is the one non-atomic step — on a real deployment
+    mid-job. The new files go to a staging sibling that
+    ``sources.commit.swap_in`` renames in; a crash at any point
+    converges on the next call (``recover_swap``). On a real deployment
     a table format with a transactional commit (Delta/Iceberg) replaces
     the rename, and everything upstream of it is unchanged.
     """
-    tmp = path.rstrip("/") + "._compacting"
+    recover_swap(spark, path)
     df = spark.read.parquet(path)
     writer = df.coalesce(target_files).write.mode("overwrite")
     if partition_by:
         # coalesce bounds total tasks; per-partition file count follows
         writer = df.repartition(target_files, *partition_by).write.mode("overwrite").partitionBy(*partition_by)
-    writer.parquet(tmp)
-
-    backup = path.rstrip("/") + "._pre_compact"
-    os.rename(path, backup)
-    os.rename(tmp, path)
-    shutil.rmtree(backup)
+    writer.parquet(staging_path(path))
+    swap_in(spark, path)
     return parquet_file_count(path)

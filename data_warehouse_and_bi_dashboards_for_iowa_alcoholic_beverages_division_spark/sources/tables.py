@@ -37,9 +37,6 @@ TABLES = (
     "embeddings",
 )
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
-
 # The one session conf that changes what parquet schema inference
 # returns for our tables: under it TIMESTAMP(NANOS) reads as bigint.
 NANOS_AS_LONG = "spark.sql.legacy.parquet.nanosAsLong"
@@ -128,14 +125,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name == "events":
         df = normalize_events_ts(df)
     return df
-
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every base table as a temp view so ``spark.sql`` queries
-    resolve (reference: ``create_vendor_dim.py:16`` global temp view)."""
-    for name in TABLES:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)

@@ -5,22 +5,38 @@ warehouse date gates a delta download and a create-vs-update branch).
 Here the branch logic is plain driver code over lakehouse tables:
 ``load_or_update`` checks target existence, computes the watermark from
 the target itself (no external warehouse round-trip), and appends only
-rows strictly newer. On a date-partitioned fact table the
-``> watermark`` predicate prunes partitions, so an incremental run
-reads only the new days regardless of total history size.
+rows strictly newer, in one pass over the source.
+
+The target is always written ``partitionBy(date_col)``, so for a DATE
+``date_col`` the watermark is the newest ``date_col=YYYY-MM-DD``
+directory that holds a data file: one Hadoop FS listing, no Spark job,
+however long the history. Any other target (a non-DATE ``date_col``,
+an entry the listing cannot interpret) is read and aggregated, which
+scans every file of the target.
 """
 
 from __future__ import annotations
 
+import datetime
+import re
+
 import pyspark.sql.functions as F
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import DateType
+
+from ..sources.commit import _fs_checked, _hadoop_fs
+from ..sources.metrics import observed_quality, quality_report
+
+# the directory name Spark gives a NULL partition value
+_NULL_PARTITION = "__HIVE_DEFAULT_PARTITION__"
+_ISO_DATE = re.compile(r"\d{4}-\d{2}-\d{2}")
 
 
 def high_watermark(df: DataFrame, date_col: str):
     """MAX(date) driver funnel (reference ``main_pipeline.py:108``) —
-    one scalar to the driver, computed from parquet statistics when
-    possible."""
+    one scalar to the driver. Parquet aggregate pushdown is off, so on
+    a table this reads ``date_col`` from every file."""
     return df.agg(F.max(date_col).alias("wm")).collect()[0]["wm"]
 
 
@@ -32,6 +48,69 @@ def incremental_delta(source: DataFrame, date_col: str, watermark) -> DataFrame:
     return source.where(F.col(date_col) > F.lit(watermark))
 
 
+def _hidden(name: str) -> bool:
+    """Names Spark's file index skips: ``_SUCCESS``, ``_temporary``,
+    ``.crc`` and other dot files, in-flight copies."""
+    return (name.startswith("_") and "=" not in name) or name.startswith(".") or name.endswith("._COPYING_")
+
+
+def _unescape(spark: SparkSession, s: str) -> str:
+    if "%" not in s:  # nothing to unescape; spares a gateway call per directory
+        return s
+    return spark._jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.unescapePathName(s)
+
+
+def _holds_data(fs, hpath) -> bool | None:
+    """Whether a partition directory holds a non-empty data file;
+    None when it holds a visible subdirectory, a layout
+    ``partitionBy(date_col)`` does not write."""
+    found = False
+    for st in fs.listStatus(hpath):
+        if _hidden(st.getPath().getName()):
+            continue
+        if st.isDirectory():
+            return None
+        found = found or st.getLen() > 0
+    return found
+
+
+def _listed_watermark(spark: SparkSession, target_path: str, date_col: str):
+    """``(has_data, watermark)`` of a DATE-partitioned target from its
+    directory names, or None when the listing cannot answer and the
+    target must be read. A missing target, or one with no data
+    partition, is ``(False, None)``; the NULL partition counts as data
+    but, as in MAX, not as a watermark. A listing error raises."""
+    fs, root = _hadoop_fs(spark, target_path)
+    if not fs.exists(root):
+        return False, None
+    dated, nulls = [], []
+    for st in fs.listStatus(root):
+        name = st.getPath().getName()
+        if _hidden(name):
+            continue
+        col, eq, raw = name.partition("=")
+        if not (eq and st.isDirectory() and _unescape(spark, col) == date_col):
+            return None
+        value = _unescape(spark, raw)
+        if value == _NULL_PARTITION:
+            nulls.append((None, st.getPath()))
+            continue
+        if not _ISO_DATE.fullmatch(value):
+            return None
+        try:
+            dated.append((datetime.date.fromisoformat(value), st.getPath()))
+        except ValueError:
+            return None
+    # newest first; only the first partition holding data is listed again
+    for day, hpath in sorted(dated, key=lambda d: d[0], reverse=True) + nulls:
+        held = _holds_data(fs, hpath)
+        if held is None:
+            return None
+        if held:
+            return True, day
+    return False, None
+
+
 def load_or_update(
     spark: SparkSession,
     source: DataFrame,
@@ -41,21 +120,33 @@ def load_or_update(
     """Create-vs-update branch (reference ``main_pipeline.py:61-151``).
 
     Returns ("create"|"update", rows_written). Idempotent: re-running
-    with no new source rows appends nothing.
+    with no new source rows appends nothing. The row count rides the
+    append (``observe``); the delta is evaluated once.
     """
-    try:
-        existing = spark.read.parquet(target_path)
-    except AnalysisException as e:
-        # only a missing target means "create": an unreadable one
-        # would otherwise get the whole source appended onto it again
-        if e.getCondition() != "PATH_NOT_FOUND":
-            raise
-        wm, mode = None, "create"
-    else:
-        wm, mode = high_watermark(existing, date_col), "update"
+    listed = None
+    if isinstance(source.schema[date_col].dataType, DateType):
+        listed = _listed_watermark(spark, target_path, date_col)
+    if listed is None:
+        try:
+            existing = spark.read.parquet(target_path)
+        except AnalysisException as e:
+            # only a missing target means "create": an unreadable one
+            # would otherwise get the whole source appended onto it again
+            if e.getCondition() != "PATH_NOT_FOUND":
+                raise
+            listed = False, None
+        else:
+            listed = True, high_watermark(existing, date_col)
+    has_data, wm = listed
+    mode = "update" if has_data else "create"
 
-    delta = incremental_delta(source, date_col, wm)
-    n = delta.count()
-    if n:
-        delta.write.mode("append").partitionBy(date_col).parquet(target_path)
+    delta, obs = observed_quality(incremental_delta(source, date_col, wm))
+    fs, root = _hadoop_fs(spark, target_path)
+    fresh = not has_data and not fs.exists(root)
+    delta.write.mode("append").partitionBy(date_col).parquet(target_path)
+    n = quality_report(obs)["n_rows"]
+    if fresh and n == 0:
+        # an empty append still creates the directory and its _SUCCESS
+        # marker; an empty create leaves no target behind
+        _fs_checked(fs.delete(root, True), "delete", target_path)
     return mode, n

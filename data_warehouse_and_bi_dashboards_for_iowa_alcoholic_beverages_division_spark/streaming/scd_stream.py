@@ -10,9 +10,15 @@ per batch via the streaming checkpoint, no driver funnel, and the
 `Trigger.AvailableNow` drain doubles as the reference's incremental
 batch when run on a schedule.
 
-Dimensions are small relative to facts (§ SURVEY.md 1.1), so the
-read-merge-overwrite of the dimension table per micro-batch is cheap at
-any scale; the fact-side stream never rewrites history.
+Dimensions are small relative to facts (§ SURVEY.md 1.1), so rewriting
+the whole dimension per micro-batch is cheap at any scale; the
+fact-side stream never rewrites history. The merge is written once, to
+a staging sibling, and swapped in by two renames
+(``sources.commit.swap_in``): the old dimension is set aside only once
+the new one is complete, and a crash at any point converges when the
+batch is replayed from the streaming checkpoint (the merge is
+idempotent: re-folding a batch already in the dimension changes
+nothing).
 """
 
 from __future__ import annotations
@@ -24,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
 from ..operators.scd import apply_scd_changes, create_scd_from_input, scd_update_and_insert
+from ..sources.commit import recover_swap, staging_path, swap_in
 
 
 def _read_dim(spark: SparkSession, dim_path: str) -> DataFrame | None:
@@ -47,6 +54,9 @@ def scd_upsert_batch(
 ) -> None:
     """Fold one batch of raw change records into the parquet dimension
     (create on first batch, incremental merge afterwards)."""
+    # a crash between the swap's renames leaves no live dimension: put
+    # the old one back before its absence could mean "first batch"
+    recover_swap(spark, dim_path)
     old = _read_dim(spark, dim_path)
     if old is None:
         merged = create_scd_from_input(batch_df, attribute_cols, date_col, natural_key)
@@ -55,9 +65,10 @@ def scd_upsert_batch(
             old, batch_df, natural_key, date_col, attribute_cols
         )
         merged = apply_scd_changes(old, to_update, to_insert, natural_key)
-    # materialize off the source files before overwriting them
-    # (parquet cannot overwrite a path its own plan is still reading)
-    merged.localCheckpoint(eager=True).write.mode("overwrite").parquet(dim_path)
+    # the merge reads the live dimension, so it cannot be written over
+    # it: write it beside it, then swap
+    merged.write.mode("overwrite").parquet(staging_path(dim_path))
+    swap_in(spark, dim_path)
 
 
 def scd_stream_upsert(

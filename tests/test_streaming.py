@@ -114,6 +114,115 @@ def test_scd_upsert_raises_on_unreadable_dimension(spark, tmp_path):
     assert _contents(dim) == before
 
 
+def _jobs_of(spark, group: str, fn):
+    """(fn(), ids of the Spark jobs fn ran)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _rows(spark, path):
+    return sorted((r["k"], r["d"]) for r in spark.read.parquet(path).collect())
+
+
+def test_listing_watermark_matches_read_path_in_one_job(spark, tmp_path):
+    """On a DATE-partitioned target past Spark's parallel-listing
+    threshold (32 directories) the watermark comes from the directory
+    names: each call runs only the append's job, and answers as the
+    read-and-aggregate path would — hidden-only and NULL partitions
+    included."""
+    target = str(tmp_path / "fact")
+    day0 = datetime.date(2024, 1, 1)
+    history = [Row(k=i, d=day0 + datetime.timedelta(days=i)) for i in range(35)]
+    spark.createDataFrame(history).write.partitionBy("d").parquet(target)
+    last = history[-1]["d"]
+    want = sorted((r["k"], r["d"]) for r in history)
+
+    def call(case, rows):
+        src = spark.createDataFrame(rows, "k long, d date")
+        out, jobs = _jobs_of(spark, f"load-{case}", lambda: load_or_update(spark, src, target, "d"))
+        assert len(jobs) == 1, (case, jobs)
+        return out
+
+    new = Row(k=100, d=last + datetime.timedelta(days=3))
+    assert call("one-row", history + [new]) == ("update", 1)
+    want.append((100, new["d"]))
+    assert _rows(spark, target) == want
+
+    assert call("empty", history + [new]) == ("update", 0)
+    assert _rows(spark, target) == want
+
+    # a later partition directory with markers but no data file (some
+    # committers write a non-empty _SUCCESS; the local filesystem hides
+    # .crc files itself, so an in-flight dot file stands in for them)
+    planted = tmp_path / "fact" / f"d={last + datetime.timedelta(days=30)}"
+    planted.mkdir()
+    (planted / "_SUCCESS").write_bytes(b"{}")
+    (planted / ".part-00000.parquet.crc").write_bytes(b"crc")
+    (planted / ".part-00001.parquet").write_bytes(b"in flight")
+    later = Row(k=101, d=last + datetime.timedelta(days=5))
+    assert call("planted", [later]) == ("update", 1)
+    want.append((101, later["d"]))
+    assert _rows(spark, target) == want
+
+    # the NULL partition: MAX ignores it
+    spark.createDataFrame([Row(k=102, d=None)], "k long, d date").write.mode("append").partitionBy("d").parquet(target)
+    assert (tmp_path / "fact" / "d=__HIVE_DEFAULT_PARTITION__").is_dir()
+    want.append((102, None))
+    latest = Row(k=103, d=last + datetime.timedelta(days=6))
+    assert call("null-partition", [later, latest]) == ("update", 1)
+    want.append((103, latest["d"]))
+    assert sorted(_rows(spark, target), key=str) == sorted(want, key=str)
+
+
+def test_null_partition_only_target_is_update(spark, tmp_path):
+    """A target whose only data is the NULL partition exists but has
+    no watermark: the whole source is appended, as MAX(NULL) gates
+    nothing."""
+    target = str(tmp_path / "fact")
+    spark.createDataFrame([Row(k=0, d=None)], "k long, d date").write.partitionBy("d").parquet(target)
+    src = spark.createDataFrame([Row(k=1, d=datetime.date(2024, 1, 1)), Row(k=2, d=datetime.date(2024, 1, 2))])
+    assert load_or_update(spark, src, target, "d") == ("update", 2)
+    assert spark.read.parquet(target).count() == 3
+
+
+def test_empty_create_leaves_no_target(spark, tmp_path):
+    target = str(tmp_path / "fact")
+    empty = spark.createDataFrame([], "k long, d date")
+    assert load_or_update(spark, empty, target, "d") == ("create", 0)
+    assert not os.path.exists(target)
+    assert load_or_update(spark, empty, target, "d") == ("create", 0)
+    assert not os.path.exists(target)
+
+
+def test_timestamp_date_col_takes_read_path(spark, tmp_path, monkeypatch):
+    """A non-DATE ``date_col`` (the demo pipeline's TIMESTAMP
+    ``o_orderdate``) is watermarked by reading the target."""
+    from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spark.streaming import incremental
+
+    calls = []
+
+    def spy(df, date_col):
+        calls.append(date_col)
+        return high_watermark(df, date_col)
+
+    monkeypatch.setattr(incremental, "high_watermark", spy)
+    target = str(tmp_path / "fact")
+    src = spark.createDataFrame(
+        [Row(k=1, d=datetime.datetime(2024, 1, 1, 0, 0)), Row(k=2, d=datetime.datetime(2024, 1, 2, 0, 0))]
+    )
+    assert load_or_update(spark, src, target, "d") == ("create", 2)
+    assert calls == []
+    assert load_or_update(spark, src, target, "d") == ("update", 0)
+    assert calls == ["d"]
+    assert spark.read.parquet(target).count() == 2
+
+
 def test_watermark_helpers(spark):
     df = spark.createDataFrame([Row(d=datetime.date(2024, 1, 1)), Row(d=datetime.date(2024, 2, 1))])
     wm = high_watermark(df, "d")
@@ -192,6 +301,81 @@ def test_scd_stream_upsert_matches_batch_rebuild(spark, tmp_path):
     }
     assert got == want
     assert len(got) == 4  # store1: ames→boone (2 rows), store2: adel, store3: clive
+
+
+def _scd_rows(spark, path):
+    return sorted(
+        (r["store"], r["city"], str(r["start_date"]), str(r["end_date"]), r["is_current"])
+        for r in spark.read.parquet(path).collect()
+    )
+
+
+@pytest.mark.parametrize("crash_after", ["staging_write", "first_rename", "second_rename"])
+def test_scd_swap_crash_converges_on_replay(spark, tmp_path, monkeypatch, crash_after):
+    """A drain that dies at any point of the dimension swap, re-run on
+    the same checkpoint, leaves the dimension an uninterrupted drain
+    leaves, and no staging or backup sibling."""
+    from pyspark.sql.types import DateType, LongType, StringType, StructField, StructType
+
+    from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spark.sources import commit
+    from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spark.streaming import scd_stream
+
+    schema = StructType(
+        [StructField("store", LongType()), StructField("city", StringType()), StructField("obs_date", DateType())]
+    )
+    d = datetime.date
+    drop1 = [(1, "ames", d(2024, 1, 1)), (2, "adel", d(2024, 1, 1))]
+    drop2 = [(1, "boone", d(2024, 3, 1)), (3, "clive", d(2024, 3, 9))]
+
+    def drain(name):
+        scd_stream.scd_stream_upsert(
+            spark, str(tmp_path / f"{name}_in"), str(tmp_path / f"{name}_dim"), str(tmp_path / f"{name}_ckpt"),
+            "store", "obs_date", ["city"], schema=schema,
+        )
+
+    def drop(name, rows):
+        spark.createDataFrame(rows, schema).write.mode("append").parquet(str(tmp_path / f"{name}_in"))
+
+    for name in ("clean", "crash"):
+        drop(name, drop1)
+        drain(name)
+        drop(name, drop2)
+    drain("clean")
+
+    class Crash(Exception):
+        pass
+
+    if crash_after == "staging_write":
+        def swap_in(_spark, _path):
+            raise Crash
+
+        monkeypatch.setattr(scd_stream, "swap_in", swap_in)
+    else:
+        real, crash_at, seen = commit._fs_checked, {"first_rename": 1, "second_rename": 2}[crash_after], []
+
+        def fs_checked(*args):
+            real(*args)
+            seen.append(args)
+            if len(seen) == crash_at:
+                raise Crash
+
+        monkeypatch.setattr(commit, "_fs_checked", fs_checked)
+    with pytest.raises(Exception, match="Crash"):
+        drain("crash")
+    monkeypatch.undo()
+
+    dim = tmp_path / "crash_dim"
+    left = {
+        "staging_write": (True, True, False),
+        "first_rename": (False, True, True),
+        "second_rename": (True, False, True),
+    }[crash_after]
+    assert (dim.exists(), (tmp_path / "crash_dim._staging").exists(), (tmp_path / "crash_dim._backup").exists()) == left
+
+    drain("crash")
+    assert _scd_rows(spark, str(dim)) == _scd_rows(spark, str(tmp_path / "clean_dim"))
+    assert len(_scd_rows(spark, str(dim))) == 4
+    assert sorted(p.name for p in tmp_path.iterdir() if p.name.startswith("crash_dim")) == ["crash_dim"]
 
 
 def test_stream_stream_join_matches_batch(spark):
