@@ -78,6 +78,56 @@ def _checked_norm(nv: Column) -> Column:
     ).otherwise(nv)
 
 
+def _query_rows(queries: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+    """(query_id, q_vec, qn) — the probe side every scorer ranks from,
+    the query norm guarded against zero (:func:`_checked_norm`)."""
+    return queries.select(
+        F.col(id_col).alias("query_id"),
+        F.col(vec_col).alias("q_vec"),
+        _checked_norm(norm_expr(F.col(vec_col))).alias("qn"),
+    )
+
+
+def _list_rows(corpus: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+    """(neighbor_id, c_vec, cn) — the one inverted-list row shape of
+    both IVF quantizers (and the brute-force candidate side), widened
+    before the per-row folds: a broadcast join evaluates the corpus
+    side in the SCAN stage, and an embeddings scan is few bytes per
+    FLOP (single split well past sf1.0), so without the spread the
+    whole scoring or assignment pass is one task. The norm is stored
+    with the row, so no scorer re-folds it."""
+    return _spread_narrow_scan(
+        corpus.select(
+            F.col(id_col).alias("neighbor_id"),
+            F.col(vec_col).alias("c_vec"),
+            norm_expr(F.col(vec_col)).alias("cn"),
+        ),
+        "neighbor_id",
+    )
+
+
+def _score_topk(q: DataFrame, c: DataFrame, k: int) -> DataFrame:
+    """Score probed queries against the inverted lists they selected:
+    broadcast the (tiny) probe table, equi-join on cell, exact cosine,
+    per-query top-k. Norms ride the row projections (the cosine_topk
+    note), so scores are bit-identical to the per-pair cosine_expr
+    form. Returns (query_id, neighbor_id, score, rank)."""
+    scored = (
+        F.broadcast(q)
+        .join(c, on="cell", how="inner")
+        .where(F.col("query_id") != F.col("neighbor_id"))
+        .select(
+            "query_id",
+            "neighbor_id",
+            floor_round6(
+                dot_expr(F.col("q_vec"), F.col("c_vec")) / (F.col("qn") * F.col("cn"))
+            ).alias("score"),
+        )
+    )
+    w = Window.partitionBy("query_id").orderBy(F.col("score").desc(), F.col("neighbor_id").asc())
+    return scored.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
+
+
 def cosine_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -97,23 +147,8 @@ def cosine_topk(
     # norm(c) per query row (HOFs are interpreted, no CSE — the
     # _argmax_cell_expr note). dot/(qn*cn) keeps cosine_expr's exact
     # grouping, so scores are bit-identical.
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("q_vec"),
-        _checked_norm(norm_expr(F.col(vec_col))).alias("qn"),
-    )
-    # widen before the per-row norm + per-query dot folds: a broadcast
-    # join evaluates the corpus side in the SCAN stage, and an
-    # embeddings scan is few bytes per FLOP (single split well past
-    # sf1.0) — without this the whole brute-force pass is one task
-    c = _spread_narrow_scan(
-        corpus.select(
-            F.col(id_col).alias("neighbor_id"),
-            F.col(vec_col).alias("c_vec"),
-            norm_expr(F.col(vec_col)).alias("cn"),
-        ),
-        "neighbor_id",
-    )
+    q = _query_rows(queries, id_col, vec_col)
+    c = _list_rows(corpus, id_col, vec_col)
     scored = F.broadcast(q).crossJoin(c)
     if not include_self:
         scored = scored.where(F.col("query_id") != F.col("neighbor_id"))
@@ -604,6 +639,23 @@ def with_probe_cells(
     )
 
 
+def _flat_probe_cells(
+    queries: DataFrame,
+    centroids: list[list[float]],
+    id_col: str,
+    vec_col: str,
+    n_probe: int,
+) -> DataFrame:
+    """Query side of the flat probe: rank the cells per query and keep
+    the ``n_probe`` best (:func:`with_probe_cells`) — the flat twin of
+    :func:`_ivf2_probe_cells`. Returns (query_id, q_vec, qn, cell)."""
+    return (
+        with_probe_cells(_query_rows(queries, id_col, vec_col), "q_vec", centroids, n_probe)
+        .select("query_id", "q_vec", "qn", F.explode("_probes").alias("probe"))
+        .select("query_id", "q_vec", "qn", F.col("probe.c").alias("cell"))
+    )
+
+
 def with_assigned_cell(
     df: DataFrame, vec_col: str, centroids: list[list[float]], out_col: str = "cell"
 ) -> DataFrame:
@@ -868,58 +920,16 @@ def cosine_topk_ivf(
         # ~NULL = NULL would silently drop it here)
         corpus = corpus.where(~F.coalesce(F.expr(tombstones_where), F.lit(False)))
 
-    # widen BEFORE the O(N x n_cells) scoring fold: an embeddings scan
-    # is few bytes per FLOP (sf10 = 200k vectors in ~2 parquet splits),
-    # so without this the ENTIRE final assignment runs in 1-2 tasks —
+    # _list_rows widens BEFORE the O(N x n_cells) scoring fold: an
+    # embeddings scan is few bytes per FLOP (sf10 = 200k vectors in ~2
+    # parquet splits), so without this the ENTIRE final assignment runs in 1-2 tasks —
     # measured 1029 s single-task vs ~40 s wide at sf10. Training
     # already spreads inside ivf_train_centroids; this is the same
     # lesson applied to the one remaining full-corpus pass. At real
     # scale the scan is already wide and this is a no-op (no shuffle).
-    c = with_assigned_cell(
-        _spread_narrow_scan(
-            corpus.select(
-                F.col(id_col).alias("neighbor_id"),
-                F.col(vec_col).alias("c_vec"),
-                norm_expr(F.col(vec_col)).alias("cn"),
-            ),
-            "neighbor_id",
-        ),
-        "c_vec",
-        centroids,
-    )
-
-    # rank cells per query and keep the n_probe best
-    q = (
-        with_probe_cells(
-            queries.select(
-                F.col(id_col).alias("query_id"),
-                F.col(vec_col).alias("q_vec"),
-                _checked_norm(norm_expr(F.col(vec_col))).alias("qn"),
-            ),
-            "q_vec",
-            centroids,
-            n_probe,
-        )
-        .select("query_id", "q_vec", "qn", F.explode("_probes").alias("probe"))
-        .select("query_id", "q_vec", "qn", F.col("probe.c").alias("cell"))
-    )
-
-    scored = (
-        F.broadcast(q)
-        .join(c, on="cell", how="inner")
-        .where(F.col("query_id") != F.col("neighbor_id"))
-        # norms ride the row projections (the cosine_topk note);
-        # scores bit-identical to the per-pair cosine_expr form
-        .select(
-            "query_id",
-            "neighbor_id",
-            floor_round6(
-                dot_expr(F.col("q_vec"), F.col("c_vec")) / (F.col("qn") * F.col("cn"))
-            ).alias("score"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("score").desc(), F.col("neighbor_id").asc())
-    return scored.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
+    c = with_assigned_cell(_list_rows(corpus, id_col, vec_col), "c_vec", centroids)
+    q = _flat_probe_cells(queries, centroids, id_col, vec_col, n_probe)
+    return _score_topk(q, c, k)
 
 
 def _member_table_df(spark, l2: list[list[float]], cell2super: dict[int, int]) -> DataFrame:
@@ -1024,19 +1034,7 @@ def _ivf2_corpus_lists(
         )["c"]
 
     return (
-        with_assigned_cell(
-            _spread_narrow_scan(
-                corpus.select(
-                    F.col(id_col).alias("neighbor_id"),
-                    F.col(vec_col).alias("c_vec"),
-                    norm_expr(F.col(vec_col)).alias("cn"),
-                ),
-                "neighbor_id",
-            ),
-            "c_vec",
-            l1,
-            out_col="_super",
-        )
+        with_assigned_cell(_list_rows(corpus, id_col, vec_col), "c_vec", l1, out_col="_super")
         .join(F.broadcast(members), "_super")
         # cn IS norm_expr(c_vec) — reuse it as the bound row norm
         .select(
@@ -1062,15 +1060,7 @@ def _ivf2_probe_cells(
     (query_id, q_vec, qn, cell)."""
     qs = (
         with_probe_cells(
-            queries.select(
-                F.col(id_col).alias("query_id"),
-                F.col(vec_col).alias("q_vec"),
-                _checked_norm(norm_expr(F.col(vec_col))).alias("qn"),
-            ),
-            "q_vec",
-            l1,
-            n_super_probe,
-            out_col="_sprobes",
+            _query_rows(queries, id_col, vec_col), "q_vec", l1, n_super_probe, out_col="_sprobes"
         )
         .select("query_id", "q_vec", "qn", F.explode("_sprobes").alias("sp"))
         .select("query_id", "q_vec", "qn", F.col("sp.c").alias("_super"))
@@ -1092,26 +1082,6 @@ def _ivf2_probe_cells(
         .where(F.col("_rn") <= n_probe)
         .select("query_id", "q_vec", "qn", "cell")
     )
-
-
-def _ivf2_score_topk(q: DataFrame, c: DataFrame, k: int) -> DataFrame:
-    """Score probed queries against the inverted lists they selected:
-    broadcast the (tiny) probe table, equi-join on cell, exact cosine,
-    per-query top-k. Returns (query_id, neighbor_id, score, rank)."""
-    scored = (
-        F.broadcast(q)
-        .join(c, on="cell", how="inner")
-        .where(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            floor_round6(
-                dot_expr(F.col("q_vec"), F.col("c_vec")) / (F.col("qn") * F.col("cn"))
-            ).alias("score"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("score").desc(), F.col("neighbor_id").asc())
-    return scored.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
 
 
 def cosine_topk_ivf2(
@@ -1139,7 +1109,7 @@ def cosine_topk_ivf2(
     members = _member_table_df(spark, l2, cell2super)
     c = _ivf2_corpus_lists(corpus, members, l1, id_col, vec_col)
     q = _ivf2_probe_cells(queries, members, l1, id_col, vec_col, n_super_probe, n_probe)
-    return _ivf2_score_topk(q, c, k)
+    return _score_topk(q, c, k)
 
 
 def build_ivf2_index(
@@ -1164,142 +1134,10 @@ def build_ivf2_index(
     spark = corpus.sparkSession
     l2, l1, cell2super = ivf2_train(corpus, id_col, vec_col, n_cells, iters, train_where)
     members = _member_table_df(spark, l2, cell2super)
-    # repartition ON the partition column before the partitioned write:
-    # with derived capacities the cell count is large (2048 at 2M
-    # vectors), and a direct partitionBy write fans every assignment
-    # task across every cell — tasks x cells files (65k at sf10; at
-    # cluster scale, executors x cells — a metadata explosion the
-    # serving tier pays on every probe). One corpus shuffle at build
-    # buys ~one file per cell. The flat build/appends apply the same
-    # device since r15 (measured: the direct write put 391 files under
-    # q199's 2000-row sf0.1 index; the commit's sequential renames and
-    # the per-file footer reads of every later scan dominated walls).
-    lists = _ivf2_corpus_lists(corpus, members, l1, id_col, vec_col)
-    # drop a previous build's schema pin before the data overwrite,
-    # re-record after (the build_ivf_index note)
-    _drop_index_schema(spark, path)
-    lists.repartition(F.col("cell")).write.mode("overwrite").partitionBy("cell").parquet(path)
-    _write_index_schema(spark, path, lists)
-    _write_driver_rows(
-        spark,
-        [(i, c, cell2super[i]) for i, c in enumerate(l2)],
-        _SIDECAR_CENTROIDS2_SCHEMA,
-        path + "_centroids",
-    )
-    _write_driver_rows(
-        spark, [(i, c) for i, c in enumerate(l1)], _SIDECAR_SUPERS_SCHEMA, path + "_supers"
+    _write_index(
+        spark, path, _ivf2_corpus_lists(corpus, members, l1, id_col, vec_col), l2, cell2super, l1
     )
     return l2, l1, cell2super
-
-
-def append_to_ivf2_index(
-    new_vectors: DataFrame,
-    path: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    skip_existing_ids: bool = True,
-    batch_token: str | None = None,
-) -> None:
-    """Incremental maintenance for the HIERARCHICAL index —
-    :func:`append_to_ivf_index`'s contract (frozen quantizer, append
-    only the batch's inverted-list rows, same two idempotency guards
-    with the same cost contracts and failure semantics) on the
-    two-level layout: the batch routes supercell -> best member cell
-    under the sidecar quantizer, O(sqrt n_cells) per row instead of
-    the flat append's O(n_cells). Like the flat append, a batch
-    containing a currently-TOMBSTONED id raises with the
-    compact-first instruction (see :func:`delete_from_ivf2_index`) —
-    proceeding would lose the new vector silently under either
-    idempotency guard."""
-    spark = new_vectors.sparkSession
-    # heal any crashed maintenance swap first (the flat append's note)
-    recover_ivf_index(spark, path)
-    if batch_token is not None:
-        if _count_batch_token(spark, path + "_batches", batch_token):
-            return
-    tombs = _read_optional_sidecar(spark, path + "_tombstones")
-    if tombs is not None:
-        clash = (
-            new_vectors.select(F.col(id_col).alias("neighbor_id"))
-            .join(F.broadcast(tombs.select("neighbor_id")), on="neighbor_id", how="left_semi")
-            .limit(5)
-            .collect()
-        )
-        if clash:
-            raise ValueError(
-                f"append batch contains tombstoned id(s) {[r[0] for r in clash]}: "
-                "use update_in_ivf2_index (or run compact_ivf2_index) before "
-                "re-inserting a deleted id "
-                "(appending now would be silently hidden by the tombstone "
-                "and removed by the next compaction)"
-            )
-    crows = _sidecar_rows(spark, path + "_centroids", _SIDECAR_CENTROIDS2_SCHEMA, "cell")
-    l2 = [[float(x) for x in r["centroid"]] for r in crows]
-    cell2super = {r["cell"]: r["supercell"] for r in crows}
-    srows = _sidecar_rows(spark, path + "_supers", _SIDECAR_SUPERS_SCHEMA, "supercell")
-    l1 = [[float(x) for x in r["centroid"]] for r in srows]
-    members = _member_table_df(spark, l2, cell2super)
-    batch = new_vectors
-    if skip_existing_ids:
-        existing = _read_index(spark, path).select(F.col("neighbor_id").alias(id_col))
-        batch = batch.join(existing, on=id_col, how="left_anti")
-    # repartition on the partition column before the partitioned write
-    # (the build's device, applied to the append too — without it each
-    # batch adds tasks x touched-cells files to the serving layout)
-    _ivf2_corpus_lists(batch, members, l1, id_col, vec_col).repartition(
-        F.col("cell")
-    ).write.mode("append").partitionBy("cell").parquet(path)
-    if batch_token is not None:
-        _write_driver_rows(
-            spark, [(batch_token,)], _SIDECAR_BATCHES_SCHEMA, path + "_batches", mode="append"
-        )
-
-
-def query_ivf2_index(
-    queries: DataFrame,
-    path: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 10,
-    n_probe: int = 3,
-    n_super_probe: int = 2,
-) -> DataFrame:
-    """Top-k against a persisted hierarchical index: rebuild the
-    (driver-resident) quantizer from the sidecars, probe
-    ``n_super_probe`` supercells -> ``n_probe`` member cells per query
-    (the exact :func:`_ivf2_probe_cells` ranking), and read ONLY the
-    probed cells' files (static partition filter on the inverted-list
-    scan — the q156 pruning device on the two-level layout). Values are
-    identical to the in-plan :func:`cosine_topk_ivf2` because the
-    persisted lists carry the same (c_vec, cn) and the probe/score
-    devices are shared verbatim. Tombstoned ids
-    (:func:`delete_from_ivf2_index`) are anti-joined out of the
-    candidate side before scoring — the flat
-    :func:`query_ivf_index` exclusion on the hierarchical layout:
-    deletes are visible without any file rewrite, and ranks assigned
-    after the exclusion free a deleted neighbor's rank."""
-    spark = queries.sparkSession
-    crows = _sidecar_rows(spark, path + "_centroids", _SIDECAR_CENTROIDS2_SCHEMA, "cell")
-    l2 = [[float(x) for x in r["centroid"]] for r in crows]
-    cell2super = {r["cell"]: r["supercell"] for r in crows}
-    srows = _sidecar_rows(spark, path + "_supers", _SIDECAR_SUPERS_SCHEMA, "supercell")
-    l1 = [[float(x) for x in r["centroid"]] for r in srows]
-    members = _member_table_df(spark, l2, cell2super)
-    q = _ivf2_probe_cells(queries, members, l1, id_col, vec_col, n_super_probe, n_probe)
-    # q is consumed twice (probed-cell collect, then the broadcast
-    # join); checkpoint so the probe ranking runs once
-    q = q.localCheckpoint(eager=True)
-    # dedup driver-side: q is ≤ queries x n_probe rows (already
-    # materialized above), and .distinct() before the collect costs an
-    # extra shuffle + AQE job for a set the driver builds in microseconds
-    probed = sorted({r["cell"] for r in q.select("cell").collect()})
-    c = _read_index(spark, path).where(F.col("cell").isin(probed))
-    tombs = _read_optional_sidecar(spark, path + "_tombstones")
-    if tombs is not None:
-        # tiny sidecar (compaction resets it) — broadcast anti-join,
-        # the candidate lists never shuffle
-        c = c.join(F.broadcast(tombs.select("neighbor_id")), on="neighbor_id", how="left_anti")
-    return _ivf2_score_topk(q, c, k)
 
 
 def ivf2_recall_sweep(
@@ -1350,7 +1188,7 @@ def ivf2_recall_sweep(
         q = _ivf2_probe_cells(
             queries, members, l1, id_col, vec_col, n_super_probe, n_probe
         )
-        approx = _ivf2_score_topk(q, c, k).select("query_id", "neighbor_id")
+        approx = _score_topk(q, c, k).select("query_id", "neighbor_id")
         hits = (
             approx.join(exact, ["query_id", "neighbor_id"])
             .groupBy("query_id")
@@ -1392,7 +1230,9 @@ def build_ivf_index(
     train_where: str | None = None,
 ) -> list[list[float]]:
     """Persist an IVF index: train the coarse quantizer once, write the
-    corpus as inverted lists ``partitionBy("cell")``, and store the
+    corpus as (neighbor_id, c_vec, cn) inverted lists
+    ``partitionBy("cell")`` — the caller's columns renamed and the row
+    norm stored, the list schema both quantizers share — and store the
     centroids as a tiny sidecar table. At 100 TB this is the point of
     IVF — the expensive corpus pass happens once; every later query
     batch reads only its probed cells' files (partition pruning), never
@@ -1411,36 +1251,8 @@ def build_ivf_index(
     # zero-norm corpus rows (even outside the train subset) raise
     # inside the list-writing assignment expression (_checked_norm)
     # — no separate guard pass over the corpus
-    # widen the scan before the corpus-wide scoring fold (the
-    # cosine_topk_ivf note: single-split embedding scans serialize it)
-    # repartition ON the partition column before the partitioned write
-    # (the build_ivf2_index device, measured to matter here too): the
-    # assignment runs wide (spread above at small SF, the scan's own
-    # splits at scale), so a direct partitionBy write fans every
-    # assignment task across every cell — tasks x cells files (391
-    # four-KB files for q199's sf0.1 index; at a derived capacity of
-    # 2^12 cells, executors x 4096 — a metadata explosion every probe,
-    # audit, and the driver-side job commit pay for). The cell shuffle
-    # moves only (id, vec, cell) rows once and lands ~one file per
-    # cell; the assignment fold itself still runs map-side, before the
-    # exchange.
-    lists = with_assigned_cell(
-        _spread_narrow_scan(corpus.select(F.col(id_col), F.col(vec_col)), id_col),
-        vec_col,
-        centroids,
-    )
-    # stale-schema window closed: drop any previous build's schema pin
-    # BEFORE overwriting the data, re-record it after (readers between
-    # the two fall back to inference — see _write_index_schema)
-    _drop_index_schema(spark, path)
-    lists.repartition(F.col("cell")).write.mode("overwrite").partitionBy("cell").parquet(path)
-    _write_index_schema(spark, path, lists)
-    _write_driver_rows(
-        spark,
-        [(i, c) for i, c in enumerate(centroids)],
-        _SIDECAR_CENTROIDS_SCHEMA,
-        path + "_centroids",
-    )
+    lists = with_assigned_cell(_list_rows(corpus, id_col, vec_col), "c_vec", centroids)
+    _write_index(spark, path, lists, centroids)
     return centroids
 
 
@@ -1448,12 +1260,78 @@ def build_ivf_index(
 # reads pass them explicitly instead of paying a schema-inference
 # footer job per open — the r15 profile measured one 1-task job plus
 # ~0.1 s of driver planning per inferred read, several times per
-# index operation. (The _tombstones sidecar keeps inference: its id
-# column's name and type follow the caller's DataFrame.)
-_SIDECAR_CENTROIDS_SCHEMA = "cell INT, centroid ARRAY<DOUBLE>"
-_SIDECAR_CENTROIDS2_SCHEMA = "cell INT, centroid ARRAY<DOUBLE>, supercell INT"
+# index operation. (The _tombstones sidecar keeps inference: its
+# neighbor_id column carries the caller's id type.) Both quantizers
+# share one centroid sidecar: a flat index records a NULL supercell
+# per cell, a hierarchical one its cell->supercell map (and writes
+# the level-1 centroids to _supers).
+_SIDECAR_CENTROIDS_SCHEMA = "cell INT, centroid ARRAY<DOUBLE>, supercell INT"
 _SIDECAR_SUPERS_SCHEMA = "supercell INT, centroid ARRAY<DOUBLE>"
 _SIDECAR_BATCHES_SCHEMA = "token STRING"
+
+
+def _write_index(
+    spark,
+    path: str,
+    lists: DataFrame,
+    l2: list[list[float]],
+    cell2super: dict[int, int] | None = None,
+    l1: list[list[float]] | None = None,
+) -> None:
+    """The one write path of both builds: ``lists`` are the routed
+    (neighbor_id, c_vec, cn, cell) rows; ``cell2super``/``l1`` are
+    None for a flat index, which records a NULL supercell per cell and
+    writes no ``_supers``.
+
+    The lists repartition ON the partition column before the
+    partitioned write: with derived capacities the cell count is large
+    (2048 at 2M vectors), and a direct partitionBy write fans every
+    assignment task across every cell — tasks x cells files (65k at
+    sf10; 391 four-KB files under q199's 2000-row sf0.1 index; at
+    cluster scale, executors x cells — a metadata explosion every
+    probe, audit, and the driver-side job commit pay for). One shuffle
+    of the routed rows buys ~one file per cell; the assignment fold
+    itself still runs map-side, before the exchange. The appends apply
+    the same device.
+
+    Stale-schema window closed: any previous build's schema pin is
+    dropped BEFORE the data overwrite and re-recorded after (readers
+    between the two fall back to inference — see _write_index_schema)."""
+    _drop_index_schema(spark, path)
+    lists.repartition(F.col("cell")).write.mode("overwrite").partitionBy("cell").parquet(path)
+    _write_index_schema(spark, path, lists)
+    _write_driver_rows(
+        spark,
+        [(i, c, (cell2super or {}).get(i)) for i, c in enumerate(l2)],
+        _SIDECAR_CENTROIDS_SCHEMA,
+        path + "_centroids",
+    )
+    if l1 is not None:
+        _write_driver_rows(spark, list(enumerate(l1)), _SIDECAR_SUPERS_SCHEMA, path + "_supers")
+
+
+def _read_quantizer(spark, path: str):
+    """The persisted quantizer as (l2, l1, cell2super); ``l1`` and
+    ``cell2super`` are None for a flat index. The layout is read from
+    ``_centroids`` alone — any non-NULL supercell means hierarchical.
+    Whether ``_supers`` exists decides nothing: a flat rebuild over a
+    hierarchical path leaves the old ``_supers`` behind, so a
+    hierarchical index missing its ``_supers`` raises instead of being
+    routed as flat."""
+    rows = _sidecar_rows(spark, path + "_centroids", _SIDECAR_CENTROIDS_SCHEMA, "cell")
+    l2 = [[float(x) for x in r["centroid"]] for r in rows]
+    cell2super = {r["cell"]: r["supercell"] for r in rows}
+    if all(s is None for s in cell2super.values()):
+        return l2, None, None
+    fs, hpath = _hadoop_fs(spark, path + "_supers")
+    if None in cell2super.values() or not fs.exists(hpath):
+        raise RuntimeError(
+            f"hierarchical IVF index at {path} is incomplete: its _centroids "
+            "sidecar names supercells, but a cell has none or the _supers "
+            "sidecar is missing — rebuild it with build_ivf2_index"
+        )
+    srows = _sidecar_rows(spark, path + "_supers", _SIDECAR_SUPERS_SCHEMA, "supercell")
+    return l2, [[float(x) for x in r["centroid"]] for r in srows], cell2super
 
 
 def _sidecar_rows(spark, path: str, schema: str, key: str):
@@ -1679,15 +1557,14 @@ def recover_ivf_index(spark, path: str) -> dict:
       already-swapped cells left tmp atomically, so re-execution
       converges).
 
-    Every mutating entry point (append / update / compact / rebalance,
-    both layouts) calls this first, so an orchestrator retry of a
-    killed maintenance job self-heals before reading the index. The
-    read-only paths (query/audit) deliberately do NOT mutate: after a
-    crash and before the next maintenance op, a query can miss rows of
-    at most the cells whose rename had not landed — run this (or any
-    maintenance op) once to converge. Layout-agnostic (operates purely
-    on ``cell=*`` directories): :func:`recover_ivf2_index` is the same
-    function.
+    Every mutating entry point (append / update / compact / rebalance)
+    calls this first, so an orchestrator retry of a killed maintenance
+    job self-heals before reading the index. The read-only paths
+    (query/audit) deliberately do NOT mutate: after a crash and before
+    the next maintenance op, a query can miss rows of at most the
+    cells whose rename had not landed — run this (or any maintenance
+    op) once to converge. Layout-agnostic: the protocol never looks
+    inside a ``cell=*`` directory, so it serves both quantizers.
 
     SINGLE-WRITER CONTRACT (load-bearing for the rolled-back branch,
     a code-review r15 finding): ALL mutating operations on one index —
@@ -1708,16 +1585,12 @@ def recover_ivf_index(spark, path: str) -> dict:
         return {"action": "none"}
     _, intent_h = _hadoop_fs(spark, tmp + "/_intent.json")
     if not fs.exists(intent_h):
-        fs.delete(tmp_h, True)
+        # checked: an ignored false return would report rolled_back
+        # with the stage still present, and the next maintenance op
+        # would refuse it as "in flight"
+        _fs_checked(fs.delete(tmp_h, True), "delete", tmp)
         return {"action": "rolled_back"}
     return {"action": "rolled_forward", **_finish_cell_swap(spark, path)}
-
-
-def recover_ivf2_index(spark, path: str) -> dict:
-    """:func:`recover_ivf_index` on the hierarchical layout — the swap
-    protocol never looks inside a cell directory, so the one
-    implementation serves both."""
-    return recover_ivf_index(spark, path)
 
 
 def _replace_cell_partitions(
@@ -1790,6 +1663,12 @@ def append_to_ivf_index(
     distribution drifts enough that cell occupancy skews — see the
     audit in q125's family) is a separate, rarer full rebuild.
 
+    Serves both quantizers: the batch routes under whichever one the
+    ``_centroids`` sidecar records (:func:`_read_quantizer`) — the
+    flat argmax over every cell, O(n_cells) per row, or supercell ->
+    best member cell, O(sqrt n_cells) per row — and lands as the same
+    (neighbor_id, c_vec, cn, cell) rows the build wrote.
+
     Idempotency — two guards with different cost contracts:
 
     - ``batch_token`` (the 100 TB path): the caller names the batch
@@ -1855,8 +1734,8 @@ def append_to_ivf_index(
     tombs = _read_optional_sidecar(spark, path + "_tombstones")
     if tombs is not None:
         clash = (
-            new_vectors.select(F.col(id_col))
-            .join(F.broadcast(tombs.select(id_col)), on=id_col, how="left_semi")
+            new_vectors.select(F.col(id_col).alias("neighbor_id"))
+            .join(F.broadcast(tombs.select("neighbor_id")), on="neighbor_id", how="left_semi")
             .limit(5)
             .collect()
         )
@@ -1868,23 +1747,23 @@ def append_to_ivf_index(
                 "(appending now would be silently hidden by the tombstone "
                 "and removed by the next compaction)"
             )
-    cents = _sidecar_rows(spark, path + "_centroids", _SIDECAR_CENTROIDS_SCHEMA, "cell")
-    centroids = [[float(x) for x in r["centroid"]] for r in cents]
-    # zero-norm batch rows raise inside the assignment expression
-    # (_checked_norm) during the append write — no extra guard action
+    l2, l1, cell2super = _read_quantizer(spark, path)
     batch = new_vectors
     if skip_existing_ids:
-        existing = _read_index(spark, path).select(F.col(id_col))
+        existing = _read_index(spark, path).select(F.col("neighbor_id").alias(id_col))
         batch = batch.join(existing, on=id_col, how="left_anti")
+    # zero-norm batch rows raise inside the assignment expression
+    # (_checked_norm) during the append write — no extra guard action
+    if l1 is None:
+        lists = with_assigned_cell(_list_rows(batch, id_col, vec_col), "c_vec", l2)
+    else:
+        members = _member_table_df(spark, l2, cell2super)
+        lists = _ivf2_corpus_lists(batch, members, l1, id_col, vec_col)
     # repartition on the partition column before the partitioned write
-    # (the build_ivf_index note): an append otherwise lands
+    # (the _write_index note): an append otherwise lands
     # tasks x touched-cells new files EVERY batch, compounding the
     # index's file count with each ingest window.
-    with_assigned_cell(
-        _spread_narrow_scan(batch.select(F.col(id_col), F.col(vec_col)), id_col),
-        vec_col,
-        centroids,
-    ).repartition(F.col("cell")).write.mode("append").partitionBy("cell").parquet(path)
+    lists.repartition(F.col("cell")).write.mode("append").partitionBy("cell").parquet(path)
     if batch_token is not None:
         _write_driver_rows(
             spark, [(batch_token,)], _SIDECAR_BATCHES_SCHEMA, path + "_batches", mode="append"
@@ -1898,7 +1777,9 @@ def delete_from_ivf_index(
 ) -> None:
     """Logical deletion — the missing step of the index lifecycle
     (build → persist → append → audit → split/rebalance → DELETE →
-    compact). Records ``ids`` in a tiny ``_tombstones`` sidecar;
+    compact). Records ``ids`` (their ``id_col``) in a tiny
+    ``_tombstones`` sidecar keyed ``neighbor_id`` — the lists' id
+    column, with the caller's id type — on either quantizer;
     :func:`query_ivf_index` anti-joins it so deleted vectors stop
     appearing as neighbors IMMEDIATELY, while the inverted-list files
     are untouched — at 100 TB a delete must not rewrite a single data
@@ -1933,29 +1814,22 @@ def delete_from_ivf_index(
     ``append_to_ivf_index``, concurrent deleters are the caller's to
     serialize."""
     spark = ids.sparkSession
-    batch = ids.select(F.col(id_col)).distinct()
+    batch = ids.select(F.col(id_col).alias("neighbor_id")).distinct()
     existing = _read_optional_sidecar(spark, path + "_tombstones")
     if existing is not None:
-        batch = batch.join(existing.select(id_col), on=id_col, how="left_anti")
+        batch = batch.join(existing.select("neighbor_id"), on="neighbor_id", how="left_anti")
     # one file per delete batch: the sidecar is tiny by contract, and
     # the distinct() above otherwise fans it across the shuffle width
     batch.coalesce(1).write.mode("append").parquet(path + "_tombstones")
 
 
-def compact_ivf_index(
-    spark,
-    path: str,
-    id_col: str = "vec_id",
-    only_ids: DataFrame | None = None,
-) -> dict:
+def compact_ivf_index(spark, path: str, only_ids: DataFrame | None = None) -> dict:
     """Physical removal of tombstoned rows — the list-compaction half
     of delete. LAYOUT-AGNOSTIC: the rewrite keeps every non-partition
-    column of the surviving rows verbatim, so the same implementation
-    compacts the flat lists (id, embedding, cell) and the hierarchical
-    ones (neighbor_id, c_vec, cn, cell — pass ``id_col="neighbor_id"``
-    or use :func:`compact_ivf2_index`); only ``id_col`` and the
-    ``cell`` partition column are named. Same partition-pruning
-    contract as :func:`rebalance_ivf_index`: ONLY cells that actually
+    column of the surviving rows verbatim, and only the lists'
+    ``neighbor_id`` and the ``cell`` partition column are named, so
+    one implementation compacts both quantizers' lists. Same
+    partition-pruning contract as :func:`rebalance_ivf_index`: ONLY cells that actually
     hold a tombstoned row are read (a column-pruned (id, cell) scan
     finds them) and ONLY those partitions are rewritten. A cell whose
     every member is tombstoned gets its directory removed outright;
@@ -1964,8 +1838,8 @@ def compact_ivf_index(
     read nothing.
 
     ``only_ids`` restricts the compaction to tombstones whose id is in
-    the given set — the MICRO-COMPACTION behind
-    :func:`update_in_ivf_index`: only the cells holding THOSE ids'
+    the given set (its ``neighbor_id`` column) — the MICRO-COMPACTION
+    behind :func:`update_in_ivf_index`: only the cells holding THOSE ids'
     rows are rewritten (O(cells-of-batch), independent of how much
     unrelated tombstone debt the index carries), and only those ids
     leave the sidecar — unrelated tombstones stay recorded, and any of
@@ -1994,10 +1868,12 @@ def compact_ivf_index(
     tombs_all = _read_optional_sidecar(spark, path + "_tombstones")
     if tombs_all is None:
         return zero
-    tombs_all = tombs_all.select(id_col).distinct().localCheckpoint(eager=True)
+    tombs_all = tombs_all.select("neighbor_id").distinct().localCheckpoint(eager=True)
     if only_ids is not None:
         tombs = (
-            tombs_all.join(only_ids.select(id_col).distinct(), on=id_col, how="left_semi")
+            tombs_all.join(
+                only_ids.select("neighbor_id").distinct(), on="neighbor_id", how="left_semi"
+            )
             .localCheckpoint(eager=True)
         )
     else:
@@ -2014,8 +1890,8 @@ def compact_ivf_index(
     # and an action after the overwrite would read the
     # already-compacted files and count zero.
     per_cell = (
-        idx.select(id_col, "cell")
-        .join(F.broadcast(tombs), on=id_col, how="left_semi")
+        idx.select("neighbor_id", "cell")
+        .join(F.broadcast(tombs), on="neighbor_id", how="left_semi")
         .groupBy("cell")
         .agg(F.count(F.lit(1)).alias("n"))
         .collect()
@@ -2029,7 +1905,7 @@ def compact_ivf_index(
         # rewrite does not read the files it replaces
         keep = (
             idx.where(F.col("cell").isin(affected))
-            .join(tombs, on=id_col, how="left_anti")
+            .join(tombs, on="neighbor_id", how="left_anti")
             .withColumn("cell", F.col("cell").cast("int"))
             .localCheckpoint(eager=True)
         )
@@ -2075,7 +1951,7 @@ def compact_ivf_index(
     if only_ids is None:
         tombs_all.limit(0).write.mode("overwrite").parquet(path + "_tombstones")
     else:
-        tombs_all.join(tombs, on=id_col, how="left_anti").write.mode("overwrite").parquet(
+        tombs_all.join(tombs, on="neighbor_id", how="left_anti").write.mode("overwrite").parquet(
             path + "_tombstones"
         )
     return stats
@@ -2128,11 +2004,7 @@ def tombstone_debt_report(per_cell: DataFrame) -> DataFrame:
     ).orderBy("cell")
 
 
-def audit_ivf_tombstones(
-    spark,
-    path: str,
-    id_col: str = "vec_id",
-) -> DataFrame:
+def audit_ivf_tombstones(spark, path: str) -> DataFrame:
     """Tombstone-debt audit — the WHEN for :func:`compact_ivf_index`,
     completing the maintenance pair the occupancy audit started
     (occupancy audit → :func:`rebalance_ivf_index`; THIS →
@@ -2177,7 +2049,7 @@ def audit_ivf_tombstones(
     (frac 1.0); trained-but-empty cells have no inverted-list rows and
     never appear — a compaction cannot touch them either, so the
     audit↔compact contract is unaffected."""
-    idx = _read_index(spark, path).select(id_col, "cell")
+    idx = _read_index(spark, path).select("neighbor_id", "cell")
     tombs = _read_optional_sidecar(spark, path + "_tombstones")
     if tombs is None or not tombs.head(1):
         per_cell = idx.groupBy("cell").agg(
@@ -2185,8 +2057,8 @@ def audit_ivf_tombstones(
         )
     else:
         flagged = idx.join(
-            F.broadcast(tombs.select(id_col).distinct().withColumn("__dead", F.lit(1))),
-            on=id_col,
+            F.broadcast(tombs.select("neighbor_id").distinct().withColumn("__dead", F.lit(1))),
+            on="neighbor_id",
             how="left",
         )
         per_cell = flagged.groupBy("cell").agg(
@@ -2196,117 +2068,6 @@ def audit_ivf_tombstones(
     return tombstone_debt_report(
         per_cell.select(F.col("cell").cast("int").alias("cell"), "n", "nt")
     )
-
-
-def delete_from_ivf2_index(
-    ids: DataFrame,
-    path: str,
-    id_col: str = "vec_id",
-) -> None:
-    """:func:`delete_from_ivf_index`'s contract on the HIERARCHICAL
-    layout, completing the two-level lifecycle matrix (build q220 →
-    append q221 → delete/compact/audit here). The hierarchical
-    inverted lists name their id column ``neighbor_id``
-    (:func:`_ivf2_corpus_lists`), so the tombstone sidecar records ids
-    under that name and the flat machinery applies verbatim — same
-    sidecar-only cost (no data file touched), same anti-join dedup,
-    same crash/idempotency semantics."""
-    delete_from_ivf_index(
-        ids.select(F.col(id_col).alias("neighbor_id")), path, id_col="neighbor_id"
-    )
-
-
-def compact_ivf2_index(spark, path: str) -> dict:
-    """:func:`compact_ivf_index` on the hierarchical layout — the
-    compaction is layout-agnostic (it rewrites every surviving column
-    of affected cells verbatim), so this only binds the lists' id
-    column name. Same stats dict, same partition pruning, same
-    sidecar-cleared-last crash convergence."""
-    return compact_ivf_index(spark, path, id_col="neighbor_id")
-
-
-def audit_ivf2_tombstones(spark, path: str) -> DataFrame:
-    """:func:`audit_ivf_tombstones` on the hierarchical layout (id
-    column ``neighbor_id``) — same schema, same integer-exact
-    ``needs_compact`` trigger, same dry-run contract with
-    :func:`compact_ivf2_index`."""
-    return audit_ivf_tombstones(spark, path, id_col="neighbor_id")
-
-
-def _update_in_index(
-    new_vectors,
-    path: str,
-    id_col: str,
-    vec_col: str,
-    batch_token: str | None,
-    lists_id_col: str,
-    append_fn,
-) -> dict:
-    """The one shared delete → micro-compact → append composition
-    behind :func:`update_in_ivf_index` and :func:`update_in_ivf2_index`
-    — parameterized on the inverted lists' id column and the layout's
-    append (the :func:`delete_from_ivf2_index` pattern), so the stats
-    shape, the guard ordering, and the crash argument live exactly
-    once."""
-    spark = new_vectors.sparkSession
-    # heal any crashed maintenance swap before the pre-check reads the
-    # index (a torn cell could otherwise make the wipe probe misjudge)
-    recover_ivf_index(spark, path)
-    if batch_token is not None and _count_batch_token(spark, path + "_batches", batch_token):
-        return {
-            "tombstones": 0,
-            "cells_rewritten": [],
-            "cells_removed": [],
-            "rows_removed": 0,
-            "skipped_token": batch_token,
-        }
-    ids = (
-        new_vectors.select(F.col(id_col).alias(lists_id_col))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    # Total-wipe boundary, checked BEFORE any mutation (a code-review
-    # r15 finding: the micro-compaction's own refusal fires only AFTER
-    # step 1 has tombstoned every id — the whole index would sit
-    # hidden behind the sidecar with every retry re-raising, and a
-    # rebuild at the same path would NOT clear it, since build
-    # overwrites only the data and centroid paths, never the sibling
-    # _tombstones). The anti-join probe is cheap in the normal case:
-    # limit(1) short-circuits on the first live id outside the
-    # (broadcast) batch, so only the pathological near-wipe case scans
-    # far.
-    survivor = (
-        _read_index(spark, path)
-        .select(lists_id_col)
-        .join(F.broadcast(ids), on=lists_id_col, how="left_anti")
-        .limit(1)
-        .count()
-    )
-    if survivor == 0:
-        raise ValueError(
-            "update batch covers every row of the index: an in-place "
-            "update of the whole corpus is a rebuild — run "
-            "build_ivf_index/build_ivf2_index instead (and drop the "
-            "_tombstones sidecar if one exists; a rebuild does not "
-            "clear it)"
-        )
-    delete_from_ivf_index(ids, path, id_col=lists_id_col)
-    stats = compact_ivf_index(spark, path, id_col=lists_id_col, only_ids=ids)
-    # skip_existing_ids=False: the guard would be a no-op by
-    # construction — step 2 just physically removed every batch id's
-    # rows, and a crash re-run re-executes steps 1-2 before reaching
-    # this append — so the O(index ids) anti-join scan it costs would
-    # buy nothing (a code-review r15 finding: that scan was the only
-    # term breaking the documented O(cells-of-batch) update cost).
-    append_fn(
-        new_vectors,
-        path,
-        id_col=id_col,
-        vec_col=vec_col,
-        skip_existing_ids=False,
-        batch_token=batch_token,
-    )
-    return stats
 
 
 def update_in_ivf_index(
@@ -2338,8 +2099,7 @@ def update_in_ivf_index(
        quantizer — possibly to DIFFERENT cells than the old rows, as
        an updated embedding should; the re-insert guard passes because
        step 2 un-tombstoned the ids, and the existing-id guard is
-       skipped because step 2 provably removed the old rows — see
-       :func:`_update_in_index`).
+       skipped because step 2 provably removed the old rows).
 
     Upsert semantics: an id the index never held tombstones nothing,
     micro-compacts nothing, and appends normally. Updating EVERY row
@@ -2363,33 +2123,70 @@ def update_in_ivf_index(
     see :func:`recover_ivf_index`): serialize updates against appends,
     deletes, compactions, and rebalances.
 
+    Serves both quantizers: step 3 is :func:`append_to_ivf_index`,
+    which routes under whichever one the index was built with.
+
     Returns step 2's stats dict (the measured cost of the update's
     rewrite)."""
-    return _update_in_index(
-        new_vectors, path, id_col, vec_col, batch_token,
-        lists_id_col=id_col, append_fn=append_to_ivf_index,
+    spark = new_vectors.sparkSession
+    # heal any crashed maintenance swap before the pre-check reads the
+    # index (a torn cell could otherwise make the wipe probe misjudge)
+    recover_ivf_index(spark, path)
+    if batch_token is not None and _count_batch_token(spark, path + "_batches", batch_token):
+        return {
+            "tombstones": 0,
+            "cells_rewritten": [],
+            "cells_removed": [],
+            "rows_removed": 0,
+            "skipped_token": batch_token,
+        }
+    ids = (
+        new_vectors.select(F.col(id_col).alias("neighbor_id"))
+        .distinct()
+        .localCheckpoint(eager=True)
     )
-
-
-def update_in_ivf2_index(
-    new_vectors: DataFrame,
-    path: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    batch_token: str | None = None,
-) -> dict:
-    """:func:`update_in_ivf_index` on the hierarchical layout — the
-    same delete → micro-compact → append composition
-    (:func:`_update_in_index`, one implementation) with the lists'
-    ``neighbor_id`` column bound and the append routing
-    supercell → best member cell at O(sqrt n_cells) per row. Same
-    upsert semantics, same pre-mutation total-wipe boundary, same
-    crash convergence, same O(cells-of-batch) cost independent of
-    unrelated tombstone debt."""
-    return _update_in_index(
-        new_vectors, path, id_col, vec_col, batch_token,
-        lists_id_col="neighbor_id", append_fn=append_to_ivf2_index,
+    # Total-wipe boundary, checked BEFORE any mutation (a code-review
+    # r15 finding: the micro-compaction's own refusal fires only AFTER
+    # step 1 has tombstoned every id — the whole index would sit
+    # hidden behind the sidecar with every retry re-raising, and a
+    # rebuild at the same path would NOT clear it, since build
+    # overwrites only the data and centroid paths, never the sibling
+    # _tombstones). The anti-join probe is cheap in the normal case:
+    # limit(1) short-circuits on the first live id outside the
+    # (broadcast) batch, so only the pathological near-wipe case scans
+    # far.
+    survivor = (
+        _read_index(spark, path)
+        .select("neighbor_id")
+        .join(F.broadcast(ids), on="neighbor_id", how="left_anti")
+        .limit(1)
+        .count()
     )
+    if survivor == 0:
+        raise ValueError(
+            "update batch covers every row of the index: an in-place "
+            "update of the whole corpus is a rebuild — run "
+            "build_ivf_index/build_ivf2_index instead (and drop the "
+            "_tombstones sidecar if one exists; a rebuild does not "
+            "clear it)"
+        )
+    delete_from_ivf_index(ids, path, id_col="neighbor_id")
+    stats = compact_ivf_index(spark, path, only_ids=ids)
+    # skip_existing_ids=False: the guard would be a no-op by
+    # construction — step 2 just physically removed every batch id's
+    # rows, and a crash re-run re-executes steps 1-2 before reaching
+    # this append — so the O(index ids) anti-join scan it costs would
+    # buy nothing (a code-review r15 finding: that scan was the only
+    # term breaking the documented O(cells-of-batch) update cost).
+    append_to_ivf_index(
+        new_vectors,
+        path,
+        id_col=id_col,
+        vec_col=vec_col,
+        skip_existing_ids=False,
+        batch_token=batch_token,
+    )
+    return stats
 
 
 def query_ivf_index(
@@ -2399,36 +2196,35 @@ def query_ivf_index(
     vec_col: str = "embedding",
     k: int = 10,
     n_probe: int = 3,
+    n_super_probe: int = 2,
 ) -> DataFrame:
-    """Top-k against a persisted IVF index. The probed cell set (≤
-    n_cells ids, one tiny driver round-trip) becomes a static partition
-    filter on the inverted-list scan — the plan reads ONLY those cells'
-    files (``PartitionFilters`` on the scan), which is what makes
-    repeated query batches ~``n_probe / n_cells`` of a full scan.
+    """Top-k against a persisted IVF index of either quantizer. The
+    driver-resident quantizer is rebuilt from the sidecars
+    (:func:`_read_quantizer`) and each query probes its ``n_probe``
+    best cells — flat: ranked over every cell; hierarchical: the
+    ``n_super_probe`` best supercells' member cells (the exact
+    :func:`_ivf2_probe_cells` ranking; ``n_super_probe`` is read only
+    on a hierarchical index). The probed cell set (≤ n_cells ids, one
+    tiny driver round-trip) becomes a static partition filter on the
+    inverted-list scan — the plan reads ONLY those cells' files
+    (``PartitionFilters`` on the scan), which is what makes repeated
+    query batches ~``n_probe / n_cells`` of a full scan. Values are
+    identical to the in-plan :func:`cosine_topk_ivf` /
+    :func:`cosine_topk_ivf2`: the persisted lists carry the same
+    (c_vec, cn) and the probe/score devices are shared verbatim.
     Tombstoned ids (:func:`delete_from_ivf_index`) are anti-joined out
     of the candidate side before scoring, so deletes are visible
     without any file rewrite; ranks are assigned AFTER the exclusion
     (a deleted neighbor frees its rank for the next-best row)."""
     spark = queries.sparkSession
-    cents = _sidecar_rows(spark, path + "_centroids", _SIDECAR_CENTROIDS_SCHEMA, "cell")
-    centroids = [[float(x) for x in r["centroid"]] for r in cents]
-
-    q = (
-        with_probe_cells(
-            queries.select(
-                F.col(id_col).alias("query_id"),
-                F.col(vec_col).alias("q_vec"),
-                _checked_norm(norm_expr(F.col(vec_col))).alias("qn"),
-            ),
-            "q_vec",
-            centroids,
-            n_probe,
-        )
-        .select("query_id", "q_vec", "qn", F.explode("_probes").alias("probe"))
-        .select("query_id", "q_vec", "qn", F.col("probe.c").alias("cell"))
-    )
+    l2, l1, cell2super = _read_quantizer(spark, path)
+    if l1 is None:
+        q = _flat_probe_cells(queries, l2, id_col, vec_col, n_probe)
+    else:
+        members = _member_table_df(spark, l2, cell2super)
+        q = _ivf2_probe_cells(queries, members, l1, id_col, vec_col, n_super_probe, n_probe)
     # q is consumed twice (probed-cell collect, then the broadcast join);
-    # checkpoint so the n_cells-per-row centroid scoring runs once
+    # checkpoint so the per-row centroid scoring runs once
     q = q.localCheckpoint(eager=True)
 
     # dedup driver-side: q is ≤ queries x n_probe rows (already
@@ -2442,29 +2238,8 @@ def query_ivf_index(
         # neighbor frees its rank for the next-best candidate. The
         # tombstone side is tiny (compaction resets it) — broadcast
         # anti-join, no shuffle of the candidate lists
-        c = c.join(F.broadcast(tombs.select(id_col)), on=id_col, how="left_anti")
-    c = c.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("c_vec"),
-        norm_expr(F.col(vec_col)).alias("cn"),
-        "cell",
-    )
-    scored = (
-        F.broadcast(q)
-        .join(c, on="cell", how="inner")
-        .where(F.col("query_id") != F.col("neighbor_id"))
-        # norms ride the row projections (the cosine_topk note);
-        # scores bit-identical to the per-pair cosine_expr form
-        .select(
-            "query_id",
-            "neighbor_id",
-            floor_round6(
-                dot_expr(F.col("q_vec"), F.col("c_vec")) / (F.col("qn") * F.col("cn"))
-            ).alias("score"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("score").desc(), F.col("neighbor_id").asc())
-    return scored.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
+        c = c.join(F.broadcast(tombs.select("neighbor_id")), on="neighbor_id", how="left_anti")
+    return _score_topk(q, c, k)
 
 
 def split_hot_cells(members: DataFrame, materialize=None) -> DataFrame:
@@ -2536,12 +2311,7 @@ def split_hot_cells(members: DataFrame, materialize=None) -> DataFrame:
     )
 
 
-def rebalance_ivf_index(
-    spark,
-    path: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> dict:
+def rebalance_ivf_index(spark, path: str) -> dict:
     """In-place hot-cell split of a persisted IVF index — the
     production form of the q223 plan-level split, and the repair step
     q200's ``needs_rebalance`` audit triggers without a full retrain.
@@ -2575,6 +2345,23 @@ def rebalance_ivf_index(
     recomputed as the order-pinned per-dimension member mean
     (``_lloyd_dim_means`` — the Lloyd-step fold), so probing quality
     reflects the new boundaries; the sidecar is rewritten to match.
+
+    One implementation for both quantizers:
+
+    - the split divides by the STORED row norm ``cn`` and the rewrite
+      joins the split assignment back to the checkpointed member table
+      to carry it through bit-unchanged (recomputing it would be
+      value-identical today but couples the repair to the build's
+      expression — carrying the stored value cannot drift). Stored
+      norms are never zero: routing raises on a zero norm;
+    - each fresh 'b' cell INHERITS its parent's ``supercell`` in the
+      ``_centroids`` sidecar (NULL on a flat index). On a hierarchical
+      index the split never moves members across the level-1 boundary
+      — both halves' vectors were routed to the parent's supercell,
+      and keeping them there preserves the containment the two-stage
+      probe ranking assumes. ``_supers`` is untouched; later appends
+      and queries pick up the new cells because the member table
+      derives from the rewritten ``_centroids``.
 
     Scale contract (what makes this cheap at 100 TB):
 
@@ -2620,167 +2407,9 @@ def rebalance_ivf_index(
         "n_cells_before": ncells,
         "max_before": max(counts.values(), default=0),
     }
-    if not hot:
-        stats.update(
-            n_cells_after=ncells,
-            sidecar_cells_after=len(
-                _sidecar_rows(spark, path + "_centroids", _SIDECAR_CENTROIDS_SCHEMA, "cell")
-            ),
-            max_after=stats["max_before"],
-            new_cells=[],
-        )
-        return stats
-
-    members = (
-        idx.where(F.col("cell").isin(hot))
-        .select(
-            F.col("cell").cast("int").alias("cell"),
-            F.col(id_col).alias("id"),
-            F.col(vec_col).alias("v"),
-            # the split below divides by member norms; _checked_norm
-            # raises on a zero-norm member during this materialization
-            # — same loud contract as the train paths, zero extra pass
-            _checked_norm(norm_expr(F.col(vec_col))).alias("nrm"),
-        )
-        # materialized once: feeds the seed lookups, the split, the
-        # centroid means, and the rewrite — and breaks lineage to the
-        # files the cell swap below will replace
-        .localCheckpoint(eager=True)
-    )
-    halves = split_hot_cells(
-        members, materialize=lambda df: df.localCheckpoint(eager=True)
-    )
-    # fresh ids above the current max for every non-empty 'b' half
-    # (a single-member or all-tied hot cell yields no 'b' rows and
-    # allocates no id). The max is taken over DATA partitions AND the
-    # centroid sidecar: build_ivf_index writes all n_cells centroids
-    # while data partitions exist only for non-empty cells, so a
-    # trained-but-empty cell can hold the highest id — allocating from
-    # data partitions alone would collide with it and silently
-    # repurpose its trained centroid (the r12 ADVICE finding)
     old = _sidecar_rows(spark, path + "_centroids", _SIDECAR_CENTROIDS_SCHEMA, "cell")
-    sidecar = {int(r["cell"]): [float(x) for x in r["centroid"]] for r in old}
-    b_cells = sorted(
-        int(r["cell"])
-        for r in halves.where(F.col("sub") == "b").select("cell").distinct().collect()
-    )
-    base = max(set(counts) | set(sidecar)) + 1
-    new_id = {c: base + i for i, c in enumerate(b_cells)}
-    if b_cells:
-        mapping = F.create_map(*[F.lit(x) for c in b_cells for x in (c, new_id[c])])
-        cell_out = (
-            F.when(F.col("sub") == "b", mapping[F.col("cell")])
-            .otherwise(F.col("cell"))
-            .alias("cell")
-        )
-    else:
-        # every hot cell tied entirely to seed A (e.g. all-identical
-        # members): nothing relabels, but the halves' centroids still
-        # recompute to the member means below
-        cell_out = F.col("cell").alias("cell")
-    relabeled = halves.select(cell_out, "id", "v").localCheckpoint(eager=True)
-
-    # order-pinned per-dimension means for BOTH halves (the Lloyd fold)
-    means = _lloyd_dim_means(relabeled.select("id", "cell", "v"))
-    split_cents = {
-        int(r["cell"]): [
-            math.floor(float(dd["m"]) * 1000000 + 0.5) / 1000000.0 for dd in r["dims"]
-        ]
-        for r in means
-    }
-    sidecar.update(split_cents)
-
-    # Sidecar FIRST, data second. A crash between the two then leaves
-    # centroids for cells that hold no data yet — queries probe an
-    # empty partition, harmless — and a re-run recomputes the identical
-    # split from the (unchanged) data and converges. The reverse order
-    # would strand the 'b' halves unreachable (rows in partitions no
-    # centroid ever probes) with no self-healing re-run: occupancy
-    # would read the new layout while the sidecar lags it.
-    _write_driver_rows(
-        spark, sorted(sidecar.items()), _SIDECAR_CENTROIDS_SCHEMA, path + "_centroids"
-    )
-    # hot + new partitions replace through the atomic cell swap
-    # (stage under .maint-tmp, intent-commit, per-cell delete+rename) —
-    # the dynamic-overwrite job-commit tear this function's docstring
-    # carried as an open caveat through r14 is closed: a crash at any
-    # point converges under recover_ivf_index (run first above)
-    _replace_cell_partitions(
-        spark,
-        path,
-        relabeled.select(F.col("id").alias(id_col), F.col("v").alias(vec_col), "cell"),
-        removed_cells=[],
-    )
-
-    after = {
-        int(r["cell"]): int(r["n"])
-        for r in relabeled.groupBy("cell").agg(F.count(F.lit(1)).alias("n")).collect()
-    }
-    # derived from the FINAL sets, not arithmetic on the inputs (the
-    # r12 ADVICE consistency note): data cells after = cold survivors
-    # + rewritten (hot 'a' halves keep their ids, so this equals
-    # len(counts) + len(b_cells) — asserted cheaply here); the sidecar
-    # count additionally carries trained-but-empty cells
-    data_cells_after = {c for c in counts if c not in hot} | set(after)
-    assert len(data_cells_after) == ncells + len(b_cells)
-    stats.update(
-        n_cells_after=len(data_cells_after),
-        sidecar_cells_after=len(sidecar),
-        max_after=max(
-            [n for c, n in counts.items() if c not in hot] + list(after.values()),
-            default=0,
-        ),
-        new_cells=sorted(new_id.values()),
-    )
-    return stats
-
-
-def rebalance_ivf2_index(spark, path: str) -> dict:
-    """:func:`rebalance_ivf_index` on the persisted HIERARCHICAL
-    layout — the last cell of the flat/hierarchical lifecycle matrix
-    (build → persist → append → delete/compact/audit → REBALANCE).
-    Same trigger contract (the occupancy audit's skew alarm decides
-    WHEN; this splits EVERY over-mean cell), same deterministic 2-seed
-    split (:func:`split_hot_cells` — the one shared implementation, so
-    the q223-oracle-checked arithmetic governs this layout too), same
-    partition pruning (cold cells' files never touched, only hot + new
-    partitions rewrite through the atomic cell swap), same
-    sidecar-first crash convergence.
-
-    Two layout-specific differences:
-
-    - the inverted lists carry a PRECOMPUTED norm (``cn``) that
-      :func:`query_ivf2_index` scores with, so the rewrite joins the
-      split assignment back to the checkpointed member table to carry
-      the original ``cn`` through bit-unchanged (recomputing it would
-      be value-identical today but couples the repair to the build's
-      expression — carrying the stored value cannot drift);
-    - each fresh 'b' cell INHERITS its parent's supercell in the
-      ``_centroids`` sidecar (the split never moves members across the
-      level-1 boundary — both halves' vectors were routed to the
-      parent's supercell, and keeping them there preserves the
-      containment the two-stage probe ranking assumes). The
-      ``_supers`` sidecar is untouched; future appends/queries pick up
-      the new cells automatically because the member table derives
-      from the rewritten ``_centroids``."""
-    recover_ivf_index(spark, path)
-    idx = _read_index(spark, path)
-    occ = idx.groupBy("cell").agg(F.count(F.lit(1)).alias("n")).collect()
-    counts = {int(r["cell"]): int(r["n"]) for r in occ}
-    total, ncells = sum(counts.values()), len(counts)
-    hot = sorted(c for c, n in counts.items() if n * ncells > total)
-    stats = {
-        "hot_cells": hot,
-        "n_cells_before": ncells,
-        "max_before": max(counts.values(), default=0),
-    }
-    old = _sidecar_rows(spark, path + "_centroids", _SIDECAR_CENTROIDS2_SCHEMA, "cell")
     sidecar = {
-        int(r["cell"]): (
-            [float(x) for x in r["centroid"]],
-            int(r["supercell"]),
-        )
-        for r in old
+        int(r["cell"]): ([float(x) for x in r["centroid"]], r["supercell"]) for r in old
     }
     if not hot:
         stats.update(
@@ -2799,11 +2428,22 @@ def rebalance_ivf2_index(spark, path: str) -> dict:
             F.col("c_vec").alias("v"),
             F.col("cn").alias("nrm"),
         )
+        # materialized once: feeds the seed lookups, the split, the
+        # centroid means, and the rewrite — and breaks lineage to the
+        # files the cell swap below will replace
         .localCheckpoint(eager=True)
     )
     halves = split_hot_cells(
         members, materialize=lambda df: df.localCheckpoint(eager=True)
     )
+    # fresh ids above the current max for every non-empty 'b' half
+    # (a single-member or all-tied hot cell yields no 'b' rows and
+    # allocates no id). The max is taken over DATA partitions AND the
+    # centroid sidecar: build writes all n_cells centroids while data
+    # partitions exist only for non-empty cells, so a trained-but-empty
+    # cell can hold the highest id — allocating from data partitions
+    # alone would collide with it and silently repurpose its trained
+    # centroid (the r12 ADVICE finding)
     b_cells = sorted(
         int(r["cell"])
         for r in halves.where(F.col("sub") == "b").select("cell").distinct().collect()
@@ -2818,6 +2458,9 @@ def rebalance_ivf2_index(spark, path: str) -> dict:
             .alias("cell")
         )
     else:
+        # every hot cell tied entirely to seed A (e.g. all-identical
+        # members): nothing relabels, but the halves' centroids still
+        # recompute to the member means below
         cell_out = F.col("cell").alias("cell")
     # carry the STORED cn through the relabel (see docstring) — the
     # join key (cell, id) is unique within the hot member set
@@ -2833,6 +2476,7 @@ def rebalance_ivf2_index(spark, path: str) -> dict:
         .localCheckpoint(eager=True)
     )
 
+    # order-pinned per-dimension means for BOTH halves (the Lloyd fold)
     means = _lloyd_dim_means(relabeled.select("id", "cell", "v"))
     parent_super = {new_id[c]: sidecar[c][1] for c in b_cells}
     for r in means:
@@ -2843,22 +2487,29 @@ def rebalance_ivf2_index(spark, path: str) -> dict:
         sup = parent_super.get(cell, sidecar.get(cell, (None, None))[1])
         sidecar[cell] = (cent, sup)
 
-    # sidecar FIRST, data second (the flat rebalance crash argument)
+    # Sidecar FIRST, data second. A crash between the two then leaves
+    # centroids for cells that hold no data yet — queries probe an
+    # empty partition, harmless — and a re-run recomputes the identical
+    # split from the (unchanged) data and converges. The reverse order
+    # would strand the 'b' halves unreachable (rows in partitions no
+    # centroid ever probes) with no self-healing re-run: occupancy
+    # would read the new layout while the sidecar lags it.
     _write_driver_rows(
         spark,
         [(c, cent, sup) for c, (cent, sup) in sorted(sidecar.items())],
-        _SIDECAR_CENTROIDS2_SCHEMA,
+        _SIDECAR_CENTROIDS_SCHEMA,
         path + "_centroids",
     )
-    # same atomic cell swap as the flat rebalance (see its note)
+    # hot + new partitions replace through the atomic cell swap
+    # (stage under .maint-tmp, intent-commit, per-cell delete+rename) —
+    # the dynamic-overwrite job-commit tear this function's docstring
+    # carried as an open caveat through r14 is closed: a crash at any
+    # point converges under recover_ivf_index (run first above)
     _replace_cell_partitions(
         spark,
         path,
         relabeled.select(
-            F.col("id").alias("neighbor_id"),
-            F.col("v").alias("c_vec"),
-            "cn",
-            "cell",
+            F.col("id").alias("neighbor_id"), F.col("v").alias("c_vec"), "cn", "cell"
         ),
         removed_cells=[],
     )
@@ -2867,8 +2518,18 @@ def rebalance_ivf2_index(spark, path: str) -> dict:
         int(r["cell"]): int(r["n"])
         for r in relabeled.groupBy("cell").agg(F.count(F.lit(1)).alias("n")).collect()
     }
+    # derived from the FINAL sets, not arithmetic on the inputs (the
+    # r12 ADVICE consistency note): data cells after = cold survivors
+    # + rewritten (hot 'a' halves keep their ids, so this equals
+    # len(counts) + len(b_cells) — checked cheaply here); the sidecar
+    # count additionally carries trained-but-empty cells
     data_cells_after = {c for c in counts if c not in hot} | set(after)
-    assert len(data_cells_after) == ncells + len(b_cells)
+    if len(data_cells_after) != ncells + len(b_cells):
+        raise RuntimeError(
+            f"rebalance of {path} left {len(data_cells_after)} data cells, "
+            f"expected {ncells} + {len(b_cells)} new ones — the split's "
+            "cell relabeling is inconsistent with the occupancy it read"
+        )
     stats.update(
         n_cells_after=len(data_cells_after),
         sidecar_cells_after=len(sidecar),
@@ -2937,48 +2598,6 @@ def embedding_near_dup_pairs(
         )
         .where(F.col("score") >= threshold)
     )
-
-
-def cosine_to_query_pandas_udf(query_vec: list[float]):
-    """Arrow-vectorized scalar ``pandas_udf`` computing cosine
-    similarity of every row's embedding against one query vector.
-
-    The JVM-side ``cosine_expr`` is the production path (stays in
-    whole-stage codegen, no Python); this is the escape-hatch pattern
-    for scoring math that built-in expressions genuinely can't state
-    (learned rerankers, custom kernels). Per Arrow batch it is one
-    numpy matmul — vectorized, ~10-100x faster than a row-at-a-time
-    Python UDF — and a test pins bit-level agreement with the
-    expression path."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    q = np.asarray(query_vec, dtype=np.float64)
-    # strictly sequential accumulation, NOT np.dot/np.sum/add.reduce:
-    # BLAS and numpy's pairwise summation group additions differently
-    # and break bit-parity with the SQL aggregate() left fold
-    qn_acc = 0.0
-    for x in q:
-        qn_acc += x * x
-    qn = float(np.sqrt(qn_acc))
-
-    def _score(col):
-        m = np.vstack([np.asarray(v, dtype=np.float64) for v in col])
-        # vectorized across rows, sequential across dimensions — the
-        # same left-to-right order as the SQL fold, one numpy op per dim
-        dots = np.zeros(m.shape[0], dtype=np.float64)
-        norms_sq = np.zeros(m.shape[0], dtype=np.float64)
-        for j in range(m.shape[1]):
-            dots += m[:, j] * q[j]
-            norms_sq += m[:, j] * m[:, j]
-        return pd.Series(dots / (np.sqrt(norms_sq) * qn))
-
-    # real class objects (not string hints): keeps pandas an optional,
-    # function-local dependency — the registry import must not require
-    # pandas just for this escape-hatch demo
-    _score.__annotations__ = {"col": pd.Series, "return": pd.Series}
-    return pandas_udf("double")(_score)
 
 
 def hard_negatives(

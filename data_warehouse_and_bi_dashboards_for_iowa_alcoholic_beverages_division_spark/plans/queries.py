@@ -12356,7 +12356,7 @@ def q220(spark: SparkSession, sf_dir: str) -> DataFrame:
     similarity.build_ivf2_index(
         emb, path, n_cells=nc, iters=2, train_where="vec_id % 16 = 0"
     )
-    return similarity.query_ivf2_index(
+    return similarity.query_ivf_index(
         emb.where("vec_id < 5"), path, k=10, n_probe=3, n_super_probe=2
     )
 
@@ -12390,8 +12390,8 @@ def q221(spark: SparkSession, sf_dir: str) -> DataFrame:
     similarity.build_ivf2_index(
         existing, path, n_cells=nc, iters=2, train_where="vec_id % 16 = 0"
     )
-    similarity.append_to_ivf2_index(arriving, path)
-    return similarity.query_ivf2_index(
+    similarity.append_to_ivf_index(arriving, path)
+    return similarity.query_ivf_index(
         emb.where("vec_id < 5"), path, k=10, n_probe=3, n_super_probe=2
     )
 
@@ -12420,14 +12420,14 @@ def _q226_oracle(tombstone_pred: str = "neighbor_id % 7 = 3") -> str:
     "flat/hierarchical x build/append/delete/compact matrix: the "
     "two-level index is built and persisted (q220's path), the "
     "tombstone set (vec_id % 7 = 3) recorded via "
-    "delete_from_ivf2_index (sidecar-only - at 10^9 vectors a delete "
-    "must not rewrite an inverted-list file), and query_ivf2_index "
+    "delete_from_ivf_index (sidecar-only - at 10^9 vectors a delete "
+    "must not rewrite an inverted-list file), and query_ivf_index "
     "anti-joins the sidecar out of the candidate side BEFORE scoring, "
     "so deletes are visible immediately and ranks assigned after the "
     "exclusion free a deleted neighbor's rank. Physical removal is "
-    "compact_ivf2_index (the layout-agnostic compaction: rewrites "
+    "compact_ivf_index (the layout-agnostic compaction: rewrites "
     "every surviving column of only the tombstone-holding cells), "
-    "with the WHEN data-driven by audit_ivf2_tombstones - both "
+    "with the WHEN data-driven by audit_ivf_tombstones - both "
     "pytest-pinned. The oracle is q212's verbatim two-level unroll "
     "with the tombstone exclusion grafted before the terminal "
     "ranking, so build -> persist -> delete -> query is value-checked "
@@ -12445,10 +12445,10 @@ def q226(spark: SparkSession, sf_dir: str) -> DataFrame:
     similarity.build_ivf2_index(
         emb, path, n_cells=nc, iters=2, train_where="vec_id % 16 = 0"
     )
-    similarity.delete_from_ivf2_index(
+    similarity.delete_from_ivf_index(
         emb.where("vec_id % 7 = 3").select("vec_id"), path
     )
-    return similarity.query_ivf2_index(
+    return similarity.query_ivf_index(
         emb.where("vec_id < 5"), path, k=10, n_probe=3, n_super_probe=2
     )
 
@@ -12478,7 +12478,7 @@ def _q227_oracle() -> str:
     _q227_oracle(),
     "Hierarchical-IVF occupancy audit - q200's retrain/rebalance "
     "trigger on the two-level layout, the WHEN for "
-    "rebalance_ivf2_index (which completed the lifecycle matrix in "
+    "rebalance_ivf_index (which completed the lifecycle matrix in "
     "r14): per-member-cell vector counts and shares under the "
     "two-level routing (super -> best member cell), the max/mean skew "
     "factor, and the needs_rebalance flag (skew > 2x - the same "
@@ -12595,8 +12595,8 @@ def q229(spark: SparkSession, sf_dir: str) -> DataFrame:
     similarity.build_ivf2_index(
         emb, path, n_cells=nc, iters=2, train_where="vec_id % 16 = 0"
     )
-    similarity.update_in_ivf2_index(_updated_vectors(emb), path)
-    return similarity.query_ivf2_index(
+    similarity.update_in_ivf_index(_updated_vectors(emb), path)
+    return similarity.query_ivf_index(
         emb.where("vec_id < 5"), path, k=10, n_probe=3, n_super_probe=2
     )
 

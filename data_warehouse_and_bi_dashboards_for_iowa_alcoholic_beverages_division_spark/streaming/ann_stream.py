@@ -4,10 +4,12 @@ The batch lifecycle (build → append → audit → rebalance → delete →
 compact → update, `operators/similarity.py`) gets its production
 ingestion shape here: Structured Streaming over a staging directory of
 arriving embedding files, each micro-batch folded into the index with
-the SAME `append_to_ivf_index` / `append_to_ivf2_index` the scheduled
-batch path uses — the scd_stream.py discipline applied to the vector
-store. `Trigger.AvailableNow` drains everything unprocessed and stops,
-so the same function doubles as the cron-driven incremental batch.
+the SAME `append_to_ivf_index` the scheduled batch path uses — the
+scd_stream.py discipline applied to the vector store. The append reads
+the index's quantizer (flat or hierarchical) from its `_centroids`
+sidecar, so one stream drains into either kind of index.
+`Trigger.AvailableNow` drains everything unprocessed and stops, so the
+same function doubles as the cron-driven incremental batch.
 
 Exactly-once is the composition of two mechanisms with different
 domains:
@@ -41,7 +43,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
-from ..operators.similarity import append_to_ivf2_index, append_to_ivf_index
+from ..operators.similarity import append_to_ivf_index
 
 
 def ivf_stream_append(
@@ -53,22 +55,19 @@ def ivf_stream_append(
     token_prefix: str,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    hierarchical: bool = False,
     skip_existing_ids: bool = True,
 ) -> None:
     """Drain every unprocessed embedding file under ``staging_dir``
-    into the persisted index at ``index_path`` (flat by default,
-    ``hierarchical=True`` for the two-level layout), one frozen-
-    quantizer append per micro-batch. Re-running with the same
+    into the persisted index at ``index_path`` (either quantizer), one
+    frozen-quantizer append per micro-batch. Re-running with the same
     checkpoint processes only newly arrived files; a replayed batch
     (crash mid-drain) is deduplicated by its batch token."""
-    append = append_to_ivf2_index if hierarchical else append_to_ivf_index
     stream = spark.readStream.schema(schema).parquet(staging_dir)
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        append(
+        append_to_ivf_index(
             batch_df.select(id_col, vec_col),
             index_path,
             id_col=id_col,

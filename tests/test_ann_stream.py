@@ -21,10 +21,10 @@ from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spar
 SF_DIR = "/root/testdata/sf0.001"
 
 
-def _index_rows(spark, path, id_col="vec_id"):
+def _index_rows(spark, path):
     return {
-        (int(r[id_col]), int(r["cell"]))
-        for r in spark.read.parquet(path).select(id_col, "cell").collect()
+        (int(r["neighbor_id"]), int(r["cell"]))
+        for r in spark.read.parquet(path).select("neighbor_id", "cell").collect()
     }
 
 
@@ -99,9 +99,9 @@ def test_stream_append_hierarchical_layout(spark, tmp_path):
     arriving.write.mode("append").parquet(staging)
     ivf_stream_append(
         spark, staging, path, str(tmp_path / "ck"), schema,
-        token_prefix="h1", hierarchical=True,
+        token_prefix="h1",
     )
-    ids = {v for v, _ in _index_rows(spark, path, id_col="neighbor_id")}
+    ids = {v for v, _ in _index_rows(spark, path)}
     assert ids == {int(r["vec_id"]) for r in emb.select("vec_id").collect()}
     # token sidecar recorded the drained batch under the prefix
     toks = {r["token"] for r in spark.read.parquet(path + "_batches").collect()}

@@ -38,7 +38,7 @@ def _all_files(path):
 
 
 def _ids(spark, path):
-    return {int(r["vec_id"]) for r in spark.read.parquet(path).select("vec_id").collect()}
+    return {int(r["neighbor_id"]) for r in spark.read.parquet(path).select("neighbor_id").collect()}
 
 
 def _id_df(spark, ids):
@@ -83,7 +83,7 @@ def test_delete_is_idempotent_and_dedupes_tombstones(spark, tmp_path):
     delete_from_ivf_index(_id_df(spark, [7, 11, 13]), path)
     delete_from_ivf_index(_id_df(spark, [13]), path)
     tombs = sorted(
-        int(r["vec_id"]) for r in spark.read.parquet(path + "_tombstones").collect()
+        int(r["neighbor_id"]) for r in spark.read.parquet(path + "_tombstones").collect()
     )
     assert tombs == [7, 11, 13]
 
@@ -98,7 +98,7 @@ def test_compact_removes_rows_and_leaves_cold_cells_byte_identical(spark, tmp_pa
     victim_cells = {
         int(r["cell"])
         for r in spark.read.parquet(path)
-        .where(F.col("vec_id").isin(list(victims)))
+        .where(F.col("neighbor_id").isin(list(victims)))
         .select("cell")
         .collect()
     }
@@ -143,10 +143,10 @@ def test_compact_drops_fully_emptied_cell_directory_keeps_centroid(spark, tmp_pa
     }
     target = min(occ, key=lambda c: (occ[c], c))  # smallest cell
     members = {
-        int(r["vec_id"])
+        int(r["neighbor_id"])
         for r in spark.read.parquet(path)
         .where(F.col("cell") == target)
-        .select("vec_id")
+        .select("neighbor_id")
         .collect()
     }
     delete_from_ivf_index(_id_df(spark, sorted(members)), path)
@@ -224,9 +224,9 @@ def test_reinsert_of_tombstoned_id_raises_until_compacted(spark, tmp_path):
     )
 
     append_to_ivf_index(new_vec, path)
-    got = spark.read.parquet(path).where("vec_id = 7").collect()
+    got = spark.read.parquet(path).where("neighbor_id = 7").collect()
     assert len(got) == 1
-    assert [float(x) for x in got[0]["embedding"]] == [0.5] * 64
+    assert [float(x) for x in got[0]["c_vec"]] == [0.5] * 64
 
 
 def test_compact_clears_sidecar_with_its_own_schema(spark, tmp_path):
@@ -246,11 +246,11 @@ def test_compact_clears_sidecar_with_its_own_schema(spark, tmp_path):
     compact_ivf_index(spark, path)
     # the cleared sidecar reads back with the INT id schema, and a
     # second delete+read round-trip stays schema-consistent
-    assert dict(spark.read.parquet(path + "_tombstones").dtypes)["vec_id"] == "int"
+    assert dict(spark.read.parquet(path + "_tombstones").dtypes)["neighbor_id"] == "int"
     delete_from_ivf_index(spark.createDataFrame([(5,)], "vec_id INT"), path)
     tombs = spark.read.parquet(path + "_tombstones")
-    assert dict(tombs.dtypes)["vec_id"] == "int"
-    assert [int(r["vec_id"]) for r in tombs.collect()] == [5]
+    assert dict(tombs.dtypes)["neighbor_id"] == "int"
+    assert [int(r["neighbor_id"]) for r in tombs.collect()] == [5]
 
 
 def test_deleting_unknown_id_is_harmless(spark, tmp_path):
@@ -299,17 +299,17 @@ def test_tombstone_audit_is_dry_run_of_compaction(spark, tmp_path):
     # couple of scattered ids from another cell (cells_rewritten)
     dead_cell = min(occ, key=lambda c: (occ[c], c))
     dead_ids = {
-        int(r["vec_id"])
+        int(r["neighbor_id"])
         for r in spark.read.parquet(path)
         .where(F.col("cell") == dead_cell)
-        .select("vec_id")
+        .select("neighbor_id")
         .collect()
     }
     other = {
-        int(r["vec_id"])
+        int(r["neighbor_id"])
         for r in spark.read.parquet(path)
         .where(F.col("cell") != dead_cell)
-        .select("vec_id")
+        .select("neighbor_id")
         .limit(2)
         .collect()
     }
@@ -407,17 +407,13 @@ def test_tombstone_audit_zero_debt_paths(spark, tmp_path):
 # ---------------------------------------------------------------------
 
 from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spark.operators.similarity import (  # noqa: E402
-    append_to_ivf2_index,
-    audit_ivf2_tombstones,
+    append_to_ivf_index,
     build_ivf2_index,
-    compact_ivf2_index,
-    delete_from_ivf2_index,
-    query_ivf2_index,
 )
 
 
 def _neighbors2(spark, emb, path, k=5):
-    res = query_ivf2_index(emb.where("vec_id < 3"), path, k=k, n_probe=3, n_super_probe=2)
+    res = query_ivf_index(emb.where("vec_id < 3"), path, k=k, n_probe=3, n_super_probe=2)
     return {
         (int(r["query_id"]), int(r["rank"])): int(r["neighbor_id"])
         for r in res.collect()
@@ -437,7 +433,7 @@ def test_ivf2_delete_compact_audit_lifecycle(spark, tmp_path):
     schema_before = spark.read.parquet(path).drop("cell").schema
 
     victim = before[(0, 1)]
-    delete_from_ivf2_index(_id_df(spark, [victim]), path)
+    delete_from_ivf_index(_id_df(spark, [victim]), path)
     # sidecar-only: no data file moved, exclusion visible immediately
     assert _all_files(path) == files_before
     after = _neighbors2(spark, emb, path)
@@ -447,12 +443,12 @@ def test_ivf2_delete_compact_audit_lifecycle(spark, tmp_path):
     # audit is the dry-run of the compaction (id col = neighbor_id)
     audit = {
         int(r["cell"]): r.asDict()
-        for r in audit_ivf2_tombstones(spark, path).collect()
+        for r in audit_ivf_tombstones(spark, path).collect()
     }
     affected = sorted(c for c, a in audit.items() if a["n_tombstoned"] > 0)
     assert sum(a["n_tombstoned"] for a in audit.values()) == 1
 
-    stats = compact_ivf2_index(spark, path)
+    stats = compact_ivf_index(spark, path)
     assert stats["rows_removed"] == 1
     assert sorted(stats["cells_rewritten"] + stats["cells_removed"]) == affected
     # physical removal; every surviving column kept (layout-agnostic
@@ -469,7 +465,7 @@ def test_ivf2_delete_compact_audit_lifecycle(spark, tmp_path):
     assert all(
         a["n_tombstoned"] == 0 and not a["needs_compact"]
         for a in (
-            r.asDict() for r in audit_ivf2_tombstones(spark, path).collect()
+            r.asDict() for r in audit_ivf_tombstones(spark, path).collect()
         )
     )
 
@@ -485,8 +481,8 @@ def test_ivf2_tombstone_query_plan_keeps_pruning_and_broadcasts(spark, tmp_path)
     emb = load_table(spark, SF_DIR, "embeddings")
     path = str(tmp_path / "idx2")
     build_ivf2_index(emb, path, n_cells=8, iters=2)
-    delete_from_ivf2_index(_id_df(spark, [7, 11]), path)
-    out = query_ivf2_index(emb.where("vec_id < 3"), path, k=5, n_probe=3, n_super_probe=2)
+    delete_from_ivf_index(_id_df(spark, [7, 11]), path)
+    out = query_ivf_index(emb.where("vec_id < 3"), path, k=5, n_probe=3, n_super_probe=2)
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
         out.explain("formatted")
@@ -509,11 +505,11 @@ def test_ivf2_reinsert_of_tombstoned_id_raises_until_compacted(spark, tmp_path):
     new_vec = spark.createDataFrame(
         [(7, [0.5] * 64)], "vec_id BIGINT, embedding ARRAY<FLOAT>"
     )
-    delete_from_ivf2_index(_id_df(spark, [7]), path)
+    delete_from_ivf_index(_id_df(spark, [7]), path)
     with pytest.raises(ValueError, match="tombstoned"):
-        append_to_ivf2_index(new_vec, path)
-    compact_ivf2_index(spark, path)
-    append_to_ivf2_index(new_vec, path)
+        append_to_ivf_index(new_vec, path)
+    compact_ivf_index(spark, path)
+    append_to_ivf_index(new_vec, path)
     got = spark.read.parquet(path).where("neighbor_id = 7").collect()
     assert len(got) == 1
 

@@ -317,10 +317,10 @@ def test_ivf2_append_equals_fresh_full_build(spark, tmp_path):
     import pyspark.sql.functions as F
 
     from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spark.operators.similarity import (
-        append_to_ivf2_index,
+        append_to_ivf_index,
         build_ivf2_index,
         cosine_topk_ivf2,
-        query_ivf2_index,
+        query_ivf_index,
     )
 
     emb = load_table(spark, SF_DIR, "embeddings")
@@ -330,12 +330,12 @@ def test_ivf2_append_equals_fresh_full_build(spark, tmp_path):
         train_where="vec_id % 16 = 0",
     )
     arriving = emb.where("vec_id % 10 = 0")
-    append_to_ivf2_index(arriving, path)
+    append_to_ivf_index(arriving, path)
     n_after = spark.read.parquet(path).count()
-    append_to_ivf2_index(arriving, path)  # retry: anti-join guard
+    append_to_ivf_index(arriving, path)  # retry: anti-join guard
     assert spark.read.parquet(path).count() == n_after
     qs = emb.where("vec_id < 5")
-    got = query_ivf2_index(qs, path, k=10, n_probe=3, n_super_probe=2)
+    got = query_ivf_index(qs, path, k=10, n_probe=3, n_super_probe=2)
     want = cosine_topk_ivf2(
         emb, qs, k=10, n_cells=32, n_probe=3, n_super_probe=2,
         train_where="vec_id % 10 != 0 AND vec_id % 16 = 0",
@@ -471,7 +471,7 @@ def test_append_rejects_zero_norm_batch_row(spark, tmp_path):
             spark.createDataFrame([(100, [0.0] * 4)], _VEC_SCHEMA), path
         )
     # the failed write job aborts before commit: the index is unchanged
-    assert spark.read.parquet(path).where("vec_id = 100").count() == 0
+    assert spark.read.parquet(path).where("neighbor_id = 100").count() == 0
 
 
 def test_query_side_rejects_zero_norm_query_vector(spark, tmp_path):
@@ -489,3 +489,111 @@ def test_query_side_rejects_zero_norm_query_vector(spark, tmp_path):
         similarity.query_ivf_index(poisoned_queries, path, k=3, n_probe=2).collect()
     with pytest.raises(Exception, match="zero-norm|DIVIDE_BY_ZERO"):
         similarity.cosine_topk(_vec_df(spark, 32), poisoned_queries, k=3).collect()
+
+
+# ---------------------------------------------------------------------
+# The inverted-list schema sidecar (<path>_schema) is an optimization,
+# never a correctness input: with it gone, reads fall back to parquet
+# inference and every query returns the same rows.
+# ---------------------------------------------------------------------
+
+
+def _ranked(df):
+    return sorted(
+        (r["query_id"], r["rank"], r["neighbor_id"], r["score"]) for r in df.collect()
+    )
+
+
+@pytest.mark.parametrize("hierarchical", [False, True])
+def test_query_without_schema_sidecar_falls_back_to_inference(spark, tmp_path, hierarchical):
+    import os
+
+    emb = load_table(spark, SF_DIR, "embeddings")
+    path = str(tmp_path / "idx")
+    if hierarchical:
+        similarity.build_ivf2_index(emb, path, n_cells=16, iters=2)
+    else:
+        similarity.build_ivf_index(emb, path, n_cells=8, iters=2)
+    qs = emb.where("vec_id < 5")
+    before = _ranked(similarity.query_ivf_index(qs, path, k=10, n_probe=3))
+    assert os.path.exists(path + "_schema")
+    os.remove(path + "_schema")
+    after = _ranked(similarity.query_ivf_index(qs, path, k=10, n_probe=3))
+    assert after == before
+    assert len(before) == 50
+
+
+# ---------------------------------------------------------------------
+# Identifier rejection in the literal-SQL cell scorers: a vec_col that
+# is not a plain identifier, or that names one of the bound lambda
+# variables, is refused while the plan is built — before any job.
+# ---------------------------------------------------------------------
+
+
+@pytest.mark.parametrize("vec_col", ["bad-name", "__ivf_nv"])
+def test_literal_scorers_reject_unsafe_vec_col_before_any_job(spark, vec_col):
+    sc = spark.sparkContext
+    cents = [[1.0, 0.0], [0.0, 1.0]]  # under the threshold: literal encoding
+    df = spark.createDataFrame([(1, [1.0, 2.0])], f"id BIGINT, `{vec_col}` ARRAY<DOUBLE>")
+    group = f"vec-ident-{vec_col}"
+    try:
+        sc.setJobGroup(group, group)
+        with pytest.raises(ValueError, match="plain identifier"):
+            similarity.with_assigned_cell(df, vec_col, cents)
+        with pytest.raises(ValueError, match="plain identifier"):
+            similarity.with_probe_cells(df, vec_col, cents, n_probe=1)
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+
+# ---------------------------------------------------------------------
+# Layout detection: both quantizers share one list schema and one
+# _centroids sidecar, and the layout is read from that sidecar's
+# supercell column alone — never from whether _supers exists.
+# ---------------------------------------------------------------------
+
+
+def test_flat_rebuild_over_hierarchical_path_ignores_stale_supers(spark, tmp_path):
+    import os
+
+    emb = load_table(spark, SF_DIR, "embeddings")
+    existing = emb.where("vec_id % 10 != 0")
+    arriving = emb.where("vec_id % 10 = 0")
+    qs = emb.where("vec_id < 5")
+    reused, clean = str(tmp_path / "reused"), str(tmp_path / "clean")
+    similarity.build_ivf2_index(emb, reused, n_cells=16, iters=2)
+    for path in (reused, clean):
+        similarity.build_ivf_index(existing, path, n_cells=8, iters=2)
+        similarity.append_to_ivf_index(arriving, path)
+    # the hierarchical build's level-1 sidecar is still there...
+    assert os.path.exists(reused + "_supers")
+
+    # ...and changes nothing: same lists, same neighbors as a clean path
+    def lists(path):
+        return sorted(
+            (int(r["neighbor_id"]), int(r["cell"]), float(r["cn"]))
+            for r in spark.read.parquet(path).collect()
+        )
+
+    assert lists(reused) == lists(clean)
+    got = _ranked(similarity.query_ivf_index(qs, reused, k=10, n_probe=3))
+    assert got == _ranked(similarity.query_ivf_index(qs, clean, k=10, n_probe=3))
+    assert len(got) == 50
+
+
+def test_hierarchical_index_without_supers_raises_instead_of_routing_flat(spark, tmp_path):
+    import shutil
+
+    emb = load_table(spark, SF_DIR, "embeddings")
+    path = str(tmp_path / "idx2")
+    similarity.build_ivf2_index(emb.where("vec_id % 10 != 0"), path, n_cells=16, iters=2)
+    n_rows = spark.read.parquet(path).count()
+    shutil.rmtree(path + "_supers")
+    with pytest.raises(RuntimeError, match="_supers"):
+        similarity.append_to_ivf_index(emb.where("vec_id % 10 = 0"), path)
+    with pytest.raises(RuntimeError, match="_supers"):
+        similarity.query_ivf_index(emb.where("vec_id < 5"), path, k=10).collect()
+    # nothing was appended under a guessed flat routing
+    assert spark.read.parquet(path).count() == n_rows

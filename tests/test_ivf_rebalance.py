@@ -55,7 +55,7 @@ def test_rebalance_splits_hot_cells_and_leaves_cold_files_untouched(spark, tmp_p
     cold = set(occ_before) - hot
     assert hot, "fixture must have at least one over-mean cell"
     ids_before = {
-        r["vec_id"] for r in spark.read.parquet(path).select("vec_id").collect()
+        r["neighbor_id"] for r in spark.read.parquet(path).select("neighbor_id").collect()
     }
     cold_files_before = {c: _cell_files(path, c) for c in cold}
 
@@ -66,7 +66,7 @@ def test_rebalance_splits_hot_cells_and_leaves_cold_files_untouched(spark, tmp_p
     # row conservation: the split moves vectors, never drops or copies
     assert sum(occ_after.values()) == total
     ids_after = {
-        r["vec_id"] for r in spark.read.parquet(path).select("vec_id").collect()
+        r["neighbor_id"] for r in spark.read.parquet(path).select("neighbor_id").collect()
     }
     assert ids_after == ids_before
     # every hot cell's 'a' half keeps its id; cold cells keep theirs
@@ -102,12 +102,12 @@ def test_rebalance_is_deterministic(spark, tmp_path):
     s2 = rebalance_ivf_index(spark, p2)
     assert s1 == s2
     rows1 = sorted(
-        (int(r["cell"]), int(r["vec_id"]))
-        for r in spark.read.parquet(p1).select("cell", "vec_id").collect()
+        (int(r["cell"]), int(r["neighbor_id"]))
+        for r in spark.read.parquet(p1).select("cell", "neighbor_id").collect()
     )
     rows2 = sorted(
-        (int(r["cell"]), int(r["vec_id"]))
-        for r in spark.read.parquet(p2).select("cell", "vec_id").collect()
+        (int(r["cell"]), int(r["neighbor_id"]))
+        for r in spark.read.parquet(p2).select("cell", "neighbor_id").collect()
     )
     assert rows1 == rows2
     c1 = sorted(
@@ -233,8 +233,6 @@ def test_audit_is_deliberately_laxer_than_repair():
 
 from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spark.operators.similarity import (  # noqa: E402
     build_ivf2_index,
-    query_ivf2_index,
-    rebalance_ivf2_index,
 )
 
 
@@ -272,7 +270,7 @@ def test_ivf2_rebalance_splits_hot_cells_preserves_rows_and_norms(spark, tmp_pat
         for r in spark.read.parquet(path + "_supers").collect()
     )
 
-    stats = rebalance_ivf2_index(spark, path)
+    stats = rebalance_ivf_index(spark, path)
 
     assert sorted(stats["hot_cells"]) == sorted(hot)
     occ_after = _occupancy2(spark, path)
@@ -308,7 +306,7 @@ def test_ivf2_rebalance_splits_hot_cells_preserves_rows_and_norms(spark, tmp_pat
         == supers_sidecar_before
     )
     # still queryable with full k per query
-    res = query_ivf2_index(emb.where("vec_id < 3"), path, k=5, n_probe=3, n_super_probe=2)
+    res = query_ivf_index(emb.where("vec_id < 3"), path, k=5, n_probe=3, n_super_probe=2)
     per_query = {
         r["query_id"]: r["n"]
         for r in res.groupBy("query_id").agg(F.count(F.lit(1)).alias("n")).collect()
@@ -321,8 +319,8 @@ def test_ivf2_rebalance_is_deterministic_and_noop_when_uniform(spark, tmp_path):
     p1, p2 = str(tmp_path / "i1"), str(tmp_path / "i2")
     build_ivf2_index(emb, p1, n_cells=8, iters=2)
     build_ivf2_index(emb, p2, n_cells=8, iters=2)
-    s1 = rebalance_ivf2_index(spark, p1)
-    s2 = rebalance_ivf2_index(spark, p2)
+    s1 = rebalance_ivf_index(spark, p1)
+    s2 = rebalance_ivf_index(spark, p2)
     assert s1 == s2
     rows1 = sorted(
         (int(r["cell"]), int(r["neighbor_id"]))
@@ -339,7 +337,7 @@ def test_ivf2_rebalance_is_deterministic_and_noop_when_uniform(spark, tmp_path):
     occ = _occupancy2(spark, p1)
     total, ncells = sum(occ.values()), len(occ)
     expect_hot = sorted(c for c, n in occ.items() if n * ncells > total)
-    s3 = rebalance_ivf2_index(spark, p1)
+    s3 = rebalance_ivf_index(spark, p1)
     assert s3["hot_cells"] == expect_hot
 
 

@@ -1,4 +1,4 @@
-"""update_in_ivf_index / update_in_ivf2_index + the atomic cell-swap
+"""update_in_ivf_index (both quantizers) + the atomic cell-swap
 recovery protocol — the round-15 closures of the two residuals the r14
 verdict named:
 
@@ -28,10 +28,8 @@ from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spar
     build_ivf_index,
     compact_ivf_index,
     delete_from_ivf_index,
-    query_ivf2_index,
     query_ivf_index,
     recover_ivf_index,
-    update_in_ivf2_index,
     update_in_ivf_index,
 )
 from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spark.sources.tables import (
@@ -51,19 +49,19 @@ def _files_by_cell(path):
     return out
 
 
-def _row_of(spark, path, vid, id_col="vec_id", vec_col="embedding"):
+def _row_of(spark, path, vid):
     rows = (
         spark.read.parquet(path)
-        .where(F.col(id_col) == vid)
-        .select(id_col, vec_col, "cell")
+        .where(F.col("neighbor_id") == vid)
+        .select("neighbor_id", "c_vec", "cell")
         .collect()
     )
     return rows
 
 
-def _tomb_ids(spark, path, id_col="vec_id"):
+def _tomb_ids(spark, path):
     try:
-        return {int(r[id_col]) for r in spark.read.parquet(path + "_tombstones").collect()}
+        return {int(r["neighbor_id"]) for r in spark.read.parquet(path + "_tombstones").collect()}
     except Exception:
         return set()
 
@@ -93,8 +91,8 @@ def test_update_replaces_vector_rewriting_only_its_cell(spark, tmp_path):
     # exactly one live row for the id, carrying the NEW embedding
     rows = _row_of(spark, path, vid)
     assert len(rows) == 1
-    old_emb = [float(x) for x in old_row["embedding"]]
-    assert [float(x) for x in rows[0]["embedding"]] == list(reversed(old_emb))
+    old_emb = [float(x) for x in old_row["c_vec"]]
+    assert [float(x) for x in rows[0]["c_vec"]] == list(reversed(old_emb))
     new_cell = int(rows[0]["cell"])
     # no tombstone left behind — the id is live, not hidden
     assert _tomb_ids(spark, path) == set()
@@ -135,10 +133,10 @@ def test_update_leaves_unrelated_tombstone_debt_untouched(spark, tmp_path):
     # unrelated pending deletes in other cells (pick ids not sharing
     # the victim's cell so the debt sets are disjoint by construction)
     others = [
-        int(r["vec_id"])
+        int(r["neighbor_id"])
         for r in spark.read.parquet(path)
-        .where((F.col("cell") != old_cell) & (F.col("vec_id") != vid))
-        .select("vec_id")
+        .where((F.col("cell") != old_cell) & (F.col("neighbor_id") != vid))
+        .select("neighbor_id")
         .limit(5)
         .collect()
     ]
@@ -153,7 +151,10 @@ def test_update_leaves_unrelated_tombstone_debt_untouched(spark, tmp_path):
     assert set(stats["cells_rewritten"]) | set(stats["cells_removed"]) == {old_cell}
     # unrelated tombstones survived the update, still recorded + hidden
     assert _tomb_ids(spark, path) == set(others)
-    live = {int(r["vec_id"]) for r in spark.read.parquet(path).select("vec_id").collect()}
+    live = {
+        int(r["neighbor_id"])
+        for r in spark.read.parquet(path).select("neighbor_id").collect()
+    }
     assert set(others) <= live  # physically present (not yet compacted)
     res = query_ivf_index(emb.where("vec_id < 3"), path, k=10, n_probe=3)
     assert not (set(others) & {int(r["neighbor_id"]) for r in res.collect()})
@@ -224,18 +225,18 @@ def test_ivf2_update_replaces_vector_and_clears_debt(spark, tmp_path):
     path = str(tmp_path / "idx2")
     build_ivf2_index(emb, path, n_cells=16, iters=2, train_where="vec_id % 4 = 0")
     vid = 7
-    [old_row] = _row_of(spark, path, vid, id_col="neighbor_id", vec_col="c_vec")
-    stats = update_in_ivf2_index(_updated_batch(emb, vid), path)
+    [old_row] = _row_of(spark, path, vid)
+    stats = update_in_ivf_index(_updated_batch(emb, vid), path)
     assert set(stats["cells_rewritten"]) | set(stats["cells_removed"]) == {
         int(old_row["cell"])
     }
-    rows = _row_of(spark, path, vid, id_col="neighbor_id", vec_col="c_vec")
+    rows = _row_of(spark, path, vid)
     assert len(rows) == 1
     old_emb = [float(x) for x in old_row["c_vec"]]
     assert [float(x) for x in rows[0]["c_vec"]] == list(reversed(old_emb))
-    assert _tomb_ids(spark, path, id_col="neighbor_id") == set()
+    assert _tomb_ids(spark, path) == set()
     # hierarchical query path serves full k with the id live again
-    res = query_ivf2_index(emb.where("vec_id < 3"), path, k=5)
+    res = query_ivf_index(emb.where("vec_id < 3"), path, k=5)
     assert res.groupBy("query_id").count().agg(F.min("count")).collect()[0][0] == 5
 
 
@@ -298,14 +299,14 @@ def test_committed_stage_rolls_forward_from_torn_state(spark, tmp_path):
     cell_a, cell_b = cells[0], cells[1]
     # intended compaction: cell_a loses its lowest-id row, cell_b is
     # removed outright
-    victim = idx.where(F.col("cell") == cell_a).agg(F.min("vec_id")).collect()[0][0]
+    victim = idx.where(F.col("cell") == cell_a).agg(F.min("neighbor_id")).collect()[0][0]
     survivors = (
-        idx.where((F.col("cell") == cell_a) & (F.col("vec_id") != victim))
+        idx.where((F.col("cell") == cell_a) & (F.col("neighbor_id") != victim))
         .withColumn("cell", F.col("cell").cast("int"))
         .localCheckpoint(eager=True)
     )
     expected_a = {
-        int(r["vec_id"]) for r in survivors.select("vec_id").collect()
+        int(r["neighbor_id"]) for r in survivors.select("neighbor_id").collect()
     }
     _stage(spark, path, survivors, [cell_b], commit=True)
     # simulate the crash mid-swap: live cell_a already deleted, staged
@@ -318,8 +319,8 @@ def test_committed_stage_rolls_forward_from_torn_state(spark, tmp_path):
     assert cell_a in out["cells_swapped"] and cell_b in out["cells_removed"]
     after = spark.read.parquet(path)
     got_a = {
-        int(r["vec_id"])
-        for r in after.where(F.col("cell") == cell_a).select("vec_id").collect()
+        int(r["neighbor_id"])
+        for r in after.where(F.col("cell") == cell_a).select("neighbor_id").collect()
     }
     assert got_a == expected_a
     assert after.where(F.col("cell") == cell_b).count() == 0
@@ -338,13 +339,15 @@ def test_maintenance_entry_points_self_heal_before_acting(spark, tmp_path):
     cell_a = int(idx.select(F.min("cell")).collect()[0][0])
     keep_one = (
         idx.where(F.col("cell") == cell_a)
-        .orderBy("vec_id")
+        .orderBy("neighbor_id")
         .limit(1)
         .withColumn("cell", F.col("cell").cast("int"))
         .localCheckpoint(eager=True)
     )
     # collected BEFORE the swap: idx's plan pins the pre-swap file list
-    pre_crash_ids = {int(r["vec_id"]) for r in idx.where(F.col("cell") == cell_a).collect()}
+    pre_crash_ids = {
+        int(r["neighbor_id"]) for r in idx.where(F.col("cell") == cell_a).collect()
+    }
     _stage(spark, path, keep_one, [], commit=True)
     from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spark.operators.similarity import (
         append_to_ivf_index,
@@ -356,6 +359,51 @@ def test_maintenance_entry_points_self_heal_before_acting(spark, tmp_path):
     a_rows = spark.read.parquet(path).where(F.col("cell") == cell_a)
     # cell_a = the one staged survivor + any of the appended batch that
     # routed there — never the pre-crash contents
-    got = {int(r["vec_id"]) for r in a_rows.collect()}
+    got = {int(r["neighbor_id"]) for r in a_rows.collect()}
     assert len(got & pre_crash_ids) == 1  # only the staged survivor
     assert all(v >= 400 for v in got - pre_crash_ids)
+
+
+def test_rollback_raises_when_stage_delete_returns_false(spark, tmp_path, monkeypatch):
+    """Hadoop's delete signals failure by returning false. Recovery
+    must not report ``rolled_back`` while the uncommitted stage is
+    still there — the next maintenance op would then refuse to run,
+    blaming a maintenance op "in flight"."""
+    from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spark.operators import (
+        similarity as sim,
+    )
+
+    emb = load_table(spark, SF_DIR, "embeddings")
+    path = str(tmp_path / "idx")
+    build_ivf_index(emb.where("vec_id < 100"), path, n_cells=4, iters=1)
+    junk = spark.range(3).select(
+        F.col("id").alias("neighbor_id"),
+        F.array(F.lit(1.0)).alias("c_vec"),
+        F.lit(0).cast("int").alias("cell"),
+    )
+    tmp = _stage(spark, path, junk, [], commit=False)
+
+    real = sim._hadoop_fs
+
+    class _RefusingDelete:
+        def __init__(self, fs):
+            self._fs = fs
+
+        def delete(self, *args):
+            return False
+
+        def __getattr__(self, name):
+            return getattr(self._fs, name)
+
+    def _proxy(spark_, p):
+        fs, hpath = real(spark_, p)
+        return _RefusingDelete(fs), hpath
+
+    monkeypatch.setattr(sim, "_hadoop_fs", _proxy)
+    with pytest.raises(RuntimeError, match="delete failed"):
+        recover_ivf_index(spark, path)
+    assert os.path.exists(tmp)
+    monkeypatch.undo()
+    # once deletes work again, recovery converges
+    assert recover_ivf_index(spark, path)["action"] == "rolled_back"
+    assert not os.path.exists(tmp)

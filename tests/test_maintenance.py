@@ -184,16 +184,16 @@ def test_ivf2_append_batch_token_skips_retry_in_constant_work(spark, tmp_path):
         train_where="vec_id % 16 = 0",
     )
     batch = emb.where("vec_id % 10 = 0")
-    similarity.append_to_ivf2_index(
+    similarity.append_to_ivf_index(
         batch, path, skip_existing_ids=False, batch_token="drop-2026-08-15"
     )
     once = spark.read.parquet(path).count()
-    similarity.append_to_ivf2_index(
+    similarity.append_to_ivf_index(
         batch, path, skip_existing_ids=False, batch_token="drop-2026-08-15"
     )
     assert spark.read.parquet(path).count() == once
     batch2 = emb.where("vec_id % 10 = 1")
-    similarity.append_to_ivf2_index(
+    similarity.append_to_ivf_index(
         batch2, path, skip_existing_ids=False, batch_token="drop-2026-08-16"
     )
     assert spark.read.parquet(path).count() == once + batch2.count()

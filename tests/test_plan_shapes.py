@@ -1135,7 +1135,7 @@ def test_ivf2_persisted_query_scan_is_partition_pruned(spark, tmp_path):
     from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spark.operators.similarity import (
         build_ivf2_index,
         cosine_topk_ivf2,
-        query_ivf2_index,
+        query_ivf_index,
     )
     from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spark.sources.tables import load_table
 
@@ -1143,7 +1143,7 @@ def test_ivf2_persisted_query_scan_is_partition_pruned(spark, tmp_path):
     path = str(tmp_path / "index2")
     build_ivf2_index(emb, path, n_cells=32, iters=2, train_where="vec_id % 16 = 0")
     qs = emb.where("vec_id < 5")
-    out = query_ivf2_index(qs, path, k=10, n_probe=3, n_super_probe=2)
+    out = query_ivf_index(qs, path, k=10, n_probe=3, n_super_probe=2)
     plan = plan_text(out)
     seg = plan.split("PartitionFilters: [")
     assert len(seg) > 1, "hierarchical inverted-list scan lost its partition filter"

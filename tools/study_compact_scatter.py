@@ -84,10 +84,10 @@ def run(spark, sf_dir: str, scratch: str) -> list[dict]:
     target = int(
         idx.groupBy("cell").count().orderBy("count", "cell").limit(1).collect()[0]["cell"]
     )
-    victims = idx.where(F.col("cell") == target).select("vec_id")
+    victims = idx.where(F.col("cell") == target).select("neighbor_id")
     n_del = victims.count()
     t0 = time.time()
-    delete_from_ivf_index(victims, path)
+    delete_from_ivf_index(victims, path, id_col="neighbor_id")
     t_del = time.time() - t0
     t0 = time.time()
     audit = audit_ivf_tombstones(spark, path)
