@@ -1,7 +1,7 @@
 from .scd import (  # noqa: F401
-    apply_scd_changes,
     create_scd_from_input,
     get_oldest_records_from_scd,
+    merge_scd,
     remove_one_day_changes,
     scd_point_in_time_join,
     scd_update_and_insert,

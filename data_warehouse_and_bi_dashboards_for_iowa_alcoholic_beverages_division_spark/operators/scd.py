@@ -146,6 +146,33 @@ def remove_one_day_changes(
     ).drop("_new_value")
 
 
+def merge_scd(
+    old_scd: DataFrame,
+    new_records: DataFrame,
+    natural_key: str,
+    date_col: str,
+    attribute_cols: Sequence[str],
+) -> DataFrame:
+    """Fold raw change records into an SCD2 dimension: the whole merged
+    dimension, not a patch to apply to the old one.
+
+    Every old version is replayed as a pseudo-event at its
+    ``start_date``, unioned with the new records, and the SCD is rebuilt.
+    :func:`create_scd_from_input` depends only on each (nk, attrs)
+    combination's MIN date, which the replay carries exactly, so
+    ``merge_scd(create_scd_from_input(L1), L2) ==
+    create_scd_from_input(L1 ∪ L2)`` for any split of a log — including
+    records older than the dimension's newest version (a late file) —
+    and re-folding records the dimension already holds changes nothing.
+    """
+    attrs = _attrs_without_nk(attribute_cols, natural_key)
+    pseudo_events = old_scd.select(natural_key, *attrs, F.col("start_date").alias(date_col))
+    incoming = new_records.select(natural_key, *attrs, date_col)
+    return create_scd_from_input(
+        pseudo_events.unionByName(incoming), [natural_key, *attrs], date_col, natural_key
+    )
+
+
 def scd_update_and_insert(
     old_scd: DataFrame,
     new_records: DataFrame,
@@ -153,12 +180,10 @@ def scd_update_and_insert(
     date_col: str,
     attribute_cols: Sequence[str],
 ) -> tuple[DataFrame, DataFrame]:
-    """Incremental SCD2 merge (reference ``scd.py:230-265``,
-    `get_scd_records_for_update_and_insert`).
-
-    Current warehouse rows are replayed as pseudo-events at their
-    ``start_date``, unioned with the new raw records, and the SCD is
-    rebuilt; then split into
+    """Incremental SCD2 merge as the reference's update/insert split
+    (reference ``scd.py:230-265``,
+    `get_scd_records_for_update_and_insert`): the :func:`merge_scd`
+    rebuild, split into
 
     - ``to_update``: previously-current rows whose recomputed
       ``end_date`` is now set (their interval closed), and
@@ -173,11 +198,7 @@ def scd_update_and_insert(
     attrs = _attrs_without_nk(attribute_cols, natural_key)
     version_key = [natural_key, *attrs, "start_date"]
 
-    pseudo_events = old_scd.select(natural_key, *attrs, F.col("start_date").alias(date_col))
-    incoming = new_records.select(natural_key, *attrs, date_col)
-    rebuilt = create_scd_from_input(
-        pseudo_events.unionByName(incoming), [natural_key, *attrs], date_col, natural_key
-    )
+    rebuilt = merge_scd(old_scd, new_records, natural_key, date_col, attribute_cols)
 
     currently_open = old_scd.where(F.col("is_current")).select(*version_key)
 
@@ -208,40 +229,11 @@ def _join_on_version_key(
     return l.join(r, on=cond, how=how)
 
 
-def apply_scd_changes(
-    old_scd: DataFrame,
-    to_update: DataFrame,
-    to_insert: DataFrame,
-    natural_key: str,
-) -> DataFrame:
-    """Apply an incremental merge to a parquet-backed dimension.
-
-    The reference collects ``to_update`` to the driver and issues
-    row-at-a-time SQL UPDATEs (``scd.py:194-217``) — a driver funnel
-    that cannot scale. Parquet has no in-place update, so the
-    distributed equivalent is MERGE semantics as DataFrame ops:
-    anti-join out the superseded rows, union the refreshed + new rows,
-    and overwrite the dimension table. Dimensions are small relative to
-    facts, so the rewrite cost is negligible at any scale.
-    """
-    cols = old_scd.columns
-    version_key = [c for c in cols if c not in ("end_date", "is_current")]
-    keep = _join_on_version_key(
-        old_scd, to_update.select(*version_key), version_key, "left_anti"
-    )
-    return (
-        keep.select(*cols)
-        .unionByName(to_update.select(*cols))
-        .unionByName(to_insert.select(*cols))
-    )
-
-
 def scd_point_in_time_join(
     fact_df: DataFrame,
     dim_df: DataFrame,
     natural_key: str,
     event_date_col: str,
-    broadcast_dim: bool = True,
 ) -> DataFrame:
     """As-of (point-in-time) lookup: each fact row joins the dimension
     version whose validity interval contains the event date
@@ -249,11 +241,11 @@ def scd_point_in_time_join(
     ``create_update_liqour_sales_fact_table.py:19-32``).
 
     Executed as an equi-join on the natural key plus a range
-    post-filter — with the dimension broadcast this is a single
+    post-filter with the dimension always broadcast: a single
     broadcast-hash join, no fact shuffle at all, which is the shape you
     want when the fact side is 100 TB and the dim is MBs.
     """
-    dim = F.broadcast(dim_df) if broadcast_dim else dim_df
+    dim = F.broadcast(dim_df)
     cond = (
         (fact_df[natural_key] == dim[natural_key])
         & (fact_df[event_date_col] >= dim["start_date"])

@@ -11,7 +11,7 @@ Write layout is chosen for 100 TB, not for the local testdata:
 - dimensions are small unpartitioned parquet. This full load overwrites
   each table in place, one after another, so a crash mid-build can
   leave tables of two builds side by side. The streaming SCD2 merge
-  (`streaming.scd_stream`, `apply_scd_changes`) — the distributed
+  (`streaming.scd_stream`, `operators.scd.merge_scd`) — the distributed
   replacement for the reference's driver-side row UPDATEs — writes the
   merged dimension to a staging sibling and swaps it in by rename;
 - every dimension carries the −1/'unknown' member row the reference
@@ -27,7 +27,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from ..functions.dates import build_date_dim
-from ..sources.tables import read_parquet
+from ..sources.tables import load_table, read_parquet
 from .warehouse import fact_sales, geo_dim
 
 
@@ -58,18 +58,13 @@ def build_star_warehouse(spark: SparkSession, sf_dir: str, out_dir: str) -> dict
     fact = fact_sales(spark, sf_dir)
     bounds = fact.agg(F.min("sale_date").alias("lo"), F.max("sale_date").alias("hi")).collect()[0]
 
-    # calendar spans the data + 5 years of headroom (reference
-    # main_pipeline.py:305)
-    date_dim = build_date_dim(spark, str(bounds["lo"]), str(bounds["hi"])).withColumn(
-        "FullDate", F.col("FullDate")
-    )
-    date_dim.write.mode("overwrite").parquet(paths["dim_date"])
+    # calendar spans exactly the fact's dates; the reference's 5 years
+    # of headroom past them (main_pipeline.py:305) is not reproduced
+    build_date_dim(spark, str(bounds["lo"]), str(bounds["hi"])).write.mode("overwrite").parquet(paths["dim_date"])
 
     _with_unknown_member(
         geo_dim(spark, sf_dir), "c_custkey", {"c_name": "unknown", "nation_name": "unknown", "region_name": "unknown"}
     ).write.mode("overwrite").parquet(paths["dim_geo"])
-
-    from ..sources.tables import load_table
 
     _with_unknown_member(load_table(spark, sf_dir, "part"), "p_partkey", {"p_name": "unknown"}).write.mode(
         "overwrite"

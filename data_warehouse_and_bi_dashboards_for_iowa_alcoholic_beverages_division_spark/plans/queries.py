@@ -31,6 +31,7 @@ from ..functions.rounding import floor_round6, floor_round6_sql
 from ..operators import bloomfilter, dedup, multimodal, retrieval, similarity, sketches, text
 from ..operators.scd import create_scd_from_input, scd_point_in_time_join, scd_update_and_insert
 from ..sources.tables import load_table
+from .pipeline import revenue_by_weekday
 from .warehouse import COST_SQL, PROFIT_SQL, REVENUE_SQL, fact_sales
 
 
@@ -771,18 +772,8 @@ _FACT_JOIN_SQL = "FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey"
     "Dashboard: revenue/profit/count by weekday via date-dim star join",
 )
 def q23(spark: SparkSession, sf_dir: str) -> DataFrame:
-    fact = fact_sales(spark, sf_dir)
-    dates = build_date_dim(spark, "1992-01-01", "2002-12-31").select(
-        "FullDate", "DayOfWeekNumber", "DayOfWeekName"
-    )
-    return (
-        fact.join(F.broadcast(dates), fact["sale_date"] == dates["FullDate"], "inner")
-        .groupBy("DayOfWeekNumber", "DayOfWeekName")
-        .agg(
-            F.sum("revenue_usd").alias("sum_rev"),
-            F.sum("gross_profit_usd").alias("sum_profit"),
-            F.count("*").alias("n_sales"),
-        )
+    return revenue_by_weekday(
+        {"fact_sales": fact_sales(spark, sf_dir), "dim_date": build_date_dim(spark, "1992-01-01", "2002-12-31")}
     )
 
 

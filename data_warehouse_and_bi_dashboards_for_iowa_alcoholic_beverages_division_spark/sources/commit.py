@@ -33,28 +33,37 @@ def _hadoop_fs(spark, path: str):
     return hpath.getFileSystem(spark._jsc.hadoopConfiguration()), hpath
 
 
-def _sidecar_is_empty_dir(spark, sidecar_path: str) -> bool:
-    """True iff ``sidecar_path`` exists but holds no non-empty data
-    file (only Hadoop markers like ``_SUCCESS``/dotfiles, or nothing) —
-    the state a crash between directory creation and the first
-    committed parquet file leaves behind. Checked through the Hadoop
-    FS API so the answer is right on any filesystem the index lives on."""
-    fs, hpath = _hadoop_fs(spark, sidecar_path)
-    if not fs.exists(hpath):
-        return True
+def _hidden(name: str) -> bool:
+    """Names Spark's file index skips: ``_SUCCESS``, ``_temporary``,
+    ``.crc`` and other dot files, in-flight copies. ``_col=v`` is a
+    partition directory, not hidden."""
+    return (name.startswith("_") and "=" not in name) or name.startswith(".") or name.endswith("._COPYING_")
+
+
+def _holds_data(fs, hpath) -> bool | None:
+    """Whether the directory ``hpath`` holds a non-empty data file;
+    None when it holds a visible subdirectory (a partition layout, or
+    one this caller does not expect), whose contents are not looked at."""
+    found = False
     for st in fs.listStatus(hpath):
-        name = st.getPath().getName()
-        if name.startswith(("_", ".")):
+        if _hidden(st.getPath().getName()):
             continue
-        # A non-marker SUBDIRECTORY may hold committed data (e.g. a
-        # partitioned sidecar layout) — it must never read as "empty",
-        # or the token gate would be silently bypassed. Conservative:
-        # not empty, so the caller re-raises its original error.
         if st.isDirectory():
-            return False
-        if st.isFile() and st.getLen() > 0:
-            return False
-    return True
+            return None
+        found = found or st.getLen() > 0
+    return found
+
+
+def _sidecar_is_empty_dir(spark, sidecar_path: str) -> bool:
+    """True iff ``sidecar_path`` is missing or holds no non-empty data
+    file (only names Spark skips, or nothing) — the state a crash
+    between directory creation and the first committed parquet file
+    leaves behind. A visible SUBDIRECTORY may hold committed data (e.g.
+    a partitioned sidecar layout), so it never reads as "empty", or the
+    token gate would be silently bypassed: the caller re-raises its
+    original error instead."""
+    fs, hpath = _hadoop_fs(spark, sidecar_path)
+    return not fs.exists(hpath) or _holds_data(fs, hpath) is False
 
 
 def _fs_checked(ok: bool, op: str, src: str, dst: str | None = None) -> None:

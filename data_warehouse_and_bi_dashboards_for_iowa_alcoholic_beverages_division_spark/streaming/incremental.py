@@ -25,7 +25,7 @@ from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import DateType
 
-from ..sources.commit import _fs_checked, _hadoop_fs
+from ..sources.commit import _fs_checked, _hadoop_fs, _hidden, _holds_data
 from ..sources.metrics import observed_quality, quality_report
 
 # the directory name Spark gives a NULL partition value
@@ -48,30 +48,10 @@ def incremental_delta(source: DataFrame, date_col: str, watermark) -> DataFrame:
     return source.where(F.col(date_col) > F.lit(watermark))
 
 
-def _hidden(name: str) -> bool:
-    """Names Spark's file index skips: ``_SUCCESS``, ``_temporary``,
-    ``.crc`` and other dot files, in-flight copies."""
-    return (name.startswith("_") and "=" not in name) or name.startswith(".") or name.endswith("._COPYING_")
-
-
 def _unescape(spark: SparkSession, s: str) -> str:
     if "%" not in s:  # nothing to unescape; spares a gateway call per directory
         return s
     return spark._jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.unescapePathName(s)
-
-
-def _holds_data(fs, hpath) -> bool | None:
-    """Whether a partition directory holds a non-empty data file;
-    None when it holds a visible subdirectory, a layout
-    ``partitionBy(date_col)`` does not write."""
-    found = False
-    for st in fs.listStatus(hpath):
-        if _hidden(st.getPath().getName()):
-            continue
-        if st.isDirectory():
-            return None
-        found = found or st.getLen() > 0
-    return found
 
 
 def _listed_watermark(spark: SparkSession, target_path: str, date_col: str):

@@ -4,11 +4,13 @@ The reference runs its SCD merge as a scheduled batch (Airflow task →
 `update_store_dim.py` → `scd.py:230-265`, applied by driver-side
 row-at-a-time UPDATEs at `scd.py:194-217`). The Spark-native upgrade is
 Structured Streaming over the staging directory: each micro-batch of
-raw change records is folded into the parquet dimension with the same
-`scd_update_and_insert` merge, inside `foreachBatch` — exactly-once
-per batch via the streaming checkpoint, no driver funnel, and the
-`Trigger.AvailableNow` drain doubles as the reference's incremental
-batch when run on a schedule.
+raw change records is folded into the parquet dimension by `merge_scd`,
+inside `foreachBatch` — exactly-once per batch via the streaming
+checkpoint, no driver funnel, and the `Trigger.AvailableNow` drain
+doubles as the reference's incremental batch when run on a schedule.
+The merged dimension is the rebuild over the old versions plus the
+batch, so it equals a rebuild over the whole change log whatever order
+the files arrive in (a late file included).
 
 Dimensions are small relative to facts (§ SURVEY.md 1.1), so rewriting
 the whole dimension per micro-batch is cheap at any scale; the
@@ -29,7 +31,7 @@ from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
-from ..operators.scd import apply_scd_changes, create_scd_from_input, scd_update_and_insert
+from ..operators.scd import create_scd_from_input, merge_scd
 from ..sources.commit import recover_swap, staging_path, swap_in
 
 
@@ -61,10 +63,7 @@ def scd_upsert_batch(
     if old is None:
         merged = create_scd_from_input(batch_df, attribute_cols, date_col, natural_key)
     else:
-        to_update, to_insert = scd_update_and_insert(
-            old, batch_df, natural_key, date_col, attribute_cols
-        )
-        merged = apply_scd_changes(old, to_update, to_insert, natural_key)
+        merged = merge_scd(old, batch_df, natural_key, date_col, attribute_cols)
     # the merge reads the live dimension, so it cannot be written over
     # it: write it beside it, then swap
     merged.write.mode("overwrite").parquet(staging_path(dim_path))

@@ -18,8 +18,8 @@ from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spar
     simhash_near_dup_pairs,
 )
 from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spark.operators.scd import (
-    apply_scd_changes,
     create_scd_from_input,
+    merge_scd,
     remove_one_day_changes,
     scd_update_and_insert,
 )
@@ -59,7 +59,7 @@ def test_scd_merge_empty_delta(spark):
         "nk",
     )
     upd, ins = scd_update_and_insert(old, _empty_log(spark), "nk", "d", ["nk", "val"])
-    merged = apply_scd_changes(old, upd.select(*old.columns), ins.select(*old.columns), "nk")
+    merged = merge_scd(old, _empty_log(spark), "nk", "d", ["nk", "val"])
     assert upd.count() == 0 and ins.count() == 0
     assert merged.count() == old.count()
 

@@ -491,24 +491,6 @@ def test_topn_with_ties_window_group_limit(q):
     assert "WindowGroupLimit" in final
 
 
-def test_no_registered_query_terminates_in_decimal(spark):
-    """Terminal decimal columns are a cross-engine hash hazard: the
-    engines agree on values but stringify trailing-zero decimals
-    differently, so whether a query's hash matches depends on whether
-    the data happens to land on a .x0 boundary. Every registered query
-    must canonicalize decimal outputs to DOUBLE at the very end of the
-    plan (decimal math inside the plan is encouraged — it is exact and
-    order-independent). A new query tripping this: add its terminal
-    decimal columns to queries._CANONICAL_DOUBLE."""
-    offenders = {}
-    for name, spec in registry().items():
-        df = spec.fn(spark, SF_DIR)
-        decs = [c for c, t in df.dtypes if t.startswith("decimal")]
-        if decs:
-            offenders[name] = decs
-    assert not offenders, f"decimal terminal columns: {offenders}"
-
-
 def test_doc_chunks_no_shuffle(q):
     # q148 is a pure flat-map (sequence+transform+posexplode): chunks
     # inherit the scan partitioning; any Exchange means a refactor
@@ -1061,18 +1043,43 @@ _PY_NODES = (
 
 
 @pytest.fixture(scope="module")
-def registry_plans(spark):
-    """One walk over every registered query's executed plan — shared by
-    the registry-wide audits below (the walk dominates their cost)."""
+def registry_walk(spark):
+    """One walk over every registered query: ``(executed plans, output
+    dtypes)`` by name — shared by the registry-wide audits below (the
+    walk dominates their cost)."""
     from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spark.plans.queries import (
         release_persisted,
     )
 
-    plans = {}
+    plans, dtypes = {}, {}
     for name, spec in registry().items():
-        plans[name] = spec.fn(spark, SF_DIR)._jdf.queryExecution().executedPlan().toString()
+        df = spec.fn(spark, SF_DIR)
+        plans[name] = df._jdf.queryExecution().executedPlan().toString()
+        dtypes[name] = df.dtypes
         release_persisted()
-    return plans
+    return plans, dtypes
+
+
+@pytest.fixture(scope="module")
+def registry_plans(registry_walk):
+    return registry_walk[0]
+
+
+def test_no_registered_query_terminates_in_decimal(registry_walk):
+    """Terminal decimal columns are a cross-engine hash hazard: the
+    engines agree on values but stringify trailing-zero decimals
+    differently, so whether a query's hash matches depends on whether
+    the data happens to land on a .x0 boundary. Every registered query
+    must canonicalize decimal outputs to DOUBLE at the very end of the
+    plan (decimal math inside the plan is encouraged — it is exact and
+    order-independent). A new query tripping this: add its terminal
+    decimal columns to queries._CANONICAL_DOUBLE."""
+    offenders = {}
+    for name, dtypes in registry_walk[1].items():
+        decs = [c for c, t in dtypes if t.startswith("decimal")]
+        if decs:
+            offenders[name] = decs
+    assert not offenders, f"decimal terminal columns: {offenders}"
 
 
 def _unpartitioned_window_count(plan: str) -> int:

@@ -11,9 +11,9 @@ import pyspark.sql.functions as F
 from pyspark.sql import Row
 
 from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spark.operators import (
-    apply_scd_changes,
     create_scd_from_input,
     get_oldest_records_from_scd,
+    merge_scd,
     scd_update_and_insert,
 )
 
@@ -154,8 +154,8 @@ def test_incremental_merge_closes_current_and_inserts(spark):
     assert ins[0]["end_date"] is None
     assert ins[0]["is_current"] is True
 
-    # applying the merge yields a consistent 3-version dimension
-    merged = apply_scd_changes(old_scd, to_update.select(*old_scd.columns), to_insert.select(*old_scd.columns), "store_number")
+    # the merged dimension is a consistent 3-version dimension
+    merged = merge_scd(old_scd, new_records, "store_number", "date", ATTRS)
     rows = sorted(merged.collect(), key=lambda r: r["start_date"])
     assert len(rows) == 3
     assert [r["is_current"] for r in rows] == [False, False, True]

@@ -180,6 +180,41 @@ def test_listing_watermark_matches_read_path_in_one_job(spark, tmp_path):
     assert sorted(_rows(spark, target), key=str) == sorted(want, key=str)
 
 
+def test_hidden_names_are_one_rule_for_sidecars_and_partitions(spark, tmp_path):
+    """The sidecar empty-dir check and the listed watermark skip the
+    same names Spark's file index skips — markers, dot files, in-flight
+    copies — and a visible subdirectory (``_col=v`` included) never
+    reads as "no data"."""
+    from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spark.sources.commit import (
+        _sidecar_is_empty_dir,
+    )
+    from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spark.streaming.incremental import (
+        _listed_watermark,
+    )
+
+    target = str(tmp_path / "fact")
+    day = datetime.date(2024, 1, 1)
+    spark.createDataFrame([Row(k=1, d=day)], "k long, d date").write.partitionBy("d").parquet(target)
+    sidecar = tmp_path / "sidecar"
+    partition = tmp_path / "fact" / "d=2024-02-01"
+    for where in (sidecar, partition):
+        where.mkdir()
+        (where / "_SUCCESS").write_bytes(b"{}")
+        (where / ".x.crc").write_bytes(b"crc")
+        (where / "part-0._COPYING_").write_bytes(b"in flight")
+    assert _sidecar_is_empty_dir(spark, str(sidecar))
+    assert _sidecar_is_empty_dir(spark, str(tmp_path / "missing"))
+    assert _listed_watermark(spark, target, "d") == (True, day)
+
+    for sub in ("nested", "_col=v"):
+        (sidecar / sub).mkdir()
+        (partition / sub).mkdir()
+        assert not _sidecar_is_empty_dir(spark, str(sidecar)), sub
+        assert _listed_watermark(spark, target, "d") is None, sub
+        (sidecar / sub).rmdir()
+        (partition / sub).rmdir()
+
+
 def test_null_partition_only_target_is_update(spark, tmp_path):
     """A target whose only data is the NULL partition exists but has
     no watermark: the whole source is appended, as MAX(NULL) gates
@@ -303,11 +338,63 @@ def test_scd_stream_upsert_matches_batch_rebuild(spark, tmp_path):
     assert len(got) == 4  # store1: ames→boone (2 rows), store2: adel, store3: clive
 
 
-def _scd_rows(spark, path):
+def _scd_tuples(df):
     return sorted(
-        (r["store"], r["city"], str(r["start_date"]), str(r["end_date"]), r["is_current"])
-        for r in spark.read.parquet(path).collect()
+        (r["store"], r["city"], str(r["start_date"]), str(r["end_date"]), r["is_current"]) for r in df.collect()
     )
+
+
+def _scd_rows(spark, path):
+    return _scd_tuples(spark.read.parquet(path))
+
+
+_d = datetime.date
+
+
+@pytest.mark.parametrize(
+    "first, late",
+    [
+        # the late file repeats the current attributes at an earlier date
+        ([(1, "ames", _d(2024, 1, 5)), (2, "adel", _d(2024, 1, 1))], [(1, "ames", _d(2024, 1, 2))]),
+        # the late file's version falls between two already-merged ones
+        (
+            [(1, "ames", _d(2024, 1, 1)), (1, "clive", _d(2024, 1, 10)), (2, "adel", _d(2024, 1, 1))],
+            [(1, "boone", _d(2024, 1, 5))],
+        ),
+    ],
+    ids=["earlier-same-attrs", "between-versions"],
+)
+def test_scd_stream_late_file_equals_whole_log_rebuild(spark, tmp_path, first, late):
+    """A change-log file whose records predate the dimension's newest
+    versions, drained after them, leaves what one build over both files
+    leaves: one current row per key and tiling intervals. Re-folding it
+    changes nothing."""
+    from pyspark.sql.types import DateType, LongType, StringType, StructField, StructType
+
+    from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spark.operators.scd import (
+        create_scd_from_input,
+    )
+    from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spark.streaming.scd_stream import (
+        scd_stream_upsert,
+        scd_upsert_batch,
+    )
+
+    schema = StructType(
+        [StructField("store", LongType()), StructField("city", StringType()), StructField("obs_date", DateType())]
+    )
+    staging, dim = str(tmp_path / "staging"), str(tmp_path / "dim")
+    for rows in (first, late):
+        spark.createDataFrame(rows, schema).write.mode("append").parquet(staging)
+        scd_stream_upsert(spark, staging, dim, str(tmp_path / "ckpt"), "store", "obs_date", ["city"], schema=schema)
+
+    got = _scd_rows(spark, dim)
+    currents = [r[0] for r in got if r[4]]
+    assert sorted(currents) == sorted(set(currents)) == [1, 2]
+    whole_log = spark.createDataFrame(first + late, schema)
+    assert got == _scd_tuples(create_scd_from_input(whole_log, ["city"], "obs_date", "store"))
+
+    scd_upsert_batch(spark, spark.createDataFrame(late, schema), dim, "store", "obs_date", ["city"])
+    assert _scd_rows(spark, dim) == got
 
 
 @pytest.mark.parametrize("crash_after", ["staging_write", "first_rename", "second_rename"])
