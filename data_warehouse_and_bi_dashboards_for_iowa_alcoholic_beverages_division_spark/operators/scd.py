@@ -28,6 +28,7 @@ from collections.abc import Sequence
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
+from pyspark.sql.types import BooleanType, StructField, StructType
 
 SCD_META_COLS = ("start_date", "end_date", "is_current")
 
@@ -70,6 +71,29 @@ def create_scd_from_input(
         "start_date",
         F.lead("start_date").over(w).alias("end_date"),
     ).withColumn("is_current", F.col("end_date").isNull())
+
+
+def scd_schema(
+    input_schema: StructType,
+    attribute_cols: Sequence[str],
+    date_col: str,
+    natural_key: str,
+) -> StructType:
+    """The schema :func:`create_scd_from_input` gives an input of
+    ``input_schema``, derived without a Spark round trip: the natural
+    key and attributes keep their types, both interval bounds take the
+    type of ``date_col``. Every field is nullable, as a parquet read
+    makes them."""
+    attrs = _attrs_without_nk(attribute_cols, natural_key)
+    date_type = input_schema[date_col].dataType
+    return StructType(
+        [
+            *(StructField(c, input_schema[c].dataType) for c in (natural_key, *attrs)),
+            StructField("start_date", date_type),
+            StructField("end_date", date_type),
+            StructField("is_current", BooleanType()),
+        ]
+    )
 
 
 def get_oldest_records_from_scd(
@@ -164,12 +188,24 @@ def merge_scd(
     create_scd_from_input(L1 ∪ L2)`` for any split of a log — including
     records older than the dimension's newest version (a late file) —
     and re-folding records the dimension already holds changes nothing.
+
+    The union is hash-partitioned on the natural key before the rebuild.
+    That one exchange satisfies both the ``(nk, attrs)`` aggregate and
+    the ``PARTITION BY nk`` window, so the merge shuffles once instead
+    of twice. It gives up the aggregate's map-side partial, which saves
+    little here: the old versions are already one row per
+    ``(nk, attrs)``, and a change batch is small next to them. Over a raw
+    log (:func:`create_scd_from_input` alone) the partial aggregate does
+    shrink the shuffle, so only the merge repartitions.
     """
     attrs = _attrs_without_nk(attribute_cols, natural_key)
     pseudo_events = old_scd.select(natural_key, *attrs, F.col("start_date").alias(date_col))
     incoming = new_records.select(natural_key, *attrs, date_col)
     return create_scd_from_input(
-        pseudo_events.unionByName(incoming), [natural_key, *attrs], date_col, natural_key
+        pseudo_events.unionByName(incoming).repartition(natural_key),
+        [natural_key, *attrs],
+        date_col,
+        natural_key,
     )
 
 

@@ -21,6 +21,19 @@ the new one is complete, and a crash at any point converges when the
 batch is replayed from the streaming checkpoint (the merge is
 idempotent: re-folding a batch already in the dimension changes
 nothing).
+
+A drain onto an existing dimension is two Spark jobs: the merge's one
+shuffle on the natural key, and the staging write. Nothing else runs
+one:
+
+- the dimension's schema is derived from the batch's
+  (``operators.scd.scd_schema``), so reading the dimension infers
+  nothing from its footers;
+- an empty batch is not probed for. It folds to the dimension it
+  started from, and a batch that leaves a dimension of no rows (an
+  empty first file) is dropped from staging instead of swapped in, so
+  it leaves no dimension behind. The row count rides the staging
+  write (``observe``).
 """
 
 from __future__ import annotations
@@ -31,16 +44,19 @@ from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
-from ..operators.scd import create_scd_from_input, merge_scd
-from ..sources.commit import recover_swap, staging_path, swap_in
+from ..operators.scd import create_scd_from_input, merge_scd, scd_schema
+from ..sources.commit import _fs_checked, _hadoop_fs, recover_swap, staging_path, swap_in
+from ..sources.metrics import observed_quality, quality_report
 
 
-def _read_dim(spark: SparkSession, dim_path: str) -> DataFrame | None:
+def _read_dim(spark: SparkSession, dim_path: str, schema: StructType) -> DataFrame | None:
     try:
-        return spark.read.parquet(dim_path)
+        return spark.read.schema(schema).parquet(dim_path)
     except AnalysisException as e:
         # first batch: the dimension does not exist yet. Any other read
-        # error raises instead of rebuilding the dimension from one batch
+        # error raises instead of rebuilding the dimension from one batch;
+        # with the schema pinned, an unreadable or mistyped file raises
+        # when the merge runs, before anything is swapped in
         if e.getCondition() != "PATH_NOT_FOUND":
             raise
         return None
@@ -59,14 +75,21 @@ def scd_upsert_batch(
     # a crash between the swap's renames leaves no live dimension: put
     # the old one back before its absence could mean "first batch"
     recover_swap(spark, dim_path)
-    old = _read_dim(spark, dim_path)
+    old = _read_dim(spark, dim_path, scd_schema(batch_df.schema, attribute_cols, date_col, natural_key))
     if old is None:
         merged = create_scd_from_input(batch_df, attribute_cols, date_col, natural_key)
     else:
         merged = merge_scd(old, batch_df, natural_key, date_col, attribute_cols)
     # the merge reads the live dimension, so it cannot be written over
     # it: write it beside it, then swap
-    merged.write.mode("overwrite").parquet(staging_path(dim_path))
+    staged = staging_path(dim_path)
+    merged, obs = observed_quality(merged)
+    merged.write.mode("overwrite").parquet(staged)
+    if quality_report(obs)["n_rows"] == 0:
+        # an empty first batch: like an empty create, leave no dimension
+        fs, staged_h = _hadoop_fs(spark, staged)
+        _fs_checked(fs.delete(staged_h, True), "delete", staged)
+        return
     swap_in(spark, dim_path)
 
 
@@ -88,8 +111,6 @@ def scd_stream_upsert(
     stream = spark.readStream.schema(schema).parquet(staging_dir)
 
     def _apply(batch_df: DataFrame, _batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         scd_upsert_batch(spark, batch_df, dim_path, natural_key, date_col, attribute_cols)
 
     q = (

@@ -117,3 +117,25 @@ def test_dedup_clusters_auto_falls_back_to_star_on_long_chain(spark):
     assert star == {i: 1 for i in range(1, n + 1)}
     with pytest.raises(ValueError, match="unknown algorithm"):
         dedup_clusters(docs, pairs, algorithm="bogus").collect()
+
+
+def test_observed_checkpoint_metrics_equal_the_explicit_aggregate(spark):
+    """The metrics an observation collects while the checkpoint
+    materializes equal the same aggregate run as its own query, and the
+    checkpoint holds the observed rows."""
+    from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spark.operators.graph import (
+        _canonical_edges,
+        _observed_checkpoint,
+    )
+
+    edges = spark.createDataFrame([(1, 2), (2, 1), (3, 2), (4, 4), (6, 5), (7, 9)], "src long, dst long")
+    df = _canonical_edges(edges)
+    exprs = (
+        F.count(F.lit(1)).alias("n"),
+        F.bit_xor(F.xxhash64("a", "b")).alias("h"),
+        F.sum(F.col("a").cast("decimal(38,0)")).alias("s"),
+    )
+    out, metrics = _observed_checkpoint(df, *exprs)
+    assert dict(metrics) == df.agg(*exprs).collect()[0].asDict()
+    assert metrics["n"] == 4
+    assert sorted(tuple(r) for r in out.collect()) == [(1, 2), (2, 3), (5, 6), (7, 9)]

@@ -53,6 +53,41 @@ def test_scd_as_of_broadcasts_dim(q):
     assert "SortMergeJoin" not in plan, "point-in-time dim lookup must not shuffle the fact"
 
 
+def _final_plan(df) -> str:
+    df.collect()
+    return df._jdf.queryExecution().executedPlan().toString().split("== Initial Plan ==")[0]
+
+
+def test_scd_merge_shuffles_once_on_the_natural_key(spark, tmp_path):
+    """merge_scd's (nk, attrs) aggregate and PARTITION BY nk window share
+    one exchange on the natural key; a rebuild over a raw log keeps its
+    map-side partial aggregate ahead of its own two shuffles."""
+    import datetime
+
+    from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spark.operators.scd import (
+        create_scd_from_input,
+        merge_scd,
+    )
+
+    d, schema = datetime.date, "store long, city string, obs_date date"
+    log = spark.createDataFrame(
+        [(1, "ames", d(2024, 1, 1)), (1, "boone", d(2024, 2, 1)), (2, "adel", d(2024, 1, 1))], schema
+    )
+    rebuilt = _final_plan(create_scd_from_input(log, ["city"], "obs_date", "store"))
+    assert re.findall(r"Exchange hashpartitioning\((\w+)#\w+(?:, (\w+)#)?", rebuilt) == [
+        ("store", ""),
+        ("store", "city"),
+    ]
+    assert "partial_min" in rebuilt
+
+    dim = str(tmp_path / "dim")
+    create_scd_from_input(log, ["city"], "obs_date", "store").write.parquet(dim)
+    batch = spark.createDataFrame([(1, "clive", d(2024, 3, 1))], schema)
+    merged = _final_plan(merge_scd(spark.read.parquet(dim), batch, "store", "obs_date", ["city"]))
+    assert merged.count("Exchange ") == 1, merged
+    assert "Exchange hashpartitioning(store#" in merged
+
+
 def test_filter_pushdown_reaches_scan(q):
     plan = plan_text(q("q01_pricing_summary"))
     assert "PushedFilters: [" in plan

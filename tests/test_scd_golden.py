@@ -192,3 +192,16 @@ def test_get_oldest_records(spark):
     assert len(rows) == 1
     assert rows[0]["start_date"] == datetime.date(2024, 11, 12)
     assert rows[0]["store_name"] == "HY-VEE WINE AND SPIRITS (1022) / ANKENY"
+
+
+def test_scd_schema_is_the_built_dimension_schema(spark):
+    """The dimension schema derived without Spark names and types the
+    columns as ``create_scd_from_input`` builds them, for a DATE and a
+    TIMESTAMP date column."""
+    from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spark.operators.scd import scd_schema
+
+    events = spark.createDataFrame([_event(datetime.date(2022, 1, 1), "A")])
+    for df in (events, events.withColumn("date", F.col("date").cast("timestamp"))):
+        built = create_scd_from_input(df, ATTRS, "date", "store_number").schema
+        derived = scd_schema(df.schema, ATTRS, "date", "store_number")
+        assert [(f.name, f.dataType) for f in derived] == [(f.name, f.dataType) for f in built]

@@ -109,9 +109,29 @@ def test_scd_upsert_raises_on_unreadable_dimension(spark, tmp_path):
     dim = str(tmp_path / "dim")
     before = _corrupt_table(dim)
     batch = spark.createDataFrame([Row(nk=1, val="a", d=datetime.date(2024, 1, 1))])
-    with pytest.raises(Exception, match="CANNOT_READ_FILE_FOOTER"):
+    with pytest.raises(Exception, match=r"FAILED_READ_FILE\.NO_HINT"):
         scd_upsert_batch(spark, batch, dim, "nk", "d", ["nk", "val"])
     assert _contents(dim) == before
+
+
+def test_scd_upsert_raises_on_mistyped_dimension(spark, tmp_path):
+    """A stored dimension whose ``start_date`` is not the type the batch
+    implies raises instead of being coerced and rewritten."""
+    from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spark.streaming.scd_stream import (
+        scd_upsert_batch,
+    )
+
+    dim = str(tmp_path / "dim")
+    spark.createDataFrame(
+        [Row(nk=1, val="a", start_date="2024-01-01", end_date=None, is_current=True)],
+        "nk long, val string, start_date string, end_date date, is_current boolean",
+    ).write.parquet(dim)
+    before = _contents(dim)
+    batch = spark.createDataFrame([Row(nk=1, val="b", d=datetime.date(2024, 2, 1))])
+    with pytest.raises(Exception, match="PARQUET_COLUMN_DATA_TYPE_MISMATCH"):
+        scd_upsert_batch(spark, batch, dim, "nk", "d", ["nk", "val"])
+    assert _contents(dim) == before
+    assert sorted(p.name for p in tmp_path.iterdir()) == ["dim"]
 
 
 def _jobs_of(spark, group: str, fn):
@@ -394,6 +414,57 @@ def test_scd_stream_late_file_equals_whole_log_rebuild(spark, tmp_path, first, l
     assert got == _scd_tuples(create_scd_from_input(whole_log, ["city"], "obs_date", "store"))
 
     scd_upsert_batch(spark, spark.createDataFrame(late, schema), dim, "store", "obs_date", ["city"])
+    assert _scd_rows(spark, dim) == got
+
+
+def _store_schema():
+    from pyspark.sql.types import DateType, LongType, StringType, StructField, StructType
+
+    return StructType(
+        [StructField("store", LongType()), StructField("city", StringType()), StructField("obs_date", DateType())]
+    )
+
+
+def test_scd_drain_onto_a_dimension_is_two_jobs(spark, tmp_path):
+    """Folding a batch into an existing dimension runs the merge's one
+    shuffle and the staging write: no emptiness probe, no schema
+    inference over the dimension's footers."""
+    from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spark.streaming.scd_stream import (
+        scd_upsert_batch,
+    )
+
+    schema, dim = _store_schema(), str(tmp_path / "dim")
+    first = spark.createDataFrame([(1, "ames", _d(2024, 1, 1)), (2, "adel", _d(2024, 1, 1))], schema)
+    scd_upsert_batch(spark, first, dim, "store", "obs_date", ["city"])
+    batch = spark.createDataFrame([(1, "boone", _d(2024, 3, 1)), (3, "clive", _d(2024, 3, 9))], schema)
+    _, jobs = _jobs_of(spark, "scd-drain", lambda: scd_upsert_batch(spark, batch, dim, "store", "obs_date", ["city"]))
+    assert len(jobs) == 2, jobs
+    assert len(_scd_rows(spark, dim)) == 4
+
+
+def test_scd_stream_empty_file_leaves_the_dimension_as_it_was(spark, tmp_path):
+    """An empty change-log file drained first leaves no dimension (as an
+    empty create leaves no target); drained later it leaves the
+    dimension's rows unchanged. Neither leaves a staging sibling."""
+    from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spark.streaming.scd_stream import (
+        scd_stream_upsert,
+    )
+
+    schema = _store_schema()
+    staging, dim = str(tmp_path / "staging"), str(tmp_path / "dim")
+
+    def drain(rows):
+        spark.createDataFrame(rows, schema).write.mode("append").parquet(staging)
+        scd_stream_upsert(spark, staging, dim, str(tmp_path / "ckpt"), "store", "obs_date", ["city"], schema=schema)
+        assert not any(p.name.startswith("dim.") for p in tmp_path.iterdir())
+
+    drain([])
+    assert not os.path.exists(dim)
+
+    drain([(1, "ames", _d(2024, 1, 1)), (1, "boone", _d(2024, 2, 1)), (2, "adel", _d(2024, 1, 1))])
+    got = _scd_rows(spark, dim)
+    assert len(got) == 3
+    drain([])
     assert _scd_rows(spark, dim) == got
 
 
