@@ -363,11 +363,9 @@ def _is_scan_shaped(df: DataFrame) -> bool:
     """True iff the optimized logical plan contains ONLY
     projection/filter nodes over a relation — no joins, aggregates,
     windows, unions, or repartitions anywhere in the lineage. Checked
-    off the optimized plan's tree (analysis only, never runs a job)."""
-    try:
-        tree = df._jdf.queryExecution().optimizedPlan().treeString()
-    except Exception:
-        return False
+    off the optimized plan's tree (analysis only, never runs a job).
+    An error inspecting the plan raises: it is not an answer."""
+    tree = df._jdf.queryExecution().optimizedPlan().treeString()
     for line in tree.splitlines():
         name = line.lstrip(" +:-!*'")
         if not name:

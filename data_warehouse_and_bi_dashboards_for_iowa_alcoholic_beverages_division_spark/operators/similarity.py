@@ -21,12 +21,12 @@ import math
 import re
 
 import pyspark.sql.functions as F
-from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql.types import StructField, StructType
 
 from ..functions.rounding import floor_round6
-from ..sources.commit import _fs_checked, _hadoop_fs, _sidecar_is_empty_dir
+from ..sources import commit
+from ..sources.commit import _fs_checked, _fs_read_text, _fs_write_text_atomic, _hadoop_fs
 from .dedup import _spread_narrow_scan
 
 
@@ -1400,250 +1400,34 @@ def _write_driver_rows(spark, rows, schema: str, path: str, mode: str = "overwri
     ).write.mode(mode).parquet(path)
 
 
-def _read_optional_sidecar(
-    spark, sidecar_path: str, schema: str | None = None
-) -> DataFrame | None:
-    """Read a sidecar table that legitimately may not exist yet
-    (``_batches``: no tokened append has ever happened; ``_tombstones``:
-    no delete has). ONLY the two never-written states map to None — the
-    path is absent, or it is a directory holding no committed data file
-    (a crash between mkdir and the first committed parquet; without
-    this case an aborted first write would raise
-    UNABLE_TO_INFER_SCHEMA forever). Every OTHER failure RAISES —
-    permissions, transient FS errors, a corrupt file alongside
-    committed ones: treating an unreadable sidecar as "never written"
-    would bypass a recorded batch token (silent re-append) or resurrect
-    deleted rows in query results.
-
-    The never-written common case is probed through the Hadoop FS API
-    FIRST (one ``fs.exists`` round-trip, no exception machinery): a
-    raised-then-caught PATH_NOT_FOUND from ``DataFrameReader`` gets its
-    stack trace printed to stderr by py4j's JVM-side logger before the
-    Python except clause ever runs, so every bench/driver log tail
-    carried a scary-looking trace for a handled condition (r13 verdict
-    wrong-item #3). The PATH_NOT_FOUND except branch stays as the
-    backstop for the probe/read race (sidecar deleted between the two
-    calls).
-
-    ``schema``: pass the sidecar's static schema when the caller knows
-    it (``_batches``) — skips the schema-inference footer job per open
-    (the r15 profile's per-read cost). The ``_tombstones`` callers keep
-    inference: that sidecar's id column follows the caller's DataFrame.
-    An explicit schema also cannot hit UNABLE_TO_INFER_SCHEMA on the
-    crash-emptied-dir state — the read just returns an empty frame,
-    which is the same "never written" answer."""
-    fs, hpath = _hadoop_fs(spark, sidecar_path)
-    if not fs.exists(hpath):
-        return None
-    try:
-        reader = spark.read.schema(schema) if schema else spark.read
-        return reader.parquet(sidecar_path)
-    except AnalysisException as e:
-        cond = e.getCondition() if hasattr(e, "getCondition") else None
-        msg = str(e)
-        if cond == "PATH_NOT_FOUND" or (cond is None and "PATH_NOT_FOUND" in msg):
-            return None
-        if (
-            cond == "UNABLE_TO_INFER_SCHEMA" or "UNABLE_TO_INFER_SCHEMA" in msg
-        ) and _sidecar_is_empty_dir(spark, sidecar_path):
-            return None
-        raise
-
-
 def _count_batch_token(spark, sidecar_path: str, token: str) -> int:
     """Probe the ``_batches`` sidecar for ``token``; 0 iff no tokened
-    append has ever committed. The existence/error discipline lives in
-    :func:`_read_optional_sidecar` (one implementation for both
-    sidecars, so a new Spark error condition is handled once)."""
-    sidecar = _read_optional_sidecar(spark, sidecar_path, schema=_SIDECAR_BATCHES_SCHEMA)
+    append has ever committed. The existence/error discipline is
+    ``sources.commit.read_optional``'s: only an absent sidecar means
+    "not seen", an unreadable one raises. The static schema skips the
+    footer-inference job per open."""
+    sidecar = commit.read_optional(spark, sidecar_path, schema=_SIDECAR_BATCHES_SCHEMA)
     if sidecar is None:
         return 0
     return sidecar.where(F.col("token") == F.lit(token)).limit(1).count()
 
 
-# Staging directory for the atomic cell-partition swap. Dot-prefixed,
-# so every parquet reader (Spark's and DuckDB's path filters skip
-# ".../_..." and ".../...."-prefixed entries) ignores it while a
-# maintenance op is in flight.
-_MAINT_TMP = ".maint-tmp"
+def _rewrite_cells(spark, path: str, rows: DataFrame, cells) -> None:
+    """Replace the cell partitions ``cells`` of a persisted index with
+    ``rows`` (which carry the ``cell`` column) in one
+    ``sources.commit.write``: ``rows`` are staged by cell in the
+    index's hidden ``.maint-tmp``, and the intent retires every live
+    file of ``cells``. A cell of ``cells`` that ``rows`` leave empty
+    loses its directory; a cell only ``rows`` hold is created. The
+    caller materializes ``rows`` (localCheckpoint), so its lineage does
+    not read the files the commit retires.
 
-
-def _fs_write_text_atomic(spark, path: str, text: str) -> None:
-    """Write a small text file through the Hadoop FS API with a
-    tmp-then-rename commit: the file at ``path`` either does not exist
-    or is COMPLETE — readers never observe a half-written payload.
-    (``fs.rename`` of a file is atomic on real filesystems; that
-    atomicity is exactly what the swap-intent commit point below
-    needs.)"""
-    fs, hpath = _hadoop_fs(spark, path)
-    tmp = path + ".tmp"
-    _, tmp_h = _hadoop_fs(spark, tmp)
-    out = fs.create(tmp_h, True)
-    try:
-        out.write(bytearray(text.encode("utf-8")))
-    finally:
-        out.close()
-    if fs.exists(hpath):
-        _fs_checked(fs.delete(hpath, False), "delete", path)
-    _fs_checked(fs.rename(tmp_h, hpath), "rename", tmp, path)
-
-
-def _fs_read_text(spark, path: str) -> str:
-    fs, hpath = _hadoop_fs(spark, path)
-    stream = fs.open(hpath)
-    try:
-        return spark._jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
-    finally:
-        stream.close()
-
-
-def _finish_cell_swap(spark, path: str) -> dict:
-    """Roll a COMMITTED staging directory forward: every ``cell=*``
-    directory under ``<path>/.maint-tmp`` replaces its live twin
-    (delete live, rename staged in — two metadata ops per cell), the
-    intent manifest's ``removed`` cells' live directories are dropped,
-    and the staging directory is deleted last. Every step is
-    idempotent against re-execution from any crash point: a staged
-    cell disappears from tmp the moment its rename lands, deletes
-    no-op on missing paths, so re-running converges on the identical
-    end state (the one-way-convergence argument the sidecar orders
-    already use). Only called when ``_intent.json`` exists — i.e. the
-    staging write fully committed."""
-    fs, _ = _hadoop_fs(spark, path)
-    tmp = f"{path}/{_MAINT_TMP}"
-    _, tmp_h = _hadoop_fs(spark, tmp)
-    intent = json.loads(_fs_read_text(spark, tmp + "/_intent.json"))
-    swapped = []
-    # every delete/rename checks its boolean (_fs_checked): a false
-    # return mid-swap leaves the staged copy in tmp — after a failed
-    # live-delete the staged dir is the cell's ONLY surviving copy,
-    # and purging tmp regardless would be silent permanent loss
-    for st in fs.listStatus(tmp_h):
-        name = st.getPath().getName()
-        if not (st.isDirectory() and name.startswith("cell=")):
-            continue
-        _, live_h = _hadoop_fs(spark, f"{path}/{name}")
-        if fs.exists(live_h):
-            _fs_checked(fs.delete(live_h, True), "delete", f"{path}/{name}")
-        _fs_checked(
-            fs.rename(st.getPath(), live_h), "rename", f"{tmp}/{name}", f"{path}/{name}"
-        )
-        swapped.append(int(name.split("=", 1)[1]))
-    for c in intent.get("removed", []):
-        _, dead_h = _hadoop_fs(spark, f"{path}/cell={int(c)}")
-        if fs.exists(dead_h):
-            _fs_checked(fs.delete(dead_h, True), "delete", f"{path}/cell={int(c)}")
-    _fs_checked(fs.delete(tmp_h, True), "delete", tmp)
-    return {"cells_swapped": sorted(swapped), "cells_removed": intent.get("removed", [])}
-
-
-def recover_ivf_index(spark, path: str) -> dict:
-    """Converge a (possibly crashed) maintenance swap — the recovery
-    half of the atomic cell-replacement protocol that CLOSES the
-    dynamic-partition-overwrite crash window the r13/r14 rebalance
-    and compaction docstrings carried as an open caveat. The protocol
-    (:func:`_replace_cell_partitions`) makes ``<path>/.maint-tmp``
-    plus its ``_intent.json`` the single commit point, so recovery is
-    a pure state-machine read:
-
-    - no staging directory → nothing was in flight → ``none``;
-    - staging directory WITHOUT ``_intent.json`` → the crash hit
-      during the staging write, before commit; the live index was
-      never touched → ``rolled_back`` (staging dropped);
-    - staging directory WITH ``_intent.json`` → the staged survivors
-      are complete and the swap was committed; the crash hit during
-      the per-cell renames → ``rolled_forward``
-      (:func:`_finish_cell_swap` finishes the remaining renames —
-      already-swapped cells left tmp atomically, so re-execution
-      converges).
-
-    Every mutating entry point (append / update / compact / rebalance)
-    calls this first, so an orchestrator retry of a killed maintenance
-    job self-heals before reading the index. The read-only paths
-    (query/audit) deliberately do NOT mutate: after a crash and before
-    the next maintenance op, a query can miss rows of at most the
-    cells whose rename had not landed — run this (or any maintenance
-    op) once to converge. Layout-agnostic: the protocol never looks
-    inside a ``cell=*`` directory, so it serves both quantizers.
-
-    SINGLE-WRITER CONTRACT (load-bearing for the rolled-back branch,
-    a code-review r15 finding): ALL mutating operations on one index —
-    appends and updates included, not just the obviously-"maintenance"
-    compact/rebalance — must be serialized by the caller, the same
-    contract each op's own docstring states for its concurrent twins.
-    Under that contract, any staging directory found at an entry point
-    belongs to a CRASHED run, so rolling an uncommitted stage back is
-    safe. Without it, an append racing a live compaction could roll
-    back the compaction's completed-but-uncommitted stage here; the
-    compaction would then commit an EMPTY swap and clear its
-    tombstones anyway — physically-present rows resurrected with no
-    error anywhere. Run maintenance under one scheduler slot per
-    index."""
-    tmp = f"{path}/{_MAINT_TMP}"
-    fs, tmp_h = _hadoop_fs(spark, tmp)
-    if not fs.exists(tmp_h):
-        return {"action": "none"}
-    _, intent_h = _hadoop_fs(spark, tmp + "/_intent.json")
-    if not fs.exists(intent_h):
-        # checked: an ignored false return would report rolled_back
-        # with the stage still present, and the next maintenance op
-        # would refuse it as "in flight"
-        _fs_checked(fs.delete(tmp_h, True), "delete", tmp)
-        return {"action": "rolled_back"}
-    return {"action": "rolled_forward", **_finish_cell_swap(spark, path)}
-
-
-def _replace_cell_partitions(
-    spark, path: str, survivors: DataFrame, removed_cells: list[int]
-) -> None:
-    """Atomically-enough replace cell partitions of a persisted index:
-    the closed form of what dynamic partition overwrite did here
-    through r14, whose job commit could tear (old files deleted, new
-    files not yet moved — rows lost with no self-healing re-run).
-
-    Protocol: (1) write ``survivors`` (must carry the ``cell`` column;
-    caller must have materialized it — localCheckpoint — so its
-    lineage does not read the files step 3 replaces) partitioned by
-    cell into ``<path>/.maint-tmp`` — invisible to readers, and a
-    crash here leaves the live index byte-untouched; (2) commit by
-    writing ``_intent.json`` (tmp-then-rename, atomic) carrying the
-    ``removed_cells`` list; (3) roll forward: per staged cell, delete
-    the live directory and RENAME the staged one in — the window per
-    cell is two metadata operations, not a job-wide file shuffle — then
-    drop removed cells' directories and the staging dir. A crash at
-    any point converges under :func:`recover_ivf_index`: before (2)
-    the swap rolls back, after (2) it rolls forward. (On object stores
-    without atomic rename the per-cell window widens to a copy — use a
-    transactional table format there; on HDFS/local FS rename is a
-    metadata op and the protocol holds as stated.)
-
-    Cold cells are never listed, staged, or touched — the
-    partition-pruning contract of compaction/rebalance is preserved
-    exactly, at the cost of one extra write+move of the REWRITTEN
-    cells' bytes (the price of crash atomicity; the r14 study's
-    batching guidance bounds how often it is paid)."""
-    tmp = f"{path}/{_MAINT_TMP}"
-    fs, tmp_h = _hadoop_fs(spark, tmp)
-    if fs.exists(tmp_h):
-        # entry points recover first, so a leftover staging dir here
-        # means two maintenance ops are racing — refuse, don't guess
-        raise RuntimeError(
-            f"maintenance staging dir already exists at {tmp}: another "
-            "maintenance operation is in flight (or crashed without "
-            "recover_ivf_index running) — serialize maintenance ops"
-        )
-    (
-        survivors.repartition("cell")  # ~one file per rewritten cell
-        .write.mode("overwrite")
-        .partitionBy("cell")
-        .parquet(tmp)
-    )
-    _fs_write_text_atomic(
-        spark,
-        tmp + "/_intent.json",
-        json.dumps({"removed": sorted(int(c) for c in removed_cells)}),
-    )
-    _finish_cell_swap(spark, path)
+    Cold cells are never listed, staged or touched — the
+    partition-pruning contract of compaction/rebalance holds exactly,
+    at the cost of one extra move of the rewritten cells' files."""
+    retire = commit.live_files(spark, path, [f"cell={int(c)}" for c in cells])
+    # ~one file per rewritten cell
+    commit.write(spark, path, rows.repartition("cell"), retire=retire, partition_by=["cell"])
 
 
 def append_to_ivf_index(
@@ -1657,11 +1441,13 @@ def append_to_ivf_index(
     """Incremental index maintenance: assign a batch of NEW vectors to
     the EXISTING coarse quantizer (sidecar centroids, never retrained)
     and append their inverted-list rows. Existing cells' files are
-    untouched — ``partitionBy("cell")`` + append mode writes only the
-    new rows into their cells' directories. This is how a 100 TB IVF
-    index absorbs daily arrivals; periodic retraining (when the data
-    distribution drifts enough that cell occupancy skews — see the
-    audit in q125's family) is a separate, rarer full rebuild.
+    untouched — the append is a ``sources.commit.write`` that retires
+    nothing, so only the new rows' files move into their cells'
+    directories, and a crash mid-append publishes all of the batch or
+    none of it. This is how a 100 TB IVF index absorbs daily arrivals;
+    periodic retraining (when the data distribution drifts enough that
+    cell occupancy skews — see the audit in q125's family) is a
+    separate, rarer full rebuild.
 
     Serves both quantizers: the batch routes under whichever one the
     ``_centroids`` sidecar records (:func:`_read_quantizer`) — the
@@ -1712,12 +1498,12 @@ def append_to_ivf_index(
     (one writer per token) rather than racing two. The serialization
     requirement extends to EVERY mutating op on the index — an append
     racing a live compaction/rebalance can roll back its uncommitted
-    stage (see :func:`recover_ivf_index`'s single-writer contract)."""
+    stage (the single-writer contract of ``sources.commit``)."""
     spark = new_vectors.sparkSession
-    # heal any crashed compaction/rebalance swap first: appending into
-    # a cell whose staged replacement is still pending would be undone
-    # by the later roll-forward (one fs.exists when nothing is pending)
-    recover_ivf_index(spark, path)
+    # converge any crashed write first: the index is read below, and a
+    # stage left in place would make this append's staging write fail
+    # (one fs.exists when nothing is pending)
+    commit.recover(spark, path)
     if batch_token is not None:
         seen = _count_batch_token(spark, path + "_batches", batch_token)
         if seen:
@@ -1731,7 +1517,7 @@ def append_to_ivf_index(
     # must run compact_ivf_index between the two steps; this bounded
     # probe (broadcast semi-join against the tiny tombstone sidecar)
     # turns the silent loss into an instruction.
-    tombs = _read_optional_sidecar(spark, path + "_tombstones")
+    tombs = commit.read_optional(spark, path + "_tombstones")
     if tombs is not None:
         clash = (
             new_vectors.select(F.col(id_col).alias("neighbor_id"))
@@ -1763,7 +1549,7 @@ def append_to_ivf_index(
     # (the _write_index note): an append otherwise lands
     # tasks x touched-cells new files EVERY batch, compounding the
     # index's file count with each ingest window.
-    lists.repartition(F.col("cell")).write.mode("append").partitionBy("cell").parquet(path)
+    commit.write(spark, path, lists.repartition(F.col("cell")), partition_by=["cell"])
     if batch_token is not None:
         _write_driver_rows(
             spark, [(batch_token,)], _SIDECAR_BATCHES_SCHEMA, path + "_batches", mode="append"
@@ -1815,7 +1601,7 @@ def delete_from_ivf_index(
     serialize."""
     spark = ids.sparkSession
     batch = ids.select(F.col(id_col).alias("neighbor_id")).distinct()
-    existing = _read_optional_sidecar(spark, path + "_tombstones")
+    existing = commit.read_optional(spark, path + "_tombstones")
     if existing is not None:
         batch = batch.join(existing.select("neighbor_id"), on="neighbor_id", how="left_anti")
     # one file per delete batch: the sidecar is tiny by contract, and
@@ -1848,24 +1634,21 @@ def compact_ivf_index(spark, path: str, only_ids: DataFrame | None = None) -> di
     are ignored. Default ``None`` = full compaction (all tombstones,
     sidecar cleared).
 
-    The partition rewrite goes through the atomic cell-swap protocol
-    (:func:`_replace_cell_partitions`): survivors stage under an
-    invisible ``.maint-tmp``, an intent manifest commits the swap, and
-    each cell replaces by delete+rename — a crash at ANY point
-    converges under :func:`recover_ivf_index` (which this function
-    runs first, so a retried job self-heals before reading). This
-    closes the dynamic-overwrite job-commit window the r13/r14
-    docstrings carried as an open caveat. The tombstone sidecar is
-    still written LAST: a crash after the swap but before the sidecar
-    write leaves tombstones that match nothing — queries stay correct,
-    and a re-run finds zero affected cells and just rewrites the
-    sidecar (one-way convergence).
+    The partition rewrite is one commit (:func:`_rewrite_cells`):
+    survivors stage under the invisible ``.maint-tmp``, and an intent
+    retires the affected cells' files — a crash at ANY point converges
+    under ``sources.commit.recover`` (which this function runs first,
+    so a retried job self-heals before reading). The tombstone sidecar
+    is still written LAST: a crash after the commit but before the
+    sidecar write leaves tombstones that match nothing — queries stay
+    correct, and a re-run finds zero affected cells and just rewrites
+    the sidecar (one-way convergence).
 
     Returns a stats dict; no-op (nothing written, tombstones kept —
     there are none to keep) when the sidecar is absent or empty."""
-    recover_ivf_index(spark, path)
+    commit.recover(spark, path)
     zero = {"tombstones": 0, "cells_rewritten": [], "cells_removed": [], "rows_removed": 0}
-    tombs_all = _read_optional_sidecar(spark, path + "_tombstones")
+    tombs_all = commit.read_optional(spark, path + "_tombstones")
     if tombs_all is None:
         return zero
     tombs_all = tombs_all.select("neighbor_id").distinct().localCheckpoint(eager=True)
@@ -1936,10 +1719,9 @@ def compact_ivf_index(spark, path: str, only_ids: DataFrame | None = None) -> di
                     "unreadable — rebuild the index (or drop its "
                     "directory) instead of compacting a total delete"
                 )
-        # the atomic swap: survivors staged invisibly, then per-cell
-        # delete+rename; emptied cells ride the intent manifest's
-        # removed list (see _replace_cell_partitions)
-        _replace_cell_partitions(spark, path, keep, removed)
+        # one commit: survivors staged invisibly, every affected cell's
+        # files retired, emptied cells' directories dropped
+        _rewrite_cells(spark, path, keep, affected)
         stats.update(cells_rewritten=rewritten, cells_removed=removed)
     # rewrite the sidecar LAST (see docstring), always carrying its OWN
     # schema — a hardcoded BIGINT DDL would leave mixed-schema parquet
@@ -2050,7 +1832,7 @@ def audit_ivf_tombstones(spark, path: str) -> DataFrame:
     never appear — a compaction cannot touch them either, so the
     audit↔compact contract is unaffected."""
     idx = _read_index(spark, path).select("neighbor_id", "cell")
-    tombs = _read_optional_sidecar(spark, path + "_tombstones")
+    tombs = commit.read_optional(spark, path + "_tombstones")
     if tombs is None or not tombs.head(1):
         per_cell = idx.groupBy("cell").agg(
             F.count(F.lit(1)).alias("n"), F.lit(0).cast("long").alias("nt")
@@ -2113,14 +1895,15 @@ def update_in_ivf_index(
     after 1 → ids hidden, re-run converges; after 2 → ids absent
     entirely (the documented mid-update window — queries miss them
     until the re-run appends), re-run re-tombstones, finds no rows,
-    clears the ids again, appends; mid-3 → re-run removes the partial
-    batch (steps 1-2) and re-appends it whole. ``batch_token`` names
+    clears the ids again, appends; mid-3 → the append is one commit, so
+    recovery publishes all of the batch or none of it, and a re-run
+    removes it (steps 1-2) and re-appends it whole. ``batch_token`` names
     the whole update: a token already recorded makes the re-run a
     no-op BEFORE step 1 (the token is written by step 3 LAST, so a
     token is only ever visible for a fully-applied update).
 
     Single-writer contract (same as every mutating op on the index —
-    see :func:`recover_ivf_index`): serialize updates against appends,
+    see ``sources.commit``): serialize updates against appends,
     deletes, compactions, and rebalances.
 
     Serves both quantizers: step 3 is :func:`append_to_ivf_index`,
@@ -2129,9 +1912,9 @@ def update_in_ivf_index(
     Returns step 2's stats dict (the measured cost of the update's
     rewrite)."""
     spark = new_vectors.sparkSession
-    # heal any crashed maintenance swap before the pre-check reads the
-    # index (a torn cell could otherwise make the wipe probe misjudge)
-    recover_ivf_index(spark, path)
+    # converge any crashed write before the pre-check reads the index
+    # (a torn cell could otherwise make the wipe probe misjudge)
+    commit.recover(spark, path)
     if batch_token is not None and _count_batch_token(spark, path + "_batches", batch_token):
         return {
             "tombstones": 0,
@@ -2232,7 +2015,7 @@ def query_ivf_index(
     # extra shuffle + AQE job for a set the driver builds in microseconds
     probed_cells = sorted({r["cell"] for r in q.select("cell").collect()})
     c = _read_index(spark, path).where(F.col("cell").isin(probed_cells))
-    tombs = _read_optional_sidecar(spark, path + "_tombstones")
+    tombs = commit.read_optional(spark, path + "_tombstones")
     if tombs is not None:
         # logical deletes: exclude BEFORE scoring/ranking, so a deleted
         # neighbor frees its rank for the next-best candidate. The
@@ -2367,7 +2150,7 @@ def rebalance_ivf_index(spark, path: str) -> dict:
 
     - occupancy is one column-pruned pass collecting n_cells rows;
     - ONLY hot cells' partitions are read (partition-pruned scan) and
-      ONLY hot + new partitions are rewritten (the atomic cell swap)
+      ONLY hot + new partitions are rewritten (one commit)
       — cold cells' inverted-list files are never touched;
     - seeds are <= 2 x n_cells broadcast rows; the member table is
       localCheckpointed once and feeds the split, the centroid means,
@@ -2385,18 +2168,15 @@ def rebalance_ivf_index(spark, path: str) -> dict:
     leaves centroids that probe a not-yet-rewritten partition —
     queries stay correct on the old rows, and a re-run recomputes the
     identical split from the unchanged data and converges. The data
-    rewrite itself goes through the atomic cell-swap protocol
-    (:func:`_replace_cell_partitions`): survivors stage under an
-    invisible ``.maint-tmp``, an intent manifest commits, and each hot
-    cell replaces by delete+rename — so the dynamic-overwrite
-    job-commit tear this docstring carried as an open caveat through
-    r14 is CLOSED. What a crashed run does next: re-run this function
-    (or any maintenance op, or :func:`recover_ivf_index` directly) —
-    recovery rolls an uncommitted stage back (live index untouched) or
-    a committed one forward (remaining renames finish), then the
-    rebalance recomputes from the converged state.
+    rewrite itself is one commit (:func:`_rewrite_cells`): the hot and
+    new cells stage under the invisible ``.maint-tmp``, and an intent
+    retires the hot cells' files. What a crashed run does next: re-run
+    this function (or any maintenance op, or ``sources.commit.recover``
+    directly) — recovery rolls an uncommitted stage back (live index
+    untouched) or a committed one forward (remaining moves finish),
+    then the rebalance recomputes from the converged state.
     """
-    recover_ivf_index(spark, path)
+    commit.recover(spark, path)
     idx = _read_index(spark, path)
     occ = idx.groupBy("cell").agg(F.count(F.lit(1)).alias("n")).collect()
     counts = {int(r["cell"]): int(r["n"]) for r in occ}
@@ -2430,7 +2210,7 @@ def rebalance_ivf_index(spark, path: str) -> dict:
         )
         # materialized once: feeds the seed lookups, the split, the
         # centroid means, and the rewrite — and breaks lineage to the
-        # files the cell swap below will replace
+        # files the commit below will retire
         .localCheckpoint(eager=True)
     )
     halves = split_hot_cells(
@@ -2500,18 +2280,15 @@ def rebalance_ivf_index(spark, path: str) -> dict:
         _SIDECAR_CENTROIDS_SCHEMA,
         path + "_centroids",
     )
-    # hot + new partitions replace through the atomic cell swap
-    # (stage under .maint-tmp, intent-commit, per-cell delete+rename) —
-    # the dynamic-overwrite job-commit tear this function's docstring
-    # carried as an open caveat through r14 is closed: a crash at any
-    # point converges under recover_ivf_index (run first above)
-    _replace_cell_partitions(
+    # hot + new partitions replace in one commit; a crash at any point
+    # converges under sources.commit.recover (run first above)
+    _rewrite_cells(
         spark,
         path,
         relabeled.select(
             F.col("id").alias("neighbor_id"), F.col("v").alias("c_vec"), "cn", "cell"
         ),
-        removed_cells=[],
+        hot,
     )
 
     after = {

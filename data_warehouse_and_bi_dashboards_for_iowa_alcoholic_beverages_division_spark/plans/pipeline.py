@@ -12,8 +12,11 @@ Write layout is chosen for 100 TB, not for the local testdata:
   each table in place, one after another, so a crash mid-build can
   leave tables of two builds side by side. The streaming SCD2 merge
   (`streaming.scd_stream`, `operators.scd.merge_scd`) — the distributed
-  replacement for the reference's driver-side row UPDATEs — writes the
-  merged dimension to a staging sibling and swaps it in by rename;
+  replacement for the reference's driver-side row UPDATEs — and the
+  incremental fact append instead commit through
+  ``sources.commit.write``: staged in the table's hidden
+  ``.maint-tmp``, published by an intent, and converged after a crash
+  by ``sources.commit.recover``;
 - every dimension carries the −1/'unknown' member row the reference
   inserts via SQL (``insert_unknown_into_*.sql``), so late/NULL-keyed
   facts always join.

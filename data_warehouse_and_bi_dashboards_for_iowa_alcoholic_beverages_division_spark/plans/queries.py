@@ -12536,10 +12536,11 @@ def _updated_vectors(emb: DataFrame) -> DataFrame:
     "sample, so the quantizer is untouched - the frozen-quantizer "
     "append contract), and the query runs over the updated index: old "
     "rows physically gone, new vectors routed to their new best "
-    "cells, no tombstone left behind. The rewrite rides the atomic "
-    "cell-swap protocol (stage under an invisible .maint-tmp, "
-    "intent-manifest commit, per-cell delete+rename - the r14 "
-    "dynamic-overwrite crash window, closed and pytest-demonstrated). "
+    "cells, no tombstone left behind. The rewrite is one commit of the "
+    "package-wide protocol (sources.commit: stage under an invisible "
+    ".maint-tmp, an atomic intent retiring the rewritten cells' files, "
+    "roll-forward by delete and rename; sources.commit.recover "
+    "converges a crash from any point, pytest-demonstrated). "
     "Oracle = q67's unrolled train over the RAW train rows (unchanged "
     "by construction) with the v corpus swapped for the updated one, "
     "so build -> update -> query is value-checked end-to-end across "
@@ -12571,7 +12572,7 @@ def q228(spark: SparkSession, sf_dir: str) -> DataFrame:
     "O(sqrt n_cells) per row. The update set (ids = 5 mod 16, vectors "
     "reversed) is disjoint from the 1/16 train sample, so both "
     "quantizer levels stay frozen; old rows leave exactly the cells "
-    "that held them via the atomic cell swap, stored (c_vec, cn) of "
+    "that held them in one sources.commit write, stored (c_vec, cn) of "
     "surviving rows carried bit-unchanged, and the appended rows "
     "recompute their norm exactly as build does. Oracle = q212's "
     "verbatim two-level unroll with the v corpus swapped for the "

@@ -1,28 +1,66 @@
-"""Filesystem commit primitives shared by every table write that must
-not leave a half-replaced table behind.
+"""One commit protocol for every table write that must not leave a
+torn table behind: the SCD2 dimension rewrite (``streaming.scd_stream``),
+the fact append (``streaming.incremental.load_or_update``), small-file
+compaction (``sources.maintenance.compact_table``) and IVF cell
+maintenance (``operators.similarity``). All of them call :func:`write`:
 
-Everything goes through the Hadoop FS API, so the same code is right
-on any filesystem Spark writes to. Hadoop's ``rename``/``delete``
-report failure by returning ``false`` rather than raising; every
-mutation here checks that boolean (:func:`_fs_checked`).
+1. the new files are written into the hidden stage ``<path>/.maint-tmp``.
+   Spark's file index, :func:`_hidden` and the listing watermark skip
+   it, so no reader sees a staged file;
+2. the write commits by atomically writing ``_intent.json`` into the
+   stage. The intent names the live data files the write retires;
+3. roll-forward deletes each retired file (a missing one is fine),
+   moves each staged data file to the same relative path in the table,
+   drops any directory the removals left without data, and drops the
+   stage last.
 
-Whole-table replacement (the SCD2 dimension rewrite, compaction) is a
-staged write plus a two-rename swap:
+Spark names each write job's files with a per-job UUID, so a retired
+file and a staged file never share a name, and re-running step 3 never
+deletes a file an earlier run already moved in. The same three steps
+therefore serve every writer with no mode flag: a whole-table replace
+retires every live file, an IVF cell rewrite retires the files of its
+cells, and an append retires nothing. A write that adds no row and
+retires nothing has nothing to publish: its stage rolls back.
 
-1. the new table is written to ``<path>._staging``;
-2. ``<path>`` is renamed to ``<path>._backup``;
-3. ``<path>._staging`` is renamed to ``<path>``;
-4. ``<path>._backup`` is deleted.
+:func:`recover` converges any crash point:
 
-:func:`recover_swap` converges any crash point: before step 2 the live
-table is intact and the staging copy is dropped; between steps 2 and 3
-the backup is restored; after step 3 the new table is live and the
-backup is dropped. A writer calls it before reading the live table, so
-"the table is missing" is never concluded from a crash between the
-renames.
+- no stage: nothing to do;
+- a stage without an intent: roll back. The stage is dropped, and so is
+  a root that held nothing before the write;
+- a stage with an intent: roll forward.
+
+Every writer calls it before it reads its table. Readers do not: after
+a crash in step 3 and before the next write (or ``recover`` call), a
+reader can see a roll-forward half done.
+
+**Single-writer contract.** All writes to one table are serialized by
+the caller: one scheduler slot per table. Under it, a stage found by
+``recover`` belongs to a crashed run, so rolling an uncommitted stage
+back is safe. Without it, one writer could roll back another's
+complete-but-uncommitted stage.
+
+Everything goes through the Hadoop FS API, so the same code is right on
+any filesystem Spark writes to. Hadoop's ``rename``/``delete`` report
+failure by returning ``false`` rather than raising; every mutation here
+checks that boolean (:func:`_fs_checked`). A move is a rename: on an
+object store without atomic rename it becomes a copy, and a
+transactional table format replaces this module there.
 """
 
 from __future__ import annotations
+
+import json
+import posixpath
+from collections.abc import Iterable, Sequence
+
+from pyspark.errors import AnalysisException
+from pyspark.sql import DataFrame
+from pyspark.sql.types import StructType
+
+from .metrics import observed_quality, quality_report
+
+STAGE = ".maint-tmp"
+INTENT = "_intent.json"
 
 
 def _hadoop_fs(spark, path: str):
@@ -35,8 +73,8 @@ def _hadoop_fs(spark, path: str):
 
 def _hidden(name: str) -> bool:
     """Names Spark's file index skips: ``_SUCCESS``, ``_temporary``,
-    ``.crc`` and other dot files, in-flight copies. ``_col=v`` is a
-    partition directory, not hidden."""
+    ``.crc`` and other dot files (the stage included), in-flight
+    copies. ``_col=v`` is a partition directory, not hidden."""
     return (name.startswith("_") and "=" not in name) or name.startswith(".") or name.endswith("._COPYING_")
 
 
@@ -54,27 +92,47 @@ def _holds_data(fs, hpath) -> bool | None:
     return found
 
 
-def _sidecar_is_empty_dir(spark, sidecar_path: str) -> bool:
-    """True iff ``sidecar_path`` is missing or holds no non-empty data
-    file (only names Spark skips, or nothing) — the state a crash
-    between directory creation and the first committed parquet file
-    leaves behind. A visible SUBDIRECTORY may hold committed data (e.g.
-    a partitioned sidecar layout), so it never reads as "empty", or the
-    token gate would be silently bypassed: the caller re-raises its
-    original error instead."""
-    fs, hpath = _hadoop_fs(spark, sidecar_path)
+def absent(spark, path: str) -> bool:
+    """True iff ``path`` is missing or holds no data file: only names
+    Spark skips, or nothing. That is the state a crash before a first
+    write's first committed file leaves. A visible subdirectory may
+    hold committed data (a partitioned layout), so it never reads as
+    absent."""
+    fs, hpath = _hadoop_fs(spark, path)
     return not fs.exists(hpath) or _holds_data(fs, hpath) is False
+
+
+def read_optional(spark, path: str, schema: StructType | str | None = None) -> DataFrame | None:
+    """The parquet table at ``path``, or None when it is :func:`absent`
+    — the one rule for "absent or unreadable". Absence is probed
+    through the FS API first, so the common case raises nothing and
+    py4j logs no stack trace; ``PATH_NOT_FOUND`` stays the backstop
+    for a table dropped between probe and read. Every other error
+    raises: reading an unreadable table as absent would rebuild a
+    dimension from one batch, append a whole source again, bypass a
+    recorded batch token or resurrect deleted rows.
+
+    ``schema`` pins the read (no footer-inference job); an unreadable
+    or mistyped file then raises when the result is first used."""
+    if absent(spark, path):
+        return None
+    try:
+        reader = spark.read.schema(schema) if schema else spark.read
+        return reader.parquet(path)
+    except AnalysisException as e:
+        if e.getCondition() != "PATH_NOT_FOUND":
+            raise
+        return None
 
 
 def _fs_checked(ok: bool, op: str, src: str, dst: str | None = None) -> None:
     """Hadoop ``FileSystem.delete``/``rename`` signal failure by
     returning ``false``, not by raising (RawLocalFileSystem, HDFS) —
-    a swap step that ignores the boolean can purge the staged copy
-    after a failed rename and turn a recoverable state into silent
-    loss. Every swap-protocol FS mutation goes through this check and
-    RAISES on false, leaving the staged data in place for the
-    operation's recovery to converge once the cause (permissions,
-    open handles) is fixed."""
+    a step that ignores the boolean can drop the stage after a failed
+    move and turn a recoverable state into silent loss. Every protocol
+    FS mutation goes through this check and RAISES on false, leaving
+    the staged data in place for :func:`recover` to converge once the
+    cause (permissions, open handles) is fixed."""
     if not ok:
         target = f"{src} -> {dst}" if dst else src
         raise RuntimeError(
@@ -84,46 +142,162 @@ def _fs_checked(ok: bool, op: str, src: str, dst: str | None = None) -> None:
         )
 
 
-def staging_path(path: str) -> str:
-    """Sibling directory a replacement of the table at ``path`` is
-    written to before :func:`swap_in` makes it live."""
-    return path.rstrip("/") + "._staging"
+def _fs_write_text_atomic(spark, path: str, text: str) -> None:
+    """Write a small text file with a tmp-then-rename commit: the file
+    at ``path`` either does not exist or is complete. (``fs.rename`` of
+    a file is atomic on real filesystems; the intent commit point
+    depends on exactly that.)"""
+    fs, hpath = _hadoop_fs(spark, path)
+    tmp_h = hpath.suffix(".tmp")
+    out = fs.create(tmp_h, True)
+    try:
+        out.write(bytearray(text.encode("utf-8")))
+    finally:
+        out.close()
+    if fs.exists(hpath):
+        _fs_checked(fs.delete(hpath, False), "delete", path)
+    _fs_checked(fs.rename(tmp_h, hpath), "rename", path + ".tmp", path)
 
 
-def _backup_path(path: str) -> str:
-    return path.rstrip("/") + "._backup"
+def _fs_read_text(spark, path: str) -> str:
+    fs, hpath = _hadoop_fs(spark, path)
+    stream = fs.open(hpath)
+    try:
+        return bytes(stream.readAllBytes()).decode("utf-8")
+    finally:
+        stream.close()
 
 
-def swap_in(spark, path: str) -> None:
-    """Make the fully written ``staging_path(path)`` the table at
-    ``path``: rename the live table aside, rename the staged one in,
-    delete the old one. Two metadata operations, no data copied."""
-    staged, backup = staging_path(path), _backup_path(path)
-    fs, live_h = _hadoop_fs(spark, path)
-    _, staged_h = _hadoop_fs(spark, staged)
-    _, backup_h = _hadoop_fs(spark, backup)
-    had_live = fs.exists(live_h)
-    if had_live:
-        _fs_checked(fs.rename(live_h, backup_h), "rename", path, backup)
-    _fs_checked(fs.rename(staged_h, live_h), "rename", staged, path)
-    if had_live:
-        _fs_checked(fs.delete(backup_h, True), "delete", backup)
+def _child(hpath, rel: str):
+    """The Hadoop path ``rel`` below ``hpath``: one gateway call, where
+    building a ``Path`` from a string costs a class lookup per package."""
+    return hpath.suffix("/" + rel)
 
 
-def recover_swap(spark, path: str) -> None:
-    """Converge whatever a crashed :func:`swap_in` (or the staged write
-    before it) left next to ``path``; a no-op after a clean run. Call
-    before reading the table at ``path``."""
-    staged, backup = staging_path(path), _backup_path(path)
-    fs, live_h = _hadoop_fs(spark, path)
-    _, staged_h = _hadoop_fs(spark, staged)
-    _, backup_h = _hadoop_fs(spark, backup)
-    if fs.exists(backup_h):
-        if fs.exists(live_h):
-            # crashed after the staged table went live: the old one is garbage
-            _fs_checked(fs.delete(backup_h, True), "delete", backup)
+def stage_path(path: str) -> str:
+    """The hidden directory a write to the table at ``path`` is staged in."""
+    return f"{path.rstrip('/')}/{STAGE}"
+
+
+def _data_files(fs, hpath, prefix: str = "") -> list[str]:
+    """Relative paths (under ``prefix``) of every data file below the
+    directory ``hpath``; names Spark skips are not descended into."""
+    out = []
+    for st in fs.listStatus(hpath):
+        name = st.getPath().getName()
+        if _hidden(name):
+            continue
+        if st.isDirectory():
+            out += _data_files(fs, st.getPath(), f"{prefix}{name}/")
         else:
-            # crashed between the renames: roll back to the old table
-            _fs_checked(fs.rename(backup_h, live_h), "rename", backup, path)
-    if fs.exists(staged_h):
-        _fs_checked(fs.delete(staged_h, True), "delete", staged)
+            out.append(prefix + name)
+    return out
+
+
+def live_files(spark, path: str, dirs: Sequence[str] = ("",)) -> list[str]:
+    """Relative paths of the live data files of the table at ``path``
+    under its subdirectories ``dirs`` (default: the whole table). A
+    missing table or subdirectory holds none."""
+    fs, root = _hadoop_fs(spark, path)
+    out = []
+    for d in dirs:
+        hpath = _child(root, d) if d else root
+        if fs.exists(hpath):
+            out += _data_files(fs, hpath, f"{d}/" if d else "")
+    return out
+
+
+def write(
+    spark,
+    path: str,
+    df: DataFrame,
+    retire: Iterable[str] = (),
+    partition_by: Sequence[str] = (),
+) -> int:
+    """Publish ``df`` into the table at ``path`` and retire the live
+    data files ``retire`` (relative paths, :func:`live_files`) in one
+    commit. Returns the rows written, observed on the staging write.
+
+    The caller has run :func:`recover` before reading the table, so no
+    stage exists; one that does (a concurrent writer, against the
+    single-writer contract) makes the staging write fail. The only
+    Spark job is that write: the commit is FS metadata calls."""
+    stage = stage_path(path)
+    df, obs = observed_quality(df)
+    writer = df.write.partitionBy(*partition_by) if partition_by else df.write
+    writer.parquet(stage)  # save mode "error": an existing stage raises
+    retire = sorted(retire)
+    n = quality_report(obs)["n_rows"]
+    fs, root = _hadoop_fs(spark, path)
+    if n == 0 and not retire:
+        _roll_back(fs, root)
+    else:
+        _write_intent(spark, stage, retire)
+        _roll_forward(fs, root, retire)
+    return n
+
+
+def _write_intent(spark, stage: str, retire: list[str]) -> None:
+    """The commit point: once this file exists the write rolls forward."""
+    _fs_write_text_atomic(spark, f"{stage}/{INTENT}", json.dumps({"retired": retire}))
+
+
+def _move(fs, src, dst) -> None:
+    if not fs.rename(src, dst):
+        _fs_checked(False, "rename", src.toString(), dst.toString())
+
+
+def _roll_forward(fs, root, retired: list[str]) -> dict:
+    """Finish the write committed in the stage of the table at ``root``
+    by an intent retiring ``retired``. Every step is idempotent, so a
+    re-run from any crash point converges: a retired file already
+    deleted is skipped, a staged file leaves the stage the moment its
+    move lands."""
+    stage_h = _child(root, STAGE)
+    for rel in retired:
+        hpath = _child(root, rel)
+        if not fs.delete(hpath, False) and fs.exists(hpath):
+            _fs_checked(False, "delete", hpath.toString())
+    moved = _data_files(fs, stage_h)
+    for d in sorted({posixpath.dirname(rel) for rel in moved} - {""}):
+        _fs_checked(fs.mkdirs(_child(root, d)), "mkdirs", d)
+    for rel in moved:
+        _move(fs, _child(stage_h, rel), _child(root, rel))
+    emptied = {d for rel in retired for d in _ancestors(rel)}
+    for d in sorted(emptied, key=lambda d: d.count("/"), reverse=True):
+        hpath = _child(root, d)
+        if fs.exists(hpath) and not _data_files(fs, hpath):
+            _fs_checked(fs.delete(hpath, True), "delete", hpath.toString())
+    _fs_checked(fs.delete(stage_h, True), "delete", stage_h.toString())
+    return {"moved": moved, "retired": retired}
+
+
+def _ancestors(rel: str) -> list[str]:
+    """The directories of the relative file path ``rel`` below the root."""
+    parts = rel.split("/")[:-1]
+    return ["/".join(parts[: i + 1]) for i in range(len(parts))]
+
+
+def _roll_back(fs, root) -> None:
+    """Drop an uncommitted stage, and the root with it when nothing
+    but the stage was there (an empty first write leaves no table)."""
+    stage_h = _child(root, STAGE)
+    _fs_checked(fs.delete(stage_h, True), "delete", stage_h.toString())
+    if _holds_data(fs, root) is False:
+        _fs_checked(fs.delete(root, True), "delete", root.toString())
+
+
+def recover(spark, path: str) -> dict:
+    """Converge whatever a crashed :func:`write` left in the table at
+    ``path``; ``{"action": "none"}`` after a clean run (one
+    ``fs.exists``). ``rolled_back`` or ``rolled_forward`` otherwise, the
+    latter with the relative paths it ``moved`` in and ``retired``."""
+    fs, root = _hadoop_fs(spark, path)
+    stage_h = _child(root, STAGE)
+    if not fs.exists(stage_h):
+        return {"action": "none"}
+    if not fs.exists(_child(stage_h, INTENT)):
+        _roll_back(fs, root)
+        return {"action": "rolled_back"}
+    retired = json.loads(_fs_read_text(spark, f"{stage_path(path)}/{INTENT}"))["retired"]
+    return {"action": "rolled_forward", **_roll_forward(fs, root, retired)}

@@ -17,7 +17,7 @@ import os
 
 from pyspark.sql import SparkSession
 
-from .commit import recover_swap, staging_path, swap_in
+from . import commit
 
 
 def parquet_file_count(path: str) -> int:
@@ -34,20 +34,20 @@ def compact_table(
     files (per partition directory if ``partition_by``). Returns the
     new file count.
 
-    Write-new-then-swap, never overwrite-in-place: Spark reads lazily,
-    so overwriting the directory being read would destroy the input
-    mid-job. The new files go to a staging sibling that
-    ``sources.commit.swap_in`` renames in; a crash at any point
-    converges on the next call (``recover_swap``). On a real deployment
-    a table format with a transactional commit (Delta/Iceberg) replaces
-    the rename, and everything upstream of it is unchanged.
+    Write-new-then-commit, never overwrite-in-place: Spark reads
+    lazily, so overwriting the directory being read would destroy the
+    input mid-job. The new files are one ``sources.commit.write``:
+    staged in the table's hidden ``.maint-tmp``, then committed by an
+    intent that retires every file the compaction read. A crash at any
+    point converges on the next call (``sources.commit.recover``). On a
+    real deployment a table format with a transactional commit
+    (Delta/Iceberg) replaces the protocol, and everything upstream of
+    it is unchanged.
     """
-    recover_swap(spark, path)
+    commit.recover(spark, path)
+    retire = commit.live_files(spark, path)
     df = spark.read.parquet(path)
-    writer = df.coalesce(target_files).write.mode("overwrite")
-    if partition_by:
-        # coalesce bounds total tasks; per-partition file count follows
-        writer = df.repartition(target_files, *partition_by).write.mode("overwrite").partitionBy(*partition_by)
-    writer.parquet(staging_path(path))
-    swap_in(spark, path)
+    # coalesce bounds total tasks; per-partition file count follows
+    df = df.repartition(target_files, *partition_by) if partition_by else df.coalesce(target_files)
+    commit.write(spark, path, df, retire=retire, partition_by=partition_by or ())
     return parquet_file_count(path)

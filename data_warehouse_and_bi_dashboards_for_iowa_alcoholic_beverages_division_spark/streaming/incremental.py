@@ -13,6 +13,15 @@ directory that holds a data file: one Hadoop FS listing, no Spark job,
 however long the history. Any other target (a non-DATE ``date_col``,
 an entry the listing cannot interpret) is read and aggregated, which
 scans every file of the target.
+
+Crash contract: the delta is appended through ``sources.commit.write``.
+It is staged in the target's hidden ``.maint-tmp``, which the listing
+skips, and published by an intent that retires nothing. A crash before
+the intent leaves the target as it was; a crash after it is rolled
+forward by the ``sources.commit.recover`` each call runs before it
+reads the target. So a torn newest day never becomes the watermark,
+and the strict ``> watermark`` filter never skips rows of a day that
+was only partly loaded.
 """
 
 from __future__ import annotations
@@ -21,12 +30,11 @@ import datetime
 import re
 
 import pyspark.sql.functions as F
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import DateType
 
-from ..sources.commit import _fs_checked, _hadoop_fs, _hidden, _holds_data
-from ..sources.metrics import observed_quality, quality_report
+from ..sources import commit
+from ..sources.commit import _hadoop_fs, _hidden, _holds_data
 
 # the directory name Spark gives a NULL partition value
 _NULL_PARTITION = "__HIVE_DEFAULT_PARTITION__"
@@ -103,30 +111,15 @@ def load_or_update(
     with no new source rows appends nothing. The row count rides the
     append (``observe``); the delta is evaluated once.
     """
+    commit.recover(spark, target_path)
     listed = None
     if isinstance(source.schema[date_col].dataType, DateType):
         listed = _listed_watermark(spark, target_path, date_col)
     if listed is None:
-        try:
-            existing = spark.read.parquet(target_path)
-        except AnalysisException as e:
-            # only a missing target means "create": an unreadable one
-            # would otherwise get the whole source appended onto it again
-            if e.getCondition() != "PATH_NOT_FOUND":
-                raise
-            listed = False, None
-        else:
-            listed = True, high_watermark(existing, date_col)
+        # only an absent target means "create": an unreadable one would
+        # otherwise get the whole source appended onto it again
+        existing = commit.read_optional(spark, target_path)
+        listed = (False, None) if existing is None else (True, high_watermark(existing, date_col))
     has_data, wm = listed
-    mode = "update" if has_data else "create"
-
-    delta, obs = observed_quality(incremental_delta(source, date_col, wm))
-    fs, root = _hadoop_fs(spark, target_path)
-    fresh = not has_data and not fs.exists(root)
-    delta.write.mode("append").partitionBy(date_col).parquet(target_path)
-    n = quality_report(obs)["n_rows"]
-    if fresh and n == 0:
-        # an empty append still creates the directory and its _SUCCESS
-        # marker; an empty create leaves no target behind
-        _fs_checked(fs.delete(root, True), "delete", target_path)
-    return mode, n
+    n = commit.write(spark, target_path, incremental_delta(source, date_col, wm), partition_by=[date_col])
+    return ("update" if has_data else "create"), n

@@ -14,13 +14,14 @@ the files arrive in (a late file included).
 
 Dimensions are small relative to facts (§ SURVEY.md 1.1), so rewriting
 the whole dimension per micro-batch is cheap at any scale; the
-fact-side stream never rewrites history. The merge is written once, to
-a staging sibling, and swapped in by two renames
-(``sources.commit.swap_in``): the old dimension is set aside only once
-the new one is complete, and a crash at any point converges when the
-batch is replayed from the streaming checkpoint (the merge is
-idempotent: re-folding a batch already in the dimension changes
-nothing).
+fact-side stream never rewrites history. The merge is one
+``sources.commit.write``: it is staged in the dimension's hidden
+``.maint-tmp``, committed by an intent that retires every live file of
+the old dimension, and rolled forward by renames. A crash at any point
+converges when the batch is replayed from the streaming checkpoint:
+``sources.commit.recover`` runs before the dimension is read, and the
+merge is idempotent (re-folding a batch already in the dimension
+changes nothing).
 
 A drain onto an existing dimension is two Spark jobs: the merge's one
 shuffle on the natural key, and the staging write. Nothing else runs
@@ -30,9 +31,9 @@ one:
   (``operators.scd.scd_schema``), so reading the dimension infers
   nothing from its footers;
 - an empty batch is not probed for. It folds to the dimension it
-  started from, and a batch that leaves a dimension of no rows (an
-  empty first file) is dropped from staging instead of swapped in, so
-  it leaves no dimension behind. The row count rides the staging
+  started from. A batch that leaves a dimension of no rows (an empty
+  first file) retires nothing and adds no row, so its stage rolls back
+  and it leaves no dimension behind. The row count rides the staging
   write (``observe``).
 """
 
@@ -40,26 +41,11 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
 from ..operators.scd import create_scd_from_input, merge_scd, scd_schema
-from ..sources.commit import _fs_checked, _hadoop_fs, recover_swap, staging_path, swap_in
-from ..sources.metrics import observed_quality, quality_report
-
-
-def _read_dim(spark: SparkSession, dim_path: str, schema: StructType) -> DataFrame | None:
-    try:
-        return spark.read.schema(schema).parquet(dim_path)
-    except AnalysisException as e:
-        # first batch: the dimension does not exist yet. Any other read
-        # error raises instead of rebuilding the dimension from one batch;
-        # with the schema pinned, an unreadable or mistyped file raises
-        # when the merge runs, before anything is swapped in
-        if e.getCondition() != "PATH_NOT_FOUND":
-            raise
-        return None
+from ..sources import commit
 
 
 def scd_upsert_batch(
@@ -72,25 +58,20 @@ def scd_upsert_batch(
 ) -> None:
     """Fold one batch of raw change records into the parquet dimension
     (create on first batch, incremental merge afterwards)."""
-    # a crash between the swap's renames leaves no live dimension: put
-    # the old one back before its absence could mean "first batch"
-    recover_swap(spark, dim_path)
-    old = _read_dim(spark, dim_path, scd_schema(batch_df.schema, attribute_cols, date_col, natural_key))
+    # a crashed earlier drain is converged first, so a dimension torn
+    # mid-commit is never read, nor its absence taken for "first batch"
+    commit.recover(spark, dim_path)
+    schema = scd_schema(batch_df.schema, attribute_cols, date_col, natural_key)
+    # with the schema pinned, an unreadable or mistyped file raises
+    # when the merge runs, before anything is committed
+    old = commit.read_optional(spark, dim_path, schema)
     if old is None:
         merged = create_scd_from_input(batch_df, attribute_cols, date_col, natural_key)
     else:
         merged = merge_scd(old, batch_df, natural_key, date_col, attribute_cols)
-    # the merge reads the live dimension, so it cannot be written over
-    # it: write it beside it, then swap
-    staged = staging_path(dim_path)
-    merged, obs = observed_quality(merged)
-    merged.write.mode("overwrite").parquet(staged)
-    if quality_report(obs)["n_rows"] == 0:
-        # an empty first batch: like an empty create, leave no dimension
-        fs, staged_h = _hadoop_fs(spark, staged)
-        _fs_checked(fs.delete(staged_h, True), "delete", staged)
-        return
-    swap_in(spark, dim_path)
+    # the merge reads the live dimension, so it is staged, and replaces
+    # every live file only on commit
+    commit.write(spark, dim_path, merged, retire=commit.live_files(spark, dim_path))
 
 
 def scd_stream_upsert(

@@ -1,0 +1,215 @@
+"""One commit protocol for every table write (``sources.commit``): a
+crash at any point of any of the four writers converges.
+
+Each case runs one writer from the same starting state twice: once
+cleanly, and once with a crash injected at one of three points:
+
+- ``mid_stage_write``: the stage holds part of the new files and no
+  intent;
+- ``after_intent``: the intent is written, but no retired file is
+  deleted and no staged file moved yet;
+- ``between_moves``: the first staged file is moved in, the second is
+  not.
+
+Until the intent exists the table is untouched. Recovery then leaves
+the table as it was (no intent) or as the clean run left it (intent):
+readers and the listing watermark see all of the write or none of it.
+Re-running the writer equals the clean run row for row and leaves no
+stage.
+"""
+
+import datetime
+import glob
+import os
+import random
+import shutil
+
+import pytest
+from pyspark.sql import Row
+from pyspark.sql.types import DateType, LongType, StringType, StructField, StructType
+
+from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spark.operators.similarity import (
+    build_ivf_index,
+    compact_ivf_index,
+    delete_from_ivf_index,
+)
+from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spark.sources import commit
+from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spark.sources.maintenance import (
+    compact_table,
+)
+from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spark.streaming import load_or_update
+from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spark.streaming.incremental import (
+    _listed_watermark,
+)
+from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spark.streaming.scd_stream import (
+    scd_stream_upsert,
+)
+
+_d = datetime.date
+_STORE = StructType(
+    [StructField("store", LongType()), StructField("city", StringType()), StructField("obs_date", DateType())]
+)
+
+
+def _dimension_drain(spark, root):
+    """Two change-log files, the second not yet drained."""
+    staging, dim = str(root / "in"), str(root / "dim")
+
+    def drop(rows):
+        spark.createDataFrame(rows, _STORE).write.mode("append").parquet(staging)
+
+    def drain():
+        scd_stream_upsert(spark, staging, dim, str(root / "ckpt"), "store", "obs_date", ["city"], schema=_STORE)
+
+    drop([(1, "ames", _d(2024, 1, 1)), (2, "adel", _d(2024, 1, 1))])
+    drain()
+    drop([(1, "boone", _d(2024, 3, 1)), (3, "clive", _d(2024, 3, 9))])
+    return dim, drain
+
+
+def _fact_append(spark, root):
+    """Three loaded days; the source spans two more, so the append
+    stages at least two files."""
+    target = str(root / "fact")
+    day0 = _d(2024, 1, 1)
+    rows = [Row(k=i, d=day0 + datetime.timedelta(days=i // 3)) for i in range(15)]
+    source = spark.createDataFrame(rows, "k long, d date")
+    load_or_update(spark, source.where("d < DATE'2024-01-04'"), target, "d")
+    return target, lambda: load_or_update(spark, source, target, "d")
+
+
+def _compact_table(spark, root):
+    path = str(root / "frag")
+    spark.range(200).selectExpr("id", "id % 7 AS g").repartition(6).write.parquet(path)
+    return path, lambda: compact_table(spark, path, target_files=2)
+
+
+def _ivf_compaction(spark, root):
+    """Tombstones in several cells, so the compaction rewrites several."""
+    rng = random.Random(7)
+    emb = spark.createDataFrame(
+        [(i, [rng.uniform(-1, 1) for _ in range(8)]) for i in range(120)], "vec_id long, embedding array<float>"
+    )
+    path = str(root / "idx")
+    build_ivf_index(emb, path, n_cells=4, iters=1)
+    delete_from_ivf_index(emb.where("vec_id % 5 = 0"), path)
+    return path, lambda: compact_ivf_index(spark, path)
+
+
+WRITERS = {
+    "dimension_drain": _dimension_drain,
+    "fact_append": _fact_append,
+    "compact_table": _compact_table,
+    "ivf_compaction": _ivf_compaction,
+}
+
+
+def _view(spark, path):
+    """What a reader sees: the rows, and how many data files hold them."""
+    rows = sorted((tuple(r) for r in spark.read.parquet(path).collect()), key=repr)
+    return rows, len(glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True))
+
+
+class Crash(Exception):
+    pass
+
+
+def _inject(monkeypatch, crash):
+    if crash == "mid_stage_write":
+
+        def write_intent(_spark, stage, _retire):
+            # a staging job killed part-way: a data file and the
+            # success marker missing, no intent
+            os.remove(sorted(glob.glob(os.path.join(stage, "**", "*.parquet"), recursive=True))[-1])
+            os.remove(os.path.join(stage, "_SUCCESS"))
+            raise Crash("Crash")
+
+        monkeypatch.setattr(commit, "_write_intent", write_intent)
+    elif crash == "after_intent":
+        real_intent = commit._write_intent
+
+        def write_intent(*args):
+            real_intent(*args)
+            raise Crash("Crash")
+
+        monkeypatch.setattr(commit, "_write_intent", write_intent)
+    else:
+        real_move, moves = commit._move, []
+
+        def move(*args):
+            if moves:
+                raise Crash("Crash")
+            real_move(*args)
+            moves.append(args)
+
+        monkeypatch.setattr(commit, "_move", move)
+
+
+@pytest.fixture
+def uncoalesced_shuffles(spark):
+    """Keep the dimension merge's shuffle partitions apart, so the
+    rewritten dimension is more than one file and has two moves."""
+    key = "spark.sql.adaptive.coalescePartitions.enabled"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    yield
+    spark.conf.set(key, prev)
+
+
+@pytest.mark.parametrize("crash", ["mid_stage_write", "after_intent", "between_moves"])
+@pytest.mark.parametrize("writer", list(WRITERS))
+def test_crashed_write_converges(spark, tmp_path, monkeypatch, uncoalesced_shuffles, writer, crash):
+    setup = WRITERS[writer]
+    clean, clean_run = setup(spark, tmp_path / "clean")
+    clean_run()
+    want = _view(spark, clean)
+
+    path, run = setup(spark, tmp_path / "crash")
+    before = _view(spark, path)
+    assert before != want
+    _inject(monkeypatch, crash)
+    with pytest.raises(Exception, match="Crash"):
+        run()
+    monkeypatch.undo()
+
+    stage = commit.stage_path(path)
+    assert os.path.exists(os.path.join(stage, commit.INTENT)) == (crash != "mid_stage_write")
+    if crash != "between_moves":
+        # nothing live is touched before the roll-forward starts
+        assert _view(spark, path) == before
+        if writer == "fact_append":
+            assert _listed_watermark(spark, path, "d") == (True, _d(2024, 1, 3))
+
+    # all or none: recovery (on a copy; the intent names relative
+    # paths) yields the state before the write or the clean run's
+    probe = str(tmp_path / "probe")
+    shutil.copytree(path, probe)
+    action = commit.recover(spark, probe)["action"]
+    assert action == ("rolled_back" if crash == "mid_stage_write" else "rolled_forward")
+    assert _view(spark, probe) == (before if action == "rolled_back" else want)
+    if writer == "fact_append":
+        newest = _d(2024, 1, 3) if action == "rolled_back" else _d(2024, 1, 5)
+        assert _listed_watermark(spark, probe, "d") == (True, newest)
+
+    # the re-run (the dimension drain replays its batch from the
+    # checkpoint) recovers first, then converges on the clean run
+    run()
+    assert _view(spark, path) == want
+    assert not os.path.exists(stage)
+    if writer == "dimension_drain":
+        assert len(want[0]) == 4
+        assert sorted(p.name for p in (tmp_path / "crash").iterdir()) == ["ckpt", "dim", "in"]
+
+
+def test_write_retiring_every_file_of_a_partition_drops_its_directory(spark, tmp_path):
+    """Retired files go, staged files land at the same relative path,
+    and a partition directory left without data is dropped."""
+    path = str(tmp_path / "t")
+    spark.createDataFrame([(1, "a"), (2, "b")], "k long, p string").write.partitionBy("p").parquet(path)
+    retire = commit.live_files(spark, path, ["p=a", "p=b"])
+    assert len(retire) == 2 and all(f.startswith(("p=a/", "p=b/")) for f in retire)
+    n = commit.write(spark, path, spark.createDataFrame([(3, "b")], "k long, p string"), retire, ["p"])
+    assert n == 1
+    assert not os.path.exists(os.path.join(path, "p=a"))
+    assert [tuple(r) for r in spark.read.parquet(path).collect()] == [(3, "b")]
+    assert not os.path.exists(commit.stage_path(path))

@@ -1,5 +1,5 @@
-"""update_in_ivf_index (both quantizers) + the atomic cell-swap
-recovery protocol — the round-15 closures of the two residuals the r14
+"""update_in_ivf_index (both quantizers) + the commit protocol's
+recovery on an index — the round-15 closures of the two residuals the r14
 verdict named:
 
 - a single-id UPDATE no longer pays a full compaction: the only_ids
@@ -8,10 +8,11 @@ verdict named:
   vectors route fresh (possibly to different cells);
 - the dynamic-partition-overwrite job-commit tear is CLOSED: cell
   rewrites stage under an invisible ``.maint-tmp``, commit via an
-  atomic ``_intent.json`` rename, and swap per-cell by delete+rename —
-  recover_ivf_index converges a crash from any point (roll back before
-  commit, roll forward after), demonstrated here by constructing the
-  torn states directly.
+  atomic ``_intent.json`` that retires the rewritten cells' files, and
+  roll forward by deletes and renames — ``sources.commit.recover``
+  converges a crash from any point (roll back before commit, roll
+  forward after), demonstrated here by constructing the torn states
+  directly.
 """
 
 import glob
@@ -29,9 +30,9 @@ from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spar
     compact_ivf_index,
     delete_from_ivf_index,
     query_ivf_index,
-    recover_ivf_index,
     update_in_ivf_index,
 )
+from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spark.sources import commit
 from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spark.sources.tables import (
     load_table,
 )
@@ -241,25 +242,22 @@ def test_ivf2_update_replaces_vector_and_clears_debt(spark, tmp_path):
 
 
 # ---------------------------------------------------------------------
-# The atomic cell-swap protocol: crash states constructed directly,
+# The commit protocol on an index: crash states constructed directly,
 # recovery demonstrated (the r14 ask: "a pytest that demonstrates the
 # recovery").
 
 
-def _stage(spark, path, survivors, removed, commit):
+def _stage(spark, path, survivors, removed, committed):
     """Construct the protocol's staging state by the same mechanics
     the writer uses: survivors parquet under .maint-tmp, plus (when
-    ``commit``) the atomic intent manifest."""
-    from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spark.operators import (
-        similarity as sim,
-    )
-
-    tmp = f"{path}/{sim._MAINT_TMP}"
-    survivors.repartition("cell").write.mode("overwrite").partitionBy("cell").parquet(tmp)
-    if commit:
-        sim._fs_write_text_atomic(
-            spark, tmp + "/_intent.json", '{"removed": %s}' % sorted(removed)
-        )
+    ``committed``) the atomic intent retiring the live files of the
+    survivors' and the ``removed`` cells."""
+    cells = {int(r["cell"]) for r in survivors.select("cell").distinct().collect()} | set(removed)
+    retire = commit.live_files(spark, path, [f"cell={c}" for c in sorted(cells)])
+    tmp = commit.stage_path(path)
+    survivors.repartition("cell").write.partitionBy("cell").parquet(tmp)
+    if committed:
+        commit._write_intent(spark, tmp, retire)
     return tmp
 
 
@@ -275,15 +273,15 @@ def test_uncommitted_stage_is_invisible_and_rolls_back(spark, tmp_path):
         F.array(F.lit(1.0)).alias("embedding"),
         F.lit(0).cast("int").alias("cell"),
     )
-    _stage(spark, path, junk, [], commit=False)
+    _stage(spark, path, junk, [], committed=False)
     # the dot-prefixed stage is invisible to readers (index unchanged)
     assert spark.read.parquet(path).count() == n_rows
-    out = recover_ivf_index(spark, path)
+    out = commit.recover(spark, path)
     assert out["action"] == "rolled_back"
     assert _files_by_cell(path) == before_files
     assert not os.path.exists(os.path.join(path, ".maint-tmp"))
     # idempotent: a second recovery is a no-op
-    assert recover_ivf_index(spark, path)["action"] == "none"
+    assert commit.recover(spark, path)["action"] == "none"
 
 
 def test_committed_stage_rolls_forward_from_torn_state(spark, tmp_path):
@@ -308,15 +306,16 @@ def test_committed_stage_rolls_forward_from_torn_state(spark, tmp_path):
     expected_a = {
         int(r["neighbor_id"]) for r in survivors.select("neighbor_id").collect()
     }
-    _stage(spark, path, survivors, [cell_b], commit=True)
+    _stage(spark, path, survivors, [cell_b], committed=True)
     # simulate the crash mid-swap: live cell_a already deleted, staged
     # replacement not yet renamed in
     import shutil
 
     shutil.rmtree(os.path.join(path, f"cell={cell_a}"))
-    out = recover_ivf_index(spark, path)
+    out = commit.recover(spark, path)
     assert out["action"] == "rolled_forward"
-    assert cell_a in out["cells_swapped"] and cell_b in out["cells_removed"]
+    assert any(f.startswith(f"cell={cell_a}/") for f in out["moved"])
+    assert any(f.startswith(f"cell={cell_b}/") for f in out["retired"])
     after = spark.read.parquet(path)
     got_a = {
         int(r["neighbor_id"])
@@ -348,7 +347,7 @@ def test_maintenance_entry_points_self_heal_before_acting(spark, tmp_path):
     pre_crash_ids = {
         int(r["neighbor_id"]) for r in idx.where(F.col("cell") == cell_a).collect()
     }
-    _stage(spark, path, keep_one, [], commit=True)
+    _stage(spark, path, keep_one, [], committed=True)
     from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spark.operators.similarity import (
         append_to_ivf_index,
     )
@@ -369,10 +368,6 @@ def test_rollback_raises_when_stage_delete_returns_false(spark, tmp_path, monkey
     must not report ``rolled_back`` while the uncommitted stage is
     still there — the next maintenance op would then refuse to run,
     blaming a maintenance op "in flight"."""
-    from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spark.operators import (
-        similarity as sim,
-    )
-
     emb = load_table(spark, SF_DIR, "embeddings")
     path = str(tmp_path / "idx")
     build_ivf_index(emb.where("vec_id < 100"), path, n_cells=4, iters=1)
@@ -381,9 +376,9 @@ def test_rollback_raises_when_stage_delete_returns_false(spark, tmp_path, monkey
         F.array(F.lit(1.0)).alias("c_vec"),
         F.lit(0).cast("int").alias("cell"),
     )
-    tmp = _stage(spark, path, junk, [], commit=False)
+    tmp = _stage(spark, path, junk, [], committed=False)
 
-    real = sim._hadoop_fs
+    real = commit._hadoop_fs
 
     class _RefusingDelete:
         def __init__(self, fs):
@@ -399,11 +394,11 @@ def test_rollback_raises_when_stage_delete_returns_false(spark, tmp_path, monkey
         fs, hpath = real(spark_, p)
         return _RefusingDelete(fs), hpath
 
-    monkeypatch.setattr(sim, "_hadoop_fs", _proxy)
+    monkeypatch.setattr(commit, "_hadoop_fs", _proxy)
     with pytest.raises(RuntimeError, match="delete failed"):
-        recover_ivf_index(spark, path)
+        commit.recover(spark, path)
     assert os.path.exists(tmp)
     monkeypatch.undo()
     # once deletes work again, recovery converges
-    assert recover_ivf_index(spark, path)["action"] == "rolled_back"
+    assert commit.recover(spark, path)["action"] == "rolled_back"
     assert not os.path.exists(tmp)

@@ -4,6 +4,7 @@ dimension, dedup, similarity."""
 import datetime
 
 import pyspark.sql.functions as F
+import pytest
 from pyspark.sql import Row
 
 from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spark.functions import build_date_dim
@@ -639,6 +640,24 @@ def test_spread_narrow_scan_widens_only_when_narrow(spark, tmp_path):
         spread = _spread_narrow_scan(unshaped, "doc")
         assert spread is not unshaped
         assert spread.rdd.getNumPartitions() == width
+
+
+def test_is_scan_shaped_raises_when_the_plan_cannot_be_inspected():
+    """An error inspecting the plan raises instead of reading as "not
+    scan-shaped", which would hide the error behind an added shuffle."""
+    from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spark.operators.dedup import (
+        _is_scan_shaped,
+    )
+
+    class _Plan:
+        def queryExecution(self):
+            raise RuntimeError("optimizer failed")
+
+    class _Frame:
+        _jdf = _Plan()
+
+    with pytest.raises(RuntimeError, match="optimizer failed"):
+        _is_scan_shaped(_Frame())
 
 
 def test_ivfpq_recall_tracks_code_capacity(spark):

@@ -201,12 +201,12 @@ def test_listing_watermark_matches_read_path_in_one_job(spark, tmp_path):
 
 
 def test_hidden_names_are_one_rule_for_sidecars_and_partitions(spark, tmp_path):
-    """The sidecar empty-dir check and the listed watermark skip the
+    """The absent-table check and the listed watermark skip the
     same names Spark's file index skips — markers, dot files, in-flight
     copies — and a visible subdirectory (``_col=v`` included) never
     reads as "no data"."""
     from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spark.sources.commit import (
-        _sidecar_is_empty_dir,
+        absent,
     )
     from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spark.streaming.incremental import (
         _listed_watermark,
@@ -222,14 +222,14 @@ def test_hidden_names_are_one_rule_for_sidecars_and_partitions(spark, tmp_path):
         (where / "_SUCCESS").write_bytes(b"{}")
         (where / ".x.crc").write_bytes(b"crc")
         (where / "part-0._COPYING_").write_bytes(b"in flight")
-    assert _sidecar_is_empty_dir(spark, str(sidecar))
-    assert _sidecar_is_empty_dir(spark, str(tmp_path / "missing"))
+    assert absent(spark, str(sidecar))
+    assert absent(spark, str(tmp_path / "missing"))
     assert _listed_watermark(spark, target, "d") == (True, day)
 
     for sub in ("nested", "_col=v"):
         (sidecar / sub).mkdir()
         (partition / sub).mkdir()
-        assert not _sidecar_is_empty_dir(spark, str(sidecar)), sub
+        assert not absent(spark, str(sidecar)), sub
         assert _listed_watermark(spark, target, "d") is None, sub
         (sidecar / sub).rmdir()
         (partition / sub).rmdir()
@@ -445,7 +445,8 @@ def test_scd_drain_onto_a_dimension_is_two_jobs(spark, tmp_path):
 def test_scd_stream_empty_file_leaves_the_dimension_as_it_was(spark, tmp_path):
     """An empty change-log file drained first leaves no dimension (as an
     empty create leaves no target); drained later it leaves the
-    dimension's rows unchanged. Neither leaves a staging sibling."""
+    dimension's rows unchanged. Neither leaves a staging sibling or a
+    stage."""
     from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spark.streaming.scd_stream import (
         scd_stream_upsert,
     )
@@ -457,6 +458,7 @@ def test_scd_stream_empty_file_leaves_the_dimension_as_it_was(spark, tmp_path):
         spark.createDataFrame(rows, schema).write.mode("append").parquet(staging)
         scd_stream_upsert(spark, staging, dim, str(tmp_path / "ckpt"), "store", "obs_date", ["city"], schema=schema)
         assert not any(p.name.startswith("dim.") for p in tmp_path.iterdir())
+        assert not os.path.exists(os.path.join(dim, ".maint-tmp"))
 
     drain([])
     assert not os.path.exists(dim)
@@ -466,74 +468,6 @@ def test_scd_stream_empty_file_leaves_the_dimension_as_it_was(spark, tmp_path):
     assert len(got) == 3
     drain([])
     assert _scd_rows(spark, dim) == got
-
-
-@pytest.mark.parametrize("crash_after", ["staging_write", "first_rename", "second_rename"])
-def test_scd_swap_crash_converges_on_replay(spark, tmp_path, monkeypatch, crash_after):
-    """A drain that dies at any point of the dimension swap, re-run on
-    the same checkpoint, leaves the dimension an uninterrupted drain
-    leaves, and no staging or backup sibling."""
-    from pyspark.sql.types import DateType, LongType, StringType, StructField, StructType
-
-    from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spark.sources import commit
-    from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spark.streaming import scd_stream
-
-    schema = StructType(
-        [StructField("store", LongType()), StructField("city", StringType()), StructField("obs_date", DateType())]
-    )
-    d = datetime.date
-    drop1 = [(1, "ames", d(2024, 1, 1)), (2, "adel", d(2024, 1, 1))]
-    drop2 = [(1, "boone", d(2024, 3, 1)), (3, "clive", d(2024, 3, 9))]
-
-    def drain(name):
-        scd_stream.scd_stream_upsert(
-            spark, str(tmp_path / f"{name}_in"), str(tmp_path / f"{name}_dim"), str(tmp_path / f"{name}_ckpt"),
-            "store", "obs_date", ["city"], schema=schema,
-        )
-
-    def drop(name, rows):
-        spark.createDataFrame(rows, schema).write.mode("append").parquet(str(tmp_path / f"{name}_in"))
-
-    for name in ("clean", "crash"):
-        drop(name, drop1)
-        drain(name)
-        drop(name, drop2)
-    drain("clean")
-
-    class Crash(Exception):
-        pass
-
-    if crash_after == "staging_write":
-        def swap_in(_spark, _path):
-            raise Crash
-
-        monkeypatch.setattr(scd_stream, "swap_in", swap_in)
-    else:
-        real, crash_at, seen = commit._fs_checked, {"first_rename": 1, "second_rename": 2}[crash_after], []
-
-        def fs_checked(*args):
-            real(*args)
-            seen.append(args)
-            if len(seen) == crash_at:
-                raise Crash
-
-        monkeypatch.setattr(commit, "_fs_checked", fs_checked)
-    with pytest.raises(Exception, match="Crash"):
-        drain("crash")
-    monkeypatch.undo()
-
-    dim = tmp_path / "crash_dim"
-    left = {
-        "staging_write": (True, True, False),
-        "first_rename": (False, True, True),
-        "second_rename": (True, False, True),
-    }[crash_after]
-    assert (dim.exists(), (tmp_path / "crash_dim._staging").exists(), (tmp_path / "crash_dim._backup").exists()) == left
-
-    drain("crash")
-    assert _scd_rows(spark, str(dim)) == _scd_rows(spark, str(tmp_path / "clean_dim"))
-    assert len(_scd_rows(spark, str(dim))) == 4
-    assert sorted(p.name for p in tmp_path.iterdir() if p.name.startswith("crash_dim")) == ["crash_dim"]
 
 
 def test_stream_stream_join_matches_batch(spark):
