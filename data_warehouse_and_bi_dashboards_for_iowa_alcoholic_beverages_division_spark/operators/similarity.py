@@ -1268,6 +1268,7 @@ def build_ivf_index(
 _SIDECAR_CENTROIDS_SCHEMA = "cell INT, centroid ARRAY<DOUBLE>, supercell INT"
 _SIDECAR_SUPERS_SCHEMA = "supercell INT, centroid ARRAY<DOUBLE>"
 _SIDECAR_BATCHES_SCHEMA = "token STRING"
+_SIDECARS = ("_centroids", "_supers", "_tombstones", "_batches")
 
 
 def _write_index(
@@ -1296,18 +1297,31 @@ def _write_index(
 
     Stale-schema window closed: any previous build's schema pin is
     dropped BEFORE the data overwrite and re-recorded after (readers
-    between the two fall back to inference — see _write_index_schema)."""
+    between the two fall back to inference — see _write_index_schema).
+
+    A build starts a new generation: the old index's tombstones and
+    batch tokens name rows and batches of the index it replaces, so
+    both sidecars are dropped before anything is published."""
+    _recover_index(spark, path)
+    for sidecar in ("_tombstones", "_batches"):
+        commit.drop(spark, path + sidecar)
     _drop_index_schema(spark, path)
     lists.repartition(F.col("cell")).write.mode("overwrite").partitionBy("cell").parquet(path)
     _write_index_schema(spark, path, lists)
-    _write_driver_rows(
-        spark,
-        [(i, c, (cell2super or {}).get(i)) for i, c in enumerate(l2)],
-        _SIDECAR_CENTROIDS_SCHEMA,
-        path + "_centroids",
-    )
+    cents = [(i, c, (cell2super or {}).get(i)) for i, c in enumerate(l2)]
+    _rewrite_sidecar(spark, path + "_centroids", _driver_rows(spark, cents, _SIDECAR_CENTROIDS_SCHEMA))
     if l1 is not None:
-        _write_driver_rows(spark, list(enumerate(l1)), _SIDECAR_SUPERS_SCHEMA, path + "_supers")
+        supers = list(enumerate(l1))
+        _rewrite_sidecar(spark, path + "_supers", _driver_rows(spark, supers, _SIDECAR_SUPERS_SCHEMA))
+
+
+def _recover_index(spark, path: str) -> None:
+    """Converge a crashed commit of the lists or of any sidecar
+    (``sources.commit.recover``); every maintenance op runs this before
+    it reads the index, so no sidecar is read half-written and no
+    stage is left in a later write's way."""
+    for table in (path, *(path + s for s in _SIDECARS)):
+        commit.recover(spark, table)
 
 
 def _read_quantizer(spark, path: str):
@@ -1383,8 +1397,9 @@ def _read_index(spark, path: str) -> DataFrame:
     return spark.read.parquet(path)
 
 
-def _write_driver_rows(spark, rows, schema: str, path: str, mode: str = "overwrite") -> None:
-    """Write a tiny driver-resident row list as a ONE-file sidecar.
+def _driver_rows(spark, rows, schema: str) -> DataFrame:
+    """A tiny driver-resident row list as a ONE-partition DataFrame,
+    so a sidecar write is one task and one file.
     ``createDataFrame`` alone parallelizes the rows across
     ``default.parallelism`` slices, so the write ran as a 32-task job
     (31 of them empty) with more task-deserialization wall than data —
@@ -1395,9 +1410,15 @@ def _write_driver_rows(spark, rows, schema: str, path: str, mode: str = "overwri
     slicing was measured at ~4 s per write — its one task re-evaluates
     all 32 pickled parent partitions through the Python-worker channel
     serially — where a 1-slice parallelize is ~0.25 s."""
-    spark.createDataFrame(
-        spark.sparkContext.parallelize(rows, 1), schema
-    ).write.mode(mode).parquet(path)
+    return spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
+
+
+def _rewrite_sidecar(spark, path: str, df: DataFrame) -> None:
+    """Replace the sidecar table at ``path`` with ``df`` in one
+    ``sources.commit.write`` that retires every live file: a write
+    whose job fails leaves the old sidecar as it was (an overwrite
+    would have deleted it before the job ran)."""
+    commit.write(spark, path, df, retire=commit.live_files(spark, path))
 
 
 def _count_batch_token(spark, sidecar_path: str, token: str) -> int:
@@ -1502,8 +1523,8 @@ def append_to_ivf_index(
     spark = new_vectors.sparkSession
     # converge any crashed write first: the index is read below, and a
     # stage left in place would make this append's staging write fail
-    # (one fs.exists when nothing is pending)
-    commit.recover(spark, path)
+    # (one fs.exists per table when nothing is pending)
+    _recover_index(spark, path)
     if batch_token is not None:
         seen = _count_batch_token(spark, path + "_batches", batch_token)
         if seen:
@@ -1551,9 +1572,8 @@ def append_to_ivf_index(
     # index's file count with each ingest window.
     commit.write(spark, path, lists.repartition(F.col("cell")), partition_by=["cell"])
     if batch_token is not None:
-        _write_driver_rows(
-            spark, [(batch_token,)], _SIDECAR_BATCHES_SCHEMA, path + "_batches", mode="append"
-        )
+        token = _driver_rows(spark, [(batch_token,)], _SIDECAR_BATCHES_SCHEMA)
+        commit.write(spark, path + "_batches", token)
 
 
 def delete_from_ivf_index(
@@ -1600,13 +1620,14 @@ def delete_from_ivf_index(
     ``append_to_ivf_index``, concurrent deleters are the caller's to
     serialize."""
     spark = ids.sparkSession
+    _recover_index(spark, path)
     batch = ids.select(F.col(id_col).alias("neighbor_id")).distinct()
     existing = commit.read_optional(spark, path + "_tombstones")
     if existing is not None:
         batch = batch.join(existing.select("neighbor_id"), on="neighbor_id", how="left_anti")
     # one file per delete batch: the sidecar is tiny by contract, and
     # the distinct() above otherwise fans it across the shuffle width
-    batch.coalesce(1).write.mode("append").parquet(path + "_tombstones")
+    commit.write(spark, path + "_tombstones", batch.coalesce(1))
 
 
 def compact_ivf_index(spark, path: str, only_ids: DataFrame | None = None) -> dict:
@@ -1639,14 +1660,14 @@ def compact_ivf_index(spark, path: str, only_ids: DataFrame | None = None) -> di
     retires the affected cells' files — a crash at ANY point converges
     under ``sources.commit.recover`` (which this function runs first,
     so a retried job self-heals before reading). The tombstone sidecar
-    is still written LAST: a crash after the commit but before the
-    sidecar write leaves tombstones that match nothing — queries stay
-    correct, and a re-run finds zero affected cells and just rewrites
-    the sidecar (one-way convergence).
+    is still written LAST, in a commit of its own: a crash after the
+    list commit but before the sidecar commit leaves tombstones that
+    match nothing — queries stay correct, and a re-run finds zero
+    affected cells and just rewrites the sidecar (one-way convergence).
 
     Returns a stats dict; no-op (nothing written, tombstones kept —
     there are none to keep) when the sidecar is absent or empty."""
-    commit.recover(spark, path)
+    _recover_index(spark, path)
     zero = {"tombstones": 0, "cells_rewritten": [], "cells_removed": [], "rows_removed": 0}
     tombs_all = commit.read_optional(spark, path + "_tombstones")
     if tombs_all is None:
@@ -1727,15 +1748,12 @@ def compact_ivf_index(spark, path: str, only_ids: DataFrame | None = None) -> di
     # schema — a hardcoded BIGINT DDL would leave mixed-schema parquet
     # under _tombstones for an index with non-BIGINT ids. Full
     # compaction clears it; a micro-compaction removes only the
-    # compacted ids and keeps unrelated tombstone debt recorded. Both
-    # sides of the anti-join are checkpointed, so the overwrite never
-    # reads the files it replaces.
+    # compacted ids and keeps unrelated tombstone debt recorded.
     if only_ids is None:
-        tombs_all.limit(0).write.mode("overwrite").parquet(path + "_tombstones")
+        remaining = tombs_all.limit(0)
     else:
-        tombs_all.join(tombs, on="neighbor_id", how="left_anti").write.mode("overwrite").parquet(
-            path + "_tombstones"
-        )
+        remaining = tombs_all.join(tombs, on="neighbor_id", how="left_anti")
+    _rewrite_sidecar(spark, path + "_tombstones", remaining)
     return stats
 
 
@@ -1914,7 +1932,7 @@ def update_in_ivf_index(
     spark = new_vectors.sparkSession
     # converge any crashed write before the pre-check reads the index
     # (a torn cell could otherwise make the wipe probe misjudge)
-    commit.recover(spark, path)
+    _recover_index(spark, path)
     if batch_token is not None and _count_batch_token(spark, path + "_batches", batch_token):
         return {
             "tombstones": 0,
@@ -1931,10 +1949,8 @@ def update_in_ivf_index(
     # Total-wipe boundary, checked BEFORE any mutation (a code-review
     # r15 finding: the micro-compaction's own refusal fires only AFTER
     # step 1 has tombstoned every id — the whole index would sit
-    # hidden behind the sidecar with every retry re-raising, and a
-    # rebuild at the same path would NOT clear it, since build
-    # overwrites only the data and centroid paths, never the sibling
-    # _tombstones). The anti-join probe is cheap in the normal case:
+    # hidden behind the sidecar with every retry re-raising). The
+    # anti-join probe is cheap in the normal case:
     # limit(1) short-circuits on the first live id outside the
     # (broadcast) batch, so only the pathological near-wipe case scans
     # far.
@@ -1949,9 +1965,7 @@ def update_in_ivf_index(
         raise ValueError(
             "update batch covers every row of the index: an in-place "
             "update of the whole corpus is a rebuild — run "
-            "build_ivf_index/build_ivf2_index instead (and drop the "
-            "_tombstones sidecar if one exists; a rebuild does not "
-            "clear it)"
+            "build_ivf_index/build_ivf2_index instead"
         )
     delete_from_ivf_index(ids, path, id_col="neighbor_id")
     stats = compact_ivf_index(spark, path, only_ids=ids)
@@ -2176,7 +2190,7 @@ def rebalance_ivf_index(spark, path: str) -> dict:
     untouched) or a committed one forward (remaining moves finish),
     then the rebalance recomputes from the converged state.
     """
-    commit.recover(spark, path)
+    _recover_index(spark, path)
     idx = _read_index(spark, path)
     occ = idx.groupBy("cell").agg(F.count(F.lit(1)).alias("n")).collect()
     counts = {int(r["cell"]): int(r["n"]) for r in occ}
@@ -2274,12 +2288,8 @@ def rebalance_ivf_index(spark, path: str) -> dict:
     # would strand the 'b' halves unreachable (rows in partitions no
     # centroid ever probes) with no self-healing re-run: occupancy
     # would read the new layout while the sidecar lags it.
-    _write_driver_rows(
-        spark,
-        [(c, cent, sup) for c, (cent, sup) in sorted(sidecar.items())],
-        _SIDECAR_CENTROIDS_SCHEMA,
-        path + "_centroids",
-    )
+    cents = [(c, cent, sup) for c, (cent, sup) in sorted(sidecar.items())]
+    _rewrite_sidecar(spark, path + "_centroids", _driver_rows(spark, cents, _SIDECAR_CENTROIDS_SCHEMA))
     # hot + new partitions replace in one commit; a crash at any point
     # converges under sources.commit.recover (run first above)
     _rewrite_cells(

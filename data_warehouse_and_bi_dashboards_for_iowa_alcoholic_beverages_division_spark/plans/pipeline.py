@@ -6,8 +6,9 @@ over parquet lakehouse tables.
 Write layout is chosen for 100 TB, not for the local testdata:
 
 - the fact table is partitioned by ``sale_year`` (at production scale:
-  by date) so incremental loads append new partitions and
-  time-predicated queries prune old ones;
+  by date) so time-predicated queries prune old partitions. Incremental
+  loads do not touch it: ``streaming.load_or_update`` appends to its
+  own target, partitioned by the load's date column;
 - dimensions are small unpartitioned parquet. This full load overwrites
   each table in place, one after another, so a crash mid-build can
   leave tables of two builds side by side. The streaming SCD2 merge

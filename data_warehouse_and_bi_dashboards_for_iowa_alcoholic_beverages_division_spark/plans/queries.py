@@ -12427,11 +12427,10 @@ def _q226_oracle(tombstone_pred: str = "neighbor_id % 7 = 3") -> str:
 def q226(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _t(spark, sf_dir, "embeddings")
     nc = similarity.derived_n_cells(_scalar_count(emb))
-    # deterministic per-SF path (the q156 leak note): build OVERWRITES,
-    # but does NOT clear a leftover tombstone sidecar — a dedicated
-    # path (not q220's) keeps the two queries independent, and re-runs
-    # stay convergent because the delete's anti-join dedup makes the
-    # same tombstone set a no-op on the second pass
+    # deterministic per-SF path (the q156 leak note): build OVERWRITES
+    # the index and drops its tombstones, so a re-run starts from the
+    # same state; a dedicated path (not q220's) keeps the two queries
+    # independent
     path = _scratch_index_path("ivf2_del", sf_dir)
     similarity.build_ivf2_index(
         emb, path, n_cells=nc, iters=2, train_where="vec_id % 16 = 0"
@@ -12548,10 +12547,9 @@ def _updated_vectors(emb: DataFrame) -> DataFrame:
 )
 def q228(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _t(spark, sf_dir, "embeddings")
-    # deterministic per-SF path (the q156 leak note): build OVERWRITES;
-    # re-runs converge because the update's delete/micro-compact pair
-    # is idempotent against the freshly rebuilt index (no batch_token:
-    # a recorded token would no-op the append after the rebuild)
+    # deterministic per-SF path (the q156 leak note): build OVERWRITES
+    # the index and drops its tombstones and batch tokens, so a re-run
+    # starts from the same state
     path = _scratch_index_path("ivf_upd", sf_dir)
     similarity.build_ivf_index(
         emb, path, n_cells=8, iters=2, train_where="vec_id % 16 = 0"

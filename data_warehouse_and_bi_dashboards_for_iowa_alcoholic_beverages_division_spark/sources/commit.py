@@ -1,8 +1,9 @@
 """One commit protocol for every table write that must not leave a
 torn table behind: the SCD2 dimension rewrite (``streaming.scd_stream``),
 the fact append (``streaming.incremental.load_or_update``), small-file
-compaction (``sources.maintenance.compact_table``) and IVF cell
-maintenance (``operators.similarity``). All of them call :func:`write`:
+compaction (``sources.maintenance.compact_table``) and IVF cell and
+sidecar maintenance (``operators.similarity``). All of them call
+:func:`write`:
 
 1. the new files are written into the hidden stage ``<path>/.maint-tmp``.
    Spark's file index, :func:`_hidden` and the listing watermark skip
@@ -21,6 +22,8 @@ therefore serve every writer with no mode flag: a whole-table replace
 retires every live file, an IVF cell rewrite retires the files of its
 cells, and an append retires nothing. A write that adds no row and
 retires nothing has nothing to publish: its stage rolls back.
+:func:`drop` is the same commit with nothing staged: it retires every
+live file, and the table then reads as absent.
 
 :func:`recover` converges any crash point:
 
@@ -235,6 +238,18 @@ def write(
         _write_intent(spark, stage, retire)
         _roll_forward(fs, root, retire)
     return n
+
+
+def drop(spark, path: str) -> None:
+    """Retire every live data file of the table at ``path`` in one
+    commit: an intent naming them all over an empty stage, then the
+    roll-forward. The table then reads as :func:`absent`. The caller
+    has run :func:`recover`, as before :func:`write`."""
+    retire = sorted(live_files(spark, path))
+    if retire:
+        _write_intent(spark, stage_path(path), retire)
+        fs, root = _hadoop_fs(spark, path)
+        _roll_forward(fs, root, retire)
 
 
 def _write_intent(spark, stage: str, retire: list[str]) -> None:

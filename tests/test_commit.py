@@ -1,5 +1,5 @@
 """One commit protocol for every table write (``sources.commit``): a
-crash at any point of any of the four writers converges.
+crash at any point of any of the five writers converges.
 
 Each case runs one writer from the same starting state twice: once
 cleanly, and once with a crash injected at one of three points:
@@ -18,6 +18,7 @@ Re-running the writer equals the clean run row for row and leaves no
 stage.
 """
 
+import contextlib
 import datetime
 import glob
 import os
@@ -32,6 +33,8 @@ from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spar
     build_ivf_index,
     compact_ivf_index,
     delete_from_ivf_index,
+    query_ivf_index,
+    rebalance_ivf_index,
 )
 from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spark.sources import commit
 from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spark.sources.maintenance import (
@@ -96,11 +99,30 @@ def _ivf_compaction(spark, root):
     return path, lambda: compact_ivf_index(spark, path)
 
 
+def _ivf_tombstone_sidecar(spark, root):
+    """A micro-compaction whose list commit has landed and whose
+    tombstone-sidecar commit is left: ids 200-209 are tombstoned but
+    hold no row, so the run only rewrites the sidecar without them and
+    keeps every other tombstone."""
+    rng = random.Random(7)
+    emb = spark.createDataFrame(
+        [(i, [rng.uniform(-1, 1) for _ in range(8)]) for i in range(120)], "vec_id long, embedding array<float>"
+    )
+    path = str(root / "idx")
+    build_ivf_index(emb, path, n_cells=4, iters=1)
+    delete_from_ivf_index(emb.where("vec_id % 5 = 0"), path)
+    gone = spark.range(200, 210).withColumnRenamed("id", "vec_id")
+    delete_from_ivf_index(gone, path)
+    only = gone.withColumnRenamed("vec_id", "neighbor_id")
+    return path + "_tombstones", lambda: compact_ivf_index(spark, path, only_ids=only)
+
+
 WRITERS = {
     "dimension_drain": _dimension_drain,
     "fact_append": _fact_append,
     "compact_table": _compact_table,
     "ivf_compaction": _ivf_compaction,
+    "ivf_tombstone_sidecar": _ivf_tombstone_sidecar,
 }
 
 
@@ -213,3 +235,49 @@ def test_write_retiring_every_file_of_a_partition_drops_its_directory(spark, tmp
     assert not os.path.exists(os.path.join(path, "p=a"))
     assert [tuple(r) for r in spark.read.parquet(path).collect()] == [(3, "b")]
     assert not os.path.exists(commit.stage_path(path))
+
+
+@contextlib.contextmanager
+def _failing_parquet_writes(spark):
+    """Every parquet write job fails in its tasks, after Spark planned
+    it: the codec is valid to the planner but absent at run time."""
+    key = "spark.sql.parquet.compression.codec"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "lzo")
+    try:
+        yield
+    finally:
+        spark.conf.set(key, prev)
+
+
+def test_failed_sidecar_write_leaves_the_sidecar_as_it_was(spark, tmp_path):
+    """A sidecar rewrite whose job fails leaves the live sidecar as it
+    was; an in-place overwrite deletes it before the job runs. So a
+    failed micro-compaction keeps every tombstone and a failed
+    rebalance keeps the centroids. The next operation recovers both
+    stages and converges."""
+    tombstones, micro_compact = _ivf_tombstone_sidecar(spark, tmp_path)
+    path = tombstones.removesuffix("_tombstones")
+    tombs_before = _view(spark, tombstones)
+    cents_before = _view(spark, path + "_centroids")
+
+    with _failing_parquet_writes(spark), pytest.raises(Exception):
+        micro_compact()
+    assert _view(spark, tombstones) == tombs_before
+    # the tombstoned ids stay hidden from queries
+    queries = spark.read.parquet(path).where("neighbor_id IN (1, 2)")
+    queries = queries.selectExpr("neighbor_id AS vec_id", "c_vec AS embedding")
+    hits = query_ivf_index(queries, path, k=119, n_probe=4)
+    found = {int(r["neighbor_id"]) for r in hits.collect()}
+    assert found and not found & {r[0] for r in tombs_before[0]}
+
+    with _failing_parquet_writes(spark), pytest.raises(Exception):
+        rebalance_ivf_index(spark, path)
+    assert _view(spark, path + "_centroids") == cents_before
+
+    micro_compact()
+    assert sorted(r[0] for r in _view(spark, tombstones)[0]) == list(range(0, 120, 5))
+    assert rebalance_ivf_index(spark, path)["new_cells"]
+    assert len(_view(spark, path + "_centroids")[0]) > len(cents_before[0])
+    for table in (tombstones, path + "_centroids"):
+        assert not os.path.exists(commit.stage_path(table))

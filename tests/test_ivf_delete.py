@@ -14,10 +14,14 @@ import glob
 import hashlib
 import os
 import pathlib
+import random
 
 import pyspark.sql.functions as F
+import pytest
 
 from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spark.operators.similarity import (
+    append_to_ivf_index,
+    build_ivf2_index,
     build_ivf_index,
     compact_ivf_index,
     delete_from_ivf_index,
@@ -533,3 +537,27 @@ def test_tombstone_audit_trigger_fires_over_ten_percent(spark, tmp_path):
     # the quiet case above would ALSO have found work — by design)
     stats = compact_ivf_index(spark, path)
     assert stats["rows_removed"] == len(loud)
+
+
+@pytest.mark.parametrize("build", [build_ivf_index, build_ivf2_index])
+def test_rebuild_drops_the_old_tombstones_and_batch_tokens(spark, tmp_path, build):
+    """A build at an existing path starts a new generation: the old
+    index's tombstones must not hide, or let compaction remove, rows
+    of the new build, and its batch tokens must not skip an append."""
+    rng = random.Random(3)
+    vecs = spark.createDataFrame(
+        [(i, [rng.uniform(-1, 1) for _ in range(8)]) for i in range(130)], "vec_id long, embedding array<float>"
+    )
+    corpus, extra = vecs.where("vec_id < 120"), vecs.where("vec_id >= 120")
+    path = str(tmp_path / "idx")
+    build(corpus, path, n_cells=4, iters=1)
+    delete_from_ivf_index(corpus.where("vec_id < 10"), path)
+    append_to_ivf_index(extra, path, batch_token="t1")
+
+    build(corpus, path, n_cells=4, iters=1)
+    # each query excludes itself, so two queries cover every id
+    hits = query_ivf_index(corpus.where("vec_id < 2"), path, k=119, n_probe=4, n_super_probe=4)
+    assert {int(r["neighbor_id"]) for r in hits.collect()} == set(range(120))
+    assert compact_ivf_index(spark, path)["rows_removed"] == 0
+    append_to_ivf_index(extra, path, batch_token="t1")
+    assert _ids(spark, path) == set(range(130))

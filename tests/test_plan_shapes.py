@@ -12,7 +12,9 @@ refactor could silently lose:
 """
 
 import contextlib
+import importlib.util
 import io
+import os
 import re
 
 import pytest
@@ -1071,33 +1073,40 @@ PYTHON_EVAL_CARRIERS = {
     "q222_multimodal_curation": "Arrow mapInPandas real P6 decode feeding the text+image curation join",
 }
 
-_PY_NODES = (
-    "BatchEvalPython", "ArrowEvalPython", "MapInPandas",
-    "FlatMapGroupsInPandas", "PythonUDTF", "MapInArrow",
-)
+def _plan_census_tool():
+    path = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools", "plan_census.py")
+    spec = importlib.util.spec_from_file_location("plan_census", path)
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod
+
+
+census_tool = _plan_census_tool()
 
 
 @pytest.fixture(scope="module")
 def registry_walk(spark):
-    """One walk over every registered query: ``(executed plans, output
-    dtypes)`` by name — shared by the registry-wide audits below (the
-    walk dominates their cost)."""
-    from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spark.plans.queries import (
-        release_persisted,
-    )
-
-    plans, dtypes = {}, {}
-    for name, spec in registry().items():
-        df = spec.fn(spark, SF_DIR)
-        plans[name] = df._jdf.queryExecution().executedPlan().toString()
-        dtypes[name] = df.dtypes
-        release_persisted()
-    return plans, dtypes
+    """One walk over every registered query (``tools/plan_census.py``):
+    ``(census, output dtypes)`` by name — shared by the registry-wide
+    audits below (the walk dominates their cost)."""
+    return census_tool.walk(spark)
 
 
 @pytest.fixture(scope="module")
-def registry_plans(registry_walk):
+def registry_census(registry_walk):
     return registry_walk[0]
+
+
+def test_plan_census_matches_checked_in(registry_census):
+    """Every registered query's node counts and build actions equal the
+    checked-in ``PLAN_CENSUS.json``. A plan-affecting change
+    regenerates the file (``python tools/plan_census.py``) and commits
+    it with the change, so the plan change shows up in review."""
+    changes = census_tool.diff(census_tool.load(), registry_census)
+    assert not changes, (
+        "physical plans differ from PLAN_CENSUS.json — if intended, run "
+        "python tools/plan_census.py and commit the file:\n" + "\n".join(changes)
+    )
 
 
 def test_no_registered_query_terminates_in_decimal(registry_walk):
@@ -1117,19 +1126,10 @@ def test_no_registered_query_terminates_in_decimal(registry_walk):
     assert not offenders, f"decimal terminal columns: {offenders}"
 
 
-def _unpartitioned_window_count(plan: str) -> int:
-    n = 0
-    for m in re.finditer(r"windowspecdefinition\(", plan):
-        first = plan[m.end():m.end() + 200].split(",", 1)[0]
-        if first.startswith("specifiedwindowframe") or " ASC" in first or " DESC" in first:
-            n += 1
-    return n
-
-
-def test_registry_unpartitioned_windows_are_allowlisted(registry_plans):
+def test_registry_unpartitioned_windows_are_allowlisted(registry_census):
     offenders, stale = [], []
-    for name, plan in registry_plans.items():
-        n = _unpartitioned_window_count(plan)
+    for name, counts in registry_census.items():
+        n = counts.get(census_tool.UNPARTITIONED_WINDOW, 0)
         if n and name not in UNPARTITIONED_WINDOW_CARRIERS:
             offenders.append(f"{name}: {n} unpartitioned window(s)")
         if not n and name in UNPARTITIONED_WINDOW_CARRIERS:
@@ -1143,19 +1143,19 @@ def test_registry_unpartitioned_windows_are_allowlisted(registry_plans):
     assert not stale, f"allowlist entries no longer carrying a window: {stale}"
 
 
-def test_registry_has_zero_cartesian_products(registry_plans):
+def test_registry_has_zero_cartesian_products(registry_census):
     # a CartesianProduct is |left| x |right| work AND memory with no
     # key to partition on — there is no corpus size at which one is
     # acceptable in this registry (bounded scalar cross joins plan as
     # BroadcastNestedLoopJoin, which is allowed)
-    offenders = [n for n, p in registry_plans.items() if "CartesianProduct" in p]
+    offenders = [n for n, c in registry_census.items() if c.get("CartesianProduct")]
     assert not offenders, f"CartesianProduct in: {offenders}"
 
 
-def test_registry_python_eval_only_in_media_queries(registry_plans):
+def test_registry_python_eval_only_in_media_queries(registry_census):
     offenders, stale = [], []
-    for name, plan in registry_plans.items():
-        nodes = [nd for nd in _PY_NODES if nd in plan]
+    for name, counts in registry_census.items():
+        nodes = [nd for nd in census_tool.PY_NODES if counts.get(nd)]
         if nodes and name not in PYTHON_EVAL_CARRIERS:
             offenders.append(f"{name}: {nodes}")
         if not nodes and name in PYTHON_EVAL_CARRIERS:

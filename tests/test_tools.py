@@ -22,3 +22,46 @@ def test_profile_rest_timestamp_keeps_milliseconds():
     assert ts("2026-10-17T01:25:27.123GMT") == want
     assert ts("2026-10-17T01:25:28.004GMT") - ts("2026-10-17T01:25:27.999GMT") == pytest.approx(0.005, abs=1e-6)
     assert ts(None) is None
+
+
+_CANNED_PLAN = """\
+AdaptiveSparkPlan isFinalPlan=false
++- Window [rank(v#3) windowspecdefinition(v#3 DESC NULLS LAST, specifiedwindowframe(RowFrame, unboundedpreceding$(), currentrow$())) AS r#9], [v#3 DESC NULLS LAST]
+   +- *(2) Sort [v#3 DESC NULLS LAST], false, 0
+      +- Exchange SinglePartition, ENSURE_REQUIREMENTS, [plan_id=41]
+         +- BroadcastHashJoin [k#1], [k#2], Inner, BuildRight, false
+            :- Union
+            :  :- Exchange hashpartitioning(k#1, 8), ENSURE_REQUIREMENTS, [plan_id=30]
+            :  :  +- FileScan parquet [k#1,v#3] Batched: true, DataFilters: [], Format: Parquet
+            :  +- ReusedExchange [k#1, v#3], Exchange hashpartitioning(k#1, 8), ENSURE_REQUIREMENTS, [plan_id=30]
+            +- BroadcastExchange HashedRelationBroadcastMode(List(input[0, bigint, false]),false), [plan_id=40]
+               +- InMemoryTableScan [k#2]
+                     +- InMemoryRelation [k#2], StorageLevel(disk, memory, deserialized, 1 replicas)
+                           +- AdaptiveSparkPlan isFinalPlan=true
+                              +- == Final Plan ==
+                                 ResultQueryStage 1
+                                 +- ShuffleQueryStage 0
+                                    +- Exchange hashpartitioning(k#2, 8), ENSURE_REQUIREMENTS, [plan_id=12]
+                                       +- *(1) Scan ExistingRDD[k#2]
+                              +- == Initial Plan ==
+                                 Window [row_number() windowspecdefinition(k#2, k#2 ASC NULLS FIRST, specifiedwindowframe(RowFrame, unboundedpreceding$(), currentrow$())) AS n#5], [k#2], [k#2 ASC NULLS FIRST]
+                                 +- Exchange hashpartitioning(k#2, 8), ENSURE_REQUIREMENTS, [plan_id=12]
+                                    +- Scan ExistingRDD[k#2]
+"""
+
+
+def test_plan_census_counts_nodes_not_substrings():
+    # ReusedExchange and BroadcastExchange are not Exchanges; nodes of a
+    # cached relation count once, from its initial plan; only the
+    # outer window is unpartitioned
+    counts = _tool("plan_census").node_counts(_CANNED_PLAN)
+    assert counts == {
+        "BroadcastExchange": 1,
+        "BroadcastHashJoin": 1,
+        "Exchange": 3,
+        "FileScan": 1,
+        "InMemoryRelation": 1,
+        "Scan": 1,
+        "UnpartitionedWindow": 1,
+        "Window": 2,
+    }

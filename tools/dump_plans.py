@@ -1,111 +1,40 @@
-"""Dump the physical plans of the headline queries to PLANS.md.
+"""Print the formatted physical plan of registered queries at sf0.001.
 
-Evidence artifact: shows (without re-running anything) that the
-scale-critical plan properties hold — broadcast dim joins, pushed
-filters, pruned scans, partial aggregation, TakeOrderedAndProject.
-Regenerate after plan-affecting changes:
+    python tools/dump_plans.py NAME [NAME ...]
 
-    python tools/dump_plans.py            # writes /root/repo/PLANS.md
+The node counts of every query are checked in as PLAN_CENSUS.json
+(``tools/plan_census.py``); this prints the full text on demand.
 """
 
 from __future__ import annotations
 
-import contextlib
-import io
 import os
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spark import get_spark
-from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spark.plans.queries import registry
-
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-
-HEADLINE = [
-    ("q01_pricing_summary", "filter pushdown + partial agg + codegen"),
-    ("q23_star_weekday", "star join: every dim broadcast, fact never shuffles"),
-    ("q22_scd_as_of", "as-of interval join as a single broadcast hash join"),
-    ("q09_topn_parts", "top-N compiles to TakeOrderedAndProject, no global sort"),
-    ("q26_rollup_geo", "ROLLUP via a single Expand + one shuffle"),
-    ("q35_minhash_lsh", "dedup: narrow (band,bucket) shuffle, inline pair expansion"),
-    ("q64_moving_window", "time RANGE frame: one shuffle on the partition key"),
-    ("q76_corpus_curation", "composed curation pipeline: only the fingerprint groupBy and language rollup shuffle"),
-    ("q80_local_supplier_volume", "6-way snowflake join: all five dims broadcast, fact never shuffles"),
-    ("q83_disjunctive_filter", "OR-of-ANDs split into per-side disjuncts pushed into both parquet scans"),
-    ("q85_decontamination", "eval side broadcast; corpus shuffle carries md5-prefix keys, not gram text"),
-    ("q88_customer_distribution", "Q13: orders pre-aggregated before the customer join; priority filter pushed"),
-    ("q91_top_supplier", "Q15: scalar MAX as a window over the small agg — one lineitem scan, not two"),
-    ("q93_waiting_suppliers", "Q21: EXISTS/NOT EXISTS planned as left-semi / left-anti joins"),
-    ("q100_sequence_packing", "sequence packing: one exchange total — the (lang, pack_id) agg reuses the window's lang partitioning"),
-    ("q102_tfidf_terms", "TF-IDF: single corpus explode; DF from a vocabulary window; WindowGroupLimit pushes top-5 below the final exchange"),
-    ("q103_domain_mixture", "domain mixing: pure map + generate, zero exchanges"),
-    ("q110_min_cost_supplier", "Q2: one shuffle feeds both the pair aggregate and the per-part window MIN (subset-partitioning reuse)"),
-    ("q113_important_parts", "Q11: grand-total scalar reuses the per-part agg exchange (AQE ReusedExchange), joined as a one-row broadcast"),
-    ("q121_range_join", "interval-overlap range join: bucket-explode both sides, equi-join on bucket, emit-once dedup — no nested-loop theta join"),
-    ("q127_char_entropy", "char entropy: map-side partial (doc,char) counts — the exchange carries histogram rows, never exploded characters"),
-    ("q156_ivf_persisted", "persisted IVF index: the probed cell ids are a static PartitionFilters on the inverted-list scan — only n_probe/n_cells of the corpus files are read"),
-    ("q157_skew_join_salted", "hot-key mitigation: deterministic 8-way salt fans the 90%-one-key fact side across tasks; join key is (key, salt)"),
-    ("q158_skew_join_aqe", "same skewed join left to AQE: sort-merge with runtime skew-split of the oversized shuffle partition"),
-    ("q159_bloom_prune_join", "bloom runtime filter: probe is a scan-stage literal-array filter; FP-removal semi join broadcasts the dim"),
-    ("q160_bm25_topk", "BM25: query-term filter before any shuffle; df/corpus stats broadcast; top-k is TakeOrderedAndProject"),
-    ("q161_kmv_distinct", "KMV sketch: global k-min is a per-partition heap (TakeOrderedAndProject), no full sort"),
-    ("q163_pagerank", "PageRank: per-iteration partial ObjectHashAggregate; rank vector and edge list shuffle, never the corpus"),
-    ("q164_histogram_quantiles", "mergeable histogram: partial map-side counts; quantile walk over the ~120-row bin vector"),
-    ("q165_boilerplate_ngrams", "boilerplate mining: distinct-per-doc gram arrays, partial groupBy, TakeOrderedAndProject"),
-    ("q166_hybrid_rrf", "hybrid RRF: two bounded rank lists full-outer-joined; top-k is TakeOrderedAndProject"),
-    ("q167_hard_negatives", "hard negatives: broadcast-queries band scoring, corpus never shuffles"),
-    ("q169_incremental_agg_merge", "incremental agg maintenance: partial aggs + one full outer join on the group key"),
-    ("q177_pq_adc", "product quantization: ADC over broadcast queries x code table, corpus vectors untouched at query time"),
-    ("q178_ivfpq", "IVFPQ: probed queries equi-join the code table on cell; candidates ranked by ADC lookups"),
-    ("q191_pii_redaction", "PII scrub: zero exchanges, 2-column pruned scan, replace chain materialized once in its own projection"),
-    ("q192_repeated_spans", "repeated spans: one shuffle on 16-hex md5-prefix keys (never span text); top-100 is TakeOrderedAndProject"),
-    ("q193_touch_attribution", "attribution: one events scan, one (user_id) exchange, one Window computing first+last touch together"),
-    ("q188_shingle_containment", "containment: candidates from capped MinHash bands over leading windows (linear in the signature stream); shingles computed once per candidate MEMBER behind a left-semi restriction, never per pair"),
-    ("q196_leakage_safe_split", "leakage-safe split: one window over the fingerprint equivalence class — no pairs, no graph, linear at any scale"),
-    ("q197_span_corruption", "T5 span corruption: both rewritten streams from higher-order functions in one zero-shuffle codegen pass"),
-    ("q198_ann_recall", "ANN recall@10: broadcast query batch on both paths, WindowGroupLimit partial top-k — the corpus never shuffles"),
-    ("q204_decile_thresholds", "exact decile banding with ZERO WindowExec: domain-bounded histogram refinement, every self-join broadcast — the registered scale-safe form of global decile banding (ntile funnel: plans/funnels.py)"),
-    ("q206_rfm_distributed", "full RFM quintile grid on the window-free threshold operator: three banded measures, no single-partition funnel anywhere"),
-    ("q207_batch_padding_distributed", "length-bucketed batch padding with ZERO WindowExec: rank-interval arithmetic over the bounded token-count histogram, broadcast-only joins — the registered scale-safe form of length-bucketed batching (ntile funnel: plans/funnels.py)"),
-    ("q208_ivf_derived_cells", "IVF with sqrt(N)-derived cell count: capacity scales with cardinality, probes broadcast, inverted lists bucket cleanly"),
-    ("q209_ivfpq_recall", "IVFPQ recall@10: both rankings over broadcast queries; the corpus contributes codes, never re-shuffled vectors"),
-    ("q202_source_overlap", "cross-source near-dup overlap: verify joins shuffle 60-bit shingle FINGERPRINTS (8 B each), never shingle text — pair-linear bytes at any corpus size"),
-    ("q212_hierarchical_ivf", "hierarchical IVF: map-only two-level routing — broadcast supercell argmax then a per-super broadcast member fold; no corpus vector ever shuffles during assignment"),
-    ("q224_ivf_delete", "IVF tombstone delete: the tombstone filter sits BELOW the O(n_cells) assignment fold — deleted rows are never scored; quantizer frozen, candidates map-only"),
-    ("q225_tombstone_debt", "tombstone-debt audit: one column-pruned assignment aggregate; index-wide share/trigger as unpartitioned windows over the bounded ≤n_cells result"),
-    ("q226_ivf2_delete", "hierarchical tombstone delete: probed-cell PartitionFilters on the list scan + broadcast tombstone anti-join below the scoring join"),
-    ("q227_ivf2_occupancy", "hierarchical occupancy audit: map-only two-level routing into one bounded aggregate; windows over ≤ n_cells rows"),
-    ("q214_recall_probe_sweep", "recall-vs-probe curve: the inverted lists and exact baseline are cached InMemoryRelations reused by every combo — C combos cost C broadcast query-side probes, not C corpus scans"),
-    ("q215_ivf2_derived_probes", "capacity-derived probing: widths are plan literals derived from the trained quantizer sizes — the probed fraction (and the plan shape) is scale-invariant"),
-    ("q217_ppm_decode", "REAL image decode: render + parse as two scan-partitioned Arrow MapInPandas stages — zero exchanges, embarrassingly parallel at any corpus size"),
-    ("q219_ppm_frame_sample", "REAL container frame sampling: flat-map MapInPandas (1 stream → N frames) with header-discovered boundaries — zero exchanges"),
-    ("q228_ivf_update", "in-place update: micro-compaction rewrote ONLY the updated ids' cells before this query plan — the query itself is q156's pruned-scan shape (probed-cell PartitionFilters, broadcast query batch)"),
-    ("q229_ivf2_update", "hierarchical in-place update: same micro-compaction + fresh O(sqrt n_cells) routing of the batch; query keeps the two-level PartitionFilters + broadcast probes"),
-]
+from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spark.plans.queries import (
+    registry,
+    release_persisted,
+)
+from plan_census import SF_DIR
 
 
 def main() -> None:
-    spark = get_spark("plan-dump", cores=8)
+    names = sys.argv[1:]
+    if not names:
+        sys.exit(__doc__)
     reg = registry()
-    out = [
-        "# PLANS — headline physical plans (generated by tools/dump_plans.py)",
-        "",
-        f"Input: `{SF_DIR}`. Each section names the scale property the plan",
-        "demonstrates; the same properties are pinned as assertions in",
-        "`tests/test_plan_shapes.py`.",
-        "",
-    ]
-    for name, prop in HEADLINE:
-        df = reg[name].fn(spark, SF_DIR)
-        buf = io.StringIO()
-        with contextlib.redirect_stdout(buf):
-            df.explain("formatted")
-        out += [f"## {name}", "", f"**Property:** {prop}", "", "```", buf.getvalue().rstrip(), "```", ""]
-    path = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "PLANS.md")
-    with open(path, "w") as f:
-        f.write("\n".join(out))
-    print(f"wrote {path} ({len(HEADLINE)} plans)")
+    unknown = [n for n in names if n not in reg]
+    if unknown:
+        sys.exit(f"not registered: {', '.join(unknown)}")
+    spark = get_spark("plan-dump", cores=8)
+    for name in names:
+        print(f"== {name} ==")
+        reg[name].fn(spark, SF_DIR).explain("formatted")
+        release_persisted()
+    spark.stop()
 
 
 if __name__ == "__main__":
