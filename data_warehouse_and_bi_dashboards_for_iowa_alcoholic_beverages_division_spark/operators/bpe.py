@@ -195,12 +195,3 @@ def bpe_train_batched(
             vocab = vocab.withColumn("toks", _merge_pair_expr(F.col("toks"), left, right))
     return merges
 
-
-def bpe_encode_expr(col: str, merges: list[tuple[int, str, str, int]]) -> Column:
-    """Tokenize a word column with learned merges, applying each rule
-    in rank order — the inference twin of :func:`bpe_train`, still a
-    pure Column expression."""
-    toks = _chars_expr(col)
-    for _, left, right, _ in merges:
-        toks = _merge_pair_expr(toks, left, right)
-    return toks

@@ -36,21 +36,6 @@ def exact_dedup_keys(df: DataFrame, id_col: str, text_col: str = "text") -> Data
     )
 
 
-def char_shingles_expr(text_col: str, k: int = 9) -> Column:
-    """Distinct k-character shingles of the lowercased text, computed
-    with ``sequence`` + ``transform`` — JVM-side, no explode needed.
-
-    HOT-PATH WARNING: ``lower(text)`` is inlined in the transform
-    lambda, so it re-evaluates once per shingle (O(len²) per doc —
-    measured 49 s vs ~3 s over a 35k-doc member set). Fine for tiny
-    inputs and tests; in any per-corpus path, project the lowered
-    text into its own column first and shingle THAT (what
-    ``minhash_signatures`` and ``ngram_jaccard_pairs`` do)."""
-    t = F.lower(F.col(text_col))
-    n = F.greatest(F.length(t) - F.lit(k - 1), F.lit(1))
-    return F.array_distinct(F.transform(F.sequence(F.lit(1), n), lambda i: F.substring(t, i, k)))
-
-
 # --- engine-portable MinHash hash family --------------------------------
 # Base hash: 60-bit md5 prefix reduced mod 2^30; per-seed family:
 # (a_i * h + b_i) mod (2^31 - 1) with a_i, b_i < 2^30 from the splitmix
@@ -257,7 +242,7 @@ def minhash_lsh_candidates(
     (band, bucket, doc) stream. Per-bucket pair count is O(s²) in
     bucket size either way — at 100 TB pass ``max_bucket_size`` to cap
     pathological buckets (boilerplate-heavy corpora) and report the
-    capped ones via :func:`oversized_lsh_buckets`.
+    capped ones via :func:`lsh_bucket_size_histogram`.
     """
     banded = _banded_docs(
         df, id_col, text_col, n_hashes, bands, shingle_k, base_hash, family, band_bucket
@@ -283,34 +268,6 @@ def minhash_lsh_candidates(
     )
 
 
-def oversized_lsh_buckets(
-    df: DataFrame,
-    id_col: str,
-    text_col: str = "text",
-    n_hashes: int = 32,
-    bands: int = 8,
-    shingle_k: int = 9,
-    max_bucket_size: int = 1000,
-    base_hash=None,
-    family=None,
-    band_bucket=None,
-) -> DataFrame:
-    """Audit companion to ``max_bucket_size``: (band, bucket, size) for
-    every bucket over the cap, so a capped run can report exactly what
-    it skipped (no silent truncation). Pass the SAME hash-family
-    parameters as the capped candidate run — both go through
-    :func:`_banded_docs`, so matching parameters audit exactly the
-    buckets that were capped."""
-    banded = _banded_docs(
-        df, id_col, text_col, n_hashes, bands, shingle_k, base_hash, family, band_bucket
-    )
-    return (
-        banded.groupBy("band", "bucket")
-        .agg(F.count(F.lit(1)).alias("size"))
-        .where(F.col("size") > max_bucket_size)
-    )
-
-
 def lsh_bucket_size_histogram(
     df: DataFrame,
     id_col: str,
@@ -324,14 +281,13 @@ def lsh_bucket_size_histogram(
     band_bucket=None,
 ) -> DataFrame:
     """Bucket-size histogram for a banded run: (size, n_buckets,
-    over_cap) per distinct bucket size. The non-vacuous form of the
-    :func:`oversized_lsh_buckets` audit — healthy corpora report a
-    real distribution every run (so the audit query itself is
-    value-checkable), and any ``over_cap`` row is recall the capped
-    candidate run silently skipped. Pass the SAME hash-family
-    parameters as the capped run — both go through
-    :func:`_banded_docs`, so the histogram describes exactly the
-    buckets that were capped."""
+    over_cap) per distinct bucket size: the audit companion to
+    ``max_bucket_size``. Healthy corpora report a real distribution
+    every run (so the audit query itself is value-checkable), and any
+    ``over_cap`` row is recall the capped candidate run skipped. Pass
+    the SAME hash-family parameters as the capped run — both go
+    through :func:`_banded_docs`, so the histogram describes exactly
+    the buckets that were capped."""
     banded = _banded_docs(
         df, id_col, text_col, n_hashes, bands, shingle_k, base_hash, family, band_bucket
     )
@@ -419,9 +375,9 @@ def ngram_jaccard_pairs(
     Two measured hot-path rules (sf1.0, 35k members, 174k pairs):
 
     - The lowered text is projected BEFORE the shingle lambda.
-      ``char_shingles_expr`` inlines ``lower(text)`` inside the
-      ``transform`` body, which re-evaluates the full-document
-      lowercase once PER SHINGLE — 49.3 s vs ~2 s for the member set.
+      Inlining ``lower(text)`` inside the ``transform`` body
+      re-evaluates the full-document lowercase once PER SHINGLE —
+      49.3 s vs ~2 s for the member set.
       (Same pitfall ``minhash_signatures`` documents; q188 fixed its
       own copy in round 6, this is the shared-operator fix.)
     - |A∪B| is computed as |A|+|B|−|A∩B| from per-member distinct

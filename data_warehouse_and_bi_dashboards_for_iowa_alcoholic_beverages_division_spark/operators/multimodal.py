@@ -46,12 +46,6 @@ def documents_as_media(df: DataFrame, id_col: str = "doc_id", payload_col: str =
     )
 
 
-def real_decode_stub(payload: bytes) -> dict:
-    """Where a real codec plugs in (PIL.Image.open / soundfile /
-    pyav). Deliberately unimplemented in this container."""
-    raise NotImplementedError("media codecs are not available in this environment")
-
-
 def fake_decode(payload: bytes) -> dict:
     """Deterministic stand-in decoder: derives pseudo width/height/
     duration from the payload bytes so the full pipeline (schema,

@@ -2,7 +2,7 @@
 
 A global ``ntile``/``percent_rank`` is a total order — Spark can only
 plan it as a single-partition WindowExec, which funnels every row
-through one task (the plans/funnels.py scale-killer shape). ``percentile``
+through one task. ``percentile``
 aggregates distribute, but their interpolation arithmetic is not
 bit-portable across engines, and ``approx_percentile`` changes the
 answer. This module computes EXACT rank thresholds (``percentile_disc``

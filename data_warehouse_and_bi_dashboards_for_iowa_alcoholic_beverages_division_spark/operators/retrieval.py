@@ -13,10 +13,7 @@ token-length aggregation (one map-side-combined groupBy on doc_id —
 needed for dl/avgdl regardless of query). Everything query-dependent
 filters to the query's terms *before* any shuffle, so tf/df
 aggregations move only rows whose term is in the query; the df and
-corpus-stats sides are single-row / per-term tiny and broadcast. In a
-real system dl/avgdl would be precomputed once per corpus snapshot —
-the operator takes them as an optional precomputed input for exactly
-that reason.
+corpus-stats sides are single-row / per-term tiny and broadcast.
 
 Cross-engine float parity: each per-term score uses one fixed
 expression tree (identical operand order in the DuckDB oracle), and
@@ -41,12 +38,6 @@ def tokenize(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") ->
     return docs.select(F.col(id_col), F.explode(toks).alias("term")).where(F.col("term") != "")
 
 
-def doc_lengths(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """(id, dl) token counts — the one full-corpus aggregation; at
-    scale this is a precomputed corpus statistic."""
-    return tokenize(docs, id_col, text_col).groupBy(id_col).agg(F.count("*").alias("dl"))
-
-
 def bm25_scores(
     docs: DataFrame,
     query_terms: list[str] | None,
@@ -55,7 +46,6 @@ def bm25_scores(
     b: float = 0.75,
     id_col: str = "doc_id",
     text_col: str = "text",
-    lengths: DataFrame | None = None,
     terms_df: DataFrame | None = None,
 ) -> DataFrame:
     """(id, score) for every document matching at least one query
@@ -65,7 +55,7 @@ def bm25_scores(
     one-column ``terms_df`` (`term`) — the data-dependent form that
     pseudo-relevance-feedback expansion (q180) needs."""
     tok = tokenize(docs, id_col, text_col)
-    dl = lengths if lengths is not None else tok.groupBy(id_col).agg(F.count("*").alias("dl"))
+    dl = tok.groupBy(id_col).agg(F.count("*").alias("dl"))
 
     corpus = docs.agg(F.count("*").alias("n_docs")).crossJoin(
         dl.agg(F.sum("dl").alias("sum_dl"))

@@ -63,13 +63,6 @@ def kmv_merge(partials: DataFrame, k: int) -> DataFrame:
     return partials.select("hv").distinct().orderBy("hv").limit(k)
 
 
-def kmv_estimate(kth_hash: Column, n_in_sketch: Column) -> Column:
-    """(n-1) / normalized largest sketch value — the standard
-    (k-1)/h_(k) estimator when the sketch is full (n = k); callers
-    should treat n < k as "sketch holds the whole set"."""
-    return (n_in_sketch.cast("double") - F.lit(1.0)) / (kth_hash.cast("double") / F.lit(TWO_60))
-
-
 # --- mergeable equi-width histogram → quantile estimates ---------------
 #
 # Fourth member of the sketch family: HLL (counts), Count-Min

@@ -138,42 +138,6 @@ def word_ngrams_all_expr(col: str = "text", n: int = 3) -> Column:
     )
 
 
-
-
-def compression_ratio(docs, id_col: str = "doc_id", text_col: str = "text", level: int = 6):
-    """Per-document zlib compression ratio — the CCNet/Gopher-style
-    quality signal: highly repetitive or templated text compresses far
-    below natural prose, gibberish barely compresses at all. zlib is
-    deterministic for a fixed level, so the scores are reproducible,
-    but no external SQL engine can restate DEFLATE — this operator is
-    pytest-verified (bounds + pure-Python parity) rather than
-    oracle-checked, and stays out of the registry to keep the rows-only
-    set at its pinned five.
-
-    Arrow-batched ``mapInPandas`` (the multimodal codec pattern): the
-    only Python cost is the codec itself, batches never leave their
-    input partition, no shuffle.
-    """
-    import pandas as pd  # noqa: F401 — imported for the iterator contract
-
-    def batches(it):
-        import zlib
-
-        for pdf in it:
-            texts = pdf[text_col].fillna("")
-            raw = texts.str.encode("utf-8").str.len()
-            comp = texts.map(lambda t: len(zlib.compress(t.encode("utf-8"), level)))
-            out = pdf[[id_col]].copy()
-            out["raw_bytes"] = raw.astype("int64")
-            out["compressed_bytes"] = comp.astype("int64")
-            out["ratio"] = out["compressed_bytes"] / out["raw_bytes"].where(out["raw_bytes"] > 0, 1)
-            yield out
-
-    return docs.select(id_col, text_col).mapInPandas(
-        batches, schema=f"{id_col} long, raw_bytes long, compressed_bytes long, ratio double"
-    )
-
-
 def snapshot_diff(old: DataFrame, new: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """Per-source change audit between two corpus snapshots, each given
     as (id, source, f) triples where ``f`` is the normalized-text
@@ -182,12 +146,7 @@ def snapshot_diff(old: DataFrame, new: DataFrame, id_col: str = "doc_id") -> Dat
 
     100 TB shape: callers fingerprint BEFORE calling, so only
     (id, source, 16-byte md5) ever reaches the full-outer join — text
-    never moves. With both snapshots stored bucketed on ``id_col``
-    (``sources.bucketing.write_bucketed``) the join itself is
-    SHUFFLE-FREE: both bucketed scans satisfy the join's required
-    hash-partitioning, so the only exchange left in the whole query is
-    the tiny partial-aggregated (source, status) count — pinned by
-    tests/test_bucketing.py::test_snapshot_diff_bucketed_join_no_shuffle.
+    never moves.
     """
     o = old.select(
         id_col,

@@ -1108,7 +1108,7 @@ def q34(spark: SparkSession, sf_dir: str) -> DataFrame:
     return d.select("doc_id", text.fingerprint_expr().alias("fingerprint"))
 
 
-# DuckDB twin of dedup.char_shingles_expr (k=9): lowercased distinct
+# DuckDB form of the k=9 character shingles: lowercased distinct
 # 9-char shingles; substr past the tail yields the same short shingles
 # Spark's substring does, and the greatest(...,1) floor keeps sub-k
 # texts producing one whole-text shingle on both engines.
@@ -3065,9 +3065,8 @@ def q93(spark: SparkSession, sf_dir: str) -> DataFrame:
 # q94_balance_deciles (global-ntile decile banding) is no longer a
 # registered query: the scale-safe default for decile banding is
 # q204_decile_thresholds (window-free exact-threshold histogram
-# device). The ntile form survives as plans/funnels.py::
-# balance_deciles_funnel, a documented single-partition-window
-# anti-pattern demonstration pinned by tests/test_funnels.py.
+# device). A global ntile plans as a single-partition window, so no
+# registered query uses one.
 
 
 @register(
@@ -4124,9 +4123,25 @@ def q118(spark: SparkSession, sf_dir: str) -> DataFrame:
 # =====================================================================
 
 def _zorder_sql() -> str:
-    from ..sources.layout import zorder_value_sql
+    """Z-order (Morton) value of (partkey, suppkey): the low 10 bits of
+    each key interleaved into one integer.
 
-    return zorder_value_sql("(l_partkey & 1023)", "(l_suppkey & 1023)", 10)
+    Range-clustering on the 1-D Z-value bounds EVERY interleaved
+    dimension per file, so footer min/max statistics skip files for
+    predicates on either column (or both), the same idea as Delta/
+    Iceberg Z-ORDER table maintenance. The expression is plain integer
+    arithmetic, valid verbatim on Spark and DuckDB; its 20 bits cannot
+    overflow under ANSI mode.
+    """
+    # operands are widened to BIGINT so every shift stays in 64-bit
+    # arithmetic (int shifts wrap on Spark and error on DuckDB from
+    # bit 31 up)
+    a, b = "CAST((l_partkey & 1023) AS BIGINT)", "CAST((l_suppkey & 1023) AS BIGINT)"
+    terms = [
+        f"((({a} >> {i}) & 1) << {2 * i + 1}) + ((({b} >> {i}) & 1) << {2 * i})"
+        for i in range(10)
+    ]
+    return "(" + " + ".join(terms) + ")"
 
 
 @register(
@@ -4140,11 +4155,10 @@ def _zorder_sql() -> str:
     "Z-order (Morton) clustering value over (partkey, suppkey): the "
     "SAME integer-arithmetic interleave expression runs verbatim on "
     "both engines. Clustering files on this 1-D value bounds BOTH key "
-    "dimensions per file (sources/layout.py zorder_write), so footer "
-    "stats prune files for predicates on either column — Delta/"
-    "Iceberg-style Z-ORDER maintenance expressed as a pure projection; "
-    "zero shuffles here (the write path adds exactly one range "
-    "exchange)",
+    "dimensions per file, so footer stats prune files for predicates "
+    "on either column — Delta/Iceberg-style Z-ORDER maintenance "
+    "expressed as a pure projection; zero shuffles here (a clustered "
+    "write on it adds exactly one range exchange)",
 )
 def q119(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = _t(spark, sf_dir, "lineitem").where(F.col("l_quantity") > 48)
@@ -7493,12 +7507,10 @@ def q170(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _ntile_batch_padding_oracle() -> str:
     """The NTILE formulation of length-bucketed batch padding — the
-    q207 oracle (window-free Spark plan; also reproduced exactly by
-    plans/funnels.py::length_bucketed_batches_funnel, the demonstration
-    window form): the per-(bucket, batch) padding stats depend only on
-    the token-count MULTISET each batch receives, and ranks are
-    assigned to the sorted token counts, so both plans must reproduce
-    this SQL exactly."""
+    q207 oracle (window-free Spark plan): the per-(bucket, batch)
+    padding stats depend only on the token-count MULTISET each batch
+    receives, and ranks are assigned to the sorted token counts, so the
+    window-free plan reproduces this SQL exactly."""
     return r"""
     WITH tok AS (
       SELECT doc_id,
@@ -7538,9 +7550,7 @@ def _ntile_batch_padding_oracle() -> str:
 # q171_length_bucketed_batches (global-ntile length bucketing) is no
 # longer a registered query: the scale-safe default for batch padding
 # stats is q207_batch_padding_distributed — SAME oracle SQL, identical
-# output rows, zero windows. The ntile form survives as
-# plans/funnels.py::length_bucketed_batches_funnel
-# (tests/test_funnels.py pins exact row equality with q207).
+# output rows, zero windows.
 
 
 def _q172_oracle() -> str:
@@ -8662,10 +8672,7 @@ def q183(spark: SparkSession, sf_dir: str) -> DataFrame:
 # q184_rfm_segments (three global RFM ntiles) is no longer a
 # registered query: the scale-safe default for RFM segmentation is
 # q206_rfm_distributed (window-free per-measure exact-threshold
-# refinement). The ntile form survives as
-# plans/funnels.py::rfm_segments_funnel, a documented single-
-# partition-window anti-pattern demonstration pinned by
-# tests/test_funnels.py.
+# refinement), which plans no single-partition window.
 
 
 # =====================================================================
@@ -10882,8 +10889,8 @@ def _q203_oracle() -> str:
     "a real distribution every run (the audit itself is value-checked, "
     "not vacuously empty), and any over_cap row quantifies exactly the "
     "recall q188's cap skipped - the operational signal to raise the "
-    "cap or widen the banding, same discipline as q35's "
-    "oversized_lsh_buckets and q200's occupancy audit",
+    "cap or widen the banding, same discipline as q200's occupancy "
+    "audit",
 )
 def q203(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = _t(spark, sf_dir, "documents")
@@ -10910,14 +10917,14 @@ def q203(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # =====================================================================
 # Distributed exact percentile banding — the registered, 100 TB-safe
-# form of the global-ntile family (decile and RFM-quintile funnels,
-# now demonstration twins in plans/funnels.py). A global ntile is a
-# total order, which Spark can only plan as a single-partition
-# WindowExec: every per-entity row funnels through ONE task. q204
-# computes the same decile banding with NO window at all — exact
-# thresholds from a two-level value-histogram decomposition whose
-# every intermediate is bounded by the VALUE DOMAIN (cents of a
-# balance), not the row count, so the plan is invariant to data scale.
+# form of the global-ntile family (decile and RFM-quintile banding).
+# A global ntile is a total order, which Spark can only plan as a
+# single-partition WindowExec: every per-entity row funnels through
+# ONE task. q204 computes the same decile banding with NO window at
+# all — exact thresholds from a two-level value-histogram
+# decomposition whose every intermediate is bounded by the VALUE
+# DOMAIN (cents of a balance), not the row count, so the plan is
+# invariant to data scale.
 #
 # Exact <-> ntile boundary difference (documented, deliberate): ntile
 # splits ties across bands by tiebreak to equalize band sizes;
@@ -10978,8 +10985,7 @@ def _q204_oracle() -> str:
     "q204_decile_thresholds",
     _q204_oracle(),
     "Distributed exact decile banding - the registered scale-safe "
-    "form of global decile banding (the ntile funnel is a "
-    "demonstration twin, plans/funnels.py::balance_deciles_funnel), "
+    "form of global decile banding, "
     "with NO window function anywhere "
     "in the plan (the plan-shape test pins zero WindowExec). Exact "
     "decile thresholds via two-level histogram decomposition: "
@@ -11131,9 +11137,8 @@ def _q206_oracle() -> str:
     "q206_rfm_distributed",
     _q206_oracle(),
     "Distributed RFM segmentation - the registered scale-safe form of "
-    "the recency/frequency/monetary quintile grid (the triple-ntile "
-    "funnel is a demonstration twin, plans/funnels.py::"
-    "rfm_segments_funnel) rebuilt on exact window-free rank thresholds "
+    "the recency/frequency/monetary quintile grid "
+    "rebuilt on exact window-free rank thresholds "
     "(operators/quantiles.py, the q204 operator): each measure's "
     "thresholds come from statically-unrolled histogram refinement "
     "(monetary is near-continuous cents, so it refines through four "
@@ -11200,8 +11205,7 @@ def q206(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # =====================================================================
 # Window-free length-bucketed batching — the registered, 100 TB-safe
-# form (the global-ntile funnel is a demonstration twin:
-# plans/funnels.py::length_bucketed_batches_funnel).
+# form of NTILE length bucketing.
 # The insight that removes every window: per-(bucket, batch) padding
 # stats depend only on the token-count MULTISET each batch receives,
 # and the (ntok, doc_id) ranking assigns ntok values to ranks purely
@@ -11217,8 +11221,7 @@ def q206(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "q207_batch_padding_distributed",
     _ntile_batch_padding_oracle(),
-    "Length-bucketed batching, window-free (the ntile funnel twin is "
-    "plans/funnels.py::length_bucketed_batches_funnel): the same "
+    "Length-bucketed batching, window-free: the same "
     "8-bucket NTILE + 32-doc batch padding stats (same oracle SQL) "
     "computed from the bounded token-count histogram instead of "
     "per-row ranks. Rank intervals: each histogram row (ntok, cnt, "

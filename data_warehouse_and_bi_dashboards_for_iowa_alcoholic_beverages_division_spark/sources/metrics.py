@@ -43,20 +43,3 @@ def quality_report(obs: Observation) -> dict:
     """Metrics dict; blocks until the observed action has run."""
     return dict(obs.get)
 
-
-def assert_load_quality(
-    obs: Observation,
-    *,
-    min_rows: int = 1,
-    max_null_fraction: float = 0.0,
-) -> dict:
-    """Fail-fast gate on a finished load: row floor + null budget on
-    every observed ``null_*`` metric. Returns the report on success."""
-    rep = quality_report(obs)
-    n = rep["n_rows"]
-    if n < min_rows:
-        raise ValueError(f"load produced {n} rows; expected >= {min_rows}")
-    for k, v in rep.items():
-        if k.startswith("null_") and n and (v / n) > max_null_fraction:
-            raise ValueError(f"{k}: {v}/{n} nulls exceeds budget {max_null_fraction}")
-    return rep

@@ -5,7 +5,8 @@ import collections
 import pyspark.sql.functions as F
 
 from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spark.operators.bpe import (
-    bpe_encode_expr,
+    _chars_expr,
+    _merge_pair_expr,
     bpe_train,
     bpe_train_batched,
 )
@@ -69,6 +70,15 @@ def test_bpe_train_matches_reference(spark):
     assert got == want
 
 
+def _bpe_encode(col, merges):
+    """Tokenize a word column with learned merges, applying each rule
+    in rank order: the inference side of ``bpe_train``."""
+    toks = _chars_expr(col)
+    for _, left, right, _ in merges:
+        toks = _merge_pair_expr(toks, left, right)
+    return toks
+
+
 def test_bpe_encode_matches_reference_vocab(spark):
     docs = load_table(spark, SF_DIR, "documents")
     merges = bpe_train(docs, n_merges=6, min_pair_count=2)
@@ -81,7 +91,7 @@ def test_bpe_encode_matches_reference_vocab(spark):
     )
     encoded = {
         r["word"]: list(r["toks"])
-        for r in words.select("word", bpe_encode_expr("word", merges).alias("toks")).collect()
+        for r in words.select("word", _bpe_encode("word", merges).alias("toks")).collect()
     }
     assert encoded == ref_vocab
 

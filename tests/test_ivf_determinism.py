@@ -16,6 +16,8 @@ Same policy as tests/test_ts_normalization.py: convert silent
 environment-dependence into a named, diagnosable failure.
 """
 
+from conftest import jobs_of
+
 from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spark.operators.similarity import (
     ivf_train_centroids,
     pq_train,
@@ -532,20 +534,17 @@ def test_query_without_schema_sidecar_falls_back_to_inference(spark, tmp_path, h
 
 @pytest.mark.parametrize("vec_col", ["bad-name", "__ivf_nv"])
 def test_literal_scorers_reject_unsafe_vec_col_before_any_job(spark, vec_col):
-    sc = spark.sparkContext
     cents = [[1.0, 0.0], [0.0, 1.0]]  # under the threshold: literal encoding
     df = spark.createDataFrame([(1, [1.0, 2.0])], f"id BIGINT, `{vec_col}` ARRAY<DOUBLE>")
-    group = f"vec-ident-{vec_col}"
-    try:
-        sc.setJobGroup(group, group)
+
+    def build():
         with pytest.raises(ValueError, match="plain identifier"):
             similarity.with_assigned_cell(df, vec_col, cents)
         with pytest.raises(ValueError, match="plain identifier"):
             similarity.with_probe_cells(df, vec_col, cents, n_probe=1)
-        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
+
+    _, jobs = jobs_of(spark, f"vec-ident-{vec_col}", build)
+    assert jobs == []
 
 
 # ---------------------------------------------------------------------

@@ -7,7 +7,6 @@ from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spar
     documents_as_media,
     extract_features,
     fake_decode,
-    real_decode_stub,
 )
 from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spark.sources.tables import load_table
 
@@ -41,8 +40,14 @@ def test_extract_features_fake_decoder(spark):
 def test_extract_features_stub_decoder_yields_nulls(spark):
     """A decoder without codecs must not fail the job — features come
     back NULL, byte counts still populated."""
+
+    def codec_missing(payload: bytes) -> dict:
+        # where a real codec (PIL.Image.open / soundfile / pyav) plugs
+        # in; nested so the workers get it by value, not by import
+        raise NotImplementedError("no media codec installed")
+
     media = documents_as_media(load_table(spark, SF_DIR, "documents")).limit(10)
-    rows = extract_features(media, decoder=real_decode_stub).collect()
+    rows = extract_features(media, decoder=codec_missing).collect()
     assert len(rows) == 10
     assert all(r["width"] is None and r["height"] is None for r in rows)
     assert all(r["n_bytes"] > 0 for r in rows)

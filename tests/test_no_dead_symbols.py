@@ -1,0 +1,114 @@
+"""Every top-level function and class of the package is reached from
+production code, so code that nothing runs cannot come back unnoticed.
+
+Roots are the module-level code of the production files (every package
+module, ``tools/``, ``perfbench/`` without its tests, ``bench.py`` and
+``__spark_entry__.py``), the ``@register``-ed queries and
+:data:`ALLOWLIST`. A package ``__init__.py`` re-exports by importing at
+module level, so its imports are references; elsewhere a name counts
+only where it is used. The body of a reached symbol reaches every name
+it uses, so a helper called only by dead code is dead too. Names match
+across modules; strings, comments and tests are not references.
+"""
+
+from __future__ import annotations
+
+import ast
+from pathlib import Path
+
+ROOT = Path(__file__).resolve().parents[1]
+PKG = ROOT / "data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spark"
+
+# Symbols kept without a production caller, each with its reason.
+ALLOWLIST = {
+    "streaming.ann_stream.ivf_stream_append": "streaming entry point: IVF index ingestion",
+    "streaming.stream_ops.enrich_with_dim": "streaming entry point: stream-static dimension join",
+    "streaming.stream_ops.session_counts": "streaming entry point: session-window counts",
+    "streaming.stream_ops.windowed_distinct_sketch": "streaming entry point: per-window KMV sketch",
+    "streaming.stream_ops.windowed_mix_drift": "streaming entry point: per-window event-mix drift",
+    "streaming.stream_ops.event_mix_reference": "the reference mix windowed_mix_drift scores against",
+    "sources.maintenance.compact_table": "maintenance entry point: small-file compaction",
+    "operators.similarity.rebalance_ivf_index": "maintenance entry point: hot-cell split of an IVF index",
+    "operators.similarity.audit_ivf_tombstones": "maintenance entry point: when to compact an IVF index",
+    "operators.sketches.kmv_global_sketch": "direct sketch the KMV shard-merge test compares against",
+    "operators.sketches.histogram_merge": "merge step the histogram shard-merge test checks",
+}
+
+
+def _production_files() -> list[Path]:
+    return [
+        *sorted(PKG.rglob("*.py")),
+        *sorted((ROOT / "tools").glob("*.py")),
+        *(p for p in sorted((ROOT / "perfbench").glob("*.py")) if not p.name.startswith("test_")),
+        ROOT / "bench.py",
+        ROOT / "__spark_entry__.py",
+    ]
+
+
+def _names(node: ast.AST, reexports: bool) -> set[str]:
+    out = set()
+    for n in ast.walk(node):
+        if isinstance(n, ast.Name):
+            out.add(n.id)
+        elif isinstance(n, ast.Attribute):
+            out.add(n.attr)
+        elif isinstance(n, (ast.Import, ast.ImportFrom)):
+            out |= {a.name.rsplit(".", 1)[-1] for a in n.names if reexports or a.asname}
+    return out
+
+
+def _is_registered(node: ast.AST) -> bool:
+    return any(
+        isinstance(d, ast.Call) and isinstance(d.func, ast.Name) and d.func.id == "register"
+        for d in getattr(node, "decorator_list", ())
+    )
+
+
+def _scan() -> tuple[dict[str, set[str]], dict[str, set[str]], set[str], set[str]]:
+    """(uses by symbol, symbols by bare name, registered symbols,
+    names used by module-level production code)."""
+    uses, by_name, registered, root_names = {}, {}, set(), set()
+    for path in _production_files():
+        tree = ast.parse(path.read_text(), filename=str(path))
+        in_pkg = PKG in path.parents
+        module = ".".join(path.relative_to(PKG).with_suffix("").parts) if in_pkg else None
+        for stmt in tree.body:
+            if in_pkg and isinstance(stmt, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+                key = f"{module}.{stmt.name}"
+                uses[key] = _names(stmt, reexports=False)
+                by_name.setdefault(stmt.name, set()).add(key)
+                if _is_registered(stmt):
+                    registered.add(key)
+            else:
+                root_names |= _names(stmt, reexports=path.name == "__init__.py")
+    return uses, by_name, registered, root_names
+
+
+def _reached(uses, by_name, roots: set[str], root_names: set[str]) -> set[str]:
+    live, todo = set(), set(roots)
+    for name in root_names:
+        todo |= by_name.get(name, set())
+    while todo:
+        key = todo.pop()
+        if key in live:
+            continue
+        live.add(key)
+        for name in uses[key]:
+            todo |= by_name.get(name, set()) - live
+    return live
+
+
+def test_every_package_symbol_is_reached_from_production_code():
+    uses, by_name, registered, root_names = _scan()
+    without_allowlist = _reached(uses, by_name, registered, root_names)
+    allowed = {k for k in ALLOWLIST if k in uses}
+    live = _reached(uses, by_name, registered | allowed, root_names)
+    dead = sorted(set(uses) - live)
+    assert not dead, (
+        "package symbols no production code reaches — delete them with the "
+        "tests that only exercise them, or allowlist them with a reason:\n"
+        + "\n".join(dead)
+    )
+    stale = sorted(k for k in ALLOWLIST if k not in uses or k in without_allowlist)
+    assert not stale, f"allowlist entries that are gone or reached anyway: {stale}"
+    assert all(reason.strip() for reason in ALLOWLIST.values())

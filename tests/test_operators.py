@@ -540,7 +540,7 @@ def test_lsh_bucket_cap_and_audit(spark):
     from pyspark.sql import Row as _Row
 
     from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spark.operators.dedup import (
-        oversized_lsh_buckets,
+        lsh_bucket_size_histogram,
     )
 
     # 30 identical docs: every band collides into one 30-doc bucket
@@ -558,9 +558,10 @@ def test_lsh_bucket_cap_and_audit(spark):
         "cap must keep the first 5 sorted docs and pair only those"
     )
 
-    audit = oversized_lsh_buckets(boiler, "doc_id", max_bucket_size=5).collect()
-    assert len(audit) == 8, "all 8 bands hold one oversized bucket"
-    assert all(r["size"] == 30 for r in audit)
+    audit = lsh_bucket_size_histogram(boiler, "doc_id", max_bucket_size=5).collect()
+    assert [tuple(r) for r in audit] == [(30, 8, True)], (
+        "all 8 bands hold one oversized 30-doc bucket"
+    )
 
 
 def test_ivf_centroids_invariant_to_partitioning(spark):

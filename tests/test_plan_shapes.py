@@ -920,8 +920,7 @@ def test_cluster_canonical_partitioned_window(q):
 
 
 def test_decile_thresholds_no_window(q):
-    # q204 is the registered scale-safe form of global decile banding
-    # (the ntile funnel lives in plans/funnels.py as a demonstration):
+    # q204 is the registered scale-safe form of global decile banding:
     # the entire point is that exact percentile banding runs with NO
     # window function — a refactor that sneaks a Window (or a
     # cartesian) back in silently reintroduces the single-partition
@@ -945,12 +944,11 @@ def test_rfm_distributed_no_window(q):
 
 def test_batch_padding_distributed_no_window(q):
     # q207 is the registered window-free form of length-bucketed
-    # batching (the ntile funnel lives in plans/funnels.py):
-    # the NTILE + per-bucket row_number pipeline re-derived as interval
-    # arithmetic over the bounded token-count histogram. Its contract
-    # is zero window functions and broadcast-only joins — a refactor
-    # that reintroduces either brings back the single-partition funnel
-    # the query exists to eliminate
+    # batching: the NTILE + per-bucket row_number pipeline re-derived
+    # as interval arithmetic over the bounded token-count histogram.
+    # Its contract is zero window functions and broadcast-only joins —
+    # a refactor that reintroduces either brings back the
+    # single-partition funnel the query exists to eliminate
     plan = plan_text(q("q207_batch_padding_distributed"))
     assert "Window" not in plan, "q207 must stay window-free (that's its contract)"
     assert "CartesianProduct" not in plan
@@ -1031,8 +1029,7 @@ def test_jaccard_verify_shingles_outside_lambda_lower(q):
 # construction (bin vectors, top-k lists, per-partition count tables),
 # where the funnel holds a few hundred rows at any corpus size —
 # corpus-scale global-ntile contracts are no longer registered (their
-# scale-safe devices q204/q206/q207 are; the ntile forms are
-# demonstration twins in plans/funnels.py). A new query sneaking a
+# scale-safe devices q204/q206/q207 are). A new query sneaking a
 # corpus-scale global window in must show up here and be either fixed
 # or rebuilt on the window-free devices.
 # ---------------------------------------------------------------------
@@ -1041,9 +1038,7 @@ UNPARTITIONED_WINDOW_CARRIERS = {
     # INPUT-BOUNDED windows only. The corpus-scale global-ntile
     # contracts that used to live here (q94/q171/q184) are no longer
     # registered queries: their scale-safe devices (q204/q207/q206)
-    # are the registered defaults, and the ntile forms moved to
-    # plans/funnels.py as demonstration anti-patterns pinned by
-    # tests/test_funnels.py.
+    # are the registered defaults.
     "q97_dense_ids": "prefix sum over the #partitions-row counts table",
     "q164_histogram_quantiles": "quantile walk over the ~120-row bin vector",
     "q166_hybrid_rrf": "rank fusion over two bounded top-k lists",
@@ -1061,8 +1056,9 @@ UNPARTITIONED_WINDOW_CARRIERS = {
 
 
 # Arrow/Python evaluation is the slow path; it is the DESIGN only where
-# the work is inherently Python (media codecs). Anything else in Python
-# is a hot-path regression.
+# the work is inherently Python (media codecs) and in the one documented
+# escape hatch (the grouped as-of join). Anything else in Python is a
+# hot-path regression.
 PYTHON_EVAL_CARRIERS = {
     "q45_media_features": "Arrow mapInPandas media feature extraction (codec work is Python by nature)",
     "q70_frame_sample": "Arrow mapInPandas frame sampling",
@@ -1071,6 +1067,7 @@ PYTHON_EVAL_CARRIERS = {
     "q218_wav_decode": "Arrow mapInPandas WAV render + REAL pure-Python RIFF/PCM decode",
     "q219_ppm_frame_sample": "Arrow mapInPandas P6-stream render + REAL frame-boundary parsing",
     "q222_multimodal_curation": "Arrow mapInPandas real P6 decode feeding the text+image curation join",
+    "q61_asof_grouped": "cogroup applyInPandas merge_asof: operators/asof.py's big-dimension escape hatch",
 }
 
 def _plan_census_tool():

@@ -6,6 +6,7 @@ missing description.
 """
 
 import re
+from pathlib import Path
 
 from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spark.plans.queries import (
     registry,
@@ -137,7 +138,7 @@ def test_rows_only_twins_contract():
 
 
 def test_readme_registry_count_is_current():
-    with open("/root/repo/README.md") as f:
+    with open(Path(__file__).resolve().parents[1] / "README.md") as f:
         m = re.search(r"(\d+)-query registry", f.read())
     assert m, "README must state the registry size"
     assert int(m.group(1)) == len(registry()), (

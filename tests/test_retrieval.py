@@ -40,14 +40,6 @@ def test_bm25_matches_pure_python(spark):
     assert got == expected
 
 
-def test_bm25_precomputed_lengths_equivalent(spark):
-    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    dl = retrieval.doc_lengths(docs)
-    a = retrieval.bm25_topk(docs, TERMS, k=10).collect()
-    c = retrieval.bm25_topk(docs, TERMS, k=10, lengths=dl).collect()
-    assert [tuple(r) for r in a] == [tuple(r) for r in c]
-
-
 def test_bm25_ranked_head_equals_topk(spark):
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
     topk = [(r["doc_id"], r["score"]) for r in retrieval.bm25_topk(docs, TERMS, k=10).collect()]
@@ -80,22 +72,3 @@ def test_rrf_fusion_scores_recomputed_independently(spark):
         assert abs(r["rrf_score"] - math.floor(expect * 1e6 + 0.5) / 1e6) < 1e-12
     scores = [r["rrf_score"] for r in rows]
     assert scores == sorted(scores, reverse=True)
-
-
-def test_compression_ratio_matches_pure_python_and_bounds(spark):
-    import zlib
-
-    from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spark.operators.text import (
-        compression_ratio,
-    )
-
-    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    got = {r["doc_id"]: (r["raw_bytes"], r["compressed_bytes"], r["ratio"]) for r in compression_ratio(docs).collect()}
-    rows = {r["doc_id"]: (r["text"] or "") for r in docs.select("doc_id", "text").collect()}
-    assert set(got) == set(rows)
-    for doc_id, text in rows.items():
-        raw = len(text.encode("utf-8"))
-        comp = len(zlib.compress(text.encode("utf-8"), 6))
-        g_raw, g_comp, g_ratio = got[doc_id]
-        assert (g_raw, g_comp) == (raw, comp)
-        assert 0 < g_ratio < 2.0  # tiny docs can exceed 1; repetitive text well below

@@ -7,7 +7,7 @@ import os
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
-from conftest import SF_DIR
+from conftest import SF_DIR, jobs_of
 
 from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spark.plans.queries import registry
 from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spark.sources.tables import (
@@ -27,17 +27,9 @@ def test_dashboard_plan_builds_run_no_jobs(spark):
     reg = registry()
     for name in DASHBOARD_VISUALS:  # warm-up: first reads infer their schemas
         reg[name].fn(spark, SF_DIR)
-    sc = spark.sparkContext
     jobs = {}
-    try:
-        for name in DASHBOARD_VISUALS:
-            group = f"plan-build-{name}"
-            sc.setJobGroup(group, group)
-            reg[name].fn(spark, SF_DIR)
-            jobs[name] = list(sc.statusTracker().getJobIdsForGroup(group))
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
+    for name in DASHBOARD_VISUALS:
+        _, jobs[name] = jobs_of(spark, f"plan-build-{name}", lambda: reg[name].fn(spark, SF_DIR))
     assert {n: j for n, j in jobs.items() if j} == {}
 
 

@@ -9,6 +9,7 @@ import tempfile
 
 import pyspark.sql.functions as F
 import pytest
+from conftest import jobs_of
 from pyspark.sql import Row, Window
 
 from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spark.streaming import (
@@ -134,18 +135,6 @@ def test_scd_upsert_raises_on_mistyped_dimension(spark, tmp_path):
     assert sorted(p.name for p in tmp_path.iterdir()) == ["dim"]
 
 
-def _jobs_of(spark, group: str, fn):
-    """(fn(), ids of the Spark jobs fn ran)."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    return out, list(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def _rows(spark, path):
     return sorted((r["k"], r["d"]) for r in spark.read.parquet(path).collect())
 
@@ -165,7 +154,7 @@ def test_listing_watermark_matches_read_path_in_one_job(spark, tmp_path):
 
     def call(case, rows):
         src = spark.createDataFrame(rows, "k long, d date")
-        out, jobs = _jobs_of(spark, f"load-{case}", lambda: load_or_update(spark, src, target, "d"))
+        out, jobs = jobs_of(spark, f"load-{case}", lambda: load_or_update(spark, src, target, "d"))
         assert len(jobs) == 1, (case, jobs)
         return out
 
@@ -437,7 +426,7 @@ def test_scd_drain_onto_a_dimension_is_two_jobs(spark, tmp_path):
     first = spark.createDataFrame([(1, "ames", _d(2024, 1, 1)), (2, "adel", _d(2024, 1, 1))], schema)
     scd_upsert_batch(spark, first, dim, "store", "obs_date", ["city"])
     batch = spark.createDataFrame([(1, "boone", _d(2024, 3, 1)), (3, "clive", _d(2024, 3, 9))], schema)
-    _, jobs = _jobs_of(spark, "scd-drain", lambda: scd_upsert_batch(spark, batch, dim, "store", "obs_date", ["city"]))
+    _, jobs = jobs_of(spark, "scd-drain", lambda: scd_upsert_batch(spark, batch, dim, "store", "obs_date", ["city"]))
     assert len(jobs) == 2, jobs
     assert len(_scd_rows(spark, dim)) == 4
 

@@ -1,10 +1,13 @@
-"""Unit tests of the checked-in tools' pure helpers (no Spark)."""
+"""Tests of the checked-in tools: pure helpers, and one subprocess
+smoke run of the profiler."""
 
-import datetime
 import importlib.util
 import os
+import re
+import subprocess
+import sys
 
-import pytest
+from conftest import SF_DIR
 
 _TOOLS = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools")
 
@@ -16,12 +19,16 @@ def _tool(name: str):
     return mod
 
 
-def test_profile_rest_timestamp_keeps_milliseconds():
-    ts = _tool("profile_query")._ts
-    want = datetime.datetime(2026, 10, 17, 1, 25, 27, 123000, tzinfo=datetime.timezone.utc).timestamp()
-    assert ts("2026-10-17T01:25:27.123GMT") == want
-    assert ts("2026-10-17T01:25:28.004GMT") - ts("2026-10-17T01:25:27.999GMT") == pytest.approx(0.005, abs=1e-6)
-    assert ts(None) is None
+def test_profile_query_reports_jobs_and_driver_gap():
+    out = subprocess.run(
+        [sys.executable, os.path.join(_TOOLS, "profile_query.py"),
+         "--sf", SF_DIR, "q01_pricing_summary"],
+        capture_output=True, text=True, timeout=600,
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    m = re.search(r"^q01_pricing_summary rep0 .*\bjobs=(\d+) .*\bdriverGap=(\d+\.\d+)s$", out.stdout, re.M)
+    assert m, out.stdout
+    assert int(m.group(1)) >= 1
 
 
 _CANNED_PLAN = """\

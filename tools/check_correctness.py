@@ -13,12 +13,13 @@ from __future__ import annotations
 
 import argparse
 import decimal
+import os
 import sys
 import time
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 TABLES = (
     "region",
@@ -34,7 +35,7 @@ TABLES = (
 )
 
 
-# Cross-engine type FAMILIES (shared with tools/audit_oracle_types.py).
+# Cross-engine type FAMILIES.
 # The round-10 driver window proved the external value hash is
 # type-aware across FAMILIES but not widths: q145's TINYINT hamming and
 # q143's BIGINT rank (vs Spark int) were driver-green, while q100's

@@ -11,10 +11,12 @@ Catches results that secretly depend on the engine session
 from __future__ import annotations
 
 import argparse
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/tools")
+TOOLS = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, os.path.dirname(TOOLS))
+sys.path.insert(0, TOOLS)
 
 
 def main() -> int:

@@ -13,16 +13,18 @@ from __future__ import annotations
 
 import argparse
 import json
+import os
 import statistics
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 SFS = [
     ("sf0.1", "/root/testdata/sf0.1"),
-    ("sf1.0", "/root/repo/.localdata/sf1.0"),
-    ("sf10", "/root/repo/.localdata/sf10"),
+    ("sf1.0", os.path.join(ROOT, ".localdata", "sf1.0")),
+    ("sf10", os.path.join(ROOT, ".localdata", "sf10")),
 ]
 
 

@@ -38,7 +38,7 @@ Construction notes (what keeps the scale-up honest):
   ``vec_id < 5`` keeps the q38 query batch fixed while the corpus
   grows 10x — the scaling a production ANN serves.
 
-Usage: python tools/make_scaled_testdata.py [--out /root/repo/.localdata/sf1.0]
+Usage: python tools/make_scaled_testdata.py [--out .localdata/sf1.0]
 """
 
 from __future__ import annotations
@@ -58,7 +58,8 @@ def q(con, sql):
 
 def main() -> None:
     ap = argparse.ArgumentParser()
-    ap.add_argument("--out", default="/root/repo/.localdata/sf1.0")
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    ap.add_argument("--out", default=os.path.join(root, ".localdata", "sf1.0"))
     ap.add_argument("--copies", type=int, default=COPIES)
     args = ap.parse_args()
     os.makedirs(args.out, exist_ok=True)

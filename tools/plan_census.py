@@ -29,11 +29,14 @@ sys.path.insert(0, ROOT)
 SF_DIR = "/root/testdata/sf0.001"
 CENSUS_PATH = os.path.join(ROOT, "PLAN_CENSUS.json")
 
-# Python/Arrow evaluation nodes: the slow path, by design only where
-# the work is Python by nature (media codecs).
+# Python/Arrow evaluation nodes, every concrete one in Spark 4.1's
+# ``org.apache.spark.sql.execution.python``: the slow path, by design
+# only where the work is Python by nature (media codecs).
 PY_NODES = (
     "BatchEvalPython", "ArrowEvalPython", "BatchEvalPythonUDTF", "ArrowEvalPythonUDTF",
-    "MapInPandas", "MapInArrow", "FlatMapGroupsInPandas",
+    "MapInPandas", "MapInArrow", "FlatMapGroupsInPandas", "FlatMapGroupsInArrow",
+    "FlatMapCoGroupsInPandas", "FlatMapCoGroupsInArrow", "ArrowAggregatePython",
+    "ArrowWindowPython", "FlatMapGroupsInPandasWithState", "TransformWithStateInPySpark",
 )
 
 # Counted node names. ``FileScan`` reads files; ``Scan`` reads an
