@@ -11,7 +11,7 @@ Write layout is chosen for 100 TB, not for the local testdata:
   own target, partitioned by the load's date column;
 - dimensions are small unpartitioned parquet. This full load overwrites
   each table in place, one after another, so a crash mid-build can
-  leave tables of two builds side by side. The streaming SCD2 merge
+  leave tables of two builds side by side. The SCD2 drain
   (`streaming.scd_stream`, `operators.scd.merge_scd`) — the distributed
   replacement for the reference's driver-side row UPDATEs — and the
   incremental fact append instead commit through

@@ -7,13 +7,30 @@ our at-rest format everywhere, so the JDBC scan/sink operators (S3-S5)
 become plain table reads/writes.
 
 Table reads (``load_table``, the written warehouse) go through
-``read_parquet``. A read without a schema is not lazy: Spark infers the schema by reading a file footer
-inside a Spark job (``ParquetFileFormat.mergeSchemasInParallel``), so
-each ``spark.read.parquet(path)`` costs one job at plan-build time,
-and a dashboard visual that joins five tables ran five of them before
-its own query started. ``read_parquet`` infers a path's schema once
-per process and passes the remembered ``StructType`` on later reads,
-which then plan without touching the files' contents.
+``read_parquet``. A read without a schema is not lazy: Spark infers the
+schema by reading a file footer inside a Spark job
+(``ParquetFileFormat.mergeSchemasInParallel``), so each
+``spark.read.parquet(path)`` costs one job at plan-build time, and a
+dashboard visual that joins five tables ran five of them before its own
+query started. ``read_parquet`` remembers schemas in two memos, and a
+read that hits either passes the remembered ``StructType``, so Spark
+plans it without touching the files' contents:
+
+- by path: a path's schema is inferred once per process and reused
+  while the size and mtime of every file under it, and the nanosAsLong
+  conf, stay the same;
+- by footer, for a single file the path memo has not seen (a daily
+  staged file under a new path): its footer is read on the driver
+  through Spark's own parquet-mr parser, with no job, and keyed by
+  everything Spark's inference reads from it. That is the parquet
+  schema text, the Spark schema Spark wrote into the footer
+  (``org.apache.spark.sql.parquet.row.metadata``, which inference
+  prefers when present), and the nanosAsLong conf. A file whose key
+  matches an earlier file's takes the schema inferred for that file.
+
+A directory keeps the path memo alone: its partition columns come from
+directory names, and Spark infers its data columns from one file it
+chooses. Any error while reading a footer takes the inference read.
 """
 
 from __future__ import annotations
@@ -21,6 +38,7 @@ from __future__ import annotations
 import os
 
 import pyspark.sql.functions as F
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
@@ -43,6 +61,11 @@ NANOS_AS_LONG = "spark.sql.legacy.parquet.nanosAsLong"
 
 # abspath -> (fingerprint, schema): one entry per path ever read
 _SCHEMAS: dict[str, tuple[tuple, StructType]] = {}
+# footer key (``_footer_key``) -> schema Spark inferred for a file with it
+_FOOTERS: dict[tuple, StructType] = {}
+
+# the footer entry Spark writes its own schema into, and reads it back from
+SPARK_ROW_METADATA = "org.apache.spark.sql.parquet.row.metadata"
 
 
 def _fingerprint(spark: SparkSession, path: str) -> tuple | None:
@@ -66,21 +89,46 @@ def _fingerprint(spark: SparkSession, path: str) -> tuple | None:
     return spark.conf.get(NANOS_AS_LONG, "false"), stats
 
 
+def _footer_key(spark: SparkSession, path: str, conf: str) -> tuple | None:
+    """``(conf, parquet schema text, Spark row metadata)`` of the
+    parquet file ``path``, read from its footer on the driver (row
+    groups skipped); None when the footer cannot be read."""
+    jvm = spark._jvm
+    try:
+        footer = jvm.org.apache.parquet.hadoop.ParquetFileReader.readFooter(
+            spark._jsc.hadoopConfiguration(),
+            jvm.org.apache.hadoop.fs.Path(path),
+            jvm.org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS,
+        )
+        meta = footer.getFileMetaData()
+        return conf, meta.getSchema().toString(), meta.getKeyValueMetaData().get(SPARK_ROW_METADATA)
+    except Py4JError:  # an unreadable footer takes the inference read, which reports it
+        return None
+
+
 def read_parquet(spark: SparkSession, path: str) -> DataFrame:
-    """``spark.read.parquet(path)`` that infers the schema once.
+    """``spark.read.parquet(path)`` that infers a schema once.
 
     The first read of a path infers its schema as Spark always does and
     remembers it with the path's fingerprint: size and mtime of every
     file, and the nanosAsLong conf. A later read whose fingerprint
     still matches passes the remembered schema, so Spark plans it
     without a job. A changed fingerprint, or a path that cannot be
-    stat'ed locally, takes the inference path again."""
+    stat'ed locally, takes the inference path again. A single file the
+    path memo misses is first looked up by its footer key, so a file
+    whose footer matches one read before plans without a job too."""
     key = os.path.abspath(path)
     fp = _fingerprint(spark, key)
     hit = _SCHEMAS.get(key)
     if fp is not None and hit is not None and hit[0] == fp:
         return spark.read.schema(hit[1]).parquet(path)
-    df = spark.read.parquet(path)
+    footer = _footer_key(spark, key, fp[0]) if fp is not None and os.path.isfile(key) else None
+    if footer in _FOOTERS:
+        df = spark.read.schema(_FOOTERS[footer]).parquet(path)
+    else:
+        df = spark.read.parquet(path)
+        if footer is not None:
+            _FOOTERS[footer] = df.schema
     if fp is not None:
         _SCHEMAS[key] = (fp, df.schema)
     return df

@@ -4,8 +4,7 @@ The batch lifecycle (build → append → audit → rebalance → delete →
 compact → update, `operators/similarity.py`) gets its production
 ingestion shape here: Structured Streaming over a staging directory of
 arriving embedding files, each micro-batch folded into the index with
-the SAME `append_to_ivf_index` the scheduled batch path uses — the
-scd_stream.py discipline applied to the vector store. The append reads
+the SAME `append_to_ivf_index` the scheduled batch path uses. The append reads
 the index's quantizer (flat or hierarchical) from its `_centroids`
 sidecar, so one stream drains into either kind of index.
 `Trigger.AvailableNow` drains everything unprocessed and stops, so the

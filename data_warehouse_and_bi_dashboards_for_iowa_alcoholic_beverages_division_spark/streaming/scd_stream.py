@@ -1,35 +1,45 @@
-"""Streaming SCD2 dimension maintenance.
+"""SCD2 dimension maintenance: a ledgered batch drain of a change-log inbox.
 
 The reference runs its SCD merge as a scheduled batch (Airflow task →
 `update_store_dim.py` → `scd.py:230-265`, applied by driver-side
-row-at-a-time UPDATEs at `scd.py:194-217`). The Spark-native upgrade is
-Structured Streaming over the staging directory: each micro-batch of
-raw change records is folded into the parquet dimension by `merge_scd`,
-inside `foreachBatch` — exactly-once per batch via the streaming
-checkpoint, no driver funnel, and the `Trigger.AvailableNow` drain
-doubles as the reference's incremental batch when run on a schedule.
+row-at-a-time UPDATEs at `scd.py:194-217`). So does this module, without
+the driver funnel: ``scd_stream_upsert`` lists the inbox, reads every
+file it has not drained before as one batch pinned to the given schema,
+and folds that batch into the parquet dimension with ``merge_scd``.
 The merged dimension is the rebuild over the old versions plus the
 batch, so it equals a rebuild over the whole change log whatever order
-the files arrive in (a late file included).
+the files arrive in (a late file included), and one batch equals any
+split of the same files into several.
+
+Which files are drained is a JSON ledger under ``checkpoint_dir``
+(``drained-<n>.json``, the highest ``n`` is live): the relative names
+of every inbox file folded in so far. A name once recorded is never
+read again, even with new content. Each update writes the next version
+under a fresh name and deletes older versions only after it landed, so
+no crash leaves the drained names unrecorded once they were recorded.
+A ``checkpoint_dir`` without a ledger (a new one, or one left by a
+Structured Streaming drain) drains every file in the inbox.
 
 Dimensions are small relative to facts (§ SURVEY.md 1.1), so rewriting
-the whole dimension per micro-batch is cheap at any scale; the
-fact-side stream never rewrites history. The merge is one
-``sources.commit.write``: it is staged in the dimension's hidden
-``.maint-tmp``, committed by an intent that retires every live file of
-the old dimension, and rolled forward by renames. A crash at any point
-converges when the batch is replayed from the streaming checkpoint:
-``sources.commit.recover`` runs before the dimension is read, and the
-merge is idempotent (re-folding a batch already in the dimension
-changes nothing).
+the whole dimension per drain is cheap at any scale; the fact side
+never rewrites history. The merge is one ``sources.commit.write``: it
+is staged in the dimension's hidden ``.maint-tmp``, committed by an
+intent that retires every live file of the old dimension, and rolled
+forward by renames. ``sources.commit.recover`` runs before the
+dimension is read. The ledger is written only after the dimension
+committed, so it never runs ahead of it: a crash before it lands
+leaves the files undrained, and the next call folds them again, which
+changes nothing (the merge is idempotent).
 
 A drain onto an existing dimension is two Spark jobs: the merge's one
 shuffle on the natural key, and the staging write. Nothing else runs
 one:
 
-- the dimension's schema is derived from the batch's
-  (``operators.scd.scd_schema``), so reading the dimension infers
-  nothing from its footers;
+- listing the inbox and the ledger is Hadoop FS calls; an inbox with
+  nothing new runs no job and writes nothing;
+- the batch read and the dimension read are pinned to schemas (the
+  dimension's is derived from the batch's, ``operators.scd.scd_schema``),
+  so neither infers anything from footers;
 - an empty batch is not probed for. It folds to the dimension it
   started from. A batch that leaves a dimension of no rows (an empty
   first file) retires nothing and adds no row, so its stage rolls back
@@ -39,6 +49,8 @@ one:
 
 from __future__ import annotations
 
+import json
+import re
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
@@ -46,6 +58,9 @@ from pyspark.sql.types import StructType
 
 from ..operators.scd import create_scd_from_input, merge_scd, scd_schema
 from ..sources import commit
+
+# a ledger version under ``checkpoint_dir``: the inbox names drained so far
+_LEDGER = re.compile(r"drained-(\d+)\.json")
 
 
 def scd_upsert_batch(
@@ -74,6 +89,32 @@ def scd_upsert_batch(
     commit.write(spark, dim_path, merged, retire=commit.live_files(spark, dim_path))
 
 
+def _ledger(spark: SparkSession, checkpoint_dir: str) -> tuple[list[int], set[str]]:
+    """(versions of the ledger on disk, names the newest one records).
+    No ledger records nothing; an unreadable one raises."""
+    fs, root = commit._hadoop_fs(spark, checkpoint_dir)
+    names = [st.getPath().getName() for st in fs.listStatus(root)] if fs.exists(root) else []
+    versions = sorted(int(m.group(1)) for n in names if (m := _LEDGER.fullmatch(n)))
+    if not versions:
+        return [], set()
+    return versions, set(json.loads(commit._fs_read_text(spark, _ledger_path(checkpoint_dir, versions[-1]))))
+
+
+def _ledger_path(checkpoint_dir: str, version: int) -> str:
+    return f"{checkpoint_dir.rstrip('/')}/drained-{version}.json"
+
+
+def _record_drained(spark: SparkSession, checkpoint_dir: str, versions: list[int], names: set[str]) -> None:
+    """Write ``names`` as the next ledger version under a fresh name,
+    then delete the older versions: the newest complete version is
+    never deleted before its successor landed."""
+    new = (versions[-1] if versions else 0) + 1
+    commit._fs_write_text_atomic(spark, _ledger_path(checkpoint_dir, new), json.dumps(sorted(names)))
+    for v in versions:
+        fs, old = commit._hadoop_fs(spark, _ledger_path(checkpoint_dir, v))
+        commit._fs_checked(fs.delete(old, False), "delete", old.toString())
+
+
 def scd_stream_upsert(
     spark: SparkSession,
     staging_dir: str,
@@ -84,20 +125,22 @@ def scd_stream_upsert(
     attribute_cols: Sequence[str],
     schema: StructType,
 ) -> None:
-    """Drain every unprocessed file under ``staging_dir`` into the SCD2
-    dimension at ``dim_path``, one merge per micro-batch. Re-running
-    with the same checkpoint processes only newly arrived files — the
-    streaming equivalent of the reference's watermark-gated update DAG
-    branch (`dags/main_pipeline.py:92-151`)."""
-    stream = spark.readStream.schema(schema).parquet(staging_dir)
-
-    def _apply(batch_df: DataFrame, _batch_id: int) -> None:
-        scd_upsert_batch(spark, batch_df, dim_path, natural_key, date_col, attribute_cols)
-
-    q = (
-        stream.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    """Drain every file under ``staging_dir`` that the ledger in
+    ``checkpoint_dir`` does not record into the SCD2 dimension at
+    ``dim_path``, as one batch read with ``schema``, then record them.
+    Re-running processes only newly arrived files: the reference's
+    watermark-gated update DAG branch (`dags/main_pipeline.py:92-151`).
+    A missing ``staging_dir`` raises ``PATH_NOT_FOUND``."""
+    fs, inbox = commit._hadoop_fs(spark, staging_dir)
+    if not fs.exists(inbox):
+        spark.read.schema(schema).parquet(staging_dir)  # raises Spark's own PATH_NOT_FOUND
+    versions, drained = _ledger(spark, checkpoint_dir)
+    new = sorted(set(commit._data_files(fs, inbox)) - drained)
+    if not new:
+        return
+    root = staging_dir.rstrip("/")
+    batch = spark.read.schema(schema).parquet(*(f"{root}/{rel}" for rel in new))
+    scd_upsert_batch(spark, batch, dim_path, natural_key, date_col, attribute_cols)
+    # after the dimension's commit: a crash before this line re-folds the
+    # files on the next call, which leaves the dimension as it is
+    _record_drained(spark, checkpoint_dir, versions, drained | set(new))

@@ -16,6 +16,18 @@ the table as it was (no intent) or as the clean run left it (intent):
 readers and the listing watermark see all of the write or none of it.
 Re-running the writer equals the clean run row for row and leaves no
 stage.
+
+The dimension drain records the files it drained in a ledger after the
+dimension's commit, so it has three more crash points, all after the
+dimension is complete:
+
+- ``before_ledger``: the ledger is as it was;
+- ``inside_ledger``: the next ledger version is written under its
+  temporary name, not yet renamed into place;
+- ``ledger_landed``: the next version is in place, the older one not
+  yet deleted.
+
+Re-running the drain then equals the clean run's dimension and ledger.
 """
 
 import contextlib
@@ -25,6 +37,8 @@ import os
 import random
 import shutil
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import Row
 from pyspark.sql.types import DateType, LongType, StringType, StructField, StructType
@@ -44,6 +58,7 @@ from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spar
 from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spark.streaming.incremental import (
     _listed_watermark,
 )
+from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spark.streaming import scd_stream
 from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spark.streaming.scd_stream import (
     scd_stream_upsert,
 )
@@ -55,11 +70,15 @@ _STORE = StructType(
 
 
 def _dimension_drain(spark, root):
-    """Two change-log files, the second not yet drained."""
+    """Two change-log files, the second not yet drained. They have the
+    same names in every run, so two runs' ledgers compare."""
     staging, dim = str(root / "in"), str(root / "dim")
+    os.makedirs(staging)
 
     def drop(rows):
-        spark.createDataFrame(rows, _STORE).write.mode("append").parquet(staging)
+        store, city, day = zip(*rows)
+        table = pa.table({"store": store, "city": city, "obs_date": pa.array(day, pa.date32())})
+        pq.write_table(table, os.path.join(staging, f"day-{len(os.listdir(staging))}.parquet"))
 
     def drain():
         scd_stream_upsert(spark, staging, dim, str(root / "ckpt"), "store", "obs_date", ["city"], schema=_STORE)
@@ -136,8 +155,25 @@ class Crash(Exception):
     pass
 
 
+CRASHES = ["mid_stage_write", "after_intent", "between_moves"]
+LEDGER_CRASHES = ["before_ledger", "inside_ledger", "ledger_landed"]
+
+
 def _inject(monkeypatch, crash):
-    if crash == "mid_stage_write":
+    if crash in LEDGER_CRASHES:
+        real_write = commit._fs_write_text_atomic
+
+        def write_text(spark, path, text):
+            if "/drained-" not in path:
+                return real_write(spark, path, text)
+            if crash == "inside_ledger":  # leaves exactly the temporary file a rename was due to move
+                real_write(spark, path + ".tmp", text)
+            elif crash == "ledger_landed":
+                real_write(spark, path, text)
+            raise Crash("Crash")
+
+        monkeypatch.setattr(commit, "_fs_write_text_atomic", write_text)
+    elif crash == "mid_stage_write":
 
         def write_intent(_spark, stage, _retire):
             # a staging job killed part-way: a data file and the
@@ -178,8 +214,11 @@ def uncoalesced_shuffles(spark):
     spark.conf.set(key, prev)
 
 
-@pytest.mark.parametrize("crash", ["mid_stage_write", "after_intent", "between_moves"])
-@pytest.mark.parametrize("writer", list(WRITERS))
+@pytest.mark.parametrize(
+    "writer, crash",
+    [pytest.param(w, c, id=f"{w}-{c}") for w in WRITERS for c in CRASHES]
+    + [pytest.param("dimension_drain", c, id=f"dimension_drain-{c}") for c in LEDGER_CRASHES],
+)
 def test_crashed_write_converges(spark, tmp_path, monkeypatch, uncoalesced_shuffles, writer, crash):
     setup = WRITERS[writer]
     clean, clean_run = setup(spark, tmp_path / "clean")
@@ -195,8 +234,9 @@ def test_crashed_write_converges(spark, tmp_path, monkeypatch, uncoalesced_shuff
     monkeypatch.undo()
 
     stage = commit.stage_path(path)
-    assert os.path.exists(os.path.join(stage, commit.INTENT)) == (crash != "mid_stage_write")
-    if crash != "between_moves":
+    committed = crash in LEDGER_CRASHES  # the dimension's commit completed
+    assert os.path.exists(os.path.join(stage, commit.INTENT)) == (crash != "mid_stage_write" and not committed)
+    if crash in ("mid_stage_write", "after_intent"):
         # nothing live is touched before the roll-forward starts
         assert _view(spark, path) == before
         if writer == "fact_append":
@@ -207,20 +247,22 @@ def test_crashed_write_converges(spark, tmp_path, monkeypatch, uncoalesced_shuff
     probe = str(tmp_path / "probe")
     shutil.copytree(path, probe)
     action = commit.recover(spark, probe)["action"]
-    assert action == ("rolled_back" if crash == "mid_stage_write" else "rolled_forward")
+    assert action == {"mid_stage_write": "rolled_back"}.get(crash, "none" if committed else "rolled_forward")
     assert _view(spark, probe) == (before if action == "rolled_back" else want)
     if writer == "fact_append":
         newest = _d(2024, 1, 3) if action == "rolled_back" else _d(2024, 1, 5)
         assert _listed_watermark(spark, probe, "d") == (True, newest)
 
-    # the re-run (the dimension drain replays its batch from the
-    # checkpoint) recovers first, then converges on the clean run
+    # the re-run (the dimension drain folds again the files its ledger
+    # does not record) recovers first, then converges on the clean run
     run()
     assert _view(spark, path) == want
     assert not os.path.exists(stage)
     if writer == "dimension_drain":
         assert len(want[0]) == 4
         assert sorted(p.name for p in (tmp_path / "crash").iterdir()) == ["ckpt", "dim", "in"]
+        ledgers = [scd_stream._ledger(spark, str(tmp_path / side / "ckpt"))[1] for side in ("clean", "crash")]
+        assert ledgers[0] == ledgers[1] == {"day-0.parquet", "day-1.parquet"}
 
 
 def test_write_retiring_every_file_of_a_partition_drops_its_directory(spark, tmp_path):

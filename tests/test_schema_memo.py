@@ -91,3 +91,98 @@ def test_events_with_nanosecond_timestamps(spark, tmp_path):
                 read(path)
     finally:
         spark.conf.set(NANOS_AS_LONG, before)
+
+
+def _first_read_jobs(spark, path, group):
+    """(the read's DataFrame, jobs its first ``read_parquet`` ran)."""
+    return jobs_of(spark, group, lambda: read_parquet(spark, path))
+
+
+def test_new_file_with_a_known_footer_plans_without_a_job(spark, tmp_path):
+    """A single file under a new path whose footer matches a file read
+    before (a daily staged file) takes that file's schema: no job."""
+    schema = pa.schema([("k", pa.int64()), ("price", pa.decimal128(12, 2)), ("name", pa.string())])
+    first, second = str(tmp_path / "day_1.parquet"), str(tmp_path / "day_2.parquet")
+    pq.write_table(pa.table({"k": [1], "price": [None], "name": ["a"]}, schema=schema), first)
+    read_parquet(spark, first)
+    pq.write_table(pa.table({"k": [2, 3], "price": [None, None], "name": ["b", None]}, schema=schema), second)
+    df, jobs = _first_read_jobs(spark, second, "footer-known")
+    assert jobs == []
+    assert df.schema == spark.read.parquet(second).schema
+    assert sorted(df.collect()) == sorted(spark.read.parquet(second).collect())
+
+
+def test_same_names_with_a_changed_type_miss_the_footer_memo(spark, tmp_path):
+    """The parquet schema text is part of the footer key: a wider
+    decimal under the same column names is inferred, not remembered."""
+    narrow, wide = str(tmp_path / "narrow.parquet"), str(tmp_path / "wide.parquet")
+    pq.write_table(pa.table({"k": [1], "price": pa.array([None], pa.decimal128(12, 2))}), narrow)
+    read_parquet(spark, narrow)
+    pq.write_table(pa.table({"k": [1], "price": pa.array([None], pa.decimal128(15, 2))}), wide)
+    df, jobs = _first_read_jobs(spark, wide, "footer-wider-decimal")
+    assert jobs
+    assert dict(df.dtypes)["price"] == "decimal(15,2)"
+    assert df.schema == spark.read.parquet(wide).schema
+
+
+def test_spark_row_metadata_is_part_of_the_footer_key(spark, tmp_path):
+    """Two Spark-written files with the same parquet schema whose Spark
+    schemas differ (a column comment) do not share an entry: inference
+    reads the Spark schema from the footer when it is there."""
+    paths = []
+    for comment in ("gross", "net"):
+        out = str(tmp_path / comment)
+        spark.range(2).withMetadata("id", {"comment": comment}).coalesce(1).write.parquet(out)
+        (part,) = [n for n in os.listdir(out) if n.endswith(".parquet")]
+        paths.append(os.path.join(out, part))
+    read_parquet(spark, paths[0])
+    df, _ = _first_read_jobs(spark, paths[1], "footer-row-metadata")
+    assert df.schema == spark.read.parquet(paths[1]).schema
+    assert df.schema["id"].metadata == {"comment": "net"}
+
+
+def test_nanosecond_file_under_each_conf_has_its_own_entry(spark, tmp_path):
+    """The nanosAsLong conf is part of the footer key: a TIMESTAMP(NANOS)
+    file whose footer is known under the conf still raises without it."""
+    ts = pa.array([1_700_000_000_123_456_789], pa.timestamp("ns"))
+    known, new = str(tmp_path / "known.parquet"), str(tmp_path / "new.parquet")
+    for p in (known, new):
+        pq.write_table(pa.table({"ts": ts}), p)
+    before = spark.conf.get(NANOS_AS_LONG, "false")
+    try:
+        spark.conf.set(NANOS_AS_LONG, "true")
+        assert dict(read_parquet(spark, known).dtypes)["ts"] == "bigint"
+        spark.conf.set(NANOS_AS_LONG, "false")
+        with pytest.raises(Exception, match="PARQUET_TYPE_ILLEGAL"):
+            read_parquet(spark, new)
+    finally:
+        spark.conf.set(NANOS_AS_LONG, before)
+
+
+def test_directory_of_a_known_footer_keeps_the_path_memo(spark, tmp_path):
+    """A directory is inferred on its first read, whatever its files'
+    footers (its partition columns come from directory names), and
+    remembered by path after it."""
+    known = str(tmp_path / "known.parquet")
+    pq.write_table(pa.table({"k": [1, 2]}), known)
+    read_parquet(spark, known)
+    table = tmp_path / "table"
+    (table / "p=1").mkdir(parents=True)
+    pq.write_table(pa.table({"k": [3]}), str(table / "p=1" / "part-0.parquet"))
+    df, jobs = _first_read_jobs(spark, str(table), "footer-directory-first")
+    assert jobs
+    assert df.schema == spark.read.parquet(str(table)).schema
+    assert df.columns == ["k", "p"]
+    _, jobs = _first_read_jobs(spark, str(table), "footer-directory-again")
+    assert jobs == []
+
+
+def test_unreadable_footer_takes_the_inference_read(spark, tmp_path):
+    """A file whose footer cannot be read is left to Spark's own read,
+    which raises what it always raises."""
+    path = str(tmp_path / "broken.parquet")
+    with open(path, "wb") as f:
+        f.write(b"not a parquet file")
+    for read in (spark.read.parquet, lambda p: read_parquet(spark, p)):
+        with pytest.raises(Exception, match="CANNOT_READ_FILE_FOOTER"):
+            read(path)

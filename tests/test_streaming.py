@@ -10,6 +10,7 @@ import tempfile
 import pyspark.sql.functions as F
 import pytest
 from conftest import jobs_of
+from pyspark.errors import AnalysisException
 from pyspark.sql import Row, Window
 
 from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spark.streaming import (
@@ -297,8 +298,8 @@ def test_event_time_cast_requires_utc_session(spark):
 
 
 def test_scd_stream_upsert_matches_batch_rebuild(spark, tmp_path):
-    """Two staged drops folded in by separate stream runs == one batch
-    SCD build over the concatenated input (stream merge ≡ rebuild)."""
+    """Two staged drops folded in by separate drains == one batch SCD
+    build over the concatenated input (drain merge ≡ rebuild)."""
     from pyspark.sql.types import StructType, StructField, LongType, StringType, DateType
 
     from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spark.operators.scd import (
@@ -330,7 +331,7 @@ def test_scd_stream_upsert_matches_batch_rebuild(spark, tmp_path):
     assert first.count() == 2 and first.where("is_current").count() == 2
 
     spark.createDataFrame(drop2, schema).write.mode("append").parquet(staging)
-    scd_stream_upsert(*args, schema=schema)  # same checkpoint: only drop2 is new
+    scd_stream_upsert(*args, schema=schema)  # same ledger: only drop2 is new
 
     got = {
         (r["store"], r["city"], str(r["start_date"]), str(r["end_date"]), r["is_current"])
@@ -457,6 +458,183 @@ def test_scd_stream_empty_file_leaves_the_dimension_as_it_was(spark, tmp_path):
     assert len(got) == 3
     drain([])
     assert _scd_rows(spark, dim) == got
+
+
+def _drop_file(spark, staging, name, rows):
+    """Stage ``rows`` as the one file ``<staging>/<name>``."""
+    tmp = f"{staging}.tmp-{name}"
+    spark.createDataFrame(rows, _store_schema()).coalesce(1).write.parquet(tmp)
+    os.makedirs(staging, exist_ok=True)
+    (part,) = [n for n in os.listdir(tmp) if n.endswith(".parquet")]
+    shutil.move(os.path.join(tmp, part), os.path.join(staging, name))
+    shutil.rmtree(tmp)
+    return os.path.join(staging, name)
+
+
+def _drainer(spark, tmp_path):
+    from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spark.streaming.scd_stream import (
+        scd_stream_upsert,
+    )
+
+    staging, dim, ckpt = str(tmp_path / "staging"), str(tmp_path / "dim"), str(tmp_path / "ckpt")
+
+    def drain():
+        scd_stream_upsert(spark, staging, dim, ckpt, "store", "obs_date", ["city"], schema=_store_schema())
+
+    return staging, dim, ckpt, drain
+
+
+def test_scd_drain_never_reads_a_drained_file_name_again(spark, tmp_path):
+    """A file name once drained is not read again, even re-delivered
+    with new content."""
+    staging, dim, _ckpt, drain = _drainer(spark, tmp_path)
+    _drop_file(spark, staging, "day-1.parquet", [(1, "ames", _d(2024, 1, 1))])
+    drain()
+    before = _contents(dim)
+    os.remove(os.path.join(staging, "day-1.parquet"))
+    _drop_file(spark, staging, "day-1.parquet", [(1, "boone", _d(2024, 3, 1)), (2, "adel", _d(2024, 3, 1))])
+    drain()
+    assert _contents(dim) == before
+    assert _scd_rows(spark, dim) == [(1, "ames", "2024-01-01", "None", True)]
+
+
+def test_scd_drain_applies_a_late_file(spark, tmp_path):
+    """A file that arrives after newer ones, with older change dates and
+    an older mtime than any file drained before, is applied: the
+    dimension equals a build over the whole log."""
+    from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spark.operators.scd import (
+        create_scd_from_input,
+    )
+
+    staging, dim, _ckpt, drain = _drainer(spark, tmp_path)
+    newer = [(1, "clive", _d(2024, 3, 1)), (2, "adel", _d(2024, 3, 1))]
+    late = [(1, "ames", _d(2024, 1, 1)), (1, "boone", _d(2024, 2, 1))]
+    _drop_file(spark, staging, "day-9.parquet", newer)
+    drain()
+    stale = _drop_file(spark, staging, "day-1.parquet", late)
+    os.utime(stale, (946_684_800, 946_684_800))  # 2000-01-01: long before any file drained
+    drain()
+    whole_log = spark.createDataFrame(newer + late, _store_schema())
+    want = _scd_tuples(create_scd_from_input(whole_log, ["city"], "obs_date", "store"))
+    assert _scd_rows(spark, dim) == want
+    assert len(want) == 4
+
+
+def test_scd_drain_with_nothing_new_runs_no_job_and_writes_nothing(spark, tmp_path):
+    """An inbox with no undrained file runs no Spark job and leaves the
+    dimension and the ledger byte-identical."""
+    staging, dim, ckpt, drain = _drainer(spark, tmp_path)
+    _drop_file(spark, staging, "day-1.parquet", [(1, "ames", _d(2024, 1, 1)), (2, "adel", _d(2024, 1, 1))])
+    drain()
+    before = _contents(dim), _contents(ckpt)
+    _, jobs = jobs_of(spark, "scd-drain-nothing-new", drain)
+    assert jobs == []
+    assert (_contents(dim), _contents(ckpt)) == before
+
+
+def test_scd_drain_converges_from_a_structured_streaming_checkpoint(spark, tmp_path):
+    """A checkpoint directory left by a Structured Streaming drain holds
+    no ledger: the first drain folds every inbox file once more, which
+    leaves the dimension a build over the whole inbox, and records them."""
+    from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spark.operators.scd import (
+        create_scd_from_input,
+    )
+    from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spark.streaming.scd_stream import (
+        scd_upsert_batch,
+    )
+
+    staging, dim, ckpt, drain = _drainer(spark, tmp_path)
+    first = [(1, "ames", _d(2024, 1, 1)), (2, "adel", _d(2024, 1, 1))]
+    second = [(1, "boone", _d(2024, 3, 1)), (3, "clive", _d(2024, 3, 9))]
+    _drop_file(spark, staging, "day-1.parquet", first)
+    q = (
+        spark.readStream.schema(_store_schema()).parquet(staging)
+        .writeStream.foreachBatch(lambda b, _i: scd_upsert_batch(spark, b, dim, "store", "obs_date", ["city"]))
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    assert {"commits", "offsets", "sources"} <= set(os.listdir(ckpt))
+
+    _drop_file(spark, staging, "day-2.parquet", second)
+    drain()
+    whole_log = spark.createDataFrame(first + second, _store_schema())
+    want = _scd_tuples(create_scd_from_input(whole_log, ["city"], "obs_date", "store"))
+    assert _scd_rows(spark, dim) == want
+    before = _contents(dim)
+    drain()
+    assert _contents(dim) == before
+
+
+def test_scd_drain_of_a_missing_inbox_raises(spark, tmp_path):
+    """A missing inbox is an error, not an empty one: the drain raises
+    Spark's PATH_NOT_FOUND and creates neither dimension nor ledger."""
+    _staging, dim, ckpt, drain = _drainer(spark, tmp_path)
+    with pytest.raises(AnalysisException, match="PATH_NOT_FOUND"):
+        drain()
+    assert not os.path.exists(dim) and not os.path.exists(ckpt)
+
+
+def test_an_incremental_day_runs_only_its_own_work(spark, tmp_path):
+    """A day staged under a new path, with files whose footers are
+    known, loads and drains with every Spark job inside a SQL execution
+    (the append, the merge, the dimension write) and no streaming query:
+    no schema-inference job and no query lifecycle. Jobs are grouped by
+    execution root, since adaptive execution splits one action into a
+    timing-dependent number of jobs."""
+    from pyspark.sql.streaming import StreamingQueryListener
+
+    from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spark.plans.warehouse import (
+        fact_sales,
+    )
+
+    fact = str(tmp_path / "fact")
+    staging, dim, _ckpt, drain = _drainer(spark, tmp_path)
+    day = tmp_path / "day_1"
+    day.mkdir()
+    for t in ("lineitem", "orders"):
+        shutil.copy(os.path.join(SF_DIR, f"{t}.parquet"), day / f"{t}.parquet")
+    fact_sales(spark, SF_DIR)  # the staged files' footers are known
+    _drop_file(spark, staging, "day-0.parquet", [(1, "ames", _d(2024, 1, 1))])
+    drain()
+    _drop_file(spark, staging, "day-1.parquet", [(1, "boone", _d(2024, 3, 1)), (3, "clive", _d(2024, 3, 9))])
+
+    class Started(StreamingQueryListener):
+        def __init__(self):
+            self.started = []
+
+        def onQueryStarted(self, event):
+            self.started.append(event.id)
+
+        def onQueryProgress(self, event):
+            pass
+
+        def onQueryIdle(self, event):
+            pass
+
+        def onQueryTerminated(self, event):
+            pass
+
+    listener = Started()
+    spark.streams.addListener(listener)
+    try:
+
+        def day_1():
+            # one week of the copied tables: each date is a partition to commit
+            week = fact_sales(spark, str(day)).where("sale_date BETWEEN DATE'1995-06-01' AND DATE'1995-06-07'")
+            n = load_or_update(spark, week, fact, "sale_date")[1]
+            drain()
+            return n
+
+        n, jobs = jobs_of(spark, "incremental-day", day_1)
+    finally:
+        spark.streams.removeListener(listener)
+    store = spark.sparkContext._jsc.sc().statusStore()
+    outside = [j for j in jobs if "-execution-root-id-" not in str(store.job(j).jobTags().mkString(" "))]
+    assert outside == []
+    assert listener.started == []
+    assert n > 0 and len(_scd_rows(spark, dim)) == 3
 
 
 def test_stream_stream_join_matches_batch(spark):
@@ -972,11 +1150,11 @@ def test_chained_incremental_pipeline_with_restart(spark, tmp_path):
     """The reference's core lifecycle (SURVEY §3 entry point 2) as ONE
     composed assertion: watermark-gated staging append
     (load_or_update) → SCD2 stream merge over the staging dir
-    (scd_stream_upsert, checkpoint-gated) → point-in-time fact
+    (scd_stream_upsert, ledger-gated) → point-in-time fact
     enrichment → dashboard aggregate, across TWO batches with a
     session restart between them (spark.newSession(): temp views,
     session conf and cached plans are gone — every bit of pipeline
-    state must live in the lakehouse + streaming checkpoint, none in
+    state must live in the lakehouse + the drain's ledger, none in
     the driver). Batch-2 state must equal a from-scratch rebuild over
     the concatenated input."""
     import decimal
@@ -1070,7 +1248,7 @@ def test_chained_incremental_pipeline_with_restart(spark, tmp_path):
     sess2 = spark.newSession()
 
     # replaying batch 1's source through the restarted session is a
-    # no-op on both legs (watermark gate + streaming checkpoint)
+    # no-op on both legs (watermark gate + drained-file ledger)
     mode, n = run_batch(sess2, None, sales1)
     assert (mode, n) == ("update", 0)
     assert sess2.read.parquet(dim_path).count() == 2
