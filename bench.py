@@ -185,6 +185,7 @@ def main() -> None:
     from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spark import get_spark
     from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spark.plans.queries import (
         registry,
+        clear_plan_memo,
         release_persisted,
     )
 
@@ -193,12 +194,14 @@ def main() -> None:
 
     # warm JVM/codegen with the flagship shapes at tiny scale so the
     # timed runs measure steady-state execution, not first-query JIT
+    clear_plan_memo()  # every timed build below is a fresh one
     for warm in ("q01_pricing_summary", "q23_star_weekday"):
         reg[warm].fn(spark, "/root/testdata/sf0.001").write.mode("overwrite").format("noop").save()
 
     def run_list(names: list[str], reps: int) -> dict[str, dict[str, float]]:
         samples: dict[str, list[float]] = {n: [] for n in names}
         for _ in range(reps):
+            clear_plan_memo()
             for name in names:
                 t0 = time.time()
                 reg[name].fn(spark, SF_DIR).write.mode("overwrite").format("noop").save()

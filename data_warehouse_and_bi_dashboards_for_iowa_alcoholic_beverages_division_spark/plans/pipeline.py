@@ -28,7 +28,7 @@ from __future__ import annotations
 import os
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 
 from ..functions.dates import build_date_dim
 from ..sources.tables import load_table, read_parquet
@@ -59,12 +59,22 @@ def build_star_warehouse(spark: SparkSession, sf_dir: str, out_dir: str) -> dict
     reference's create-vs-update DAG."""
     paths = {name: os.path.join(out_dir, name) for name in ("dim_date", "dim_geo", "dim_item", "dim_vendor", "fact_sales")}
 
-    fact = fact_sales(spark, sf_dir)
-    bounds = fact.agg(F.min("sale_date").alias("lo"), F.max("sale_date").alias("hi")).collect()[0]
+    # the fact is written first and evaluated once: its date bounds ride
+    # that write as observed metrics, then bound the calendar
+    bounds = Observation("fact_date_bounds")
+    (
+        fact_sales(spark, sf_dir)
+        .observe(bounds, F.min("sale_date").alias("lo"), F.max("sale_date").alias("hi"))
+        .withColumn("sale_year", F.year("sale_date"))
+        .write.mode("overwrite")
+        .partitionBy("sale_year")
+        .parquet(paths["fact_sales"])
+    )
 
     # calendar spans exactly the fact's dates; the reference's 5 years
     # of headroom past them (main_pipeline.py:305) is not reproduced
-    build_date_dim(spark, str(bounds["lo"]), str(bounds["hi"])).write.mode("overwrite").parquet(paths["dim_date"])
+    lo, hi = bounds.get["lo"], bounds.get["hi"]
+    build_date_dim(spark, str(lo), str(hi)).write.mode("overwrite").parquet(paths["dim_date"])
 
     _with_unknown_member(
         geo_dim(spark, sf_dir), "c_custkey", {"c_name": "unknown", "nation_name": "unknown", "region_name": "unknown"}
@@ -76,13 +86,6 @@ def build_star_warehouse(spark: SparkSession, sf_dir: str, out_dir: str) -> dict
     _with_unknown_member(load_table(spark, sf_dir, "supplier"), "s_suppkey", {"s_name": "unknown"}).write.mode(
         "overwrite"
     ).parquet(paths["dim_vendor"])
-
-    (
-        fact.withColumn("sale_year", F.year("sale_date"))
-        .write.mode("overwrite")
-        .partitionBy("sale_year")
-        .parquet(paths["fact_sales"])
-    )
     return paths
 
 

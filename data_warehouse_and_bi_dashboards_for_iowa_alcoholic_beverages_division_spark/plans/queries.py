@@ -16,12 +16,37 @@ insensitively at sf0.01). Ground rules that make that possible:
 
 Queries with no SQL-expressible oracle (MinHash/SimHash need xxhash64)
 set ``oracle=None`` → the driver records a rows-only check.
+
+Plan memo. ``QuerySpec.fn`` returns the DataFrame an earlier call built
+while nothing it depends on has changed, so a dashboard refresh
+re-collects it: Spark reuses its executed plan, its broadcast relations
+and the shuffle stages adaptive execution already materialized.
+
+- **Key:** the query name, ``abspath(sf_dir)`` and the text of every
+  conf set in the session at lookup.
+- **Hit:** the entry was built by this same ``SparkSession`` object (an
+  entry of any other session is dropped), and every path the build read
+  through ``sources.tables.read_parquet`` (``recorded_reads``) still
+  has the size and mtime of each of its files. A ``commit.write`` to
+  any table the plan reads, broadcast sides included, is a miss.
+- **Never memoized:** a build that read nothing through
+  ``read_parquet`` or a path it could not fingerprint, ran a Spark job
+  (schema inference, an eager persist or checkpoint, a side index), grew
+  ``_PERSISTED``, reads a checkpoint (a ``LogicalRDD`` leaf), is not
+  deterministic (``rand()``, ``monotonically_increasing_id``), or scans
+  a file outside the paths it recorded (``spark.read`` of an IVF or
+  side index).
+- **Bound:** an LRU of ``_PLAN_MEMO_SIZE`` entries.
+  ``clear_plan_memo()`` empties it for callers that measure a build.
 """
 
 from __future__ import annotations
 
+import os
+from collections import OrderedDict
 from collections.abc import Callable
 from dataclasses import dataclass
+from urllib.parse import unquote, urlparse
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -30,7 +55,7 @@ from ..functions.dates import build_date_dim, season_name_expr, season_number_ex
 from ..functions.rounding import floor_round6, floor_round6_sql
 from ..operators import bloomfilter, dedup, multimodal, retrieval, similarity, sketches, text
 from ..operators.scd import create_scd_from_input, scd_point_in_time_join, scd_update_and_insert
-from ..sources.tables import load_table
+from ..sources.tables import _fingerprint, load_table, recorded_reads
 from .pipeline import revenue_by_weekday
 from .warehouse import COST_SQL, PROFIT_SQL, REVENUE_SQL, fact_sales
 
@@ -103,16 +128,92 @@ _CANONICAL_DOUBLE: dict[str, tuple[str, ...]] = {
 }
 
 
-def _canonical_fn(name: str, fn: Callable[[SparkSession, str], DataFrame]):
+@dataclass(frozen=True)
+class _Memoized:
+    spark: SparkSession
+    reads: frozenset[tuple[str, tuple | None]]
+    df: DataFrame
+
+
+# Plan memo: registry builds by (query name, abspath(sf_dir), session
+# conf text), each with the session that built it and the reads it
+# recorded. One BI page is about a dozen visuals; 32 keeps a few pages
+# warm, while a sweep over the whole registry cannot pin every plan's
+# broadcast relations and shuffle files at once.
+_PLAN_MEMO_SIZE = 32
+_PLAN_MEMO: OrderedDict[tuple[str, str, str], _Memoized] = OrderedDict()
+
+
+def clear_plan_memo() -> None:
+    """Forget every memoized build, so the next call of each query
+    builds and plans afresh (for callers that measure a build)."""
+    _PLAN_MEMO.clear()
+
+
+def _conf_text(spark: SparkSession) -> str:
+    """Every conf set in ``spark``, sorted, as one string: three gateway
+    round trips, where ``spark.conf.getAll`` makes two per entry."""
+    return spark._jvm.java.util.TreeMap(spark._jsparkSession.conf().getAllAsJava()).toString()
+
+
+def _jobs_submitted(spark: SparkSession) -> int:
+    """Jobs the session's scheduler has ever been handed, counted when
+    they are submitted, so no queued job is missed."""
+    return spark.sparkContext._jsc.sc().dagScheduler().numTotalJobs()
+
+
+def _local_path(uri: str) -> str | None:
+    parsed = urlparse(uri)
+    return unquote(parsed.path) if parsed.scheme in ("", "file") else None
+
+
+def _memoizable(df: DataFrame, reads: set, jobs_before: int, persisted_before: int) -> bool:
+    """Whether a fresh build may be returned again: it read files only
+    through ``read_parquet``, all of them locally fingerprinted, ran no
+    job, tracked no persist, reads no checkpoint and is deterministic."""
+    if not reads or any(fp is None for _, fp in reads):
+        return False
+    if _jobs_submitted(df.sparkSession) != jobs_before or len(_PERSISTED) != persisted_before:
+        return False
+    analyzed = df._jdf.queryExecution().analyzed()
+    if not analyzed.deterministic():
+        return False
+    leaves = analyzed.collectLeaves()
+    if any(leaves.apply(i).nodeName() == "LogicalRDD" for i in range(leaves.size())):
+        return False  # a checkpoint, or rows built on the driver
+    roots = [path for path, _ in reads]
+    for uri in df.inputFiles():
+        local = _local_path(uri)
+        if local is None or not any(local == r or local.startswith(r + os.sep) for r in roots):
+            return False
+    return True
+
+
+def _registered_fn(name: str, fn: Callable[[SparkSession, str], DataFrame]):
+    """``fn`` with its terminal decimals cast (``_CANONICAL_DOUBLE``),
+    memoized per session while the files its build read are unchanged."""
     cols = _CANONICAL_DOUBLE.get(name)
-    if not cols:
-        return fn
 
     def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
-        df = fn(spark, sf_dir)
-        return df.select(
-            *[F.col(c).cast("double").alias(c) if c in cols else F.col(c) for c in df.columns]
-        )
+        for stale in [k for k, m in _PLAN_MEMO.items() if m.spark is not spark]:
+            del _PLAN_MEMO[stale]
+        key = (name, os.path.abspath(sf_dir), _conf_text(spark))
+        memo = _PLAN_MEMO.pop(key, None)
+        if memo is not None and all(_fingerprint(spark, path) == fp for path, fp in memo.reads):
+            _PLAN_MEMO[key] = memo
+            return memo.df
+        jobs, persisted = _jobs_submitted(spark), len(_PERSISTED)
+        with recorded_reads() as reads:
+            df = fn(spark, sf_dir)
+        if cols:
+            df = df.select(
+                *[F.col(c).cast("double").alias(c) if c in cols else F.col(c) for c in df.columns]
+            )
+        if _memoizable(df, reads, jobs, persisted):
+            _PLAN_MEMO[key] = _Memoized(spark, frozenset(reads), df)
+            if len(_PLAN_MEMO) > _PLAN_MEMO_SIZE:
+                _PLAN_MEMO.popitem(last=False)
+        return df
 
     wrapped.__name__ = fn.__name__
     wrapped.__doc__ = fn.__doc__
@@ -130,7 +231,7 @@ def _canonical_oracle(name: str, sql: str | None) -> str | None:
 def register(name: str, oracle: str | None, description: str = ""):
     def deco(fn):
         _REGISTRY[name] = QuerySpec(
-            name, _canonical_fn(name, fn), _canonical_oracle(name, oracle), description
+            name, _registered_fn(name, fn), _canonical_oracle(name, oracle), description
         )
         return fn
 

@@ -31,11 +31,20 @@ plans it without touching the files' contents:
 A directory keeps the path memo alone: its partition columns come from
 directory names, and Spark infers its data columns from one file it
 chooses. Any error while reading a footer takes the inference read.
+
+Inside a ``recorded_reads()`` block, ``read_parquet`` also adds
+``(abspath, fingerprint)`` of each path it reads to the set the
+innermost block yielded; the fingerprint is None for a path that cannot
+be stat'ed locally. The registry's plan memo (``plans.queries``) keys a
+built DataFrame by those reads and reuses it while every fingerprint
+still matches. Outside any block a read records nothing.
 """
 
 from __future__ import annotations
 
 import os
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 import pyspark.sql.functions as F
 from py4j.protocol import Py4JError
@@ -63,6 +72,9 @@ NANOS_AS_LONG = "spark.sql.legacy.parquet.nanosAsLong"
 _SCHEMAS: dict[str, tuple[tuple, StructType]] = {}
 # footer key (``_footer_key``) -> schema Spark inferred for a file with it
 _FOOTERS: dict[tuple, StructType] = {}
+
+# the sets ``recorded_reads`` yielded, innermost last
+_RECORDINGS: list[set[tuple[str, tuple | None]]] = []
 
 # the footer entry Spark writes its own schema into, and reads it back from
 SPARK_ROW_METADATA = "org.apache.spark.sql.parquet.row.metadata"
@@ -106,6 +118,19 @@ def _footer_key(spark: SparkSession, path: str, conf: str) -> tuple | None:
         return None
 
 
+@contextmanager
+def recorded_reads() -> Iterator[set[tuple[str, tuple | None]]]:
+    """Yield a set that collects ``(abspath, _fingerprint)`` of every
+    ``read_parquet`` made inside the block and outside any block nested
+    in it."""
+    reads: set[tuple[str, tuple | None]] = set()
+    _RECORDINGS.append(reads)
+    try:
+        yield reads
+    finally:
+        _RECORDINGS.pop()
+
+
 def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     """``spark.read.parquet(path)`` that infers a schema once.
 
@@ -119,6 +144,8 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     whose footer matches one read before plans without a job too."""
     key = os.path.abspath(path)
     fp = _fingerprint(spark, key)
+    if _RECORDINGS:
+        _RECORDINGS[-1].add((key, fp))
     hit = _SCHEMAS.get(key)
     if fp is not None and hit is not None and hit[0] == fp:
         return spark.read.schema(hit[1]).parquet(path)

@@ -6,6 +6,7 @@ import pytest
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spark import get_spark
+from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spark.plans.queries import clear_plan_memo
 
 
 @pytest.fixture(scope="session")
@@ -13,6 +14,13 @@ def spark():
     s = get_spark("tests", cores=8)
     yield s
     s.stop()
+
+
+@pytest.fixture(autouse=True)
+def fresh_plan_memo():
+    """Each test starts with no memoized registry build, so what it
+    sees does not depend on the tests that ran before it."""
+    clear_plan_memo()
 
 
 SF_DIR = "/root/testdata/sf0.001"

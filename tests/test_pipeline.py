@@ -2,7 +2,9 @@
 serve the flagship dashboard query from the written tables."""
 
 import pyspark.sql.functions as F
+from conftest import jobs_of
 
+from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spark.functions.dates import build_date_dim
 from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spark.plans.pipeline import (
     build_star_warehouse,
     read_warehouse,
@@ -63,3 +65,26 @@ def test_fact_partition_pruning(spark, tmp_path):
     assert "PartitionFilters" in plan
     pf = plan.split("PartitionFilters:")[1].splitlines()[0]
     assert "sale_year" in pf, f"partition filter not pushed: {pf}"
+
+
+def test_build_evaluates_the_fact_once(spark, tmp_path):
+    """The build runs one SQL execution per table written, five in all:
+    the fact's date bounds ride its write as observed metrics instead of
+    a bounds query of their own that evaluated lineitem x orders a
+    second time. The calendar still spans exactly the fact's dates.
+    Jobs are grouped by execution root, since adaptive execution splits
+    one action into a timing-dependent number of jobs."""
+    paths, jobs = jobs_of(spark, "build-star-once", lambda: build_star_warehouse(spark, SF_DIR, str(tmp_path / "wh")))
+    store = spark.sparkContext._jsc.sc().statusStore()
+    roots = set()
+    for job in jobs:
+        tags = str(store.job(job).jobTags().mkString(" ")).split()
+        roots.update(t for t in tags if "-execution-root-id-" in t)
+    assert len(roots) == 5
+
+    fact = spark.read.parquet(paths["fact_sales"])
+    lo, hi = fact.agg(F.min("sale_date"), F.max("sale_date")).first()
+    want = build_date_dim(spark, str(lo), str(hi))
+    got = spark.read.parquet(paths["dim_date"])
+    assert got.dtypes == want.dtypes
+    assert sorted(got.collect()) == sorted(want.collect())

@@ -36,6 +36,7 @@ def main() -> None:
 
     from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spark import get_spark
     from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spark.plans.queries import (
+        clear_plan_memo,
         registry,
         release_persisted,
     )
@@ -54,6 +55,7 @@ def main() -> None:
         for sf_label, sf_dir in SFS:
             samples = []
             for _ in range(args.reps):
+                clear_plan_memo()  # each rep times a fresh build
                 t0 = time.time()
                 reg[name].fn(spark, sf_dir).write.mode("overwrite").format(
                     "noop"

@@ -115,6 +115,7 @@ def walk(spark) -> tuple[dict[str, dict[str, int]], dict[str, list[tuple[str, st
     before it would be inferred again by whichever query reads it
     next."""
     from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spark.plans.queries import (
+        clear_plan_memo,
         registry,
         release_persisted,
     )
@@ -123,6 +124,9 @@ def walk(spark) -> tuple[dict[str, dict[str, int]], dict[str, list[tuple[str, st
         load_table,
     )
 
+    # a memoized DataFrame that already ran prints adaptive execution's
+    # final plan beside its initial one; the census counts fresh builds
+    clear_plan_memo()
     for table in sorted(TABLES, key=lambda t: t != "events"):
         load_table(spark, SF_DIR, table)
     sc = spark.sparkContext

@@ -38,6 +38,7 @@ def main() -> None:
 
     from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spark import get_spark
     from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spark.plans.queries import (
+        clear_plan_memo,
         registry,
         release_persisted,
     )
@@ -57,6 +58,7 @@ def main() -> None:
 
         for name in args.names:
             for rep in range(args.reps):
+                clear_plan_memo()  # each rep profiles a fresh build
                 with tracer.span(name, rep=rep):
                     reg[name].fn(spark, args.sf).write.mode("overwrite").format("noop").save()
                 release_persisted()
