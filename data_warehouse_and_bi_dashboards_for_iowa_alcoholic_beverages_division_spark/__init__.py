@@ -8,8 +8,8 @@ This engine re-expresses those capabilities Spark-first:
 - parquet lakehouse tables instead of JDBC/SQL Server sinks
 - SCD Type-2 as window functions (``lead``) instead of offset self-joins
 - dashboard aggregations as first-class Spark SQL / DataFrame queries
-- incremental loads as watermark-gated batch (+ optional Structured
-  Streaming ``availableNow``)
+- incremental loads as watermark-gated batch, and SCD2 change-logs
+  drained from an inbox as a ledgered batch
 
 plus a beyond-reference layer for large-scale training-data pipelines:
 deduplication (exact / MinHash-LSH / SimHash / n-gram Jaccard / embedding

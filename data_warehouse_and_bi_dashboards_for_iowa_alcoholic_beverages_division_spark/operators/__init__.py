@@ -1,6 +1,5 @@
 from .scd import (  # noqa: F401
     create_scd_from_input,
-    get_oldest_records_from_scd,
     merge_scd,
     remove_one_day_changes,
     scd_point_in_time_join,

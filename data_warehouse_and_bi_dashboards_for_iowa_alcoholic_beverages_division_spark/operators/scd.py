@@ -96,22 +96,6 @@ def scd_schema(
     )
 
 
-def get_oldest_records_from_scd(
-    scd_df: DataFrame,
-    attribute_cols_without_nk: Sequence[str],
-    natural_key: str,
-) -> DataFrame:
-    """Earliest version per natural key (reference ``scd.py:69-81``,
-    there a min-aggregate self-join; here a single-pass ranking window).
-    """
-    w = Window.partitionBy(natural_key).orderBy(F.col("start_date").asc())
-    return (
-        scd_df.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1)
-        .select(*attribute_cols_without_nk, *SCD_META_COLS, natural_key)
-    )
-
-
 def remove_one_day_changes(
     df: DataFrame,
     column_name: str,

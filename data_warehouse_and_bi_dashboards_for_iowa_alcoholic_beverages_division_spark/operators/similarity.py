@@ -1444,7 +1444,7 @@ def _rewrite_cells(spark, path: str, rows: DataFrame, cells) -> None:
     not read the files the commit retires.
 
     Cold cells are never listed, staged or touched — the
-    partition-pruning contract of compaction/rebalance holds exactly,
+    partition-pruning contract of compaction holds exactly,
     at the cost of one extra move of the rewritten cells' files."""
     retire = commit.live_files(spark, path, [f"cell={int(c)}" for c in cells])
     # ~one file per rewritten cell
@@ -1518,7 +1518,7 @@ def append_to_ivf_index(
     appenders presenting the same token; dedupe retries upstream
     (one writer per token) rather than racing two. The serialization
     requirement extends to EVERY mutating op on the index — an append
-    racing a live compaction/rebalance can roll back its uncommitted
+    racing a live compaction can roll back its uncommitted
     stage (the single-writer contract of ``sources.commit``)."""
     spark = new_vectors.sparkSession
     # converge any crashed write first: the index is read below, and a
@@ -1582,18 +1582,18 @@ def delete_from_ivf_index(
     id_col: str = "vec_id",
 ) -> None:
     """Logical deletion — the missing step of the index lifecycle
-    (build → persist → append → audit → split/rebalance → DELETE →
-    compact). Records ``ids`` (their ``id_col``) in a tiny
-    ``_tombstones`` sidecar keyed ``neighbor_id`` — the lists' id
-    column, with the caller's id type — on either quantizer;
+    (build → persist → append → DELETE → compact). Records ``ids``
+    (their ``id_col``) in a tiny ``_tombstones`` sidecar keyed
+    ``neighbor_id`` — the lists' id column, with the caller's id type
+    — on either quantizer;
     :func:`query_ivf_index` anti-joins it so deleted vectors stop
     appearing as neighbors IMMEDIATELY, while the inverted-list files
     are untouched — at 100 TB a delete must not rewrite a single data
     partition. Physical removal is :func:`compact_ivf_index`; WHEN to
-    run it is data-driven through :func:`audit_ivf_tombstones`, which
-    reports per-cell tombstone debt, the index-wide tombstone share,
-    and the fraction of cells a compaction would touch (the pruning
-    ratio that decides whether compacting now amortizes the rewrites).
+    run it is what :func:`tombstone_debt_report` (q225) reports:
+    per-cell tombstone debt, the index-wide tombstone share, and the
+    fraction of cells a compaction would touch (the pruning ratio that
+    decides whether compacting now amortizes the rewrites).
 
     Cost contract: appended tombstones are deduped against the
     existing sidecar by anti-join — O(#tombstones) per delete, NOT
@@ -1635,10 +1635,10 @@ def compact_ivf_index(spark, path: str, only_ids: DataFrame | None = None) -> di
     of delete. LAYOUT-AGNOSTIC: the rewrite keeps every non-partition
     column of the surviving rows verbatim, and only the lists'
     ``neighbor_id`` and the ``cell`` partition column are named, so
-    one implementation compacts both quantizers' lists. Same
-    partition-pruning contract as :func:`rebalance_ivf_index`: ONLY cells that actually
-    hold a tombstoned row are read (a column-pruned (id, cell) scan
-    finds them) and ONLY those partitions are rewritten. A cell whose
+    one implementation compacts both quantizers' lists.
+    Partition-pruned: ONLY cells that actually hold a tombstoned row
+    are read (a column-pruned (id, cell) scan finds them) and ONLY
+    those partitions are rewritten. A cell whose
     every member is tombstoned gets its directory removed outright;
     its sidecar centroid is retained — a trained-but-empty cell is a
     legal index state (build produces them too) and queries probing it
@@ -1781,10 +1781,8 @@ def tombstone_debt_report(per_cell: DataFrame) -> DataFrame:
     """(cell, n, nt) → the tombstone-debt report — per-cell live/dead
     counts and fractions, the index-wide tombstone share, the
     affected-cell fraction (a compaction's pruning ratio), and the
-    integer-exact ``needs_compact`` trigger (10·Σnt > Σn). ONE
-    implementation shared by the persisted audit
-    (:func:`audit_ivf_tombstones`) and the oracle-checked plan (q225),
-    same single-source argument as :func:`occupancy_report`."""
+    integer-exact ``needs_compact`` trigger (10·Σnt > Σn). The
+    oracle-checked plan q225 builds its report with it."""
     w = Window.partitionBy()  # bounded: ≤ n_cells rows
     tot_n = F.sum("n").over(w)
     tot_t = F.sum("nt").over(w)
@@ -1802,72 +1800,6 @@ def tombstone_debt_report(per_cell: DataFrame) -> DataFrame:
         ).alias("affected_cell_frac"),
         (F.lit(10) * tot_t > tot_n).alias("needs_compact"),
     ).orderBy("cell")
-
-
-def audit_ivf_tombstones(spark, path: str) -> DataFrame:
-    """Tombstone-debt audit — the WHEN for :func:`compact_ivf_index`,
-    completing the maintenance pair the occupancy audit started
-    (occupancy audit → :func:`rebalance_ivf_index`; THIS →
-    :func:`compact_ivf_index`). One row per inverted-list cell:
-
-    - ``n_vectors`` / ``n_tombstoned`` / ``tombstone_frac`` — the
-      cell's live size, its logically-deleted rows, and their ratio
-      (which cells a compaction would rewrite, and how much of each
-      rewrite is waste);
-    - ``tombstone_share`` — index-wide deleted fraction, repeated per
-      row (the q200 ``skew_factor`` device): this is the query-time
-      overhead deletes currently impose, since every probe scores
-      tombstoned candidates before the anti-join drops them;
-    - ``affected_cell_frac`` — fraction of cells holding ≥1 tombstone:
-      the partition-pruning ratio of a compaction run TODAY. Near 0 =
-      deletes are id-clustered and compaction is cheap now; near 1 =
-      scattered deletes have touched every cell and compaction
-      degenerates to a full rewrite — batch more deletes first (the
-      r13 scattered-delete guidance, now measurable instead of
-      hand-waved);
-    - ``needs_compact`` — index-wide trigger, integer-exact
-      (``10 * Σ tombstoned > Σ rows``, i.e. share > 10%, no float
-      threshold — the q223 hot-cell predicate discipline).
-
-    Contract with :func:`compact_ivf_index` (pytest-pinned, the same
-    one-directional device as the occupancy-audit↔rebalance pair):
-    the audit's affected set {cell | n_tombstoned > 0} is EXACTLY the
-    union of the compaction's ``cells_rewritten`` + ``cells_removed``,
-    its fully-dead set {cell | n_tombstoned = n_vectors} exactly
-    ``cells_removed``, and Σ ``n_tombstoned`` exactly ``rows_removed``
-    — so the audit is a dry-run cost estimate of the compaction, not
-    just a health flag. ``needs_compact`` firing implies the
-    compaction finds work; the converse is deliberately false (one
-    tombstone never pages).
-
-    Scale shape: ONE column-pruned pass over (id, cell) — vectors are
-    never read — with the tombstone sidecar broadcast into a left-semi
-    flag join; output is ≤ n_cells rows, and the index-wide columns
-    are unpartitioned windows over that bounded set. Absent/empty
-    sidecar short-circuits to the zero-debt report without touching
-    the flag join. Cells whose every row is tombstoned still appear
-    (frac 1.0); trained-but-empty cells have no inverted-list rows and
-    never appear — a compaction cannot touch them either, so the
-    audit↔compact contract is unaffected."""
-    idx = _read_index(spark, path).select("neighbor_id", "cell")
-    tombs = commit.read_optional(spark, path + "_tombstones")
-    if tombs is None or not tombs.head(1):
-        per_cell = idx.groupBy("cell").agg(
-            F.count(F.lit(1)).alias("n"), F.lit(0).cast("long").alias("nt")
-        )
-    else:
-        flagged = idx.join(
-            F.broadcast(tombs.select("neighbor_id").distinct().withColumn("__dead", F.lit(1))),
-            on="neighbor_id",
-            how="left",
-        )
-        per_cell = flagged.groupBy("cell").agg(
-            F.count(F.lit(1)).alias("n"),
-            F.count("__dead").alias("nt"),
-        )
-    return tombstone_debt_report(
-        per_cell.select(F.col("cell").cast("int").alias("cell"), "n", "nt")
-    )
 
 
 def update_in_ivf_index(
@@ -1922,7 +1854,7 @@ def update_in_ivf_index(
 
     Single-writer contract (same as every mutating op on the index —
     see ``sources.commit``): serialize updates against appends,
-    deletes, compactions, and rebalances.
+    deletes and compactions.
 
     Serves both quantizers: step 3 is :func:`append_to_ivf_index`,
     which routes under whichever one the index was built with.
@@ -2040,12 +1972,10 @@ def query_ivf_index(
 
 
 def split_hot_cells(members: DataFrame, materialize=None) -> DataFrame:
-    """The deterministic 2-seed farthest-point split shared by the
-    oracle-checked plan (q223_ivf_cell_split) and the persisted repair
-    (:func:`rebalance_ivf_index`) — ONE implementation so the seed
-    rules, the ``min(struct(cos_a, id))`` argmin, the ``>=`` tie-to-A
-    assignment, and the 6dp flooring can never de-synchronize between
-    the plan the driver value-checks and the repair it validates.
+    """The deterministic 2-seed farthest-point split of the
+    oracle-checked plan q223_ivf_cell_split: the seed rules, the
+    ``min(struct(cos_a, id))`` argmin, the ``>=`` tie-to-A assignment,
+    and the 6dp flooring.
 
     ``members``: (cell, id, v, nrm) rows of the hot cells only.
     Returns (cell, id, v, sub) with sub in ('a', 'b'): seed A is the
@@ -2106,227 +2036,6 @@ def split_hot_cells(members: DataFrame, materialize=None) -> DataFrame:
         .otherwise(F.lit("b"))
         .alias("sub"),
     )
-
-
-def rebalance_ivf_index(spark, path: str) -> dict:
-    """In-place hot-cell split of a persisted IVF index — the
-    production form of the q223 plan-level split, and the repair step
-    q200's ``needs_rebalance`` audit triggers without a full retrain.
-
-    Trigger contract with the q200 audit (deliberately TWO predicates,
-    pinned in tests/test_ivf_rebalance.py): the audit decides WHEN —
-    its index-level ``max * n_cells > 2 * total`` (skew > 2x) is the
-    operational alarm, lax enough that ordinary occupancy jitter never
-    pages anyone. The repair decides WHAT — once invoked it splits
-    EVERY over-mean cell (integer-exact per-cell predicate
-    ``n * n_cells > total``), not just the one that tripped the alarm,
-    so a single repair pass leaves no cell above the pre-split mean.
-    The audit firing implies the repair finds work (the max cell is
-    over-mean whenever skew > 2x — indeed whenever skew > 1x); the
-    converse is deliberately false: a mildly-skewed index (every cell
-    under 2x mean) audits healthy, and running the repair anyway still
-    tightens it. Aligning the two on one threshold would either page
-    on jitter (audit at >mean) or leave 1.9x hot spots unsplit
-    (repair at >2x mean) — the split contract is the useful one.
-
-    Every over-mean cell is split by the deterministic 2-seed
-    farthest-point rule (seed A = lowest id, seed B = farthest member
-    by 6dp-rounded cosine with id tiebreak, members join the nearer
-    seed, ties to A). The 'a' half keeps the old cell id; each
-    non-empty 'b' half gets a fresh id above the current max cell id
-    across BOTH the data partitions and the centroid sidecar — the
-    sidecar can hold trained-but-empty cells with higher ids than any
-    non-empty partition (build writes all n_cells centroids), and
-    allocating from data partitions alone would silently repurpose
-    such a cell's trained centroid. Both halves' centroids are
-    recomputed as the order-pinned per-dimension member mean
-    (``_lloyd_dim_means`` — the Lloyd-step fold), so probing quality
-    reflects the new boundaries; the sidecar is rewritten to match.
-
-    One implementation for both quantizers:
-
-    - the split divides by the STORED row norm ``cn`` and the rewrite
-      joins the split assignment back to the checkpointed member table
-      to carry it through bit-unchanged (recomputing it would be
-      value-identical today but couples the repair to the build's
-      expression — carrying the stored value cannot drift). Stored
-      norms are never zero: routing raises on a zero norm;
-    - each fresh 'b' cell INHERITS its parent's ``supercell`` in the
-      ``_centroids`` sidecar (NULL on a flat index). On a hierarchical
-      index the split never moves members across the level-1 boundary
-      — both halves' vectors were routed to the parent's supercell,
-      and keeping them there preserves the containment the two-stage
-      probe ranking assumes. ``_supers`` is untouched; later appends
-      and queries pick up the new cells because the member table
-      derives from the rewritten ``_centroids``.
-
-    Scale contract (what makes this cheap at 100 TB):
-
-    - occupancy is one column-pruned pass collecting n_cells rows;
-    - ONLY hot cells' partitions are read (partition-pruned scan) and
-      ONLY hot + new partitions are rewritten (one commit)
-      — cold cells' inverted-list files are never touched;
-    - seeds are <= 2 x n_cells broadcast rows; the member table is
-      localCheckpointed once and feeds the split, the centroid means,
-      and the rewrite without re-reading the files being replaced.
-
-    Returns a stats dict: ``hot_cells``, ``n_cells_before`` /
-    ``n_cells_after`` (NON-EMPTY data partitions, derived from the
-    final partition set), ``sidecar_cells_after`` (sidecar rows — can
-    exceed the data count by the trained-but-empty cells),
-    ``max_before`` / ``max_after``, ``new_cells``. No-op (nothing
-    written) when no cell is over-mean.
-
-    Crash windows (same honesty contract as ``append_to_ivf_index``):
-    the sidecar is written BEFORE the data, so a crash between the two
-    leaves centroids that probe a not-yet-rewritten partition —
-    queries stay correct on the old rows, and a re-run recomputes the
-    identical split from the unchanged data and converges. The data
-    rewrite itself is one commit (:func:`_rewrite_cells`): the hot and
-    new cells stage under the invisible ``.maint-tmp``, and an intent
-    retires the hot cells' files. What a crashed run does next: re-run
-    this function (or any maintenance op, or ``sources.commit.recover``
-    directly) — recovery rolls an uncommitted stage back (live index
-    untouched) or a committed one forward (remaining moves finish),
-    then the rebalance recomputes from the converged state.
-    """
-    _recover_index(spark, path)
-    idx = _read_index(spark, path)
-    occ = idx.groupBy("cell").agg(F.count(F.lit(1)).alias("n")).collect()
-    counts = {int(r["cell"]): int(r["n"]) for r in occ}
-    total, ncells = sum(counts.values()), len(counts)
-    hot = sorted(c for c, n in counts.items() if n * ncells > total)
-    stats = {
-        "hot_cells": hot,
-        "n_cells_before": ncells,
-        "max_before": max(counts.values(), default=0),
-    }
-    old = _sidecar_rows(spark, path + "_centroids", _SIDECAR_CENTROIDS_SCHEMA, "cell")
-    sidecar = {
-        int(r["cell"]): ([float(x) for x in r["centroid"]], r["supercell"]) for r in old
-    }
-    if not hot:
-        stats.update(
-            n_cells_after=ncells,
-            sidecar_cells_after=len(sidecar),
-            max_after=stats["max_before"],
-            new_cells=[],
-        )
-        return stats
-
-    members = (
-        idx.where(F.col("cell").isin(hot))
-        .select(
-            F.col("cell").cast("int").alias("cell"),
-            F.col("neighbor_id").alias("id"),
-            F.col("c_vec").alias("v"),
-            F.col("cn").alias("nrm"),
-        )
-        # materialized once: feeds the seed lookups, the split, the
-        # centroid means, and the rewrite — and breaks lineage to the
-        # files the commit below will retire
-        .localCheckpoint(eager=True)
-    )
-    halves = split_hot_cells(
-        members, materialize=lambda df: df.localCheckpoint(eager=True)
-    )
-    # fresh ids above the current max for every non-empty 'b' half
-    # (a single-member or all-tied hot cell yields no 'b' rows and
-    # allocates no id). The max is taken over DATA partitions AND the
-    # centroid sidecar: build writes all n_cells centroids while data
-    # partitions exist only for non-empty cells, so a trained-but-empty
-    # cell can hold the highest id — allocating from data partitions
-    # alone would collide with it and silently repurpose its trained
-    # centroid (the r12 ADVICE finding)
-    b_cells = sorted(
-        int(r["cell"])
-        for r in halves.where(F.col("sub") == "b").select("cell").distinct().collect()
-    )
-    base = max(set(counts) | set(sidecar)) + 1
-    new_id = {c: base + i for i, c in enumerate(b_cells)}
-    if b_cells:
-        mapping = F.create_map(*[F.lit(x) for c in b_cells for x in (c, new_id[c])])
-        cell_out = (
-            F.when(F.col("sub") == "b", mapping[F.col("cell")])
-            .otherwise(F.col("cell"))
-            .alias("cell")
-        )
-    else:
-        # every hot cell tied entirely to seed A (e.g. all-identical
-        # members): nothing relabels, but the halves' centroids still
-        # recompute to the member means below
-        cell_out = F.col("cell").alias("cell")
-    # carry the STORED cn through the relabel (see docstring) — the
-    # join key (cell, id) is unique within the hot member set
-    relabeled = (
-        halves.select(F.col("cell").alias("old_cell"), cell_out, "id", "v")
-        .join(
-            members.select(
-                F.col("cell").alias("old_cell"), "id", F.col("nrm").alias("cn")
-            ),
-            ["old_cell", "id"],
-        )
-        .select("cell", "id", "v", "cn")
-        .localCheckpoint(eager=True)
-    )
-
-    # order-pinned per-dimension means for BOTH halves (the Lloyd fold)
-    means = _lloyd_dim_means(relabeled.select("id", "cell", "v"))
-    parent_super = {new_id[c]: sidecar[c][1] for c in b_cells}
-    for r in means:
-        cell = int(r["cell"])
-        cent = [
-            math.floor(float(dd["m"]) * 1000000 + 0.5) / 1000000.0 for dd in r["dims"]
-        ]
-        sup = parent_super.get(cell, sidecar.get(cell, (None, None))[1])
-        sidecar[cell] = (cent, sup)
-
-    # Sidecar FIRST, data second. A crash between the two then leaves
-    # centroids for cells that hold no data yet — queries probe an
-    # empty partition, harmless — and a re-run recomputes the identical
-    # split from the (unchanged) data and converges. The reverse order
-    # would strand the 'b' halves unreachable (rows in partitions no
-    # centroid ever probes) with no self-healing re-run: occupancy
-    # would read the new layout while the sidecar lags it.
-    cents = [(c, cent, sup) for c, (cent, sup) in sorted(sidecar.items())]
-    _rewrite_sidecar(spark, path + "_centroids", _driver_rows(spark, cents, _SIDECAR_CENTROIDS_SCHEMA))
-    # hot + new partitions replace in one commit; a crash at any point
-    # converges under sources.commit.recover (run first above)
-    _rewrite_cells(
-        spark,
-        path,
-        relabeled.select(
-            F.col("id").alias("neighbor_id"), F.col("v").alias("c_vec"), "cn", "cell"
-        ),
-        hot,
-    )
-
-    after = {
-        int(r["cell"]): int(r["n"])
-        for r in relabeled.groupBy("cell").agg(F.count(F.lit(1)).alias("n")).collect()
-    }
-    # derived from the FINAL sets, not arithmetic on the inputs (the
-    # r12 ADVICE consistency note): data cells after = cold survivors
-    # + rewritten (hot 'a' halves keep their ids, so this equals
-    # len(counts) + len(b_cells) — checked cheaply here); the sidecar
-    # count additionally carries trained-but-empty cells
-    data_cells_after = {c for c in counts if c not in hot} | set(after)
-    if len(data_cells_after) != ncells + len(b_cells):
-        raise RuntimeError(
-            f"rebalance of {path} left {len(data_cells_after)} data cells, "
-            f"expected {ncells} + {len(b_cells)} new ones — the split's "
-            "cell relabeling is inconsistent with the occupancy it read"
-        )
-    stats.update(
-        n_cells_after=len(data_cells_after),
-        sidecar_cells_after=len(sidecar),
-        max_after=max(
-            [n for c, n in counts.items() if c not in hot] + list(after.values()),
-            default=0,
-        ),
-        new_cells=sorted(new_id.values()),
-    )
-    return stats
 
 
 def embedding_near_dup_pairs(

@@ -1383,7 +1383,7 @@ def q40(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # =====================================================================
-# events: time-grain aggs, JSON, sessionization, pivot (streaming twins)
+# events: time-grain aggs, JSON, sessionization, pivot
 # =====================================================================
 
 @register(
@@ -1394,7 +1394,7 @@ def q40(spark: SparkSession, sf_dir: str) -> DataFrame:
            SUM(CAST(value AS DECIMAL(12,2))) AS sum_value
     FROM events GROUP BY 1, 2
     """,
-    "Tumbling-hour aggregation — batch twin of streaming.hourly_counts",
+    "Tumbling-hour aggregation of the events table",
 )
 def q41(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _t(spark, sf_dir, "events")
@@ -10431,8 +10431,7 @@ def _q223_oracle() -> str:
     "cosine (vec_id tiebreak), members join the nearer seed (ties to "
     "A) - the one-pass analog of faiss's re-train-on-imbalance, "
     "oracle-expressible because it needs no Lloyd iteration. Scale "
-    "shape: cold cells never move (their inverted-list files are "
-    "untouched at 100 TB - only hot partitions rewrite), seeds are "
+    "shape: cold cells never move, seeds are "
     "<= 2 x n_cells broadcast rows, and the member pass is one "
     "filtered map-only scan (two dots + a norm per row, no shuffle); "
     "the output is the post-split occupancy table with the new skew "
@@ -10474,12 +10473,10 @@ def q223(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(False).alias("was_split"),
         )
     )
-    # the split itself is the SHARED builder (similarity.split_hot_cells)
-    # — one implementation of the seed rules / argmin / tie-to-A /
-    # rounding for both this oracle-checked plan and the persisted
-    # repair (rebalance_ivf_index), so they cannot de-synchronize. The
-    # cos_a member table feeds two consumers; eager-persist it (the
-    # q202 device, threaded through the materialize hook).
+    # the split itself is similarity.split_hot_cells (seed rules,
+    # argmin, tie-to-A, rounding). The cos_a member table feeds two
+    # consumers; eager-persist it (the q202 device, threaded through
+    # the materialize hook).
     members = (
         assigned.join(F.broadcast(hot), "cell")
         .select(
@@ -10543,7 +10540,7 @@ def _q224_oracle(tombstone_pred: str = "neighbor_id % 7 = 3") -> str:
     _q224_oracle(),
     "IVF tombstone deletion - the lifecycle step after q223's repair "
     "(build q67 -> persist q156 -> append q199 -> audit q200 -> "
-    "split/rebalance q223 -> DELETE here): vectors matching the "
+    "split q223 -> DELETE here): vectors matching the "
     "tombstone set (vec_id % 7 = 3) are removed from the CANDIDATE "
     "side while the coarse quantizer stays frozen on the full corpus "
     "- the exact state of an index built before the deletions, "
@@ -10556,8 +10553,7 @@ def _q224_oracle(tombstone_pred: str = "neighbor_id % 7 = 3") -> str:
     "persisted form deletes touch NO data file - query-time broadcast "
     "anti-join against the tiny _tombstones sidecar, with physical "
     "removal deferred to compact_ivf_index, which rewrites only the "
-    "cells that actually hold a tombstoned row (the rebalance "
-    "partition-pruning device)",
+    "cells that actually hold a tombstoned row (partition-pruned)",
 )
 def q224(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _t(spark, sf_dir, "embeddings")
@@ -10602,7 +10598,7 @@ def _q225_oracle(tombstone_pred: str = "vec_id % 7 = 3") -> str:
     _q225_oracle(),
     "IVF tombstone-debt audit - the WHEN for compact_ivf_index, "
     "closing the maintenance loop q224's delete opened (occupancy "
-    "audit q200 triggers rebalance; THIS triggers compaction): "
+    "audit q200 flags a split; THIS flags compaction): "
     "per-cell live counts, tombstoned counts and fractions under "
     "q224's tombstone set (vec_id % 7 = 3), plus three index-wide "
     "columns - tombstone_share (the query-time overhead deletes "
@@ -10613,13 +10609,9 @@ def _q225_oracle(tombstone_pred: str = "vec_id % 7 = 3") -> str:
     "cell and compaction degenerates to a full rewrite - batch more "
     "deletes first), and the integer-exact needs_compact trigger "
     "(10 x tombstoned > rows, share > 10%, no float threshold). The "
-    "audit doubles as a dry-run cost estimate: its affected set is "
-    "exactly the cell set compact_ivf_index rewrites or removes, and "
-    "its tombstoned sum exactly rows_removed (pytest-pinned contract, "
-    "the audit-implies-work device of the q200/rebalance pair). Scale "
-    "shape: one column-pruned (id, cell) pass - vectors never read - "
-    "with the sidecar broadcast; output bounded at n_cells rows, the "
-    "index-wide stats unpartitioned windows over that bounded set. "
+    "report is similarity.tombstone_debt_report; its output is "
+    "bounded at n_cells rows, the index-wide stats unpartitioned "
+    "windows over that bounded set. "
     "Oracle = q67's unrolled train + the tombstone-predicate "
     "aggregate over af",
 )
@@ -10634,9 +10626,8 @@ def q225(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("cell")
         .agg(F.count("*").alias("n"), F.sum("t").alias("nt"))
     )
-    # the report (fracs, index-wide share, the 10x trigger) is the
-    # SHARED builder behind audit_ivf_tombstones — the oracle checks
-    # the exact expression tree the persisted audit runs
+    # the report (fracs, index-wide share, the 10x trigger) is
+    # similarity.tombstone_debt_report
     return similarity.tombstone_debt_report(counts)
 
 
@@ -12521,9 +12512,9 @@ def _q226_oracle(tombstone_pred: str = "neighbor_id % 7 = 3") -> str:
     "so deletes are visible immediately and ranks assigned after the "
     "exclusion free a deleted neighbor's rank. Physical removal is "
     "compact_ivf_index (the layout-agnostic compaction: rewrites "
-    "every surviving column of only the tombstone-holding cells), "
-    "with the WHEN data-driven by audit_ivf_tombstones - both "
-    "pytest-pinned. The oracle is q212's verbatim two-level unroll "
+    "every surviving column of only the tombstone-holding cells, "
+    "pytest-pinned), with the WHEN given by q225's tombstone-debt "
+    "report. The oracle is q212's verbatim two-level unroll "
     "with the tombstone exclusion grafted before the terminal "
     "ranking, so build -> persist -> delete -> query is value-checked "
     "end-to-end across the file boundary",
@@ -12570,18 +12561,17 @@ def _q227_oracle() -> str:
 @register(
     "q227_ivf2_occupancy",
     _q227_oracle(),
-    "Hierarchical-IVF occupancy audit - q200's retrain/rebalance "
-    "trigger on the two-level layout, the WHEN for "
-    "rebalance_ivf_index (which completed the lifecycle matrix in "
-    "r14): per-member-cell vector counts and shares under the "
+    "Hierarchical-IVF occupancy audit - q200's retrain/split "
+    "trigger on the two-level layout, the WHEN for q223's hot-cell "
+    "split: per-member-cell vector counts and shares under the "
     "two-level routing (super -> best member cell), the max/mean skew "
     "factor, and the needs_rebalance flag (skew > 2x - the same "
-    "deliberately-lax alarm contract as the flat pair, property-"
-    "pinned: the audit firing implies the repair finds over-mean "
-    "cells). At scale this runs after every append window on the "
-    "hierarchical index; a hot member cell degrades exactly like a "
-    "hot flat cell (probe latency toward brute force) and the fix is "
-    "the in-place split. Oracle = q212's verbatim two-level unroll "
+    "deliberately-lax alarm contract as the flat q200/q223 pair, "
+    "property-pinned: the audit firing implies the split finds "
+    "over-mean cells). At scale this runs after every append window "
+    "on the hierarchical index; a hot member cell degrades exactly "
+    "like a hot flat cell (probe latency toward brute force) and the "
+    "fix is a hot-cell split. Oracle = q212's verbatim two-level unroll "
     "with q200's occupancy aggregate over af2, so the audit is "
     "value-checked against the identical two-level quantizer",
 )

@@ -1,8 +1,7 @@
 """One commit protocol for every table write that must not leave a
 torn table behind: the SCD2 dimension rewrite (``streaming.scd_stream``),
-the fact append (``streaming.incremental.load_or_update``), small-file
-compaction (``sources.maintenance.compact_table``) and IVF cell and
-sidecar maintenance (``operators.similarity``). All of them call
+the fact append (``streaming.incremental.load_or_update``) and IVF cell
+and sidecar maintenance (``operators.similarity``). All of them call
 :func:`write`:
 
 1. the new files are written into the hidden stage ``<path>/.maint-tmp``.

@@ -1,5 +1,2 @@
 from .incremental import high_watermark, incremental_delta, load_or_update  # noqa: F401
 from .scd_stream import scd_stream_upsert, scd_upsert_batch  # noqa: F401
-from .stream_ops import events_stream, hourly_counts, run_available_now  # noqa: F401
-from .joins import attribute_clicks_to_views, dedup_within_watermark  # noqa: F401
-from .stateful import running_user_totals, touch_attribution_stream  # noqa: F401

@@ -1,5 +1,5 @@
 """One commit protocol for every table write (``sources.commit``): a
-crash at any point of any of the five writers converges.
+crash at any point of any writer converges.
 
 Each case runs one writer from the same starting state twice: once
 cleanly, and once with a crash injected at one of three points:
@@ -44,16 +44,13 @@ from pyspark.sql import Row
 from pyspark.sql.types import DateType, LongType, StringType, StructField, StructType
 
 from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spark.operators.similarity import (
+    append_to_ivf_index,
     build_ivf_index,
     compact_ivf_index,
     delete_from_ivf_index,
     query_ivf_index,
-    rebalance_ivf_index,
 )
 from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spark.sources import commit
-from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spark.sources.maintenance import (
-    compact_table,
-)
 from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spark.streaming import load_or_update
 from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spark.streaming.incremental import (
     _listed_watermark,
@@ -100,18 +97,26 @@ def _fact_append(spark, root):
     return target, lambda: load_or_update(spark, source, target, "d")
 
 
-def _compact_table(spark, root):
-    path = str(root / "frag")
-    spark.range(200).selectExpr("id", "id % 7 AS g").repartition(6).write.parquet(path)
-    return path, lambda: compact_table(spark, path, target_files=2)
+def _vectors(spark):
+    rng = random.Random(7)
+    return spark.createDataFrame(
+        [(i, [rng.uniform(-1, 1) for _ in range(8)]) for i in range(120)], "vec_id long, embedding array<float>"
+    )
+
+
+def _ivf_append(spark, root):
+    """A batch that lands in several cells, so the append stages several
+    files. The update's second step is this append."""
+    emb = _vectors(spark)
+    path = str(root / "idx")
+    build_ivf_index(emb.where("vec_id < 100"), path, n_cells=4, iters=1)
+    return path, lambda: append_to_ivf_index(emb.where("vec_id >= 100"), path)
 
 
 def _ivf_compaction(spark, root):
-    """Tombstones in several cells, so the compaction rewrites several."""
-    rng = random.Random(7)
-    emb = spark.createDataFrame(
-        [(i, [rng.uniform(-1, 1) for _ in range(8)]) for i in range(120)], "vec_id long, embedding array<float>"
-    )
+    """Tombstones in several cells, so the compaction rewrites several.
+    The update's first step is a compaction."""
+    emb = _vectors(spark)
     path = str(root / "idx")
     build_ivf_index(emb, path, n_cells=4, iters=1)
     delete_from_ivf_index(emb.where("vec_id % 5 = 0"), path)
@@ -122,11 +127,9 @@ def _ivf_tombstone_sidecar(spark, root):
     """A micro-compaction whose list commit has landed and whose
     tombstone-sidecar commit is left: ids 200-209 are tombstoned but
     hold no row, so the run only rewrites the sidecar without them and
-    keeps every other tombstone."""
-    rng = random.Random(7)
-    emb = spark.createDataFrame(
-        [(i, [rng.uniform(-1, 1) for _ in range(8)]) for i in range(120)], "vec_id long, embedding array<float>"
-    )
+    keeps every other tombstone. A build rewrites its centroid sidecar
+    the same way."""
+    emb = _vectors(spark)
     path = str(root / "idx")
     build_ivf_index(emb, path, n_cells=4, iters=1)
     delete_from_ivf_index(emb.where("vec_id % 5 = 0"), path)
@@ -139,7 +142,7 @@ def _ivf_tombstone_sidecar(spark, root):
 WRITERS = {
     "dimension_drain": _dimension_drain,
     "fact_append": _fact_append,
-    "compact_table": _compact_table,
+    "ivf_append": _ivf_append,
     "ivf_compaction": _ivf_compaction,
     "ivf_tombstone_sidecar": _ivf_tombstone_sidecar,
 }
@@ -295,13 +298,11 @@ def _failing_parquet_writes(spark):
 def test_failed_sidecar_write_leaves_the_sidecar_as_it_was(spark, tmp_path):
     """A sidecar rewrite whose job fails leaves the live sidecar as it
     was; an in-place overwrite deletes it before the job runs. So a
-    failed micro-compaction keeps every tombstone and a failed
-    rebalance keeps the centroids. The next operation recovers both
-    stages and converges."""
+    failed micro-compaction keeps every tombstone, and the next
+    operation recovers the stage and converges."""
     tombstones, micro_compact = _ivf_tombstone_sidecar(spark, tmp_path)
     path = tombstones.removesuffix("_tombstones")
     tombs_before = _view(spark, tombstones)
-    cents_before = _view(spark, path + "_centroids")
 
     with _failing_parquet_writes(spark), pytest.raises(Exception):
         micro_compact()
@@ -313,13 +314,6 @@ def test_failed_sidecar_write_leaves_the_sidecar_as_it_was(spark, tmp_path):
     found = {int(r["neighbor_id"]) for r in hits.collect()}
     assert found and not found & {r[0] for r in tombs_before[0]}
 
-    with _failing_parquet_writes(spark), pytest.raises(Exception):
-        rebalance_ivf_index(spark, path)
-    assert _view(spark, path + "_centroids") == cents_before
-
     micro_compact()
     assert sorted(r[0] for r in _view(spark, tombstones)[0]) == list(range(0, 120, 5))
-    assert rebalance_ivf_index(spark, path)["new_cells"]
-    assert len(_view(spark, path + "_centroids")[0]) > len(cents_before[0])
-    for table in (tombstones, path + "_centroids"):
-        assert not os.path.exists(commit.stage_path(table))
+    assert not os.path.exists(commit.stage_path(tombstones))

@@ -1,7 +1,6 @@
 """delete_from_ivf_index / compact_ivf_index: the tombstone-delete +
 list-compaction steps that complete the persisted IVF lifecycle
-(build -> persist -> append -> audit -> split/rebalance -> delete ->
-compact).
+(build -> persist -> append -> delete -> compact).
 
 Pins the r12 verdict ask #4 contract: delete -> query excludes the
 ids immediately with NO data file touched; compact -> tombstoned rows
@@ -266,99 +265,10 @@ def test_deleting_unknown_id_is_harmless(spark, tmp_path):
     assert _neighbors(spark, emb, path) == before
 
 
-# ---------------------------------------------------------------------
-# Trigger contract between the tombstone-debt audit and the compaction
-# (the r13 verdict ask #2) — the same one-directional device as the
-# occupancy-audit↔rebalance pair: the audit decides WHEN (index-wide
-# integer-exact 10·Σtombstoned > Σrows), and is simultaneously a
-# DRY-RUN of the WHAT — its affected set must be exactly the cell set
-# compact_ivf_index rewrites or removes, its fully-dead set exactly
-# cells_removed, and its tombstoned sum exactly rows_removed.
-# ---------------------------------------------------------------------
-
-from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spark.operators.similarity import (  # noqa: E402
-    audit_ivf_tombstones,
-)
-
-
-def _audit_rows(spark, path):
-    return {
-        int(r["cell"]): r.asDict()
-        for r in audit_ivf_tombstones(spark, path).collect()
-    }
-
-
-def test_tombstone_audit_is_dry_run_of_compaction(spark, tmp_path):
-    emb = load_table(spark, SF_DIR, "embeddings")
-    path = str(tmp_path / "idx")
-    build_ivf_index(emb, path, n_cells=8, iters=2)
-    occ = {
-        int(r["cell"]): int(r["n"])
-        for r in spark.read.parquet(path)
-        .groupBy("cell")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    }
-    # victims: one ENTIRE small cell (exercises cells_removed) plus a
-    # couple of scattered ids from another cell (cells_rewritten)
-    dead_cell = min(occ, key=lambda c: (occ[c], c))
-    dead_ids = {
-        int(r["neighbor_id"])
-        for r in spark.read.parquet(path)
-        .where(F.col("cell") == dead_cell)
-        .select("neighbor_id")
-        .collect()
-    }
-    other = {
-        int(r["neighbor_id"])
-        for r in spark.read.parquet(path)
-        .where(F.col("cell") != dead_cell)
-        .select("neighbor_id")
-        .limit(2)
-        .collect()
-    }
-    delete_from_ivf_index(_id_df(spark, sorted(dead_ids | other)), path)
-
-    audit = _audit_rows(spark, path)
-    # per-cell totals match the physical layout, tombstoned ≤ total
-    assert {c: a["n_vectors"] for c, a in audit.items()} == occ
-    assert all(0 <= a["n_tombstoned"] <= a["n_vectors"] for a in audit.values())
-    assert audit[dead_cell]["n_tombstoned"] == occ[dead_cell]
-    assert audit[dead_cell]["tombstone_frac"] == 1.0
-    affected = sorted(c for c, a in audit.items() if a["n_tombstoned"] > 0)
-    fully_dead = sorted(
-        c for c, a in audit.items() if a["n_tombstoned"] == a["n_vectors"]
-    )
-    debt = sum(a["n_tombstoned"] for a in audit.values())
-    assert debt == len(dead_ids | other)
-    # index-wide columns identical on every row (window over the full set)
-    assert len({a["tombstone_share"] for a in audit.values()}) == 1
-    assert len({a["affected_cell_frac"] for a in audit.values()}) == 1
-    row = next(iter(audit.values()))
-    assert row["affected_cell_frac"] == round(len(affected) / len(occ), 6) or (
-        abs(row["affected_cell_frac"] - len(affected) / len(occ)) < 1e-6
-    )
-    assert row["needs_compact"] == (10 * debt > sum(occ.values()))
-
-    stats = compact_ivf_index(spark, path)
-    # THE CONTRACT: the audit was an exact dry-run of the compaction
-    assert sorted(stats["cells_rewritten"] + stats["cells_removed"]) == affected
-    assert sorted(stats["cells_removed"]) == fully_dead
-    assert stats["rows_removed"] == debt
-
-    # post-compaction the debt is zero and the trigger is quiet
-    after = _audit_rows(spark, path)
-    assert all(a["n_tombstoned"] == 0 for a in after.values())
-    assert all(a["tombstone_share"] == 0.0 for a in after.values())
-    assert all(a["affected_cell_frac"] == 0.0 for a in after.values())
-    assert not any(a["needs_compact"] for a in after.values())
-    assert dead_cell not in after  # its inverted list is gone
-
-
 def test_compact_refuses_total_wipe_and_leaves_index_queryable(spark, tmp_path):
     """Compacting a delete of EVERY row would drop every cell=*
     directory and leave a parquet dir no later reader can infer a
-    schema from (audit/query/append would all crash). That end state
+    schema from (query/append would all crash). That end state
     is the documented 'deletes rival corpus size → rebuild' boundary,
     so the compaction refuses it before any write."""
     import pytest
@@ -385,29 +295,12 @@ def test_compact_refuses_total_wipe_and_leaves_index_queryable(spark, tmp_path):
     assert _ids(spark, path2) == {49}
 
 
-def test_tombstone_audit_zero_debt_paths(spark, tmp_path):
-    emb = load_table(spark, SF_DIR, "embeddings")
-    path = str(tmp_path / "idx")
-    build_ivf_index(emb, path, n_cells=8, iters=2)
-    # no sidecar at all
-    audit = _audit_rows(spark, path)
-    assert all(a["n_tombstoned"] == 0 for a in audit.values())
-    assert not any(a["needs_compact"] for a in audit.values())
-    # sidecar present but matching nothing (crash-between-rewrite-and-
-    # clear leftovers): still zero debt, zero affected cells
-    delete_from_ivf_index(_id_df(spark, [999999]), path)
-    audit = _audit_rows(spark, path)
-    assert all(a["n_tombstoned"] == 0 for a in audit.values())
-    assert all(a["affected_cell_frac"] == 0.0 for a in audit.values())
-    assert not any(a["needs_compact"] for a in audit.values())
-
-
 # ---------------------------------------------------------------------
-# Hierarchical (IVF2) lifecycle — the same delete/compact/audit
-# contracts on the two-level layout (r14): sidecar-only delete visible
-# immediately, layout-agnostic compaction preserving the full
-# (neighbor_id, c_vec, cn, cell) row, cold cells byte-identical, the
-# audit as dry-run, and the tombstoned-id re-append rejection.
+# Hierarchical (IVF2) lifecycle — the same delete/compact contracts on
+# the two-level layout (r14): sidecar-only delete visible immediately,
+# layout-agnostic compaction preserving the full (neighbor_id, c_vec,
+# cn, cell) row, cold cells byte-identical, and the tombstoned-id
+# re-append rejection.
 # ---------------------------------------------------------------------
 
 from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spark.operators.similarity import (  # noqa: E402
@@ -444,13 +337,12 @@ def test_ivf2_delete_compact_audit_lifecycle(spark, tmp_path):
     assert victim not in set(after.values())
     assert len(after) == len(before)
 
-    # audit is the dry-run of the compaction (id col = neighbor_id)
-    audit = {
-        int(r["cell"]): r.asDict()
-        for r in audit_ivf_tombstones(spark, path).collect()
-    }
-    affected = sorted(c for c, a in audit.items() if a["n_tombstoned"] > 0)
-    assert sum(a["n_tombstoned"] for a in audit.values()) == 1
+    # the compaction rewrites exactly the victim's cell
+    affected = [
+        int(r["cell"])
+        for r in spark.read.parquet(path).where(F.col("neighbor_id") == victim).select("cell").collect()
+    ]
+    assert len(affected) == 1
 
     stats = compact_ivf_index(spark, path)
     assert stats["rows_removed"] == 1
@@ -464,14 +356,8 @@ def test_ivf2_delete_compact_audit_lifecycle(spark, tmp_path):
     assert spark.read.parquet(path).drop("cell").schema == schema_before
     # post-compaction results identical to the tombstone-final view
     assert _neighbors2(spark, emb, path) == after
-    # sidecar cleared; audit reports zero debt
+    # sidecar cleared
     assert spark.read.parquet(path + "_tombstones").count() == 0
-    assert all(
-        a["n_tombstoned"] == 0 and not a["needs_compact"]
-        for a in (
-            r.asDict() for r in audit_ivf_tombstones(spark, path).collect()
-        )
-    )
 
 
 def test_ivf2_tombstone_query_plan_keeps_pruning_and_broadcasts(spark, tmp_path):
@@ -516,27 +402,6 @@ def test_ivf2_reinsert_of_tombstoned_id_raises_until_compacted(spark, tmp_path):
     append_to_ivf_index(new_vec, path)
     got = spark.read.parquet(path).where("neighbor_id = 7").collect()
     assert len(got) == 1
-
-
-def test_tombstone_audit_trigger_fires_over_ten_percent(spark, tmp_path):
-    # integer-exact trigger: > 10% of rows tombstoned fires, ≤ 10% does
-    # not — checked against the live operator, not just the arithmetic
-    emb = load_table(spark, SF_DIR, "embeddings")
-    path = str(tmp_path / "idx")
-    build_ivf_index(emb, path, n_cells=8, iters=2)
-    ids = sorted(_ids(spark, path))
-    total = len(ids)
-    quiet = ids[: total // 10]  # exactly ≤ 10%
-    delete_from_ivf_index(_id_df(spark, quiet), path)
-    assert not any(a["needs_compact"] for a in _audit_rows(spark, path).values())
-    loud = ids[: total // 10 + 1]  # first count strictly over 10%
-    delete_from_ivf_index(_id_df(spark, loud), path)
-    audit = _audit_rows(spark, path)
-    assert all(a["needs_compact"] for a in audit.values())
-    # trigger firing implies the compaction finds work (one-directional:
-    # the quiet case above would ALSO have found work — by design)
-    stats = compact_ivf_index(spark, path)
-    assert stats["rows_removed"] == len(loud)
 
 
 @pytest.mark.parametrize("build", [build_ivf_index, build_ivf2_index])

@@ -24,7 +24,6 @@ import pyspark.sql.functions as F
 import pytest
 
 from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spark.operators.similarity import (
-    audit_ivf_tombstones,
     build_ivf2_index,
     build_ivf_index,
     compact_ivf_index,
@@ -144,14 +143,13 @@ def test_update_leaves_unrelated_tombstone_debt_untouched(spark, tmp_path):
     delete_from_ivf_index(
         spark.createDataFrame([(i,) for i in others], "vec_id BIGINT"), path
     )
-    debt_before = audit_ivf_tombstones(spark, path)
-    n_tomb_before = debt_before.agg(F.sum("n_tombstoned")).collect()[0][0]
-    assert n_tomb_before == len(others)
+    tombs_before = _tomb_ids(spark, path)
+    assert tombs_before == set(others)
 
     stats = update_in_ivf_index(_updated_batch(emb, vid), path)
     assert set(stats["cells_rewritten"]) | set(stats["cells_removed"]) == {old_cell}
     # unrelated tombstones survived the update, still recorded + hidden
-    assert _tomb_ids(spark, path) == set(others)
+    assert _tomb_ids(spark, path) == tombs_before
     live = {
         int(r["neighbor_id"])
         for r in spark.read.parquet(path).select("neighbor_id").collect()

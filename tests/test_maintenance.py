@@ -1,34 +1,10 @@
-"""Compaction: fewer files, identical rows."""
+"""IVF append idempotency: the id guard and the batch-token sidecar."""
 
-import pyspark.sql.functions as F
-
-from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spark.sources.maintenance import (
-    compact_table,
-    parquet_file_count,
-)
 from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spark.sources.tables import (
     load_table,
 )
 
 SF_DIR = "/root/testdata/sf0.001"
-
-
-def test_compact_table(spark, tmp_path):
-    path = str(tmp_path / "frag")
-    orders = load_table(spark, SF_DIR, "orders")
-    # simulate many incremental micro-batch appends
-    orders.repartition(40).write.parquet(path)
-    assert parquet_file_count(path) >= 40
-
-    before_rows = orders.count()
-    before_sum = orders.agg(F.sum(F.col("o_totalprice").cast("decimal(14,2)"))).collect()[0][0]
-
-    n_files = compact_table(spark, path, target_files=4)
-    assert n_files <= 4
-
-    after = spark.read.parquet(path)
-    assert after.count() == before_rows
-    assert after.agg(F.sum(F.col("o_totalprice").cast("decimal(14,2)"))).collect()[0][0] == before_sum
 
 
 def test_ivf_append_retry_is_idempotent(spark, tmp_path):

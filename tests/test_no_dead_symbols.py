@@ -4,11 +4,12 @@ production code, so code that nothing runs cannot come back unnoticed.
 Roots are the module-level code of the production files (every package
 module, ``tools/``, ``perfbench/`` without its tests, ``bench.py`` and
 ``__spark_entry__.py``), the ``@register``-ed queries and
-:data:`ALLOWLIST`. A package ``__init__.py`` re-exports by importing at
-module level, so its imports are references; elsewhere a name counts
-only where it is used. The body of a reached symbol reaches every name
-it uses, so a helper called only by dead code is dead too. Names match
-across modules; strings, comments and tests are not references.
+:data:`ALLOWLIST`. An import is not a use, so a package ``__init__.py``
+that re-exports a name does not keep it alive; a name counts only where
+code uses it (an ``import … as`` alias counts, since it renames). The
+body of a reached symbol reaches every name it uses, so a helper called
+only by dead code is dead too. Names match across modules; strings,
+comments and tests are not references.
 """
 
 from __future__ import annotations
@@ -19,19 +20,11 @@ from pathlib import Path
 ROOT = Path(__file__).resolve().parents[1]
 PKG = ROOT / "data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spark"
 
-# Symbols kept without a production caller, each with its reason.
+# Symbols kept without a production caller: only references a test
+# compares against, each with its reason.
 ALLOWLIST = {
-    "streaming.ann_stream.ivf_stream_append": "streaming entry point: IVF index ingestion",
-    "streaming.stream_ops.enrich_with_dim": "streaming entry point: stream-static dimension join",
-    "streaming.stream_ops.session_counts": "streaming entry point: session-window counts",
-    "streaming.stream_ops.windowed_distinct_sketch": "streaming entry point: per-window KMV sketch",
-    "streaming.stream_ops.windowed_mix_drift": "streaming entry point: per-window event-mix drift",
-    "streaming.stream_ops.event_mix_reference": "the reference mix windowed_mix_drift scores against",
-    "sources.maintenance.compact_table": "maintenance entry point: small-file compaction",
-    "operators.similarity.rebalance_ivf_index": "maintenance entry point: hot-cell split of an IVF index",
-    "operators.similarity.audit_ivf_tombstones": "maintenance entry point: when to compact an IVF index",
     "operators.sketches.kmv_global_sketch": "direct sketch the KMV shard-merge test compares against",
-    "operators.sketches.histogram_merge": "merge step the histogram shard-merge test checks",
+    "operators.sketches.histogram_merge": "shard merge the histogram test compares against the direct histogram",
 }
 
 
@@ -45,7 +38,7 @@ def _production_files() -> list[Path]:
     ]
 
 
-def _names(node: ast.AST, reexports: bool) -> set[str]:
+def _names(node: ast.AST) -> set[str]:
     out = set()
     for n in ast.walk(node):
         if isinstance(n, ast.Name):
@@ -53,7 +46,7 @@ def _names(node: ast.AST, reexports: bool) -> set[str]:
         elif isinstance(n, ast.Attribute):
             out.add(n.attr)
         elif isinstance(n, (ast.Import, ast.ImportFrom)):
-            out |= {a.name.rsplit(".", 1)[-1] for a in n.names if reexports or a.asname}
+            out |= {a.name.rsplit(".", 1)[-1] for a in n.names if a.asname}
     return out
 
 
@@ -75,12 +68,12 @@ def _scan() -> tuple[dict[str, set[str]], dict[str, set[str]], set[str], set[str
         for stmt in tree.body:
             if in_pkg and isinstance(stmt, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
                 key = f"{module}.{stmt.name}"
-                uses[key] = _names(stmt, reexports=False)
+                uses[key] = _names(stmt)
                 by_name.setdefault(stmt.name, set()).add(key)
                 if _is_registered(stmt):
                     registered.add(key)
             else:
-                root_names |= _names(stmt, reexports=path.name == "__init__.py")
+                root_names |= _names(stmt)
     return uses, by_name, registered, root_names
 
 

@@ -12,7 +12,6 @@ from pyspark.sql import Row
 
 from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spark.operators import (
     create_scd_from_input,
-    get_oldest_records_from_scd,
     merge_scd,
     scd_update_and_insert,
 )
@@ -184,14 +183,6 @@ def test_merge_same_attributes_is_noop(spark):
     to_update, to_insert = scd_update_and_insert(old_scd, new_records, "store_number", "date", ATTRS)
     assert to_update.count() == 0
     assert to_insert.count() == 0
-
-
-def test_get_oldest_records(spark):
-    oldest = get_oldest_records_from_scd(_old_scd(spark), [c for c in ATTRS if c != "store_number"], "store_number")
-    rows = oldest.collect()
-    assert len(rows) == 1
-    assert rows[0]["start_date"] == datetime.date(2024, 11, 12)
-    assert rows[0]["store_name"] == "HY-VEE WINE AND SPIRITS (1022) / ANKENY"
 
 
 def test_scd_schema_is_the_built_dimension_schema(spark):

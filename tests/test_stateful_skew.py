@@ -1,61 +1,8 @@
-"""Custom stateful streaming operator + salted-join equivalence."""
+"""Skewed joins: salted-join equivalence and AQE skew splitting."""
 
-import shutil
-import tempfile
-
-import pyspark.sql.functions as F
 from pyspark.sql import Row
 
 from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spark.operators.skew import salted_join
-from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spark.sources.tables import load_table
-from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spark.streaming.stateful import (
-    running_user_totals,
-)
-from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spark.streaming.stream_ops import (
-    events_stream,
-)
-
-SF_DIR = "/root/testdata/sf0.001"
-
-
-def test_stateful_running_totals_match_batch(spark):
-    """One availableNow drain: the stateful operator's final per-user
-    counters must equal the batch groupBy."""
-    ckpt = tempfile.mkdtemp(prefix="ckpt_state_")
-    try:
-        out = running_user_totals(events_stream(spark, SF_DIR))
-        q = (
-            out.writeStream.outputMode("update")
-            .format("memory")
-            .queryName("user_totals")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        # last emitted row per user = final state
-        got_df = spark.sql(
-            """
-            SELECT user_id, n_events, total_value FROM (
-              SELECT *, row_number() OVER (PARTITION BY user_id ORDER BY n_events DESC) rn
-              FROM user_totals
-            ) WHERE rn = 1
-            """
-        )
-        got = {r["user_id"]: (r["n_events"], r["total_value"]) for r in got_df.collect()}
-        batch = (
-            load_table(spark, SF_DIR, "events")
-            .groupBy("user_id")
-            .agg(F.count("*").alias("n"), F.sum("value").alias("t"))
-        )
-        want = {r["user_id"]: (r["n"], r["t"]) for r in batch.collect()}
-        assert set(got) == set(want) and len(got) >= 10  # sf0.001 has 15 users
-        for uid, (n, t) in want.items():
-            assert got[uid][0] == n
-            # numpy pairwise sum vs Spark sequential sum: ulp-level drift
-            assert abs(got[uid][1] - t) < 1e-6
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
 
 
 def test_salted_join_equivalence(spark):

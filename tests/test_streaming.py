@@ -1,54 +1,24 @@
-"""Streaming & incremental-batch tests: the streaming plan must agree
-with its batch twin on the same input; the watermark-gated incremental
-loader must be idempotent and append-only."""
+"""Incremental-batch tests: the watermark-gated incremental loader must
+be idempotent and append-only, the SCD2 inbox drain must equal a batch
+rebuild, and the multimodal decoders must run unchanged on a stream."""
 
 import datetime
 import os
 import shutil
-import tempfile
 
 import pyspark.sql.functions as F
 import pytest
 from conftest import jobs_of
 from pyspark.errors import AnalysisException
-from pyspark.sql import Row, Window
+from pyspark.sql import Row
 
 from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spark.streaming import (
-    events_stream,
     high_watermark,
-    hourly_counts,
     incremental_delta,
     load_or_update,
-    run_available_now,
 )
 
 SF_DIR = "/root/testdata/sf0.001"
-
-
-def test_streaming_hourly_matches_batch(spark):
-    """availableNow drain of the events dir == batch aggregation over
-    the same parquet (exactly-once, no duplicates, no loss)."""
-    ckpt = tempfile.mkdtemp(prefix="ckpt_")
-    try:
-        stream = hourly_counts(events_stream(spark, SF_DIR))
-        run_available_now(stream, ckpt, "hourly_out")
-        got = {
-            (r["hour_start"], r["event_type"]): (r["n_events"], r["sum_value"])
-            for r in spark.sql("SELECT * FROM hourly_out").collect()
-        }
-        from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spark.sources.tables import load_table
-
-        batch = (
-            load_table(spark, SF_DIR, "events")
-            .groupBy(F.window("ts", "1 hour").alias("win"), "event_type")
-            .agg(F.count("*").alias("n"), F.sum(F.col("value").cast("decimal(12,2)")).alias("s"))
-            .select(F.col("win.start").alias("h"), "event_type", "n", "s")
-        )
-        want = {(r["h"], r["event_type"]): (r["n"], r["s"]) for r in batch.collect()}
-        assert got == want
-        assert len(got) > 100
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
 
 
 def test_incremental_load_or_update(spark, tmp_path):
@@ -275,26 +245,6 @@ def test_watermark_helpers(spark):
     assert incremental_delta(df, "d", wm).count() == 0
     assert incremental_delta(df, "d", datetime.date(2024, 1, 15)).count() == 1
     assert incremental_delta(df, "d", None).count() == 2
-
-
-def test_event_time_cast_requires_utc_session(spark):
-    """_as_event_time refuses a non-UTC session instead of silently
-    shifting every watermark/window boundary by the zone offset; under
-    the pinned-UTC session the cast goes through."""
-    from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spark.streaming.joins import _as_event_time
-
-    df = spark.createDataFrame(
-        [Row(ts=datetime.datetime(2024, 1, 1, 12, 0, 0))]
-    ).select(F.col("ts").cast("timestamp_ntz"))
-    assert dict(_as_event_time(df).dtypes)["ts"] == "timestamp"
-
-    spark.conf.set("spark.sql.session.timeZone", "America/Chicago")
-    try:
-        with pytest.raises(ValueError, match="UTC"):
-            _as_event_time(df)
-    finally:
-        spark.conf.set("spark.sql.session.timeZone", "UTC")
-    assert dict(_as_event_time(df).dtypes)["ts"] == "timestamp"
 
 
 def test_scd_stream_upsert_matches_batch_rebuild(spark, tmp_path):
@@ -637,515 +587,6 @@ def test_an_incremental_day_runs_only_its_own_work(spark, tmp_path):
     assert n > 0 and len(_scd_rows(spark, dim)) == 3
 
 
-def test_stream_stream_join_matches_batch(spark):
-    """Watermarked click→view attribution join drained availableNow
-    equals the identical batch join over the same parquet."""
-    import shutil as _sh
-    import tempfile as _tf
-
-    from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spark.sources.tables import load_table
-    from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spark.streaming import (
-        attribute_clicks_to_views,
-        events_stream,
-    )
-
-    ckpt = _tf.mkdtemp(prefix="ckpt_ssj_")
-    try:
-        joined = attribute_clicks_to_views(events_stream(spark, SF_DIR))
-        q = (
-            joined.writeStream.outputMode("append")
-            .format("memory")
-            .queryName("ssj_out")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        got = sorted(tuple(r) for r in spark.sql("SELECT * FROM ssj_out").collect())
-
-        ev = load_table(spark, SF_DIR, "events")
-        v = ev.where(F.col("event_type") == "view").select(
-            F.col("user_id").alias("vu"), F.col("ts").alias("view_ts"), F.col("event_id").alias("view_id")
-        )
-        c = ev.where(F.col("event_type") == "click").select(
-            F.col("user_id").alias("cu"), F.col("ts").alias("click_ts"), F.col("event_id").alias("click_id")
-        )
-        batch = (
-            c.join(
-                v,
-                (c.cu == v.vu)
-                & (c.click_ts > v.view_ts)
-                & (c.click_ts <= v.view_ts + F.expr("INTERVAL 1 hour")),
-            )
-            .select(F.col("cu").alias("user_id"), "click_id", "view_id", "click_ts", "view_ts")
-        )
-        want = sorted(tuple(r) for r in batch.collect())
-        assert got == want
-        assert len(got) > 0
-    finally:
-        _sh.rmtree(ckpt, ignore_errors=True)
-
-
-def test_streaming_dedup_within_watermark(spark, tmp_path):
-    """Duplicated staging input deduped back to the distinct set."""
-    import shutil as _sh
-    import tempfile as _tf
-
-    from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spark.sources.tables import load_table
-    from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spark.streaming import (
-        dedup_within_watermark,
-    )
-    ev = load_table(spark, SF_DIR, "events").limit(500)
-    staged = str(tmp_path / "staged")
-    # simulate an at-least-once source: every event delivered twice
-    ev.unionAll(ev).write.parquet(staged)
-
-    stream = spark.readStream.schema(ev.schema).parquet(staged)
-    deduped = dedup_within_watermark(stream)
-    ckpt = _tf.mkdtemp(prefix="ckpt_dedup_")
-    try:
-        q = (
-            deduped.writeStream.outputMode("append")
-            .format("memory")
-            .queryName("dedup_out")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        n = spark.sql("SELECT COUNT(DISTINCT event_id) AS n, COUNT(*) AS total FROM dedup_out").collect()[0]
-        assert n["total"] == 500, "each duplicated event must survive exactly once"
-        assert n["n"] == 500
-    finally:
-        _sh.rmtree(ckpt, ignore_errors=True)
-
-
-def test_stream_static_enrichment_matches_batch(spark):
-    """Stream-static join (per-micro-batch broadcast of the dimension)
-    drained availableNow == the same batch left join: exactly-once,
-    no state store required."""
-    from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spark.sources.tables import (
-        load_table,
-    )
-    from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spark.streaming.stream_ops import (
-        enrich_with_dim,
-        events_stream,
-        run_available_now,
-    )
-
-    dim = spark.createDataFrame(
-        [("view", "browse"), ("click", "browse"), ("purchase", "convert"), ("error", "ops")],
-        "event_type string, funnel_stage string",
-    )
-    ckpt = tempfile.mkdtemp(prefix="ckpt_enrich_")
-    try:
-        enriched = enrich_with_dim(
-            events_stream(spark, SF_DIR).select("event_id", "event_type"), dim, "event_type"
-        )
-        run_available_now(enriched, ckpt, "enriched_out", output_mode="append")
-        got = {
-            (r["event_id"], r["funnel_stage"])
-            for r in spark.sql("SELECT * FROM enriched_out").collect()
-        }
-        batch = (
-            load_table(spark, SF_DIR, "events")
-            .select("event_id", "event_type")
-            .join(dim, "event_type", "left")
-        )
-        want = {(r["event_id"], r["funnel_stage"]) for r in batch.collect()}
-        assert got == want
-        assert len(got) > 0
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
-
-
-def test_streaming_session_windows_match_batch_closed_sessions(spark):
-    """Streaming session_window (append mode, 1h watermark) drained
-    availableNow == the batch session_window aggregation restricted to
-    sessions closed before the final watermark (max event time - 1h).
-    Pins both the merging-window semantics and the append-mode
-    emission rule."""
-    from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spark.sources.tables import (
-        load_table,
-    )
-    from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spark.streaming.stream_ops import (
-        events_stream,
-        run_available_now,
-        session_counts,
-    )
-
-    ckpt = tempfile.mkdtemp(prefix="ckpt_sess_")
-    try:
-        stream = session_counts(events_stream(spark, SF_DIR))
-        run_available_now(stream, ckpt, "sessions_out", output_mode="append")
-        got = {
-            (r["user_id"], r["session_start"], r["session_end"]): r["n_events"]
-            for r in spark.sql("SELECT * FROM sessions_out").collect()
-        }
-
-        ev = load_table(spark, SF_DIR, "events")
-        max_ts = ev.agg(F.max("ts")).first()[0]
-        import datetime
-
-        # Spark tracks the watermark in milliseconds and emission
-        # includes equality (session_end <= watermark) — probe-verified
-        max_ts_ms = max_ts.replace(microsecond=(max_ts.microsecond // 1000) * 1000)
-        final_wm = max_ts_ms - datetime.timedelta(hours=1)
-        batch = (
-            ev.groupBy(F.session_window("ts", "30 minutes").alias("win"), "user_id")
-            .agg(F.count("*").alias("n_events"))
-            .select(
-                F.col("win.start").alias("session_start"),
-                F.col("win.end").alias("session_end"),
-                "user_id",
-                "n_events",
-            )
-            .where(F.col("session_end") <= F.lit(final_wm))
-        )
-        want = {
-            (r["user_id"], r["session_start"], r["session_end"]): r["n_events"]
-            for r in batch.collect()
-        }
-        assert got == want
-        assert len(got) > 0
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
-
-
-def test_session_window_semantics_match_q43_batch_sessionization(spark):
-    """The streaming sessionizer's window semantics (session_window,
-    30-minute merging gap) == the oracle-checked batch sessionization
-    q43 (lag-gap > 30 min starts a new session): same (user,
-    session_start) set, same per-session event counts, and
-    session_window's exclusive end == q43's last-event ts + gap.
-    Pins the batch/stream twin-ness on the CURRENT data types — this
-    assertion would have caught the events.ts encoding drift."""
-    from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spark.plans.queries import (
-        registry,
-    )
-    from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spark.sources.tables import (
-        load_table,
-    )
-
-    ev = load_table(spark, SF_DIR, "events")
-
-    # the two sessionizers legitimately differ on an EXACT 30:00 gap:
-    # q43 breaks only on gap > 30 min (inclusive boundary stays in the
-    # session) while session_window's end is exclusive (boundary event
-    # starts a new session). No generated dataset has hit this, but a
-    # regenerated one with second-granular timestamps could — skip (not
-    # fail) in that case, since both implementations are individually
-    # correct and the oracle pins q43's own semantics.
-    w = Window.partitionBy("user_id").orderBy(F.col("ts").asc(), F.col("event_id").asc())
-    boundary_gaps = (
-        ev.select((F.col("ts") - F.lag("ts").over(w)).alias("gap"))
-        .where(F.col("gap") == F.expr("INTERVAL 30 MINUTES"))
-        .count()
-    )
-    if boundary_gaps:
-        pytest.skip(f"{boundary_gaps} exact-30min gaps: sessionizers diverge at the boundary by design")
-
-    sw = {
-        (r["user_id"], r["start"]): (r["n_events"], r["end"])
-        for r in (
-            ev.groupBy(F.session_window("ts", "30 minutes").alias("win"), "user_id")
-            .agg(F.count("*").alias("n_events"))
-            .select("user_id", F.col("win.start").alias("start"), F.col("win.end").alias("end"), "n_events")
-            .collect()
-        )
-    }
-    q43 = {
-        (r["user_id"], r["session_start"]): (r["n_events"], r["session_end"])
-        for r in registry()["q43_sessionization"].fn(spark, SF_DIR).collect()
-    }
-    assert set(sw) == set(q43)
-    for key, (n_sw, end_sw) in sw.items():
-        n_43, end_43 = q43[key]
-        assert n_sw == n_43, f"event count diverges for session {key}"
-        assert end_sw == end_43 + datetime.timedelta(minutes=30), (
-            f"session_window end must be last event + gap for {key}"
-        )
-    assert len(sw) > 0
-
-
-def test_streaming_kmv_sketch_matches_batch_and_bounds_error(spark):
-    """Per-window KMV sketches drained availableNow == the same
-    computation over the batch table, and every full sketch's estimate
-    is within 3 sigma of the window's exact distinct count."""
-    from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spark.streaming.stream_ops import (
-        windowed_distinct_sketch,
-    )
-
-    ckpt = tempfile.mkdtemp(prefix="ckpt_")
-    try:
-        k = 64
-        stream = windowed_distinct_sketch(events_stream(spark, SF_DIR), k=k)
-        run_available_now(stream, ckpt, "kmv_out")
-        got = {
-            r["hour_start"]: (tuple(r["sketch"]), r["exact_distinct"], r["kmv_estimate"])
-            for r in spark.sql("SELECT * FROM kmv_out").collect()
-        }
-        from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spark.sources.tables import (
-            load_table,
-        )
-
-        batch_events = load_table(spark, SF_DIR, "events").withColumn(
-            "ts", F.col("ts").cast("timestamp")
-        )
-        want = {
-            r["hour_start"]: (tuple(r["sketch"]), r["exact_distinct"], r["kmv_estimate"])
-            for r in windowed_distinct_sketch(batch_events, k=k).collect()
-        }
-        assert got == want
-        assert len(got) > 50
-        for start, (sketch, exact, est) in got.items():
-            assert len(sketch) == min(exact, k)
-            if exact >= k:  # full sketch: estimator error bound applies
-                assert abs(est - exact) / exact < 3.0 / (k - 1) ** 0.5, (start, est, exact)
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
-
-
-def test_checkpoint_resume_processes_each_file_exactly_once(spark):
-    """Two availableNow drains of a GROWING staging dir against the
-    same checkpoint: the second run must process only the new file —
-    the restart-recovery contract that makes the incremental pipeline
-    exactly-once across process restarts, not just within one run."""
-    import os
-
-    from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spark.sources.tables import (
-        load_table,
-    )
-    from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spark.streaming.stream_ops import (
-        hourly_counts as hc,
-    )
-
-    ckpt = tempfile.mkdtemp(prefix="ckpt_resume_")
-    staging = tempfile.mkdtemp(prefix="staging_")
-    try:
-        ev = load_table(spark, SF_DIR, "events")
-        half1 = ev.where(F.col("user_id") % 2 == 0)
-        half2 = ev.where(F.col("user_id") % 2 != 0)
-        half1.write.parquet(os.path.join(staging, "batch1"))
-
-        def staged_stream():
-            schema = spark.read.parquet(os.path.join(staging, "batch1")).schema
-            raw = spark.readStream.schema(schema).option("recursiveFileLookup", "true").parquet(staging)
-            return raw.withColumn("ts", F.col("ts").cast("timestamp"))
-
-        run_available_now(hc(staged_stream()), ckpt, "resume_out")
-        n1 = spark.sql("SELECT SUM(n_events) AS s FROM resume_out").collect()[0]["s"]
-        assert n1 == half1.count()
-
-        half2.write.parquet(os.path.join(staging, "batch2"))
-        run_available_now(hc(staged_stream()), ckpt, "resume_out")
-        got = {
-            (r["hour_start"], r["event_type"]): (r["n_events"], r["sum_value"])
-            for r in spark.sql("SELECT * FROM resume_out").collect()
-        }
-        batch = (
-            ev.withColumn("ts", F.col("ts").cast("timestamp"))
-            .groupBy(F.window("ts", "1 hour").alias("win"), "event_type")
-            .agg(
-                F.count("*").alias("n"),
-                F.sum(F.col("value").cast("decimal(12,2)")).alias("s"),
-            )
-            .select(F.col("win.start").alias("h"), "event_type", "n", "s")
-        )
-        want = {(r["h"], r["event_type"]): (r["n"], r["s"]) for r in batch.collect()}
-        # both halves counted exactly once: no loss, no double-count of
-        # the first file on resume
-        assert got == want
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
-        shutil.rmtree(staging, ignore_errors=True)
-
-
-def test_streaming_mix_drift_matches_batch_and_is_nonnegative(spark):
-    """Per-window KL drift drained availableNow == the same plan over
-    the batch table; smoothed KL against the snapshot reference is
-    always >= 0 (Gibbs), near 0 for windows matching the mix."""
-    from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spark.sources.tables import (
-        load_table,
-    )
-    from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spark.streaming.stream_ops import (
-        event_mix_reference,
-        windowed_mix_drift,
-    )
-
-    batch_events = load_table(spark, SF_DIR, "events").withColumn(
-        "ts", F.col("ts").cast("timestamp")
-    )
-    ref = event_mix_reference(batch_events)
-    assert len(ref) >= 3 and abs(sum(ref.values()) - 1.0) < 1e-3
-
-    ckpt = tempfile.mkdtemp(prefix="ckpt_drift_")
-    try:
-        stream = windowed_mix_drift(events_stream(spark, SF_DIR), ref)
-        run_available_now(stream, ckpt, "drift_out")
-        got = {
-            r["hour_start"]: (r["n_total"], r["kl_vs_reference"])
-            for r in spark.sql("SELECT * FROM drift_out").collect()
-        }
-        want = {
-            r["hour_start"]: (r["n_total"], r["kl_vs_reference"])
-            for r in windowed_mix_drift(batch_events, ref).collect()
-        }
-        assert got == want
-        assert len(got) > 50
-        assert all(kl >= 0.0 for _, kl in got.values())
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
-
-
-def test_stateful_touch_attribution_matches_batch_q193(spark):
-    """Chronologically staged two-batch drain of the stateful
-    attribution operator == the batch q193 window, aggregated to the
-    same (model, touch_type) grid — state (first/last touch per user)
-    must survive the micro-batch boundary, which the chronological
-    split forces for every user active in both halves."""
-    import os
-
-    from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spark.plans.queries import (
-        registry,
-    )
-    from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spark.sources.tables import (
-        load_table,
-    )
-    from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spark.streaming import (
-        touch_attribution_stream,
-    )
-
-    ckpt = tempfile.mkdtemp(prefix="ckpt_attr_")
-    staging = tempfile.mkdtemp(prefix="staging_attr_")
-    try:
-        ev = load_table(spark, SF_DIR, "events")
-        cutoff = ev.agg(F.percentile_approx("ts", 0.5).alias("m")).collect()[0]["m"]
-        ev.where(F.col("ts") < F.lit(cutoff)).write.parquet(os.path.join(staging, "b1"))
-
-        def staged_stream():
-            schema = spark.read.parquet(os.path.join(staging, "b1")).schema
-            raw = (
-                spark.readStream.schema(schema)
-                .option("recursiveFileLookup", "true")
-                .parquet(staging)
-            )
-            return raw.withColumn("ts", F.col("ts").cast("timestamp"))
-
-        # parquet sink, not memory: append-mode memory sinks cannot
-        # recover a checkpoint across query restarts, while the
-        # fault-tolerant file sink accumulates both drains exactly-once
-        out_dir = os.path.join(staging, "attr_out")
-
-        def drain():
-            q = (
-                touch_attribution_stream(staged_stream())
-                .writeStream.outputMode("append")
-                .format("parquet")
-                .option("path", out_dir)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-
-        drain()
-        ev.where(F.col("ts") >= F.lit(cutoff)).write.parquet(os.path.join(staging, "b2"))
-        drain()
-
-        streamed = spark.read.parquet(out_dir)
-        got_df = (
-            streamed.select(
-                F.explode(
-                    F.array(
-                        F.struct(
-                            F.lit("last_touch").alias("model"),
-                            F.coalesce("last_touch", F.lit("(direct)")).alias("touch_type"),
-                        ),
-                        F.struct(
-                            F.lit("first_touch").alias("model"),
-                            F.coalesce("first_touch", F.lit("(direct)")).alias("touch_type"),
-                        ),
-                    )
-                ).alias("mt"),
-                "value",
-            )
-            .select("mt.model", "mt.touch_type", "value")
-            .groupBy("model", "touch_type")
-            .agg(F.count("*").alias("n"), F.round(F.sum("value"), 4).alias("rev"))
-        )
-        got = {(r["model"], r["touch_type"]): (r["n"], r["rev"]) for r in got_df.collect()}
-        want = {
-            (r["model"], r["touch_type"]): (r["n_purchases"], round(r["attributed_revenue"], 4))
-            for r in registry()["q193_touch_attribution"].fn(spark, SF_DIR).collect()
-        }
-        # exactly-once purchase emission, identical attribution grid
-        assert {k: v[0] for k, v in got.items()} == {k: v[0] for k, v in want.items()}
-        for k in want:
-            assert abs(got[k][1] - want[k][1]) < 1e-3, (k, got[k], want[k])
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
-        shutil.rmtree(staging, ignore_errors=True)
-
-
-def test_stateful_attribution_survives_arrow_chunk_splits(spark):
-    """applyInPandasWithState hands a group's micro-batch rows to the
-    update function as MULTIPLE Arrow chunks (bounded by
-    spark.sql.execution.arrow.maxRecordsPerBatch) in arbitrary order.
-    With the limit forced to 1 every row is its own chunk, so any
-    per-chunk-only ordering in the state machine degenerates to
-    processing rows in raw arrival order — the rows below are staged
-    in REVERSE event time, so a regression to per-chunk sorting
-    attributes the purchase to no touch at all."""
-    import os
-
-    from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spark.streaming import (
-        touch_attribution_stream,
-    )
-
-    ckpt = tempfile.mkdtemp(prefix="ckpt_chunk_")
-    staging = tempfile.mkdtemp(prefix="staging_chunk_")
-    old_limit = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
-    try:
-        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "1")
-        base = datetime.datetime(2024, 1, 1, tzinfo=datetime.timezone.utc)
-        rows = [  # reverse event-time order on purpose
-            Row(user_id=1, event_id=3, ts=base + datetime.timedelta(hours=3),
-                event_type="purchase", value=10.0),
-            Row(user_id=1, event_id=2, ts=base + datetime.timedelta(hours=2),
-                event_type="email", value=0.0),
-            Row(user_id=1, event_id=1, ts=base + datetime.timedelta(hours=1),
-                event_type="click", value=0.0),
-        ]
-        # coalesce(1) keeps all three rows in ONE task = one state call
-        spark.createDataFrame(rows).coalesce(1).write.parquet(os.path.join(staging, "b1"))
-        schema = spark.read.parquet(os.path.join(staging, "b1")).schema
-        out_dir = os.path.join(staging, "out")
-        q = (
-            touch_attribution_stream(
-                spark.readStream.schema(schema)
-                .option("recursiveFileLookup", "true")
-                .parquet(staging)
-            )
-            .writeStream.outputMode("append")
-            .format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        got = spark.read.parquet(out_dir).collect()
-        assert len(got) == 1
-        assert got[0]["event_id"] == 3
-        assert got[0]["first_touch"] == "click"
-        assert got[0]["last_touch"] == "email"
-    finally:
-        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old_limit)
-        shutil.rmtree(ckpt, ignore_errors=True)
-        shutil.rmtree(staging, ignore_errors=True)
-
-
 def test_chained_incremental_pipeline_with_restart(spark, tmp_path):
     """The reference's core lifecycle (SURVEY §3 entry point 2) as ONE
     composed assertion: watermark-gated staging append
@@ -1308,9 +749,6 @@ def test_streaming_media_decode_matches_batch(spark, tmp_path):
     from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spark.sources.tables import (
         load_table,
     )
-    from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spark.streaming.stream_ops import (
-        run_available_now,
-    )
 
     docs = load_table(spark, SF_DIR, "documents").limit(50)
     media_dir = str(tmp_path / "media")
@@ -1322,8 +760,14 @@ def test_streaming_media_decode_matches_batch(spark, tmp_path):
         .parquet(media_dir)
     )
     ckpt = str(tmp_path / "ckpt")
-    run_available_now(
-        ppm_features(media_stream), ckpt, "media_feats_out", output_mode="append"
+    (
+        ppm_features(media_stream).writeStream.outputMode("append")
+        .format("memory")
+        .queryName("media_feats_out")
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
     )
     got = {
         (r["media_id"], r["width"], r["height"], r["pixel_sum"])
@@ -1350,9 +794,6 @@ def test_streaming_wav_decode_matches_batch(spark, tmp_path):
     from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spark.sources.tables import (
         load_table,
     )
-    from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spark.streaming.stream_ops import (
-        run_available_now,
-    )
 
     docs = load_table(spark, SF_DIR, "documents").limit(50)
     media_dir = str(tmp_path / "wav_media")
@@ -1364,8 +805,14 @@ def test_streaming_wav_decode_matches_batch(spark, tmp_path):
         .parquet(media_dir)
     )
     ckpt = str(tmp_path / "ckpt_wav")
-    run_available_now(
-        wav_features(media_stream), ckpt, "wav_feats_out", output_mode="append"
+    (
+        wav_features(media_stream).writeStream.outputMode("append")
+        .format("memory")
+        .queryName("wav_feats_out")
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
     )
     got = {
         (r["media_id"], r["sample_rate"], r["n_samples"], r["peak"], r["amp_sum"])
@@ -1394,9 +841,6 @@ def test_streaming_frame_sample_matches_batch(spark, tmp_path):
     from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spark.sources.tables import (
         load_table,
     )
-    from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spark.streaming.stream_ops import (
-        run_available_now,
-    )
 
     docs = load_table(spark, SF_DIR, "documents").limit(50)
     media_dir = str(tmp_path / "stream_media")
@@ -1408,11 +852,14 @@ def test_streaming_frame_sample_matches_batch(spark, tmp_path):
         .parquet(media_dir)
     )
     ckpt = str(tmp_path / "ckpt_frames")
-    run_available_now(
-        sample_ppm_frames(media_stream, every=2),
-        ckpt,
-        "frame_sample_out",
-        output_mode="append",
+    (
+        sample_ppm_frames(media_stream, every=2).writeStream.outputMode("append")
+        .format("memory")
+        .queryName("frame_sample_out")
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
     )
     got = {
         (r["media_id"], r["frame_idx"], r["width"], r["height"], r["pixel_sum"])
