@@ -15,7 +15,9 @@ tokenizer training handles web-scale corpora:
   not occurrences).
 - **The argmax merge rule is a driver-side decision** (one tiny
   collect per iteration — same pattern as IVF centroids) with a
-  deterministic tiebreak (count DESC, then pair text ASC).
+  deterministic tiebreak (count DESC, then pair text ASC). With
+  ``batch=1`` that is classic sequential BPE; a larger batch accepts
+  several symbol-disjoint rules per collect.
 - **Applying a merge is a pure Column expression**: a left-to-right
   ``aggregate`` fold over the token array with (out, pending) struct
   state — greedy adjacent-pair replacement without Python row
@@ -88,49 +90,6 @@ def word_freq_table(docs: DataFrame, text_col: str = "text") -> DataFrame:
     return words.groupBy("word").agg(F.count(F.lit(1)).alias("n"))
 
 
-def bpe_train(
-    docs: DataFrame,
-    text_col: str = "text",
-    n_merges: int = 10,
-    min_pair_count: int = 2,
-) -> list[tuple[int, str, str, int]]:
-    """Learn ``n_merges`` BPE merge rules from the corpus. Returns
-    [(rank, left, right, weighted_pair_count)] in merge order."""
-    vocab = word_freq_table(docs, text_col).withColumn(
-        "toks", _chars_expr("word")
-    )
-    merges: list[tuple[int, str, str, int]] = []
-    for rank in range(n_merges):
-        vocab = vocab.localCheckpoint(eager=True)
-        pairs = (
-            vocab.where(F.size("toks") >= 2)
-            .select(
-                "n",
-                F.explode(
-                    F.zip_with(
-                        F.slice(F.col("toks"), 1, F.size("toks") - 1),
-                        F.slice(F.col("toks"), 2, F.size("toks") - 1),
-                        lambda a, b: F.struct(a.alias("l"), b.alias("r")),
-                    )
-                ).alias("p"),
-            )
-            .groupBy(F.col("p.l").alias("l"), F.col("p.r").alias("r"))
-            .agg(F.sum("n").alias("cnt"))
-            .where(F.col("cnt") >= min_pair_count)
-        )
-        best = pairs.orderBy(
-            F.desc("cnt"), F.asc("l"), F.asc("r")
-        ).limit(1).collect()
-        if not best:
-            break
-        left, right, cnt = best[0]["l"], best[0]["r"], int(best[0]["cnt"])
-        merges.append((rank, left, right, cnt))
-        vocab = vocab.withColumn(
-            "toks", _merge_pair_expr(F.col("toks"), left, right)
-        )
-    return merges
-
-
 def bpe_train_batched(
     docs: DataFrame,
     text_col: str = "text",
@@ -154,9 +113,8 @@ def bpe_train_batched(
     pair created *by* an accepted merge (it contains the new symbol)
     cannot be chosen until the next round, so rule order can differ
     from classic BPE where such a pair would immediately dominate.
-    ``bpe_train`` remains the exact-sequential reference; the batched
-    twin is golden-tested against a pure-Python implementation of this
-    same selection rule."""
+    ``batch=1`` is classic sequential BPE exactly. Both are golden-tested
+    against pure-Python implementations."""
     vocab = word_freq_table(docs, text_col).withColumn("toks", _chars_expr("word"))
     merges: list[tuple[int, str, str, int]] = []
     while len(merges) < n_merges:

@@ -556,6 +556,21 @@ def _centroid_array_df(spark, centroids: list[list[float]]) -> DataFrame:
     )
 
 
+def _cell_score(vec: Column, nv: Column, cent: Column) -> Column:
+    """floor_round6 cosine of ``vec`` (row norm ``nv``) against a
+    (c, cvec, cnorm) centroid struct — the one score every broadcast
+    centroid array is ranked by."""
+    return floor_round6(dot_expr(vec, cent["cvec"]) / (nv * cent["cnorm"]))
+
+
+def _scored_cells(cents: str, vec: Column, nv: Column) -> Column:
+    """The centroid array column ``cents`` as (s, c) structs scored by
+    :func:`_cell_score`, so array_max/array_sort rank by (score, cell)."""
+    return F.transform(
+        F.col(cents), lambda e: F.struct(_cell_score(vec, nv, e).alias("s"), e["c"].alias("c"))
+    )
+
+
 def with_probe_cells(
     df: DataFrame,
     vec_col: str,
@@ -613,21 +628,7 @@ def with_probe_cells(
 
     def ranked(nv: Column) -> Column:
         return F.slice(
-            F.reverse(
-                F.array_sort(
-                    F.transform(
-                        F.col("_cents"),
-                        lambda e: F.struct(
-                            floor_round6(
-                                dot_expr(F.col(vec_col), e["cvec"]) / (nv * e["cnorm"])
-                            ).alias("s"),
-                            e["c"].alias("c"),
-                        ),
-                    )
-                )
-            ),
-            1,
-            n_probe,
+            F.reverse(F.array_sort(_scored_cells("_cents", F.col(vec_col), nv))), 1, n_probe
         )
 
     cols = df.columns
@@ -688,17 +689,7 @@ def with_assigned_cell(
     cent1 = _centroid_array_df(df.sparkSession, centroids)
 
     def best(nv: Column) -> Column:
-        return F.array_max(
-            F.transform(
-                F.col("_cents"),
-                lambda e: F.struct(
-                    floor_round6(
-                        dot_expr(F.col(vec_col), e["cvec"]) / (nv * e["cnorm"])
-                    ).alias("s"),
-                    e["c"].alias("c"),
-                ),
-            )
-        )["c"]
+        return F.array_max(_scored_cells("_cents", F.col(vec_col), nv))["c"]
 
     cols = df.columns
     return df.crossJoin(F.broadcast(cent1)).select(
@@ -1021,17 +1012,7 @@ def _ivf2_corpus_lists(
     hierarchical inverted lists."""
 
     def best_member(nv: Column) -> Column:
-        return F.array_max(
-            F.transform(
-                F.col("_mcents"),
-                lambda e: F.struct(
-                    floor_round6(
-                        dot_expr(F.col("c_vec"), e["cvec"]) / (nv * e["cnorm"])
-                    ).alias("s"),
-                    e["c"].alias("c"),
-                ),
-            )
-        )["c"]
+        return F.array_max(_scored_cells("_mcents", F.col("c_vec"), nv))["c"]
 
     return (
         with_assigned_cell(_list_rows(corpus, id_col, vec_col), "c_vec", l1, out_col="_super")
@@ -1071,9 +1052,7 @@ def _ivf2_probe_cells(
             "q_vec",
             "qn",
             F.col("mc.c").alias("cell"),
-            floor_round6(
-                dot_expr(F.col("q_vec"), F.col("mc.cvec")) / (F.col("qn") * F.col("mc.cnorm"))
-            ).alias("_cs"),
+            _cell_score(F.col("q_vec"), F.col("qn"), F.col("mc")).alias("_cs"),
         )
     )
     wq = Window.partitionBy("query_id").orderBy(F.col("_cs").desc(), F.col("cell").desc())
@@ -1140,6 +1119,21 @@ def build_ivf2_index(
     return l2, l1, cell2super
 
 
+def recall_hits(base: DataFrame, approx: DataFrame, exact: DataFrame) -> DataFrame:
+    """``base`` (one row per ``query_id``) with ``n_hits``: how many of
+    the query's (query_id, neighbor_id) rows in ``approx`` are also in
+    ``exact``, a bigint that is 0 for a query with none. The hit counts
+    are per query, so they broadcast into the left join."""
+    hits = (
+        approx.join(exact, ["query_id", "neighbor_id"])
+        .groupBy("query_id")
+        .agg(F.count(F.lit(1)).alias("n_hits"))
+    )
+    return base.join(F.broadcast(hits), "query_id", "left").withColumn(
+        "n_hits", F.coalesce("n_hits", F.lit(0)).cast("bigint")
+    )
+
+
 def ivf2_recall_sweep(
     corpus: DataFrame,
     queries: DataFrame,
@@ -1189,16 +1183,11 @@ def ivf2_recall_sweep(
             queries, members, l1, id_col, vec_col, n_super_probe, n_probe
         )
         approx = _score_topk(q, c, k).select("query_id", "neighbor_id")
-        hits = (
-            approx.join(exact, ["query_id", "neighbor_id"])
-            .groupBy("query_id")
-            .agg(F.count(F.lit(1)).alias("n_hits"))
-        )
         per_combo.append(
-            qids.join(F.broadcast(hits), "query_id", "left").select(
+            recall_hits(qids, approx, exact).select(
                 F.lit(n_super_probe).cast("int").alias("n_super_probe"),
                 F.lit(n_probe).cast("int").alias("n_probe"),
-                F.coalesce("n_hits", F.lit(0)).cast("bigint").alias("n_hits"),
+                "n_hits",
             )
         )
     union = per_combo[0]

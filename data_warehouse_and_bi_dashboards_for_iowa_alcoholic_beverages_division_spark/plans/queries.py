@@ -17,6 +17,10 @@ insensitively at sf0.01). Ground rules that make that possible:
 Queries with no SQL-expressible oracle (MinHash/SimHash need xxhash64)
 set ``oracle=None`` → the driver records a rows-only check.
 
+The vector oracles share one SQL kit (the "Shared oracle kit" section:
+scores, seeds, argmax/argmin, the Lloyd step, the flat/hierarchical IVF
+and PQ unrolls, top-10, recall@10, occupancy and tombstone terminals).
+
 Plan memo. ``QuerySpec.fn`` returns the DataFrame an earlier call built
 while nothing it depends on has changed, so a dashboard refresh
 re-collects it: Spark reuses its executed plan, its broadcast relations
@@ -49,7 +53,7 @@ from dataclasses import dataclass
 from urllib.parse import unquote, urlparse
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 
 from ..functions.dates import build_date_dim, season_name_expr, season_number_expr
 from ..functions.rounding import floor_round6, floor_round6_sql
@@ -1303,29 +1307,463 @@ def q38(spark: SparkSession, sf_dir: str) -> DataFrame:
     return similarity.cosine_topk(emb, emb.where("vec_id < 5"), k=10)
 
 
+# =====================================================================
+# Shared oracle kit. The vector oracles unroll the same few devices;
+# each is written once here, so a score expression, a tiebreak, the
+# seed rule, the Lloyd fold order or the recall tail has one copy:
+#
+# - scores: row-vs-row cosine, row-vs-centroid cosine, squared L2;
+# - the unrolled quantizer: seeds, argmax/argmin rank with its cell
+#   tiebreak, the order-pinned Lloyd step, the per-level unroll;
+# - the flat (q67) and hierarchical (q212) IVF and the PQ (q177)
+#   pipelines as CTE lists, their top-10 and recall@10 tails, and the
+#   occupancy and tombstone terminals over them.
+# =====================================================================
+
+_VEC_NORM_SQL = (
+    "sqrt(list_sum(list_transform(embedding,\n"
+    "                  x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))"
+)
+
+
+def _pair_cos_sql(a: str, b: str) -> str:
+    """Cosine of the ``embedding`` lists of aliases ``a`` and ``b`` over
+    their precomputed ``nrm`` columns."""
+    return (
+        f"list_sum(list_transform(list_zip({a}.embedding, {b}.embedding),"
+        f" z -> CAST(z[1] AS DOUBLE) * CAST(z[2] AS DOUBLE))) / ({a}.nrm * {b}.nrm)"
+    )
+
+
+def _cent_cos_sql(v: str, c: str) -> str:
+    """Cosine of row ``v`` (``embedding``, ``nrm``) against the DOUBLE
+    centroid list ``c.cvec``."""
+    return (
+        f"list_sum(list_transform(list_zip({v}.embedding, {c}.cvec),"
+        " z -> CAST(z[1] AS DOUBLE) * z[2]))"
+        f" / ({v}.nrm * sqrt(list_sum(list_transform({c}.cvec, x -> x * x))))"
+    )
+
+
+def _l2_sql(a: str, b: str) -> str:
+    """Squared L2 distance of list ``a`` to the DOUBLE list ``b``."""
+    return (
+        f"list_sum(list_transform(list_zip({a}, {b}),"
+        " z -> (CAST(z[1] AS DOUBLE) - z[2]) * (CAST(z[1] AS DOUBLE) - z[2])))"
+    )
+
+
+def _plane_dot_sql(plane: list[float]) -> str:
+    """Dot product of ``embedding`` with one hyperplane, embedded as
+    DOUBLE literals (repr() is shortest-round-trip, so DuckDB parses the
+    identical double)."""
+    lit = "[" + ", ".join(repr(v) for v in plane) + "]::DOUBLE[]"
+    return (
+        "list_sum(list_transform(list_zip(embedding, " + lit + "),"
+        " z -> CAST(z[1] AS DOUBLE) * CAST(z[2] AS DOUBLE)))"
+    )
+
+
+def _derived_cells_sql(src: str) -> str:
+    """``nc`` = similarity.derived_n_cells(COUNT(*) FROM src): a CASE
+    count of n > 2^j gives ceil(log2 n), so no float log2 runs near a
+    power-of-two boundary."""
+    steps = " + ".join(f"(CASE WHEN n > {1 << j} THEN 1 ELSE 0 END)" for j in range(44))
+    return (
+        f"SELECT LEAST({1 << similarity._IVF_MAX_CELLS_EXP}, "
+        f"GREATEST(4, (CAST(1 AS BIGINT) << ((({steps}) + 1) // 2)))) AS nc "
+        f"FROM (SELECT COUNT(*) AS n FROM {src})"
+    )
+
+
+def _seed_sql(
+    name: str,
+    n: int | str,
+    vec: str = "embedding",
+    where: str = "TRUE",
+    src: str = "embeddings",
+    key: str = "vec_id",
+    cell: str = "cell",
+) -> str:
+    """Seed centroids: the first ``n`` rows of ``src`` that pass
+    ``where``, in ``key`` order, become cells 0..n-1 with ``vec`` as a
+    DOUBLE list."""
+    return f"""{name} AS (
+      SELECT {cell}, cvec FROM (
+        SELECT ROW_NUMBER() OVER (ORDER BY {key}) - 1 AS {cell},
+               list_transform({vec}, x -> CAST(x AS DOUBLE)) AS cvec
+        FROM {src} WHERE {where}
+      ) WHERE {cell} < {n}
+    )"""
+
+
+def _argbest_sql(
+    name: str,
+    part: str,
+    cents: str,
+    score: str,
+    src: str,
+    keep: str = "= 1",
+    cell: str = "cell",
+    select: str | None = None,
+    asc: bool = False,
+) -> str:
+    """Per row key ``part`` (qualified), the ``cents`` cells ranked by
+    ``score`` DESC with ties to the higher cell (``asc``: score ASC, ties
+    to the lower cell), keeping the ranks ``keep``. ``src`` is the FROM
+    clause; the result is ``select``, by default the key and the cell.
+    The Spark side's array_max/array_min over (score, cell) structs and
+    its probe windows break ties the same way."""
+    d = "ASC" if asc else "DESC"
+    return f"""{name} AS MATERIALIZED (
+      SELECT {select or f"{part.split('.')[-1]}, {cell}"} FROM (
+        SELECT {part}, {cents}.{cell},
+               ROW_NUMBER() OVER (PARTITION BY {part}
+                                  ORDER BY {score} {d}, {cents}.{cell} {d}) AS rn
+        FROM {src}
+      ) WHERE rn {keep}
+    )"""
+
+
+def _cos_assign_sql(name: str, cents: str, src: str = "v", select: str | None = None) -> str:
+    """Argmax-cosine cell of every ``src`` row under ``cents``."""
+    score = floor_round6_sql(_cent_cos_sql(src, cents))
+    return _argbest_sql(name, f"{src}.vec_id", cents, score, f"{src}, {cents}", select=select)
+
+
+def _lloyd_sql(
+    a: str, prev: str, new: str, src: str, vec: str, key: str = "vec_id", cell: str = "cell"
+) -> str:
+    """One Lloyd step: centroid ``new`` is the per-dimension mean of the
+    ``vec`` lists of its members in assignment ``a``, summed in ``key``
+    order and floored to 6dp (similarity._lloyd_dim_means); a cell with
+    no member keeps its ``prev`` centroid. ``src`` is the FROM item
+    ``a`` joins USING ``key``."""
+    mean = floor_round6_sql(f"list_sum(list(CAST(x AS DOUBLE) ORDER BY {key})) / COUNT(*)")
+    return f"""{new}_m AS (
+      SELECT {a}.{cell}, {key}, generate_subscripts({vec}, 1) AS pos,
+             unnest({vec}) AS x
+      FROM {a} JOIN {src} USING ({key})
+    ),
+    {new}_c AS (
+      SELECT {cell}, list(m ORDER BY pos) AS cvec FROM (
+        SELECT {cell}, pos, {mean} AS m
+        FROM {new}_m GROUP BY {cell}, pos
+      ) GROUP BY {cell}
+    ),
+    {new} AS MATERIALIZED (
+      SELECT {prev}.{cell}, COALESCE({new}_c.cvec, {prev}.cvec) AS cvec
+      FROM {prev} LEFT JOIN {new}_c USING ({cell})
+    )"""
+
+
+def _train_sql(
+    cents: str,
+    assigns: str,
+    assign: Callable[[str, str], str],
+    lloyd: Callable[[str, str, str], str],
+    iters: int = 2,
+) -> str:
+    """``iters`` unrolled Lloyd iterations from the seed table
+    ``{cents}0``: iteration i assigns into ``{assigns}i`` under
+    ``{cents}{i-1}`` and writes centroids ``{cents}i``."""
+    steps = []
+    for i in range(1, iters + 1):
+        a, prev, new = f"{assigns}{i}", f"{cents}{i - 1}", f"{cents}{i}"
+        steps += [assign(a, prev), lloyd(a, prev, new)]
+    return ",\n    ".join(steps)
+
+
+def _cells_sql(corpus_from: str, train_pred: str, n_cells: str) -> str:
+    """The cell quantizer every IVF oracle trains: ``v``, the corpus with
+    row norms; ``vt``, the ``train_pred`` rows capped like faiss
+    (similarity._IVF_TRAIN_PER_CELL) at the min(|train|, 256 * n_cells)
+    lowest ids; seeds ``c0`` (the ``n_cells`` lowest train ids, read
+    from the raw table) and two cosine Lloyd steps to ``c2``."""
+    train = _train_sql(
+        "c",
+        "a",
+        lambda a, cents: _cos_assign_sql(a, cents, "vt"),
+        lambda a, prev, new: _lloyd_sql(a, prev, new, "vt", "vt.embedding"),
+    )
+    return f"""v AS MATERIALIZED (
+      SELECT vec_id, embedding,
+             {_VEC_NORM_SQL} AS nrm
+      FROM {corpus_from}
+    ),
+    vt AS MATERIALIZED (
+      SELECT vec_id, embedding, nrm FROM (
+        SELECT v.*, ROW_NUMBER() OVER (ORDER BY vec_id) AS trn
+        FROM v WHERE {train_pred}
+      ) WHERE trn <= {similarity._IVF_TRAIN_PER_CELL} * {n_cells}
+    ),
+    {_seed_sql("c0", n_cells, where=train_pred)},
+    {train}"""
+
+
+def _scored_sql(name: str, probes: str, assign: str) -> str:
+    """Cosine of each probing query to every other vector its probed
+    cells hold."""
+    return f"""{name} AS (
+      SELECT p.query_id, v.vec_id AS neighbor_id,
+             {floor_round6_sql(_pair_cos_sql("q", "v"))} AS score
+      FROM {probes} p
+      JOIN {assign} ON {assign}.cell = p.cell
+      JOIN v ON v.vec_id = {assign}.vec_id AND v.vec_id <> p.query_id
+      JOIN v q ON q.vec_id = p.query_id
+    )"""
+
+
+def _ivf_sql(
+    train_pred: str = "TRUE",
+    derived_cells: bool = False,
+    derive_pred: str | None = None,
+    corpus_from: str = "embeddings",
+) -> str:
+    """CTE list of the flat IVF (similarity.cosine_topk_ivf, n_probe=3,
+    iters=2): :func:`_cells_sql`, the assignment ``af`` of every vector
+    and the ``probes`` (query_id, cell) of the queries vec_id < 5. Seeds
+    are 8 cells, or with ``derived_cells`` the ``params`` count over
+    ``derive_pred`` (default ``train_pred``)."""
+    if derived_cells:
+        derive_src = f"embeddings WHERE {derive_pred or train_pred}"
+        params = f"params AS ({_derived_cells_sql(derive_src)}),\n    "
+        n_cells = "(SELECT nc FROM params)"
+    else:
+        params, n_cells = "", "8"
+    probe_score = floor_round6_sql(_cent_cos_sql("v", "c2"))
+    probes = _argbest_sql(
+        "probes", "v.vec_id", "c2", probe_score, "v, c2 WHERE v.vec_id < 5", "<= 3",
+        select="vec_id AS query_id, cell",
+    )
+    return f"""{params}{_cells_sql(corpus_from, train_pred, n_cells)},
+    {_cos_assign_sql("af", "c2")},
+    {probes}"""
+
+
+def _ivf2_sql(train_pred: str = "vec_id % 16 = 0", corpus_from: str = "embeddings") -> str:
+    """CTE list of the hierarchical IVF (similarity.ivf2_train,
+    iters=2): the level-2 cells are :func:`_cells_sql` with derived
+    capacity; the level-1 train runs the same Lloyd over the level-2
+    centroid table ``c2n`` (seeds = lowest cell ids, means folded in
+    cell order, ``sparams`` = derived count of the actual centroids);
+    ``cellsup`` maps cells to supers (ties to the highest super), ``s2e``
+    keeps the supers that own a cell, ``vsup``/``af2`` route every
+    vector super -> best member cell."""
+    n_cells = "(SELECT nc FROM params)"
+    member_score = floor_round6_sql(_cent_cos_sql("v", "c2x"))
+
+    def super_assign(name: str, supers: str) -> str:
+        score = floor_round6_sql(_cent_cos_sql("c2n", supers))
+        return _argbest_sql(name, "c2n.cell", supers, score, f"c2n, {supers}", cell="super")
+
+    def super_lloyd(a: str, prev: str, new: str) -> str:
+        return _lloyd_sql(a, prev, new, "c2n", "c2n.embedding", key="cell", cell="super")
+
+    route = _argbest_sql(
+        "af2", "v.vec_id", "c2x", member_score,
+        "vsup JOIN cellsup ON cellsup.super = vsup.super"
+        " JOIN c2x ON c2x.cell = cellsup.cell JOIN v ON v.vec_id = vsup.vec_id",
+    )
+    return f"""params AS ({_derived_cells_sql("embeddings")}),
+    {_cells_sql(corpus_from, train_pred, n_cells)},
+    c2n AS MATERIALIZED (
+      SELECT cell, cvec AS embedding,
+             sqrt(list_sum(list_transform(cvec, x -> x * x))) AS nrm
+      FROM c2
+    ),
+    sparams AS ({_derived_cells_sql("c2")}),
+    {_seed_sql("s0", "(SELECT nc FROM sparams)", "cvec", src="c2", key="cell", cell="super")},
+    {_train_sql("s", "sa", super_assign, super_lloyd)},
+    {super_assign("cellsup", "s2")},
+    s2x AS MATERIALIZED (SELECT super AS cell, cvec FROM s2),
+    -- routable supers only (ivf2_train mirror): Lloyd can leave a
+    -- level-1 centroid with zero member cells; vectors and probes must
+    -- never route to it, or the routed rows vanish from the index
+    s2e AS MATERIALIZED (
+      SELECT s2x.* FROM s2x
+      WHERE s2x.cell IN (SELECT DISTINCT super FROM cellsup)
+    ),
+    c2x AS MATERIALIZED (SELECT cell, cvec FROM c2),
+    {_cos_assign_sql("vsup", "s2e", select="vec_id, cell AS super")},
+    {route}"""
+
+
+def _ivf2_probe_sql(tag: str, n_super: str, n_cells: str) -> str:
+    """Query side of :func:`_ivf2_sql`: ``sprobes{tag}``, the ``n_super``
+    best supers of each query vec_id < 5; ``cprobes{tag}``, the
+    ``n_cells`` best member cells of those; ``scored{tag}``, the
+    candidates they hold."""
+    supers = _argbest_sql(
+        f"sprobes{tag}", "v.vec_id", "s2e", floor_round6_sql(_cent_cos_sql("v", "s2e")),
+        "v, s2e WHERE v.vec_id < 5", f"<= {n_super}", select="vec_id AS query_id, cell AS super",
+    )
+    cells = _argbest_sql(
+        f"cprobes{tag}", "sp.query_id", "c2x", floor_round6_sql(_cent_cos_sql("v", "c2x")),
+        f"sprobes{tag} sp JOIN cellsup ON cellsup.super = sp.super"
+        " JOIN c2x ON c2x.cell = cellsup.cell JOIN v ON v.vec_id = sp.query_id",
+        f"<= {n_cells}",
+    )
+    return f"""{supers},
+    {cells},
+    {_scored_sql(f"scored{tag}", f"cprobes{tag}", "af2")}"""
+
+
+def _pq_sql() -> str:
+    """CTE list of the PQ unroll (similarity.pq_train m=2, k=4, iters=2,
+    dim=64): per 32-dim subspace s the slices ``v{s}``, seeds ``p{s}_0``
+    (the 4 lowest ids), two L2 Lloyd steps to ``p{s}_2``, the
+    ``codes{s}`` of every vector and the floored query-to-code distance
+    table ``dist{s}`` (query_id, cell, d) of the queries vec_id < 5."""
+    blocks = []
+    for s in (0, 1):
+        lo = s * 32 + 1
+        sv = f"list_slice(embedding, {lo}, {lo + 31})"
+
+        def assign(name: str, cents: str, s: int = s) -> str:
+            d = floor_round6_sql(_l2_sql("v.sv", f"{cents}.cvec"))
+            return _argbest_sql(name, "v.vec_id", cents, d, f"v{s} v, {cents}", asc=True)
+
+        def lloyd(a: str, prev: str, new: str, s: int = s) -> str:
+            return _lloyd_sql(a, prev, new, f"v{s} v", "v.sv")
+
+        blocks += [
+            f"v{s} AS (SELECT vec_id, {sv} AS sv FROM embeddings)",
+            _seed_sql(f"p{s}_0", 4, vec=sv),
+            _train_sql(f"p{s}_", f"pa{s}_", assign, lloyd),
+            assign(f"codes{s}", f"p{s}_2"),
+            f"""dist{s} AS (
+      SELECT q.vec_id AS query_id, c.cell,
+             {floor_round6_sql(_l2_sql("q.sv", "c.cvec"))} AS d
+      FROM v{s} q, p{s}_2 c WHERE q.vec_id < 5
+    )""",
+        ]
+    return ",\n    ".join(blocks)
+
+
+def _topk_sql(
+    scored: str = "scored", measure: str = "score", order: str = "DESC", where: str = ""
+) -> str:
+    """The 10 best neighbors per query of ``scored`` by ``measure``,
+    ties to the lower neighbor id, after the row filter ``where``."""
+    return f"""SELECT * FROM (
+      SELECT query_id, neighbor_id, {measure},
+             ROW_NUMBER() OVER (PARTITION BY query_id
+                                ORDER BY {measure} {order}, neighbor_id ASC) AS rank
+      FROM {scored}{where}
+    ) WHERE rank <= 10"""
+
+
+def _tombstoned_topk_sql() -> str:
+    """Top-10 with the tombstoned neighbors (vec_id % 7 = 3) removed
+    BEFORE ranking, so a deleted neighbor frees its rank (the
+    query_ivf_index anti-join). Queries are not filtered: a deleted id
+    may still ask for neighbors."""
+    return _topk_sql(where=" WHERE NOT (neighbor_id % 7 = 3)")
+
+
+def _occupancy_sql(assign: str) -> str:
+    """Occupancy audit of the assignment table ``assign``
+    (similarity.occupancy_report): per-cell counts and shares, the
+    max/mean skew factor and the needs_rebalance flag (skew > 2x)."""
+    return f"""SELECT cell,
+           CAST(n AS BIGINT) AS n_vectors,
+           {floor_round6_sql("CAST(n AS DOUBLE) / CAST(SUM(n) OVER () AS DOUBLE)")} AS share,
+           {floor_round6_sql(
+               "CAST(MAX(n) OVER () AS DOUBLE) * CAST(COUNT(*) OVER () AS DOUBLE)"
+               " / CAST(SUM(n) OVER () AS DOUBLE)"
+           )} AS skew_factor,
+           (CAST(MAX(n) OVER () AS DOUBLE) * CAST(COUNT(*) OVER () AS DOUBLE)
+            > 2.0 * CAST(SUM(n) OVER () AS DOUBLE)) AS needs_rebalance
+    FROM (SELECT cell, COUNT(*) AS n FROM {assign} GROUP BY cell)
+    ORDER BY cell"""
+
+
+def _exact_top10_sql(src: str = "v") -> str:
+    """``exact``: the brute-force cosine top-10 of the queries
+    vec_id < 5 over the (vec_id, embedding, nrm) table ``src``."""
+    score = floor_round6_sql(_pair_cos_sql("q", "c"))
+    return f"""exact AS MATERIALIZED (
+      SELECT * FROM (
+        SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
+               ROW_NUMBER() OVER (PARTITION BY q.vec_id
+                                  ORDER BY {score} DESC, c.vec_id ASC) AS rank
+        FROM {src} q, {src} c WHERE q.vec_id < 5 AND c.vec_id <> q.vec_id
+      ) WHERE rank <= 10
+    )"""
+
+
+def _recall_sql(
+    tag: str = "", measure: str = "score", order: str = "DESC", src: str = "v"
+) -> str:
+    """The recall@10 device over ``exact`` (:func:`_exact_top10_sql`):
+    ``approx{tag}``, the top-10 of ``scored{tag}``; ``hits{tag}``, its
+    overlap with ``exact`` per query; ``recall{tag}``, (query_id,
+    n_hits) for every query vec_id < 5 of ``src``, 0 where none hit."""
+    return f"""approx{tag} AS (
+      {_topk_sql(f"scored{tag}", measure, order)}
+    ),
+    hits{tag} AS (
+      SELECT query_id, COUNT(*) AS n_hits
+      FROM approx{tag} JOIN exact USING (query_id, neighbor_id)
+      GROUP BY query_id
+    ),
+    recall{tag} AS (
+      SELECT qs.vec_id AS query_id, COALESCE(h.n_hits, 0) AS n_hits
+      FROM (SELECT vec_id FROM {src} WHERE vec_id < 5) qs
+      LEFT JOIN hits{tag} h ON h.query_id = qs.vec_id
+    )"""
+
+
+_RECALL_COLS_SQL = (
+    "CAST(n_hits AS INT) AS n_hits, "
+    f"{floor_round6_sql('CAST(n_hits AS DOUBLE) / 10.0')} AS recall_at_10"
+)
+
+
+def _recall_tail_sql(measure: str = "score", order: str = "DESC", cols: str = "") -> str:
+    """Terminal for a CTE list that ends in ``scored``: recall@10 of its
+    top-10 against the exact top-10, one row per query, ``cols`` before
+    the recall columns."""
+    return f""", {_exact_top10_sql()},
+    {_recall_sql(measure=measure, order=order)}
+    SELECT query_id, {cols}{_RECALL_COLS_SQL}
+    FROM recall ORDER BY query_id"""
+
+
+def _recall_at_10(
+    base: DataFrame, approx: DataFrame, exact: DataFrame, lead=(), trail=()
+) -> DataFrame:
+    """Spark twin of the recall tail: per query of ``base``, how many of
+    its ``approx`` neighbors are in ``exact`` and that count over 10,
+    with the ``lead`` and ``trail`` columns around them."""
+    return (
+        similarity.recall_hits(base, approx, exact)
+        .select(
+            "query_id",
+            *lead,
+            F.col("n_hits").cast("int").alias("n_hits"),
+            floor_round6(F.col("n_hits").cast("double") / 10.0).alias("recall_at_10"),
+            *trail,
+        )
+        .orderBy("query_id")
+    )
+
+
 def _bucketed_embeddings_cte() -> str:
     """Shared DuckDB CTE reproducing similarity's hyperplane sign-bucket
     blocking (n_planes=4, dim=64, seed=7) in pure SQL. The hyperplanes
-    come from the same deterministic splitmix generator and are embedded
-    as DOUBLE literals (repr() is shortest-round-trip, so DuckDB parses
-    the identical double)."""
+    come from the same deterministic splitmix generator
+    (:func:`_plane_dot_sql`)."""
     planes = similarity._hyperplanes(64, 4, 7)
-
-    def dot(plane: list[float]) -> str:
-        lit = "[" + ", ".join(repr(v) for v in plane) + "]::DOUBLE[]"
-        return (
-            "list_sum(list_transform(list_zip(embedding, " + lit + "),"
-            " z -> CAST(z[1] AS DOUBLE) * CAST(z[2] AS DOUBLE)))"
-        )
-
     bucket = "\n           + ".join(
-        f"(CASE WHEN {dot(p)} > 0 THEN {1 << i} ELSE 0 END)" for i, p in enumerate(planes)
+        f"(CASE WHEN {_plane_dot_sql(p)} > 0 THEN {1 << i} ELSE 0 END)"
+        for i, p in enumerate(planes)
     )
     return f"""
     WITH b AS (
       SELECT vec_id, embedding,
-             sqrt(list_sum(list_transform(embedding,
-                  x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))) AS nrm,
+             {_VEC_NORM_SQL} AS nrm,
              {bucket} AS bucket
       FROM embeddings
     )"""
@@ -1334,10 +1772,7 @@ def _bucketed_embeddings_cte() -> str:
 def _q40_oracle() -> str:
     """DuckDB twin of similarity.embedding_near_dup_pairs(threshold=0.35,
     n_planes=4, dim=64, seed=7)."""
-    cosine = (
-        "list_sum(list_transform(list_zip(a.embedding, c.embedding),"
-        " z -> CAST(z[1] AS DOUBLE) * CAST(z[2] AS DOUBLE))) / (a.nrm * c.nrm)"
-    )
+    cosine = _pair_cos_sql("a", "c")
     return f"""{_bucketed_embeddings_cte()}
     SELECT * FROM (
       SELECT a.vec_id AS id_a, c.vec_id AS id_b,
@@ -1347,27 +1782,24 @@ def _q40_oracle() -> str:
     """
 
 
+def _lsh_scored_sql() -> str:
+    """``scored``: cosine of each query vec_id < 5 to every other vector
+    of its own sign bucket (over :func:`_bucketed_embeddings_cte`)."""
+    return f"""scored AS (
+      SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
+             {floor_round6_sql(_pair_cos_sql("q", "c"))} AS score
+      FROM b q JOIN b c ON q.bucket = c.bucket AND c.vec_id <> q.vec_id
+      WHERE q.vec_id < 5
+    )"""
+
+
 def _q39_oracle() -> str:
     """DuckDB twin of similarity.cosine_topk_lsh(k=10, n_planes=4,
     n_probe=0): queries probe only their own sign bucket; ranking breaks
     6dp-rounded score ties on neighbor id exactly like the Spark window."""
-    cosine = (
-        "list_sum(list_transform(list_zip(q.embedding, c.embedding),"
-        " z -> CAST(z[1] AS DOUBLE) * CAST(z[2] AS DOUBLE))) / (q.nrm * c.nrm)"
-    )
     return f"""{_bucketed_embeddings_cte()},
-    scored AS (
-      SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-             {floor_round6_sql(cosine)} AS score
-      FROM b q JOIN b c ON q.bucket = c.bucket AND c.vec_id <> q.vec_id
-      WHERE q.vec_id < 5
-    )
-    SELECT * FROM (
-      SELECT query_id, neighbor_id, score,
-             ROW_NUMBER() OVER (PARTITION BY query_id
-                                ORDER BY score DESC, neighbor_id ASC) AS rank
-      FROM scored
-    ) WHERE rank <= 10
+    {_lsh_scored_sql()}
+    {_topk_sql()}
     """
 
 
@@ -5884,13 +6316,13 @@ def _q67_oracle(
 ) -> str:
     """DuckDB twin of similarity.cosine_topk_ivf(k=10, n_cells=8,
     n_probe=3, iters=2): the deterministic k-means-lite train is fully
-    unrolled in SQL — seeds are the 8 lowest-id vectors, each Lloyd
-    step is (argmax-cosine assignment, per-dimension mean rounded to
-    6dp, empty cells keep their previous centroid), then the corpus is
-    inverted-listed under the final centroids and each query probes its
-    3 best cells. Ties break exactly as the Spark side: assignment picks
-    the highest cell id, probe ranking is (score DESC, cell DESC),
-    neighbor ranking is (score DESC, neighbor ASC).
+    unrolled in SQL (:func:`_ivf_sql`) — seeds are the 8 lowest-id
+    vectors, each Lloyd step is (argmax-cosine assignment, per-dimension
+    mean rounded to 6dp, empty cells keep their previous centroid), then
+    the corpus is inverted-listed under the final centroids and each
+    query probes its 3 best cells. Ties break exactly as the Spark side:
+    assignment picks the highest cell id, probe ranking is (score DESC,
+    cell DESC), neighbor ranking is (score DESC, neighbor ASC).
 
     ``train_pred`` restricts SEEDS and Lloyd means to a training
     subset while the final inverted lists still cover every vector —
@@ -5898,17 +6330,14 @@ def _q67_oracle(
     the rest under the frozen quantizer). Default TRUE = q67.
     ``final_select`` swaps the terminal top-k SELECT for a different
     consumer of the unrolled CTEs (q200 reads ``af`` for the cell
-    occupancy audit). ``derived_cells=True`` replaces the fixed LIMIT 8
-    seed set with the cardinality-derived count: a params CTE computes
-    similarity.derived_n_cells via the same integer ladder (a CASE
-    count of n > 2^j gives ceil(log2 n) — no float log2 near
-    power-of-two boundaries), and c0 keeps the first nc row-numbered
-    seeds. Every downstream CTE is already relational over the cell
-    table, so nothing else changes with the count. ``derive_pred``
-    (default: ``train_pred``) is the predicate the capacity count runs
-    over — q211 trains on a SAMPLE but sizes the quantizer from the
-    FULL corpus the cells must serve, so it passes derive_pred='TRUE'
-    with a sampling train_pred.
+    occupancy audit). ``derived_cells=True`` replaces the fixed 8 seed
+    cells with the cardinality-derived count (:func:`_derived_cells_sql`);
+    every downstream CTE is already relational over the cell table, so
+    nothing else changes with the count. ``derive_pred`` (default:
+    ``train_pred``) is the predicate the capacity count runs over — q211
+    trains on a SAMPLE but sizes the quantizer from the FULL corpus the
+    cells must serve, so it passes derive_pred='TRUE' with a sampling
+    train_pred.
 
     ``corpus_from`` replaces the ``v`` CTE's source — the corpus the
     inverted lists, probes and scores run over (q228 passes the
@@ -5919,119 +6348,10 @@ def _q67_oracle(
     deliberately still read the raw ``embeddings`` table — the frozen
     quantizer trained before the update — so an update set that
     overlapped the train rows would desynchronize the two."""
-    # parameterized on BOTH aliases ({v} vector side, {c} centroid
-    # side) — a post-hoc .replace("v.", ...) over the formatted SQL
-    # would silently rewrite any future fragment containing "v."
-    cos_c = (
-        "list_sum(list_transform(list_zip({v}.embedding, {c}.cvec),"
-        " z -> CAST(z[1] AS DOUBLE) * z[2]))"
-        " / ({v}.nrm * sqrt(list_sum(list_transform({c}.cvec, x -> x * x))))"
-    )
-
-    def assign(name: str, cents: str, src: str = "v") -> str:
-        scored = floor_round6_sql(cos_c.format(v=src, c=cents))
-        return f"""{name} AS MATERIALIZED (
-      SELECT vec_id, cell FROM (
-        SELECT {src}.vec_id, {cents}.cell,
-               ROW_NUMBER() OVER (PARTITION BY {src}.vec_id
-                                  ORDER BY {scored} DESC, {cents}.cell DESC) AS rn
-        FROM {src}, {cents}
-      ) WHERE rn = 1
-    )"""
-
-    def lloyd(a: str, prev: str, new: str) -> str:
-        return f"""{new}_m AS (
-      SELECT {a}.cell, vec_id, generate_subscripts(vt.embedding, 1) AS pos,
-             unnest(vt.embedding) AS x
-      FROM {a} JOIN vt USING (vec_id)
-    ),
-    {new}_c AS (
-      SELECT cell, list(m ORDER BY pos) AS cvec FROM (
-        SELECT cell, pos, {floor_round6_sql("list_sum(list(CAST(x AS DOUBLE) ORDER BY vec_id)) / COUNT(*)")} AS m
-        FROM {new}_m GROUP BY cell, pos
-      ) GROUP BY cell
-    ),
-    {new} AS MATERIALIZED (
-      SELECT {prev}.cell, COALESCE({new}_c.cvec, {prev}.cvec) AS cvec
-      FROM {prev} LEFT JOIN {new}_c USING (cell)
-    )"""
-
-    probe_score = floor_round6_sql(cos_c.format(v="v", c="c2"))
-    pair_cos = (
-        "list_sum(list_transform(list_zip(q.embedding, v.embedding),"
-        " z -> CAST(z[1] AS DOUBLE) * CAST(z[2] AS DOUBLE))) / (q.nrm * v.nrm)"
-    )
-    from ..operators.similarity import _IVF_TRAIN_PER_CELL
-
-    if derived_cells:
-        from ..operators.similarity import _IVF_MAX_CELLS_EXP
-
-        ladder = " + ".join(f"(CASE WHEN n > {1 << j} THEN 1 ELSE 0 END)" for j in range(44))
-        params = f"""params AS (
-      SELECT LEAST({1 << _IVF_MAX_CELLS_EXP},
-                   GREATEST(4, (CAST(1 AS BIGINT) << ((({ladder}) + 1) // 2)))) AS nc
-      FROM (SELECT COUNT(*) AS n FROM embeddings WHERE {derive_pred or train_pred})
-    ),
-    """
-        cap_sql = f"{_IVF_TRAIN_PER_CELL} * (SELECT nc FROM params)"
-        c0 = f"""c0 AS (
-      SELECT cell, cvec FROM (
-        SELECT ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS cell,
-               list_transform(embedding, x -> CAST(x AS DOUBLE)) AS cvec
-        FROM embeddings WHERE {train_pred}
-      ) WHERE cell < (SELECT nc FROM params)
-    ),"""
-    else:
-        params = ""
-        cap_sql = str(_IVF_TRAIN_PER_CELL * 8)
-        c0 = f"""c0 AS (
-      SELECT ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS cell,
-             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS cvec
-      FROM embeddings WHERE {train_pred} ORDER BY vec_id LIMIT 8
-    ),"""
     return f"""
-    WITH v AS MATERIALIZED (
-      SELECT vec_id, embedding,
-             sqrt(list_sum(list_transform(embedding,
-                  x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))) AS nrm
-      FROM {corpus_from}
-    ),
-    {params}vt AS MATERIALIZED (
-      -- faiss train cap mirror (similarity._IVF_TRAIN_PER_CELL): the
-      -- train set is the min(|train|, 256*n_cells) LOWEST-ID rows
-      SELECT vec_id, embedding, nrm FROM (
-        SELECT v.*, ROW_NUMBER() OVER (ORDER BY vec_id) AS trn
-        FROM v WHERE {train_pred}
-      ) WHERE trn <= {cap_sql}
-    ),
-    {c0}
-    {assign("a1", "c0", "vt")},
-    {lloyd("a1", "c0", "c1")},
-    {assign("a2", "c1", "vt")},
-    {lloyd("a2", "c1", "c2")},
-    {assign("af", "c2")},
-    probes AS (
-      SELECT vec_id AS query_id, cell FROM (
-        SELECT v.vec_id, c2.cell,
-               ROW_NUMBER() OVER (PARTITION BY v.vec_id
-                                  ORDER BY {probe_score} DESC, c2.cell DESC) AS rn
-        FROM v, c2 WHERE v.vec_id < 5
-      ) WHERE rn <= 3
-    ),
-    scored AS (
-      SELECT p.query_id, v.vec_id AS neighbor_id,
-             {floor_round6_sql(pair_cos)} AS score
-      FROM probes p
-      JOIN af ON af.cell = p.cell
-      JOIN v ON v.vec_id = af.vec_id AND v.vec_id <> p.query_id
-      JOIN v q ON q.vec_id = p.query_id
-    )
-    {final_select if final_select is not None else '''SELECT * FROM (
-      SELECT query_id, neighbor_id, score,
-             ROW_NUMBER() OVER (PARTITION BY query_id
-                                ORDER BY score DESC, neighbor_id ASC) AS rank
-      FROM scored
-    ) WHERE rank <= 10'''}
+    WITH {_ivf_sql(train_pred, derived_cells, derive_pred, corpus_from)},
+    {_scored_sql("scored", "probes", "af")}
+    {final_select if final_select is not None else _topk_sql()}
     """
 
 
@@ -6051,7 +6371,7 @@ def q67(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q126_oracle(n_merges: int = 8, min_pair_count: int = 2) -> str:
-    """DuckDB twin of bpe_train(n_merges=8): the iterative train is
+    """DuckDB twin of bpe_train_batched(n_merges=8, batch=1): the iterative train is
     unrolled, one (pairs -> best -> merged vocab) CTE block per merge.
     Token arrays are carried as boundary-marked strings
     ("⟨t1⟩⟨t2⟩..."): applying a merge is then a plain substring
@@ -6114,7 +6434,7 @@ def _q155_oracle(n_merges: int = 8, batch: int = 4, min_pair_count: int = 2) -> 
     c1..c4), the greedy disjoint-acceptance walk is unrolled as boolean
     columns a1..a4 (ai requires, for every earlier ACCEPTED aj, that
     {li, ri} avoid {lj, rj, lj||rj} — the exact `used`-set rule of
-    bpe.py:183-192), and the accepted rules apply to the boundary-
+    bpe_train_batched), and the accepted rules apply to the boundary-
     marked vocab strings as nested conditional replaces in walk order.
     ``n_merges`` rounds are unrolled (enough even if every round
     accepts a single rule); the final projection takes the first
@@ -6221,44 +6541,110 @@ def _q155_oracle(n_merges: int = 8, batch: int = 4, min_pair_count: int = 2) -> 
     """
 
 
-def _q150_oracle() -> str:
-    """DuckDB twin of the portable HLL sketch. Everything before the
-    final division is exact: md5-prefix 60-bit hash, bucket = low 12
-    bits, rho = leading-zero rank of the remaining 48 bits via the
-    binary-string length (pure integer/string ops), registers = MAX per
-    bucket including empties (range join), and the indicator sum folds
-    1/2^r terms — each an exact power of two — in bucket order on both
-    engines. Only the last divide, the small-range linear-counting
-    correction (ln of a 4096/v integer ratio — same operand, same op,
-    both engines), and the 6dp floor touch floats."""
-    alpha = "0.7213 / (1.0 + 1.079 / 4096.0)"
-    raw = f"({alpha}) * 4096.0 * 4096.0 / s"
-    est = (
-        f"CASE WHEN {raw} <= 2.5 * 4096.0 AND v > 0"
-        f" THEN 4096.0 * ln(4096.0 / v) ELSE {raw} END"
-    )
-    return f"""
-    WITH h AS (
-      SELECT CAST(('0x' || substr(md5(CAST(l_orderkey AS VARCHAR)), 1, 15)) AS BIGINT) AS hv
-      FROM lineitem
+# The portable HLL sketch (p=12, 4096 registers) of q150/q153, once per
+# engine. Everything before the final division is exact: md5-prefix
+# 60-bit hash, bucket = low 12 bits, rho = leading-zero rank of the
+# remaining 48 bits via the binary-string length (pure integer/string
+# ops), registers = MAX per bucket including empties, and the
+# indicator sum folds 1/2^r terms — each an exact power of two — in
+# bucket order on both engines. Only the last divide, the small-range
+# linear-counting correction (ln of a 4096/v integer ratio — same
+# operand, same op, both engines) and the 6dp floor touch floats.
+
+
+def _hll_rho_sql(key: str, src: str, grp: str | None = None) -> str:
+    """CTEs ``h`` (hash ``hv`` of ``key``) and ``rr`` (bucket, rho) over
+    ``src``, carrying ``grp`` as ``grp`` when given."""
+    g = f"{grp} AS grp,\n             " if grp else ""
+    return f"""h AS (
+      SELECT {g}CAST(('0x' || substr(md5(CAST({key} AS VARCHAR)), 1, 15)) AS BIGINT) AS hv
+      FROM {src}
     ),
     rr AS (
-      SELECT hv % 4096 AS bucket,
+      SELECT {"grp, " if grp else ""}hv % 4096 AS bucket,
              CASE WHEN hv // 4096 = 0 THEN 49
                   ELSE 48 - length(bin(hv // 4096)) + 1 END AS rho
       FROM h
-    ),
+    )"""
+
+
+def _hll_agg_sql(regs: str) -> str:
+    """CTE ``agg``: the register table ``regs`` (bucket, reg) folded to
+    the indicator sum ``s`` and the empty-register count ``v``."""
+    return f"""agg AS (
+      SELECT list_sum(list(1.0 / CAST((CAST(1 AS BIGINT) << reg) AS DOUBLE) ORDER BY bucket)) AS s,
+             SUM(CASE WHEN reg = 0 THEN 1 ELSE 0 END) AS v
+      FROM {regs}
+    )"""
+
+
+_HLL_RAW_SQL = "(0.7213 / (1.0 + 1.079 / 4096.0)) * 4096.0 * 4096.0 / s"
+_HLL_ESTIMATE_SQL = floor_round6_sql(
+    f"CASE WHEN {_HLL_RAW_SQL} <= 2.5 * 4096.0 AND v > 0"
+    f" THEN 4096.0 * ln(4096.0 / v) ELSE {_HLL_RAW_SQL} END"
+)
+
+
+def _hll_rho(df: DataFrame, key: str, *keep: str) -> DataFrame:
+    """Spark twin of :func:`_hll_rho_sql`: (``keep``, bucket, rho)."""
+    h = df.select(
+        *keep,
+        F.conv(F.substring(F.md5(F.col(key).cast("string")), 1, 15), 16, 10)
+        .cast("long")
+        .alias("hv"),
+    )
+    return h.select(
+        *keep,
+        (F.col("hv") % 4096).alias("bucket"),
+        F.when(F.expr("hv DIV 4096") == 0, F.lit(49))
+        .otherwise(F.lit(48) - F.length(F.bin(F.expr("hv DIV 4096"))) + F.lit(1))
+        .alias("rho"),
+    )
+
+
+def _hll_agg(regs: DataFrame) -> DataFrame:
+    """Spark twin of :func:`_hll_agg_sql`: one row (s, v)."""
+    return regs.agg(
+        F.aggregate(
+            F.array_sort(F.collect_list(F.struct("bucket", "reg"))),
+            F.lit(0.0),
+            # shiftleft() needs a literal bit count, so build 2^reg via
+            # pow + long-cast (exact for reg <= 49 — the established
+            # pattern from similarity._probe_buckets_expr's masks);
+            # dividing by an exact power of two is itself exact
+            lambda acc, x: acc
+            + F.lit(1.0) / F.pow(F.lit(2.0), x["reg"]).cast("long").cast("double"),
+        ).alias("s"),
+        F.sum(F.when(F.col("reg") == 0, 1).otherwise(0)).alias("v"),
+    )
+
+
+def _hll_estimate() -> Column:
+    """The floored estimate over (s, v): the raw harmonic mean, or
+    linear counting m*ln(m/v) when it is below 2.5m and empty registers
+    remain (the standard small-range correction)."""
+    alpha = 0.7213 / (1.0 + 1.079 / 4096.0)
+    raw = F.lit(alpha) * F.lit(4096.0) * F.lit(4096.0) / F.col("s")
+    return floor_round6(
+        F.when(
+            (raw <= F.lit(2.5) * F.lit(4096.0)) & (F.col("v") > 0),
+            F.lit(4096.0) * F.log(F.lit(4096.0) / F.col("v")),
+        ).otherwise(raw)
+    )
+
+
+def _q150_oracle() -> str:
+    """DuckDB twin of the portable HLL sketch: registers = MAX per
+    bucket including empties (range join)."""
+    return f"""
+    WITH {_hll_rho_sql("l_orderkey", "lineitem")},
     regs AS (
       SELECT r.range AS bucket, COALESCE(MAX(rr.rho), 0) AS reg
       FROM range(0, 4096) r LEFT JOIN rr ON rr.bucket = r.range
       GROUP BY r.range
     ),
-    agg AS (
-      SELECT list_sum(list(1.0 / CAST((CAST(1 AS BIGINT) << reg) AS DOUBLE) ORDER BY bucket)) AS s,
-             SUM(CASE WHEN reg = 0 THEN 1 ELSE 0 END) AS v
-      FROM regs
-    )
-    SELECT {floor_round6_sql(est)} AS hll_estimate,
+    {_hll_agg_sql("regs")}
+    SELECT {_HLL_ESTIMATE_SQL} AS hll_estimate,
            CAST(v AS BIGINT) AS n_empty_registers,
            (SELECT COUNT(DISTINCT l_orderkey) FROM lineitem) AS exact_orders
     FROM agg
@@ -6282,49 +6668,16 @@ def _q150_oracle() -> str:
 )
 def q150(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = _t(spark, sf_dir, "lineitem")
-    h = li.select(
-        F.conv(F.substring(F.md5(F.col("l_orderkey").cast("string")), 1, 15), 16, 10)
-        .cast("long")
-        .alias("hv")
-    )
-    rr = h.select(
-        (F.col("hv") % 4096).alias("bucket"),
-        F.when(F.expr("hv DIV 4096") == 0, F.lit(49))
-        .otherwise(F.lit(48) - F.length(F.bin(F.expr("hv DIV 4096"))) + F.lit(1))
-        .alias("rho"),
-    )
-    spark = li.sparkSession
-    all_buckets = spark.range(4096).select(F.col("id").alias("bucket"))
+    rr = _hll_rho(li, "l_orderkey")
+    all_buckets = li.sparkSession.range(4096).select(F.col("id").alias("bucket"))
     regs = (
         all_buckets.join(rr, "bucket", "left")
         .groupBy("bucket")
         .agg(F.coalesce(F.max("rho"), F.lit(0)).alias("reg"))
     )
-    agg = regs.agg(
-        F.aggregate(
-            F.array_sort(F.collect_list(F.struct("bucket", "reg"))),
-            F.lit(0.0),
-            # shiftleft() needs a literal bit count, so build 2^reg via
-            # pow + long-cast (exact for reg <= 49 — the established
-            # pattern from similarity._probe_buckets_expr's masks);
-            # dividing by an exact power of two is itself exact
-            lambda acc, x: acc
-            + F.lit(1.0) / F.pow(F.lit(2.0), x["reg"]).cast("long").cast("double"),
-        ).alias("s"),
-        F.sum(F.when(F.col("reg") == 0, 1).otherwise(0)).alias("v"),
-    )
-    alpha = 0.7213 / (1.0 + 1.079 / 4096.0)
     exact = li.agg(F.count_distinct("l_orderkey").alias("exact_orders"))
-    raw = F.lit(alpha) * F.lit(4096.0) * F.lit(4096.0) / F.col("s")
-    # standard HLL small-range correction: when the raw harmonic-mean
-    # estimate is below 2.5m and empty registers remain, linear counting
-    # m*ln(m/v) is the accurate estimator (exercised at sf0.001)
-    est = F.when(
-        (raw <= F.lit(2.5) * F.lit(4096.0)) & (F.col("v") > 0),
-        F.lit(4096.0) * F.log(F.lit(4096.0) / F.col("v")),
-    ).otherwise(raw)
-    return agg.crossJoin(F.broadcast(exact)).select(
-        floor_round6(est).alias("hll_estimate"),
+    return _hll_agg(regs).crossJoin(F.broadcast(exact)).select(
+        _hll_estimate().alias("hll_estimate"),
         F.col("v").cast("long").alias("n_empty_registers"),
         "exact_orders",
     )
@@ -6447,24 +6800,8 @@ def _q153_oracle() -> str:
     MAX-combined into the global registers — the associative partial-
     sketch merge — and the merged estimate must equal what q150 computes
     from the raw data directly."""
-    alpha = "0.7213 / (1.0 + 1.079 / 4096.0)"
-    raw = f"({alpha}) * 4096.0 * 4096.0 / s"
-    est = (
-        f"CASE WHEN {raw} <= 2.5 * 4096.0 AND v > 0"
-        f" THEN 4096.0 * ln(4096.0 / v) ELSE {raw} END"
-    )
     return f"""
-    WITH h AS (
-      SELECT o_orderpriority AS grp,
-             CAST(('0x' || substr(md5(CAST(o_orderkey AS VARCHAR)), 1, 15)) AS BIGINT) AS hv
-      FROM orders
-    ),
-    rr AS (
-      SELECT grp, hv % 4096 AS bucket,
-             CASE WHEN hv // 4096 = 0 THEN 49
-                  ELSE 48 - length(bin(hv // 4096)) + 1 END AS rho
-      FROM h
-    ),
+    WITH {_hll_rho_sql("o_orderkey", "orders", grp="o_orderpriority")},
     grp_regs AS (
       SELECT g.grp, r.range AS bucket, COALESCE(MAX(rr.rho), 0) AS reg
       FROM (SELECT DISTINCT grp FROM rr) g
@@ -6475,12 +6812,8 @@ def _q153_oracle() -> str:
     merged AS (
       SELECT bucket, MAX(reg) AS reg FROM grp_regs GROUP BY bucket
     ),
-    agg AS (
-      SELECT list_sum(list(1.0 / CAST((CAST(1 AS BIGINT) << reg) AS DOUBLE) ORDER BY bucket)) AS s,
-             SUM(CASE WHEN reg = 0 THEN 1 ELSE 0 END) AS v
-      FROM merged
-    )
-    SELECT {floor_round6_sql(est)} AS merged_estimate,
+    {_hll_agg_sql("merged")}
+    SELECT {_HLL_ESTIMATE_SQL} AS merged_estimate,
            (SELECT COUNT(DISTINCT o_orderkey) FROM orders) AS exact_orders,
            (SELECT COUNT(DISTINCT grp) FROM rr) AS n_partial_sketches
     FROM agg
@@ -6499,53 +6832,26 @@ def _q153_oracle() -> str:
 )
 def q153(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = _t(spark, sf_dir, "orders")
-    h = o.select(
-        F.col("o_orderpriority").alias("grp"),
-        F.conv(F.substring(F.md5(F.col("o_orderkey").cast("string")), 1, 15), 16, 10)
-        .cast("long")
-        .alias("hv"),
-    )
-    rr = h.select(
-        "grp",
-        (F.col("hv") % 4096).alias("bucket"),
-        F.when(F.expr("hv DIV 4096") == 0, F.lit(49))
-        .otherwise(F.lit(48) - F.length(F.bin(F.expr("hv DIV 4096"))) + F.lit(1))
-        .alias("rho"),
-    )
-    spark_s = o.sparkSession
+    rr = _hll_rho(o.withColumnRenamed("o_orderpriority", "grp"), "o_orderkey", "grp")
     groups = rr.select("grp").distinct()
-    all_buckets = spark_s.range(4096).select(F.col("id").alias("bucket"))
+    all_buckets = o.sparkSession.range(4096).select(F.col("id").alias("bucket"))
     grp_regs = (
         groups.crossJoin(F.broadcast(all_buckets))
         .join(rr, ["grp", "bucket"], "left")
         .groupBy("grp", "bucket")
         .agg(F.coalesce(F.max("rho"), F.lit(0)).alias("reg"))
     )
+    # the small-range correction applies to the MERGED registers,
+    # exactly as a production merge would
     merged = grp_regs.groupBy("bucket").agg(F.max("reg").alias("reg"))
-    agg = merged.agg(
-        F.aggregate(
-            F.array_sort(F.collect_list(F.struct("bucket", "reg"))),
-            F.lit(0.0),
-            lambda acc, x: acc
-            + F.lit(1.0) / F.pow(F.lit(2.0), x["reg"]).cast("long").cast("double"),
-        ).alias("s"),
-        F.sum(F.when(F.col("reg") == 0, 1).otherwise(0)).alias("v"),
-    )
-    alpha = 0.7213 / (1.0 + 1.079 / 4096.0)
     exact = o.agg(F.count_distinct("o_orderkey").alias("exact_orders"))
     nsk = groups.agg(F.count(F.lit(1)).alias("n_partial_sketches"))
-    raw = F.lit(alpha) * F.lit(4096.0) * F.lit(4096.0) / F.col("s")
-    # same small-range linear-counting correction as q150 — applied on
-    # the MERGED registers, exactly as a production merge would
-    est = F.when(
-        (raw <= F.lit(2.5) * F.lit(4096.0)) & (F.col("v") > 0),
-        F.lit(4096.0) * F.log(F.lit(4096.0) / F.col("v")),
-    ).otherwise(raw)
     return (
-        agg.crossJoin(F.broadcast(exact))
+        _hll_agg(merged)
+        .crossJoin(F.broadcast(exact))
         .crossJoin(F.broadcast(nsk))
         .select(
-            floor_round6(est).alias("merged_estimate"),
+            _hll_estimate().alias("merged_estimate"),
             "exact_orders",
             F.col("n_partial_sketches").cast("long"),
         )
@@ -6666,9 +6972,11 @@ def q154(spark: SparkSession, sf_dir: str) -> DataFrame:
     "the iterative algorithm is value-checked end-to-end",
 )
 def q126(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.bpe import bpe_train
+    from ..operators.bpe import bpe_train_batched
 
-    merges = bpe_train(_t(spark, sf_dir, "documents"), n_merges=8, min_pair_count=2)
+    merges = bpe_train_batched(
+        _t(spark, sf_dir, "documents"), n_merges=8, min_pair_count=2, batch=1
+    )
     return spark.createDataFrame(
         merges, "rank int, left string, right string, pair_count long"
     )
@@ -6677,7 +6985,7 @@ def q126(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "q155_bpe_batched",
     _q155_oracle(),
-    "Batched BPE training - the 100x-scale path (bpe.py:134): up to 4 "
+    "Batched BPE training - the 100x-scale path (bpe_train_batched): up to 4 "
     "disjoint merge rules accepted per distributed pair-count, cutting "
     "driver round-trips from n_merges to ~n_merges/4 (a 50k-merge "
     "tokenizer train is infeasible at one job per merge). Disjointness "
@@ -8022,73 +8330,13 @@ def q176(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _q177_oracle() -> str:
     """DuckDB twin of PQ train+encode+ADC (m=2 subspaces, k=4, 2 Lloyd
-    steps): the q67 unrolled-quantizer technique per subspace, with
-    L2/argmin in place of cosine/argmax — assignment ties break to the
-    LOWEST cell (array_min struct ordering on the Spark side =
-    ORDER BY dist, cell here), per-dimension means floored to 6dp,
-    ADC distance = d0 + d1 of the floored per-subspace lookups."""
-    l2 = (
-        "list_sum(list_transform(list_zip({a}, {b}),"
-        " z -> (CAST(z[1] AS DOUBLE) - z[2]) * (CAST(z[1] AS DOUBLE) - z[2])))"
-    )
-
-    def sub_cte(s: int) -> str:
-        lo = s * 32 + 1
-        return f"""v{s} AS (
-      SELECT vec_id, list_slice(embedding, {lo}, {lo + 31}) AS sv FROM embeddings
-    ),
-    c{s}_0 AS (
-      SELECT ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS cell,
-             list_transform(sv, x -> CAST(x AS DOUBLE)) AS cvec
-      FROM (SELECT vec_id, list_slice(embedding, {lo}, {lo + 31}) AS sv
-            FROM embeddings ORDER BY vec_id LIMIT 4) seeds
-    )"""
-
-    def assign(s: int, name: str, cents: str) -> str:
-        d = floor_round6_sql(l2.format(a="v.sv", b=f"{cents}.cvec"))
-        return f"""{name} AS (
-      SELECT vec_id, cell FROM (
-        SELECT v.vec_id, {cents}.cell,
-               ROW_NUMBER() OVER (PARTITION BY v.vec_id
-                                  ORDER BY {d} ASC, {cents}.cell ASC) AS rn
-        FROM v{s} v, {cents}
-      ) WHERE rn = 1
-    )"""
-
-    def lloyd(s: int, a: str, prev: str, new: str) -> str:
-        return f"""{new}_m AS (
-      SELECT {a}.cell, vec_id, generate_subscripts(v.sv, 1) AS pos, unnest(v.sv) AS x
-      FROM {a} JOIN v{s} v USING (vec_id)
-    ),
-    {new}_c AS (
-      SELECT cell, list(mn ORDER BY pos) AS cvec FROM (
-        SELECT cell, pos, {floor_round6_sql("list_sum(list(CAST(x AS DOUBLE) ORDER BY vec_id)) / COUNT(*)")} AS mn
-        FROM {new}_m GROUP BY cell, pos
-      ) GROUP BY cell
-    ),
-    {new} AS MATERIALIZED (
-      SELECT {prev}.cell, COALESCE({new}_c.cvec, {prev}.cvec) AS cvec
-      FROM {prev} LEFT JOIN {new}_c USING (cell)
-    )"""
-
-    blocks = []
-    for s in (0, 1):
-        blocks.append(sub_cte(s))
-        blocks.append(assign(s, f"a{s}_1", f"c{s}_0"))
-        blocks.append(lloyd(s, f"a{s}_1", f"c{s}_0", f"c{s}_1"))
-        blocks.append(assign(s, f"a{s}_2", f"c{s}_1"))
-        blocks.append(lloyd(s, f"a{s}_2", f"c{s}_1", f"c{s}_2"))
-        blocks.append(assign(s, f"codes{s}", f"c{s}_2"))
-        dq = floor_round6_sql(l2.format(a="q.sv", b="c.cvec"))
-        blocks.append(
-            f"""dist{s} AS (
-      SELECT q.vec_id AS query_id, c.cell, {dq} AS d
-      FROM v{s} q, c{s}_2 c WHERE q.vec_id < 5
-    )"""
-        )
-    body = ",\n    ".join(blocks)
+    steps, :func:`_pq_sql`): the q67 unrolled-quantizer technique per
+    subspace, with L2/argmin in place of cosine/argmax — assignment ties
+    break to the LOWEST cell (array_min struct ordering on the Spark
+    side), per-dimension means floored to 6dp, ADC distance = d0 + d1
+    of the floored per-subspace lookups."""
     return f"""
-    WITH {body},
+    WITH {_pq_sql()},
     scored AS (
       SELECT d0.query_id, k0.vec_id AS neighbor_id, d0.d + d1.d AS adc_dist
       FROM codes0 k0
@@ -8097,12 +8345,7 @@ def _q177_oracle() -> str:
       JOIN dist1 d1 ON d1.cell = k1.cell AND d1.query_id = d0.query_id
       WHERE k0.vec_id <> d0.query_id
     )
-    SELECT * FROM (
-      SELECT query_id, neighbor_id, adc_dist,
-             ROW_NUMBER() OVER (PARTITION BY query_id
-                                ORDER BY adc_dist ASC, neighbor_id ASC) AS rank
-      FROM scored
-    ) WHERE rank <= 10
+    {_topk_sql(measure="adc_dist", order="ASC")}
     """
 
 
@@ -8125,144 +8368,15 @@ def q177(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q178_oracle(tail: str | None = None) -> str:
-    """DuckDB twin of IVFPQ: the q67 IVF blocks (cosine Lloyd, probes
-    with highest-cell tiebreaks) composed with the q177 PQ blocks (L2
-    Lloyd per subspace, lowest-cell tiebreaks, floored ADC lookups) —
-    candidates are the probed cells' inverted lists, ranked by
-    adc = d0 + d1. ``tail`` replaces everything after the ``scored``
-    CTE (and may open with further CTE definitions via a leading
-    comma) — q209 appends exact/approx/hits CTEs for the recall
-    evaluation over the same unrolled pipeline."""
-    cos_c = (
-        "list_sum(list_transform(list_zip({v}.embedding, {c}.cvec),"
-        " z -> CAST(z[1] AS DOUBLE) * z[2]))"
-        " / ({v}.nrm * sqrt(list_sum(list_transform({c}.cvec, x -> x * x))))"
-    )
-    l2 = (
-        "list_sum(list_transform(list_zip({a}, {b}),"
-        " z -> (CAST(z[1] AS DOUBLE) - z[2]) * (CAST(z[1] AS DOUBLE) - z[2])))"
-    )
-
-    def cos_assign(name: str, cents: str, src: str = "v") -> str:
-        scored = floor_round6_sql(cos_c.format(v=src, c=cents))
-        return f"""{name} AS (
-      SELECT vec_id, cell FROM (
-        SELECT {src}.vec_id, {cents}.cell,
-               ROW_NUMBER() OVER (PARTITION BY {src}.vec_id
-                                  ORDER BY {scored} DESC, {cents}.cell DESC) AS rn
-        FROM {src}, {cents}
-      ) WHERE rn = 1
-    )"""
-
-    def cos_lloyd(a: str, prev: str, new: str) -> str:
-        return f"""{new}_m AS (
-      SELECT {a}.cell, vec_id, generate_subscripts(v.embedding, 1) AS pos,
-             unnest(v.embedding) AS x
-      FROM {a} JOIN vtr v USING (vec_id)
-    ),
-    {new}_c AS (
-      SELECT cell, list(mn ORDER BY pos) AS cvec FROM (
-        SELECT cell, pos, {floor_round6_sql("list_sum(list(CAST(x AS DOUBLE) ORDER BY vec_id)) / COUNT(*)")} AS mn
-        FROM {new}_m GROUP BY cell, pos
-      ) GROUP BY cell
-    ),
-    {new} AS MATERIALIZED (
-      SELECT {prev}.cell, COALESCE({new}_c.cvec, {prev}.cvec) AS cvec
-      FROM {prev} LEFT JOIN {new}_c USING (cell)
-    )"""
-
-    def pq_sub(s: int) -> str:
-        lo = s * 32 + 1
-        return f"""v{s} AS (
-      SELECT vec_id, list_slice(embedding, {lo}, {lo + 31}) AS sv FROM embeddings
-    ),
-    p{s}_0 AS (
-      SELECT ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS cell,
-             list_transform(sv, x -> CAST(x AS DOUBLE)) AS cvec
-      FROM (SELECT vec_id, list_slice(embedding, {lo}, {lo + 31}) AS sv
-            FROM embeddings ORDER BY vec_id LIMIT 4) seeds
-    )"""
-
-    def pq_assign(s: int, name: str, cents: str) -> str:
-        d = floor_round6_sql(l2.format(a="v.sv", b=f"{cents}.cvec"))
-        return f"""{name} AS (
-      SELECT vec_id, cell FROM (
-        SELECT v.vec_id, {cents}.cell,
-               ROW_NUMBER() OVER (PARTITION BY v.vec_id
-                                  ORDER BY {d} ASC, {cents}.cell ASC) AS rn
-        FROM v{s} v, {cents}
-      ) WHERE rn = 1
-    )"""
-
-    def pq_lloyd(s: int, a: str, prev: str, new: str) -> str:
-        return f"""{new}_m AS (
-      SELECT {a}.cell, vec_id, generate_subscripts(v.sv, 1) AS pos, unnest(v.sv) AS x
-      FROM {a} JOIN v{s} v USING (vec_id)
-    ),
-    {new}_c AS (
-      SELECT cell, list(mn ORDER BY pos) AS cvec FROM (
-        SELECT cell, pos, {floor_round6_sql("list_sum(list(CAST(x AS DOUBLE) ORDER BY vec_id)) / COUNT(*)")} AS mn
-        FROM {new}_m GROUP BY cell, pos
-      ) GROUP BY cell
-    ),
-    {new} AS MATERIALIZED (
-      SELECT {prev}.cell, COALESCE({new}_c.cvec, {prev}.cvec) AS cvec
-      FROM {prev} LEFT JOIN {new}_c USING (cell)
-    )"""
-
-    from ..operators.similarity import _IVF_TRAIN_PER_CELL
-
-    probe_score = floor_round6_sql(cos_c.format(v="v", c="c2"))
-    blocks = [
-        f"""v AS (
-      SELECT vec_id, embedding,
-             sqrt(list_sum(list_transform(embedding,
-                  x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))) AS nrm
-      FROM embeddings
-    ),
-    vtr AS MATERIALIZED (
-      -- faiss train cap mirror: the IVF coarse quantizer trains on the
-      -- min(N, 256*8) lowest-id rows (similarity._IVF_TRAIN_PER_CELL)
-      SELECT vec_id, embedding, nrm FROM (
-        SELECT v.*, ROW_NUMBER() OVER (ORDER BY vec_id) AS trn FROM v
-      ) WHERE trn <= {_IVF_TRAIN_PER_CELL * 8}
-    ),
-    c0 AS (
-      SELECT ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS cell,
-             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS cvec
-      FROM embeddings ORDER BY vec_id LIMIT 8
-    )""",
-        cos_assign("a1", "c0", "vtr"),
-        cos_lloyd("a1", "c0", "c1"),
-        cos_assign("a2", "c1", "vtr"),
-        cos_lloyd("a2", "c1", "c2"),
-        cos_assign("af", "c2"),
-        f"""probes AS (
-      SELECT vec_id AS query_id, cell FROM (
-        SELECT v.vec_id, c2.cell,
-               ROW_NUMBER() OVER (PARTITION BY v.vec_id
-                                  ORDER BY {probe_score} DESC, c2.cell DESC) AS rn
-        FROM v, c2 WHERE v.vec_id < 5
-      ) WHERE rn <= 3
-    )""",
-    ]
-    for s in (0, 1):
-        dq = floor_round6_sql(l2.format(a="q.sv", b="c.cvec"))
-        blocks += [
-            pq_sub(s),
-            pq_assign(s, f"pa{s}_1", f"p{s}_0"),
-            pq_lloyd(s, f"pa{s}_1", f"p{s}_0", f"p{s}_1"),
-            pq_assign(s, f"pa{s}_2", f"p{s}_1"),
-            pq_lloyd(s, f"pa{s}_2", f"p{s}_1", f"p{s}_2"),
-            pq_assign(s, f"codes{s}", f"p{s}_2"),
-            f"""dist{s} AS (
-      SELECT q.vec_id AS query_id, c.cell, {dq} AS d
-      FROM v{s} q, p{s}_2 c WHERE q.vec_id < 5
-    )""",
-        ]
-    body = ",\n    ".join(blocks)
+    """DuckDB twin of IVFPQ: the q67 IVF blocks (:func:`_ivf_sql`)
+    composed with the q177 PQ blocks (:func:`_pq_sql`) — candidates are
+    the probed cells' inverted lists, ranked by adc = d0 + d1. ``tail``
+    replaces everything after the ``scored`` CTE (and may open with
+    further CTE definitions via a leading comma) — q209 appends the
+    recall tail over the same unrolled pipeline."""
     return f"""
-    WITH {body},
+    WITH {_ivf_sql()},
+    {_pq_sql()},
     scored AS (
       SELECT p.query_id, af.vec_id AS neighbor_id, d0.d + d1.d AS adc_dist
       FROM probes p
@@ -8273,12 +8387,7 @@ def _q178_oracle(tail: str | None = None) -> str:
       JOIN dist1 d1 ON d1.cell = k1.cell AND d1.query_id = p.query_id
       WHERE af.vec_id <> p.query_id
     )
-    {tail if tail is not None else '''SELECT * FROM (
-      SELECT query_id, neighbor_id, adc_dist,
-             ROW_NUMBER() OVER (PARTITION BY query_id
-                                ORDER BY adc_dist ASC, neighbor_id ASC) AS rank
-      FROM scored
-    ) WHERE rank <= 10'''}
+    {tail if tail is not None else _topk_sql(measure="adc_dist", order="ASC")}
     """
 
 
@@ -9412,19 +9521,11 @@ def _bucketed_embeddings_dyn_cte() -> str:
     the first p of _Q190_MAX_PLANES deterministic hyperplanes (one
     splitmix stream, so plane i is identical whatever p is)."""
     planes = similarity._hyperplanes(64, _Q190_MAX_PLANES, 7)
-
-    def dot(plane: list[float]) -> str:
-        lit = "[" + ", ".join(repr(v) for v in plane) + "]::DOUBLE[]"
-        return (
-            "list_sum(list_transform(list_zip(embedding, " + lit + "),"
-            " z -> CAST(z[1] AS DOUBLE) * CAST(z[2] AS DOUBLE)))"
-        )
-
     ladder = " + ".join(
         f"(CASE WHEN d > {1 << j} THEN 1 ELSE 0 END)" for j in range(_Q190_MAX_PLANES)
     )
     bucket = "\n           + ".join(
-        f"(CASE WHEN {i} < p AND {dot(pl)} > 0 THEN {1 << i} ELSE 0 END)"
+        f"(CASE WHEN {i} < p AND {_plane_dot_sql(pl)} > 0 THEN {1 << i} ELSE 0 END)"
         for i, pl in enumerate(planes)
     )
     return f"""
@@ -9435,8 +9536,7 @@ def _bucketed_embeddings_dyn_cte() -> str:
     ),
     b AS (
       SELECT vec_id, embedding,
-             sqrt(list_sum(list_transform(embedding,
-                  x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))) AS nrm,
+             {_VEC_NORM_SQL} AS nrm,
              {bucket} AS bucket
       FROM embeddings, params
     )"""
@@ -9447,10 +9547,7 @@ def _q190_oracle() -> str:
     (p derived from COUNT(*) by the same integer ladder as the Spark
     side, same plane stream, same threshold), recursive closure for
     components, min-id canonical."""
-    cosine = (
-        "list_sum(list_transform(list_zip(a.embedding, c.embedding),"
-        " z -> CAST(z[1] AS DOUBLE) * CAST(z[2] AS DOUBLE))) / (a.nrm * c.nrm)"
-    )
+    cosine = _pair_cos_sql("a", "c")
     return f"""WITH RECURSIVE {_bucketed_embeddings_dyn_cte().split("WITH", 1)[1]},
     matched AS (
       SELECT * FROM (
@@ -10175,45 +10272,20 @@ def _q198_oracle() -> str:
     """DuckDB twin of the recall evaluation: brute-force and LSH top-10
     both recomputed from the shared bucketed CTE (identical hyperplane
     literals, rounded-score ranking with neighbor-id tiebreaks), then
-    intersected per query."""
-    cosine = (
-        "list_sum(list_transform(list_zip(q.embedding, c.embedding),"
-        " z -> CAST(z[1] AS DOUBLE) * CAST(z[2] AS DOUBLE))) / (q.nrm * c.nrm)"
-    )
+    intersected per query by the recall device."""
     return f"""{_bucketed_embeddings_cte()},
-    exact AS (
-      SELECT * FROM (
-        SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-               ROW_NUMBER() OVER (PARTITION BY q.vec_id
-                                  ORDER BY {floor_round6_sql(cosine)} DESC, c.vec_id ASC) AS rank
-        FROM b q, b c WHERE q.vec_id < 5 AND c.vec_id <> q.vec_id
-      ) WHERE rank <= 10
-    ),
-    lsh AS (
-      SELECT * FROM (
-        SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-               ROW_NUMBER() OVER (PARTITION BY q.vec_id
-                                  ORDER BY {floor_round6_sql(cosine)} DESC, c.vec_id ASC) AS rank
-        FROM b q JOIN b c ON q.bucket = c.bucket AND c.vec_id <> q.vec_id
-        WHERE q.vec_id < 5
-      ) WHERE rank <= 10
-    ),
-    hits AS (
-      SELECT query_id, COUNT(*) AS n_hits
-      FROM lsh JOIN exact USING (query_id, neighbor_id)
-      GROUP BY query_id
-    ),
+    {_lsh_scored_sql()},
+    {_exact_top10_sql("b")},
+    {_recall_sql(src="b")},
     cand AS (
       SELECT q.vec_id AS query_id, COUNT(*) - 1 AS n_candidates
       FROM b q JOIN b c ON c.bucket = q.bucket
       WHERE q.vec_id < 5 GROUP BY q.vec_id
     )
-    SELECT cand.query_id,
-           CAST(COALESCE(n_hits, 0) AS INT) AS n_hits,
-           {floor_round6_sql("CAST(COALESCE(n_hits, 0) AS DOUBLE) / 10.0")} AS recall_at_10,
+    SELECT query_id, {_RECALL_COLS_SQL},
            CAST(n_candidates AS BIGINT) AS n_candidates
-    FROM cand LEFT JOIN hits ON hits.query_id = cand.query_id
-    ORDER BY cand.query_id
+    FROM recall JOIN cand USING (query_id)
+    ORDER BY query_id
     """
 
 
@@ -10240,11 +10312,6 @@ def q198(spark: SparkSession, sf_dir: str) -> DataFrame:
     approx = similarity.cosine_topk_lsh(emb, queries_df, k=10, n_planes=4).select(
         "query_id", "neighbor_id"
     )
-    hits = (
-        approx.join(exact, ["query_id", "neighbor_id"])
-        .groupBy("query_id")
-        .agg(F.count("*").alias("n_hits"))
-    )
     planes = similarity._hyperplanes(64, 4, 7)
     tagged = emb.select("vec_id", similarity._bucket_expr("embedding", planes).alias("bucket"))
     sizes = tagged.groupBy("bucket").agg(F.count("*").alias("bs"))
@@ -10254,18 +10321,7 @@ def q198(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(sizes), "bucket")
         .select("query_id", (F.col("bs") - 1).cast("bigint").alias("n_candidates"))
     )
-    return (
-        cand.join(F.broadcast(hits), "query_id", "left")
-        .select(
-            "query_id",
-            F.coalesce("n_hits", F.lit(0)).cast("int").alias("n_hits"),
-            floor_round6(F.coalesce("n_hits", F.lit(0)).cast("double") / 10.0).alias(
-                "recall_at_10"
-            ),
-            "n_candidates",
-        )
-        .orderBy("query_id")
-    )
+    return _recall_at_10(cand, approx, exact, trail=["n_candidates"])
 
 
 @register(
@@ -10302,24 +10358,9 @@ def q199(spark: SparkSession, sf_dir: str) -> DataFrame:
     return similarity.query_ivf_index(emb.where("vec_id < 5"), path, k=10, n_probe=3)
 
 
-def _q200_oracle() -> str:
-    occupancy = f"""SELECT cell,
-           CAST(n AS BIGINT) AS n_vectors,
-           {floor_round6_sql("CAST(n AS DOUBLE) / CAST(SUM(n) OVER () AS DOUBLE)")} AS share,
-           {floor_round6_sql(
-               "CAST(MAX(n) OVER () AS DOUBLE) * CAST(COUNT(*) OVER () AS DOUBLE)"
-               " / CAST(SUM(n) OVER () AS DOUBLE)"
-           )} AS skew_factor,
-           (CAST(MAX(n) OVER () AS DOUBLE) * CAST(COUNT(*) OVER () AS DOUBLE)
-            > 2.0 * CAST(SUM(n) OVER () AS DOUBLE)) AS needs_rebalance
-    FROM (SELECT cell, COUNT(*) AS n FROM af GROUP BY cell)
-    ORDER BY cell"""
-    return _q67_oracle(final_select=occupancy)
-
-
 @register(
     "q200_ivf_occupancy",
-    _q200_oracle(),
+    _q67_oracle(final_select=_occupancy_sql("af")),
     "IVF inverted-list occupancy audit - the retrain trigger that "
     "pairs with q199's frozen-quantizer appends: per-cell vector "
     "counts and shares under the trained quantizer, the max/mean "
@@ -10518,26 +10559,9 @@ def q223(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("new_cell")
 
 
-def _q224_oracle(tombstone_pred: str = "neighbor_id % 7 = 3") -> str:
-    """DuckDB twin of tombstone deletion under a frozen quantizer:
-    q67's unrolled train + inverted lists are built over the FULL
-    corpus (the index as it stood before the deletes), then the
-    terminal top-k excludes tombstoned neighbors BEFORE ranking — a
-    deleted neighbor frees its rank for the next-best candidate,
-    exactly the query_ivf_index anti-join semantics. Queries are not
-    filtered (a deleted id may still ask for neighbors)."""
-    final = f"""SELECT * FROM (
-      SELECT query_id, neighbor_id, score,
-             ROW_NUMBER() OVER (PARTITION BY query_id
-                                ORDER BY score DESC, neighbor_id ASC) AS rank
-      FROM scored WHERE NOT ({tombstone_pred})
-    ) WHERE rank <= 10"""
-    return _q67_oracle(final_select=final)
-
-
 @register(
     "q224_ivf_delete",
-    _q224_oracle(),
+    _q67_oracle(final_select=_tombstoned_topk_sql()),
     "IVF tombstone deletion - the lifecycle step after q223's repair "
     "(build q67 -> persist q156 -> append q199 -> audit q200 -> "
     "split q223 -> DELETE here): vectors matching the "
@@ -11458,48 +11482,9 @@ def q208(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _q209_oracle() -> str:
-    """IVFPQ recall@10 over the SAME unrolled q178 pipeline: the scored
-    candidate set is re-ranked into the approx top-10, intersected with
-    the exact brute-force top-10 (identical rounded-score + neighbor-id
-    tiebreak total order on both engines), one row per query."""
-    cos = (
-        "list_sum(list_transform(list_zip(q.embedding, c.embedding),"
-        " z -> CAST(z[1] AS DOUBLE) * CAST(z[2] AS DOUBLE))) / (q.nrm * c.nrm)"
-    )
-    tail = f""", approx AS (
-      SELECT query_id, neighbor_id FROM (
-        SELECT query_id, neighbor_id,
-               ROW_NUMBER() OVER (PARTITION BY query_id
-                                  ORDER BY adc_dist ASC, neighbor_id ASC) AS rank
-        FROM scored
-      ) WHERE rank <= 10
-    ),
-    exact AS (
-      SELECT query_id, neighbor_id FROM (
-        SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-               ROW_NUMBER() OVER (PARTITION BY q.vec_id
-                                  ORDER BY {floor_round6_sql(cos)} DESC, c.vec_id ASC) AS rank
-        FROM v q, v c WHERE q.vec_id < 5 AND c.vec_id <> q.vec_id
-      ) WHERE rank <= 10
-    ),
-    hits AS (
-      SELECT query_id, COUNT(*) AS n_hits
-      FROM approx JOIN exact USING (query_id, neighbor_id)
-      GROUP BY query_id
-    )
-    SELECT qs.vec_id AS query_id,
-           CAST(COALESCE(h.n_hits, 0) AS INT) AS n_hits,
-           {floor_round6_sql("CAST(COALESCE(h.n_hits, 0) AS DOUBLE) / 10.0")} AS recall_at_10
-    FROM (SELECT vec_id FROM v WHERE vec_id < 5) qs
-    LEFT JOIN hits h ON h.query_id = qs.vec_id
-    ORDER BY qs.vec_id"""
-    return _q178_oracle(tail=tail)
-
-
 @register(
     "q209_ivfpq_recall",
-    _q209_oracle(),
+    _q178_oracle(tail=_recall_tail_sql("adc_dist", "ASC")),
     "IVFPQ recall@10 as a first-class query - the q198 accept-gate "
     "device applied to the compressed-code stack: the IVFPQ top-10 "
     "(q178's exact pipeline, probes + ADC ranking) intersected per "
@@ -11515,23 +11500,7 @@ def q209(spark: SparkSession, sf_dir: str) -> DataFrame:
     qs = emb.where("vec_id < 5")
     exact = similarity.cosine_topk(emb, qs, k=10).select("query_id", "neighbor_id")
     approx = similarity.ivfpq_topk(emb, qs, k=10).select("query_id", "neighbor_id")
-    hits = (
-        approx.join(exact, ["query_id", "neighbor_id"])
-        .groupBy("query_id")
-        .agg(F.count("*").alias("n_hits"))
-    )
-    return (
-        qs.select(F.col("vec_id").alias("query_id"))
-        .join(F.broadcast(hits), "query_id", "left")
-        .select(
-            "query_id",
-            F.coalesce("n_hits", F.lit(0)).cast("int").alias("n_hits"),
-            floor_round6(
-                F.coalesce("n_hits", F.lit(0)).cast("double") / 10.0
-            ).alias("recall_at_10"),
-        )
-        .orderBy("query_id")
-    )
+    return _recall_at_10(qs.select(F.col("vec_id").alias("query_id")), approx, exact)
 
 
 # =====================================================================
@@ -11641,219 +11610,24 @@ def _q212_oracle(
     k=10, n_probe=3, n_super_probe=2, iters=2, 1/16 sampled train,
     derived capacities; ``sprobe_sql``/``cprobe_sql`` override the two
     probe widths with arbitrary scalar SQL — q215 derives them from
-    the trained capacities): the ENTIRE two-level quantizer is unrolled —
-    the level-2 train is the q67/q208/q211 device (sampled seeds, two
-    order-pinned Lloyd steps, 6dp floors, derived nc), then the level-1
-    train runs the SAME Lloyd over the level-2 centroid table itself
-    (seeds = lowest cell ids, means folded in cell order, derived
-    ns = ceil-pow2 sqrt of the ACTUAL centroid count), cells map to
-    supercells by argmax (ties -> highest super), every vector routes
-    super -> best member cell, and queries probe 2 supers -> 3 member
-    cells. Every tiebreak matches the Spark structs: assignment
-    (score DESC, super/cell DESC), probes (score DESC, super/cell
-    DESC), neighbors (score DESC, neighbor ASC).
+    the trained capacities): the ENTIRE two-level quantizer is unrolled
+    (:func:`_ivf2_sql`) and queries probe 2 supers -> 3 member cells
+    (:func:`_ivf2_probe_sql`). Every tiebreak matches the Spark structs:
+    assignment (score DESC, super/cell DESC), probes (score DESC,
+    super/cell DESC), neighbors (score DESC, neighbor ASC).
 
-    ``corpus_from`` swaps the ``v`` CTE's source (the corpus the
-    lists/probes/scores run over) under the same contract as
-    :func:`_q67_oracle`: same (vec_id, embedding) shape and id set,
-    every ``train_pred`` row's vector unchanged — the seed CTE and
-    capacity counts still read the raw table (the frozen quantizer
-    trained before the update)."""
-    from ..operators.similarity import _IVF_MAX_CELLS_EXP, _IVF_TRAIN_PER_CELL
-
-    # ``train_pred`` restricts SEEDS and Lloyd folds; the inverted
-    # lists still cover every vector (q221 passes the incremental
-    # existing-slice sample; the default is q212's 1/16)
-    cos_vc = (
-        "list_sum(list_transform(list_zip({v}.embedding, {c}.cvec),"
-        " z -> CAST(z[1] AS DOUBLE) * z[2]))"
-        " / ({v}.nrm * sqrt(list_sum(list_transform({c}.cvec, x -> x * x))))"
-    )
-    # centroid-vs-centroid (both sides already DOUBLE lists; Spark's
-    # per-element double casts are no-ops on doubles, values identical)
-    cos_cc = (
-        "list_sum(list_transform(list_zip({a}.cvec, {b}.cvec), z -> z[1] * z[2]))"
-        " / ({a}.nrm * sqrt(list_sum(list_transform({b}.cvec, x -> x * x))))"
-    )
-
-    def ladder_expr(src: str) -> str:
-        steps = " + ".join(f"(CASE WHEN n > {1 << j} THEN 1 ELSE 0 END)" for j in range(44))
-        return (
-            f"SELECT LEAST({1 << _IVF_MAX_CELLS_EXP}, "
-            f"GREATEST(4, (CAST(1 AS BIGINT) << ((({steps}) + 1) // 2)))) AS x "
-            f"FROM (SELECT COUNT(*) AS n FROM {src})"
-        )
-
-    def assign_v(name: str, cents: str, src: str = "v") -> str:
-        scored = floor_round6_sql(cos_vc.format(v=src, c=cents))
-        return f"""{name} AS MATERIALIZED (
-      SELECT vec_id, cell FROM (
-        SELECT {src}.vec_id, {cents}.cell,
-               ROW_NUMBER() OVER (PARTITION BY {src}.vec_id
-                                  ORDER BY {scored} DESC, {cents}.cell DESC) AS rn
-        FROM {src}, {cents}
-      ) WHERE rn = 1
-    )"""
-
-    def lloyd_v(a: str, prev: str, new: str) -> str:
-        return f"""{new}_m AS (
-      SELECT {a}.cell, vec_id, generate_subscripts(vt.embedding, 1) AS pos,
-             unnest(vt.embedding) AS x
-      FROM {a} JOIN vt USING (vec_id)
-    ),
-    {new}_c AS (
-      SELECT cell, list(m ORDER BY pos) AS cvec FROM (
-        SELECT cell, pos, {floor_round6_sql("list_sum(list(CAST(x AS DOUBLE) ORDER BY vec_id)) / COUNT(*)")} AS m
-        FROM {new}_m GROUP BY cell, pos
-      ) GROUP BY cell
-    ),
-    {new} AS MATERIALIZED (
-      SELECT {prev}.cell, COALESCE({new}_c.cvec, {prev}.cvec) AS cvec
-      FROM {prev} LEFT JOIN {new}_c USING (cell)
-    )"""
-
-    # level-1 Lloyd over the level-2 centroid table c2n (id = cell)
-    def assign_c(name: str, supers: str) -> str:
-        scored = floor_round6_sql(cos_cc.format(a="c2n", b=supers))
-        return f"""{name} AS MATERIALIZED (
-      SELECT cell, super FROM (
-        SELECT c2n.cell, {supers}.super,
-               ROW_NUMBER() OVER (PARTITION BY c2n.cell
-                                  ORDER BY {scored} DESC, {supers}.super DESC) AS rn
-        FROM c2n, {supers}
-      ) WHERE rn = 1
-    )"""
-
-    def lloyd_c(a: str, prev: str, new: str) -> str:
-        return f"""{new}_m AS (
-      SELECT {a}.super, c2n.cell, generate_subscripts(c2n.cvec, 1) AS pos,
-             unnest(c2n.cvec) AS x
-      FROM {a} JOIN c2n USING (cell)
-    ),
-    {new}_c AS (
-      SELECT super, list(m ORDER BY pos) AS cvec FROM (
-        SELECT super, pos, {floor_round6_sql("list_sum(list(CAST(x AS DOUBLE) ORDER BY cell)) / COUNT(*)")} AS m
-        FROM {new}_m GROUP BY super, pos
-      ) GROUP BY super
-    ),
-    {new} AS MATERIALIZED (
-      SELECT {prev}.super, COALESCE({new}_c.cvec, {prev}.cvec) AS cvec
-      FROM {prev} LEFT JOIN {new}_c USING (super)
-    )"""
-
-    probe_super = floor_round6_sql(cos_vc.format(v="v", c="s2e"))
-    probe_cell = floor_round6_sql(cos_vc.format(v="v", c="c2x"))
-    vsup_score = floor_round6_sql(cos_vc.format(v="v", c="s2e"))
-    member_score = floor_round6_sql(cos_vc.format(v="v", c="c2x"))
-    pair_cos = (
-        "list_sum(list_transform(list_zip(q.embedding, v.embedding),"
-        " z -> CAST(z[1] AS DOUBLE) * CAST(z[2] AS DOUBLE))) / (q.nrm * v.nrm)"
-    )
+    ``train_pred`` restricts SEEDS and Lloyd folds; the inverted lists
+    still cover every vector (q221 passes the incremental existing-slice
+    sample; the default is q212's 1/16). ``corpus_from`` swaps the ``v``
+    CTE's source (the corpus the lists/probes/scores run over) under the
+    same contract as :func:`_q67_oracle`: same (vec_id, embedding) shape
+    and id set, every ``train_pred`` row's vector unchanged — the seed
+    CTE and capacity counts still read the raw table (the frozen
+    quantizer trained before the update)."""
     return f"""
-    WITH v AS MATERIALIZED (
-      SELECT vec_id, embedding,
-             sqrt(list_sum(list_transform(embedding,
-                  x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))) AS nrm
-      FROM {corpus_from}
-    ),
-    params AS ({ladder_expr("embeddings")}),
-    vt AS MATERIALIZED (
-      -- faiss train cap mirror (similarity._IVF_TRAIN_PER_CELL): the
-      -- level-2 train is the min(|train|, 256*nc) LOWEST-ID rows
-      SELECT vec_id, embedding, nrm FROM (
-        SELECT v.*, ROW_NUMBER() OVER (ORDER BY vec_id) AS trn
-        FROM v WHERE {train_pred}
-      ) WHERE trn <= {_IVF_TRAIN_PER_CELL} * (SELECT x FROM params)
-    ),
-    c0 AS (
-      SELECT cell, cvec FROM (
-        SELECT ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS cell,
-               list_transform(embedding, x -> CAST(x AS DOUBLE)) AS cvec
-        FROM embeddings WHERE {train_pred}
-      ) WHERE cell < (SELECT x FROM params)
-    ),
-    {assign_v("a1", "c0", "vt")},
-    {lloyd_v("a1", "c0", "c1")},
-    {assign_v("a2", "c1", "vt")},
-    {lloyd_v("a2", "c1", "c2")},
-    c2n AS MATERIALIZED (
-      SELECT cell, cvec,
-             sqrt(list_sum(list_transform(cvec, x -> x * x))) AS nrm
-      FROM c2
-    ),
-    sparams AS ({ladder_expr("c2")}),
-    s0 AS (
-      SELECT super, cvec FROM (
-        SELECT ROW_NUMBER() OVER (ORDER BY cell) - 1 AS super, cvec
-        FROM c2
-      ) WHERE super < (SELECT x FROM sparams)
-    ),
-    {assign_c("sa1", "s0")},
-    {lloyd_c("sa1", "s0", "s1")},
-    {assign_c("sa2", "s1")},
-    {lloyd_c("sa2", "s1", "s2")},
-    {assign_c("cellsup", "s2")},
-    s2x AS MATERIALIZED (SELECT super AS cell, cvec FROM s2),
-    -- routable supers only (ivf2_train mirror): Lloyd can leave a
-    -- level-1 centroid with zero member cells; vectors and probes must
-    -- never route to it, or the routed rows vanish from the index
-    s2e AS MATERIALIZED (
-      SELECT s2x.* FROM s2x
-      WHERE s2x.cell IN (SELECT DISTINCT super FROM cellsup)
-    ),
-    c2x AS MATERIALIZED (SELECT cell, cvec FROM c2),
-    vsup AS MATERIALIZED (
-      SELECT vec_id, cell AS super FROM (
-        SELECT v.vec_id, s2e.cell,
-               ROW_NUMBER() OVER (PARTITION BY v.vec_id
-                                  ORDER BY {vsup_score} DESC, s2e.cell DESC) AS rn
-        FROM v, s2e
-      ) WHERE rn = 1
-    ),
-    af2 AS MATERIALIZED (
-      SELECT vec_id, cell FROM (
-        SELECT v.vec_id, c2x.cell,
-               ROW_NUMBER() OVER (PARTITION BY v.vec_id
-                                  ORDER BY {member_score} DESC, c2x.cell DESC) AS rn
-        FROM vsup
-        JOIN cellsup ON cellsup.super = vsup.super
-        JOIN c2x ON c2x.cell = cellsup.cell
-        JOIN v ON v.vec_id = vsup.vec_id
-      ) WHERE rn = 1
-    ),
-    sprobes AS (
-      SELECT vec_id AS query_id, cell AS super FROM (
-        SELECT v.vec_id, s2e.cell,
-               ROW_NUMBER() OVER (PARTITION BY v.vec_id
-                                  ORDER BY {probe_super} DESC, s2e.cell DESC) AS rn
-        FROM v, s2e WHERE v.vec_id < 5
-      ) WHERE rn <= {sprobe_sql}
-    ),
-    cprobes AS (
-      SELECT query_id, cell FROM (
-        SELECT sp.query_id, c2x.cell,
-               ROW_NUMBER() OVER (PARTITION BY sp.query_id
-                                  ORDER BY {probe_cell} DESC, c2x.cell DESC) AS rn
-        FROM sprobes sp
-        JOIN cellsup ON cellsup.super = sp.super
-        JOIN c2x ON c2x.cell = cellsup.cell
-        JOIN v ON v.vec_id = sp.query_id
-      ) WHERE rn <= {cprobe_sql}
-    ),
-    scored AS (
-      SELECT p.query_id, v.vec_id AS neighbor_id,
-             {floor_round6_sql(pair_cos)} AS score
-      FROM cprobes p
-      JOIN af2 ON af2.cell = p.cell
-      JOIN v ON v.vec_id = af2.vec_id AND v.vec_id <> p.query_id
-      JOIN v q ON q.vec_id = p.query_id
-    )
-    {final_select if final_select is not None else '''SELECT * FROM (
-      SELECT query_id, neighbor_id, score,
-             ROW_NUMBER() OVER (PARTITION BY query_id
-                                ORDER BY score DESC, neighbor_id ASC) AS rank
-      FROM scored
-    ) WHERE rank <= 10'''}
+    WITH {_ivf2_sql(train_pred, corpus_from)},
+    {_ivf2_probe_sql("", sprobe_sql, cprobe_sql)}
+    {final_select if final_select is not None else _topk_sql()}
     """
 
 
@@ -11888,47 +11662,9 @@ def q212(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _q213_oracle() -> str:
-    """Recall@10 of the hierarchical stack vs the exact brute-force
-    top-10 — the q209 accept-gate tail grafted onto the unrolled q212
-    pipeline (approx ranks by cosine DESC instead of ADC ASC)."""
-    cos = (
-        "list_sum(list_transform(list_zip(q.embedding, c.embedding),"
-        " z -> CAST(z[1] AS DOUBLE) * CAST(z[2] AS DOUBLE))) / (q.nrm * c.nrm)"
-    )
-    tail = f""", approx AS (
-      SELECT query_id, neighbor_id FROM (
-        SELECT query_id, neighbor_id,
-               ROW_NUMBER() OVER (PARTITION BY query_id
-                                  ORDER BY score DESC, neighbor_id ASC) AS rank
-        FROM scored
-      ) WHERE rank <= 10
-    ),
-    exact AS (
-      SELECT query_id, neighbor_id FROM (
-        SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-               ROW_NUMBER() OVER (PARTITION BY q.vec_id
-                                  ORDER BY {floor_round6_sql(cos)} DESC, c.vec_id ASC) AS rank
-        FROM v q, v c WHERE q.vec_id < 5 AND c.vec_id <> q.vec_id
-      ) WHERE rank <= 10
-    ),
-    hits AS (
-      SELECT query_id, COUNT(*) AS n_hits
-      FROM approx JOIN exact USING (query_id, neighbor_id)
-      GROUP BY query_id
-    )
-    SELECT qs.vec_id AS query_id,
-           CAST(COALESCE(h.n_hits, 0) AS INT) AS n_hits,
-           {floor_round6_sql("CAST(COALESCE(h.n_hits, 0) AS DOUBLE) / 10.0")} AS recall_at_10
-    FROM (SELECT vec_id FROM v WHERE vec_id < 5) qs
-    LEFT JOIN hits h ON h.query_id = qs.vec_id
-    ORDER BY qs.vec_id"""
-    return _q212_oracle(final_select=tail)
-
-
 @register(
     "q213_ivf2_recall",
-    _q213_oracle(),
+    _q212_oracle(final_select=_recall_tail_sql()),
     "Hierarchical-IVF recall@10 as a first-class oracle-checked query "
     "- the q198/q209 accept-gate device applied to q212's two-level "
     "stack: its top-10 intersected per query with the brute-force "
@@ -11946,23 +11682,7 @@ def q213(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb, qs, k=10, n_cells=nc, n_probe=3, n_super_probe=2,
         train_where="vec_id % 16 = 0",
     ).select("query_id", "neighbor_id")
-    hits = (
-        approx.join(exact, ["query_id", "neighbor_id"])
-        .groupBy("query_id")
-        .agg(F.count("*").alias("n_hits"))
-    )
-    return (
-        qs.select(F.col("vec_id").alias("query_id"))
-        .join(F.broadcast(hits), "query_id", "left")
-        .select(
-            "query_id",
-            F.coalesce("n_hits", F.lit(0)).cast("int").alias("n_hits"),
-            floor_round6(
-                F.coalesce("n_hits", F.lit(0)).cast("double") / 10.0
-            ).alias("recall_at_10"),
-        )
-        .orderBy("query_id")
-    )
+    return _recall_at_10(qs.select(F.col("vec_id").alias("query_id")), approx, exact)
 
 
 # (n_super_probe, n_probe) grid for q214 — shared verbatim by the
@@ -11986,80 +11706,21 @@ def _q214_oracle() -> str:
     """Recall-vs-probe-width curve of the hierarchical stack — the
     q213 accept-gate generalized to the probe grid a deployment tunes
     against: the unrolled q212 two-level train + corpus routing run
-    ONCE, then per-combo probe/score/top-10/recall stages, aggregated
-    to one row per (n_super_probe, n_probe)."""
-    cos = (
-        "list_sum(list_transform(list_zip(q.embedding, c.embedding),"
-        " z -> CAST(z[1] AS DOUBLE) * CAST(z[2] AS DOUBLE))) / (q.nrm * c.nrm)"
+    ONCE, then per-combo probe/score/recall stages, aggregated to one
+    row per (n_super_probe, n_probe)."""
+    combos = "".join(
+        f""",
+    {_ivf2_probe_sql(str(i), str(sp), str(np))},
+    {_recall_sql(str(i))}"""
+        for i, (sp, np) in enumerate(_Q214_COMBOS)
     )
-    cos_vc = (
-        "list_sum(list_transform(list_zip({v}.embedding, {c}.cvec),"
-        " z -> CAST(z[1] AS DOUBLE) * z[2]))"
-        " / ({v}.nrm * sqrt(list_sum(list_transform({c}.cvec, x -> x * x))))"
+    rows = " UNION ALL ".join(
+        f"SELECT {sp} AS n_super_probe, {np} AS n_probe, n_hits FROM recall{i}"
+        for i, (sp, np) in enumerate(_Q214_COMBOS)
     )
-    probe_super = floor_round6_sql(cos_vc.format(v="v", c="s2e"))
-    probe_cell = floor_round6_sql(cos_vc.format(v="v", c="c2x"))
-    pair_cos = (
-        "list_sum(list_transform(list_zip(q.embedding, v.embedding),"
-        " z -> CAST(z[1] AS DOUBLE) * CAST(z[2] AS DOUBLE))) / (q.nrm * v.nrm)"
-    )
-    combo_ctes, combo_rows = [], []
-    for i, (sp, np) in enumerate(_Q214_COMBOS):
-        combo_ctes.append(f""", sp{i} AS (
-      SELECT vec_id AS query_id, cell AS super FROM (
-        SELECT v.vec_id, s2e.cell,
-               ROW_NUMBER() OVER (PARTITION BY v.vec_id
-                                  ORDER BY {probe_super} DESC, s2e.cell DESC) AS rn
-        FROM v, s2e WHERE v.vec_id < 5
-      ) WHERE rn <= {sp}
-    ),
-    cp{i} AS (
-      SELECT query_id, cell FROM (
-        SELECT sp.query_id, c2x.cell,
-               ROW_NUMBER() OVER (PARTITION BY sp.query_id
-                                  ORDER BY {probe_cell} DESC, c2x.cell DESC) AS rn
-        FROM sp{i} sp
-        JOIN cellsup ON cellsup.super = sp.super
-        JOIN c2x ON c2x.cell = cellsup.cell
-        JOIN v ON v.vec_id = sp.query_id
-      ) WHERE rn <= {np}
-    ),
-    sc{i} AS (
-      SELECT p.query_id, v.vec_id AS neighbor_id,
-             {floor_round6_sql(pair_cos)} AS score
-      FROM cp{i} p
-      JOIN af2 ON af2.cell = p.cell
-      JOIN v ON v.vec_id = af2.vec_id AND v.vec_id <> p.query_id
-      JOIN v q ON q.vec_id = p.query_id
-    ),
-    ap{i} AS (
-      SELECT query_id, neighbor_id FROM (
-        SELECT query_id, neighbor_id,
-               ROW_NUMBER() OVER (PARTITION BY query_id
-                                  ORDER BY score DESC, neighbor_id ASC) AS rank
-        FROM sc{i}
-      ) WHERE rank <= 10
-    ),
-    h{i} AS (
-      SELECT query_id, COUNT(*) AS n_hits
-      FROM ap{i} JOIN exact USING (query_id, neighbor_id)
-      GROUP BY query_id
-    ),
-    r{i} AS (
-      SELECT {sp} AS n_super_probe, {np} AS n_probe,
-             COALESCE(h.n_hits, 0) AS n_hits
-      FROM (SELECT vec_id FROM v WHERE vec_id < 5) qs
-      LEFT JOIN h{i} h ON h.query_id = qs.vec_id
-    )""")
-        combo_rows.append(f"SELECT * FROM r{i}")
-    tail = f""", exact AS MATERIALIZED (
-      SELECT query_id, neighbor_id FROM (
-        SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-               ROW_NUMBER() OVER (PARTITION BY q.vec_id
-                                  ORDER BY {floor_round6_sql(cos)} DESC, c.vec_id ASC) AS rank
-        FROM v q, v c WHERE q.vec_id < 5 AND c.vec_id <> q.vec_id
-      ) WHERE rank <= 10
-    ){''.join(combo_ctes)}
+    return f"""
+    WITH {_ivf2_sql()},
+    {_exact_top10_sql()}{combos}
     SELECT n_super_probe, n_probe,
            CAST(COUNT(*) AS BIGINT) AS n_queries,
            {floor_round6_sql(
@@ -12067,10 +11728,10 @@ def _q214_oracle() -> str:
                " / (10.0 * CAST(COUNT(*) AS DOUBLE))"
            )} AS mean_recall,
            {floor_round6_sql("CAST(MIN(n_hits) AS DOUBLE) / 10.0")} AS min_recall
-    FROM ({' UNION ALL '.join(combo_rows)})
+    FROM ({rows})
     GROUP BY n_super_probe, n_probe
-    ORDER BY n_super_probe, n_probe"""
-    return _q212_oracle(final_select=tail)
+    ORDER BY n_super_probe, n_probe
+    """
 
 
 @register(
@@ -12110,43 +11771,11 @@ def _q215_oracle() -> str:
     level-2 centroid count — the same scalar-subquery device q190 uses
     for its plane count, so both engines derive identical widths from
     identical cardinalities."""
-    cos = (
-        "list_sum(list_transform(list_zip(q.embedding, c.embedding),"
-        " z -> CAST(z[1] AS DOUBLE) * CAST(z[2] AS DOUBLE))) / (q.nrm * c.nrm)"
-    )
-    tail = f""", exact AS MATERIALIZED (
-      SELECT query_id, neighbor_id FROM (
-        SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-               ROW_NUMBER() OVER (PARTITION BY q.vec_id
-                                  ORDER BY {floor_round6_sql(cos)} DESC, c.vec_id ASC) AS rank
-        FROM v q, v c WHERE q.vec_id < 5 AND c.vec_id <> q.vec_id
-      ) WHERE rank <= 10
-    ),
-    approx AS (
-      SELECT query_id, neighbor_id FROM (
-        SELECT query_id, neighbor_id,
-               ROW_NUMBER() OVER (PARTITION BY query_id
-                                  ORDER BY score DESC, neighbor_id ASC) AS rank
-        FROM scored
-      ) WHERE rank <= 10
-    ),
-    hits AS (
-      SELECT query_id, COUNT(*) AS n_hits
-      FROM approx JOIN exact USING (query_id, neighbor_id)
-      GROUP BY query_id
-    )
-    SELECT qs.vec_id AS query_id,
-           CAST((SELECT (x + 1) // 2 FROM sparams) AS INT) AS n_super_probe,
-           CAST((SELECT (COUNT(*) + 1) // 2 FROM c2) AS INT) AS n_probe,
-           CAST(COALESCE(h.n_hits, 0) AS INT) AS n_hits,
-           {floor_round6_sql("CAST(COALESCE(h.n_hits, 0) AS DOUBLE) / 10.0")} AS recall_at_10
-    FROM (SELECT vec_id FROM v WHERE vec_id < 5) qs
-    LEFT JOIN hits h ON h.query_id = qs.vec_id
-    ORDER BY qs.vec_id"""
+    sprobe = "(SELECT (nc + 1) // 2 FROM sparams)"
+    cprobe = "(SELECT (COUNT(*) + 1) // 2 FROM c2)"
+    cols = f"CAST({sprobe} AS INT) AS n_super_probe, CAST({cprobe} AS INT) AS n_probe, "
     return _q212_oracle(
-        final_select=tail,
-        sprobe_sql="(SELECT (x + 1) // 2 FROM sparams)",
-        cprobe_sql="(SELECT (COUNT(*) + 1) // 2 FROM c2)",
+        final_select=_recall_tail_sql(cols=cols), sprobe_sql=sprobe, cprobe_sql=cprobe
     )
 
 
@@ -12187,24 +11816,11 @@ def q215(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb, qs, k=10, n_cells=nc, n_probe=np_, n_super_probe=sp,
         train_where="vec_id % 16 = 0",
     ).select("query_id", "neighbor_id")
-    hits = (
-        approx.join(exact, ["query_id", "neighbor_id"])
-        .groupBy("query_id")
-        .agg(F.count("*").alias("n_hits"))
-    )
-    return (
-        qs.select(F.col("vec_id").alias("query_id"))
-        .join(F.broadcast(hits), "query_id", "left")
-        .select(
-            "query_id",
-            F.lit(sp).cast("int").alias("n_super_probe"),
-            F.lit(np_).cast("int").alias("n_probe"),
-            F.coalesce("n_hits", F.lit(0)).cast("int").alias("n_hits"),
-            floor_round6(
-                F.coalesce("n_hits", F.lit(0)).cast("double") / 10.0
-            ).alias("recall_at_10"),
-        )
-        .orderBy("query_id")
+    return _recall_at_10(
+        qs.select(F.col("vec_id").alias("query_id")),
+        approx,
+        exact,
+        lead=[F.lit(sp).cast("int").alias("n_super_probe"), F.lit(np_).cast("int").alias("n_probe")],
     )
 
 
@@ -12482,25 +12098,9 @@ def q221(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _q226_oracle(tombstone_pred: str = "neighbor_id % 7 = 3") -> str:
-    """DuckDB twin of tombstone deletion on the PERSISTED HIERARCHICAL
-    index: q212's fully-unrolled two-level pipeline (both Lloyd
-    levels, cell→super map, two probe stages) with q224's terminal
-    device — tombstoned neighbors excluded from ``scored`` BEFORE
-    ranking, so a deleted neighbor frees its rank. Queries are not
-    filtered (a deleted id may still ask for neighbors)."""
-    final = f"""SELECT * FROM (
-      SELECT query_id, neighbor_id, score,
-             ROW_NUMBER() OVER (PARTITION BY query_id
-                                ORDER BY score DESC, neighbor_id ASC) AS rank
-      FROM scored WHERE NOT ({tombstone_pred})
-    ) WHERE rank <= 10"""
-    return _q212_oracle(final_select=final)
-
-
 @register(
     "q226_ivf2_delete",
-    _q226_oracle(),
+    _q212_oracle(final_select=_tombstoned_topk_sql()),
     "Tombstone deletion on the persisted HIERARCHICAL index - q224's "
     "lifecycle step lifted to the two-level layout, completing the "
     "flat/hierarchical x build/append/delete/compact matrix: the "
@@ -12538,29 +12138,9 @@ def q226(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _q227_oracle() -> str:
-    """DuckDB twin of the hierarchical occupancy audit: q212's
-    fully-unrolled two-level routing feeds ``af2`` (the member-cell
-    assignments of every vector), and the terminal SELECT is q200's
-    occupancy aggregate verbatim — per-cell counts/shares, the
-    max/mean skew factor, and the needs_rebalance flag."""
-    occupancy = f"""SELECT cell,
-           CAST(n AS BIGINT) AS n_vectors,
-           {floor_round6_sql("CAST(n AS DOUBLE) / CAST(SUM(n) OVER () AS DOUBLE)")} AS share,
-           {floor_round6_sql(
-               "CAST(MAX(n) OVER () AS DOUBLE) * CAST(COUNT(*) OVER () AS DOUBLE)"
-               " / CAST(SUM(n) OVER () AS DOUBLE)"
-           )} AS skew_factor,
-           (CAST(MAX(n) OVER () AS DOUBLE) * CAST(COUNT(*) OVER () AS DOUBLE)
-            > 2.0 * CAST(SUM(n) OVER () AS DOUBLE)) AS needs_rebalance
-    FROM (SELECT cell, COUNT(*) AS n FROM af2 GROUP BY cell)
-    ORDER BY cell"""
-    return _q212_oracle(final_select=occupancy)
-
-
 @register(
     "q227_ivf2_occupancy",
-    _q227_oracle(),
+    _q212_oracle(final_select=_occupancy_sql("af2")),
     "Hierarchical-IVF occupancy audit - q200's retrain/split "
     "trigger on the two-level layout, the WHEN for q223's hot-cell "
     "split: per-member-cell vector counts and shares under the "

@@ -7,7 +7,6 @@ import pyspark.sql.functions as F
 from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spark.operators.bpe import (
     _chars_expr,
     _merge_pair_expr,
-    bpe_train,
     bpe_train_batched,
 )
 from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spark.sources.tables import (
@@ -65,14 +64,14 @@ def _word_freqs(spark):
 
 def test_bpe_train_matches_reference(spark):
     docs = load_table(spark, SF_DIR, "documents")
-    got = bpe_train(docs, n_merges=8, min_pair_count=2)
+    got = bpe_train_batched(docs, n_merges=8, min_pair_count=2, batch=1)
     want, _ = _reference_bpe(_word_freqs(spark), n_merges=8, min_pair_count=2)
     assert got == want
 
 
 def _bpe_encode(col, merges):
     """Tokenize a word column with learned merges, applying each rule
-    in rank order: the inference side of ``bpe_train``."""
+    in rank order: the inference side of ``bpe_train_batched``."""
     toks = _chars_expr(col)
     for _, left, right, _ in merges:
         toks = _merge_pair_expr(toks, left, right)
@@ -81,7 +80,7 @@ def _bpe_encode(col, merges):
 
 def test_bpe_encode_matches_reference_vocab(spark):
     docs = load_table(spark, SF_DIR, "documents")
-    merges = bpe_train(docs, n_merges=6, min_pair_count=2)
+    merges = bpe_train_batched(docs, n_merges=6, min_pair_count=2, batch=1)
     _, ref_vocab = _reference_bpe(_word_freqs(spark), n_merges=6, min_pair_count=2)
 
     words = (
@@ -152,8 +151,10 @@ def test_bpe_train_batched_matches_reference(spark):
 
 
 def test_bpe_train_batched_batch1_equals_sequential(spark):
-    """batch=1 degenerates to classic sequential BPE exactly."""
+    """batch=1 degenerates to classic sequential BPE exactly: the
+    sequential reference and the batched reference agree with it."""
     docs = load_table(spark, SF_DIR, "documents")
-    assert bpe_train_batched(docs, n_merges=5, min_pair_count=2, batch=1) == bpe_train(
-        docs, n_merges=5, min_pair_count=2
-    )
+    freqs = _word_freqs(spark)
+    got = bpe_train_batched(docs, n_merges=5, min_pair_count=2, batch=1)
+    assert got == _reference_bpe(freqs, n_merges=5, min_pair_count=2)[0]
+    assert got == _reference_bpe_batched(freqs, n_merges=5, min_pair_count=2, batch=1)

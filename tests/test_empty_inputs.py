@@ -3,7 +3,6 @@ failing) result on an empty frame with the right schema — the S10
 'empty DataFrame from schema' behavior incremental pipelines hit on
 quiet days."""
 
-import pyspark.sql.functions as F
 from pyspark.sql.types import (
     DateType,
     LongType,

@@ -1,8 +1,6 @@
 """Multimodal plumbing: binary payload adapter, Arrow-batched feature
 extraction, poison-payload tolerance (stubbed decoder)."""
 
-import pyspark.sql.functions as F
-
 from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spark.operators.multimodal import (
     documents_as_media,
     extract_features,

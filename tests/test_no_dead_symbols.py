@@ -10,6 +10,9 @@ code uses it (an ``import … as`` alias counts, since it renames). The
 body of a reached symbol reaches every name it uses, so a helper called
 only by dead code is dead too. Names match across modules; strings,
 comments and tests are not references.
+
+The test files get one check of their own: every name a test module
+imports is used in that module.
 """
 
 from __future__ import annotations
@@ -17,7 +20,8 @@ from __future__ import annotations
 import ast
 from pathlib import Path
 
-ROOT = Path(__file__).resolve().parents[1]
+TESTS = Path(__file__).resolve().parent
+ROOT = TESTS.parent
 PKG = ROOT / "data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spark"
 
 # Symbols kept without a production caller: only references a test
@@ -105,3 +109,21 @@ def test_every_package_symbol_is_reached_from_production_code():
     stale = sorted(k for k in ALLOWLIST if k not in uses or k in without_allowlist)
     assert not stale, f"allowlist entries that are gone or reached anyway: {stale}"
     assert all(reason.strip() for reason in ALLOWLIST.values())
+
+
+def _unused_imports(path: Path) -> list[str]:
+    """Names ``path`` imports, at any depth, that no code in it uses."""
+    tree = ast.parse(path.read_text(), filename=str(path))
+    bound = {}
+    for n in ast.walk(tree):
+        if isinstance(n, ast.Import):
+            bound |= {(a.asname or a.name.split(".", 1)[0]): n.lineno for a in n.names}
+        elif isinstance(n, ast.ImportFrom) and n.module != "__future__":
+            bound |= {(a.asname or a.name): n.lineno for a in n.names}
+    used = {n.id for n in ast.walk(tree) if isinstance(n, ast.Name)}
+    return [f"{path.name}:{line} {name}" for name, line in sorted(bound.items()) if name not in used]
+
+
+def test_no_unused_imports_in_tests():
+    unused = [u for p in sorted(TESTS.glob("*.py")) for u in _unused_imports(p)]
+    assert not unused, "imports no code in the test module uses:\n" + "\n".join(unused)

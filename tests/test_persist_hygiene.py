@@ -3,8 +3,6 @@ intermediate (q139/q149/q154) must register it for release so the
 long-lived sweep sessions (153-query gate, bench loop) do not
 accumulate executor storage across queries."""
 
-import pyspark.sql.functions as F  # noqa: F401
-
 from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spark.plans.queries import (
     registry,
     release_persisted,

@@ -5,10 +5,7 @@ window-free (that is the module's reason to exist)."""
 
 import random
 
-import pyspark.sql.functions as F
-
 from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spark.operators.quantiles import (
-    band_by_thresholds,
     exact_band,
     exact_rank_thresholds,
     rank_targets,

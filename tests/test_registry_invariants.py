@@ -398,7 +398,6 @@ def test_token_count_device_parity_on_edge_strings():
     # discovered as a q100/q216 hash mismatch.
     import duckdb
 
-    import pyspark.sql.functions as F  # noqa: F401
     from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spark.operators.text import (
         token_count_expr,
     )

@@ -84,7 +84,6 @@ def test_hard_negatives_band_and_disjoint_from_neardups(spark):
     # negatives must live strictly inside the band and never collide
     # with the near-dup region [hi, 1]
     from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spark.operators.similarity import (
-        cosine_topk,
         hard_negatives,
     )
 

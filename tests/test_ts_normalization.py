@@ -7,8 +7,6 @@ exercises."""
 
 import datetime
 
-import pyspark.sql.functions as F
-
 from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spark.sources.tables import (
     normalize_events_ts,
 )
