@@ -16,7 +16,6 @@ Two paths, same contract (query ids → top-k neighbor ids):
 
 from __future__ import annotations
 
-import json
 import math
 import re
 
@@ -26,7 +25,6 @@ from pyspark.sql.types import StructField, StructType
 
 from ..functions.rounding import floor_round6
 from ..sources import commit
-from ..sources.commit import _fs_checked, _fs_read_text, _fs_write_text_atomic, _hadoop_fs
 from .dedup import _spread_narrow_scan
 
 
@@ -1106,16 +1104,13 @@ def build_ivf2_index(
     route every corpus row supercell -> best member cell (map-only),
     write the inverted lists ``partitionBy("cell")`` with the row norm
     precomputed, and store both centroid levels + the cell->supercell
-    map as tiny sidecars. At 10^9 vectors this is the layout a serving
-    tier wants: the expensive corpus pass happens once, per-row routing
-    cost is O(sqrt n_cells), and every query batch reads only its
-    probed cells' files via partition pruning."""
-    spark = corpus.sparkSession
+    map in the index's manifest. At 10^9 vectors this is the layout a
+    serving tier wants: the expensive corpus pass happens once, per-row
+    routing cost is O(sqrt n_cells), and every query batch reads only
+    its probed cells' files via partition pruning. The crash contract
+    is :func:`build_ivf_index`'s."""
     l2, l1, cell2super = ivf2_train(corpus, id_col, vec_col, n_cells, iters, train_where)
-    members = _member_table_df(spark, l2, cell2super)
-    _write_index(
-        spark, path, _ivf2_corpus_lists(corpus, members, l1, id_col, vec_col), l2, cell2super, l1
-    )
+    _write_index(corpus, path, id_col, vec_col, l2, l1, cell2super)
     return l2, l1, cell2super
 
 
@@ -1222,7 +1217,7 @@ def build_ivf_index(
     corpus as (neighbor_id, c_vec, cn) inverted lists
     ``partitionBy("cell")`` — the caller's columns renamed and the row
     norm stored, the list schema both quantizers share — and store the
-    centroids as a tiny sidecar table. At 100 TB this is the point of
+    centroids in the index's manifest. At 100 TB this is the point of
     IVF — the expensive corpus pass happens once; every later query
     batch reads only its probed cells' files (partition pruning), never
     rescanning or reshuffling the corpus.
@@ -1233,45 +1228,66 @@ def build_ivf_index(
     economics applied to the persisted build: Lloyd is O(|train| x
     n_cells) per iteration, so sampling removes ``iters`` full-corpus
     scoring passes and leaves the final list-writing assignment as the
-    only O(N x n_cells) stage."""
-    spark = corpus.sparkSession
+    only O(N x n_cells) stage.
+
+    A crashed build converges when it is re-run: the lists commit in one
+    ``sources.commit.write`` and the manifest lands after them
+    (:func:`_write_index`)."""
     train = corpus.where(train_where) if train_where else corpus
     centroids = ivf_train_centroids(train, id_col, vec_col, n_cells, iters)
     # zero-norm corpus rows (even outside the train subset) raise
     # inside the list-writing assignment expression (_checked_norm)
     # — no separate guard pass over the corpus
-    lists = with_assigned_cell(_list_rows(corpus, id_col, vec_col), "c_vec", centroids)
-    _write_index(spark, path, lists, centroids)
+    _write_index(corpus, path, id_col, vec_col, centroids)
     return centroids
 
 
-# Sidecar schemas are STATIC (this module writes every sidecar), so
-# reads pass them explicitly instead of paying a schema-inference
-# footer job per open — the r15 profile measured one 1-task job plus
-# ~0.1 s of driver planning per inferred read, several times per
-# index operation. (The _tombstones sidecar keeps inference: its
-# neighbor_id column carries the caller's id type.) Both quantizers
-# share one centroid sidecar: a flat index records a NULL supercell
-# per cell, a hierarchical one its cell->supercell map (and writes
-# the level-1 centroids to _supers).
-_SIDECAR_CENTROIDS_SCHEMA = "cell INT, centroid ARRAY<DOUBLE>, supercell INT"
-_SIDECAR_SUPERS_SCHEMA = "supercell INT, centroid ARRAY<DOUBLE>"
-_SIDECAR_BATCHES_SCHEMA = "token STRING"
-_SIDECARS = ("_centroids", "_supers", "_tombstones", "_batches")
+# An index is three stores: its inverted lists at ``path`` (parquet,
+# partitioned by cell), the ``<path>_tombstones`` table, and one
+# manifest, a versioned JSON document (``sources.commit.write_document``)
+# under ``<path>_manifest``:
+#
+#   {"l2": level-2 centroids, "l1": level-1 centroids or null,
+#    "cell2super": each cell's supercell or null,
+#    "schema": the list schema, "tokens": the batch tokens appended}
+#
+# A flat index has a null l1 and cell2super. The manifest is read on the
+# driver with no Spark job: the quantizer and the tokens come from it,
+# and its list schema pins every list read, so none infers one from
+# parquet footers. (The tombstones keep inference: their neighbor_id
+# column carries the caller's id type.)
+_MANIFEST = "manifest"
+
+
+def _routed_lists(
+    corpus: DataFrame,
+    id_col: str,
+    vec_col: str,
+    l2: list[list[float]],
+    l1: list[list[float]] | None = None,
+    cell2super: dict[int, int] | None = None,
+) -> DataFrame:
+    """``corpus`` as (neighbor_id, c_vec, cn, cell) inverted-list rows,
+    routed by the flat quantizer ``l2`` or, given ``l1``, the
+    hierarchical one."""
+    if l1 is None:
+        return with_assigned_cell(_list_rows(corpus, id_col, vec_col), "c_vec", l2)
+    members = _member_table_df(corpus.sparkSession, l2, cell2super)
+    return _ivf2_corpus_lists(corpus, members, l1, id_col, vec_col)
 
 
 def _write_index(
-    spark,
+    corpus: DataFrame,
     path: str,
-    lists: DataFrame,
+    id_col: str,
+    vec_col: str,
     l2: list[list[float]],
-    cell2super: dict[int, int] | None = None,
     l1: list[list[float]] | None = None,
+    cell2super: dict[int, int] | None = None,
 ) -> None:
-    """The one write path of both builds: ``lists`` are the routed
-    (neighbor_id, c_vec, cn, cell) rows; ``cell2super``/``l1`` are
-    None for a flat index, which records a NULL supercell per cell and
-    writes no ``_supers``.
+    """The one write path of both builds: ``corpus`` routed by the
+    quantizer (:func:`_routed_lists`); ``l1``/``cell2super`` are None
+    for a flat index.
 
     The lists repartition ON the partition column before the
     partitioned write: with derived capacities the cell count is large
@@ -1284,160 +1300,64 @@ def _write_index(
     itself still runs map-side, before the exchange. The appends apply
     the same device.
 
-    Stale-schema window closed: any previous build's schema pin is
-    dropped BEFORE the data overwrite and re-recorded after (readers
-    between the two fall back to inference — see _write_index_schema).
-
-    A build starts a new generation: the old index's tombstones and
-    batch tokens name rows and batches of the index it replaces, so
-    both sidecars are dropped before anything is published."""
+    A build starts a new generation. The old index's tombstones name
+    rows of the index it replaces, so they are dropped first. The lists
+    then commit in one ``sources.commit.write`` that retires every live
+    list file, and the manifest, with no batch token, lands last. No
+    step reads the old index, so re-running a crashed build converges
+    from any crash point; until it has, a reader can pair the new lists
+    with the old manifest."""
+    spark = corpus.sparkSession
+    lists = _routed_lists(corpus, id_col, vec_col, l2, l1, cell2super)
     _recover_index(spark, path)
-    for sidecar in ("_tombstones", "_batches"):
-        commit.drop(spark, path + sidecar)
-    _drop_index_schema(spark, path)
-    lists.repartition(F.col("cell")).write.mode("overwrite").partitionBy("cell").parquet(path)
-    _write_index_schema(spark, path, lists)
-    cents = [(i, c, (cell2super or {}).get(i)) for i, c in enumerate(l2)]
-    _rewrite_sidecar(spark, path + "_centroids", _driver_rows(spark, cents, _SIDECAR_CENTROIDS_SCHEMA))
-    if l1 is not None:
-        supers = list(enumerate(l1))
-        _rewrite_sidecar(spark, path + "_supers", _driver_rows(spark, supers, _SIDECAR_SUPERS_SCHEMA))
+    commit.drop(spark, path + "_tombstones")
+    retire = commit.live_files(spark, path)
+    commit.write(spark, path, lists.repartition(F.col("cell")), retire=retire, partition_by=["cell"])
+    # nullable, as parquet inference reports every field
+    schema = StructType([StructField(f.name, f.dataType, True) for f in lists.schema.fields])
+    manifest = {
+        "l2": l2,
+        "l1": l1,
+        "cell2super": None if cell2super is None else [cell2super[c] for c in range(len(l2))],
+        "schema": schema.jsonValue(),
+        "tokens": [],
+    }
+    versions = commit.document_versions(spark, path + "_manifest", _MANIFEST)
+    commit.write_document(spark, path + "_manifest", _MANIFEST, versions, manifest)
 
 
 def _recover_index(spark, path: str) -> None:
-    """Converge a crashed commit of the lists or of any sidecar
+    """Converge a crashed commit of the lists or of the tombstones
     (``sources.commit.recover``); every maintenance op runs this before
-    it reads the index, so no sidecar is read half-written and no
-    stage is left in a later write's way."""
-    for table in (path, *(path + s for s in _SIDECARS)):
+    it reads the index, so no table is read half-written and no stage
+    is left in a later write's way."""
+    for table in (path, path + "_tombstones"):
         commit.recover(spark, table)
 
 
-def _read_quantizer(spark, path: str):
-    """The persisted quantizer as (l2, l1, cell2super); ``l1`` and
-    ``cell2super`` are None for a flat index. The layout is read from
-    ``_centroids`` alone — any non-NULL supercell means hierarchical.
-    Whether ``_supers`` exists decides nothing: a flat rebuild over a
-    hierarchical path leaves the old ``_supers`` behind, so a
-    hierarchical index missing its ``_supers`` raises instead of being
-    routed as flat."""
-    rows = _sidecar_rows(spark, path + "_centroids", _SIDECAR_CENTROIDS_SCHEMA, "cell")
-    l2 = [[float(x) for x in r["centroid"]] for r in rows]
-    cell2super = {r["cell"]: r["supercell"] for r in rows}
-    if all(s is None for s in cell2super.values()):
-        return l2, None, None
-    fs, hpath = _hadoop_fs(spark, path + "_supers")
-    if None in cell2super.values() or not fs.exists(hpath):
+def _read_manifest(spark, path: str) -> tuple[list[int], dict]:
+    """(versions on disk, the newest manifest) of the index at ``path``.
+    A missing manifest raises, and so does an unreadable one: routing
+    needs the quantizer, and none is guessed from the lists."""
+    versions, manifest = commit.read_document(spark, path + "_manifest", _MANIFEST)
+    if manifest is None:
         raise RuntimeError(
-            f"hierarchical IVF index at {path} is incomplete: its _centroids "
-            "sidecar names supercells, but a cell has none or the _supers "
-            "sidecar is missing — rebuild it with build_ivf2_index"
+            f"IVF index at {path} has no manifest under {path}_manifest — "
+            "build it with build_ivf_index or build_ivf2_index"
         )
-    srows = _sidecar_rows(spark, path + "_supers", _SIDECAR_SUPERS_SCHEMA, "supercell")
-    return l2, [[float(x) for x in r["centroid"]] for r in srows], cell2super
+    return versions, manifest
 
 
-def _sidecar_rows(spark, path: str, schema: str, key: str):
-    """Collect a sidecar table ordered by its (unique) integer key.
-    The sort happens driver-side over the collected rows: a sidecar is
-    at most n_cells rows by contract, and ``orderBy(...).collect()``
-    costs a range-partitioner sampling job on top of the collect — the
-    r15 profile showed three jobs per sidecar read where one suffices."""
-    return sorted(spark.read.schema(schema).parquet(path).collect(), key=lambda r: r[key])
+def _quantizer(manifest: dict):
+    """The persisted quantizer as (l2, l1, cell2super); ``l1`` and
+    ``cell2super`` are None for a flat index."""
+    cell2super = manifest["cell2super"]
+    return manifest["l2"], manifest["l1"], None if cell2super is None else dict(enumerate(cell2super))
 
 
-def _write_index_schema(spark, path: str, df: DataFrame) -> None:
-    """Record the inverted-list schema (one atomic text file at
-    ``<path>_schema``) so every later data read passes it explicitly
-    instead of paying a parquet footer-inference job per open — the
-    cost the r15 profile measured at ~0.1 s of driver planning plus a
-    1-task job PER READ, and one that grows with the index's file
-    count (the footer scan touches a file per scan task). The r15
-    round left these reads inferred because a WRONG pinned schema is a
-    correctness hazard for readers generic over caller id/vec types;
-    recording the schema of the exact DataFrame being written closes
-    that objection — it IS the footer schema, captured without the
-    scan. Fields are normalized to nullable, matching what inference
-    reports for parquet. Readers fall back to inference when the
-    sidecar is absent (an index written by an older build, or a crash
-    before the schema write — see the build sites: the stale sidecar
-    is deleted BEFORE the data overwrite, so no crash window can pair
-    new data with an old schema)."""
-    fields = StructType([StructField(f.name, f.dataType, True) for f in df.schema.fields])
-    _fs_write_text_atomic(spark, path + "_schema", fields.json())
-
-
-def _drop_index_schema(spark, path: str) -> None:
-    """Remove a stale ``_schema`` sidecar before an overwrite build —
-    between the delete and the post-write re-record, readers fall back
-    to inference (correct on any data), never to a mismatched pin."""
-    fs, hpath = _hadoop_fs(spark, path + "_schema")
-    if fs.exists(hpath):
-        _fs_checked(fs.delete(hpath, False), "delete", path + "_schema")
-
-
-def _read_index(spark, path: str) -> DataFrame:
-    """Open the inverted-list data files with the build-time schema
-    sidecar when present (zero inference jobs), inferred otherwise."""
-    fs, hpath = _hadoop_fs(spark, path + "_schema")
-    if fs.exists(hpath):
-        schema = StructType.fromJson(json.loads(_fs_read_text(spark, path + "_schema")))
-        return spark.read.schema(schema).parquet(path)
-    return spark.read.parquet(path)
-
-
-def _driver_rows(spark, rows, schema: str) -> DataFrame:
-    """A tiny driver-resident row list as a ONE-partition DataFrame,
-    so a sidecar write is one task and one file.
-    ``createDataFrame`` alone parallelizes the rows across
-    ``default.parallelism`` slices, so the write ran as a 32-task job
-    (31 of them empty) with more task-deserialization wall than data —
-    and left one file per non-empty slice for every later read to
-    footer-probe. A sidecar is ≤ n_cells rows at any index size; one
-    partition is the correct shape everywhere. The single slice is
-    pinned at ``parallelize`` time: ``coalesce(1)`` on the default
-    slicing was measured at ~4 s per write — its one task re-evaluates
-    all 32 pickled parent partitions through the Python-worker channel
-    serially — where a 1-slice parallelize is ~0.25 s."""
-    return spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
-
-
-def _rewrite_sidecar(spark, path: str, df: DataFrame) -> None:
-    """Replace the sidecar table at ``path`` with ``df`` in one
-    ``sources.commit.write`` that retires every live file: a write
-    whose job fails leaves the old sidecar as it was (an overwrite
-    would have deleted it before the job ran)."""
-    commit.write(spark, path, df, retire=commit.live_files(spark, path))
-
-
-def _count_batch_token(spark, sidecar_path: str, token: str) -> int:
-    """Probe the ``_batches`` sidecar for ``token``; 0 iff no tokened
-    append has ever committed. The existence/error discipline is
-    ``sources.commit.read_optional``'s: only an absent sidecar means
-    "not seen", an unreadable one raises. The static schema skips the
-    footer-inference job per open."""
-    sidecar = commit.read_optional(spark, sidecar_path, schema=_SIDECAR_BATCHES_SCHEMA)
-    if sidecar is None:
-        return 0
-    return sidecar.where(F.col("token") == F.lit(token)).limit(1).count()
-
-
-def _rewrite_cells(spark, path: str, rows: DataFrame, cells) -> None:
-    """Replace the cell partitions ``cells`` of a persisted index with
-    ``rows`` (which carry the ``cell`` column) in one
-    ``sources.commit.write``: ``rows`` are staged by cell in the
-    index's hidden ``.maint-tmp``, and the intent retires every live
-    file of ``cells``. A cell of ``cells`` that ``rows`` leave empty
-    loses its directory; a cell only ``rows`` hold is created. The
-    caller materializes ``rows`` (localCheckpoint), so its lineage does
-    not read the files the commit retires.
-
-    Cold cells are never listed, staged or touched — the
-    partition-pruning contract of compaction holds exactly,
-    at the cost of one extra move of the rewritten cells' files."""
-    retire = commit.live_files(spark, path, [f"cell={int(c)}" for c in cells])
-    # ~one file per rewritten cell
-    commit.write(spark, path, rows.repartition("cell"), retire=retire, partition_by=["cell"])
+def _read_index(spark, path: str, manifest: dict) -> DataFrame:
+    """The inverted lists, read with the schema the build recorded."""
+    return spark.read.schema(StructType.fromJson(manifest["schema"])).parquet(path)
 
 
 def append_to_ivf_index(
@@ -1449,7 +1369,7 @@ def append_to_ivf_index(
     batch_token: str | None = None,
 ) -> None:
     """Incremental index maintenance: assign a batch of NEW vectors to
-    the EXISTING coarse quantizer (sidecar centroids, never retrained)
+    the EXISTING coarse quantizer (the manifest's, never retrained)
     and append their inverted-list rows. Existing cells' files are
     untouched — the append is a ``sources.commit.write`` that retires
     nothing, so only the new rows' files move into their cells'
@@ -1460,7 +1380,7 @@ def append_to_ivf_index(
     separate, rarer full rebuild.
 
     Serves both quantizers: the batch routes under whichever one the
-    ``_centroids`` sidecar records (:func:`_read_quantizer`) — the
+    manifest records (:func:`_quantizer`) — the
     flat argmax over every cell, O(n_cells) per row, or supercell ->
     best member cell, O(sqrt n_cells) per row — and lands as the same
     (neighbor_id, c_vec, cn, cell) rows the build wrote.
@@ -1469,10 +1389,10 @@ def append_to_ivf_index(
 
     - ``batch_token`` (the 100 TB path): the caller names the batch
       (ingest date, staging dir, upstream job id). Appends record the
-      token in a tiny ``_batches`` sidecar; a retry that presents an
-      already-recorded token is a NO-OP after one scan of the sidecar
-      — O(|batch| + #batches), independent of index size. This is the
-      guard that keeps the "marginal cost O(|batch|)" promise.
+      token in the index's manifest; a retry that presents an
+      already-recorded token is a NO-OP after one driver read of the
+      manifest, with no Spark job — independent of index size. This is
+      the guard that keeps the "marginal cost O(|batch|)" promise.
     - ``skip_existing_ids`` (default, token-free): anti-joins the
       batch against the index's id column. The scan is column-pruned
       (ids only, no vectors), but it IS a pass over every index id —
@@ -1490,19 +1410,17 @@ def append_to_ivf_index(
     well-defined after a compaction, and proceeding would lose the new
     vector silently under either idempotency guard.
 
-    Failure semantics of the token probe: ONLY a missing ``_batches``
-    sidecar (no tokened append has ever committed) is treated as
-    "token not seen". Any other read failure — permissions, transient
-    FS errors, a corrupt footer — RAISES instead of appending, because
-    proceeding past an unreadable sidecar is exactly the silent
-    re-append the token exists to prevent.
+    Failure semantics of the manifest read: a missing or unreadable
+    manifest RAISES before anything is appended — the batch cannot be
+    routed without the quantizer, and proceeding past unreadable tokens
+    is exactly the silent re-append the token exists to prevent.
 
     Crash window the token does NOT cover: the data append commits
-    before the token is recorded, so a crash between the two leaves
-    committed rows with no token — a retry with the same token would
-    re-append them. Keep ``skip_existing_ids=True`` as the backstop
-    unless your orchestrator guarantees the data+token pair lands
-    atomically (e.g. both staged under one directory rename). The
+    before the token is recorded in the next manifest version, so a
+    crash between the two leaves committed rows with no token — a
+    retry with the same token would re-append them. Keep
+    ``skip_existing_ids=True`` as the backstop unless your
+    orchestrator guarantees the data+token pair lands atomically. The
     check-then-write is also not serialized across CONCURRENT
     appenders presenting the same token; dedupe retries upstream
     (one writer per token) rather than racing two. The serialization
@@ -1514,10 +1432,9 @@ def append_to_ivf_index(
     # stage left in place would make this append's staging write fail
     # (one fs.exists per table when nothing is pending)
     _recover_index(spark, path)
-    if batch_token is not None:
-        seen = _count_batch_token(spark, path + "_batches", batch_token)
-        if seen:
-            return
+    versions, manifest = _read_manifest(spark, path)
+    if batch_token is not None and batch_token in manifest["tokens"]:
+        return
     # Re-inserting a TOMBSTONED id is rejected loudly (code-review r13):
     # silently it loses the update both ways — skip_existing_ids
     # anti-joins the new vector away against the still-present old row,
@@ -1543,26 +1460,22 @@ def append_to_ivf_index(
                 "(appending now would be silently hidden by the tombstone "
                 "and removed by the next compaction)"
             )
-    l2, l1, cell2super = _read_quantizer(spark, path)
+    l2, l1, cell2super = _quantizer(manifest)
     batch = new_vectors
     if skip_existing_ids:
-        existing = _read_index(spark, path).select(F.col("neighbor_id").alias(id_col))
+        existing = _read_index(spark, path, manifest).select(F.col("neighbor_id").alias(id_col))
         batch = batch.join(existing, on=id_col, how="left_anti")
     # zero-norm batch rows raise inside the assignment expression
     # (_checked_norm) during the append write — no extra guard action
-    if l1 is None:
-        lists = with_assigned_cell(_list_rows(batch, id_col, vec_col), "c_vec", l2)
-    else:
-        members = _member_table_df(spark, l2, cell2super)
-        lists = _ivf2_corpus_lists(batch, members, l1, id_col, vec_col)
+    lists = _routed_lists(batch, id_col, vec_col, l2, l1, cell2super)
     # repartition on the partition column before the partitioned write
     # (the _write_index note): an append otherwise lands
     # tasks x touched-cells new files EVERY batch, compounding the
     # index's file count with each ingest window.
     commit.write(spark, path, lists.repartition(F.col("cell")), partition_by=["cell"])
     if batch_token is not None:
-        token = _driver_rows(spark, [(batch_token,)], _SIDECAR_BATCHES_SCHEMA)
-        commit.write(spark, path + "_batches", token)
+        tokens = [*manifest["tokens"], batch_token]
+        commit.write_document(spark, path + "_manifest", _MANIFEST, versions, {**manifest, "tokens": tokens})
 
 
 def delete_from_ivf_index(
@@ -1619,6 +1532,11 @@ def delete_from_ivf_index(
     commit.write(spark, path + "_tombstones", batch.coalesce(1))
 
 
+def _no_rewrite(tombstones: int = 0) -> dict:
+    """The stats of a compaction that rewrote no cell."""
+    return {"tombstones": tombstones, "cells_rewritten": [], "cells_removed": [], "rows_removed": 0}
+
+
 def compact_ivf_index(spark, path: str, only_ids: DataFrame | None = None) -> dict:
     """Physical removal of tombstoned rows — the list-compaction half
     of delete. LAYOUT-AGNOSTIC: the rewrite keeps every non-partition
@@ -1629,7 +1547,7 @@ def compact_ivf_index(spark, path: str, only_ids: DataFrame | None = None) -> di
     are read (a column-pruned (id, cell) scan finds them) and ONLY
     those partitions are rewritten. A cell whose
     every member is tombstoned gets its directory removed outright;
-    its sidecar centroid is retained — a trained-but-empty cell is a
+    its centroid in the manifest is retained — a trained-but-empty cell is a
     legal index state (build produces them too) and queries probing it
     read nothing.
 
@@ -1644,7 +1562,7 @@ def compact_ivf_index(spark, path: str, only_ids: DataFrame | None = None) -> di
     are ignored. Default ``None`` = full compaction (all tombstones,
     sidecar cleared).
 
-    The partition rewrite is one commit (:func:`_rewrite_cells`):
+    The partition rewrite is one ``sources.commit.write``:
     survivors stage under the invisible ``.maint-tmp``, and an intent
     retires the affected cells' files — a crash at ANY point converges
     under ``sources.commit.recover`` (which this function runs first,
@@ -1657,10 +1575,9 @@ def compact_ivf_index(spark, path: str, only_ids: DataFrame | None = None) -> di
     Returns a stats dict; no-op (nothing written, tombstones kept —
     there are none to keep) when the sidecar is absent or empty."""
     _recover_index(spark, path)
-    zero = {"tombstones": 0, "cells_rewritten": [], "cells_removed": [], "rows_removed": 0}
     tombs_all = commit.read_optional(spark, path + "_tombstones")
     if tombs_all is None:
-        return zero
+        return _no_rewrite()
     tombs_all = tombs_all.select("neighbor_id").distinct().localCheckpoint(eager=True)
     if only_ids is not None:
         tombs = (
@@ -1673,9 +1590,9 @@ def compact_ivf_index(spark, path: str, only_ids: DataFrame | None = None) -> di
         tombs = tombs_all
     n_tombs = tombs.count()
     if n_tombs == 0:
-        return zero
+        return _no_rewrite()
 
-    idx = _read_index(spark, path)
+    idx = _read_index(spark, path, _read_manifest(spark, path)[1])
     # ONE column-pruned pass (ids + the cell partition column, never
     # vectors) yields both the affected-cell list AND the matched-row
     # counts — the first cut ran two separate semi-join scans for them
@@ -1690,7 +1607,7 @@ def compact_ivf_index(spark, path: str, only_ids: DataFrame | None = None) -> di
         .collect()
     )
     affected = sorted(int(r["cell"]) for r in per_cell)
-    stats = {"tombstones": n_tombs, "cells_rewritten": [], "cells_removed": [], "rows_removed": 0}
+    stats = _no_rewrite(n_tombs)
     if affected:
         stats["rows_removed"] = sum(int(r["n"]) for r in per_cell)
         # partition-pruned members of affected cells, EVERY column kept
@@ -1729,9 +1646,11 @@ def compact_ivf_index(spark, path: str, only_ids: DataFrame | None = None) -> di
                     "unreadable — rebuild the index (or drop its "
                     "directory) instead of compacting a total delete"
                 )
-        # one commit: survivors staged invisibly, every affected cell's
-        # files retired, emptied cells' directories dropped
-        _rewrite_cells(spark, path, keep, affected)
+        # one commit: survivors staged invisibly by cell (~one file
+        # each), every affected cell's files retired, emptied cells'
+        # directories dropped; cold cells are never listed or touched
+        retire = commit.live_files(spark, path, [f"cell={c}" for c in affected])
+        commit.write(spark, path, keep.repartition("cell"), retire=retire, partition_by=["cell"])
         stats.update(cells_rewritten=rewritten, cells_removed=removed)
     # rewrite the sidecar LAST (see docstring), always carrying its OWN
     # schema — a hardcoded BIGINT DDL would leave mixed-schema parquet
@@ -1742,7 +1661,11 @@ def compact_ivf_index(spark, path: str, only_ids: DataFrame | None = None) -> di
         remaining = tombs_all.limit(0)
     else:
         remaining = tombs_all.join(tombs, on="neighbor_id", how="left_anti")
-    _rewrite_sidecar(spark, path + "_tombstones", remaining)
+    # one commit retiring every live file: a write whose job fails
+    # leaves the old tombstones as they were (an overwrite would have
+    # deleted them before the job ran)
+    tombstones = path + "_tombstones"
+    commit.write(spark, tombstones, remaining, retire=commit.live_files(spark, tombstones))
     return stats
 
 
@@ -1837,9 +1760,10 @@ def update_in_ivf_index(
     clears the ids again, appends; mid-3 → the append is one commit, so
     recovery publishes all of the batch or none of it, and a re-run
     removes it (steps 1-2) and re-appends it whole. ``batch_token`` names
-    the whole update: a token already recorded makes the re-run a
-    no-op BEFORE step 1 (the token is written by step 3 LAST, so a
-    token is only ever visible for a fully-applied update).
+    the whole update: a token already recorded in the manifest makes
+    the re-run a no-op BEFORE step 1 (step 3 records the token LAST, in
+    the next manifest version, so a token is only ever visible for a
+    fully-applied update).
 
     Single-writer contract (same as every mutating op on the index —
     see ``sources.commit``): serialize updates against appends,
@@ -1854,14 +1778,9 @@ def update_in_ivf_index(
     # converge any crashed write before the pre-check reads the index
     # (a torn cell could otherwise make the wipe probe misjudge)
     _recover_index(spark, path)
-    if batch_token is not None and _count_batch_token(spark, path + "_batches", batch_token):
-        return {
-            "tombstones": 0,
-            "cells_rewritten": [],
-            "cells_removed": [],
-            "rows_removed": 0,
-            "skipped_token": batch_token,
-        }
+    manifest = _read_manifest(spark, path)[1]
+    if batch_token is not None and batch_token in manifest["tokens"]:
+        return {**_no_rewrite(), "skipped_token": batch_token}
     ids = (
         new_vectors.select(F.col(id_col).alias("neighbor_id"))
         .distinct()
@@ -1876,7 +1795,7 @@ def update_in_ivf_index(
     # (broadcast) batch, so only the pathological near-wipe case scans
     # far.
     survivor = (
-        _read_index(spark, path)
+        _read_index(spark, path, manifest)
         .select("neighbor_id")
         .join(F.broadcast(ids), on="neighbor_id", how="left_anti")
         .limit(1)
@@ -1917,8 +1836,8 @@ def query_ivf_index(
     n_super_probe: int = 2,
 ) -> DataFrame:
     """Top-k against a persisted IVF index of either quantizer. The
-    driver-resident quantizer is rebuilt from the sidecars
-    (:func:`_read_quantizer`) and each query probes its ``n_probe``
+    driver-resident quantizer is read from the manifest
+    (:func:`_quantizer`, no Spark job) and each query probes its ``n_probe``
     best cells — flat: ranked over every cell; hierarchical: the
     ``n_super_probe`` best supercells' member cells (the exact
     :func:`_ivf2_probe_cells` ranking; ``n_super_probe`` is read only
@@ -1935,7 +1854,8 @@ def query_ivf_index(
     without any file rewrite; ranks are assigned AFTER the exclusion
     (a deleted neighbor frees its rank for the next-best row)."""
     spark = queries.sparkSession
-    l2, l1, cell2super = _read_quantizer(spark, path)
+    manifest = _read_manifest(spark, path)[1]
+    l2, l1, cell2super = _quantizer(manifest)
     if l1 is None:
         q = _flat_probe_cells(queries, l2, id_col, vec_col, n_probe)
     else:
@@ -1949,7 +1869,7 @@ def query_ivf_index(
     # materialized above), and .distinct() before the collect costs an
     # extra shuffle + AQE job for a set the driver builds in microseconds
     probed_cells = sorted({r["cell"] for r in q.select("cell").collect()})
-    c = _read_index(spark, path).where(F.col("cell").isin(probed_cells))
+    c = _read_index(spark, path, manifest).where(F.col("cell").isin(probed_cells))
     tombs = commit.read_optional(spark, path + "_tombstones")
     if tombs is not None:
         # logical deletes: exclude BEFORE scoring/ranking, so a deleted

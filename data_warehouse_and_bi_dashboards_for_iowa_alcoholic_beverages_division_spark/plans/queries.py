@@ -210,9 +210,13 @@ def _registered_fn(name: str, fn: Callable[[SparkSession, str], DataFrame]):
         with recorded_reads() as reads:
             df = fn(spark, sf_dir)
         if cols:
-            df = df.select(
-                *[F.col(c).cast("double").alias(c) if c in cols else F.col(c) for c in df.columns]
-            )
+            # one selectExpr: a gateway call for the whole projection
+            # where F.col costs several per column
+            exprs = []
+            for c in df.columns:
+                quoted = "`" + c.replace("`", "``") + "`"
+                exprs.append(f"CAST({quoted} AS DOUBLE) AS {quoted}" if c in cols else quoted)
+            df = df.selectExpr(*exprs)
         if _memoizable(df, reads, jobs, persisted):
             _PLAN_MEMO[key] = _Memoized(spark, frozenset(reads), df)
             if len(_PLAN_MEMO) > _PLAN_MEMO_SIZE:
@@ -1237,6 +1241,14 @@ def _hashed_shingles_sql(inner: str) -> str:
     )
 
 
+def _text_shingles_sql(text: str) -> str:
+    """The hashed 9-gram shingle set of the lower-cased text column ``text``."""
+    return _hashed_shingles_sql(
+        f"[substring(lower({text}), CAST(i AS INT), 9)"
+        f" for i in range(1, greatest(length({text}) - 8, 1) + 1)]"
+    )
+
+
 @register(
     "q37_ngram_jaccard",
     f"""
@@ -1277,34 +1289,6 @@ def q37(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup.ngram_jaccard_pairs(
         docs, cands, "doc_id", persist_fn=lambda df: _persist(df, eager=True)
     )
-
-
-@register(
-    "q38_knn_cosine",
-    """
-    WITH q AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings WHERE vec_id < 5),
-    scored AS (
-      SELECT q.query_id, c.vec_id AS neighbor_id,
-             FLOOR(
-               (list_sum(list_transform(list_zip(q.qv, c.embedding),
-                        z -> CAST(z[1] AS DOUBLE) * CAST(z[2] AS DOUBLE)))
-               / (sqrt(list_sum(list_transform(q.qv, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-                  * sqrt(list_sum(list_transform(c.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))))
-               * 1000000 + 0.5) / 1000000.0 AS score
-      FROM q, embeddings c
-      WHERE c.vec_id <> q.query_id
-    )
-    SELECT * FROM (
-      SELECT query_id, neighbor_id, score,
-             ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY score DESC, neighbor_id ASC) AS rank
-      FROM scored
-    ) WHERE rank <= 10
-    """,
-    "Brute-force cosine top-k ANN baseline (broadcast queries, no corpus shuffle)",
-)
-def q38(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = _t(spark, sf_dir, "embeddings")
-    return similarity.cosine_topk(emb, emb.where("vec_id < 5"), k=10)
 
 
 # =====================================================================
@@ -1642,16 +1626,31 @@ def _pq_sql() -> str:
 
 
 def _topk_sql(
-    scored: str = "scored", measure: str = "score", order: str = "DESC", where: str = ""
+    scored: str = "scored", measure: str = "score", order: str = "DESC", where: str = "", k: int = 10
 ) -> str:
-    """The 10 best neighbors per query of ``scored`` by ``measure``,
+    """The ``k`` best neighbors per query of ``scored`` by ``measure``,
     ties to the lower neighbor id, after the row filter ``where``."""
     return f"""SELECT * FROM (
       SELECT query_id, neighbor_id, {measure},
              ROW_NUMBER() OVER (PARTITION BY query_id
                                 ORDER BY {measure} {order}, neighbor_id ASC) AS rank
       FROM {scored}{where}
-    ) WHERE rank <= 10"""
+    ) WHERE rank <= {k}"""
+
+
+def _brute_scored_sql(name: str = "scored", queries: str = "vec_id < 5", where: str = "") -> str:
+    """``v`` (every embedding with its norm) and ``{name}``: the
+    brute-force cosine of each query vector (``queries``) to every other
+    vector, or to those passing the extra join predicate ``where``."""
+    return f"""v AS (
+      SELECT vec_id, embedding, {_VEC_NORM_SQL} AS nrm FROM embeddings
+    ),
+    {name} AS (
+      SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
+             {floor_round6_sql(_pair_cos_sql("q", "c"))} AS score
+      FROM (SELECT * FROM v WHERE {queries}) q, v c
+      WHERE c.vec_id <> q.vec_id{where}
+    )"""
 
 
 def _tombstoned_topk_sql() -> str:
@@ -1801,6 +1800,19 @@ def _q39_oracle() -> str:
     {_lsh_scored_sql()}
     {_topk_sql()}
     """
+
+
+@register(
+    "q38_knn_cosine",
+    f"""
+    WITH {_brute_scored_sql()}
+    {_topk_sql()}
+    """,
+    "Brute-force cosine top-k ANN baseline (broadcast queries, no corpus shuffle)",
+)
+def q38(spark: SparkSession, sf_dir: str) -> DataFrame:
+    emb = _t(spark, sf_dir, "embeddings")
+    return similarity.cosine_topk(emb, emb.where("vec_id < 5"), k=10)
 
 
 @register(
@@ -2610,7 +2622,7 @@ def q70(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q75_jaccard_blocked",
-    r"""
+    rf"""
     WITH n AS (
       SELECT doc_id, text,
              substring(md5(trim(regexp_replace(lower(text), '\s+', ' ', 'g'))), 1, 2) AS blk
@@ -2622,14 +2634,8 @@ def q70(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     sh AS (
       SELECT id_a, id_b,
-        list_distinct(list_transform(
-          [substring(lower(ta), CAST(i AS INT), 9)
-           for i in range(1, greatest(length(ta) - 8, 1) + 1)],
-          s -> CAST(('0x' || substr(md5(s), 1, 15)) AS BIGINT))) AS sa,
-        list_distinct(list_transform(
-          [substring(lower(tb), CAST(i AS INT), 9)
-           for i in range(1, greatest(length(tb) - 8, 1) + 1)],
-          s -> CAST(('0x' || substr(md5(s), 1, 15)) AS BIGINT))) AS sb
+        {_text_shingles_sql("ta")} AS sa,
+        {_text_shingles_sql("tb")} AS sb
       FROM pairs
     )
     SELECT id_a, id_b,
@@ -3087,7 +3093,7 @@ def q83(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q84_dedup_clusters",
-    r"""
+    rf"""
     WITH RECURSIVE n AS (
       SELECT doc_id, text,
              substring(md5(trim(regexp_replace(lower(text), '\s+', ' ', 'g'))), 1, 2) AS blk
@@ -3099,14 +3105,8 @@ def q83(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     sh AS (
       SELECT id_a, id_b,
-        list_distinct(list_transform(
-          [substring(lower(ta), CAST(i AS INT), 9)
-           for i in range(1, greatest(length(ta) - 8, 1) + 1)],
-          s -> CAST(('0x' || substr(md5(s), 1, 15)) AS BIGINT))) AS sa,
-        list_distinct(list_transform(
-          [substring(lower(tb), CAST(i AS INT), 9)
-           for i in range(1, greatest(length(tb) - 8, 1) + 1)],
-          s -> CAST(('0x' || substr(md5(s), 1, 15)) AS BIGINT))) AS sb
+        {_text_shingles_sql("ta")} AS sa,
+        {_text_shingles_sql("tb")} AS sb
       FROM cand
     ),
     matched AS (
@@ -3697,7 +3697,7 @@ def q97(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q98_incremental_blocked",
-    r"""
+    rf"""
     WITH n AS (
       SELECT doc_id, text,
              substring(md5(trim(regexp_replace(lower(text), '\s+', ' ', 'g'))), 1, 2) AS blk
@@ -3710,14 +3710,8 @@ def q97(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     sh AS (
       SELECT new_id, old_id,
-        list_distinct(list_transform(
-          [substring(lower(ta), CAST(i AS INT), 9)
-           for i in range(1, greatest(length(ta) - 8, 1) + 1)],
-          s -> CAST(('0x' || substr(md5(s), 1, 15)) AS BIGINT))) AS sa,
-        list_distinct(list_transform(
-          [substring(lower(tb), CAST(i AS INT), 9)
-           for i in range(1, greatest(length(tb) - 8, 1) + 1)],
-          s -> CAST(('0x' || substr(md5(s), 1, 15)) AS BIGINT))) AS sb
+        {_text_shingles_sql("ta")} AS sa,
+        {_text_shingles_sql("tb")} AS sb
       FROM pairs
     )
     SELECT new_id, old_id,
@@ -6135,7 +6129,7 @@ def _q147_oracle() -> str:
       WHERE a.doc_id % 10 = 0 AND c.doc_id % 10 <> 0
     ),
     shh AS (
-      SELECT doc_id, list_distinct(list_transform(shs, s -> CAST(('0x' || substr(md5(s), 1, 15)) AS BIGINT))) AS shs FROM sh
+      SELECT doc_id, {_hashed_shingles_sql("shs")} AS shs FROM sh
     ),
     jac AS (
       SELECT cand.new_id, cand.old_id, {jac} AS j
@@ -7009,8 +7003,8 @@ def q155(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q156_ivf_persisted",
     _q67_oracle(),
     "Persisted IVF index end-to-end: train the coarse quantizer ONCE, "
-    "write the corpus as inverted lists partitionBy(cell) with a "
-    "centroid sidecar, then answer the query batch from the index - "
+    "write the corpus as inverted lists partitionBy(cell) with the "
+    "centroids in a JSON manifest, then answer the query batch from the index - "
     "the probed cell ids become a static partition filter, so the scan "
     "reads ~n_probe/n_cells of the corpus files (PartitionFilters "
     "pinned in tests/test_plan_shapes.py) and repeat query batches "
@@ -7579,12 +7573,6 @@ def _q166_oracle() -> str:
     vector, full-outer-joined and fused with the standard RRF formula
     (1/(60+rank) per list, missing rank contributes 0 via COALESCE of
     the NULL-propagated division)."""
-    cosine = (
-        "(list_sum(list_transform(list_zip(q.qv, c.embedding),"
-        " z -> CAST(z[1] AS DOUBLE) * CAST(z[2] AS DOUBLE)))"
-        " / (sqrt(list_sum(list_transform(q.qv, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))"
-        " * sqrt(list_sum(list_transform(c.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))))"
-    )
     rrf = (
         "COALESCE(1.0 / (60.0 + CAST(r_lex AS DOUBLE)), 0.0)"
         " + COALESCE(1.0 / (60.0 + CAST(r_vec AS DOUBLE)), 0.0)"
@@ -7597,17 +7585,9 @@ def _q166_oracle() -> str:
         FROM perdoc
       ) WHERE r_lex <= 50
     ),
-    q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 7),
-    scoredv AS (
-      SELECT c.vec_id AS doc_id, {floor_round6_sql(cosine)} AS vscore
-      FROM q, embeddings c WHERE c.vec_id <> 7
-    ),
+    {_brute_scored_sql("scoredv", "vec_id = 7")},
     vec AS (
-      SELECT doc_id, r_vec FROM (
-        SELECT doc_id,
-               ROW_NUMBER() OVER (ORDER BY vscore DESC, doc_id) AS r_vec
-        FROM scoredv
-      ) WHERE r_vec <= 50
+      SELECT neighbor_id AS doc_id, rank AS r_vec FROM ({_topk_sql("scoredv", k=50)})
     ),
     fused AS (
       SELECT COALESCE(l.doc_id, v.doc_id) AS doc_id,
@@ -7660,25 +7640,10 @@ def q166(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q167_hard_negatives",
-    """
-    WITH q AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings WHERE vec_id < 5),
-    scored AS (
-      SELECT q.query_id, c.vec_id AS neighbor_id,
-             FLOOR(
-               (list_sum(list_transform(list_zip(q.qv, c.embedding),
-                        z -> CAST(z[1] AS DOUBLE) * CAST(z[2] AS DOUBLE)))
-               / (sqrt(list_sum(list_transform(q.qv, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-                  * sqrt(list_sum(list_transform(c.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))))
-               * 1000000 + 0.5) / 1000000.0 AS score
-      FROM q, embeddings c
-      WHERE c.vec_id <> q.query_id
-    ),
+    f"""
+    WITH {_brute_scored_sql()},
     banded AS (SELECT * FROM scored WHERE score >= 0.25 AND score < 0.35)
-    SELECT * FROM (
-      SELECT query_id, neighbor_id, score,
-             ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY score DESC, neighbor_id ASC) AS rank
-      FROM banded
-    ) WHERE rank <= 10
+    {_topk_sql("banded")}
     """,
     "Hard-negative mining for contrastive training: per query vector, "
     "the top-10 corpus vectors with cosine in [0.25, 0.35) - similar "
@@ -7872,28 +7837,12 @@ def q169(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q170_filtered_ann",
-    """
+    f"""
     WITH allowed AS (
       SELECT doc_id FROM documents WHERE lang = 'en' AND n_chars >= 120
     ),
-    q AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings WHERE vec_id < 5),
-    scored AS (
-      SELECT q.query_id, c.vec_id AS neighbor_id,
-             FLOOR(
-               (list_sum(list_transform(list_zip(q.qv, c.embedding),
-                        z -> CAST(z[1] AS DOUBLE) * CAST(z[2] AS DOUBLE)))
-               / (sqrt(list_sum(list_transform(q.qv, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-                  * sqrt(list_sum(list_transform(c.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))))
-               * 1000000 + 0.5) / 1000000.0 AS score
-      FROM q, embeddings c
-      WHERE c.vec_id <> q.query_id
-        AND c.vec_id IN (SELECT doc_id FROM allowed)
-    )
-    SELECT * FROM (
-      SELECT query_id, neighbor_id, score,
-             ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY score DESC, neighbor_id ASC) AS rank
-      FROM scored
-    ) WHERE rank <= 10
+    {_brute_scored_sql(where=" AND c.vec_id IN (SELECT doc_id FROM allowed)")}
+    {_topk_sql()}
     """,
     "Filtered ANN (the vector-store metadata-predicate problem): top-10 "
     "cosine neighbors restricted to documents passing a metadata filter "
@@ -9056,7 +9005,7 @@ def _q187_oracle() -> str:
     """DuckDB twin: the same planted-duplicate corpus, q84's recursive
     transitive closure for the component labels, then the same
     (n_chars DESC, doc_id) argmax."""
-    return r"""
+    return rf"""
     WITH RECURSIVE corpus AS (
       SELECT doc_id, text, n_chars FROM documents
       UNION ALL
@@ -9077,14 +9026,8 @@ def _q187_oracle() -> str:
     ),
     sh AS (
       SELECT id_a, id_b,
-        list_distinct(list_transform(
-          [substring(lower(ta), CAST(i AS INT), 9)
-           for i in range(1, greatest(length(ta) - 8, 1) + 1)],
-          s -> CAST(('0x' || substr(md5(s), 1, 15)) AS BIGINT))) AS sa,
-        list_distinct(list_transform(
-          [substring(lower(tb), CAST(i AS INT), 9)
-           for i in range(1, greatest(length(tb) - 8, 1) + 1)],
-          s -> CAST(('0x' || substr(md5(s), 1, 15)) AS BIGINT))) AS sb
+        {_text_shingles_sql("ta")} AS sa,
+        {_text_shingles_sql("tb")} AS sb
       FROM cand
     ),
     matched AS (
@@ -10766,7 +10709,7 @@ def _q202_oracle() -> str:
         ON a.b = c.b AND a.bucket = c.bucket AND a.doc_id < c.doc_id
     ),
     shh AS (
-      SELECT doc_id, list_distinct(list_transform(shs, s -> CAST(('0x' || substr(md5(s), 1, 15)) AS BIGINT))) AS shs FROM sh
+      SELECT doc_id, {_hashed_shingles_sql("shs")} AS shs FROM sh
     ),
     j AS (
       SELECT cand.id_a, cand.id_b,
@@ -12038,8 +11981,8 @@ def q219(spark: SparkSession, sf_dir: str) -> DataFrame:
     "build trains the two-level quantizer (sampled level-2 Lloyd, "
     "driver-local level-1), routes every vector supercell -> best "
     "member cell map-only, and writes the inverted lists "
-    "partitionBy(cell) with centroid/supercell sidecars; query "
-    "rebuilds the driver-resident quantizer from the sidecars, probes "
+    "partitionBy(cell) with both centroid levels in a JSON manifest; query "
+    "reads the driver-resident quantizer from the manifest, probes "
     "2 supers -> 3 member cells, and reads ONLY the probed cells' "
     "files (static PartitionFilters on the list scan). At 10^9 "
     "vectors this is the serving layout: one corpus pass at build, "
@@ -12073,7 +12016,7 @@ def q220(spark: SparkSession, sf_dir: str) -> DataFrame:
     "(capacity still derived from the full corpus the index must "
     "serve), the existing 90% slice is inverted-listed at build, the "
     "arriving batch (vec_id%10=0) routes supercell -> best member "
-    "cell under the FROZEN sidecar quantizer at O(sqrt n_cells) per "
+    "cell under the FROZEN manifest quantizer at O(sqrt n_cells) per "
     "row - the flat append's O(n_cells) assignment is exactly the "
     "term hierarchical routing exists to remove, so maintenance cost "
     "stays sub-linear in index capacity as the corpus grows - and "

@@ -1,8 +1,8 @@
 """One commit protocol for every table write that must not leave a
 torn table behind: the SCD2 dimension rewrite (``streaming.scd_stream``),
-the fact append (``streaming.incremental.load_or_update``) and IVF cell
-and sidecar maintenance (``operators.similarity``). All of them call
-:func:`write`:
+the fact append (``streaming.incremental.load_or_update``), and the IVF
+build, append, compaction and tombstone writes (``operators.similarity``).
+All of them call :func:`write`:
 
 1. the new files are written into the hidden stage ``<path>/.maint-tmp``.
    Spark's file index, :func:`_hidden` and the listing watermark skip
@@ -47,12 +47,22 @@ failure by returning ``false`` rather than raising; every mutation here
 checks that boolean (:func:`_fs_checked`). A move is a rename: on an
 object store without atomic rename it becomes a copy, and a
 transactional table format replaces this module there.
+
+**Versioned documents.** State that is not a table (the SCD drain's
+ledger, an IVF index's manifest) is a small JSON document,
+``<stem>-<n>.json`` in a directory of its own, the highest ``n`` live.
+:func:`write_document` writes version ``n+1`` under its fresh name
+(tmp, then rename) and only then deletes the older versions, so a
+crash leaves the old version or the new one, never neither.
+:func:`read_document` reads the newest; a crashed write's ``.tmp`` is
+not a version and is ignored.
 """
 
 from __future__ import annotations
 
 import json
 import posixpath
+import re
 from collections.abc import Iterable, Sequence
 
 from pyspark.errors import AnalysisException
@@ -145,10 +155,13 @@ def _fs_checked(ok: bool, op: str, src: str, dst: str | None = None) -> None:
 
 
 def _fs_write_text_atomic(spark, path: str, text: str) -> None:
-    """Write a small text file with a tmp-then-rename commit: the file
-    at ``path`` either does not exist or is complete. (``fs.rename`` of
-    a file is atomic on real filesystems; the intent commit point
-    depends on exactly that.)"""
+    """Write a new small text file with a tmp-then-rename commit: the
+    file at ``path`` either does not exist or is complete. (``fs.rename``
+    of a file is atomic on real filesystems; the intent commit point
+    depends on exactly that.) No caller replaces a file: an intent lands
+    in a fresh stage, a document version under a fresh name. A
+    filesystem that refuses a rename onto an existing file (HDFS)
+    therefore fails it through :func:`_fs_checked`."""
     fs, hpath = _hadoop_fs(spark, path)
     tmp_h = hpath.suffix(".tmp")
     out = fs.create(tmp_h, True)
@@ -156,8 +169,6 @@ def _fs_write_text_atomic(spark, path: str, text: str) -> None:
         out.write(bytearray(text.encode("utf-8")))
     finally:
         out.close()
-    if fs.exists(hpath):
-        _fs_checked(fs.delete(hpath, False), "delete", path)
     _fs_checked(fs.rename(tmp_h, hpath), "rename", path + ".tmp", path)
 
 
@@ -168,6 +179,40 @@ def _fs_read_text(spark, path: str) -> str:
         return bytes(stream.readAllBytes()).decode("utf-8")
     finally:
         stream.close()
+
+
+def _document_path(directory: str, stem: str, version: int) -> str:
+    return f"{directory.rstrip('/')}/{stem}-{version}.json"
+
+
+def document_versions(spark, directory: str, stem: str) -> list[int]:
+    """The versions of the document ``<stem>-<n>.json`` on disk under
+    ``directory``, ascending; none for a missing directory."""
+    fs, root = _hadoop_fs(spark, directory)
+    names = [st.getPath().getName() for st in fs.listStatus(root)] if fs.exists(root) else []
+    pattern = re.compile(re.escape(stem) + r"-(\d+)\.json")
+    return sorted(int(m.group(1)) for n in names if (m := pattern.fullmatch(n)))
+
+
+def read_document(spark, directory: str, stem: str) -> tuple[list[int], object]:
+    """(:func:`document_versions`, the newest version's JSON value);
+    ``([], None)`` when there is none. An unreadable version raises."""
+    versions = document_versions(spark, directory, stem)
+    if not versions:
+        return [], None
+    return versions, json.loads(_fs_read_text(spark, _document_path(directory, stem, versions[-1])))
+
+
+def write_document(spark, directory: str, stem: str, versions: list[int], value) -> None:
+    """Write ``value`` as the version after ``versions`` (what
+    :func:`document_versions` returned) under a fresh name, then delete
+    the older versions: the newest complete version is never deleted
+    before its successor landed."""
+    new = (versions[-1] if versions else 0) + 1
+    _fs_write_text_atomic(spark, _document_path(directory, stem, new), json.dumps(value))
+    for v in versions:
+        fs, old = _hadoop_fs(spark, _document_path(directory, stem, v))
+        _fs_checked(fs.delete(old, False), "delete", old.toString())
 
 
 def _child(hpath, rel: str):

@@ -15,8 +15,9 @@ Which files are drained is a JSON ledger under ``checkpoint_dir``
 (``drained-<n>.json``, the highest ``n`` is live): the relative names
 of every inbox file folded in so far. A name once recorded is never
 read again, even with new content. Each update writes the next version
-under a fresh name and deletes older versions only after it landed, so
-no crash leaves the drained names unrecorded once they were recorded.
+under a fresh name and deletes older versions only after it landed
+(``sources.commit.write_document``), so no crash leaves the drained
+names unrecorded once they were recorded.
 A ``checkpoint_dir`` without a ledger (a new one, or one left by a
 Structured Streaming drain) drains every file in the inbox.
 
@@ -49,8 +50,6 @@ one:
 
 from __future__ import annotations
 
-import json
-import re
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
@@ -58,9 +57,6 @@ from pyspark.sql.types import StructType
 
 from ..operators.scd import create_scd_from_input, merge_scd, scd_schema
 from ..sources import commit
-
-# a ledger version under ``checkpoint_dir``: the inbox names drained so far
-_LEDGER = re.compile(r"drained-(\d+)\.json")
 
 
 def scd_upsert_batch(
@@ -89,32 +85,6 @@ def scd_upsert_batch(
     commit.write(spark, dim_path, merged, retire=commit.live_files(spark, dim_path))
 
 
-def _ledger(spark: SparkSession, checkpoint_dir: str) -> tuple[list[int], set[str]]:
-    """(versions of the ledger on disk, names the newest one records).
-    No ledger records nothing; an unreadable one raises."""
-    fs, root = commit._hadoop_fs(spark, checkpoint_dir)
-    names = [st.getPath().getName() for st in fs.listStatus(root)] if fs.exists(root) else []
-    versions = sorted(int(m.group(1)) for n in names if (m := _LEDGER.fullmatch(n)))
-    if not versions:
-        return [], set()
-    return versions, set(json.loads(commit._fs_read_text(spark, _ledger_path(checkpoint_dir, versions[-1]))))
-
-
-def _ledger_path(checkpoint_dir: str, version: int) -> str:
-    return f"{checkpoint_dir.rstrip('/')}/drained-{version}.json"
-
-
-def _record_drained(spark: SparkSession, checkpoint_dir: str, versions: list[int], names: set[str]) -> None:
-    """Write ``names`` as the next ledger version under a fresh name,
-    then delete the older versions: the newest complete version is
-    never deleted before its successor landed."""
-    new = (versions[-1] if versions else 0) + 1
-    commit._fs_write_text_atomic(spark, _ledger_path(checkpoint_dir, new), json.dumps(sorted(names)))
-    for v in versions:
-        fs, old = commit._hadoop_fs(spark, _ledger_path(checkpoint_dir, v))
-        commit._fs_checked(fs.delete(old, False), "delete", old.toString())
-
-
 def scd_stream_upsert(
     spark: SparkSession,
     staging_dir: str,
@@ -134,7 +104,9 @@ def scd_stream_upsert(
     fs, inbox = commit._hadoop_fs(spark, staging_dir)
     if not fs.exists(inbox):
         spark.read.schema(schema).parquet(staging_dir)  # raises Spark's own PATH_NOT_FOUND
-    versions, drained = _ledger(spark, checkpoint_dir)
+    # no ledger records nothing; an unreadable one raises
+    versions, drained = commit.read_document(spark, checkpoint_dir, "drained")
+    drained = set(drained or ())
     new = sorted(set(commit._data_files(fs, inbox)) - drained)
     if not new:
         return
@@ -143,4 +115,4 @@ def scd_stream_upsert(
     scd_upsert_batch(spark, batch, dim_path, natural_key, date_col, attribute_cols)
     # after the dimension's commit: a crash before this line re-folds the
     # files on the next call, which leaves the dimension as it is
-    _record_drained(spark, checkpoint_dir, versions, drained | set(new))
+    commit.write_document(spark, checkpoint_dir, "drained", versions, sorted(drained | set(new)))

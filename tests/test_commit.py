@@ -17,17 +17,20 @@ readers and the listing watermark see all of the write or none of it.
 Re-running the writer equals the clean run row for row and leaves no
 stage.
 
-The dimension drain records the files it drained in a ledger after the
-dimension's commit, so it has three more crash points, all after the
-dimension is complete:
+Three writers record a versioned JSON document after their table's
+commit (``commit.write_document``): the dimension drain its ledger of
+drained files, and the IVF build and a tokened IVF append the index
+manifest. They have three more crash points, all after the table is
+complete:
 
-- ``before_ledger``: the ledger is as it was;
-- ``inside_ledger``: the next ledger version is written under its
+- ``before_ledger``: the document is as it was;
+- ``inside_ledger``: the next document version is written under its
   temporary name, not yet renamed into place;
 - ``ledger_landed``: the next version is in place, the older one not
   yet deleted.
 
-Re-running the drain then equals the clean run's dimension and ledger.
+Re-running the writer then equals the clean run's table and document
+(and, for an index, its query results).
 """
 
 import contextlib
@@ -35,6 +38,7 @@ import datetime
 import glob
 import os
 import random
+import re
 import shutil
 
 import pyarrow as pa
@@ -55,7 +59,6 @@ from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spar
 from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spark.streaming.incremental import (
     _listed_watermark,
 )
-from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spark.streaming import scd_stream
 from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spark.streaming.scd_stream import (
     scd_stream_upsert,
 )
@@ -113,6 +116,24 @@ def _ivf_append(spark, root):
     return path, lambda: append_to_ivf_index(emb.where("vec_id >= 100"), path)
 
 
+def _ivf_build(spark, root):
+    """A rebuild over a smaller index: the build retires every list
+    file of the old one and replaces its manifest."""
+    emb = _vectors(spark)
+    path = str(root / "idx")
+    build_ivf_index(emb.where("vec_id < 100"), path, n_cells=4, iters=1)
+    return path, lambda: build_ivf_index(emb, path, n_cells=4, iters=1)
+
+
+def _ivf_token_append(spark, root):
+    """A tokened append: its token is recorded in the next manifest
+    version after the lists' commit."""
+    emb = _vectors(spark)
+    path = str(root / "idx")
+    build_ivf_index(emb.where("vec_id < 100"), path, n_cells=4, iters=1)
+    return path, lambda: append_to_ivf_index(emb.where("vec_id >= 100"), path, batch_token="t-1")
+
+
 def _ivf_compaction(spark, root):
     """Tombstones in several cells, so the compaction rewrites several.
     The update's first step is a compaction."""
@@ -143,8 +164,10 @@ WRITERS = {
     "dimension_drain": _dimension_drain,
     "fact_append": _fact_append,
     "ivf_append": _ivf_append,
+    "ivf_build": _ivf_build,
     "ivf_compaction": _ivf_compaction,
     "ivf_tombstone_sidecar": _ivf_tombstone_sidecar,
+    "ivf_token_append": _ivf_token_append,
 }
 
 
@@ -160,6 +183,12 @@ class Crash(Exception):
 
 CRASHES = ["mid_stage_write", "after_intent", "between_moves"]
 LEDGER_CRASHES = ["before_ledger", "inside_ledger", "ledger_landed"]
+# the writers that record a document, and its directory and stem
+DOCUMENTS = {
+    "dimension_drain": ("ckpt", "drained"),
+    "ivf_build": ("idx_manifest", "manifest"),
+    "ivf_token_append": ("idx_manifest", "manifest"),
+}
 
 
 def _inject(monkeypatch, crash):
@@ -167,7 +196,7 @@ def _inject(monkeypatch, crash):
         real_write = commit._fs_write_text_atomic
 
         def write_text(spark, path, text):
-            if "/drained-" not in path:
+            if not re.search(r"/(drained|manifest)-\d+\.json$", path):
                 return real_write(spark, path, text)
             if crash == "inside_ledger":  # leaves exactly the temporary file a rename was due to move
                 real_write(spark, path + ".tmp", text)
@@ -219,8 +248,8 @@ def uncoalesced_shuffles(spark):
 
 @pytest.mark.parametrize(
     "writer, crash",
-    [pytest.param(w, c, id=f"{w}-{c}") for w in WRITERS for c in CRASHES]
-    + [pytest.param("dimension_drain", c, id=f"dimension_drain-{c}") for c in LEDGER_CRASHES],
+    [pytest.param(w, c, id=f"{w}-{c}") for w in WRITERS if w != "ivf_token_append" for c in CRASHES]
+    + [pytest.param(w, c, id=f"{w}-{c}") for w in DOCUMENTS for c in LEDGER_CRASHES],
 )
 def test_crashed_write_converges(spark, tmp_path, monkeypatch, uncoalesced_shuffles, writer, crash):
     setup = WRITERS[writer]
@@ -237,7 +266,7 @@ def test_crashed_write_converges(spark, tmp_path, monkeypatch, uncoalesced_shuff
     monkeypatch.undo()
 
     stage = commit.stage_path(path)
-    committed = crash in LEDGER_CRASHES  # the dimension's commit completed
+    committed = crash in LEDGER_CRASHES  # the table's commit completed
     assert os.path.exists(os.path.join(stage, commit.INTENT)) == (crash != "mid_stage_write" and not committed)
     if crash in ("mid_stage_write", "after_intent"):
         # nothing live is touched before the roll-forward starts
@@ -261,11 +290,23 @@ def test_crashed_write_converges(spark, tmp_path, monkeypatch, uncoalesced_shuff
     run()
     assert _view(spark, path) == want
     assert not os.path.exists(stage)
+    if writer in DOCUMENTS:
+        directory, stem = DOCUMENTS[writer]
+        docs = [commit.read_document(spark, str(tmp_path / side / directory), stem)[1] for side in ("clean", "crash")]
+        assert docs[0] == docs[1]
     if writer == "dimension_drain":
         assert len(want[0]) == 4
         assert sorted(p.name for p in (tmp_path / "crash").iterdir()) == ["ckpt", "dim", "in"]
-        ledgers = [scd_stream._ledger(spark, str(tmp_path / side / "ckpt"))[1] for side in ("clean", "crash")]
-        assert ledgers[0] == ledgers[1] == {"day-0.parquet", "day-1.parquet"}
+        assert set(docs[0]) == {"day-0.parquet", "day-1.parquet"}
+    if writer.startswith("ivf_"):
+        queries = _vectors(spark).where("vec_id < 5")
+        hits = [
+            sorted(tuple(r) for r in query_ivf_index(queries, str(tmp_path / side / "idx"), k=10, n_probe=4).collect())
+            for side in ("clean", "crash")
+        ]
+        assert hits[0] == hits[1] and len(hits[0]) == 50
+    if writer == "ivf_token_append":
+        assert docs[0]["tokens"] == ["t-1"]
 
 
 def test_write_retiring_every_file_of_a_partition_drops_its_directory(spark, tmp_path):

@@ -494,9 +494,9 @@ def test_query_side_rejects_zero_norm_query_vector(spark, tmp_path):
 
 
 # ---------------------------------------------------------------------
-# The inverted-list schema sidecar (<path>_schema) is an optimization,
-# never a correctness input: with it gone, reads fall back to parquet
-# inference and every query returns the same rows.
+# The manifest (<path>_manifest/manifest-<n>.json) describes the index:
+# its recorded list schema is the schema parquet inference reports, and
+# a corrupt manifest raises before anything is appended or queried.
 # ---------------------------------------------------------------------
 
 
@@ -507,22 +507,27 @@ def _ranked(df):
 
 
 @pytest.mark.parametrize("hierarchical", [False, True])
-def test_query_without_schema_sidecar_falls_back_to_inference(spark, tmp_path, hierarchical):
-    import os
+def test_corrupt_manifest_raises_before_any_append(spark, tmp_path, hierarchical):
+    from pyspark.sql.types import StructType
+
+    from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spark.sources import commit
 
     emb = load_table(spark, SF_DIR, "embeddings")
     path = str(tmp_path / "idx")
-    if hierarchical:
-        similarity.build_ivf2_index(emb, path, n_cells=16, iters=2)
-    else:
-        similarity.build_ivf_index(emb, path, n_cells=8, iters=2)
-    qs = emb.where("vec_id < 5")
-    before = _ranked(similarity.query_ivf_index(qs, path, k=10, n_probe=3))
-    assert os.path.exists(path + "_schema")
-    os.remove(path + "_schema")
-    after = _ranked(similarity.query_ivf_index(qs, path, k=10, n_probe=3))
-    assert after == before
-    assert len(before) == 50
+    build = similarity.build_ivf2_index if hierarchical else similarity.build_ivf_index
+    build(emb.where("vec_id % 10 != 0"), path, n_cells=16 if hierarchical else 8, iters=2)
+    versions, manifest = commit.read_document(spark, path + "_manifest", "manifest")
+    assert versions == [1] and (manifest["l1"] is None) != hierarchical
+    assert StructType.fromJson(manifest["schema"]) == spark.read.parquet(path).schema
+    n_rows = spark.read.parquet(path).count()
+
+    # a torn version: the local filesystem's checksum or the JSON parse raises
+    (tmp_path / "idx_manifest" / "manifest-1.json").write_text('{"l2": [[0.5, ')
+    with pytest.raises(Exception, match="Checksum|JSON|Expecting"):
+        similarity.append_to_ivf_index(emb.where("vec_id % 10 = 0"), path, batch_token="t")
+    with pytest.raises(Exception, match="Checksum|JSON|Expecting"):
+        similarity.query_ivf_index(emb.where("vec_id < 5"), path, k=10).collect()
+    assert spark.read.parquet(path).count() == n_rows
 
 
 # ---------------------------------------------------------------------
@@ -548,14 +553,13 @@ def test_literal_scorers_reject_unsafe_vec_col_before_any_job(spark, vec_col):
 
 
 # ---------------------------------------------------------------------
-# Layout detection: both quantizers share one list schema and one
-# _centroids sidecar, and the layout is read from that sidecar's
-# supercell column alone — never from whether _supers exists.
+# Layout detection: both quantizers share one list schema, and the
+# layout is read from the manifest alone — a rebuild replaces all of it.
 # ---------------------------------------------------------------------
 
 
 def test_flat_rebuild_over_hierarchical_path_ignores_stale_supers(spark, tmp_path):
-    import os
+    from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spark.sources import commit
 
     emb = load_table(spark, SF_DIR, "embeddings")
     existing = emb.where("vec_id % 10 != 0")
@@ -566,10 +570,11 @@ def test_flat_rebuild_over_hierarchical_path_ignores_stale_supers(spark, tmp_pat
     for path in (reused, clean):
         similarity.build_ivf_index(existing, path, n_cells=8, iters=2)
         similarity.append_to_ivf_index(arriving, path)
-    # the hierarchical build's level-1 sidecar is still there...
-    assert os.path.exists(reused + "_supers")
+    # the flat build's manifest replaced the hierarchical one whole
+    versions, manifest = commit.read_document(spark, reused + "_manifest", "manifest")
+    assert versions == [2] and manifest["l1"] is None and manifest["cell2super"] is None
 
-    # ...and changes nothing: same lists, same neighbors as a clean path
+    # ...so the path routes as a clean one: same lists, same neighbors
     def lists(path):
         return sorted(
             (int(r["neighbor_id"]), int(r["cell"]), float(r["cn"]))
@@ -583,16 +588,19 @@ def test_flat_rebuild_over_hierarchical_path_ignores_stale_supers(spark, tmp_pat
 
 
 def test_hierarchical_index_without_supers_raises_instead_of_routing_flat(spark, tmp_path):
+    """An index whose manifest is gone has no quantizer, level-1 or
+    otherwise: appends and queries raise, and nothing is appended under
+    a layout guessed from the lists."""
     import shutil
 
     emb = load_table(spark, SF_DIR, "embeddings")
     path = str(tmp_path / "idx2")
     similarity.build_ivf2_index(emb.where("vec_id % 10 != 0"), path, n_cells=16, iters=2)
     n_rows = spark.read.parquet(path).count()
-    shutil.rmtree(path + "_supers")
-    with pytest.raises(RuntimeError, match="_supers"):
+    shutil.rmtree(path + "_manifest")
+    with pytest.raises(RuntimeError, match="no manifest"):
         similarity.append_to_ivf_index(emb.where("vec_id % 10 = 0"), path)
-    with pytest.raises(RuntimeError, match="_supers"):
+    with pytest.raises(RuntimeError, match="no manifest"):
         similarity.query_ivf_index(emb.where("vec_id < 5"), path, k=10).collect()
     # nothing was appended under a guessed flat routing
     assert spark.read.parquet(path).count() == n_rows

@@ -9,10 +9,9 @@ import shutil
 import subprocess
 import sys
 import textwrap
-from contextlib import contextmanager
 
 import pyspark.sql.functions as F
-from conftest import SF_DIR
+from conftest import SF_DIR, gateway_calls
 
 from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spark.plans import queries
 from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spark.plans.queries import (
@@ -29,24 +28,6 @@ from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spar
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 Q80_TABLES = ("region", "nation", "customer", "supplier", "orders", "lineitem")
-
-
-@contextmanager
-def _gateway_calls(spark):
-    """Count py4j round trips made inside the block (``[n]``)."""
-    client = spark.sparkContext._gateway._gateway_client
-    inner = client.send_command
-    n = [0]
-
-    def counted(*args, **kwargs):
-        n[0] += 1
-        return inner(*args, **kwargs)
-
-    client.send_command = counted
-    try:
-        yield n
-    finally:
-        del client.send_command
 
 
 def _stored(name: str) -> bool:
@@ -76,9 +57,9 @@ def test_second_call_returns_the_same_dataframe_without_building(spark):
     df = _memoized(fn, spark, SF_DIR)
     ((key, memo),) = [(k, m) for k, m in queries._PLAN_MEMO.items() if k[0] == "q80_local_supplier_volume"]
     assert {os.path.basename(p) for p, _ in memo.reads} == {f"{t}.parquet" for t in Q80_TABLES}
-    with _gateway_calls(spark) as call:
+    with gateway_calls(spark) as call:
         again = fn(spark, SF_DIR)
-    with _gateway_calls(spark) as lookup:
+    with gateway_calls(spark) as lookup:
         assert queries._conf_text(spark) == key[2]
         assert all(_fingerprint(spark, p) == fp for p, fp in memo.reads)
     assert again is df
@@ -294,3 +275,16 @@ def test_the_bound_evicts_the_oldest_entry(spark, monkeypatch):
     assert [_stored(f"memo_probe_lru_{i}") for i in range(3)] == [False, True, True]
     assert fns[2](spark, SF_DIR) is built[2]
     assert fns[0](spark, SF_DIR) is not built[0]
+
+
+def test_q01_cold_build_gateway_calls_are_bounded(spark):
+    """A cold build of q01 (memo cleared, schemas already read once)
+    makes about 241 py4j round trips. Casting its terminal decimals
+    column by column added about 179 more; the bound catches a return
+    to that."""
+    fn = registry()["q01_pricing_summary"].fn
+    fn(spark, SF_DIR)
+    clear_plan_memo()
+    with gateway_calls(spark) as calls:
+        fn(spark, SF_DIR)
+    assert calls[0] <= 300
