@@ -183,9 +183,9 @@ def _driver_checked_rounds() -> dict[str, list[int]]:
 
 def main() -> None:
     from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spark import get_spark
+    from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spark.plans.memo import clear_plan_memo
     from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spark.plans.queries import (
         registry,
-        clear_plan_memo,
         release_persisted,
     )
 

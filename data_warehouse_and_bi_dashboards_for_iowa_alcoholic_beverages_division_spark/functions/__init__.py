@@ -1,1 +1,1 @@
-from .dates import build_date_dim, season_name_expr, season_number_expr  # noqa: F401
+from .dates import build_date_dim  # noqa: F401

@@ -21,47 +21,35 @@ The vector oracles share one SQL kit (the "Shared oracle kit" section:
 scores, seeds, argmax/argmin, the Lloyd step, the flat/hierarchical IVF
 and PQ unrolls, top-10, recall@10, occupancy and tombstone terminals).
 
-Plan memo. ``QuerySpec.fn`` returns the DataFrame an earlier call built
-while nothing it depends on has changed, so a dashboard refresh
-re-collects it: Spark reuses its executed plan, its broadcast relations
-and the shuffle stages adaptive execution already materialized.
+Plan memo. ``QuerySpec.fn`` builds through ``plans.memo``: it returns
+the DataFrame an earlier call built while every file that build read is
+unchanged, so a dashboard refresh re-collects it.
 
-- **Key:** the query name, ``abspath(sf_dir)`` and the text of every
-  conf set in the session at lookup.
-- **Hit:** the entry was built by this same ``SparkSession`` object (an
-  entry of any other session is dropped), and every path the build read
-  through ``sources.tables.read_parquet`` (``recorded_reads``) still
-  has the size and mtime of each of its files. A ``commit.write`` to
-  any table the plan reads, broadcast sides included, is a miss.
-- **Never memoized:** a build that read nothing through
-  ``read_parquet`` or a path it could not fingerprint, ran a Spark job
-  (schema inference, an eager persist or checkpoint, a side index), grew
-  ``_PERSISTED``, reads a checkpoint (a ``LogicalRDD`` leaf), is not
-  deterministic (``rand()``, ``monotonically_increasing_id``), or scans
-  a file outside the paths it recorded (``spark.read`` of an IVF or
-  side index).
-- **Bound:** an LRU of ``_PLAN_MEMO_SIZE`` entries.
-  ``clear_plan_memo()`` empties it for callers that measure a build.
+Dashboard visuals. The Spark side of the visuals a dashboard page
+refreshes (q01 q09 q16 q23-q28 q53 q80) is one ``spark.sql`` text each
+over the ``read_parquet`` DataFrames it names as keyword arguments,
+terminal DOUBLE casts included: each DataFrame step of a chain is a
+Dataset analyzed eagerly and each ``F.*`` call a gateway lookup, so the
+chains cost about three times the round trips. Each oracle stays a text
+of its own, so the two sides are still two independent derivations.
 """
 
 from __future__ import annotations
 
 import os
-from collections import OrderedDict
 from collections.abc import Callable
 from dataclasses import dataclass
-from urllib.parse import unquote, urlparse
 
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 
-from ..functions.dates import build_date_dim, season_name_expr, season_number_expr
+from ..functions.dates import SEASON_NAME_SQL, SEASON_NUMBER_SQL, build_date_dim, calendar_sql
 from ..functions.rounding import floor_round6, floor_round6_sql
 from ..operators import bloomfilter, dedup, multimodal, retrieval, similarity, sketches, text
 from ..operators.scd import create_scd_from_input, scd_point_in_time_join, scd_update_and_insert
-from ..sources.tables import _fingerprint, load_table, recorded_reads
-from .pipeline import revenue_by_weekday
-from .warehouse import COST_SQL, PROFIT_SQL, REVENUE_SQL, fact_sales
+from ..sources.tables import load_table
+from .memo import _PERSISTED, memoized
+from .warehouse import COST_SQL, FACT_SALES_SQL, PROFIT_SQL, REVENUE_SQL
 
 
 @dataclass(frozen=True)
@@ -132,84 +120,14 @@ _CANONICAL_DOUBLE: dict[str, tuple[str, ...]] = {
 }
 
 
-@dataclass(frozen=True)
-class _Memoized:
-    spark: SparkSession
-    reads: frozenset[tuple[str, tuple | None]]
-    df: DataFrame
-
-
-# Plan memo: registry builds by (query name, abspath(sf_dir), session
-# conf text), each with the session that built it and the reads it
-# recorded. One BI page is about a dozen visuals; 32 keeps a few pages
-# warm, while a sweep over the whole registry cannot pin every plan's
-# broadcast relations and shuffle files at once.
-_PLAN_MEMO_SIZE = 32
-_PLAN_MEMO: OrderedDict[tuple[str, str, str], _Memoized] = OrderedDict()
-
-
-def clear_plan_memo() -> None:
-    """Forget every memoized build, so the next call of each query
-    builds and plans afresh (for callers that measure a build)."""
-    _PLAN_MEMO.clear()
-
-
-def _conf_text(spark: SparkSession) -> str:
-    """Every conf set in ``spark``, sorted, as one string: three gateway
-    round trips, where ``spark.conf.getAll`` makes two per entry."""
-    return spark._jvm.java.util.TreeMap(spark._jsparkSession.conf().getAllAsJava()).toString()
-
-
-def _jobs_submitted(spark: SparkSession) -> int:
-    """Jobs the session's scheduler has ever been handed, counted when
-    they are submitted, so no queued job is missed."""
-    return spark.sparkContext._jsc.sc().dagScheduler().numTotalJobs()
-
-
-def _local_path(uri: str) -> str | None:
-    parsed = urlparse(uri)
-    return unquote(parsed.path) if parsed.scheme in ("", "file") else None
-
-
-def _memoizable(df: DataFrame, reads: set, jobs_before: int, persisted_before: int) -> bool:
-    """Whether a fresh build may be returned again: it read files only
-    through ``read_parquet``, all of them locally fingerprinted, ran no
-    job, tracked no persist, reads no checkpoint and is deterministic."""
-    if not reads or any(fp is None for _, fp in reads):
-        return False
-    if _jobs_submitted(df.sparkSession) != jobs_before or len(_PERSISTED) != persisted_before:
-        return False
-    analyzed = df._jdf.queryExecution().analyzed()
-    if not analyzed.deterministic():
-        return False
-    leaves = analyzed.collectLeaves()
-    if any(leaves.apply(i).nodeName() == "LogicalRDD" for i in range(leaves.size())):
-        return False  # a checkpoint, or rows built on the driver
-    roots = [path for path, _ in reads]
-    for uri in df.inputFiles():
-        local = _local_path(uri)
-        if local is None or not any(local == r or local.startswith(r + os.sep) for r in roots):
-            return False
-    return True
-
-
 def _registered_fn(name: str, fn: Callable[[SparkSession, str], DataFrame]):
-    """``fn`` with its terminal decimals cast (``_CANONICAL_DOUBLE``),
-    memoized per session while the files its build read are unchanged."""
+    """``fn`` built through the plan memo, with each terminal decimal
+    (``_CANONICAL_DOUBLE``) its text did not cast already cast here."""
     cols = _CANONICAL_DOUBLE.get(name)
 
-    def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
-        for stale in [k for k, m in _PLAN_MEMO.items() if m.spark is not spark]:
-            del _PLAN_MEMO[stale]
-        key = (name, os.path.abspath(sf_dir), _conf_text(spark))
-        memo = _PLAN_MEMO.pop(key, None)
-        if memo is not None and all(_fingerprint(spark, path) == fp for path, fp in memo.reads):
-            _PLAN_MEMO[key] = memo
-            return memo.df
-        jobs, persisted = _jobs_submitted(spark), len(_PERSISTED)
-        with recorded_reads() as reads:
-            df = fn(spark, sf_dir)
-        if cols:
+    def build(spark: SparkSession, sf_dir: str) -> DataFrame:
+        df = fn(spark, sf_dir)
+        if cols and any(t != "double" for c, t in df.dtypes if c in cols):
             # one selectExpr: a gateway call for the whole projection
             # where F.col costs several per column
             exprs = []
@@ -217,11 +135,10 @@ def _registered_fn(name: str, fn: Callable[[SparkSession, str], DataFrame]):
                 quoted = "`" + c.replace("`", "``") + "`"
                 exprs.append(f"CAST({quoted} AS DOUBLE) AS {quoted}" if c in cols else quoted)
             df = df.selectExpr(*exprs)
-        if _memoizable(df, reads, jobs, persisted):
-            _PLAN_MEMO[key] = _Memoized(spark, frozenset(reads), df)
-            if len(_PLAN_MEMO) > _PLAN_MEMO_SIZE:
-                _PLAN_MEMO.popitem(last=False)
         return df
+
+    def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
+        return memoized(spark, (name, os.path.abspath(sf_dir)), lambda: build(spark, sf_dir))
 
     wrapped.__name__ = fn.__name__
     wrapped.__doc__ = fn.__doc__
@@ -351,12 +268,11 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 
 # Queries that cache a multi-consumer intermediate (q139/q149/q154)
-# register the persisted DataFrame here so long-lived sweep sessions —
-# the 153-query gate, the bench loop — can release executor storage
-# after each query's terminal action instead of relying on LRU
-# eviction. A single query's cache is tiny; 153 of them in one session
-# is executor-memory pressure at scale.
-_PERSISTED: list[DataFrame] = []
+# register the persisted DataFrame in ``_PERSISTED`` (``plans.memo``) so
+# long-lived sweep sessions — the 153-query gate, the bench loop — can
+# release executor storage after each query's terminal action instead
+# of relying on LRU eviction. A single query's cache is tiny; 153 of
+# them in one session is executor-memory pressure at scale.
 
 
 def _persist(df: DataFrame, eager: bool = False) -> DataFrame:
@@ -461,13 +377,19 @@ def release_persisted() -> int:
     "Flagship scan→filter→hash-aggregate; filter pushed to parquet, decimal sums exact",
 )
 def q01(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem").where(F.col("l_shipdate") <= F.lit("2001-06-01 00:00:00").cast("timestamp"))
-    return li.groupBy("l_returnflag", "l_linestatus").agg(
-        F.sum(F.col("l_quantity").cast("decimal(12,2)")).alias("sum_qty"),
-        F.sum(F.col("l_extendedprice").cast("decimal(12,2)")).alias("sum_base"),
-        F.sum(F.expr(REVENUE_SQL)).alias("sum_rev"),
-        F.sum(F.expr(PROFIT_SQL)).alias("sum_profit"),
-        F.count("*").alias("n_rows"),
+    return spark.sql(
+        f"""
+        SELECT l_returnflag, l_linestatus,
+               CAST(SUM(CAST(l_quantity AS DECIMAL(12,2))) AS DOUBLE)      AS sum_qty,
+               CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2))) AS DOUBLE) AS sum_base,
+               CAST(SUM({REVENUE_SQL}) AS DOUBLE)                          AS sum_rev,
+               CAST(SUM({PROFIT_SQL}) AS DOUBLE)                           AS sum_profit,
+               COUNT(*)                                                    AS n_rows
+        FROM {{lineitem}}
+        WHERE l_shipdate <= CAST('2001-06-01 00:00:00' AS TIMESTAMP)
+        GROUP BY l_returnflag, l_linestatus
+        """,
+        lineitem=_t(spark, sf_dir, "lineitem"),
     )
 
 
@@ -665,10 +587,12 @@ def q08(spark: SparkSession, sf_dir: str) -> DataFrame:
     "A2: count_distinct (same-day-flip detection pattern)",
 )
 def q16(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return (
-        _t(spark, sf_dir, "lineitem")
-        .groupBy("l_partkey")
-        .agg(F.count_distinct("l_suppkey").alias("n_suppliers"), F.count("*").alias("n_rows"))
+    return spark.sql(
+        """
+        SELECT l_partkey, COUNT(DISTINCT l_suppkey) AS n_suppliers, COUNT(*) AS n_rows
+        FROM {lineitem} GROUP BY l_partkey
+        """,
+        lineitem=_t(spark, sf_dir, "lineitem"),
     )
 
 
@@ -690,14 +614,16 @@ def q16(spark: SparkSession, sf_dir: str) -> DataFrame:
     "O3: top-N by measure (dashboard Top-products bar)",
 )
 def q09(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
-    p = _t(spark, sf_dir, "part").select("p_partkey", "p_name")
-    agg = li.groupBy("l_partkey").agg(F.sum(F.expr(REVENUE_SQL)).alias("sum_rev"))
-    return (
-        agg.join(F.broadcast(p), agg["l_partkey"] == p["p_partkey"], "inner")
-        .select("p_partkey", "p_name", "sum_rev")
-        .orderBy(F.col("sum_rev").desc(), F.col("p_partkey").asc())
-        .limit(10)
+    return spark.sql(
+        f"""
+        SELECT /*+ BROADCAST(p) */ p.p_partkey, p.p_name, CAST(s.sum_rev AS DOUBLE) AS sum_rev
+        FROM (SELECT l_partkey, SUM({REVENUE_SQL}) AS sum_rev FROM {{lineitem}} GROUP BY l_partkey) s
+        JOIN {{part}} p ON s.l_partkey = p.p_partkey
+        ORDER BY s.sum_rev DESC, p.p_partkey ASC
+        LIMIT 10
+        """,
+        lineitem=_t(spark, sf_dir, "lineitem"),
+        part=_t(spark, sf_dir, "part"),
     )
 
 
@@ -865,6 +791,8 @@ def q20(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _FACT_JOIN_SQL = "FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey"
+# the calendar the star visuals join their fact to
+_STAR_CALENDAR_SQL = calendar_sql("1992-01-01", "2002-12-31")
 
 
 @register(
@@ -881,8 +809,18 @@ _FACT_JOIN_SQL = "FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey"
     "Dashboard: revenue/profit/count by weekday via date-dim star join",
 )
 def q23(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return revenue_by_weekday(
-        {"fact_sales": fact_sales(spark, sf_dir), "dim_date": build_date_dim(spark, "1992-01-01", "2002-12-31")}
+    return spark.sql(
+        f"""
+        SELECT /*+ BROADCAST(d) */ d.DayOfWeekNumber, d.DayOfWeekName,
+               CAST(SUM(f.revenue_usd) AS DOUBLE)      AS sum_rev,
+               CAST(SUM(f.gross_profit_usd) AS DOUBLE) AS sum_profit,
+               COUNT(*)                                AS n_sales
+        FROM ({FACT_SALES_SQL}) f
+        JOIN ({_STAR_CALENDAR_SQL}) d ON f.sale_date = d.FullDate
+        GROUP BY d.DayOfWeekNumber, d.DayOfWeekName
+        """,
+        lineitem=_t(spark, sf_dir, "lineitem"),
+        orders=_t(spark, sf_dir, "orders"),
     )
 
 
@@ -898,12 +836,17 @@ def q23(spark: SparkSession, sf_dir: str) -> DataFrame:
     "Dashboard: monthly revenue time series",
 )
 def q24(spark: SparkSession, sf_dir: str) -> DataFrame:
-    fact = fact_sales(spark, sf_dir)
-    dates = build_date_dim(spark, "1992-01-01", "2002-12-31").select("FullDate", "YearMonth")
-    return (
-        fact.join(F.broadcast(dates), fact["sale_date"] == dates["FullDate"], "inner")
-        .groupBy("YearMonth")
-        .agg(F.sum("revenue_usd").alias("sum_rev"), F.count("*").alias("n_sales"))
+    return spark.sql(
+        f"""
+        SELECT /*+ BROADCAST(d) */ d.YearMonth,
+               CAST(SUM(f.revenue_usd) AS DOUBLE) AS sum_rev,
+               COUNT(*)                           AS n_sales
+        FROM ({FACT_SALES_SQL}) f
+        JOIN ({_STAR_CALENDAR_SQL}) d ON f.sale_date = d.FullDate
+        GROUP BY d.YearMonth
+        """,
+        lineitem=_t(spark, sf_dir, "lineitem"),
+        orders=_t(spark, sf_dir, "orders"),
     )
 
 
@@ -921,14 +864,19 @@ def q24(spark: SparkSession, sf_dir: str) -> DataFrame:
     "Dashboard: top vendors by revenue",
 )
 def q25(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
-    s = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
-    agg = li.groupBy("l_suppkey").agg(F.sum(F.expr(REVENUE_SQL)).alias("sum_rev"), F.count("*").alias("n_sales"))
-    return (
-        agg.join(F.broadcast(s), agg["l_suppkey"] == s["s_suppkey"], "inner")
-        .select("s_suppkey", "s_name", "sum_rev", "n_sales")
-        .orderBy(F.col("sum_rev").desc(), F.col("s_suppkey").asc())
-        .limit(10)
+    return spark.sql(
+        f"""
+        SELECT /*+ BROADCAST(s) */ s.s_suppkey, s.s_name, CAST(v.sum_rev AS DOUBLE) AS sum_rev, v.n_sales
+        FROM (
+          SELECT l_suppkey, SUM({REVENUE_SQL}) AS sum_rev, COUNT(*) AS n_sales
+          FROM {{lineitem}} GROUP BY l_suppkey
+        ) v
+        JOIN {{supplier}} s ON v.l_suppkey = s.s_suppkey
+        ORDER BY v.sum_rev DESC, s.s_suppkey ASC
+        LIMIT 10
+        """,
+        lineitem=_t(spark, sf_dir, "lineitem"),
+        supplier=_t(spark, sf_dir, "supplier"),
     )
 
 
@@ -947,20 +895,20 @@ def q25(spark: SparkSession, sf_dir: str) -> DataFrame:
     "Dashboard drill-down: region→nation rollup (GROUPING SETS)",
 )
 def q26(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
-    o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    c = _t(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    n = _t(spark, sf_dir, "nation").select("n_nationkey", "n_name", "n_regionkey")
-    r = _t(spark, sf_dir, "region").select("r_regionkey", "r_name")
-    joined = (
-        li.join(o, li["l_orderkey"] == o["o_orderkey"])
-        .join(F.broadcast(c), o["o_custkey"] == c["c_custkey"])
-        .join(F.broadcast(n), c["c_nationkey"] == n["n_nationkey"])
-        .join(F.broadcast(r), n["n_regionkey"] == r["r_regionkey"])
-        .select(F.col("r_name").alias("region_name"), F.col("n_name").alias("nation_name"), F.expr(REVENUE_SQL).alias("rev"))
-    )
-    return joined.rollup("region_name", "nation_name").agg(
-        F.sum("rev").alias("sum_rev"), F.count("*").alias("n_sales")
+    return spark.sql(
+        f"""
+        SELECT region_name, nation_name, CAST(SUM(rev) AS DOUBLE) AS sum_rev, COUNT(*) AS n_sales
+        FROM (
+          SELECT /*+ BROADCAST(c, n, r) */ r.r_name AS region_name, n.n_name AS nation_name, {REVENUE_SQL} AS rev
+          FROM {{lineitem}} l
+          JOIN {{orders}} o   ON l.l_orderkey = o.o_orderkey
+          JOIN {{customer}} c ON o.o_custkey = c.c_custkey
+          JOIN {{nation}} n   ON c.c_nationkey = n.n_nationkey
+          JOIN {{region}} r   ON n.n_regionkey = r.r_regionkey
+        )
+        GROUP BY ROLLUP (region_name, nation_name)
+        """,
+        **{t: _t(spark, sf_dir, t) for t in ("lineitem", "orders", "customer", "nation", "region")},
     )
 
 
@@ -976,11 +924,15 @@ def q26(spark: SparkSession, sf_dir: str) -> DataFrame:
     "Dashboard KPI card: grand totals",
 )
 def q27(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _t(spark, sf_dir, "lineitem").agg(
-        F.sum(F.expr(REVENUE_SQL)).alias("total_revenue"),
-        F.sum(F.expr(PROFIT_SQL)).alias("total_profit"),
-        F.count("*").alias("n_lineitems"),
-        F.count_distinct("l_orderkey").alias("n_orders"),
+    return spark.sql(
+        f"""
+        SELECT CAST(SUM({REVENUE_SQL}) AS DOUBLE) AS total_revenue,
+               CAST(SUM({PROFIT_SQL}) AS DOUBLE)  AS total_profit,
+               COUNT(*)                           AS n_lineitems,
+               COUNT(DISTINCT l_orderkey)         AS n_orders
+        FROM {{lineitem}}
+        """,
+        lineitem=_t(spark, sf_dir, "lineitem"),
     )
 
 
@@ -1001,10 +953,16 @@ def q27(spark: SparkSession, sf_dir: str) -> DataFrame:
     "F4: astronomical-season bucketing (reference season ladder)",
 )
 def q28(spark: SparkSession, sf_dir: str) -> DataFrame:
-    fact = fact_sales(spark, sf_dir).withColumn("FullDate", F.col("sale_date"))
-    return fact.groupBy(
-        season_number_expr().alias("season_number"), season_name_expr().alias("season_name")
-    ).agg(F.sum("revenue_usd").alias("sum_rev"), F.count("*").alias("n_sales"))
+    return spark.sql(
+        f"""
+        SELECT {SEASON_NUMBER_SQL} AS season_number, {SEASON_NAME_SQL} AS season_name,
+               CAST(SUM(revenue_usd) AS DOUBLE) AS sum_rev, COUNT(*) AS n_sales
+        FROM (SELECT sale_date AS FullDate, revenue_usd FROM ({FACT_SALES_SQL}))
+        GROUP BY season_number, season_name
+        """,
+        lineitem=_t(spark, sf_dir, "lineitem"),
+        orders=_t(spark, sf_dir, "orders"),
+    )
 
 
 # =====================================================================
@@ -2121,16 +2079,16 @@ def q52(spark: SparkSession, sf_dir: str) -> DataFrame:
     "Analytic frame: per-customer running revenue (rowsBetween unbounded preceding)",
 )
 def q53(spark: SparkSession, sf_dir: str) -> DataFrame:
-    w = (
-        Window.partitionBy("o_custkey")
-        .orderBy(F.col("o_orderdate").asc(), F.col("o_orderkey").asc())
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    return _t(spark, sf_dir, "orders").select(
-        "o_custkey",
-        "o_orderkey",
-        F.to_date("o_orderdate").alias("order_date"),
-        F.sum(F.col("o_totalprice").cast("decimal(12,2)")).over(w).alias("running_spend"),
+    return spark.sql(
+        """
+        SELECT o_custkey, o_orderkey, to_date(o_orderdate) AS order_date,
+               CAST(SUM(CAST(o_totalprice AS DECIMAL(12,2))) OVER (
+                 PARTITION BY o_custkey ORDER BY o_orderdate ASC, o_orderkey ASC
+                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
+               ) AS DOUBLE) AS running_spend
+        FROM {orders}
+        """,
+        orders=_t(spark, sf_dir, "orders"),
     )
 
 
@@ -2963,26 +2921,22 @@ def q79(spark: SparkSession, sf_dir: str) -> DataFrame:
     "shuffle is the final 5-row hash aggregate",
 )
 def q80(spark: SparkSession, sf_dir: str) -> DataFrame:
-    region = _t(spark, sf_dir, "region").where(F.col("r_name") == "ASIA")
-    nation = _t(spark, sf_dir, "nation")
-    cust = _t(spark, sf_dir, "customer")
-    supp = _t(spark, sf_dir, "supplier")
-    orders = _t(spark, sf_dir, "orders").where(
-        (F.col("o_orderdate") >= F.lit("1997-01-01 00:00:00").cast("timestamp"))
-        & (F.col("o_orderdate") < F.lit("1998-01-01 00:00:00").cast("timestamp"))
-    )
-    li = _t(spark, sf_dir, "lineitem")
-    return (
-        li.join(F.broadcast(orders), li["l_orderkey"] == orders["o_orderkey"])
-        .join(F.broadcast(cust), orders["o_custkey"] == cust["c_custkey"])
-        .join(
-            F.broadcast(supp),
-            (li["l_suppkey"] == supp["s_suppkey"]) & (supp["s_nationkey"] == cust["c_nationkey"]),
-        )
-        .join(F.broadcast(nation), cust["c_nationkey"] == nation["n_nationkey"])
-        .join(F.broadcast(region), nation["n_regionkey"] == region["r_regionkey"])
-        .groupBy("n_name")
-        .agg(F.sum(F.expr(REVENUE_SQL)).alias("revenue"))
+    return spark.sql(
+        f"""
+        SELECT /*+ BROADCAST(o, c, s, n, r) */ n.n_name, CAST(SUM({REVENUE_SQL}) AS DOUBLE) AS revenue
+        FROM {{lineitem}} l
+        JOIN (
+          SELECT * FROM {{orders}}
+          WHERE o_orderdate >= CAST('1997-01-01 00:00:00' AS TIMESTAMP)
+            AND o_orderdate < CAST('1998-01-01 00:00:00' AS TIMESTAMP)
+        ) o ON l.l_orderkey = o.o_orderkey
+        JOIN {{customer}} c ON o.o_custkey = c.c_custkey
+        JOIN {{supplier}} s ON l.l_suppkey = s.s_suppkey AND s.s_nationkey = c.c_nationkey
+        JOIN {{nation}} n   ON c.c_nationkey = n.n_nationkey
+        JOIN (SELECT * FROM {{region}} WHERE r_name = 'ASIA') r ON n.n_regionkey = r.r_regionkey
+        GROUP BY n.n_name
+        """,
+        **{t: _t(spark, sf_dir, t) for t in ("lineitem", "orders", "customer", "supplier", "nation", "region")},
     )
 
 

@@ -42,6 +42,24 @@ COST_SQL = (
 )
 PROFIT_SQL = f"({REVENUE_SQL}) - ({COST_SQL})"
 
+_ORDER_COLUMNS = ("o_orderkey", "o_custkey", "o_orderdate", "o_orderstatus", "o_orderpriority")
+# the measures and degenerate dimension the fact derives from its join
+_FACT_MEASURES = (
+    "to_date(o_orderdate) AS sale_date",
+    f"{REVENUE_SQL} AS revenue_usd",
+    f"{COST_SQL} AS total_cost_usd",
+    f"{PROFIT_SQL} AS gross_profit_usd",
+    "CAST(l_quantity AS DECIMAL(12,2)) AS quantity",
+    "concat('INV-', CAST(o_orderkey AS STRING)) AS invoice_number",
+)
+# ``fact_sales`` as SQL text over the ``spark.sql`` keyword DataFrames
+# ``{lineitem}`` and ``{orders}``, for the dashboard visuals that derive
+# the fact from base tables inside their own text
+FACT_SALES_SQL = (
+    f"SELECT *, {', '.join(_FACT_MEASURES)} FROM {{lineitem}}"
+    f" JOIN (SELECT {', '.join(_ORDER_COLUMNS)} FROM {{orders}}) ON l_orderkey = o_orderkey"
+)
+
 
 def fact_sales(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One row per lineitem with order context + exact-decimal measures.
@@ -51,19 +69,11 @@ def fact_sales(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``create_update_liqour_sales_fact_table.py:196-198``).
     """
     lineitem = load_table(spark, sf_dir, "lineitem")
-    orders = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey", "o_orderdate", "o_orderstatus", "o_orderpriority"
-    )
+    orders = load_table(spark, sf_dir, "orders").select(*_ORDER_COLUMNS)
     # one projection: each withColumn would re-analyse the whole plan
     # and cost its own py4j round trips
     return lineitem.join(orders, lineitem["l_orderkey"] == orders["o_orderkey"], "inner").selectExpr(
-        "*",
-        "to_date(o_orderdate) AS sale_date",
-        f"{REVENUE_SQL} AS revenue_usd",
-        f"{COST_SQL} AS total_cost_usd",
-        f"{PROFIT_SQL} AS gross_profit_usd",
-        "CAST(l_quantity AS DECIMAL(12,2)) AS quantity",
-        "concat('INV-', CAST(o_orderkey AS STRING)) AS invoice_number",
+        "*", *_FACT_MEASURES
     )
 
 

@@ -10,13 +10,48 @@ We instead pin the knobs that matter at 100 TB:
 - Arrow enabled for the few Pandas-UDF paths (vectorized transfer)
 - session timezone pinned to UTC so results are reproducible and
   comparable against external engines (DuckDB oracle)
+
+Driver code reaches the JVM through py4j, one gateway round trip per
+step. :func:`jvm_class` and :func:`jobs_submitted` keep the handles
+they resolve, so a repeated call does not walk to them again.
 """
 
 from __future__ import annotations
 
 import os
+import weakref
 
+from py4j.java_gateway import JavaClass
 from pyspark.sql import SparkSession
+
+
+# (gateway client, fully qualified class name) -> class handle
+_JVM_CLASSES: dict[tuple[object, str], JavaClass] = {}
+# the JVM ``DAGScheduler`` of each live SparkContext
+_DAG_SCHEDULERS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+
+def jvm_class(spark: SparkSession, fqn: str) -> JavaClass:
+    """The JVM class ``fqn`` (``"org.apache.hadoop.fs.Path"``), one
+    handle per gateway. ``spark._jvm.org.apache.hadoop.fs.Path`` asks
+    the gateway about each package step, five round trips before the
+    class is used; the handle is made without asking, and a name that
+    is no class fails where it is first used."""
+    client = spark._jvm._gateway_client
+    cls = _JVM_CLASSES.get((client, fqn))
+    if cls is None:
+        cls = _JVM_CLASSES[client, fqn] = JavaClass(fqn, client)
+    return cls
+
+
+def jobs_submitted(spark: SparkSession) -> int:
+    """Jobs the session's scheduler has ever been handed, counted when
+    they are submitted, so no queued job is missed: one round trip."""
+    sc = spark.sparkContext
+    dag = _DAG_SCHEDULERS.get(sc)
+    if dag is None:
+        dag = _DAG_SCHEDULERS[sc] = sc._jsc.sc().dagScheduler()
+    return dag.numTotalJobs()
 
 
 def default_parallelism() -> int:
@@ -30,6 +65,11 @@ def get_spark(app_name: str = "iowa-warehouse-engine", cores: int | None = None)
     Every config here is also the right *direction* on a 1000-executor
     cluster; only the magnitudes (shuffle partitions, broadcast
     threshold) would be re-tuned per deployment.
+
+    The cache of generated classes holds 512 where Spark's default
+    holds 100: one dashboard page compiles about 120, so with the
+    default a page built again from fresh plans (a plan-memo miss)
+    compiled most of its classes again and ran them unwarmed.
     """
     n = cores or default_parallelism()
     builder = (
@@ -53,6 +93,8 @@ def get_spark(app_name: str = "iowa-warehouse-engine", cores: int | None = None)
         # -- parquet scan sizing: 128 MB splits is the scale default --
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
         .config("spark.sql.parquet.filterPushdown", "true")
+        # -- generated classes: a whole dashboard page fits (static) ----
+        .config("spark.sql.codegen.cache.maxEntries", "512")
         # quieter local runs
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))

@@ -69,6 +69,7 @@ from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame
 from pyspark.sql.types import StructType
 
+from ..session import jvm_class
 from .metrics import observed_quality, quality_report
 
 STAGE = ".maint-tmp"
@@ -79,7 +80,7 @@ def _hadoop_fs(spark, path: str):
     """(fs, hpath) for ``path`` through the Hadoop FS API — the one
     place the Path/getFileSystem idiom lives, so existence probes,
     directory drops, and the empty-dir check cannot drift apart."""
-    hpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    hpath = jvm_class(spark, "org.apache.hadoop.fs.Path")(path)
     return hpath.getFileSystem(spark._jsc.hadoopConfiguration()), hpath
 
 

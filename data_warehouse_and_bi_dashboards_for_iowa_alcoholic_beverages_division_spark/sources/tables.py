@@ -33,11 +33,14 @@ directory names, and Spark infers its data columns from one file it
 chooses. Any error while reading a footer takes the inference read.
 
 Inside a ``recorded_reads()`` block, ``read_parquet`` also adds
-``(abspath, fingerprint)`` of each path it reads to the set the
-innermost block yielded; the fingerprint is None for a path that cannot
-be stat'ed locally. The registry's plan memo (``plans.queries``) keys a
-built DataFrame by those reads and reuses it while every fingerprint
-still matches. Outside any block a read records nothing.
+``(abspath, fingerprint)`` of each path it reads to the
+:class:`Recording` the innermost block yielded; the fingerprint is None
+for a path that cannot be stat'ed locally. It counts there, too, the
+jobs Spark ran to infer a schema that it then remembered under a
+fingerprint. The plan memo (``plans.memo``) keys a built DataFrame by
+those reads and reuses it while every fingerprint still matches; the
+jobs counted are the only ones it lets a build run. Outside any block a
+read records nothing.
 """
 
 from __future__ import annotations
@@ -45,11 +48,14 @@ from __future__ import annotations
 import os
 from collections.abc import Iterator
 from contextlib import contextmanager
+from dataclasses import dataclass, field
 
 import pyspark.sql.functions as F
 from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
+
+from ..session import jobs_submitted, jvm_class
 
 TABLES = (
     "region",
@@ -73,17 +79,28 @@ _SCHEMAS: dict[str, tuple[tuple, StructType]] = {}
 # footer key (``_footer_key``) -> schema Spark inferred for a file with it
 _FOOTERS: dict[tuple, StructType] = {}
 
-# the sets ``recorded_reads`` yielded, innermost last
-_RECORDINGS: list[set[tuple[str, tuple | None]]] = []
+
+@dataclass
+class Recording:
+    """What the ``read_parquet`` calls of one ``recorded_reads`` block
+    read: ``(abspath, fingerprint)`` of each path, and the jobs Spark
+    ran to infer the schemas remembered under those fingerprints."""
+
+    reads: set[tuple[str, tuple | None]] = field(default_factory=set)
+    inference_jobs: int = 0
+
+
+# the recordings ``recorded_reads`` yielded, innermost last
+_RECORDINGS: list[Recording] = []
 
 # the footer entry Spark writes its own schema into, and reads it back from
 SPARK_ROW_METADATA = "org.apache.spark.sql.parquet.row.metadata"
 
 
-def _fingerprint(spark: SparkSession, path: str) -> tuple | None:
-    """``(nanosAsLong, ((relpath, st_size, st_mtime_ns), ...))`` of a
-    file or of every file under a directory; None when the path cannot
-    be stat'ed locally (a URI, a glob, a missing path)."""
+def _file_stats(path: str) -> tuple | None:
+    """``((relpath, st_size, st_mtime_ns), ...)`` of a file or of every
+    file under a directory; None when the path cannot be stat'ed
+    locally (a URI, a glob, a missing path)."""
     try:
         if os.path.isdir(path):
             files = []
@@ -92,25 +109,29 @@ def _fingerprint(spark: SparkSession, path: str) -> tuple | None:
                     f = os.path.join(root, n)
                     st = os.stat(f)
                     files.append((os.path.relpath(f, path), st.st_size, st.st_mtime_ns))
-            stats = tuple(sorted(files))
-        else:
-            st = os.stat(path)
-            stats = (("", st.st_size, st.st_mtime_ns),)
+            return tuple(sorted(files))
+        st = os.stat(path)
+        return (("", st.st_size, st.st_mtime_ns),)
     except OSError:
         return None
-    return spark.conf.get(NANOS_AS_LONG, "false"), stats
+
+
+def _fingerprint(spark: SparkSession, path: str) -> tuple | None:
+    """``(nanosAsLong, _file_stats(path))``; None when the path cannot
+    be stat'ed locally."""
+    stats = _file_stats(path)
+    return None if stats is None else (spark.conf.get(NANOS_AS_LONG, "false"), stats)
 
 
 def _footer_key(spark: SparkSession, path: str, conf: str) -> tuple | None:
     """``(conf, parquet schema text, Spark row metadata)`` of the
     parquet file ``path``, read from its footer on the driver (row
     groups skipped); None when the footer cannot be read."""
-    jvm = spark._jvm
     try:
-        footer = jvm.org.apache.parquet.hadoop.ParquetFileReader.readFooter(
+        footer = jvm_class(spark, "org.apache.parquet.hadoop.ParquetFileReader").readFooter(
             spark._jsc.hadoopConfiguration(),
-            jvm.org.apache.hadoop.fs.Path(path),
-            jvm.org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS,
+            jvm_class(spark, "org.apache.hadoop.fs.Path")(path),
+            jvm_class(spark, "org.apache.parquet.format.converter.ParquetMetadataConverter").SKIP_ROW_GROUPS,
         )
         meta = footer.getFileMetaData()
         return conf, meta.getSchema().toString(), meta.getKeyValueMetaData().get(SPARK_ROW_METADATA)
@@ -119,14 +140,13 @@ def _footer_key(spark: SparkSession, path: str, conf: str) -> tuple | None:
 
 
 @contextmanager
-def recorded_reads() -> Iterator[set[tuple[str, tuple | None]]]:
-    """Yield a set that collects ``(abspath, _fingerprint)`` of every
-    ``read_parquet`` made inside the block and outside any block nested
-    in it."""
-    reads: set[tuple[str, tuple | None]] = set()
-    _RECORDINGS.append(reads)
+def recorded_reads() -> Iterator[Recording]:
+    """Yield a :class:`Recording` of every ``read_parquet`` made inside
+    the block and outside any block nested in it."""
+    recording = Recording()
+    _RECORDINGS.append(recording)
     try:
-        yield reads
+        yield recording
     finally:
         _RECORDINGS.pop()
 
@@ -144,8 +164,9 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     whose footer matches one read before plans without a job too."""
     key = os.path.abspath(path)
     fp = _fingerprint(spark, key)
-    if _RECORDINGS:
-        _RECORDINGS[-1].add((key, fp))
+    recording = _RECORDINGS[-1] if _RECORDINGS else None
+    if recording is not None:
+        recording.reads.add((key, fp))
     hit = _SCHEMAS.get(key)
     if fp is not None and hit is not None and hit[0] == fp:
         return spark.read.schema(hit[1]).parquet(path)
@@ -153,7 +174,11 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     if footer in _FOOTERS:
         df = spark.read.schema(_FOOTERS[footer]).parquet(path)
     else:
+        counted = recording is not None and fp is not None
+        jobs = jobs_submitted(spark) if counted else 0
         df = spark.read.parquet(path)
+        if counted:
+            recording.inference_jobs += jobs_submitted(spark) - jobs
         if footer is not None:
             _FOOTERS[footer] = df.schema
     if fp is not None:

@@ -33,6 +33,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import DateType
 
+from ..session import jvm_class
 from ..sources import commit
 from ..sources.commit import _hadoop_fs, _hidden, _holds_data
 
@@ -59,7 +60,7 @@ def incremental_delta(source: DataFrame, date_col: str, watermark) -> DataFrame:
 def _unescape(spark: SparkSession, s: str) -> str:
     if "%" not in s:  # nothing to unescape; spares a gateway call per directory
         return s
-    return spark._jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.unescapePathName(s)
+    return jvm_class(spark, "org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils").unescapePathName(s)
 
 
 def _listed_watermark(spark: SparkSession, target_path: str, date_col: str):

@@ -7,7 +7,7 @@ import pytest
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spark import get_spark
-from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spark.plans.queries import clear_plan_memo
+from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spark.plans.memo import clear_plan_memo
 
 
 @pytest.fixture(scope="session")

@@ -44,6 +44,7 @@ import shutil
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
+from conftest import gateway_calls
 from pyspark.sql import Row
 from pyspark.sql.types import DateType, LongType, StringType, StructField, StructType
 
@@ -307,6 +308,17 @@ def test_crashed_write_converges(spark, tmp_path, monkeypatch, uncoalesced_shuff
         assert hits[0] == hits[1] and len(hits[0]) == 50
     if writer == "ivf_token_append":
         assert docs[0]["tokens"] == ["t-1"]
+
+
+def test_recover_on_a_clean_table_gateway_calls_are_bounded(spark, tmp_path):
+    """Every writer runs ``recover`` first; on a clean table it is one
+    stage probe, 5 py4j round trips. Reaching ``Path`` one package at a
+    time made it 10."""
+    path = str(tmp_path / "t")
+    spark.createDataFrame([(1, "a")], "k long, p string").write.parquet(path)
+    with gateway_calls(spark) as calls:
+        assert commit.recover(spark, path) == {"action": "none"}
+    assert calls[0] <= 5
 
 
 def test_write_retiring_every_file_of_a_partition_drops_its_directory(spark, tmp_path):

@@ -19,6 +19,7 @@ SF_DIR = "/root/testdata/sf0.001"
 def test_full_warehouse_build_and_query(spark, tmp_path):
     paths = build_star_warehouse(spark, SF_DIR, str(tmp_path / "wh"))
     wh = read_warehouse(spark, paths)
+    assert sorted(wh) == sorted(paths)
 
     # fact row count preserved (every lineitem joined an order)
     assert wh["fact_sales"].count() == load_table(spark, SF_DIR, "lineitem").count()

@@ -7,12 +7,10 @@ import os
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
-from conftest import SF_DIR, jobs_of
+from conftest import SF_DIR, gateway_calls, jobs_of
 
-from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spark.plans.queries import (
-    clear_plan_memo,
-    registry,
-)
+from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spark.plans.memo import clear_plan_memo
+from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spark.plans.queries import registry
 from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spark.sources.tables import (
     NANOS_AS_LONG,
     load_table,
@@ -114,6 +112,20 @@ def test_new_file_with_a_known_footer_plans_without_a_job(spark, tmp_path):
     assert jobs == []
     assert df.schema == spark.read.parquet(second).schema
     assert sorted(df.collect()) == sorted(spark.read.parquet(second).collect())
+
+
+def test_new_file_with_a_known_footer_gateway_calls_are_bounded(spark, tmp_path):
+    """That read makes 26 py4j round trips: each JVM class the footer
+    read uses is looked up once per gateway. Walking to each class one
+    package at a time made it 42."""
+    schema = pa.schema([("k", pa.int64()), ("name", pa.string())])
+    first, second = str(tmp_path / "day_1.parquet"), str(tmp_path / "day_2.parquet")
+    pq.write_table(pa.table({"k": [1], "name": ["a"]}, schema=schema), first)
+    read_parquet(spark, first)
+    pq.write_table(pa.table({"k": [2], "name": ["b"]}, schema=schema), second)
+    with gateway_calls(spark) as calls:
+        read_parquet(spark, second)
+    assert calls[0] <= 26
 
 
 def test_same_names_with_a_changed_type_miss_the_footer_memo(spark, tmp_path):

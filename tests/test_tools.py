@@ -1,5 +1,5 @@
-"""Tests of the checked-in tools: pure helpers, and one subprocess
-smoke run of the profiler."""
+"""Tests of the checked-in tools: pure helpers, and two subprocess
+smoke runs of the profiler."""
 
 import importlib.util
 import os
@@ -29,6 +29,18 @@ def test_profile_query_reports_jobs_and_driver_gap():
     m = re.search(r"^q01_pricing_summary rep0 .*\bjobs=(\d+) .*\bdriverGap=(\d+\.\d+)s$", out.stdout, re.M)
     assert m, out.stdout
     assert int(m.group(1)) >= 1
+
+
+def test_profile_query_page_reports_each_visual_of_both_pages():
+    out = subprocess.run(
+        [sys.executable, os.path.join(_TOOLS, "profile_query.py"), "--page", "--sf", SF_DIR],
+        capture_output=True, text=True, timeout=600,
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    rows = re.findall(r"^(cold|warm) +(\w+) +\d+\.\d+ +\d+\.\d+ +\d+ +\d+ +\d+ +\d+\.\d$", out.stdout, re.M)
+    assert len(rows) == 24, out.stdout
+    assert [page for page, _ in rows] == ["cold"] * 12 + ["warm"] * 12
+    assert rows[11][1] == rows[23][1] == "revenue_by_weekday"
 
 
 _CANNED_PLAN = """\

@@ -114,8 +114,8 @@ def walk(spark) -> tuple[dict[str, dict[str, int]], dict[str, list[tuple[str, st
     part of the schema memo's fingerprint, so a table remembered
     before it would be inferred again by whichever query reads it
     next."""
+    from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spark.plans.memo import clear_plan_memo
     from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spark.plans.queries import (
-        clear_plan_memo,
         registry,
         release_persisted,
     )

@@ -17,6 +17,17 @@ wall grows per step of data).
     SPARK_GRAFT_SF_DIR=.localdata/sf1.0 python tools/profile_query.py q01_pricing_summary q23_star_weekday
     python tools/profile_query.py --sf /root/testdata/sf0.1 --reps 3 q199_ivf_incremental
     python tools/profile_query.py --reps 3 --sf .localdata/sf1.0 --sf .localdata/sf10 q217_ppm_decode
+
+``--page`` profiles a dashboard refresh instead: it builds the
+warehouse as the benchmark's ``dashboard`` set-up does, then runs the
+page's visuals (``perfbench/metrics.DASHBOARD_VISUALS``) in order twice
+on one session, the cold page and then the warm page. Per visual and
+page it prints the build and collect walls, the Spark jobs submitted,
+the build's py4j round trips (py4j's memory-delete commands left out:
+when they fire depends on Python's garbage collector) and the classes Spark's
+code generator compiled, with their compile milliseconds:
+
+    python tools/profile_query.py --page --sf /root/testdata/sf0.01
 """
 
 from __future__ import annotations
@@ -26,29 +37,90 @@ import os
 import statistics
 import sys
 import tempfile
+import time
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
 sys.path.insert(0, os.path.join(ROOT, "perfbench"))
 
+from metrics import DASHBOARD_VISUALS  # noqa: E402
 from spans import Tracer, read_event_log, spark_counters  # noqa: E402
+
+
+def _page(sf_dir: str) -> None:
+    """The cold and the warm dashboard page over a warehouse built from
+    ``sf_dir``: one row per visual and page."""
+    from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spark import get_spark
+    from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spark.plans import pipeline
+    from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spark.plans.queries import (
+        registry,
+        release_persisted,
+    )
+    from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spark.session import jobs_submitted
+
+    reg = registry()
+    spark = get_spark("profile-page")
+    client = spark.sparkContext._gateway._gateway_client
+    inner, calls = client.send_command, [0]
+
+    def counted(command, *args, **kwargs):
+        if not command.startswith("m\nd\n"):
+            calls[0] += 1
+        return inner(command, *args, **kwargs)
+
+    codegen = spark._jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    with tempfile.TemporaryDirectory(prefix="profile-page-") as out:
+        paths = pipeline.build_star_warehouse(spark, sf_dir, os.path.join(out, "warehouse"))
+
+        def build(name):
+            if name == "revenue_by_weekday":
+                return pipeline.revenue_by_weekday(pipeline.read_warehouse(spark, paths))
+            return reg[name].fn(spark, sf_dir)
+
+        print(f"{'page':5} {'visual':28} {'build_s':>8} {'collect_s':>9} {'jobs':>4} {'py4j':>5} "
+              f"{'compiles':>8} {'compile_ms':>10}")
+        client.send_command = counted
+        try:
+            for page in ("cold", "warm"):
+                for name in DASHBOARD_VISUALS:
+                    jobs, n_compiled, compile_ns = jobs_submitted(spark), compiles.getCount(), codegen.compileTime()
+                    calls[0], t0 = 0, time.perf_counter()
+                    df = build(name)
+                    t1, build_calls = time.perf_counter(), calls[0]
+                    df.collect()
+                    t2 = time.perf_counter()
+                    print(f"{page:5} {name:28} {t1 - t0:8.3f} {t2 - t1:9.3f} {jobs_submitted(spark) - jobs:4d} "
+                          f"{build_calls:5d} {compiles.getCount() - n_compiled:8d} "
+                          f"{(codegen.compileTime() - compile_ns) / 1e6:10.1f}")
+                    release_persisted()
+        finally:
+            del client.send_command
+    spark.stop()
 
 
 def main() -> None:
     ap = argparse.ArgumentParser()
-    ap.add_argument("names", nargs="+")
+    ap.add_argument("names", nargs="*")
     ap.add_argument("--sf", action="append", help="scale-factor directory; repeatable")
     ap.add_argument("--reps", type=int, default=1)
+    ap.add_argument("--page", action="store_true", help="profile the cold and the warm dashboard page")
     args = ap.parse_args()
     sfs = args.sf or [os.environ.get("SPARK_GRAFT_SF_DIR")]
     if sfs == [None]:
         ap.error("give --sf or set SPARK_GRAFT_SF_DIR")
+    if args.page:
+        for sf in sfs:
+            _page(sf)
+        return
+    if not args.names:
+        ap.error("name the queries to profile, or give --page")
 
     from pyspark import SparkContext
 
     from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spark import get_spark
+    from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spark.plans.memo import clear_plan_memo
     from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spark.plans.queries import (
-        clear_plan_memo,
         registry,
         release_persisted,
     )
