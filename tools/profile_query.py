@@ -24,8 +24,8 @@ page's visuals (``perfbench/metrics.DASHBOARD_VISUALS``) in order twice
 on one session, the cold page and then the warm page. Per visual and
 page it prints the build and collect walls, the Spark jobs submitted,
 the build's py4j round trips (py4j's memory-delete commands left out:
-when they fire depends on Python's garbage collector) and the classes Spark's
-code generator compiled, with their compile milliseconds:
+when they fire depends on Python's garbage collector) and the classes
+Spark's code generator compiled, with their compile milliseconds:
 
     python tools/profile_query.py --page --sf /root/testdata/sf0.01
 """
