@@ -116,7 +116,12 @@ def read_warehouse(spark: SparkSession, paths: Mapping[str, str]) -> Warehouse:
     return Warehouse(spark, paths)
 
 
-_REVENUE_BY_WEEKDAY_SQL = """
+def revenue_by_weekday_sql(fact: str, dates: str) -> str:
+    """The weekday visual's text over ``fact`` and ``dates``, each a
+    table reference or a parenthesized query: the written warehouse's
+    tables here, ``plans.queries.q23``'s fact and calendar queries over
+    the base tables there."""
+    return f"""
 SELECT /*+ BROADCAST(d) */ d.DayOfWeekNumber, d.DayOfWeekName,
        SUM(f.revenue_usd)      AS sum_rev,
        SUM(f.gross_profit_usd) AS sum_profit,
@@ -135,7 +140,8 @@ def revenue_by_weekday(wh: Warehouse) -> DataFrame:
     the last one built and reads no table."""
 
     def build() -> DataFrame:
-        return wh.spark.sql(_REVENUE_BY_WEEKDAY_SQL, fact=wh["fact_sales"], dates=wh["dim_date"])
+        sql = revenue_by_weekday_sql("{fact}", "{dates}")
+        return wh.spark.sql(sql, fact=wh["fact_sales"], dates=wh["dim_date"])
 
     paths = tuple(os.path.abspath(wh.paths[t]) for t in ("fact_sales", "dim_date"))
     return memoized(wh.spark, ("revenue_by_weekday", paths), build)

@@ -27,11 +27,12 @@ unchanged, so a dashboard refresh re-collects it.
 
 Dashboard visuals. The Spark side of the visuals a dashboard page
 refreshes (q01 q09 q16 q23-q28 q53 q80) is one ``spark.sql`` text each
-over the ``read_parquet`` DataFrames it names as keyword arguments,
-terminal DOUBLE casts included: each DataFrame step of a chain is a
-Dataset analyzed eagerly and each ``F.*`` call a gateway lookup, so the
-chains cost about three times the round trips. Each oracle stays a text
-of its own, so the two sides are still two independent derivations.
+over the ``read_parquet`` DataFrames it names as keyword arguments:
+each DataFrame step of a chain is a Dataset analyzed eagerly and each
+``F.*`` call a gateway lookup, so the chains cost about three times the
+round trips. Their terminal DOUBLE casts come from ``_registered_fn``,
+as every query's do. Each oracle stays a text of its own, so the two
+sides are still two independent derivations.
 """
 
 from __future__ import annotations
@@ -49,6 +50,7 @@ from ..operators import bloomfilter, dedup, multimodal, retrieval, similarity, s
 from ..operators.scd import create_scd_from_input, scd_point_in_time_join, scd_update_and_insert
 from ..sources.tables import load_table
 from .memo import _PERSISTED, memoized
+from .pipeline import revenue_by_weekday_sql
 from .warehouse import COST_SQL, FACT_SALES_SQL, PROFIT_SQL, REVENUE_SQL
 
 
@@ -121,13 +123,13 @@ _CANONICAL_DOUBLE: dict[str, tuple[str, ...]] = {
 
 
 def _registered_fn(name: str, fn: Callable[[SparkSession, str], DataFrame]):
-    """``fn`` built through the plan memo, with each terminal decimal
-    (``_CANONICAL_DOUBLE``) its text did not cast already cast here."""
+    """``fn`` with its terminal decimals cast (``_CANONICAL_DOUBLE``),
+    built through the plan memo."""
     cols = _CANONICAL_DOUBLE.get(name)
 
     def build(spark: SparkSession, sf_dir: str) -> DataFrame:
         df = fn(spark, sf_dir)
-        if cols and any(t != "double" for c, t in df.dtypes if c in cols):
+        if cols:
             # one selectExpr: a gateway call for the whole projection
             # where F.col costs several per column
             exprs = []
@@ -380,11 +382,11 @@ def q01(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.sql(
         f"""
         SELECT l_returnflag, l_linestatus,
-               CAST(SUM(CAST(l_quantity AS DECIMAL(12,2))) AS DOUBLE)      AS sum_qty,
-               CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2))) AS DOUBLE) AS sum_base,
-               CAST(SUM({REVENUE_SQL}) AS DOUBLE)                          AS sum_rev,
-               CAST(SUM({PROFIT_SQL}) AS DOUBLE)                           AS sum_profit,
-               COUNT(*)                                                    AS n_rows
+               SUM(CAST(l_quantity AS DECIMAL(12,2)))      AS sum_qty,
+               SUM(CAST(l_extendedprice AS DECIMAL(12,2))) AS sum_base,
+               SUM({REVENUE_SQL})                          AS sum_rev,
+               SUM({PROFIT_SQL})                           AS sum_profit,
+               COUNT(*)                                    AS n_rows
         FROM {{lineitem}}
         WHERE l_shipdate <= CAST('2001-06-01 00:00:00' AS TIMESTAMP)
         GROUP BY l_returnflag, l_linestatus
@@ -616,7 +618,7 @@ def q16(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q09(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.sql(
         f"""
-        SELECT /*+ BROADCAST(p) */ p.p_partkey, p.p_name, CAST(s.sum_rev AS DOUBLE) AS sum_rev
+        SELECT /*+ BROADCAST(p) */ p.p_partkey, p.p_name, s.sum_rev
         FROM (SELECT l_partkey, SUM({REVENUE_SQL}) AS sum_rev FROM {{lineitem}} GROUP BY l_partkey) s
         JOIN {{part}} p ON s.l_partkey = p.p_partkey
         ORDER BY s.sum_rev DESC, p.p_partkey ASC
@@ -810,15 +812,7 @@ _STAR_CALENDAR_SQL = calendar_sql("1992-01-01", "2002-12-31")
 )
 def q23(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.sql(
-        f"""
-        SELECT /*+ BROADCAST(d) */ d.DayOfWeekNumber, d.DayOfWeekName,
-               CAST(SUM(f.revenue_usd) AS DOUBLE)      AS sum_rev,
-               CAST(SUM(f.gross_profit_usd) AS DOUBLE) AS sum_profit,
-               COUNT(*)                                AS n_sales
-        FROM ({FACT_SALES_SQL}) f
-        JOIN ({_STAR_CALENDAR_SQL}) d ON f.sale_date = d.FullDate
-        GROUP BY d.DayOfWeekNumber, d.DayOfWeekName
-        """,
+        revenue_by_weekday_sql(f"({FACT_SALES_SQL})", f"({_STAR_CALENDAR_SQL})"),
         lineitem=_t(spark, sf_dir, "lineitem"),
         orders=_t(spark, sf_dir, "orders"),
     )
@@ -839,8 +833,8 @@ def q24(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.sql(
         f"""
         SELECT /*+ BROADCAST(d) */ d.YearMonth,
-               CAST(SUM(f.revenue_usd) AS DOUBLE) AS sum_rev,
-               COUNT(*)                           AS n_sales
+               SUM(f.revenue_usd) AS sum_rev,
+               COUNT(*)           AS n_sales
         FROM ({FACT_SALES_SQL}) f
         JOIN ({_STAR_CALENDAR_SQL}) d ON f.sale_date = d.FullDate
         GROUP BY d.YearMonth
@@ -866,7 +860,7 @@ def q24(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q25(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.sql(
         f"""
-        SELECT /*+ BROADCAST(s) */ s.s_suppkey, s.s_name, CAST(v.sum_rev AS DOUBLE) AS sum_rev, v.n_sales
+        SELECT /*+ BROADCAST(s) */ s.s_suppkey, s.s_name, v.sum_rev, v.n_sales
         FROM (
           SELECT l_suppkey, SUM({REVENUE_SQL}) AS sum_rev, COUNT(*) AS n_sales
           FROM {{lineitem}} GROUP BY l_suppkey
@@ -897,7 +891,7 @@ def q25(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q26(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.sql(
         f"""
-        SELECT region_name, nation_name, CAST(SUM(rev) AS DOUBLE) AS sum_rev, COUNT(*) AS n_sales
+        SELECT region_name, nation_name, SUM(rev) AS sum_rev, COUNT(*) AS n_sales
         FROM (
           SELECT /*+ BROADCAST(c, n, r) */ r.r_name AS region_name, n.n_name AS nation_name, {REVENUE_SQL} AS rev
           FROM {{lineitem}} l
@@ -926,10 +920,10 @@ def q26(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q27(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.sql(
         f"""
-        SELECT CAST(SUM({REVENUE_SQL}) AS DOUBLE) AS total_revenue,
-               CAST(SUM({PROFIT_SQL}) AS DOUBLE)  AS total_profit,
-               COUNT(*)                           AS n_lineitems,
-               COUNT(DISTINCT l_orderkey)         AS n_orders
+        SELECT SUM({REVENUE_SQL})         AS total_revenue,
+               SUM({PROFIT_SQL})          AS total_profit,
+               COUNT(*)                   AS n_lineitems,
+               COUNT(DISTINCT l_orderkey) AS n_orders
         FROM {{lineitem}}
         """,
         lineitem=_t(spark, sf_dir, "lineitem"),
@@ -956,7 +950,7 @@ def q28(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.sql(
         f"""
         SELECT {SEASON_NUMBER_SQL} AS season_number, {SEASON_NAME_SQL} AS season_name,
-               CAST(SUM(revenue_usd) AS DOUBLE) AS sum_rev, COUNT(*) AS n_sales
+               SUM(revenue_usd) AS sum_rev, COUNT(*) AS n_sales
         FROM (SELECT sale_date AS FullDate, revenue_usd FROM ({FACT_SALES_SQL}))
         GROUP BY season_number, season_name
         """,
@@ -2082,10 +2076,10 @@ def q53(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.sql(
         """
         SELECT o_custkey, o_orderkey, to_date(o_orderdate) AS order_date,
-               CAST(SUM(CAST(o_totalprice AS DECIMAL(12,2))) OVER (
+               SUM(CAST(o_totalprice AS DECIMAL(12,2))) OVER (
                  PARTITION BY o_custkey ORDER BY o_orderdate ASC, o_orderkey ASC
                  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
-               ) AS DOUBLE) AS running_spend
+               ) AS running_spend
         FROM {orders}
         """,
         orders=_t(spark, sf_dir, "orders"),
@@ -2923,7 +2917,7 @@ def q79(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q80(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.sql(
         f"""
-        SELECT /*+ BROADCAST(o, c, s, n, r) */ n.n_name, CAST(SUM({REVENUE_SQL}) AS DOUBLE) AS revenue
+        SELECT /*+ BROADCAST(o, c, s, n, r) */ n.n_name, SUM({REVENUE_SQL}) AS revenue
         FROM {{lineitem}} l
         JOIN (
           SELECT * FROM {{orders}}

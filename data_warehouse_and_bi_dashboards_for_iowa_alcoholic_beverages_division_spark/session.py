@@ -13,13 +13,16 @@ We instead pin the knobs that matter at 100 TB:
 
 Driver code reaches the JVM through py4j, one gateway round trip per
 step. :func:`jvm_class` and :func:`jobs_submitted` keep the handles
-they resolve, so a repeated call does not walk to them again.
+they resolve, so a repeated call does not walk to them again, and
+:func:`gateway_calls` counts the round trips a block makes.
 """
 
 from __future__ import annotations
 
 import os
 import weakref
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 from py4j.java_gateway import JavaClass
 from pyspark.sql import SparkSession
@@ -54,6 +57,28 @@ def jobs_submitted(spark: SparkSession) -> int:
     return dag.numTotalJobs()
 
 
+@contextmanager
+def gateway_calls(spark: SparkSession) -> Iterator[list[int]]:
+    """Count the py4j round trips made inside the block (``[n]``). The
+    memory-delete commands (``m\\nd\\n…``) py4j sends when Python frees a
+    JVM proxy are not counted: when they fire depends on Python's
+    garbage collector, not on the code in the block."""
+    client = spark.sparkContext._gateway._gateway_client
+    inner = client.send_command
+    n = [0]
+
+    def counted(command, *args, **kwargs):
+        if not command.startswith("m\nd\n"):
+            n[0] += 1
+        return inner(command, *args, **kwargs)
+
+    client.send_command = counted
+    try:
+        yield n
+    finally:
+        del client.send_command
+
+
 def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
 
@@ -65,11 +90,6 @@ def get_spark(app_name: str = "iowa-warehouse-engine", cores: int | None = None)
     Every config here is also the right *direction* on a 1000-executor
     cluster; only the magnitudes (shuffle partitions, broadcast
     threshold) would be re-tuned per deployment.
-
-    The cache of generated classes holds 512 where Spark's default
-    holds 100: one dashboard page compiles about 120, so with the
-    default a page built again from fresh plans (a plan-memo miss)
-    compiled most of its classes again and ran them unwarmed.
     """
     n = cores or default_parallelism()
     builder = (
@@ -93,8 +113,6 @@ def get_spark(app_name: str = "iowa-warehouse-engine", cores: int | None = None)
         # -- parquet scan sizing: 128 MB splits is the scale default --
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
         .config("spark.sql.parquet.filterPushdown", "true")
-        # -- generated classes: a whole dashboard page fits (static) ----
-        .config("spark.sql.codegen.cache.maxEntries", "512")
         # quieter local runs
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))

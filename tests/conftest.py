@@ -1,6 +1,5 @@
 import os
 import sys
-from contextlib import contextmanager
 
 import pytest
 
@@ -40,25 +39,3 @@ def jobs_of(spark, group: str, fn):
         sc.setLocalProperty("spark.job.description", None)
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     return out, list(sc.statusTracker().getJobIdsForGroup(group))
-
-
-@contextmanager
-def gateway_calls(spark):
-    """Count the py4j round trips made inside the block (``[n]``). The
-    memory-delete commands (``m\\nd\\n…``) py4j sends when Python frees a
-    JVM proxy are not counted: when they fire depends on Python's
-    garbage collector, not on the code in the block."""
-    client = spark.sparkContext._gateway._gateway_client
-    inner = client.send_command
-    n = [0]
-
-    def counted(command, *args, **kwargs):
-        if not command.startswith("m\nd\n"):
-            n[0] += 1
-        return inner(command, *args, **kwargs)
-
-    client.send_command = counted
-    try:
-        yield n
-    finally:
-        del client.send_command

@@ -44,7 +44,6 @@ import shutil
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
-from conftest import gateway_calls
 from pyspark.sql import Row
 from pyspark.sql.types import DateType, LongType, StringType, StructField, StructType
 
@@ -63,6 +62,7 @@ from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spar
 from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spark.streaming.scd_stream import (
     scd_stream_upsert,
 )
+from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spark.session import gateway_calls
 
 _d = datetime.date
 _STORE = StructType(

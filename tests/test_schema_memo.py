@@ -7,10 +7,11 @@ import os
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
-from conftest import SF_DIR, gateway_calls, jobs_of
+from conftest import SF_DIR, jobs_of
 
 from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spark.plans.memo import clear_plan_memo
 from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spark.plans.queries import registry
+from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spark.session import gateway_calls
 from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spark.sources.tables import (
     NANOS_AS_LONG,
     load_table,

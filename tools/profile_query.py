@@ -56,18 +56,13 @@ def _page(sf_dir: str) -> None:
         registry,
         release_persisted,
     )
-    from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spark.session import jobs_submitted
+    from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spark.session import (
+        gateway_calls,
+        jobs_submitted,
+    )
 
     reg = registry()
     spark = get_spark("profile-page")
-    client = spark.sparkContext._gateway._gateway_client
-    inner, calls = client.send_command, [0]
-
-    def counted(command, *args, **kwargs):
-        if not command.startswith("m\nd\n"):
-            calls[0] += 1
-        return inner(command, *args, **kwargs)
-
     codegen = spark._jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
     compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
     with tempfile.TemporaryDirectory(prefix="profile-page-") as out:
@@ -80,22 +75,19 @@ def _page(sf_dir: str) -> None:
 
         print(f"{'page':5} {'visual':28} {'build_s':>8} {'collect_s':>9} {'jobs':>4} {'py4j':>5} "
               f"{'compiles':>8} {'compile_ms':>10}")
-        client.send_command = counted
-        try:
-            for page in ("cold", "warm"):
-                for name in DASHBOARD_VISUALS:
-                    jobs, n_compiled, compile_ns = jobs_submitted(spark), compiles.getCount(), codegen.compileTime()
-                    calls[0], t0 = 0, time.perf_counter()
+        for page in ("cold", "warm"):
+            for name in DASHBOARD_VISUALS:
+                jobs, n_compiled, compile_ns = jobs_submitted(spark), compiles.getCount(), codegen.compileTime()
+                t0 = time.perf_counter()
+                with gateway_calls(spark) as calls:
                     df = build(name)
-                    t1, build_calls = time.perf_counter(), calls[0]
-                    df.collect()
-                    t2 = time.perf_counter()
-                    print(f"{page:5} {name:28} {t1 - t0:8.3f} {t2 - t1:9.3f} {jobs_submitted(spark) - jobs:4d} "
-                          f"{build_calls:5d} {compiles.getCount() - n_compiled:8d} "
-                          f"{(codegen.compileTime() - compile_ns) / 1e6:10.1f}")
-                    release_persisted()
-        finally:
-            del client.send_command
+                t1 = time.perf_counter()
+                df.collect()
+                t2 = time.perf_counter()
+                print(f"{page:5} {name:28} {t1 - t0:8.3f} {t2 - t1:9.3f} {jobs_submitted(spark) - jobs:4d} "
+                      f"{calls[0]:5d} {compiles.getCount() - n_compiled:8d} "
+                      f"{(codegen.compileTime() - compile_ns) / 1e6:10.1f}")
+                release_persisted()
     spark.stop()
 
 
