@@ -33,8 +33,8 @@ from pyspark.sql import DataFrame, Window
 _POS_BITS = 33  # monotonically_increasing_id() = pid << 33 | pos
 
 
-def dense_ids(df: DataFrame, id_col: str = "id", *, order_by: list[str] | None = None) -> DataFrame:
-    """Add ``id_col`` holding a dense 0..n-1 BIGINT per row.
+def dense_ids(df: DataFrame, *, order_by: list[str] | None = None) -> DataFrame:
+    """Add ``id`` holding a dense 0..n-1 BIGINT per row.
 
     Without ``order_by`` the assignment follows partition layout: ids
     are dense and unique but NOT reproducible across retries or
@@ -63,6 +63,6 @@ def dense_ids(df: DataFrame, id_col: str = "id", *, order_by: list[str] | None =
     pos = F.col("_mid") - F.shiftleft(F.col("_pid"), _POS_BITS)
     return (
         with_pos.join(F.broadcast(offsets), "_pid")
-        .withColumn(id_col, (F.col("_offset") + pos).cast("long"))
+        .withColumn("id", (F.col("_offset") + pos).cast("long"))
         .drop("_mid", "_pid", "_offset")
     )

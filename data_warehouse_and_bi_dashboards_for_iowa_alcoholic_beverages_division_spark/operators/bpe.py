@@ -81,18 +81,17 @@ def _merge_pair_expr(tokens: Column, left: str, right: str) -> Column:
     )
 
 
-def word_freq_table(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """(word, n) over the whitespace-lowercased corpus — the only pass
-    that touches the full corpus."""
+def word_freq_table(docs: DataFrame) -> DataFrame:
+    """(word, n) over the whitespace-lowercased ``text`` column — the
+    only pass that touches the full corpus."""
     words = docs.select(
-        F.explode(F.split(F.trim(F.lower(F.col(text_col))), r"\s+")).alias("word")
+        F.explode(F.split(F.trim(F.lower(F.col("text"))), r"\s+")).alias("word")
     ).where(F.col("word") != "")
     return words.groupBy("word").agg(F.count(F.lit(1)).alias("n"))
 
 
 def bpe_train_batched(
     docs: DataFrame,
-    text_col: str = "text",
     n_merges: int = 10,
     min_pair_count: int = 2,
     batch: int = 8,
@@ -115,7 +114,7 @@ def bpe_train_batched(
     from classic BPE where such a pair would immediately dominate.
     ``batch=1`` is classic sequential BPE exactly. Both are golden-tested
     against pure-Python implementations."""
-    vocab = word_freq_table(docs, text_col).withColumn("toks", _chars_expr("word"))
+    vocab = word_freq_table(docs).withColumn("toks", _chars_expr("word"))
     merges: list[tuple[int, str, str, int]] = []
     while len(merges) < n_merges:
         vocab = vocab.localCheckpoint(eager=True)

@@ -24,11 +24,11 @@ import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
 
-def exact_dedup_keys(df: DataFrame, id_col: str, text_col: str = "text") -> DataFrame:
-    """Group identical texts: one row per distinct content with the
-    kept (minimum) id and the duplicate count. Shuffles only
+def exact_dedup_keys(df: DataFrame, id_col: str) -> DataFrame:
+    """Group identical ``text`` values: one row per distinct content
+    with the kept (minimum) id and the duplicate count. Shuffles only
     (fingerprint, id) pairs — never the document bodies."""
-    fp = F.md5(F.col(text_col))
+    fp = F.md5(F.col("text"))
     return (
         df.select(F.col(id_col), fp.alias("fingerprint"))
         .groupBy("fingerprint")
@@ -90,12 +90,12 @@ def portable_band_bucket(elements: list[Column]) -> Column:
 _PORTABLE_BUCKET_MOD = 1 << 52
 
 
-def portable_band_bucket_mod(modulus: int = _PORTABLE_BUCKET_MOD):
+def portable_band_bucket_mod():
     """Mod-folding variant of :func:`portable_band_bucket` for WIDE
     bands: beyond 4 rows the plain base-31 fold exceeds 64 bits, so
-    each step reduces mod ``modulus`` (default 2^52 — one fold step
-    peaks below 31 * 2^52 + 2^31 < 2^57, exact in 64-bit integer math
-    in any engine). Wide bands (e.g. 4 bands x 8 rows) demand much
+    each step reduces mod 2^52 (one fold step peaks below
+    31 * 2^52 + 2^31 < 2^57, exact in 64-bit integer math in any
+    engine). Wide bands (e.g. 4 bands x 8 rows) demand much
     higher per-band agreement (J^8 vs J^4), the right trade for
     near-identical-content detection like q188's excerpt windows where
     true matches have J ~= 1 and template-similar noise sits at
@@ -104,7 +104,7 @@ def portable_band_bucket_mod(modulus: int = _PORTABLE_BUCKET_MOD):
     def bb(elements: list[Column]) -> Column:
         acc = elements[0]
         for e in elements[1:]:
-            acc = (acc * F.lit(31) + e) % F.lit(modulus)
+            acc = (acc * F.lit(31) + e) % F.lit(_PORTABLE_BUCKET_MOD)
         return acc
 
     return bb
@@ -271,26 +271,21 @@ def minhash_lsh_candidates(
 def lsh_bucket_size_histogram(
     df: DataFrame,
     id_col: str,
-    text_col: str = "text",
-    n_hashes: int = 32,
     bands: int = 8,
-    shingle_k: int = 9,
     max_bucket_size: int = 1000,
     base_hash=None,
     family=None,
     band_bucket=None,
 ) -> DataFrame:
-    """Bucket-size histogram for a banded run: (size, n_buckets,
-    over_cap) per distinct bucket size: the audit companion to
-    ``max_bucket_size``. Healthy corpora report a real distribution
-    every run (so the audit query itself is value-checkable), and any
-    ``over_cap`` row is recall the capped candidate run skipped. Pass
-    the SAME hash-family parameters as the capped run — both go
-    through :func:`_banded_docs`, so the histogram describes exactly
-    the buckets that were capped."""
-    banded = _banded_docs(
-        df, id_col, text_col, n_hashes, bands, shingle_k, base_hash, family, band_bucket
-    )
+    """Bucket-size histogram for a banded run over 32 hashes of the
+    9-shingles of ``text``: (size, n_buckets, over_cap) per distinct
+    bucket size: the audit companion to ``max_bucket_size``. Healthy
+    corpora report a real distribution every run (so the audit query
+    itself is value-checkable), and any ``over_cap`` row is recall the
+    capped candidate run skipped. Pass the SAME hash-family parameters
+    as the capped run — both go through :func:`_banded_docs`, so the
+    histogram describes exactly the buckets that were capped."""
+    banded = _banded_docs(df, id_col, "text", 32, bands, 9, base_hash, family, band_bucket)
     return (
         banded.groupBy("band", "bucket")
         .agg(F.count(F.lit(1)).alias("size"))
@@ -504,18 +499,18 @@ def simhash_expr(text_col: str = "text", hash_fn=None) -> Column:
 
 
 def simhash_near_dup_pairs(
-    df: DataFrame, id_col: str, text_col: str = "text", max_hamming: int = 3, hash_fn=None
+    df: DataFrame, id_col: str, max_hamming: int = 3, hash_fn=None
 ) -> DataFrame:
-    """Near-dup pairs by SimHash Hamming distance, blocked on the four
-    16-bit quarters (pigeonhole: ≤3 differing bits ⇒ at least one
-    identical quarter). Like the MinHash path, blocks are aggregated
-    and pairs generated inline — the simhash computation runs once, not
-    twice as in a bucket self-join."""
+    """Near-dup pairs of ``text`` by SimHash Hamming distance, blocked
+    on the four 16-bit quarters (pigeonhole: ≤3 differing bits ⇒ at
+    least one identical quarter). Like the MinHash path, blocks are
+    aggregated and pairs generated inline — the simhash computation
+    runs once, not twice as in a bucket self-join."""
     # widen before the fold-heavy fingerprint if the scan is narrow
     # (the _spread_narrow_scan note: the 64-mask SimHash accumulation
     # would otherwise run inside a single-split scan stage)
     sh = _spread_narrow_scan(
-        df.select(F.col(id_col).alias("doc"), F.col(text_col).alias("_txt")), "doc"
+        df.select(F.col(id_col).alias("doc"), F.col("text").alias("_txt")), "doc"
     ).select("doc", simhash_expr("_txt", hash_fn).alias("sh"))
     quarters = sh.select(
         "doc",

@@ -266,14 +266,13 @@ def connected_components(
 def dedup_clusters(
     docs: DataFrame,
     match_pairs: DataFrame,
-    id_col: str = "doc_id",
     algorithm: str = "auto",
     max_iter: int = 25,
 ) -> DataFrame:
-    """Near-dup keep-list: every document labelled with its cluster id
-    (min doc id in its connected component; singletons are their own
-    cluster) and ``keep`` = is-the-canonical-member. Downstream corpus
-    filtering is then ``WHERE keep``.
+    """Near-dup keep-list: every document (``doc_id``) labelled with its
+    cluster id (min doc id in its connected component; singletons are
+    their own cluster) and ``keep`` = is-the-canonical-member.
+    Downstream corpus filtering is then ``WHERE keep``.
 
     ``algorithm``: ``"min_label"`` / ``"star"`` pass through to
     :func:`connected_components`; ``"auto"`` (default) runs min-label
@@ -283,7 +282,7 @@ def dedup_clusters(
     handles the adversarial long-chain case without anyone having to
     remember a knob. Both algorithms label a component with its
     minimum node id, so the fallback is output-identical."""
-    vertices = docs.select(F.col(id_col).alias("node"))
+    vertices = docs.select(F.col("doc_id").alias("node"))
     edges = match_pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
     if algorithm == "auto":
         try:
@@ -293,7 +292,7 @@ def dedup_clusters(
     else:
         comp = connected_components(vertices, edges, max_iter, algorithm)
     return comp.select(
-        F.col("node").alias(id_col),
+        F.col("node").alias("doc_id"),
         F.col("comp").alias("cluster_id"),
         (F.col("node") == F.col("comp")).alias("keep"),
     )

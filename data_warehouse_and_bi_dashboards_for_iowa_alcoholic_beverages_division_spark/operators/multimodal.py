@@ -32,13 +32,14 @@ from pyspark.sql import DataFrame
 MEDIA_META_FIELDS = "media_type STRING, n_bytes INT, content_hash STRING"
 
 
-def documents_as_media(df: DataFrame, id_col: str = "doc_id", payload_col: str = "text") -> DataFrame:
-    """Adapter: treat a string column as an opaque utf-8 payload so the
-    binary pipeline is exercisable on the driver testdata (no real
-    media files ship with the container)."""
-    payload = F.encode(F.col(payload_col), "UTF-8")
+def documents_as_media(df: DataFrame) -> DataFrame:
+    """Adapter: treat the documents' ``text`` as an opaque utf-8
+    payload keyed by ``doc_id`` so the binary pipeline is exercisable
+    on the driver testdata (no real media files ship with the
+    container)."""
+    payload = F.encode(F.col("text"), "UTF-8")
     return df.select(
-        F.col(id_col).alias("media_id"),
+        F.col("doc_id").alias("media_id"),
         payload.alias("payload"),
         F.lit("text/plain").alias("media_type"),
         F.length(payload).alias("n_bytes").cast("int"),
@@ -142,24 +143,26 @@ def decode_ppm_stream(payload: bytes) -> list[dict]:
     return frames
 
 
-def render_ppm_from_text(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
-    width: int = 4, height: int = 4,
-) -> DataFrame:
-    """Deterministically render a text column into REAL binary PPM
-    payloads (``mapInPandas``, one Arrow batch in → one out): pixel
-    bytes are the text's CODEPOINTS clamped to 255 and cycled to fill
-    width*height*3 (codepoints, not utf-8 bytes, so a plain-SQL oracle
-    reproduces the stats with ``unicode(substr(...))`` for any corpus,
-    ASCII or not); empty text renders solid black. This is the
-    testdata stand-in for a parquet scan of real image payloads — the
-    decode stage downstream is format-real either way."""
-    n_px = width * height * 3
+# side of every rendered PPM frame, in pixels
+PPM_SIDE = 4
+
+
+def render_ppm_from_text(df: DataFrame) -> DataFrame:
+    """Deterministically render each document's ``text`` into a REAL
+    binary PPM payload keyed by ``doc_id`` (``mapInPandas``, one Arrow
+    batch in → one out): pixel bytes are the text's CODEPOINTS clamped
+    to 255 and cycled to fill PPM_SIDE x PPM_SIDE x 3 bytes
+    (codepoints, not utf-8 bytes, so a plain-SQL oracle reproduces the
+    stats with ``unicode(substr(...))`` for any corpus, ASCII or not);
+    empty text renders solid black. This is the testdata stand-in for
+    a parquet scan of real image payloads — the decode stage downstream
+    is format-real either way."""
+    n_px = PPM_SIDE * PPM_SIDE * 3
 
     def _render(batches):
         for pdf in batches:
             payloads = []
-            for s in pdf[text_col]:
+            for s in pdf["text"]:
                 s = s or ""
                 if s:
                     px = bytes(min(ord(c), 255) for c in s[:n_px])
@@ -167,44 +170,41 @@ def render_ppm_from_text(
                     px = (px * reps)[:n_px]
                 else:
                     px = b"\x00" * n_px
-                payloads.append(encode_ppm(width, height, px))
-            yield pd.DataFrame({"media_id": pdf[id_col], "payload": payloads})
+                payloads.append(encode_ppm(PPM_SIDE, PPM_SIDE, px))
+            yield pd.DataFrame({"media_id": pdf["doc_id"], "payload": payloads})
 
-    return df.select(id_col, text_col).mapInPandas(
+    return df.select("doc_id", "text").mapInPandas(
         _render, "media_id BIGINT, payload BINARY"
     )
 
 
-def render_ppm_stream_from_text(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
-    width: int = 4, height: int = 4,
-) -> DataFrame:
-    """Render each text into a REAL multi-frame P6 stream
+def render_ppm_stream_from_text(df: DataFrame) -> DataFrame:
+    """Render each document's ``text`` into a REAL multi-frame P6 stream
     (``len(text) % 4 + 1`` concatenated frames): frame ``f``'s pixel
     ``i`` is ``base[(i + f) % len(base)]`` where ``base`` is the
     clamped-codepoint window ``render_ppm_from_text`` uses — a
     per-frame phase shift, so consecutive frames differ and the SQL
     oracle reproduces every frame's stats from the same formula."""
-    n_px = width * height * 3
+    n_px = PPM_SIDE * PPM_SIDE * 3
 
     def _render(batches):
         for pdf in batches:
             payloads = []
-            for s in pdf[text_col]:
+            for s in pdf["text"]:
                 s = s or ""
                 base = [min(ord(c), 255) for c in s[:n_px]] or [0]
                 n_frames = len(s) % 4 + 1
                 stream = b"".join(
                     encode_ppm(
-                        width, height,
+                        PPM_SIDE, PPM_SIDE,
                         bytes(base[(i + f) % len(base)] for i in range(n_px)),
                     )
                     for f in range(n_frames)
                 )
                 payloads.append(stream)
-            yield pd.DataFrame({"media_id": pdf[id_col], "payload": payloads})
+            yield pd.DataFrame({"media_id": pdf["doc_id"], "payload": payloads})
 
-    return df.select(id_col, text_col).mapInPandas(
+    return df.select("doc_id", "text").mapInPandas(
         _render, "media_id BIGINT, payload BINARY"
     )
 
@@ -342,7 +342,6 @@ FEATURE_SCHEMA = "media_id BIGINT, n_bytes INT, width INT, height INT, n_frames 
 def extract_features(
     media: DataFrame,
     decoder: Callable[[bytes], dict] = fake_decode,
-    batch_limit: int | None = None,
 ) -> DataFrame:
     """Decode/feature-extract via ``mapInPandas``: one Arrow batch in,
     one columnar batch out; decode failures yield NULL features rather
@@ -361,10 +360,7 @@ def extract_features(
                     # unavailable codec or poison payload → NULL
                     # features; never a task failure
                     rows.append((mid, n, None, None, None))
-            out = pd.DataFrame(rows, columns=["media_id", "n_bytes", "width", "height", "n_frames"])
-            if batch_limit:
-                out = out.head(batch_limit)
-            yield out
+            yield pd.DataFrame(rows, columns=["media_id", "n_bytes", "width", "height", "n_frames"])
 
     return media.select("media_id", "payload").mapInPandas(_extract, FEATURE_SCHEMA)
 
@@ -435,30 +431,28 @@ WAV_N_SAMPLES = 64
 WAV_SAMPLE_RATE = 8000
 
 
-def render_wav_from_text(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
-    n_samples: int = WAV_N_SAMPLES, sample_rate: int = WAV_SAMPLE_RATE,
-) -> DataFrame:
-    """Deterministically render a text column into REAL WAV payloads:
-    sample i is ``clamp_codepoint * 129 - 16384`` (range fits int16)
-    over the first ``n_samples`` characters cycled — codepoint-based
-    like ``render_ppm_from_text`` so a plain-SQL oracle reproduces the
+def render_wav_from_text(df: DataFrame) -> DataFrame:
+    """Deterministically render each document's ``text`` into a REAL
+    WAV payload keyed by ``doc_id`` (WAV_SAMPLE_RATE Hz): sample i is
+    ``clamp_codepoint * 129 - 16384`` (range fits int16) over the first
+    WAV_N_SAMPLES characters cycled — codepoint-based like
+    ``render_ppm_from_text`` so a plain-SQL oracle reproduces the
     decoded stats exactly; empty text renders silence."""
 
     def _render(batches):
         for pdf in batches:
             payloads = []
-            for s in pdf[text_col]:
+            for s in pdf["text"]:
                 s = s or ""
                 if s:
-                    base = [min(ord(c), 255) * 129 - 16384 for c in s[:n_samples]]
-                    samples = [base[i % len(base)] for i in range(n_samples)]
+                    base = [min(ord(c), 255) * 129 - 16384 for c in s[:WAV_N_SAMPLES]]
+                    samples = [base[i % len(base)] for i in range(WAV_N_SAMPLES)]
                 else:
-                    samples = [0] * n_samples
-                payloads.append(encode_wav(sample_rate, samples))
-            yield pd.DataFrame({"media_id": pdf[id_col], "payload": payloads})
+                    samples = [0] * WAV_N_SAMPLES
+                payloads.append(encode_wav(WAV_SAMPLE_RATE, samples))
+            yield pd.DataFrame({"media_id": pdf["doc_id"], "payload": payloads})
 
-    return df.select(id_col, text_col).mapInPandas(
+    return df.select("doc_id", "text").mapInPandas(
         _render, "media_id BIGINT, payload BINARY"
     )
 

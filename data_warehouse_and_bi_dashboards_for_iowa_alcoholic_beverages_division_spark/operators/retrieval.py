@@ -31,31 +31,29 @@ from pyspark.sql import DataFrame
 from ..functions.rounding import floor_round6
 
 
-def tokenize(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """One (id, term) row per token: lowercase, non-alphanumerics to
-    spaces, split. JVM expressions only."""
-    toks = F.split(F.regexp_replace(F.lower(F.col(text_col)), "[^a-z0-9]+", " "), " ")
-    return docs.select(F.col(id_col), F.explode(toks).alias("term")).where(F.col("term") != "")
+# Okapi BM25's term-frequency saturation and length normalization
+_K1 = 1.2
+_B = 0.75
+
+
+def tokenize(docs: DataFrame) -> DataFrame:
+    """One (doc_id, term) row per token of ``text``: lowercase,
+    non-alphanumerics to spaces, split. JVM expressions only."""
+    toks = F.split(F.regexp_replace(F.lower(F.col("text")), "[^a-z0-9]+", " "), " ")
+    return docs.select(F.col("doc_id"), F.explode(toks).alias("term")).where(F.col("term") != "")
 
 
 def bm25_scores(
-    docs: DataFrame,
-    query_terms: list[str] | None,
-    *,
-    k1: float = 1.2,
-    b: float = 0.75,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    terms_df: DataFrame | None = None,
+    docs: DataFrame, query_terms: list[str] | None, *, terms_df: DataFrame | None = None
 ) -> DataFrame:
-    """(id, score) for every document matching at least one query
-    term; score floored to 6dp. The shared scoring core of
-    ``bm25_topk`` (headline retrieval) and ``bm25_ranked`` (rank lists
-    for fusion). Query terms come either as a literal list or as a
+    """(doc_id, score) for every document matching at least one query
+    term; score floored to 6dp (k1 = 1.2, b = 0.75). The shared scoring
+    core of ``bm25_topk`` (headline retrieval) and ``bm25_ranked`` (rank
+    lists for fusion). Query terms come either as a literal list or as a
     one-column ``terms_df`` (`term`) — the data-dependent form that
     pseudo-relevance-feedback expansion (q180) needs."""
-    tok = tokenize(docs, id_col, text_col)
-    dl = tok.groupBy(id_col).agg(F.count("*").alias("dl"))
+    tok = tokenize(docs)
+    dl = tok.groupBy("doc_id").agg(F.count("*").alias("dl"))
 
     corpus = docs.agg(F.count("*").alias("n_docs")).crossJoin(
         dl.agg(F.sum("dl").alias("sum_dl"))
@@ -65,7 +63,7 @@ def bm25_scores(
         qtok = tok.join(F.broadcast(terms_df.select("term").distinct()), "term")
     else:
         qtok = tok.where(F.col("term").isin(query_terms))
-    tf = qtok.groupBy(id_col, "term").agg(F.count("*").alias("tf"))
+    tf = qtok.groupBy("doc_id", "term").agg(F.count("*").alias("tf"))
     df_t = tf.groupBy("term").agg(F.count("*").alias("df"))
 
     avgdl = F.col("sum_dl").cast("double") / F.col("n_docs").cast("double")
@@ -75,17 +73,17 @@ def bm25_scores(
     tf_d = F.col("tf").cast("double")
     term_score = (
         idf
-        * (tf_d * F.lit(k1 + 1.0))
-        / (tf_d + F.lit(k1) * (F.lit(1.0 - b) + F.lit(b) * (F.col("dl").cast("double") / avgdl)))
+        * (tf_d * F.lit(_K1 + 1.0))
+        / (tf_d + F.lit(_K1) * (F.lit(1.0 - _B) + F.lit(_B) * (F.col("dl").cast("double") / avgdl)))
     )
 
     scored = (
         tf.join(F.broadcast(df_t), "term")
-        .join(dl, id_col)
+        .join(dl, "doc_id")
         .crossJoin(F.broadcast(corpus))
-        .select(F.col(id_col), F.col("term"), term_score.alias("s"))
+        .select(F.col("doc_id"), F.col("term"), term_score.alias("s"))
     )
-    per_doc = scored.groupBy(id_col).agg(
+    per_doc = scored.groupBy("doc_id").agg(
         floor_round6(
             F.aggregate(
                 F.array_sort(F.collect_list(F.struct("term", "s"))),
@@ -97,25 +95,23 @@ def bm25_scores(
     return per_doc
 
 
-def bm25_topk(docs: DataFrame, query_terms: list[str], *, k: int = 10, **kw) -> DataFrame:
+def bm25_topk(docs: DataFrame, query_terms: list[str], *, k: int = 10) -> DataFrame:
     """Top-k documents, deterministically tiebroken by id. The top-k is
     TakeOrderedAndProject (no single-partition window) — the rounded
     score plus the id tiebreak makes the cut unambiguous on both
     engines."""
-    per_doc = bm25_scores(docs, query_terms, **kw)
-    id_col = kw.get("id_col", "doc_id")
-    return per_doc.orderBy(F.col("score").desc(), F.col(id_col)).limit(k)
+    per_doc = bm25_scores(docs, query_terms)
+    return per_doc.orderBy(F.col("score").desc(), F.col("doc_id")).limit(k)
 
 
-def bm25_ranked(docs: DataFrame, query_terms: list[str], *, k: int = 50, **kw) -> DataFrame:
-    """(id, score, rank) for the top-k: the rank-list form consumed by
+def bm25_ranked(docs: DataFrame, query_terms: list[str], *, k: int = 50) -> DataFrame:
+    """(doc_id, score, rank) for the top-k: the rank-list form consumed by
     reciprocal-rank fusion (q166). The window is over the matched-doc
     scores only (query-term-filtered — bounded), not the corpus."""
     from pyspark.sql import Window
 
-    per_doc = bm25_scores(docs, query_terms, **kw)
-    id_col = kw.get("id_col", "doc_id")
-    w = Window.orderBy(F.col("score").desc(), F.col(id_col))
+    per_doc = bm25_scores(docs, query_terms)
+    w = Window.orderBy(F.col("score").desc(), F.col("doc_id"))
     return per_doc.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
 
 
@@ -125,13 +121,10 @@ def mmr_select(
     *,
     k: int = 5,
     lam: float = 0.7,
-    id_col: str = "doc_id",
-    rel_col: str = "rel",
-    emb_id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Maximal Marginal Relevance (Carbonell & Goldstein, SIGIR'98):
-    greedily pick ``k`` results maximizing
+    from ``candidates`` (doc_id, rel) and ``embeddings`` (vec_id,
+    embedding), greedily pick ``k`` results maximizing
     ``lam * relevance - (1 - lam) * max-similarity-to-already-picked``
     — the diversification step between retrieval and a context window,
     so near-duplicate hits don't crowd out coverage.
@@ -153,10 +146,10 @@ def mmr_select(
     # truncation turns O(k^2) re-derivations into O(k))
     cand = (
         candidates.join(
-            embeddings.select(F.col(emb_id_col).alias(id_col), F.col(vec_col).alias("v")),
-            id_col,
+            embeddings.select(F.col("vec_id").alias("doc_id"), F.col("embedding").alias("v")),
+            "doc_id",
         )
-        .select(F.col(id_col).alias("d"), F.col(rel_col).alias("rel"), "v")
+        .select(F.col("doc_id").alias("d"), F.col("rel"), "v")
         .localCheckpoint(eager=True)
     )
     sims = (
@@ -202,5 +195,5 @@ def mmr_select(
         )
         selected = selected.unionByName(pick).localCheckpoint(eager=True)
     return selected.select(
-        F.col("d").alias(id_col), "pick_order", F.col("mmr").alias("mmr_score")
+        F.col("d").alias("doc_id"), "pick_order", F.col("mmr").alias("mmr_score")
     )

@@ -12,6 +12,9 @@ Two paths, same contract (query ids → top-k neighbor ids):
   hash to sign-pattern buckets of fixed hyperplanes; queries probe only
   their own bucket. Hyperplanes are derived deterministically from a
   seed, so results are reproducible.
+
+Every operator reads an embeddings frame by its ``vec_id`` and
+``embedding`` columns.
 """
 
 from __future__ import annotations
@@ -76,17 +79,17 @@ def _checked_norm(nv: Column) -> Column:
     ).otherwise(nv)
 
 
-def _query_rows(queries: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+def _query_rows(queries: DataFrame) -> DataFrame:
     """(query_id, q_vec, qn) — the probe side every scorer ranks from,
     the query norm guarded against zero (:func:`_checked_norm`)."""
     return queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("q_vec"),
-        _checked_norm(norm_expr(F.col(vec_col))).alias("qn"),
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("q_vec"),
+        _checked_norm(norm_expr(F.col("embedding"))).alias("qn"),
     )
 
 
-def _list_rows(corpus: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+def _list_rows(corpus: DataFrame) -> DataFrame:
     """(neighbor_id, c_vec, cn) — the one inverted-list row shape of
     both IVF quantizers (and the brute-force candidate side), widened
     before the per-row folds: a broadcast join evaluates the corpus
@@ -96,9 +99,9 @@ def _list_rows(corpus: DataFrame, id_col: str, vec_col: str) -> DataFrame:
     with the row, so no scorer re-folds it."""
     return _spread_narrow_scan(
         corpus.select(
-            F.col(id_col).alias("neighbor_id"),
-            F.col(vec_col).alias("c_vec"),
-            norm_expr(F.col(vec_col)).alias("cn"),
+            F.col("vec_id").alias("neighbor_id"),
+            F.col("embedding").alias("c_vec"),
+            norm_expr(F.col("embedding")).alias("cn"),
         ),
         "neighbor_id",
     )
@@ -126,14 +129,7 @@ def _score_topk(q: DataFrame, c: DataFrame, k: int) -> DataFrame:
     return scored.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
 
 
-def cosine_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 10,
-    include_self: bool = False,
-) -> DataFrame:
+def cosine_topk(corpus: DataFrame, queries: DataFrame, k: int = 10) -> DataFrame:
     """Exact top-k cosine neighbors for each query row.
 
     Returns (query_id, neighbor_id, score, rank); ranking breaks score
@@ -145,27 +141,30 @@ def cosine_topk(
     # norm(c) per query row (HOFs are interpreted, no CSE — the
     # _argmax_cell_expr note). dot/(qn*cn) keeps cosine_expr's exact
     # grouping, so scores are bit-identical.
-    q = _query_rows(queries, id_col, vec_col)
-    c = _list_rows(corpus, id_col, vec_col)
-    scored = F.broadcast(q).crossJoin(c)
-    if not include_self:
-        scored = scored.where(F.col("query_id") != F.col("neighbor_id"))
-    scored = scored.select(
-        "query_id",
-        "neighbor_id",
-        floor_round6(
-            dot_expr(F.col("q_vec"), F.col("c_vec")) / (F.col("qn") * F.col("cn"))
-        ).alias("score"),
+    q = _query_rows(queries)
+    c = _list_rows(corpus)
+    scored = (
+        F.broadcast(q)
+        .crossJoin(c)
+        .where(F.col("query_id") != F.col("neighbor_id"))
+        .select(
+            "query_id",
+            "neighbor_id",
+            floor_round6(
+                dot_expr(F.col("q_vec"), F.col("c_vec")) / (F.col("qn") * F.col("cn"))
+            ).alias("score"),
+        )
     )
     w = Window.partitionBy("query_id").orderBy(F.col("score").desc(), F.col("neighbor_id").asc())
     return scored.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
 
 
-def _hyperplanes(dim: int, n_planes: int, seed: int = 7) -> list[list[float]]:
+def _hyperplanes(dim: int, n_planes: int) -> list[list[float]]:
     """Deterministic pseudo-random unit-free hyperplanes via a tiny
-    splitmix-style generator — no RNG state, reproducible everywhere."""
+    splitmix-style generator seeded with 7 — no RNG state, reproducible
+    everywhere."""
     planes = []
-    x = seed & 0xFFFFFFFFFFFFFFFF
+    x = 7
     for _ in range(n_planes):
         row = []
         for _ in range(dim):
@@ -180,22 +179,22 @@ def _hyperplanes(dim: int, n_planes: int, seed: int = 7) -> list[list[float]]:
     return planes
 
 
-def _bucket_expr(vec_col: str, planes: list[list[float]]) -> Column:
-    """Sign-pattern bucket id: bit p set iff vec · plane_p > 0."""
+def _bucket_expr(planes: list[list[float]]) -> Column:
+    """Sign-pattern bucket id: bit p set iff embedding · plane_p > 0."""
     bucket = F.lit(0).cast("long")
     for p, plane in enumerate(planes):
         lit_plane = F.array(*[F.lit(v) for v in plane])
-        bit = F.when(dot_expr(F.col(vec_col), lit_plane) > 0, F.shiftleft(F.lit(1).cast("long"), p)).otherwise(F.lit(0).cast("long"))
+        bit = F.when(dot_expr(F.col("embedding"), lit_plane) > 0, F.shiftleft(F.lit(1).cast("long"), p)).otherwise(F.lit(0).cast("long"))
         bucket = bucket.bitwiseOR(bit)
     return bucket
 
 
-def _probe_buckets_expr(vec_col: str, planes: list[list[float]], n_probe: int) -> Column:
+def _probe_buckets_expr(planes: list[list[float]], n_probe: int) -> Column:
     """Array of buckets to probe: the vector's own sign-pattern bucket
     plus, for the ``n_probe`` planes with the smallest |margin| (the
     least-confident sign decisions), the bucket with that one bit
     flipped — classic multi-probe LSH (Lv et al., VLDB 2007)."""
-    own = _bucket_expr(vec_col, planes)
+    own = _bucket_expr(planes)
     if n_probe <= 0:
         return F.array(own)
     # (|margin|, plane index) structs, sorted ascending: the first
@@ -203,7 +202,7 @@ def _probe_buckets_expr(vec_col: str, planes: list[list[float]], n_probe: int) -
     margins = F.array(
         *[
             F.struct(
-                F.abs(dot_expr(F.col(vec_col), F.array(*[F.lit(v) for v in plane]))).alias("m"),
+                F.abs(dot_expr(F.col("embedding"), F.array(*[F.lit(v) for v in plane]))).alias("m"),
                 F.lit(p).alias("p"),
             )
             for p, plane in enumerate(planes)
@@ -225,12 +224,9 @@ def _probe_buckets_expr(vec_col: str, planes: list[list[float]], n_probe: int) -
 def cosine_topk_lsh(
     corpus: DataFrame,
     queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     k: int = 10,
     n_planes: int = 8,
     dim: int = 64,
-    seed: int = 7,
     n_probe: int = 0,
 ) -> DataFrame:
     """Approximate top-k: score only corpus rows in the query's
@@ -240,22 +236,22 @@ def cosine_topk_lsh(
     recovering most of the recall lost to unlucky boundary splits for
     (n_probe+1)x the broadcast rows — the corpus side is still hashed
     once and joined equi on the bucket id, never cross-joined."""
-    planes = _hyperplanes(dim, n_planes, seed)
+    planes = _hyperplanes(dim, n_planes)
     q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("q_vec"),
-        _checked_norm(norm_expr(F.col(vec_col))).alias("qn"),
-        F.explode(_probe_buckets_expr(vec_col, planes, n_probe)).alias("bucket"),
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("q_vec"),
+        _checked_norm(norm_expr(F.col("embedding"))).alias("qn"),
+        F.explode(_probe_buckets_expr(planes, n_probe)).alias("bucket"),
     )
     # widen before the n_planes x dim bucket fold per corpus row (the
     # cosine_topk width note — the broadcast join leaves this in the
     # scan stage, single-task on a single-split scan)
     c = _spread_narrow_scan(
         corpus.select(
-            F.col(id_col).alias("neighbor_id"),
-            F.col(vec_col).alias("c_vec"),
-            norm_expr(F.col(vec_col)).alias("cn"),
-            _bucket_expr(vec_col, planes).alias("bucket"),
+            F.col("vec_id").alias("neighbor_id"),
+            F.col("embedding").alias("c_vec"),
+            norm_expr(F.col("embedding")).alias("cn"),
+            _bucket_expr(planes).alias("bucket"),
         ),
         "neighbor_id",
     )
@@ -638,18 +634,12 @@ def with_probe_cells(
     )
 
 
-def _flat_probe_cells(
-    queries: DataFrame,
-    centroids: list[list[float]],
-    id_col: str,
-    vec_col: str,
-    n_probe: int,
-) -> DataFrame:
+def _flat_probe_cells(queries: DataFrame, centroids: list[list[float]], n_probe: int) -> DataFrame:
     """Query side of the flat probe: rank the cells per query and keep
     the ``n_probe`` best (:func:`with_probe_cells`) — the flat twin of
     :func:`_ivf2_probe_cells`. Returns (query_id, q_vec, qn, cell)."""
     return (
-        with_probe_cells(_query_rows(queries, id_col, vec_col), "q_vec", centroids, n_probe)
+        with_probe_cells(_query_rows(queries), "q_vec", centroids, n_probe)
         .select("query_id", "q_vec", "qn", F.explode("_probes").alias("probe"))
         .select("query_id", "q_vec", "qn", F.col("probe.c").alias("cell"))
     )
@@ -736,11 +726,11 @@ def _lloyd_dim_means(assigned: DataFrame) -> list:
 _IVF_MAX_CELLS_EXP = 12
 
 
-def derived_n_cells(n: int, cap_exp: int = _IVF_MAX_CELLS_EXP) -> int:
+def derived_n_cells(n: int) -> int:
     """Cardinality-derived cell count: the smallest power of two >=
-    sqrt(n), floored at 4 and capped at 2^cap_exp. sqrt balances the
-    two per-query costs — centroid scoring is O(n_cells) and each
-    probed inverted list holds ~n/n_cells vectors — so both stay
+    sqrt(n), floored at 4 and capped at 2^_IVF_MAX_CELLS_EXP. sqrt
+    balances the two per-query costs — centroid scoring is O(n_cells)
+    and each probed inverted list holds ~n/n_cells vectors — so both stay
     O(sqrt n) as the corpus grows, instead of an operator memo bumping
     a toy constant (n_cells=8 is right at 2k vectors and absurd at
     10^9). Pure integer arithmetic ((n-1).bit_length() == ceil(log2 n))
@@ -750,7 +740,7 @@ def derived_n_cells(n: int, cap_exp: int = _IVF_MAX_CELLS_EXP) -> int:
     (m must divide dim) and codebook size is a byte-budget constant
     (k=256 for 8-bit codes in practice), not cardinality-driven."""
     blen = max(n - 1, 0).bit_length()  # ceil(log2 n), 0 for n <= 1
-    return min(1 << cap_exp, max(4, 1 << ((blen + 1) // 2)))
+    return min(1 << _IVF_MAX_CELLS_EXP, max(4, 1 << ((blen + 1) // 2)))
 
 
 # faiss-standard train-set cap: k-means needs ~O(100) points per
@@ -863,29 +853,27 @@ def ivf_train_centroids(
 def cosine_topk_ivf(
     corpus: DataFrame,
     queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     k: int = 10,
     n_cells: int = 8,
     n_probe: int = 3,
-    iters: int = 2,
     train_where: str | None = None,
     tombstones_where: str | None = None,
 ) -> DataFrame:
     """IVF approximate top-k: corpus rows are inverted-listed by their
-    nearest coarse centroid; each query scores only the rows of its
-    ``n_probe`` closest cells. The candidate join is equi on the cell id
-    — at 100 TB that is a shuffle of (id, vector) pairs within probed
-    cells only, ~``n_probe / n_cells`` of the brute-force work, and the
-    inverted lists can be written bucketed-by-cell so repeated query
-    batches never reshuffle the corpus.
+    nearest coarse centroid (two Lloyd steps); each query scores only
+    the rows of its ``n_probe`` closest cells. The candidate join is
+    equi on the cell id — at 100 TB that is a shuffle of (id, vector)
+    pairs within probed cells only, ~``n_probe / n_cells`` of the
+    brute-force work, and the inverted lists can be written
+    bucketed-by-cell so repeated query batches never reshuffle the
+    corpus.
 
     ``train_where`` restricts the QUANTIZER TRAIN (seeds + Lloyd
     passes) to a deterministic subset while the inverted lists still
     cover every vector — the standard IVF economics at scale: Lloyd is
     O(|train| x n_cells) per iteration, so training on a sample whose
-    size is a multiple of n_cells (not on all N rows) removes
-    ``iters`` full-corpus scoring passes, leaving the single final
+    size is a multiple of n_cells (not on all N rows) removes both
+    full-corpus Lloyd passes, leaving the single final
     assignment pass as the only O(N x n_cells) stage (q211; decade
     measurements in BASELINE.md).
 
@@ -901,7 +889,7 @@ def cosine_topk_ivf(
     filtered (a deleted id may still ask for neighbors), and ranks are
     assigned after the exclusion — a deleted neighbor frees its rank."""
     train = corpus.where(train_where) if train_where else corpus
-    centroids = ivf_train_centroids(train, id_col, vec_col, n_cells, iters)
+    centroids = ivf_train_centroids(train, n_cells=n_cells, iters=2)
     if tombstones_where:
         # IS NOT TRUE semantics, not ~pred: a row where the predicate
         # evaluates NULL is NOT deleted (a NULL id never matches a
@@ -916,8 +904,8 @@ def cosine_topk_ivf(
     # already spreads inside ivf_train_centroids; this is the same
     # lesson applied to the one remaining full-corpus pass. At real
     # scale the scan is already wide and this is a no-op (no shuffle).
-    c = with_assigned_cell(_list_rows(corpus, id_col, vec_col), "c_vec", centroids)
-    q = _flat_probe_cells(queries, centroids, id_col, vec_col, n_probe)
+    c = with_assigned_cell(_list_rows(corpus), "c_vec", centroids)
+    q = _flat_probe_cells(queries, centroids, n_probe)
     return _score_topk(q, c, k)
 
 
@@ -945,8 +933,6 @@ def _member_table_df(spark, l2: list[list[float]], cell2super: dict[int, int]) -
 
 def ivf2_train(
     corpus: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     n_cells: int = 8,
     iters: int = 2,
     train_where: str | None = None,
@@ -969,7 +955,7 @@ def ivf2_train(
     argmax would pick. The oracle mirrors the SAME two-level rule, so
     the approximation is value-checked, not hand-waved."""
     train = corpus.where(train_where) if train_where else corpus
-    l2 = ivf_train_centroids(train, id_col, vec_col, n_cells, iters)
+    l2 = ivf_train_centroids(train, n_cells=n_cells, iters=iters)
     n_super = derived_n_cells(len(l2))
     # The level-1 train clusters the DRIVER-RESIDENT level-2 centroid
     # table (<= 4096 rows) — run the bit-identical local Lloyd instead
@@ -996,13 +982,7 @@ def ivf2_train(
     return l2, l1, cell2super
 
 
-def _ivf2_corpus_lists(
-    corpus: DataFrame,
-    members: DataFrame,
-    l1: list[list[float]],
-    id_col: str,
-    vec_col: str,
-) -> DataFrame:
+def _ivf2_corpus_lists(corpus: DataFrame, members: DataFrame, l1: list[list[float]]) -> DataFrame:
     """Corpus rows routed level-1 supercell -> best member cell
     (map-only: the supercell argmax is :func:`with_assigned_cell`, the
     member argmax folds a per-super broadcast array — no vector ever
@@ -1013,7 +993,7 @@ def _ivf2_corpus_lists(
         return F.array_max(_scored_cells("_mcents", F.col("c_vec"), nv))["c"]
 
     return (
-        with_assigned_cell(_list_rows(corpus, id_col, vec_col), "c_vec", l1, out_col="_super")
+        with_assigned_cell(_list_rows(corpus), "c_vec", l1, out_col="_super")
         .join(F.broadcast(members), "_super")
         # cn IS norm_expr(c_vec) — reuse it as the bound row norm
         .select(
@@ -1029,8 +1009,6 @@ def _ivf2_probe_cells(
     queries: DataFrame,
     members: DataFrame,
     l1: list[list[float]],
-    id_col: str,
-    vec_col: str,
     n_super_probe: int,
     n_probe: int,
 ) -> DataFrame:
@@ -1038,9 +1016,7 @@ def _ivf2_probe_cells(
     supercells -> member-cell ranking -> ``n_probe`` cells. Returns
     (query_id, q_vec, qn, cell)."""
     qs = (
-        with_probe_cells(
-            _query_rows(queries, id_col, vec_col), "q_vec", l1, n_super_probe, out_col="_sprobes"
-        )
+        with_probe_cells(_query_rows(queries), "q_vec", l1, n_super_probe, out_col="_sprobes")
         .select("query_id", "q_vec", "qn", F.explode("_sprobes").alias("sp"))
         .select("query_id", "q_vec", "qn", F.col("sp.c").alias("_super"))
         .join(F.broadcast(members), "_super")
@@ -1064,36 +1040,31 @@ def _ivf2_probe_cells(
 def cosine_topk_ivf2(
     corpus: DataFrame,
     queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     k: int = 10,
     n_cells: int = 8,
     n_probe: int = 3,
     n_super_probe: int = 2,
-    iters: int = 2,
     train_where: str | None = None,
 ) -> DataFrame:
-    """Hierarchical-IVF approximate top-k (:func:`ivf2_train`): corpus
-    rows route level-1 supercell -> best member cell (map-only: the
-    supercell argmax is :func:`with_assigned_cell`, the member argmax
-    folds a per-super broadcast array — no vector ever shuffles);
-    queries probe their ``n_super_probe`` best supercells, rank the
+    """Hierarchical-IVF approximate top-k (:func:`ivf2_train`, two Lloyd
+    steps): corpus rows route level-1 supercell -> best member cell
+    (map-only: the supercell argmax is :func:`with_assigned_cell`, the
+    member argmax folds a per-super broadcast array — no vector ever
+    shuffles); queries probe their ``n_super_probe`` best supercells, rank the
     union of those supers' member cells, keep ``n_probe``, and score
     only those inverted lists. Per-row assignment work drops from
     O(n_cells) to O(sqrt n_cells) both build- and query-side."""
     spark = corpus.sparkSession
-    l2, l1, cell2super = ivf2_train(corpus, id_col, vec_col, n_cells, iters, train_where)
+    l2, l1, cell2super = ivf2_train(corpus, n_cells, 2, train_where)
     members = _member_table_df(spark, l2, cell2super)
-    c = _ivf2_corpus_lists(corpus, members, l1, id_col, vec_col)
-    q = _ivf2_probe_cells(queries, members, l1, id_col, vec_col, n_super_probe, n_probe)
+    c = _ivf2_corpus_lists(corpus, members, l1)
+    q = _ivf2_probe_cells(queries, members, l1, n_super_probe, n_probe)
     return _score_topk(q, c, k)
 
 
 def build_ivf2_index(
     corpus: DataFrame,
     path: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     n_cells: int = 8,
     iters: int = 2,
     train_where: str | None = None,
@@ -1109,8 +1080,8 @@ def build_ivf2_index(
     routing cost is O(sqrt n_cells), and every query batch reads only
     its probed cells' files via partition pruning. The crash contract
     is :func:`build_ivf_index`'s."""
-    l2, l1, cell2super = ivf2_train(corpus, id_col, vec_col, n_cells, iters, train_where)
-    _write_index(corpus, path, id_col, vec_col, l2, l1, cell2super)
+    l2, l1, cell2super = ivf2_train(corpus, n_cells, iters, train_where)
+    _write_index(corpus, path, l2, l1, cell2super)
     return l2, l1, cell2super
 
 
@@ -1133,19 +1104,16 @@ def ivf2_recall_sweep(
     corpus: DataFrame,
     queries: DataFrame,
     combos: list[tuple[int, int]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     k: int = 10,
     n_cells: int = 8,
-    iters: int = 2,
     train_where: str | None = None,
     persist=None,
 ) -> DataFrame:
     """Recall@k curve over (n_super_probe, n_probe) combinations — the
     table a deployment reads to pick its probe widths: the quantizer
-    trains ONCE (:func:`ivf2_train`), the corpus routes into its
-    hierarchical inverted lists ONCE, and each combo re-runs only the
-    query-side probe + scoring against the shared lists, with recall@k
+    trains ONCE (:func:`ivf2_train`, two Lloyd steps), the corpus
+    routes into its hierarchical inverted lists ONCE, and each combo
+    re-runs only the query-side probe + scoring against the shared lists, with recall@k
     measured per query against the exact brute-force top-k
     (:func:`cosine_topk`) and aggregated per combo.
 
@@ -1161,22 +1129,18 @@ def ivf2_recall_sweep(
     runs this sweep against an already-persisted index (q156/q199's
     device); the in-plan cache is the sweep-as-one-query equivalent."""
     spark = corpus.sparkSession
-    l2, l1, cell2super = ivf2_train(corpus, id_col, vec_col, n_cells, iters, train_where)
+    l2, l1, cell2super = ivf2_train(corpus, n_cells, 2, train_where)
     members = _member_table_df(spark, l2, cell2super)
-    c = _ivf2_corpus_lists(corpus, members, l1, id_col, vec_col)
-    exact = cosine_topk(corpus, queries, id_col, vec_col, k).select(
-        "query_id", "neighbor_id"
-    )
+    c = _ivf2_corpus_lists(corpus, members, l1)
+    exact = cosine_topk(corpus, queries, k).select("query_id", "neighbor_id")
     if persist is not None:
         c = persist(c)
         exact = persist(exact)
-    qids = queries.select(F.col(id_col).alias("query_id"))
+    qids = queries.select(F.col("vec_id").alias("query_id"))
 
     per_combo = []
     for n_super_probe, n_probe in combos:
-        q = _ivf2_probe_cells(
-            queries, members, l1, id_col, vec_col, n_super_probe, n_probe
-        )
+        q = _ivf2_probe_cells(queries, members, l1, n_super_probe, n_probe)
         approx = _score_topk(q, c, k).select("query_id", "neighbor_id")
         per_combo.append(
             recall_hits(qids, approx, exact).select(
@@ -1207,17 +1171,15 @@ def ivf2_recall_sweep(
 def build_ivf_index(
     corpus: DataFrame,
     path: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     n_cells: int = 8,
     iters: int = 2,
     train_where: str | None = None,
 ) -> list[list[float]]:
     """Persist an IVF index: train the coarse quantizer once, write the
     corpus as (neighbor_id, c_vec, cn) inverted lists
-    ``partitionBy("cell")`` — the caller's columns renamed and the row
-    norm stored, the list schema both quantizers share — and store the
-    centroids in the index's manifest. At 100 TB this is the point of
+    ``partitionBy("cell")`` — ``vec_id`` and ``embedding`` renamed and
+    the row norm stored, the list schema both quantizers share — and
+    store the centroids in the index's manifest. At 100 TB this is the point of
     IVF — the expensive corpus pass happens once; every later query
     batch reads only its probed cells' files (partition pruning), never
     rescanning or reshuffling the corpus.
@@ -1234,11 +1196,11 @@ def build_ivf_index(
     ``sources.commit.write`` and the manifest lands after them
     (:func:`_write_index`)."""
     train = corpus.where(train_where) if train_where else corpus
-    centroids = ivf_train_centroids(train, id_col, vec_col, n_cells, iters)
+    centroids = ivf_train_centroids(train, n_cells=n_cells, iters=iters)
     # zero-norm corpus rows (even outside the train subset) raise
     # inside the list-writing assignment expression (_checked_norm)
     # — no separate guard pass over the corpus
-    _write_index(corpus, path, id_col, vec_col, centroids)
+    _write_index(corpus, path, centroids)
     return centroids
 
 
@@ -1261,8 +1223,6 @@ _MANIFEST = "manifest"
 
 def _routed_lists(
     corpus: DataFrame,
-    id_col: str,
-    vec_col: str,
     l2: list[list[float]],
     l1: list[list[float]] | None = None,
     cell2super: dict[int, int] | None = None,
@@ -1271,16 +1231,14 @@ def _routed_lists(
     routed by the flat quantizer ``l2`` or, given ``l1``, the
     hierarchical one."""
     if l1 is None:
-        return with_assigned_cell(_list_rows(corpus, id_col, vec_col), "c_vec", l2)
+        return with_assigned_cell(_list_rows(corpus), "c_vec", l2)
     members = _member_table_df(corpus.sparkSession, l2, cell2super)
-    return _ivf2_corpus_lists(corpus, members, l1, id_col, vec_col)
+    return _ivf2_corpus_lists(corpus, members, l1)
 
 
 def _write_index(
     corpus: DataFrame,
     path: str,
-    id_col: str,
-    vec_col: str,
     l2: list[list[float]],
     l1: list[list[float]] | None = None,
     cell2super: dict[int, int] | None = None,
@@ -1308,7 +1266,7 @@ def _write_index(
     from any crash point; until it has, a reader can pair the new lists
     with the old manifest."""
     spark = corpus.sparkSession
-    lists = _routed_lists(corpus, id_col, vec_col, l2, l1, cell2super)
+    lists = _routed_lists(corpus, l2, l1, cell2super)
     _recover_index(spark, path)
     commit.drop(spark, path + "_tombstones")
     retire = commit.live_files(spark, path)
@@ -1363,8 +1321,6 @@ def _read_index(spark, path: str, manifest: dict) -> DataFrame:
 def append_to_ivf_index(
     new_vectors: DataFrame,
     path: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     skip_existing_ids: bool = True,
     batch_token: str | None = None,
 ) -> None:
@@ -1447,7 +1403,7 @@ def append_to_ivf_index(
     tombs = commit.read_optional(spark, path + "_tombstones")
     if tombs is not None:
         clash = (
-            new_vectors.select(F.col(id_col).alias("neighbor_id"))
+            new_vectors.select(F.col("vec_id").alias("neighbor_id"))
             .join(F.broadcast(tombs.select("neighbor_id")), on="neighbor_id", how="left_semi")
             .limit(5)
             .collect()
@@ -1463,11 +1419,11 @@ def append_to_ivf_index(
     l2, l1, cell2super = _quantizer(manifest)
     batch = new_vectors
     if skip_existing_ids:
-        existing = _read_index(spark, path, manifest).select(F.col("neighbor_id").alias(id_col))
-        batch = batch.join(existing, on=id_col, how="left_anti")
+        existing = _read_index(spark, path, manifest).select(F.col("neighbor_id").alias("vec_id"))
+        batch = batch.join(existing, on="vec_id", how="left_anti")
     # zero-norm batch rows raise inside the assignment expression
     # (_checked_norm) during the append write — no extra guard action
-    lists = _routed_lists(batch, id_col, vec_col, l2, l1, cell2super)
+    lists = _routed_lists(batch, l2, l1, cell2super)
     # repartition on the partition column before the partitioned write
     # (the _write_index note): an append otherwise lands
     # tasks x touched-cells new files EVERY batch, compounding the
@@ -1717,8 +1673,6 @@ def tombstone_debt_report(per_cell: DataFrame) -> DataFrame:
 def update_in_ivf_index(
     new_vectors: DataFrame,
     path: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     batch_token: str | None = None,
 ) -> dict:
     """In-place vector UPDATE — the lifecycle step r14 named as the
@@ -1782,7 +1736,7 @@ def update_in_ivf_index(
     if batch_token is not None and batch_token in manifest["tokens"]:
         return {**_no_rewrite(), "skipped_token": batch_token}
     ids = (
-        new_vectors.select(F.col(id_col).alias("neighbor_id"))
+        new_vectors.select(F.col("vec_id").alias("neighbor_id"))
         .distinct()
         .localCheckpoint(eager=True)
     )
@@ -1815,22 +1769,13 @@ def update_in_ivf_index(
     # this append — so the O(index ids) anti-join scan it costs would
     # buy nothing (a code-review r15 finding: that scan was the only
     # term breaking the documented O(cells-of-batch) update cost).
-    append_to_ivf_index(
-        new_vectors,
-        path,
-        id_col=id_col,
-        vec_col=vec_col,
-        skip_existing_ids=False,
-        batch_token=batch_token,
-    )
+    append_to_ivf_index(new_vectors, path, skip_existing_ids=False, batch_token=batch_token)
     return stats
 
 
 def query_ivf_index(
     queries: DataFrame,
     path: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     k: int = 10,
     n_probe: int = 3,
     n_super_probe: int = 2,
@@ -1857,10 +1802,10 @@ def query_ivf_index(
     manifest = _read_manifest(spark, path)[1]
     l2, l1, cell2super = _quantizer(manifest)
     if l1 is None:
-        q = _flat_probe_cells(queries, l2, id_col, vec_col, n_probe)
+        q = _flat_probe_cells(queries, l2, n_probe)
     else:
         members = _member_table_df(spark, l2, cell2super)
-        q = _ivf2_probe_cells(queries, members, l1, id_col, vec_col, n_super_probe, n_probe)
+        q = _ivf2_probe_cells(queries, members, l1, n_super_probe, n_probe)
     # q is consumed twice (probed-cell collect, then the broadcast join);
     # checkpoint so the per-row centroid scoring runs once
     q = q.localCheckpoint(eager=True)
@@ -1948,18 +1893,12 @@ def split_hot_cells(members: DataFrame, materialize=None) -> DataFrame:
 
 
 def embedding_near_dup_pairs(
-    corpus: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    threshold: float = 0.95,
-    n_planes: int = 8,
-    dim: int = 64,
-    seed: int = 7,
+    corpus: DataFrame, threshold: float = 0.95, n_planes: int = 8
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs (id_a < id_b, score ≥
-    threshold), LSH-blocked: near-identical vectors land in the same
-    sign bucket with high probability, so candidate generation is an
-    equi self-join on bucket.
+    threshold), LSH-blocked over 64-dim embeddings: near-identical
+    vectors land in the same sign bucket with high probability, so
+    candidate generation is an equi self-join on bucket.
 
     Two in-bucket-compute rules (sf1.0, 20k vectors, p=8, measured):
 
@@ -1981,13 +1920,13 @@ def embedding_near_dup_pairs(
       only pins the width AQE would otherwise coalesce away."""
     from .dedup import _compute_width
 
-    planes = _hyperplanes(dim, n_planes, seed)
+    planes = _hyperplanes(64, n_planes)
     tagged = (
         corpus.select(
-            F.col(id_col).alias("doc"),
-            F.col(vec_col).alias("vec"),
-            _bucket_expr(vec_col, planes).alias("bucket"),
-            norm_expr(F.col(vec_col)).alias("nrm"),
+            F.col("vec_id").alias("doc"),
+            F.col("embedding").alias("vec"),
+            _bucket_expr(planes).alias("bucket"),
+            norm_expr(F.col("embedding")).alias("nrm"),
         )
         .repartition(_compute_width(corpus), "bucket")
     )
@@ -2011,8 +1950,6 @@ def hard_negatives(
     *,
     lo: float,
     hi: float,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     k: int = 10,
 ) -> DataFrame:
     """Hard-negative mining for contrastive/embedding training: per
@@ -2026,8 +1963,8 @@ def hard_negatives(
     the corpus side swaps in the IVF/LSH candidate streams (the band
     filter composes unchanged).
     """
-    q = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec"))
-    c = corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_vec"))
+    q = queries.select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_vec"))
+    c = corpus.select(F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("c_vec"))
     scored = (
         F.broadcast(q)
         .crossJoin(c)
@@ -2083,8 +2020,6 @@ def _argmin_cell_expr(vec_col: Column, centroids: list[list[float]]) -> Column:
 
 def pq_train(
     corpus: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     m: int = 2,
     k: int = 4,
     iters: int = 2,
@@ -2095,10 +2030,10 @@ def pq_train(
     to 6dp — the ivf_train_centroids contract, per subspace)."""
     dsub = dim // m
     books: list[list[list[float]]] = []
-    spread = _spread_narrow_scan(corpus, id_col)  # the Lloyd width note
+    spread = _spread_narrow_scan(corpus, "vec_id")  # the Lloyd width note
     for s in range(m):
-        sub = F.slice(F.col(vec_col), s * dsub + 1, dsub)
-        subdf = spread.select(F.col(id_col).alias("id"), sub.alias("sv"))
+        sub = F.slice(F.col("embedding"), s * dsub + 1, dsub)
+        subdf = spread.select(F.col("vec_id").alias("id"), sub.alias("sv"))
         seeds = subdf.orderBy("id").limit(k).select("sv").collect()
         cents = [[float(x) for x in r[0]] for r in seeds]
         for _ in range(iters):
@@ -2119,31 +2054,24 @@ def pq_train(
     return books
 
 
-def pq_encode(
-    corpus: DataFrame,
-    books: list[list[list[float]]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """(id, code_0 .. code_{M-1}): each vector compressed to M small
+def pq_encode(corpus: DataFrame, books: list[list[list[float]]]) -> DataFrame:
+    """(vec_id, code_0 .. code_{M-1}): each vector compressed to M small
     codes — the representation that lets a billion-vector index live
     in memory. Pure JVM expressions, no shuffle."""
     dsub = len(books[0][0])
-    cols = [F.col(id_col)]
+    cols = [F.col("vec_id")]
     for s, cents in enumerate(books):
-        sub = F.slice(F.col(vec_col), s * dsub + 1, dsub)
+        sub = F.slice(F.col("embedding"), s * dsub + 1, dsub)
         cols.append(_argmin_cell_expr(sub, cents).alias(f"code_{s}"))
     # widen before the M x K x dsub fold per row (the cosine_topk_ivf
     # width note — single-split scans serialize the encode pass)
-    return _spread_narrow_scan(corpus, id_col).select(*cols)
+    return _spread_narrow_scan(corpus, "vec_id").select(*cols)
 
 
 def pq_adc_topk(
     corpus: DataFrame,
     queries: DataFrame,
     books: list[list[list[float]]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     k: int = 10,
 ) -> DataFrame:
     """Asymmetric-distance top-k: corpus side is codes only; per pair
@@ -2152,8 +2080,8 @@ def pq_adc_topk(
     distance-table lookup, expressed as element_at into a per-query
     literal-codebook table)."""
     dsub = len(books[0][0])
-    codes = pq_encode(corpus, books, id_col, vec_col)
-    q = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec"))
+    codes = pq_encode(corpus, books)
+    q = queries.select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_vec"))
     adc = None
     for s, cents in enumerate(books):
         qsub = F.slice(F.col("q_vec"), s * dsub + 1, dsub)
@@ -2168,8 +2096,8 @@ def pq_adc_topk(
     scored = (
         F.broadcast(q)
         .crossJoin(codes)
-        .where(F.col("query_id") != F.col(id_col))
-        .select("query_id", F.col(id_col).alias("neighbor_id"), adc.alias("adc_dist"))
+        .where(F.col("query_id") != F.col("vec_id"))
+        .select("query_id", F.col("vec_id").alias("neighbor_id"), adc.alias("adc_dist"))
     )
     w = Window.partitionBy("query_id").orderBy(F.col("adc_dist").asc(), F.col("neighbor_id").asc())
     return scored.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
@@ -2178,33 +2106,27 @@ def pq_adc_topk(
 def ivfpq_topk(
     corpus: DataFrame,
     queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     k: int = 10,
-    n_cells: int = 8,
-    n_probe: int = 3,
-    iters: int = 2,
     m: int = 2,
     pq_k: int = 4,
-    dim: int = 64,
 ) -> DataFrame:
     """IVF + PQ — the canonical billion-vector ANN stack (FAISS
-    IVFPQ): the coarse quantizer prunes the corpus to ``n_probe``
-    cells' inverted lists, and within them candidates are ranked by
+    IVFPQ): the coarse quantizer (8 cells, two Lloyd steps) prunes the
+    corpus to the 3 probed cells' inverted lists, and within them candidates are ranked by
     asymmetric PQ distance — so query-time work is
-    ~``n_probe/n_cells`` of the corpus in CODES (2 small ints per
+    ~3/8 of the 64-dim corpus in CODES (2 small ints per
     vector), with original vectors touched by neither stage. Both
     quantizers are the deterministic Lloyd devices already
     value-checked alone (q67, q177)."""
-    centroids = ivf_train_centroids(corpus, id_col, vec_col, n_cells, iters)
-    books = pq_train(corpus, id_col, vec_col, m, pq_k, iters, dim)
-    dsub = dim // m
+    centroids = ivf_train_centroids(corpus, n_cells=8, iters=2)
+    books = pq_train(corpus, m=m, k=pq_k)
+    dsub = 64 // m
 
     codes = with_assigned_cell(
         _spread_narrow_scan(
             corpus.select(
-                F.col(id_col).alias("neighbor_id"),
-                F.col(vec_col).alias("_v"),
+                F.col("vec_id").alias("neighbor_id"),
+                F.col("embedding").alias("_v"),
             ),
             "neighbor_id",
         ),
@@ -2224,11 +2146,11 @@ def ivfpq_topk(
     q = (
         with_probe_cells(
             queries.select(
-                F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec")
+                F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_vec")
             ),
             "q_vec",
             centroids,
-            n_probe,
+            3,
         )
         .select("query_id", "q_vec", F.explode("_probes").alias("probe"))
         .select("query_id", "q_vec", F.col("probe.c").alias("cell"))

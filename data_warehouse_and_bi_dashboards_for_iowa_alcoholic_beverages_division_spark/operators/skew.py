@@ -24,10 +24,10 @@ def salted_join(
     dim: DataFrame,
     key: str,
     salt: int = 8,
-    how: str = "inner",
     salt_source: str | None = None,
 ) -> DataFrame:
-    """Equi-join on ``key`` with the dim side replicated ``salt`` ways.
+    """Inner equi-join on ``key`` with the dim side replicated ``salt``
+    ways.
 
     ``salt_source``: column whose hash spreads the fact rows (defaults
     to the whole-row spread via ``monotonically_increasing_id`` being
@@ -37,5 +37,5 @@ def salted_join(
     src = F.col(salt_source) if salt_source else F.spark_partition_id()
     f = fact.withColumn("_salt", F.pmod(F.xxhash64(src), F.lit(salt)).cast("int"))
     d = dim.withColumn("_salt", F.explode(F.array(*[F.lit(i) for i in range(salt)])))
-    out = f.join(d, on=[key, "_salt"], how=how).drop("_salt")
+    out = f.join(d, on=[key, "_salt"]).drop("_salt")
     return out

@@ -25,8 +25,8 @@ def token_count_expr(col: str = "text") -> Column:
     return F.size(F.split(F.trim(F.col(col)), r"\s+")).cast("int")
 
 
-def char_count_expr(col: str = "text") -> Column:
-    return F.length(F.col(col)).cast("int")
+def char_count_expr() -> Column:
+    return F.length(F.col("text")).cast("int")
 
 
 def punct_ratio_expr(col: str = "text") -> Column:
@@ -43,12 +43,12 @@ def stopword_ratio_expr(col: str = "text") -> Column:
     return stopword_hits_expr(col).cast("double") / token_count_expr(col).cast("double")
 
 
-def lang_id_expr(col: str = "text", min_hits: int = 3) -> Column:
-    """N-gram/stopword heuristic language ID: enough English stopword
-    hits → 'en', else 'unknown'. (A real pipeline would plug a model
-    here; the classifier interface — one label column out — is what
-    downstream operators depend on.)"""
-    return F.when(stopword_hits_expr(col) >= min_hits, F.lit("en")).otherwise(F.lit("unknown"))
+def lang_id_expr() -> Column:
+    """N-gram/stopword heuristic language ID of ``text``: three or more
+    English stopword hits → 'en', else 'unknown'. (A real pipeline
+    would plug a model here; the classifier interface — one label
+    column out — is what downstream operators depend on.)"""
+    return F.when(stopword_hits_expr() >= 3, F.lit("en")).otherwise(F.lit("unknown"))
 
 
 def quality_score_expr(col: str = "text") -> Column:
@@ -138,9 +138,9 @@ def word_ngrams_all_expr(col: str = "text", n: int = 3) -> Column:
     )
 
 
-def snapshot_diff(old: DataFrame, new: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def snapshot_diff(old: DataFrame, new: DataFrame) -> DataFrame:
     """Per-source change audit between two corpus snapshots, each given
-    as (id, source, f) triples where ``f`` is the normalized-text
+    as (doc_id, source, f) triples where ``f`` is the normalized-text
     fingerprint (:func:`fingerprint_expr`): counts of added / removed /
     modified / unchanged documents per source (the q210 contract).
 
@@ -149,13 +149,13 @@ def snapshot_diff(old: DataFrame, new: DataFrame, id_col: str = "doc_id") -> Dat
     never moves.
     """
     o = old.select(
-        id_col,
+        "doc_id",
         F.col("source").alias("_src_old"),
         F.col("f").alias("_f_old"),
         F.lit(True).alias("_in_old"),
     )
     n = new.select(
-        id_col,
+        "doc_id",
         F.col("source").alias("_src_new"),
         F.col("f").alias("_f_new"),
         F.lit(True).alias("_in_new"),
@@ -172,7 +172,7 @@ def snapshot_diff(old: DataFrame, new: DataFrame, id_col: str = "doc_id") -> Dat
         .otherwise(F.lit("modified"))
     )
     return (
-        o.join(n, id_col, "full_outer")
+        o.join(n, "doc_id", "full_outer")
         .select(
             F.coalesce("_src_new", "_src_old").alias("source"), status.alias("status")
         )

@@ -36,7 +36,7 @@ from urllib.parse import unquote, urlparse
 from pyspark.sql import DataFrame, SparkSession
 
 from ..session import jobs_submitted, jvm_class
-from ..sources.tables import NANOS_AS_LONG, Recording, _file_stats, recorded_reads
+from ..sources.tables import Recording, reads_unchanged, recorded_reads
 
 
 @dataclass(frozen=True)
@@ -112,12 +112,9 @@ def memoized(spark: SparkSession, key: tuple[Hashable, ...], build: Callable[[],
         del _PLAN_MEMO[stale]
     key = (*key, _conf_text(spark))
     memo = _PLAN_MEMO.pop(key, None)
-    if memo is not None:
-        # each path's ``_fingerprint``, with the conf read once, not per path
-        nanos = spark.conf.get(NANOS_AS_LONG, "false")
-        if all(fp == (nanos, _file_stats(path)) for path, fp in memo.reads):
-            _PLAN_MEMO[key] = memo
-            return memo.df
+    if memo is not None and reads_unchanged(spark, memo.reads):
+        _PLAN_MEMO[key] = memo
+        return memo.df
     jobs, persisted = jobs_submitted(spark), len(_PERSISTED)
     with recorded_reads() as recording:
         df = build()

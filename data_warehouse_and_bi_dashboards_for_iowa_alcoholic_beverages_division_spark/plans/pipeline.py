@@ -74,9 +74,14 @@ def build_star_warehouse(spark: SparkSession, sf_dir: str, out_dir: str) -> dict
     )
 
     # calendar spans exactly the fact's dates; the reference's 5 years
-    # of headroom past them (main_pipeline.py:305) is not reproduced
+    # of headroom past them (main_pipeline.py:305) is not reproduced. A
+    # fact with no dates gets an empty calendar of the same columns.
     lo, hi = bounds.get["lo"], bounds.get["hi"]
-    build_date_dim(spark, str(lo), str(hi)).write.mode("overwrite").parquet(paths["dim_date"])
+    if lo is None:
+        dim_date = build_date_dim(spark, "1970-01-01", "1970-01-01").limit(0)
+    else:
+        dim_date = build_date_dim(spark, str(lo), str(hi))
+    dim_date.write.mode("overwrite").parquet(paths["dim_date"])
 
     _with_unknown_member(
         geo_dim(spark, sf_dir), "c_custkey", {"c_name": "unknown", "nation_name": "unknown", "region_name": "unknown"}

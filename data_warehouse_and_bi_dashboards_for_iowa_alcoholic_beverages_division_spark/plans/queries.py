@@ -1398,13 +1398,12 @@ def _train_sql(
     assigns: str,
     assign: Callable[[str, str], str],
     lloyd: Callable[[str, str, str], str],
-    iters: int = 2,
 ) -> str:
-    """``iters`` unrolled Lloyd iterations from the seed table
-    ``{cents}0``: iteration i assigns into ``{assigns}i`` under
-    ``{cents}{i-1}`` and writes centroids ``{cents}i``."""
+    """Two unrolled Lloyd iterations from the seed table ``{cents}0``:
+    iteration i assigns into ``{assigns}i`` under ``{cents}{i-1}`` and
+    writes centroids ``{cents}i``."""
     steps = []
-    for i in range(1, iters + 1):
+    for i in (1, 2):
         a, prev, new = f"{assigns}{i}", f"{cents}{i - 1}", f"{cents}{i}"
         steps += [assign(a, prev), lloyd(a, prev, new)]
     return ",\n    ".join(steps)
@@ -1706,7 +1705,7 @@ def _bucketed_embeddings_cte() -> str:
     blocking (n_planes=4, dim=64, seed=7) in pure SQL. The hyperplanes
     come from the same deterministic splitmix generator
     (:func:`_plane_dot_sql`)."""
-    planes = similarity._hyperplanes(64, 4, 7)
+    planes = similarity._hyperplanes(64, 4)
     bucket = "\n           + ".join(
         f"(CASE WHEN {_plane_dot_sql(p)} > 0 THEN {1 << i} ELSE 0 END)"
         for i, p in enumerate(planes)
@@ -6312,7 +6311,7 @@ def q67(spark: SparkSession, sf_dir: str) -> DataFrame:
     return similarity.cosine_topk_ivf(emb, emb.where("vec_id < 5"), k=10, n_cells=8, n_probe=3)
 
 
-def _q126_oracle(n_merges: int = 8, min_pair_count: int = 2) -> str:
+def _q126_oracle() -> str:
     """DuckDB twin of bpe_train_batched(n_merges=8, batch=1): the iterative train is
     unrolled, one (pairs -> best -> merged vocab) CTE block per merge.
     Token arrays are carried as boundary-marked strings
@@ -6329,6 +6328,7 @@ def _q126_oracle(n_merges: int = 8, min_pair_count: int = 2) -> str:
     consumed twice (pair counts + next vocab), and DuckDB's default
     inlining re-evaluates the whole chain per consumer — exponential in
     the number of unrolled rounds (measured 2.6 s -> 0.1 s here, 26x)."""
+    n_merges, min_pair_count = 8, 2  # q126's bpe_train_batched arguments
     steps = []
     for k in range(n_merges):
         steps.append(f"""pairs{k} AS (
@@ -6369,7 +6369,7 @@ def _q126_oracle(n_merges: int = 8, min_pair_count: int = 2) -> str:
     """
 
 
-def _q155_oracle(n_merges: int = 8, batch: int = 4, min_pair_count: int = 2) -> str:
+def _q155_oracle() -> str:
     """DuckDB twin of bpe_train_batched(n_merges=8, batch=4): q126's
     unrolled-round technique extended to batched selection. Per round:
     the top-``batch`` pairs pivot onto ONE row (l1..l4, r1..r4,
@@ -6389,6 +6389,7 @@ def _q155_oracle(n_merges: int = 8, batch: int = 4, min_pair_count: int = 2) -> 
     early-break. Vocab and acceptance CTEs are MATERIALIZED — with
     DuckDB's default inlining the multi-consumer chain re-evaluates
     exponentially across unrolled rounds (measured 59 s -> 1 s here)."""
+    n_merges, batch, min_pair_count = 8, 4, 2  # q155's bpe_train_batched arguments
 
     def disj(i: int, j: int) -> str:
         return (
@@ -7359,14 +7360,14 @@ def q162(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _q163_oracle(n_iter: int = 3) -> str:
-    """DuckDB twin of PageRank: the same ``n_iter`` iterations
+def _q163_oracle() -> str:
+    """DuckDB twin of PageRank: the same three iterations
     unrolled as CTEs (the q67/q126 unrolled-oracle technique), with
     per-target contribution sums folded in source order and identical
     arithmetic trees — ranks match bit-for-bit before the 6dp floor."""
     iters = []
     prev = "r0"
-    for i in range(1, n_iter + 1):
+    for i in (1, 2, 3):
         iters.append(f"""
     c{i} AS (
       SELECT e.dst, e.src, 0.85 * ({prev}.r / CAST(o.deg AS DOUBLE)) AS c
@@ -8305,10 +8306,10 @@ def q178(spark: SparkSession, sf_dir: str) -> DataFrame:
     return similarity.ivfpq_topk(emb, emb.where("vec_id < 5"), k=10)
 
 
-def _q179_oracle(k: int = 5) -> str:
+def _q179_oracle() -> str:
     """DuckDB twin of MMR: the shared BM25 CTE supplies relevance, the
     q38 cosine expression supplies pairwise candidate sims, and the
-    greedy selection unrolls into k argmax CTEs — constants written as
+    greedy selection unrolls into 5 argmax CTEs — constants written as
     the same IEEE folds (``(1.0 - 0.7)``, matching Python's
     ``1.0 - lam``), scores floored before every tiebroken argmax."""
     cos = (
@@ -8320,7 +8321,7 @@ def _q179_oracle(k: int = 5) -> str:
     mmr1 = floor_round6_sql("0.7 * rel - (1.0 - 0.7) * 0.0")
     steps = []
     prev = "sel1"
-    for step in range(2, k + 1):
+    for step in range(2, 6):
         mmrk = floor_round6_sql("0.7 * c.rel - (1.0 - 0.7) * m.ms")
         steps.append(f"""ms{step} AS (
       SELECT s.a, MAX(s.sim) AS ms FROM sims s
@@ -9411,7 +9412,7 @@ def _bucketed_embeddings_dyn_cte() -> str:
     no float log2 near power-of-two boundaries), and the bucket uses
     the first p of _Q190_MAX_PLANES deterministic hyperplanes (one
     splitmix stream, so plane i is identical whatever p is)."""
-    planes = similarity._hyperplanes(64, _Q190_MAX_PLANES, 7)
+    planes = similarity._hyperplanes(64, _Q190_MAX_PLANES)
     ladder = " + ".join(
         f"(CASE WHEN d > {1 << j} THEN 1 ELSE 0 END)" for j in range(_Q190_MAX_PLANES)
     )
@@ -10203,8 +10204,8 @@ def q198(spark: SparkSession, sf_dir: str) -> DataFrame:
     approx = similarity.cosine_topk_lsh(emb, queries_df, k=10, n_planes=4).select(
         "query_id", "neighbor_id"
     )
-    planes = similarity._hyperplanes(64, 4, 7)
-    tagged = emb.select("vec_id", similarity._bucket_expr("embedding", planes).alias("bucket"))
+    planes = similarity._hyperplanes(64, 4)
+    tagged = emb.select("vec_id", similarity._bucket_expr(planes).alias("bucket"))
     sizes = tagged.groupBy("bucket").agg(F.count("*").alias("bs"))
     cand = (
         tagged.where("vec_id < 5")
@@ -10482,10 +10483,10 @@ def q224(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _q225_oracle(tombstone_pred: str = "vec_id % 7 = 3") -> str:
+def _q225_oracle() -> str:
     """DuckDB twin of the tombstone-debt audit: q67's unrolled train
     feeds ``af`` (the full-corpus cell assignments — the index as
-    built), the tombstone predicate flags the logically-deleted rows
+    built), ``vec_id % 7 = 3`` flags the logically-deleted rows
     (q224's set), and the terminal SELECT is the per-cell debt
     aggregate with the index-wide windows. The trigger is
     integer-exact (``10 * Σnt > Σn``), matching the Spark side."""
@@ -10502,7 +10503,7 @@ def _q225_oracle(tombstone_pred: str = "vec_id % 7 = 3") -> str:
            )} AS affected_cell_frac,
            (10 * SUM(nt) OVER () > SUM(n) OVER ()) AS needs_compact
     FROM (SELECT cell, COUNT(*) AS n,
-                 SUM(CASE WHEN {tombstone_pred} THEN 1 ELSE 0 END) AS nt
+                 SUM(CASE WHEN vec_id % 7 = 3 THEN 1 ELSE 0 END) AS nt
           FROM af GROUP BY cell)
     ORDER BY cell"""
     return _q67_oracle(final_select=audit)
@@ -10546,14 +10547,14 @@ def q225(spark: SparkSession, sf_dir: str) -> DataFrame:
     return similarity.tombstone_debt_report(counts)
 
 
-def _q201_oracle(n_iter: int = 3) -> str:
-    """DuckDB twin of personalized PageRank: q163's unrolled
+def _q201_oracle() -> str:
+    """DuckDB twin of personalized PageRank: q163's three unrolled
     iterations with the teleport vector concentrated on the seed set
     (graph srcs divisible by 7), identical arithmetic trees and
     source-order contribution folds."""
     iters = []
     prev = "r0"
-    for i in range(1, n_iter + 1):
+    for i in (1, 2, 3):
         iters.append(f"""
     c{i} AS (
       SELECT e.dst, e.src, 0.85 * ({prev}.r / CAST(o.deg AS DOUBLE)) AS c
@@ -12054,7 +12055,7 @@ def q227(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     members = similarity._member_table_df(spark, l2, cell2super)
     counts = (
-        similarity._ivf2_corpus_lists(emb, members, l1, "vec_id", "embedding")
+        similarity._ivf2_corpus_lists(emb, members, l1)
         .groupBy("cell")
         .agg(F.count("*").alias("n"))
     )

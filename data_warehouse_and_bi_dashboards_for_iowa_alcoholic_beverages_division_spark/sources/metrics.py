@@ -26,7 +26,6 @@ def observed_quality(
     *,
     key_cols: list[str] | None = None,
     not_null: list[str] | None = None,
-    name: str = "load_quality",
 ) -> tuple[DataFrame, Observation]:
     """Attach row-count, per-column null-count, and approximate
     key-cardinality metrics to ``df``'s next action."""
@@ -35,7 +34,7 @@ def observed_quality(
         metrics.append(F.sum(F.col(c).isNull().cast("long")).alias(f"null_{c}"))
     for c in key_cols or []:
         metrics.append(F.approx_count_distinct(c).alias(f"approx_distinct_{c}"))
-    obs = Observation(name)
+    obs = Observation("load_quality")
     return df.observe(obs, *metrics), obs
 
 

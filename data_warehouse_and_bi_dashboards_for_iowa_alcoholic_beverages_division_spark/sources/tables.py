@@ -46,7 +46,7 @@ read records nothing.
 from __future__ import annotations
 
 import os
-from collections.abc import Iterator
+from collections.abc import Iterable, Iterator
 from contextlib import contextmanager
 from dataclasses import dataclass, field
 
@@ -116,11 +116,19 @@ def _file_stats(path: str) -> tuple | None:
         return None
 
 
-def _fingerprint(spark: SparkSession, path: str) -> tuple | None:
-    """``(nanosAsLong, _file_stats(path))``; None when the path cannot
-    be stat'ed locally."""
+def _fingerprint(conf: str, path: str) -> tuple | None:
+    """``(conf, _file_stats(path))``, ``conf`` being the session's
+    nanosAsLong value; None when the path cannot be stat'ed locally."""
     stats = _file_stats(path)
-    return None if stats is None else (spark.conf.get(NANOS_AS_LONG, "false"), stats)
+    return None if stats is None else (conf, stats)
+
+
+def reads_unchanged(spark: SparkSession, reads: Iterable[tuple[str, tuple | None]]) -> bool:
+    """Whether every ``(abspath, fingerprint)`` of a :class:`Recording`
+    still matches its path's fingerprint: the conf is read once for all
+    of them (one gateway round trip), the files are stat'ed locally."""
+    conf = spark.conf.get(NANOS_AS_LONG, "false")
+    return all(fp == _fingerprint(conf, path) for path, fp in reads)
 
 
 def _footer_key(spark: SparkSession, path: str, conf: str) -> tuple | None:
@@ -163,7 +171,7 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     path memo misses is first looked up by its footer key, so a file
     whose footer matches one read before plans without a job too."""
     key = os.path.abspath(path)
-    fp = _fingerprint(spark, key)
+    fp = _fingerprint(spark.conf.get(NANOS_AS_LONG, "false"), key)
     recording = _RECORDINGS[-1] if _RECORDINGS else None
     if recording is not None:
         recording.reads.add((key, fp))

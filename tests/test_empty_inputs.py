@@ -3,6 +3,10 @@ failing) result on an empty frame with the right schema — the S10
 'empty DataFrame from schema' behavior incremental pipelines hit on
 quiet days."""
 
+import os
+import shutil
+
+from conftest import SF_DIR
 from pyspark.sql.types import (
     DateType,
     LongType,
@@ -11,6 +15,9 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spark.functions.dates import (
+    build_date_dim,
+)
 from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spark.operators.dedup import (
     exact_dedup_keys,
     minhash_lsh_candidates,
@@ -21,6 +28,9 @@ from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spar
     merge_scd,
     remove_one_day_changes,
     scd_update_and_insert,
+)
+from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spark.plans.pipeline import (
+    build_star_warehouse,
 )
 
 LOG_SCHEMA = StructType(
@@ -112,3 +122,22 @@ def test_derived_n_cells_degenerate():
     assert derived_n_cells(0) == 4
     assert derived_n_cells(1) == 4
     assert derived_n_cells(2) == 4
+
+
+def test_star_warehouse_over_an_empty_fact(spark, tmp_path):
+    """No orders and no lineitems: the fact has no dates, and the build
+    still writes every dimension, the calendar empty with its columns."""
+    sf_dir = tmp_path / "sf"
+    sf_dir.mkdir()
+    for t in ("customer", "nation", "region", "part", "supplier"):
+        shutil.copy(os.path.join(SF_DIR, f"{t}.parquet"), sf_dir / f"{t}.parquet")
+    for t in ("orders", "lineitem"):
+        spark.read.parquet(os.path.join(SF_DIR, f"{t}.parquet")).limit(0).write.parquet(
+            str(sf_dir / f"{t}.parquet")
+        )
+    paths = build_star_warehouse(spark, str(sf_dir), str(tmp_path / "wh"))
+    dim_date = spark.read.parquet(paths["dim_date"])
+    assert dim_date.count() == 0
+    assert dim_date.columns == build_date_dim(spark, "2024-01-01", "2024-01-01").columns
+    assert len(dim_date.columns) == 14
+    assert spark.read.parquet(paths["dim_item"]).count() > 0
